@@ -9,9 +9,12 @@
 #   1. stages everything and records a digest of the staged code
 #      (all blobs+paths under src/ + build.sbt — exactly what the
 #      suite is about to test),
-#   2. runs `sbt test`; on ANY failure prints the tail and exits 1
+#   2. compiles the benchmark harness (perfbench/) against the staged
+#      sources; on failure prints the tail and exits 1 WITHOUT
+#      committing,
+#   3. runs `sbt test`; on ANY failure prints the tail and exits 1
 #      WITHOUT committing,
-#   3. on green writes TEST_GATE.json {code_digest, ts, tests} and
+#   4. on green writes TEST_GATE.json {code_digest, ts, tests} and
 #      commits it together with the staged work.
 #
 # Audit: at the snapshot commit,
@@ -32,6 +35,27 @@ msg="${1:?usage: scripts/test_gate.sh \"commit message\"}"
 # and .benchdata/ (locally generated scaled parquet).
 git add -A
 digest=$(git ls-files -s -- src build.sbt project | git hash-object --stdin)
+
+# The benchmark harness (perfbench/) compiles graft's main sources
+# together with its own (perfbench/build.sbt), so a public-API change can
+# pass the suite and still break the benchmark's build. Compile it from
+# an export of the STAGED tree, the way perfbench/run.py's build() does,
+# and refuse to commit when it fails.
+stage=$(mktemp -d)
+git checkout-index -a --prefix="$stage/"
+spark_home=${SPARK_HOME:-$(dirname "$(dirname "$(readlink -f "$(command -v spark-submit)")")")}
+echo "[gate] compiling the benchmark harness against the staged sources"
+if ! (cd "$stage/perfbench" && COURSIER_MODE=offline SPARK_HOME="$spark_home" \
+      SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx2g}" \
+      sbt --batch -Dsbt.log.noformat=true -Dsbt.server.forcestart=false compile) \
+      >/tmp/test_gate_bench.log 2>&1; then
+  echo "[gate] BENCHMARK HARNESS DOES NOT COMPILE — NOT committing. Failure tail:"
+  tail -40 /tmp/test_gate_bench.log
+  rm -rf "$stage"
+  exit 1
+fi
+rm -rf "$stage"
+
 echo "[gate] code digest $digest — running full suite"
 
 if ! sbt -batch test >/tmp/test_gate.log 2>&1; then

@@ -1,11 +1,15 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /**
  * Benchmark main: times every SparkEntry query end-to-end (plan + execute
  * via count) on SPARK_GRAFT_SF_DIR and emits ONE JSON line:
  * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":"..."}.
+ * A row that throws is named under "errors", left out of every total, and
+ * makes the main exit non-zero once the artifact is written.
  *
  * Queries run in FAMILY PHASES (relational -> cdc -> text/multimodal ->
  * dedup -> sim), alphabetical within a phase, and each phase's session
@@ -85,25 +89,43 @@ object Bench {
       .split("\\s+").head.toDouble
     catch { case _: Throwable => -1.0 }
 
-  /** One family segment of one pass: per query one cold execution
-    * (codegen + first-touch costs) then three warm reps. */
-  private def runSegment(spark: SparkSession, sfDir: String,
-                         names: Seq[String]): Seq[(String, Double, Seq[Double])] =
-    names.map { name =>
-      val fn = SparkEntry.queries(name)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        // toRdd.count(): execute the query's OWN plan — a plain .count()
-        // lets the optimizer prune every projected column, so projection
-        // queries would be timed as bare scans
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
-        (System.nanoTime() - t0) / 1e9
-      }
-      val cold = once()
-      val warms = Seq(once(), once(), once())
-      (name, cold, warms)
+  /** One row's timings: one cold execution (codegen + first-touch
+    * costs) then three warm reps — or, when any of them throws, the
+    * failure's message. A failed row is never timed: the time an
+    * exception took is not a fast execution. */
+  private[graft] def timeRow(run: () => Unit): Either[String, (Double, Seq[Double])] = {
+    def once(): Double = {
+      val t0 = System.nanoTime()
+      run()
+      (System.nanoTime() - t0) / 1e9
     }
+    try {
+      val cold = once()
+      Right((cold, Seq(once(), once(), once())))
+    } catch { case NonFatal(e) => Left(s"${e.getClass.getName}: ${e.getMessage}") }
+  }
+
+  /** Time named rows: (timed rows, failed rows with their message). */
+  private[graft] def timeRows(rows: Seq[(String, () => Unit)])
+      : (Seq[(String, Double, Seq[Double])], Seq[(String, String)]) = {
+    val timed = rows.map { case (name, run) => name -> timeRow(run) }
+    (timed.collect { case (n, Right((cold, warms))) => (n, cold, warms) },
+      timed.collect { case (n, Left(msg)) => (n, msg) })
+  }
+
+  /** One family segment of one pass. */
+  private def runSegment(spark: SparkSession, sfDir: String, names: Seq[String])
+      : (Seq[(String, Double, Seq[Double])], Seq[(String, String)]) = {
+    val (rows, failed) = timeRows(names.map { name =>
+      val fn = SparkEntry.queries(name)
+      // toRdd.count(): execute the query's OWN plan — a plain .count()
+      // lets the optimizer prune every projected column, so projection
+      // queries would be timed as bare scans
+      name -> (() => { fn(spark, sfDir).queryExecution.toRdd.count(); () })
+    })
+    failed.foreach { case (n, msg) => System.err.println(s"[bench] $n FAILED: $msg") }
+    (rows, failed)
+  }
 
   private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
 
@@ -134,6 +156,9 @@ object Bench {
   private def render(xs: Seq[(String, Double)]) =
     xs.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
 
+  private def renderNames(xs: Seq[String]) =
+    xs.distinct.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+
   private[graft] final case class Pass(
       idx: Int, results: Seq[(String, Double, Seq[Double])],
       loadStart: Double, loadEnd: Double,
@@ -141,7 +166,9 @@ object Bench {
       // boundaries (phase-major passes interleave in wall time, so the
       // start/end pair alone could miss a mid-pass spike); -1 = none
       // recorded beyond start/end
-      loadPeak: Double = -1.0) {
+      loadPeak: Double = -1.0,
+      // rows that threw: named here, never timed, in no total
+      errors: Seq[(String, String)] = Nil) {
     def warmTotal: Double = results.map(r => median(r._3)).sum
     /** The design-grading headline: warm total over the steady-state
       * rows only (everything but [[isTruthGate]]). */
@@ -165,7 +192,7 @@ object Bench {
     // regression passes when reading BENCH_HISTORY.jsonl later
     def fullLine(sfDir: String, cpus: String): String = {
       val loads = f""""load_start":$loadStart%.2f,"load_end":$loadEnd%.2f"""
-      f"""{"metric":"total","value":$warmTotal%.3f,"unit":"sec","value_steady":$warmSteady%.3f,"value_truthgate":$warmTruthGate%.3f,"value_floor":$floorSteady%.3f,"value_cold":$coldTotal%.3f,$loads,"pass":$idx,"cpus":$cpus,"sf":"$sfDir","queries_cold":${render(results.map(r => (r._1, r._2)))},"queries_warm_min":${render(results.map(r => (r._1, r._3.min)))},"queries_warm_max":${render(results.map(r => (r._1, r._3.max)))},"queries":${render(results.map(r => (r._1, median(r._3))))}}"""
+      f"""{"metric":"total","value":$warmTotal%.3f,"unit":"sec","value_steady":$warmSteady%.3f,"value_truthgate":$warmTruthGate%.3f,"value_floor":$floorSteady%.3f,"value_cold":$coldTotal%.3f,$loads,"pass":$idx,"errors":${renderNames(errors.map(_._1))},"cpus":$cpus,"sf":"$sfDir","queries_cold":${render(results.map(r => (r._1, r._2)))},"queries_warm_min":${render(results.map(r => (r._1, r._3.min)))},"queries_warm_max":${render(results.map(r => (r._1, r._3.max)))},"queries":${render(results.map(r => (r._1, median(r._3))))}}"""
     }
   }
 
@@ -243,14 +270,16 @@ object Bench {
     // moment, exactly as before (the round-7 cross-family pressure rule).
     val results = Array.fill(nRuns)(Vector.empty[(String, Double, Seq[Double])])
     val loadTrace = Array.fill(nRuns)(Vector.empty[Double])
+    val errors = Array.fill(nRuns)(Vector.empty[(String, String)])
     val segments = phased.map { case (_, names, release) => (names, release) } :+
       ((leftovers, () => ()))
     segments.foreach { case (names, release) =>
       (0 until nRuns).foreach { p =>
         val ls = loadAvg1()
-        val rs = runSegment(spark, sfDir, names)
+        val (rs, es) = runSegment(spark, sfDir, names)
         val le = loadAvg1()
         results(p) = results(p) ++ rs
+        errors(p) = errors(p) ++ es
         loadTrace(p) = loadTrace(p) ++ Vector(ls, le)
       }
       release()
@@ -259,7 +288,7 @@ object Bench {
     SparkEntry.clearCaches()
     val passes = (0 until nRuns).map { p =>
       val pass = Pass(p + 1, results(p).sortBy(_._1),
-        loadTrace(p).head, loadTrace(p).last, loadTrace(p).max)
+        loadTrace(p).head, loadTrace(p).last, loadTrace(p).max, errors(p))
       // EVERY pass lands in the tracked history — the audit trail the
       // single-run regime lacked (a noisy row could not be told from a
       // regression without a re-run)
@@ -307,6 +336,7 @@ object Bench {
     // Cross-round cold always from pass 1 — the only true JVM-cold pass.
     val (picked, pickedBy) = pickPass(passes, loadGate)
     val first = passes.head
+    val failed = renderNames(passes.flatMap(_.errors.map(_._1)))
     val prov =
       f""""runs":$nRuns,"picked":${picked.idx},"picked_by":"$pickedBy","load_gate":$loadGate%.1f,"gate_waited_s":$gateWaitedS,"volatile":$volatileJson,"pass_totals":${
         passes.map(p => f"""{"pass":${p.idx},"warm":${p.warmTotal}%.3f,"steady":${p.warmSteady}%.3f,"floor":${p.floorSteady}%.3f,"cold":${p.coldTotal}%.3f,"load_start":${p.loadStart}%.2f,"load_end":${p.loadEnd}%.2f}""").mkString("[", ",", "]")}"""
@@ -314,7 +344,7 @@ object Bench {
     val splitTotals =
       f""""value_steady":${picked.warmSteady}%.3f,"value_truthgate":${picked.warmTruthGate}%.3f"""
     val totals =
-      f"""{"metric":"total","value":${picked.warmTotal}%.3f,"unit":"sec",$splitTotals,"value_cold":${first.coldTotal}%.3f,$loads,"runs":$nRuns,"picked":${picked.idx},"cpus":$cpus,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":${picked.warmTotal}%.3f,"unit":"sec",$splitTotals,"value_cold":${first.coldTotal}%.3f,$loads,"runs":$nRuns,"picked":${picked.idx},"errors":$failed,"cpus":$cpus,"sf":"$sfDir"}"""
     // "queries" (the AUTHORITATIVE picked-pass medians) is deliberately
     // the LAST key: the driver's line capture keeps the TAIL of an
     // over-long line, and for three rounds running it archived whichever
@@ -329,7 +359,7 @@ object Bench {
       .groupBy(_._1).view.mapValues(_.map(_._2).min).toSeq.sortBy(_._1)
     val valueFloor = floorRows.filterNot(r => isTruthGate(r._1)).map(_._2).sum
     val full =
-      f"""{"metric":"total","value":${picked.warmTotal}%.3f,"unit":"sec",$splitTotals,"value_floor":$valueFloor%.3f,"value_cold":${first.coldTotal}%.3f,"value_cold_picked":${picked.coldTotal}%.3f,$loads,$prov,"cpus":$cpus,"sf":"$sfDir","queries_floor":${render(floorRows)},"queries_cold":${render(first.results.map(r => (r._1, r._2)))},"queries_cold_picked":${render(picked.results.map(r => (r._1, r._2)))},"queries_warm_min":${render(picked.results.map(r => (r._1, r._3.min)))},"queries_warm_max":${render(picked.results.map(r => (r._1, r._3.max)))},"queries":${render(picked.results.map(r => (r._1, median(r._3))))}}"""
+      f"""{"metric":"total","value":${picked.warmTotal}%.3f,"unit":"sec",$splitTotals,"value_floor":$valueFloor%.3f,"value_cold":${first.coldTotal}%.3f,"value_cold_picked":${picked.coldTotal}%.3f,$loads,$prov,"errors":$failed,"cpus":$cpus,"sf":"$sfDir","queries_floor":${render(floorRows)},"queries_cold":${render(first.results.map(r => (r._1, r._2)))},"queries_cold_picked":${render(picked.results.map(r => (r._1, r._2)))},"queries_warm_min":${render(picked.results.map(r => (r._1, r._3.min)))},"queries_warm_max":${render(picked.results.map(r => (r._1, r._3.max)))},"queries":${render(picked.results.map(r => (r._1, median(r._3))))}}"""
     // The full artifact (~4 KB with 100+ queries) exceeds the harness's
     // line capture; the short self-contained totals line must be the LAST
     // line printed. The complete artifact also lands in BENCH.json.
@@ -338,5 +368,9 @@ object Bench {
     val out = new java.io.PrintWriter("BENCH.json")
     try out.println(full) finally out.close()
     spark.stop()
+    if (passes.exists(_.errors.nonEmpty)) {
+      System.err.println(s"[bench] failed rows: $failed")
+      sys.exit(1)
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.util
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{CatalogPlugin, Identifier, ProcedureCatalog}
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
@@ -10,6 +10,9 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.extensions.{CorpusOps, IndexFamily}
+import graft.streaming.CdcStream
 
 /**
  * The MAINTENANCE half of the pure-SQL deployment story (VERDICT r17
@@ -136,24 +139,26 @@ object GraftProcedureCatalog {
       else Some(input.getUTF8String(i).toString)
   }
 
-  private val families =
-    Seq("text", "bm25", "embedding", "ivf", "ivfpq", "lsh", "pq")
+  private val families = IndexFamily.all.map(_.name)
 
-  private def badFamily(proc: String, f: String): Nothing =
-    throw new IllegalArgumentException(
-      s"$proc: unknown index family '$f' — one of ${families.mkString(", ")}")
+  /** The named family from the [[IndexFamily]] registry, or a refusal
+    * listing the known ones. */
+  private def family(proc: String, f: String): IndexFamily[_] =
+    IndexFamily.named(f).getOrElse(throw new IllegalArgumentException(
+      s"$proc: unknown index family '$f' — one of ${families.mkString(", ")}"))
 
   /** `CALL graft.compact_maintenance(family, accept_dir, upsert_dir,
     * retract_dir, index_dir, save_to, id_col, content_col[, old_col])`
-    * — the net-effect CDC compaction ([[graft.streaming.CdcStream]]'s
-    * `compactMaintenance*Batches`) for any of the seven index
+    * — the net-effect CDC compaction
+    * ([[graft.streaming.CdcStream.compact]]) for any of the seven index
     * families, off the three sink trees a maintenance ingest writes.
-    * `old_col` is required by (and only by) the `bm25` family — the
-    * one whose retraction needs the OLD row image. The loaded tree's
-    * version guard, the per-family double-fold markers and the
-    * NULL-image refusal all fire exactly as in the Scala API; the
-    * bumped index is saved to `save_to` BEFORE any marker lands
-    * (durable-then-mark). */
+    * `old_col` is required by the `bm25` family — the one whose
+    * retraction needs the OLD row image — and refused, by name, for
+    * every other family; both checks run before anything is loaded.
+    * The loaded tree's version guard, the per-family double-fold
+    * markers and the NULL-image refusal all fire exactly as in the
+    * Scala API; the bumped index is saved to `save_to` BEFORE any
+    * marker lands (durable-then-mark). */
   private object CompactMaintenance extends GraftProcedure(
     "compact_maintenance",
     "Net-effect CDC compaction of the accept/upsert/retract sink trees " +
@@ -170,68 +175,46 @@ object GraftProcedureCatalog {
       inOpt("old_col", "OLD-image column (bm25 only)"))) {
 
     override def call(input: InternalRow): util.Iterator[Scan] = {
-      val spark = SparkSession.active
-      import graft.extensions.{Dedup, Search, Similarity}
-      import graft.streaming.CdcStream
-      val family = str(input, 0).toLowerCase
+      val name = str(input, 0).toLowerCase
+      val fam = family("compact_maintenance", name)
       val (a, u, r) = (str(input, 1), str(input, 2), str(input, 3))
       val (indexDir, saveTo) = (str(input, 4), str(input, 5))
       val (idCol, contentCol) = (str(input, 6), str(input, 7))
       val oldCol = strOpt(input, 8)
-      // (old version, new version, fold ran) — a no-op fold (every tree
-      // empty/missing) returns the INPUT HANDLE ITSELF, so reference
-      // identity is the no-op signal (ADVICE r18: versions-compare
-      // coupled the audit row to each family's version-bump arithmetic;
-      // `eq` reports what the entry point actually did) and the row
-      // must not claim a saved_to it never wrote
-      val (oldV, newV, ran) = family match {
-        case "text" =>
-          val ix = Dedup.loadCorpusIndex(spark, indexDir)
-          val out = CdcStream.compactMaintenanceBatches(
-            spark, a, u, r, ix, idCol, contentCol, Some(saveTo))
-          (ix.version, out.version, !(out eq ix))
-        case "bm25" =>
-          val st = Search.loadBm25Stats(spark, indexDir)
-          val old = oldCol.getOrElse(throw new IllegalArgumentException(
-            "compact_maintenance: the bm25 family requires old_col (the " +
-              "OLD-image column its retraction subtracts)"))
-          val out = CdcStream.compactMaintenanceBm25Batches(
-            spark, a, u, r, st, idCol, contentCol, old, Some(saveTo))
-          (st.version, out.version, !(out eq st))
-        case "embedding" =>
-          val ix = Dedup.loadEmbeddingIndex(spark, indexDir)
-          val out = CdcStream.compactVecMaintenanceBatches(
-            spark, a, u, r, ix, idCol, contentCol, Some(saveTo))
-          (ix.version, out.version, !(out eq ix))
-        case "ivf" =>
-          val ix = Similarity.loadIvfIndex(spark, indexDir)
-          val out = CdcStream.compactMaintenanceIvfBatches(
-            spark, a, u, r, ix, idCol, contentCol, Some(saveTo))
-          (ix.version, out.version, !(out eq ix))
-        case "ivfpq" =>
-          val ix = Similarity.loadIvfPqIndex(spark, indexDir)
-          val out = CdcStream.compactMaintenanceIvfPqBatches(
-            spark, a, u, r, ix, idCol, contentCol, Some(saveTo))
-          (ix.version, out.version, !(out eq ix))
-        case "lsh" =>
-          val ix = Similarity.loadLshIndex(spark, indexDir)
-          val out = CdcStream.compactMaintenanceLshBatches(
-            spark, a, u, r, ix, idCol, contentCol, Some(saveTo))
-          (ix.version, out.version, !(out eq ix))
-        case "pq" =>
-          val ix = Similarity.loadPqIndex(spark, indexDir)
-          val out = CdcStream.compactMaintenancePqBatches(
-            spark, a, u, r, ix, idCol, contentCol, Some(saveTo))
-          (ix.version, out.version, !(out eq ix))
-        case f => badFamily("compact_maintenance", f)
-      }
-      summary(family, indexDir, if (ran) Some(saveTo) else None, oldV, newV)
+      if (fam.retractsByImage && oldCol.isEmpty)
+        throw new IllegalArgumentException(
+          s"compact_maintenance: the $name family requires old_col (the " +
+            "OLD-image column its retraction subtracts)")
+      if (!fam.retractsByImage && oldCol.isDefined)
+        throw new IllegalArgumentException(
+          s"compact_maintenance: parameter old_col does not apply to " +
+            s"family '$name' — it retracts by id alone")
+      val (oldV, newV, ran) = fold(fam, indexDir, saveTo, a, u, r,
+        idCol, contentCol, oldCol)
+      summary(name, indexDir, if (ran) Some(saveTo) else None, oldV, newV)
+    }
+
+    /** (old version, new version, fold ran) — a no-op fold (every tree
+      * empty/missing) returns the INPUT HANDLE ITSELF, so reference
+      * identity is the no-op signal (ADVICE r18: versions-compare
+      * coupled the audit row to each family's version-bump arithmetic;
+      * `eq` reports what the entry point actually did) and the row must
+      * not claim a saved_to it never wrote. */
+    private def fold[I](fam: IndexFamily[I], indexDir: String, saveTo: String,
+                        a: String, u: String, r: String, idCol: String,
+                        contentCol: String,
+                        oldCol: Option[String]): (Long, Long, Boolean) = {
+      val ix = fam.load(SparkSession.active, indexDir)
+      val out = CdcStream.compact(SparkSession.active, Some(a), Some(u),
+        Some(r), ix, idCol, contentCol, oldCol, Some(saveTo))(fam)
+      (fam.version(ix), fam.version(out),
+        !(out.asInstanceOf[AnyRef] eq ix.asInstanceOf[AnyRef]))
     }
   }
 
   /** `CALL graft.refresh_index(family, index_dir, save_to, old_table,
     * new_table, id_col, content_col)` — the refresh→index loop
-    * ([[graft.extensions.CorpusOps]]'s `refresh*Index` /
+    * ([[graft.extensions.CorpusOps.refreshIndex]] /
     * `refreshBm25Stats`) for any of the seven families: diff the two
     * crawls (corpusDiff for text/bm25, vectorDiff for the vector
     * families — two skinny (id, hash) projections; content never
@@ -253,46 +236,28 @@ object GraftProcedureCatalog {
 
     override def call(input: InternalRow): util.Iterator[Scan] = {
       val spark = SparkSession.active
-      import graft.extensions.{CorpusOps, Dedup, Search, Similarity}
-      val family = str(input, 0).toLowerCase
+      val name = str(input, 0).toLowerCase
+      val fam = family("refresh_index", name)
       val (indexDir, saveTo) = (str(input, 1), str(input, 2))
       val oldDf = spark.table(str(input, 3))
       val newDf = spark.table(str(input, 4))
       val (idCol, contentCol) = (str(input, 5), str(input, 6))
-      def textDiff = CorpusOps.corpusDiff(oldDf, newDf, idCol, contentCol)
-      def vecDiff = CorpusOps.vectorDiff(oldDf, newDf, idCol, contentCol)
-      val (oldV, newV) = family match {
-        case "text" =>
-          val ix = Dedup.loadCorpusIndex(spark, indexDir)
-          (ix.version, Dedup.saveCorpusIndex(CorpusOps.refreshCorpusIndex(
-            ix, newDf, idCol, contentCol, textDiff), saveTo).version)
-        case "bm25" =>
-          val st = Search.loadBm25Stats(spark, indexDir)
-          (st.version, CorpusOps.refreshBm25Stats(
-            st, oldDf, newDf, idCol, contentCol, textDiff).save(saveTo).version)
-        case "embedding" =>
-          val ix = Dedup.loadEmbeddingIndex(spark, indexDir)
-          (ix.version, Dedup.saveEmbeddingIndex(CorpusOps.refreshEmbeddingIndex(
-            ix, newDf, idCol, contentCol, vecDiff), saveTo).version)
-        case "ivf" =>
-          val ix = Similarity.loadIvfIndex(spark, indexDir)
-          (ix.version, CorpusOps.refreshIvfIndex(
-            ix, newDf, idCol, contentCol, vecDiff).save(saveTo).version)
-        case "ivfpq" =>
-          val ix = Similarity.loadIvfPqIndex(spark, indexDir)
-          (ix.version, CorpusOps.refreshIvfPqIndex(
-            ix, newDf, idCol, contentCol, vecDiff).save(saveTo).version)
-        case "lsh" =>
-          val ix = Similarity.loadLshIndex(spark, indexDir)
-          (ix.version, CorpusOps.refreshLshIndex(
-            ix, newDf, idCol, contentCol, vecDiff).save(saveTo).version)
-        case "pq" =>
-          val ix = Similarity.loadPqIndex(spark, indexDir)
-          (ix.version, CorpusOps.refreshPqIndex(
-            ix, newDf, idCol, contentCol, vecDiff).save(saveTo).version)
-        case f => badFamily("refresh_index", f)
-      }
-      summary(family, indexDir, Some(saveTo), oldV, newV)
+      val diff =
+        if (fam.imageType == StringType)
+          CorpusOps.corpusDiff(oldDf, newDf, idCol, contentCol)
+        else CorpusOps.vectorDiff(oldDf, newDf, idCol, contentCol)
+      val (oldV, newV) = refresh(fam, indexDir, saveTo, oldDf, newDf,
+        idCol, contentCol, diff)
+      summary(name, indexDir, Some(saveTo), oldV, newV)
+    }
+
+    private def refresh[I](fam: IndexFamily[I], indexDir: String,
+                           saveTo: String, oldDf: DataFrame, newDf: DataFrame,
+                           idCol: String, contentCol: String,
+                           diff: DataFrame): (Long, Long) = {
+      val ix = fam.load(SparkSession.active, indexDir)
+      (fam.version(ix), fam.version(fam.save(
+        fam.refresh(ix, oldDf, newDf, idCol, contentCol, diff), saveTo)))
     }
   }
 
@@ -371,7 +336,7 @@ object GraftProcedureCatalog {
       val hyper = Seq("shingle_k", "max_gram_df", "planes", "bands",
         "nlist", "m", "ksub", "residual")
         .zipWithIndex.map { case (n, i) => n -> strOpt(input, 5 + i) }.toMap
-      val ok = applicable.getOrElse(family, badFamily("fit_index", family))
+      val ok = applicable(GraftProcedureCatalog.family("fit_index", family).name)
       hyper.collect { case (n, Some(_)) if !ok(n) => n }.toSeq.sorted match {
         case Seq() => ()
         case bad => throw new IllegalArgumentException(
@@ -411,7 +376,6 @@ object GraftProcedureCatalog {
           Similarity.pqFit(df, idCol, contentCol,
             m = intArg("m", hyper("m"), 8),
             ksub = intArg("ksub", hyper("ksub"), 16)).save(saveTo).version
-        case f => badFamily("fit_index", f)
       }
       val row = InternalRow(UTF8String.fromString(family),
         UTF8String.fromString(sourceTable), UTF8String.fromString(saveTo),

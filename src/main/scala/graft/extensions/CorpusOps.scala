@@ -975,30 +975,33 @@ object CorpusOps {
         .unionByName(fresh.contaminated))
   }
 
-  /** Version the text-gram SERVING index off the same diff that drives
-    * the artifact refresh — the leg of the production refresh loop
+  /** Version a SERVING index off the same diff that drives the artifact
+    * refresh — the leg of the production refresh loop
     * [[refreshArtifacts]] deliberately leaves to the index lifecycle:
-    * `removed` and `changed` ids retire via
-    * [[Dedup.removeFromCorpusIndex]] (ids only — the index's stored
-    * shingles reconstruct their grams; the retired text is not needed),
-    * then `added` and `changed` docs fold in via
-    * [[Dedup.extendCorpusIndex]] — a changed document is
-    * remove-then-add, the only mutation an append-only index family can
-    * express. EXACT: both halves carry their build-equivalence, so
-    * `refreshCorpusIndex(build(old), new, diff) ≡ build(new)` at the
-    * postings/dictionary/doc-stats level and probes hash-match a
-    * from-scratch fit of the new crawl (oracle-pinned by
-    * `dedup_refresh_index`). O(changed + removed) heavy work: unchanged
-    * documents are never re-shingled — the extension's input is
-    * diff-selected BEFORE any kernel runs (poisoned-sentinel
-    * spec-pinned). */
-  def refreshCorpusIndex(index: Dedup.CorpusIndex, newDf: DataFrame,
-                         idCol: String, textCol: String,
-                         diff: DataFrame): Dedup.CorpusIndex = {
+    * `removed` and `changed` ids retire via the family's `remove` (ids
+    * only — e.g. the text-gram index's stored shingles reconstruct their
+    * grams; the retired content is not needed), then `added` and
+    * `changed` rows fold in via its `extend` under the FROZEN quantizer
+    * — a changed row is remove-then-add, the only mutation an
+    * append-only index family can express. EXACT: both halves carry
+    * their family's build-equivalence, so `refreshIndex(build(old), new,
+    * diff) ≡ build(new)` under the same quantizer (spec-pinned per
+    * family in RefreshPipelineSpec / VectorRefreshSpec; oracle-pinned by
+    * `dedup_refresh_index`, `dedup_refresh_embed` and `sim_ivf_refresh`).
+    * O(changed + removed) heavy work: the extend input is diff-selected
+    * BEFORE any shingling/banding/assignment/encoding kernel runs, so
+    * unchanged rows are never re-processed (sentinel spec-pinned). Use
+    * [[corpusDiff]] for the text families and [[vectorDiff]] for the
+    * vector families. A family that retracts by image (BM25) needs the
+    * old crawl: [[refreshBm25Stats]]. */
+  def refreshIndex[I](index: I, newDf: DataFrame, idCol: String,
+                      contentCol: String, diff: DataFrame)(
+                      implicit fam: IndexFamily[I]): I = {
+    require(!fam.retractsByImage, s"the ${fam.name} family retracts by " +
+      "image: refresh it with the old crawl (refreshBm25Stats)")
     val (retired, fresh) = refreshIdSplit(diff, idCol)
-    Dedup.extendCorpusIndex(
-      Dedup.removeFromCorpusIndex(index, retired, idCol),
-      newDf.join(fresh, Seq(idCol), "left_semi"), idCol, textCol)
+    fam.extend(fam.remove(index, retired, idCol, contentCol),
+      newDf.join(fresh, Seq(idCol), "left_semi"), idCol, contentCol)
   }
 
   /** The BM25 leg of the refresh→index loop: retract the `removed` and
@@ -1039,78 +1042,6 @@ object CorpusOps {
     // straggler surface at scale; keep the lazy form.
     diff.filter(col("status").isin("removed", "changed")).select(col(idCol)),
     diff.filter(col("status").isin("added", "changed")).select(col(idCol)))
-
-  // The FOUR vector-index legs of the refresh→index loop, completing
-  // the symmetry refreshCorpusIndex/refreshBm25Stats opened: every
-  // serving index versions off the SAME [[vectorDiff]] — retired ids
-  // leave via the family's removeFrom* (streaming anti-joins), fresh
-  // vectors fold in via its extend* under the FROZEN quantizer
-  // (deterministic hyperplanes / frozen centroids / frozen codebooks).
-  // Each is EXACT under that quantizer: remove ≡ and extend ≡ rebuild
-  // hold bitwise per family (their own spec pins), so
-  // refresh(index(old), new, diff) ≡ index-of-new-under-the-same-
-  // quantizer — the contract VectorRefreshSpec pins for all four and
-  // the `dedup_refresh_embed` / `sim_ivf_refresh` rows hash-check
-  // end-to-end against DuckDB. O(changed + removed) heavy work: the
-  // extend input is diff-selected BEFORE any banding/assignment/
-  // encoding kernel runs, so unchanged vectors are never re-processed
-  // (NaN-sentinel spec-pinned).
-
-  /** The sign-LSH DEDUP index leg ([[Dedup.EmbeddingIndex]]). */
-  def refreshEmbeddingIndex(index: Dedup.EmbeddingIndex, newDf: DataFrame,
-                            idCol: String, vecCol: String,
-                            diff: DataFrame): Dedup.EmbeddingIndex = {
-    val (retired, fresh) = refreshIdSplit(diff, idCol)
-    Dedup.extendEmbeddingIndex(
-      Dedup.removeFromEmbeddingIndex(index, retired, idCol),
-      newDf.join(fresh, Seq(idCol), "left_semi"), idCol, vecCol)
-  }
-
-  /** The sign-LSH TOP-K index leg ([[Similarity.LshIndex]]). */
-  def refreshLshIndex(index: Similarity.LshIndex, newDf: DataFrame,
-                      idCol: String, vecCol: String,
-                      diff: DataFrame): Similarity.LshIndex = {
-    val (retired, fresh) = refreshIdSplit(diff, idCol)
-    Similarity.extendLshIndex(
-      Similarity.removeFromLshIndex(index, retired, idCol),
-      newDf.join(fresh, Seq(idCol), "left_semi"), idCol, vecCol)
-  }
-
-  /** The IVF leg: fresh vectors assign to the index's FROZEN centroids
-    * ([[Similarity.assignToCells]]), so
-    * `refresh(idx, new, diff).assigned ≡ assignToCells(new, idx.centers)`
-    * — re-fit the quantizer only when enough of the corpus has churned
-    * that cell occupancy degrades recall (the extend/remove contract). */
-  def refreshIvfIndex(index: Similarity.IvfIndex, newDf: DataFrame,
-                      idCol: String, vecCol: String,
-                      diff: DataFrame): Similarity.IvfIndex = {
-    val (retired, fresh) = refreshIdSplit(diff, idCol)
-    Similarity.extendIvfIndex(
-      Similarity.removeFromIvfIndex(index, retired, idCol),
-      newDf.join(fresh, Seq(idCol), "left_semi"), idCol, vecCol)
-  }
-
-  /** The PQ leg: fresh vectors encode against the FROZEN codebooks. */
-  def refreshPqIndex(index: Similarity.PqIndex, newDf: DataFrame,
-                     idCol: String, vecCol: String,
-                     diff: DataFrame): Similarity.PqIndex = {
-    val (retired, fresh) = refreshIdSplit(diff, idCol)
-    Similarity.extendPqIndex(
-      Similarity.removeFromPqIndex(index, retired, idCol),
-      newDf.join(fresh, Seq(idCol), "left_semi"), idCol, vecCol)
-  }
-
-  /** The IVF-PQ (IVFADC) leg: frozen cells AND frozen codebooks; the
-    * codes and rerank-vectors relations stay in lockstep because both
-    * halves mutate them together (the split-tree invariant). */
-  def refreshIvfPqIndex(index: Similarity.IvfPqIndex, newDf: DataFrame,
-                        idCol: String, vecCol: String,
-                        diff: DataFrame): Similarity.IvfPqIndex = {
-    val (retired, fresh) = refreshIdSplit(diff, idCol)
-    Similarity.extendIvfPqIndex(
-      Similarity.removeFromIvfPqIndex(index, retired, idCol),
-      newDf.join(fresh, Seq(idCol), "left_semi"), idCol, vecCol)
-  }
 
   /** The refresh pipeline's ATTRITION record — the one-row dashboard a
     * refresh publishes next to its export: what the diff decided

@@ -584,7 +584,7 @@ object Dedup {
     * `changed` documents are remove-then-extend: retire the old id here,
     * fold the new text via [[extendCorpusIndex]] (append-only ids make
     * in-place mutation unrepresentable) — the composition
-    * [[CorpusOps.refreshCorpusIndex]] packages. */
+    * [[CorpusOps.refreshIndex]] packages. */
   def removeFromCorpusIndex(index: CorpusIndex, removedIds: DataFrame,
                             idCol: String): CorpusIndex = {
     val cut = index.maxGramDf

@@ -1265,7 +1265,7 @@ object NorthStarQueries {
     "dedup_refresh_index" -> ((s, dir) => {
       val old = diffOldDocs(s, dir)
       val newC = diffNewDocs(s, dir)
-      val refreshed = CorpusOps.refreshCorpusIndex(
+      val refreshed = CorpusOps.refreshIndex(
         fullCorpusIndex(s, dir),
         newC, "doc_id", "text",
         CorpusOps.corpusDiff(old, newC, "doc_id", "text"))
@@ -1277,7 +1277,8 @@ object NorthStarQueries {
 
     // The STREAMING upsert fold oracle-checked end to end: CDC amends
     // (op = update, both row images) land in a batch-partitioned sink
-    // and `compactUpsertedBatches` applies remove-then-extend as one
+    // and the upsert fold (`CdcStream.compact` with only the upsert
+    // tree) applies remove-then-extend as one
     // offline compaction. Backward-manufactured exactness (the
     // dedup_refresh_embed method): v_{N-1} is made FROM the shared
     // fitted index by the INVERSE upsert — retire the amended ids, fold
@@ -1305,8 +1306,8 @@ object NorthStarQueries {
       amend.select(col("doc_id"), col("text"),
           col("p_text").as("old_text"))
         .write.mode("overwrite").parquet(s"$sink/batch=0")
-      val folded = graft.streaming.CdcStream.compactUpsertedBatches(
-        s, sink, oldIdx, "doc_id", "text")
+      val folded = graft.streaming.CdcStream.compact(
+        s, None, Some(sink), None, oldIdx, "doc_id", "text")
       Dedup.dedupAgainstCorpus(
         docs(s, dir).filter(col("doc_id") % 5 === 0), folded,
         "doc_id", "text")
@@ -1314,7 +1315,7 @@ object NorthStarQueries {
     }),
 
     // The refresh→index loop for the EMBEDDING family
-    // ([[CorpusOps.refreshEmbeddingIndex]] off one [[vectorDiff]]): the
+    // ([[CorpusOps.refreshIndex]] off one [[vectorDiff]]): the
     // old crawl (vecOldCrawl — %13 missing, %11 negated, junk under
     // +40M) refreshes to the raw embeddings corpus, so the refreshed
     // index must equal the SHARED fitted index bitwise (deterministic
@@ -1346,7 +1347,7 @@ object NorthStarQueries {
         Dedup.removeFromEmbeddingIndex(embIndex(s, dir), fresh, "vec_id"),
         old.join(retired, Seq("vec_id"), "left_semi"),
         "vec_id", "embedding")
-      val refreshed = CorpusOps.refreshEmbeddingIndex(oldIdx, e,
+      val refreshed = CorpusOps.refreshIndex(oldIdx, e,
         "vec_id", "embedding", diff)
       Dedup.dedupEmbeddingsAgainstCorpus(embIncrBatch(e), refreshed,
         "vec_id", "embedding", threshold = 0.9)
@@ -1356,9 +1357,9 @@ object NorthStarQueries {
     // The full PRODUCTION VERSIONING LOOP in one plan: probe batch 1
     // (doc_id % 10 == 0) against the corpus index (doc_id % 5 != 0),
     // fold the ACCEPTED novel docs into the index as a version bump
-    // (extendCorpusIndex — the same fold `CdcStream
-    // .compactAcceptedBatches` applies to the streaming sink, spec'd
-    // there with a forced cross-batch replay), then probe batch 2
+    // (extendCorpusIndex — the same fold `CdcStream.compactAccepted`
+    // applies to the streaming sink, spec'd there with a forced
+    // cross-batch replay), then probe batch 2
     // (doc_id % 10 == 5) against version N+1 — so a batch-2 doc is
     // dropped when it near-dups the ORIGINAL corpus or a batch-1
     // SURVIVOR, with the df-cut recomputed over the grown corpus
@@ -1381,7 +1382,7 @@ object NorthStarQueries {
       //    never refits version N to run it.
       //  - `accepted` crosses an EAGER localCheckpoint exactly where
       //    production has the ingest-sink write/read
-      //    (startCorpusDedupIngest -> compactAcceptedBatches), so the
+      //    (startCorpusDedupIngest -> compactAccepted), so the
       //    fold and the second probe consume it as data instead of
       //    re-running probe 1 per reference. The checkpoint executes
       //    inside the row's timing, so probe 1 is still priced.
@@ -1597,7 +1598,7 @@ object NorthStarQueries {
     // full lifecycle): probe batch 1 (negated copies of every 7th
     // vector — novel vs the corpus) against version N, fold its
     // survivors in via extendEmbeddingIndex (the same fold `CdcStream
-    // .compactAcceptedEmbeddingBatches` applies to the streaming sink),
+    // .compactAccepted` applies to the streaming sink),
     // then probe batch 2 against version N+1. Batch 2 plants
     // near-copies of the NEGATED batch-1 vectors (+0.05 nudge, ids
     // +30M) — they near-dup ONLY batch 1's survivors, so they drop iff
@@ -1770,7 +1771,7 @@ object NorthStarQueries {
         .select(col("query_id"), col("neighbor_id"), col("rank"))
     }),
     // The refresh→index loop for the IVF family
-    // ([[CorpusOps.refreshIvfIndex]] off one [[vectorDiff]], frozen
+    // ([[CorpusOps.refreshIndex]] off one [[vectorDiff]], frozen
     // centroids): the old crawl (vecOldCrawl over the CLUSTERED fixture)
     // refreshes to the clustered corpus itself, so the refreshed
     // index's assigned relation equals the shared fitted index's
@@ -1799,15 +1800,15 @@ object NorthStarQueries {
         Similarity.removeFromIvfIndex(ivfClusteredIndex(dir, ce), fresh,
           "vec_id"),
         old.join(retired, Seq("vec_id"), "left_semi"), "vec_id", "embedding")
-      val refreshed = CorpusOps.refreshIvfIndex(oldIdx, ce,
+      val refreshed = CorpusOps.refreshIndex(oldIdx, ce,
         "vec_id", "embedding", diff)
       Similarity.ivfProbe(refreshed, ce.filter(col("vec_id") % 20 === 0),
         "vec_id", "embedding", k = 10, nprobe = 4)
         .select(col("query_id"), col("neighbor_id"), col("rank"))
     }),
     // The NET-EFFECT CDC maintenance fold for a vector family,
-    // oracle-checked end to end ([[graft.streaming.CdcStream
-    // .compactMaintenanceIvfBatches]] — r17 punch #1, the cross-class
+    // oracle-checked end to end ([[graft.streaming.CdcStream.compact]]
+    // — r17 punch #1, the cross-class
     // closure for the 100 TB ANN structures): one compaction window
     // holds all THREE op classes off the maintenance ingest's shared
     // tree triple, including ids that CROSS classes between triggers —
@@ -1831,8 +1832,8 @@ object NorthStarQueries {
       accepts.write.mode("overwrite").parquet(s"$a/batch=0")
       retracts.write.mode("overwrite").parquet(s"$r/batch=0")
       upserts.write.mode("overwrite").parquet(s"$u/batch=1")
-      val netted = graft.streaming.CdcStream.compactMaintenanceIvfBatches(
-        s, a, u, r, oldIdx, "vec_id", "embedding")
+      val netted = graft.streaming.CdcStream.compact(
+        s, Some(a), Some(u), Some(r), oldIdx, "vec_id", "embedding")
       Similarity.ivfProbe(netted,
         clusteredEmbeddings(embs(s, dir)).filter(col("vec_id") % 20 === 0),
         "vec_id", "embedding", k = 10, nprobe = 4)

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 
+import graft.extensions.IndexFamily
 import graft.sinks.AppendSink
 
 /**
@@ -174,25 +175,23 @@ object CdcStream {
     * the driver, so a plain reference cell is race-free. */
   private def resolveHandle[I](spark: SparkSession,
                                ref: java.util.concurrent.atomic.AtomicReference[I],
-                               policy: CompactionPolicy,
-                               savedDir: I => Option[String],
-                               version: I => Long,
-                               load: (SparkSession, String) => I): I = {
+                               policy: CompactionPolicy)(
+                               implicit fam: IndexFamily[I]): I = {
     val cur = ref.get()
-    (policy, savedDir(cur)) match {
+    (policy, fam.savedDir(cur)) match {
       case (FrozenHandle, _) | (_, None) => cur
       case (_, Some(d)) =>
         graft.extensions.IndexMeta.read(spark, d).map(_.version) match {
-          case Some(v) if v != version(cur) => policy match {
+          case Some(v) if v != fam.version(cur) => policy match {
             case FailStreamOnCompaction => throw new IllegalStateException(
-              s"restart required: index version moved (${version(cur)} -> $v) " +
+              s"restart required: index version moved (${fam.version(cur)} -> $v) " +
                 s"at $d — an offline compaction saved a new version in place " +
                 "while this ingest ran; the frozen handle's membership/stats " +
                 "would misroute from here on. Restart the ingest on the new " +
                 "handle and fresh sink trees (or run with " +
                 "ReresolveOnCompaction to roll automatically)")
             case ReresolveOnCompaction =>
-              val fresh = load(spark, d); ref.set(fresh); fresh
+              val fresh = fam.load(spark, d); ref.set(fresh); fresh
             case FrozenHandle => cur
           }
           case _ => cur
@@ -272,7 +271,7 @@ object CdcStream {
    * non-default k probes correctly with no extra plumbing. Accepted
    * batches do NOT auto-join the index: growing the corpus is a
    * versioning decision (when to re-fit, how to compact), owned by the
-   * pipeline, not this operator — see [[compactAcceptedBatches]] for
+   * pipeline, not this operator — see [[compactAccepted]] for
    * the idempotent offline bump. Quality gates / decontamination
    * compose UPSTREAM: transform `docStream` (filter, [[graft.extensions
    * .CorpusOps]] ops) before passing it in; the ingest needs no hook.
@@ -425,11 +424,10 @@ object CdcStream {
     * `acceptDir`; updates land their id + new vector in `upsertDir`
     * (no old image needed: every vector family retracts by id alone);
     * deletes land their id in `retractDir`. Downstream,
-    * [[compactVecMaintenanceBatches]] net-reduces all three trees
-    * (cross-class-safe, the [[compactMaintenanceBatches]] argument);
-    * the per-leg `compactAccepted/Upserted/Retracted
-    * {Embedding,Ivf,IvfPq,Lsh,Pq}Batches` folds remain correct when
-    * compaction cadence guarantees class-disjoint windows. Micro-batch
+    * [[compact]] net-reduces all three trees for any vector family
+    * (cross-class-safe, the [[startCdcMaintenanceIngest]] argument);
+    * the per-leg folds remain correct when compaction cadence
+    * guarantees class-disjoint windows. Micro-batch
     * persisted once, change log read once; the gate probe is the only
     * non-narrow work. Same OPERATING CONTRACT as
     * [[startCdcMaintenanceIngest]]: the gate and reinsert router key
@@ -456,10 +454,7 @@ object CdcStream {
     changeStream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ix = resolveHandle(batch.sparkSession, handle, onCompaction,
-          (i: graft.extensions.Dedup.EmbeddingIndex) => i.savedDir,
-          (i: graft.extensions.Dedup.EmbeddingIndex) => i.version,
-          graft.extensions.Dedup.loadEmbeddingIndex)
+        val ix = resolveHandle(batch.sparkSession, handle, onCompaction)
         val ep = epochSuffix(onCompaction, ix.version)
         val b = batch.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -600,17 +595,15 @@ object CdcStream {
     * subtraction is not idempotent under replay, exactly the
     * double-count class the accept legs' offline-fold contract guards
     * against — so shrinking an index is the same idempotent compaction
-    * step as growing one ([[compactRetractedBatches]] /
-    * [[compactRetractedEmbeddingBatches]] /
-    * [[compactRetractedBm25Batches]]), and the per-batch `batch=<id>`
-    * OVERWRITE keeps the sink itself replay-safe. AMENDED rows are not
-    * this leg's job: an update is remove-then-add — in batch the refresh
-    * compositions ([[graft.extensions.CorpusOps.refreshCorpusIndex]]
-    * and siblings) express it off a corpus diff, and in streaming
-    * [[startUpsertIngest]] collects both row images for the
-    * `compactUpserted*` folds — routing an update's new image through a
-    * dedup ingest would let the novelty gate eat it (it matches its own
-    * stale index entry). */
+    * step as growing one ([[compact]] with only `retractDir`), and the
+    * per-batch `batch=<id>` OVERWRITE keeps the sink itself replay-safe.
+    * AMENDED rows are not this leg's job: an update is remove-then-add —
+    * in batch the refresh loop
+    * ([[graft.extensions.CorpusOps.refreshIndex]]) expresses it off a
+    * corpus diff, and in streaming [[startUpsertIngest]] collects both
+    * row images for the upsert fold — routing an update's new image
+    * through a dedup ingest would let the novelty gate eat it (it
+    * matches its own stale index entry). */
   def startRetractIngest(
       changeStream: DataFrame,
       opCol: String, deleteOp: String,
@@ -642,7 +635,7 @@ object CdcStream {
     * image incl. the id plus whatever old-image columns downstream
     * retraction needs, e.g. `old_text` for BM25) into a
     * batch-partitioned sink, per-batch OVERWRITE replay contract, and
-    * the `compactUpserted*` folds apply remove-then-extend offline as
+    * the upsert fold ([[compact]]) applies remove-then-extend offline as
     * one idempotent compaction step. The batch partition column is the
     * ORDER the folds need: an id amended twice in one compaction window
     * must retract what the index actually holds (the EARLIEST old
@@ -692,17 +685,16 @@ object CdcStream {
     * unconditionally, even when empty — the replay-reconciliation
     * argument of the accept legs), and downstream ONE net-effect
     * compaction versions the index off all three trees:
-    * [[compactMaintenanceBatches]] (text-gram) /
-    * [[compactMaintenanceBm25Batches]]. CDC guarantees at most one
-    * event per id per TRIGGER, but a compaction window spans many
-    * triggers, and an id can cross op classes between them (insert
-    * then update, update then delete, delete then re-insert) — the
-    * per-leg folds assume class-disjoint id sets and would violate
+    * [[compact]], for the text-gram index and the BM25 stats alike. CDC
+    * guarantees at most one event per id per TRIGGER, but a compaction
+    * window spans many triggers, and an id can cross op classes
+    * between them (insert then update, update then delete, delete then
+    * re-insert) — the per-leg folds assume class-disjoint id sets and
+    * would violate
     * extend's append-only contract on such a window; the net-effect
     * compaction reduces every id to one net operation instead. Use the
-    * per-leg `compactAccepted*`/`compactUpserted*`/`compactRetracted*`
-    * folds only when compaction cadence guarantees class-disjoint
-    * windows.
+    * per-leg folds ([[compactAccepted]], [[compact]] with one tree) only
+    * when compaction cadence guarantees class-disjoint windows.
     *
     * OPERATING CONTRACT — restart (or re-resolve) after every
     * compaction: the novelty gate and the reinsert router classify
@@ -716,7 +708,7 @@ object CdcStream {
     * routes through the gate against stale docStats. The compaction
     * rhythm is therefore: drain/stop the ingest → fold → restart the
     * ingest on the new index handle and FRESH sink trees — the same
-    * swap-between-triggers rhythm [[compactAcceptedBatches]] documents
+    * swap-between-triggers rhythm [[compactAccepted]] documents
     * for the single-leg ingests. The versioned-fold guards protect the
     * FOLDS against a stale handle; for a SAVED handle the ROUTING side
     * is now mechanized per trigger by `onCompaction`
@@ -756,10 +748,7 @@ object CdcStream {
     changeStream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ix = resolveHandle(batch.sparkSession, handle, onCompaction,
-          (i: graft.extensions.Dedup.CorpusIndex) => i.savedDir,
-          (i: graft.extensions.Dedup.CorpusIndex) => i.version,
-          graft.extensions.Dedup.loadCorpusIndex)
+        val ix = resolveHandle(batch.sparkSession, handle, onCompaction)
         val ep = epochSuffix(onCompaction, ix.version)
         val b = batch.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -814,479 +803,81 @@ object CdcStream {
   }
 
   /** Close the loop between the streaming ingest and index versioning:
-    * read everything the accepted-novel sink
-    * ([[startCorpusDedupIngest]]) collected and fold it into the corpus
-    * index as ONE version bump. The ingest deliberately never
-    * auto-extends per batch — extension double-counts a replayed
-    * batch's gram dfs, so growing the corpus must be an idempotent
-    * offline step, and this is that step: the sink tree is read whole,
-    * deduped by id (a doc the source replayed across a batch boundary —
-    * outside the per-batch overwrite's reach — extends the index
-    * exactly once; rows of one id are identical, so which survives is
-    * immaterial), and handed to [[graft.extensions.Dedup
-    * .extendCorpusIndex]], O(new docs + crossing grams). The production
-    * rhythm: ingests probe version N while accepted batches accumulate;
-    * a periodic compaction calls this, [[graft.extensions.Dedup
-    * .saveCorpusIndex]]s version N+1, swaps it in between triggers, and
-    * `close()`s version N — and because the ingest keeps probing
-    * version N until the swap, replays during compaction still
-    * reconcile against the same index they first ran under. After a
-    * bump, point the ingest at a FRESH sink tree: compaction consumes
-    * the whole tree, and re-compacting already folded batches into a
-    * later version would violate extend's append-only id contract —
-    * which is why a successful fold stamps the tree with a `_FOLDED`
-    * marker and a second compaction of the same tree REFUSES loudly
-    * instead of silently double-counting. A compaction that finds no
-    * committed batch rows (empty or missing tree — a scheduled fold
-    * racing an idle ingest) is a natural no-op: the input index is
-    * returned unchanged and no marker is written, so a later real fold
-    * still runs. Pass the ingest's `provenanceDir` to stamp the audit
-    * trail with the same marker at the same moment — the drop
-    * provenance then versions together with the keep-set it explains,
-    * archived in place alongside the consumed sink. */
-  def compactAcceptedBatches(
-      spark: SparkSession, sinkDir: String,
-      index: graft.extensions.Dedup.CorpusIndex,
-      idCol: String, textCol: String,
-      provenanceDir: Option[String] = None): graft.extensions.Dedup.CorpusIndex =
-    // stale-handle guard, guarded read, fold, then marker(s) — the
-    // shared skeleton; the fold lands in the new version's lineage so
-    // the next save stamps it into the tree (IndexMeta)
-    foldSinkTree(spark, sinkDir, FoldedMarkerName, index.savedDir,
-        index.version, alsoMark = provenanceDir.toSeq) { accepted =>
-      val bumped = graft.extensions.Dedup.extendCorpusIndex(index,
-        accepted.dropDuplicates(idCol), idCol, textCol)
-      bumped.copy(folded = bumped.folded :+ sinkDir)
-    }.getOrElse(index)
-
-  /** The embedding analog of [[compactAcceptedBatches]]: fold the
-    * accepted-novel vectors of [[startEmbeddingDedupIngest]]'s sink into
-    * the bucket index as one version bump via [[graft.extensions.Dedup
-    * .extendEmbeddingIndex]] (buckets the new vectors with the SAVED
-    * hyperplanes — no re-fit). Same contracts end to end: id-dedup
-    * absorbs cross-batch source replays, an empty tree is a no-op, a
-    * consumed tree is `_FOLDED`-stamped and refuses a second fold, and
-    * `provenanceDir` archives the audit trail in lockstep. */
-  def compactAcceptedEmbeddingBatches(
-      spark: SparkSession, sinkDir: String,
-      index: graft.extensions.Dedup.EmbeddingIndex,
-      idCol: String, vecCol: String,
-      provenanceDir: Option[String] = None): graft.extensions.Dedup.EmbeddingIndex =
-    foldSinkTree(spark, sinkDir, FoldedMarkerName, index.savedDir,
-        index.version, alsoMark = provenanceDir.toSeq) { accepted =>
-      val bumped = graft.extensions.Dedup.extendEmbeddingIndex(index,
-        accepted.dropDuplicates(idCol), idCol, vecCol)
-      bumped.copy(folded = bumped.folded :+ sinkDir)
-    }.getOrElse(index)
-
-  /** The semantic analog of [[compactAcceptedBatches]]: fold the
-    * accepted-novel vectors of [[startSemanticDedupIngest]]'s sink into
-    * the IVF index as one version bump via [[graft.extensions
-    * .Similarity.extendIvfIndex]] (assigns the new vectors to the
-    * FROZEN cells — the centroids never move, so every saved cell
-    * partition stays valid). Same contracts end to end: the
-    * stale-handle guard, id-dedup absorbing cross-batch source
-    * replays, an empty tree as a no-op, the `_FOLDED` stamp refusing a
-    * second fold, and `provenanceDir` archiving the audit trail in
-    * lockstep. The bumped index serves both consumers of the shared
-    * structure — ANN probes AND the next trigger's semantic dedup. */
-  def compactAcceptedSemanticBatches(
-      spark: SparkSession, sinkDir: String,
-      index: graft.extensions.Similarity.IvfIndex,
-      idCol: String, vecCol: String,
-      provenanceDir: Option[String] = None): graft.extensions.Similarity.IvfIndex =
-    // refuse AND co-stamp the family's NET accept marker (ADVICE r18):
-    // a per-leg accept fold after compactMaintenanceIvfBatches consumed
-    // the tree — or vice versa — would re-fold the same accepts into
-    // the same IVF index; with both markers checked and both stamped,
-    // the double-fold is unrepresentable in BOTH directions while the
-    // OTHER families' net folds of a shared tree stay unaffected
-    foldSinkTree(spark, sinkDir, FoldedMarkerName, index.savedDir,
-        index.version, alsoMark = provenanceDir.toSeq,
-        alsoRefuse = Seq(IvfFoldedMarkerName),
-        alsoMarkSelf = Seq(IvfFoldedMarkerName)) { accepted =>
-      val bumped = graft.extensions.Similarity.extendIvfIndex(index,
-        accepted.dropDuplicates(idCol), idCol, vecCol)
-      bumped.copy(folded = bumped.folded :+ sinkDir)
-    }.getOrElse(index)
-
-  /** The IVF-PQ analog of [[compactAcceptedBatches]], completing the
-    * accept→bump lifecycle for the fifth index family: fold the
-    * accepted-novel vectors of a dedup ingest's sink (e.g.
-    * [[startSemanticDedupIngest]] running over the same coarse cells)
-    * into the IVFADC index as one version bump via [[graft.extensions
-    * .Similarity.extendIvfPqIndex]] — new vectors are assigned to the
-    * FROZEN cells and encoded with the FROZEN codebooks, so neither
-    * quantizer moves and every saved cell partition, ADC table and
-    * previously-issued probe plan stays valid. Same contracts end to
-    * end: the stale-handle guard, id-dedup absorbing cross-batch source
-    * replays, an empty tree as a no-op, the `_FOLDED` stamp refusing a
-    * second fold, and `provenanceDir` archiving the audit trail in
-    * lockstep. The bump extends `codes` AND the rerank-only `vectors`
-    * relation together, preserving the split-tree invariant. */
-  def compactAcceptedIvfPqBatches(
-      spark: SparkSession, sinkDir: String,
-      index: graft.extensions.Similarity.IvfPqIndex,
-      idCol: String, vecCol: String,
-      provenanceDir: Option[String] = None): graft.extensions.Similarity.IvfPqIndex =
-    // same both-directions refusal as [[compactAcceptedSemanticBatches]],
-    // against this family's net marker (ADVICE r18)
-    foldSinkTree(spark, sinkDir, FoldedMarkerName, index.savedDir,
-        index.version, alsoMark = provenanceDir.toSeq,
-        alsoRefuse = Seq(IvfPqFoldedMarkerName),
-        alsoMarkSelf = Seq(IvfPqFoldedMarkerName)) { accepted =>
-      val bumped = graft.extensions.Similarity.extendIvfPqIndex(index,
-        accepted.dropDuplicates(idCol), idCol, vecCol)
-      bumped.copy(folded = bumped.folded :+ sinkDir)
-    }.getOrElse(index)
-
-  /** Fold the accepted-docs sink into the SEARCH statistics as one
-    * version bump via [[graft.extensions.Search.extendBm25Stats]] —
-    * O(new docs): the batch's df table merges into the stored one by a
-    * full-outer sum of two skinny vocabulary relations, the two corpus
-    * scalars add. Completes the versioning symmetry: the SAME
-    * accepted-docs tree [[startCorpusDedupIngest]] writes can feed BOTH
-    * the dedup-index fold and this one — each is tracked by its OWN
-    * marker ([[FoldedMarkerName]] vs [[Bm25FoldedMarkerName]]), so the
-    * two loops version independently off one ingest and each refuses
-    * ITS OWN double-fold. All the family contracts carry: stale-handle
-    * guard, id-dedup absorbing cross-batch source replays, empty tree
-    * as a no-op, the fold recorded in the stats' lineage.
+    * read everything an accepted-novel sink (a dedup ingest's, e.g.
+    * [[startCorpusDedupIngest]]) collected and fold it into the index as
+    * ONE version bump via the family's `extend` (O(new rows), under the
+    * family's frozen quantizer). The ingest deliberately never
+    * auto-extends per batch — extension double-counts a replayed batch's
+    * gram dfs, so growing the index must be an idempotent offline step,
+    * and this is that step: the sink tree is read whole, deduped by id (a
+    * row the source replayed across a batch boundary — outside the
+    * per-batch overwrite's reach — extends the index exactly once; rows
+    * of one id are identical, so which survives is immaterial), and
+    * folded. The production rhythm: ingests probe version N while
+    * accepted batches accumulate; a periodic compaction calls this, saves
+    * version N+1, swaps it in between triggers, and `close()`s version N
+    * — and because the ingest keeps probing version N until the swap,
+    * replays during compaction still reconcile against the same index
+    * they first ran under. After a bump, point the ingest at a FRESH sink
+    * tree: compaction consumes the whole tree, and re-compacting already
+    * folded batches into a later version would violate extend's
+    * append-only id contract — which is why a successful fold stamps the
+    * tree with the family's accept-leg marker
+    * ([[graft.extensions.IndexFamily.legAcceptMarker]]) and a second
+    * compaction of the same tree REFUSES loudly instead of silently
+    * double-counting. One accepted-docs tree can feed both the text-gram
+    * and the BM25 fold: each is tracked by its own marker. A compaction
+    * that finds no committed batch rows (empty or missing tree — a
+    * scheduled fold racing an idle ingest) is a natural no-op: the input
+    * index is returned unchanged and no marker is written, so a later
+    * real fold still runs. Pass the ingest's `provenanceDir` to stamp the
+    * audit trail with the same marker at the same moment — the drop
+    * provenance then versions together with the keep-set it explains.
     *
-    * Marker ordering (ADVICE r16): the extend SNAPSHOTS the sink read
-    * eagerly (extendBm25Stats localCheckpoints its per-doc projection),
-    * so batches a still-running ingest appends AFTER the fold can no
-    * longer leak into later evaluations of the lazy df merge. And when
-    * `saveTo` is given, the bumped stats are made DURABLE (saved, with
-    * the fold already in their lineage) BEFORE the `_FOLDED_BM25` marker
-    * lands — a crash between extend and save then leaves the sink
-    * unmarked, so the next scheduled compaction simply re-runs; the old
-    * durable-after-mark window orphaned the consumed batches instead.
-    * Without `saveTo` the caller owns persisting the returned handle
-    * promptly: the marker is down but the bump lives only in session
-    * memory. */
-  def compactAcceptedBm25Batches(
-      spark: SparkSession, sinkDir: String,
-      stats: graft.extensions.Search.Bm25Stats,
-      idCol: String, textCol: String,
-      saveTo: Option[String] = None): graft.extensions.Search.Bm25Stats =
-    foldSinkTree(spark, sinkDir, Bm25FoldedMarkerName, stats.savedDir,
-        stats.version) { accepted =>
-      val bumped = graft.extensions.Search.extendBm25Stats(stats,
-          accepted.dropDuplicates(idCol), idCol, textCol)
-        .copy(folded = stats.folded :+ sinkDir)
-      // durable-then-mark: the save happens inside the fold, BEFORE
-      // foldSinkTree writes the marker
-      saveTo.map(bumped.save).getOrElse(bumped)
-    }.getOrElse(stats)
-
-  /** Apply a retract sink ([[startRetractIngest]]) to the corpus index
-    * as ONE version bump — the shrink mirror of
-    * [[compactAcceptedBatches]], all the same contracts: stale-handle
-    * guard, id-dedup absorbing cross-batch source replays (removal is
-    * an anti-join, so a doubled id retires once regardless — the dedup
-    * is for plan economy), an empty/missing tree as a no-op, and the
-    * consumed tree stamped with the retract family's OWN marker
-    * ([[RetractMarkerName]]) so a re-scheduled compaction refuses
-    * loudly. Removal is EXACT (remove ≡ rebuild on the survivors, the
-    * [[graft.extensions.Dedup.removeFromCorpusIndex]] contract incl.
-    * the backward df-cut re-admission), needing only the retired IDS —
-    * the sink may carry more columns (a full CDC row image); they are
-    * ignored here. */
-  def compactRetractedBatches(
-      spark: SparkSession, sinkDir: String,
-      index: graft.extensions.Dedup.CorpusIndex,
-      idCol: String): graft.extensions.Dedup.CorpusIndex =
-    netCompaction(spark, None, None, Some(sinkDir), idCol, "__img",
-        org.apache.spark.sql.types.StringType,
-        FoldedMarkerName, UpsertMarkerName, RetractMarkerName,
-        index.savedDir, index.version) { (removeIds, _, contributing) =>
-      // a retract-only window's add set is empty BY CONSTRUCTION, so
-      // this stays the single remove-step (one version bump)
-      val shrunk = graft.extensions.Dedup.removeFromCorpusIndex(index,
-        removeIds, idCol)
-      shrunk.copy(folded = shrunk.folded ++ contributing)
+    * Marker ordering (ADVICE r16): when `saveTo` is given, the bumped
+    * index is made DURABLE (saved, with the fold already in its lineage)
+    * BEFORE the marker lands — a crash between extend and save then
+    * leaves the sink unmarked, so the next scheduled compaction simply
+    * re-runs. Without `saveTo` the caller owns persisting the returned
+    * handle promptly: the marker is down but the bump lives only in
+    * session memory. (BM25's extend snapshots the sink read eagerly, so
+    * batches a still-running ingest appends after the fold cannot leak
+    * into later evaluations of its lazy df merge.) */
+  def compactAccepted[I](
+      spark: SparkSession, sinkDir: String, index: I,
+      idCol: String, contentCol: String,
+      provenanceDir: Option[String] = None,
+      saveTo: Option[String] = None)(implicit fam: IndexFamily[I]): I = {
+    // refuse AND co-stamp the family's NET accept marker when it differs
+    // from the leg's (ADVICE r18): per-leg and net accept folds of one
+    // tree then refuse each other in BOTH directions
+    val marker = fam.legAcceptMarker
+    val netMarker = Seq(fam.acceptMarker).filter(_ != marker)
+    fam.savedDir(index).foreach(d => graft.extensions.IndexMeta
+      .requireCurrent(spark, d, fam.version(index), "compaction"))
+    consumeSinkTree(spark, sinkDir, marker,
+        alsoRefuse = netMarker).map { accepted =>
+      // the fold runs BEFORE any marker lands (durable-then-mark: a crash
+      // inside it, including the save, leaves the tree unmarked and its
+      // lease held — see [[acquireFoldLease]]); a fold that THROWS (a
+      // contract refusal) releases the lease, so a fixed input re-runs
+      // with no manual step
+      val out =
+        try {
+          // the fold lands in the new version's lineage, so the save
+          // stamps it into the tree (IndexMeta)
+          val bumped = fam.withFolded(
+            fam.extend(index, accepted.dropDuplicates(idCol), idCol, contentCol),
+            fam.folded(index) :+ sinkDir)
+          saveTo.fold(bumped)(fam.save(bumped, _))
+        } catch { case e: Throwable =>
+          releaseFoldLease(spark, sinkDir, marker); throw e }
+      (marker +: netMarker).foreach(markFolded(spark, sinkDir, _))
+      provenanceDir.foreach(markFolded(spark, _, marker))
+      releaseFoldLease(spark, sinkDir, marker)
+      out
     }.getOrElse(index)
-
-  /** Apply a retract sink to a saved/loaded IVF index — the ANN leg of
-    * delete-driven maintenance (one anti-join on the cell-assigned
-    * relation, frozen centroids, every saved cell partition stays
-    * valid). Same contracts as [[compactRetractedBatches]], with the
-    * family's own marker. */
-  def compactRetractedIvfBatches(
-      spark: SparkSession, sinkDir: String,
-      index: graft.extensions.Similarity.IvfIndex,
-      idCol: String): graft.extensions.Similarity.IvfIndex =
-    netCompaction(spark, None, None, Some(sinkDir), idCol, "__img", FloatVec,
-        IvfFoldedMarkerName, IvfUpsertMarkerName, IvfRetractMarkerName,
-        index.savedDir, index.version) { (removeIds, _, contributing) =>
-      val shrunk = graft.extensions.Similarity.removeFromIvfIndex(index,
-        removeIds, idCol)
-      shrunk.copy(folded = shrunk.folded ++ contributing)
-    }.getOrElse(index)
-
-  /** The embedding analog of [[compactRetractedBatches]]: retire the
-    * sink's ids from the sign-LSH bucket index (two streaming
-    * anti-joins keep buckets and vectors in lockstep). Same contracts
-    * end to end. */
-  def compactRetractedEmbeddingBatches(
-      spark: SparkSession, sinkDir: String,
-      index: graft.extensions.Dedup.EmbeddingIndex,
-      idCol: String): graft.extensions.Dedup.EmbeddingIndex =
-    netCompaction(spark, None, None, Some(sinkDir), idCol, "__img", FloatVec,
-        FoldedMarkerName, EmbUpsertMarkerName, EmbRetractMarkerName,
-        index.savedDir, index.version) { (removeIds, _, contributing) =>
-      val shrunk = graft.extensions.Dedup.removeFromEmbeddingIndex(index,
-        removeIds, idCol)
-      shrunk.copy(folded = shrunk.folded ++ contributing)
-    }.getOrElse(index)
-
-  /** The IVF-PQ leg of delete-driven maintenance: retire the sink's ids
-    * from the codes AND the rerank-only vectors relation together (the
-    * split-tree invariant), frozen cells and frozen codebooks — every
-    * saved cell partition, ADC table and previously-issued probe plan
-    * stays valid. Same contracts as [[compactRetractedBatches]], with
-    * the family's own marker, so one vec-delete sink can feed the
-    * embedding, IVF and IVF-PQ folds independently. */
-  def compactRetractedIvfPqBatches(
-      spark: SparkSession, sinkDir: String,
-      index: graft.extensions.Similarity.IvfPqIndex,
-      idCol: String): graft.extensions.Similarity.IvfPqIndex =
-    netCompaction(spark, None, None, Some(sinkDir), idCol, "__img", FloatVec,
-        IvfPqFoldedMarkerName, IvfPqUpsertMarkerName, IvfPqRetractMarkerName,
-        index.savedDir, index.version) { (removeIds, _, contributing) =>
-      val shrunk = graft.extensions.Similarity.removeFromIvfPqIndex(index,
-        removeIds, idCol)
-      shrunk.copy(folded = shrunk.folded ++ contributing)
-    }.getOrElse(index)
-
-  /** The sign-LSH TOP-K leg of delete-driven maintenance
-    * ([[graft.extensions.Similarity.LshIndex]] — the retrieval index,
-    * vs [[compactRetractedEmbeddingBatches]]'s dedup bucket index): one
-    * streaming anti-join on the banded relation under the DETERMINISTIC
-    * hyperplanes. Same contracts, marker [[LshRetractMarkerName]] —
-    * completing the one vec-delete-sink-feeds-every-vector-family
-    * design for all FIVE vector structures. */
-  def compactRetractedLshBatches(
-      spark: SparkSession, sinkDir: String,
-      index: graft.extensions.Similarity.LshIndex,
-      idCol: String): graft.extensions.Similarity.LshIndex =
-    netCompaction(spark, None, None, Some(sinkDir), idCol, "__img", FloatVec,
-        LshFoldedMarkerName, LshUpsertMarkerName, LshRetractMarkerName,
-        index.savedDir, index.version) { (removeIds, _, contributing) =>
-      val shrunk = graft.extensions.Similarity.removeFromLshIndex(index,
-        removeIds, idCol)
-      shrunk.copy(folded = shrunk.folded ++ contributing)
-    }.getOrElse(index)
-
-  /** The PQ leg of delete-driven maintenance: one streaming anti-join
-    * on the codes relation under the FROZEN codebooks. Same contracts,
-    * marker [[PqRetractMarkerName]]. */
-  def compactRetractedPqBatches(
-      spark: SparkSession, sinkDir: String,
-      index: graft.extensions.Similarity.PqIndex,
-      idCol: String): graft.extensions.Similarity.PqIndex =
-    netCompaction(spark, None, None, Some(sinkDir), idCol, "__img", FloatVec,
-        PqFoldedMarkerName, PqUpsertMarkerName, PqRetractMarkerName,
-        index.savedDir, index.version) { (removeIds, _, contributing) =>
-      val shrunk = graft.extensions.Similarity.removeFromPqIndex(index,
-        removeIds, idCol)
-      shrunk.copy(folded = shrunk.folded ++ contributing)
-    }.getOrElse(index)
-
-  /** The BM25 retraction fold: subtract the retired docs' contributions
-    * from the search statistics as one version bump via
-    * [[graft.extensions.Search.retractBm25Stats]] — this is the family
-    * whose retraction is NOT idempotent (integer subtraction, not an
-    * anti-join), so the marker discipline here is load-bearing, not
-    * just an audit: a double-fold would subtract twice and corrupt df
-    * counts, which is exactly what [[consumeSinkTree]]'s refusal makes
-    * unrepresentable. The sink must carry the retired docs' TEXT
-    * (`startRetractIngest(keepCols = Seq(id, text))` — the CDC delete's
-    * old row image); the id-dedup collapses cross-batch replays to one
-    * subtraction. `saveTo` applies the durable-then-mark ordering of
-    * [[compactAcceptedBm25Batches]] (ADVICE r16): the bumped stats are
-    * saved BEFORE the marker lands, so a crash between retract and save
-    * re-runs the fold instead of orphaning the consumed sink. */
-  def compactRetractedBm25Batches(
-      spark: SparkSession, sinkDir: String,
-      stats: graft.extensions.Search.Bm25Stats,
-      idCol: String, textCol: String,
-      saveTo: Option[String] = None): graft.extensions.Search.Bm25Stats =
-    // the NULL-image refusal (the per-leg twin of the net fold's: this
-    // fold is the most direct consumer of retract images, and a NULL
-    // one — an id-only delete feed pointed at the BM25 leg — would
-    // decrement nDocs while subtracting no terms) fires inside the
-    // skeleton, on the netted retract set, before any stats arithmetic
-    netBm25Compaction(spark, None, None, Some(sinkDir), stats,
-        idCol, textCol, oldTextCol = textCol,
-        s"BM25 retract fold of $sinkDir") { (retractDocs, _, contributing) =>
-      val shrunk = graft.extensions.Search.retractBm25Stats(stats,
-          retractDocs, idCol, textCol)
-        .copy(folded = stats.folded ++ contributing)
-      saveTo.map(shrunk.save).getOrElse(shrunk)
-    }
-
-  /** Apply an upsert sink ([[startUpsertIngest]]) to the corpus index:
-    * remove-then-extend as one compaction — retire every amended id
-    * (the index's stored shingles reconstruct its grams), then fold the
-    * LATEST new image back in, so an id amended N times in the window
-    * lands exactly where a rebuild on the final corpus state would put
-    * it. Both halves carry their build-equivalence
-    * ([[graft.extensions.Dedup.removeFromCorpusIndex]] /
-    * [[graft.extensions.Dedup.extendCorpusIndex]]), so
-    * upsert ≡ rebuild on the amended corpus at the postings/dictionary/
-    * doc-stats level (spec-pinned). Contract: the fold maintains a
-    * MIRROR of the source table — an amended id not currently in the
-    * index (e.g. novelty-gated out at ingest) is simply ADDED (the
-    * remove is an anti-join no-op); a deployment that wants gated-out
-    * docs to stay out must anti-join the sink against its keep-set
-    * before compacting. Same contracts as every fold: stale-handle
-    * guard, empty tree no-op, the family's own marker
-    * ([[UpsertMarkerName]]) refusing a double-run. The version bumps
-    * TWICE (remove, then extend) — lineage carries through both. */
-  def compactUpsertedBatches(
-      spark: SparkSession, sinkDir: String,
-      index: graft.extensions.Dedup.CorpusIndex,
-      idCol: String, textCol: String): graft.extensions.Dedup.CorpusIndex =
-    netCompaction(spark, None, Some(sinkDir), None, idCol, textCol,
-        org.apache.spark.sql.types.StringType,
-        FoldedMarkerName, UpsertMarkerName, RetractMarkerName,
-        index.savedDir, index.version) { (removeIds, latest, contributing) =>
-      // an upsert-only window nets to remove-every-amended-id +
-      // fold-LATEST-image — the remove-then-extend this fold always was
-      val bumped = graft.extensions.Dedup.extendCorpusIndex(
-        graft.extensions.Dedup.removeFromCorpusIndex(index, removeIds, idCol),
-        latest, idCol, textCol)
-      bumped.copy(folded = bumped.folded ++ contributing)
-    }.getOrElse(index)
-
-  /** The sign-LSH embedding analog of [[compactUpsertedBatches]]:
-    * amended vectors retire and their latest images re-bucket under the
-    * DETERMINISTIC hyperplanes — upsert ≡ rebuild on the amended vector
-    * set. Same contracts end to end; marker [[EmbUpsertMarkerName]]. */
-  def compactUpsertedEmbeddingBatches(
-      spark: SparkSession, sinkDir: String,
-      index: graft.extensions.Dedup.EmbeddingIndex,
-      idCol: String, vecCol: String): graft.extensions.Dedup.EmbeddingIndex =
-    netCompaction(spark, None, Some(sinkDir), None, idCol, vecCol, FloatVec,
-        FoldedMarkerName, EmbUpsertMarkerName, EmbRetractMarkerName,
-        index.savedDir, index.version) { (removeIds, latest, contributing) =>
-      val bumped = graft.extensions.Dedup.extendEmbeddingIndex(
-        graft.extensions.Dedup.removeFromEmbeddingIndex(index,
-          removeIds, idCol),
-        latest, idCol, vecCol)
-      bumped.copy(folded = bumped.folded ++ contributing)
-    }.getOrElse(index)
-
-  /** The IVF analog: amended vectors re-assign to the FROZEN centroids,
-    * so every saved cell partition stays valid and
-    * upsert ≡ assignToCells on the amended vector set. Marker
-    * [[IvfUpsertMarkerName]] — one vec-upsert sink can feed the
-    * embedding, IVF and IVF-PQ folds independently, the retract side's
-    * shared-tree design. */
-  def compactUpsertedIvfBatches(
-      spark: SparkSession, sinkDir: String,
-      index: graft.extensions.Similarity.IvfIndex,
-      idCol: String, vecCol: String): graft.extensions.Similarity.IvfIndex =
-    netCompaction(spark, None, Some(sinkDir), None, idCol, vecCol, FloatVec,
-        IvfFoldedMarkerName, IvfUpsertMarkerName, IvfRetractMarkerName,
-        index.savedDir, index.version) { (removeIds, latest, contributing) =>
-      val bumped = graft.extensions.Similarity.extendIvfIndex(
-        graft.extensions.Similarity.removeFromIvfIndex(index,
-          removeIds, idCol),
-        latest, idCol, vecCol)
-      bumped.copy(folded = bumped.folded ++ contributing)
-    }.getOrElse(index)
-
-  /** The IVF-PQ (IVFADC) analog: amended vectors re-encode under the
-    * FROZEN cells and FROZEN codebooks, codes and rerank vectors
-    * mutating in lockstep (the split-tree invariant). Marker
-    * [[IvfPqUpsertMarkerName]]. */
-  def compactUpsertedIvfPqBatches(
-      spark: SparkSession, sinkDir: String,
-      index: graft.extensions.Similarity.IvfPqIndex,
-      idCol: String, vecCol: String): graft.extensions.Similarity.IvfPqIndex =
-    netCompaction(spark, None, Some(sinkDir), None, idCol, vecCol, FloatVec,
-        IvfPqFoldedMarkerName, IvfPqUpsertMarkerName, IvfPqRetractMarkerName,
-        index.savedDir, index.version) { (removeIds, latest, contributing) =>
-      val bumped = graft.extensions.Similarity.extendIvfPqIndex(
-        graft.extensions.Similarity.removeFromIvfPqIndex(index,
-          removeIds, idCol),
-        latest, idCol, vecCol)
-      bumped.copy(folded = bumped.folded ++ contributing)
-    }.getOrElse(index)
-
-  /** The sign-LSH TOP-K analog of the upsert folds: amended vectors
-    * re-band under the DETERMINISTIC hyperplanes. Marker
-    * [[LshUpsertMarkerName]]. */
-  def compactUpsertedLshBatches(
-      spark: SparkSession, sinkDir: String,
-      index: graft.extensions.Similarity.LshIndex,
-      idCol: String, vecCol: String): graft.extensions.Similarity.LshIndex =
-    netCompaction(spark, None, Some(sinkDir), None, idCol, vecCol, FloatVec,
-        LshFoldedMarkerName, LshUpsertMarkerName, LshRetractMarkerName,
-        index.savedDir, index.version) { (removeIds, latest, contributing) =>
-      val bumped = graft.extensions.Similarity.extendLshIndex(
-        graft.extensions.Similarity.removeFromLshIndex(index,
-          removeIds, idCol),
-        latest, idCol, vecCol)
-      bumped.copy(folded = bumped.folded ++ contributing)
-    }.getOrElse(index)
-
-  /** The PQ analog of the upsert folds: amended vectors re-encode under
-    * the FROZEN codebooks. Marker [[PqUpsertMarkerName]]. */
-  def compactUpsertedPqBatches(
-      spark: SparkSession, sinkDir: String,
-      index: graft.extensions.Similarity.PqIndex,
-      idCol: String, vecCol: String): graft.extensions.Similarity.PqIndex =
-    netCompaction(spark, None, Some(sinkDir), None, idCol, vecCol, FloatVec,
-        PqFoldedMarkerName, PqUpsertMarkerName, PqRetractMarkerName,
-        index.savedDir, index.version) { (removeIds, latest, contributing) =>
-      val bumped = graft.extensions.Similarity.extendPqIndex(
-        graft.extensions.Similarity.removeFromPqIndex(index,
-          removeIds, idCol),
-        latest, idCol, vecCol)
-      bumped.copy(folded = bumped.folded ++ contributing)
-    }.getOrElse(index)
-
-  /** The BM25 upsert fold — the family where image ORDER is
-    * load-bearing twice over. Retraction must subtract what the stats
-    * actually hold: the EARLIEST old image in the window (`oldTextCol`,
-    * the old row image a CDC update carries by construction); extension
-    * must add what the source last said: the LATEST new image
-    * (`textCol`). An id amended twice therefore retracts its original
-    * text once and folds its final text once — intermediate images
-    * never touch the stats, exactly as a refit on the final corpus
-    * would behave (`upsert ≡ refit`, spec-pinned). And because the
-    * subtraction is integer arithmetic, not an anti-join, the
-    * [[Bm25UpsertMarkerName]] refusal is correctness, not audit: a
-    * double-fold would retract text the stats no longer contain.
-    * Contract: every amended id must be IN the stats (the mirror
-    * contract of [[graft.extensions.Search.retractBm25Stats]]) —
-    * retracting an unknown id's old image corrupts df counts silently.
-    * `saveTo` applies the durable-then-mark ordering of
-    * [[compactAcceptedBm25Batches]]. */
-  def compactUpsertedBm25Batches(
-      spark: SparkSession, sinkDir: String,
-      stats: graft.extensions.Search.Bm25Stats,
-      idCol: String, textCol: String, oldTextCol: String,
-      saveTo: Option[String] = None): graft.extensions.Search.Bm25Stats =
-    // an upsert-only window nets to retract-EARLIEST-old +
-    // extend-LATEST-new per id — exactly this fold's image-order
-    // contract; the NULL-earliest-old refusal (an upsert sink row whose
-    // old image the feed never carried — e.g. a reinsert routed by a
-    // maintenance ingest, which belongs to the NET compaction, not this
-    // per-leg fold) fires inside the skeleton before any arithmetic
-    netBm25Compaction(spark, None, Some(sinkDir), None, stats,
-        idCol, textCol, oldTextCol,
-        s"BM25 upsert fold of $sinkDir") { (first, last, contributing) =>
-      val bumped = graft.extensions.Search.extendBm25Stats(
-          graft.extensions.Search.retractBm25Stats(stats, first, idCol, textCol),
-          last, idCol, textCol)
-        .copy(folded = stats.folded ++ contributing)
-      saveTo.map(bumped.save).getOrElse(bumped)
-    }
+  }
 
   // ---- net-effect maintenance compaction ----------------------------
   //
@@ -1318,242 +909,127 @@ object CdcStream {
   // compaction — compact before re-inserting unchanged content, or
   // route such rows as updates upstream.
 
-  /** Version the text-gram index off all three maintenance sinks
-    * ([[startCdcMaintenanceIngest]]) as ONE net-effect compaction.
-    * Same family contracts as the per-leg folds: stale-handle guard,
-    * empty/missing trees contribute nothing (all empty → no-op, no
-    * markers), cross-leg (id, batch) collisions refuse loudly (CDC
-    * emits one event per id per trigger), and each consumed tree is
-    * stamped with its OWN leg's marker so a stray per-leg fold of an
-    * already-net-compacted tree refuses. Version bumps twice (remove,
-    * then extend); all three sinks land in the fold lineage. */
-  def compactMaintenanceBatches(
+  /** Version an index off the maintenance sink trees as ONE net-effect
+    * compaction: `acceptDir` / `upsertDir` / `retractDir` are the trees
+    * a maintenance ingest ([[startCdcMaintenanceIngest]],
+    * [[startVecMaintenanceIngest]]) writes. Any subset may be given:
+    * with all three this is the cross-class-safe net fold; with only
+    * `upsertDir` it is the per-leg upsert fold (remove every amended id,
+    * fold its LATEST image back in — upsert ≡ rebuild on the amended
+    * rows; an amended id not in the index is simply ADDED, the fold
+    * maintains a MIRROR of the source), and with only `retractDir` the
+    * per-leg retract fold (remove ≡ rebuild on the survivors; the sink
+    * may carry more columns than the id — a full CDC row image — and
+    * only a [[graft.extensions.IndexFamily.retractsByImage]] family
+    * reads its image, from `contentCol`). Use the per-leg shapes only
+    * when compaction cadence guarantees class-disjoint windows.
+    *
+    * Version arithmetic: a retract-only call bumps once (remove); every
+    * other shape bumps twice (remove, then extend). Contracts:
+    * stale-handle guard; empty/missing trees contribute nothing (all
+    * empty → no-op, no markers, the INPUT handle is returned — callers
+    * use `eq` as the no-op signal); cross-leg (id, batch) collisions
+    * refuse loudly (CDC emits one event per id per trigger); each
+    * consumed tree is stamped with its OWN leg's family marker, so a
+    * stray per-leg fold of a net-compacted tree refuses and several
+    * families can net-fold ONE shared tree triple in any order; the
+    * trees that contributed events land in the fold lineage.
+    * `oldContentCol` names the upsert rows' OLD image and applies only to
+    * a family that retracts by image (required there when `upsertDir` is
+    * given). `saveTo` is durable-then-mark (which a multi-tree fold
+    * needs MORE, not less: a crash after the markers but before the
+    * caller persists the lazy bump would orphan all three trees'
+    * events): the bumped index is saved BEFORE any marker lands, so a
+    * crash re-runs the fold instead. */
+  def compact[I](
       spark: SparkSession,
-      acceptDir: String, upsertDir: String, retractDir: String,
-      index: graft.extensions.Dedup.CorpusIndex,
-      idCol: String, textCol: String,
-      /** Durable-then-mark (the BM25 folds' crash contract, which a
-        * multi-tree fold needs MORE, not less: a crash after the
-        * markers but before the caller persists the lazy bump would
-        * orphan all three trees' events): when set, the bumped index
-        * is [[graft.extensions.Dedup.saveCorpusIndex]]d BEFORE any
-        * marker lands, so a crash re-runs the fold instead. Without
-        * it the caller owns persisting the returned (lazy) version
-        * promptly. */
-      saveTo: Option[String] = None): graft.extensions.Dedup.CorpusIndex =
-    netCompaction(spark, Some(acceptDir), Some(upsertDir), Some(retractDir),
-        idCol, textCol, org.apache.spark.sql.types.StringType,
-        FoldedMarkerName, UpsertMarkerName, RetractMarkerName,
-        index.savedDir, index.version) { (removeIds, addDocs, contributing) =>
-      val bumped = graft.extensions.Dedup.extendCorpusIndex(
-        graft.extensions.Dedup.removeFromCorpusIndex(index, removeIds, idCol),
-        addDocs, idCol, textCol)
-        // lineage records the trees that actually contributed events;
-        // an empty tree stays out (and unmarked — its later real fold
-        // still runs)
-        .copy(folded = index.folded ++ contributing)
-      saveTo.map(d => graft.extensions.Dedup.saveCorpusIndex(bumped, d))
-        .getOrElse(bumped)
-    }.getOrElse(index)
-
-  /** The BM25 net-effect compaction — the family where the EARLIEST old
-    * image matters: retraction must subtract what the stats actually
-    * hold, which for an id first seen as an upsert is its `oldTextCol`
-    * image and for an id first seen as a delete is the delete row's own
-    * old image; an id first seen as an accept was never in the stats
-    * and retracts nothing. Non-idempotent integer arithmetic, so the
-    * three markers are correctness, not audit. `saveTo` keeps the
-    * durable-then-mark ordering. */
-  def compactMaintenanceBm25Batches(
-      spark: SparkSession,
-      acceptDir: String, upsertDir: String, retractDir: String,
-      stats: graft.extensions.Search.Bm25Stats,
-      idCol: String, textCol: String, oldTextCol: String,
-      saveTo: Option[String] = None): graft.extensions.Search.Bm25Stats =
-    netBm25Compaction(spark, Some(acceptDir), Some(upsertDir), Some(retractDir),
-        stats, idCol, textCol, oldTextCol,
-        "BM25 net-effect compaction retract set") {
-      (retractDocs, extendDocs, contributing) =>
-        val bumped = graft.extensions.Search.extendBm25Stats(
-            graft.extensions.Search.retractBm25Stats(
-              stats, retractDocs, idCol, textCol),
-            extendDocs, idCol, textCol)
-          .copy(folded = stats.folded ++ contributing)
-        saveTo.map(bumped.save).getOrElse(bumped)
+      acceptDir: Option[String], upsertDir: Option[String],
+      retractDir: Option[String],
+      index: I, idCol: String, contentCol: String,
+      oldContentCol: Option[String] = None,
+      saveTo: Option[String] = None)(implicit fam: IndexFamily[I]): I = {
+    require(oldContentCol.isEmpty || fam.retractsByImage,
+      s"oldContentCol applies only to a family that retracts by image; " +
+        s"the ${fam.name} family retracts by id alone")
+    // a retract-only window's add set is empty BY CONSTRUCTION (every
+    // event's latest kind is retract): remove only, one version bump
+    val shrinkOnly = acceptDir.isEmpty && upsertDir.isEmpty
+    def fold(removeRows: DataFrame, addRows: DataFrame,
+             contributing: Seq[String]): I = {
+      val shrunk = fam.remove(index, removeRows, idCol, contentCol)
+      val bumped = fam.withFolded(
+        if (shrinkOnly) shrunk
+        else fam.extend(shrunk, addRows, idCol, contentCol),
+        fam.folded(index) ++ contributing)
+      saveTo.fold(bumped)(fam.save(bumped, _))
     }
+    (if (fam.retractsByImage)
+      netBm25Compaction(spark, acceptDir, upsertDir, retractDir, index,
+        idCol, contentCol, oldContentCol.getOrElse {
+          require(upsertDir.isEmpty, s"the ${fam.name} family needs " +
+            "oldContentCol to fold an upsert tree (the OLD-image column " +
+            "its retraction subtracts)")
+          contentCol
+        })(fold)
+    else
+      netCompaction(spark, acceptDir, upsertDir, retractDir, index,
+        idCol, contentCol)(fold)).getOrElse(index)
+  }
 
-  /** The vector net-effect compaction ([[startVecMaintenanceIngest]]'s
-    * fold): same cross-class reduction as [[compactMaintenanceBatches]]
-    * — served (earliest event ≠ accept) ids retire, alive (latest event
-    * ≠ retract) ids fold their LATEST vector in — applied to the
-    * sign-LSH embedding index, the vec ingest's own gate family. No
-    * old-image leg: every vector family retracts by id alone. The
-    * accept tree is stamped with the shared vector accept marker
-    * ([[FoldedMarkerName]] — the gate family owns the generic accept
-    * marker, and the per-leg [[compactAcceptedEmbeddingBatches]] checks
-    * the same name, so a stray per-leg accept fold of a net-compacted
-    * tree refuses); the upsert/retract trees with the embedding legs'
-    * own markers. The four non-gate families' net compactions
-    * ([[compactMaintenanceIvfBatches]] and siblings) carry per-family
-    * accept markers instead, so all FIVE families can net-fold ONE
-    * shared tree triple in any order. */
+  /** The vector net compaction of the sign-LSH gate index, under its
+    * long-standing name. */
   def compactVecMaintenanceBatches(
       spark: SparkSession,
       acceptDir: String, upsertDir: String, retractDir: String,
       index: graft.extensions.Dedup.EmbeddingIndex,
       idCol: String, vecCol: String,
-      /** durable-then-mark, as on [[compactMaintenanceBatches]]. */
       saveTo: Option[String] = None): graft.extensions.Dedup.EmbeddingIndex =
-    netCompaction(spark, Some(acceptDir), Some(upsertDir), Some(retractDir),
-        idCol, vecCol, FloatVec,
-        FoldedMarkerName, EmbUpsertMarkerName, EmbRetractMarkerName,
-        index.savedDir, index.version) { (removeIds, addVecs, contributing) =>
-      val bumped = graft.extensions.Dedup.extendEmbeddingIndex(
-        graft.extensions.Dedup.removeFromEmbeddingIndex(
-          index, removeIds, idCol),
-        addVecs, idCol, vecCol)
-        .copy(folded = index.folded ++ contributing)
-      saveTo.map(d => graft.extensions.Dedup.saveEmbeddingIndex(bumped, d))
-        .getOrElse(bumped)
-    }.getOrElse(index)
+    compact(spark, Some(acceptDir), Some(upsertDir), Some(retractDir),
+      index, idCol, vecCol, saveTo = saveTo)
 
-  /** The IVF net-effect compaction — cross-class-safe maintenance for
-    * the cell-partitioned ANN index off the SAME three trees
-    * [[startVecMaintenanceIngest]] writes: served ids retire via
-    * [[graft.extensions.Similarity.removeFromIvfIndex]] (anti-join on
-    * the assigned relation), alive ids re-assign their LATEST vector to
-    * the FROZEN centroids via [[graft.extensions.Similarity
-    * .extendIvfIndex]] — so an id crossing op classes between triggers
-    * (insert→update, update→delete, delete→reinsert) lands exactly
-    * where a rebuild-under-the-frozen-quantizer on the final vector
-    * state would put it, instead of violating extend's append-only
-    * contract (the per-leg folds' documented class-disjoint
-    * precondition). Markers: the family's own accept marker
-    * ([[IvfFoldedMarkerName]]) plus the existing per-family
-    * upsert/retract markers, so the five vector families consume one
-    * shared triple independently and each refuses only ITS own
-    * double-run. `saveTo` keeps durable-then-mark. */
+  /** The IVF net compaction, under its long-standing name. */
   def compactMaintenanceIvfBatches(
       spark: SparkSession,
       acceptDir: String, upsertDir: String, retractDir: String,
       index: graft.extensions.Similarity.IvfIndex,
       idCol: String, vecCol: String,
       saveTo: Option[String] = None): graft.extensions.Similarity.IvfIndex =
-    netCompaction(spark, Some(acceptDir), Some(upsertDir), Some(retractDir),
-        idCol, vecCol, FloatVec,
-        IvfFoldedMarkerName, IvfUpsertMarkerName, IvfRetractMarkerName,
-        index.savedDir, index.version) { (removeIds, addVecs, contributing) =>
-      val bumped = graft.extensions.Similarity.extendIvfIndex(
-        graft.extensions.Similarity.removeFromIvfIndex(index, removeIds, idCol),
-        addVecs, idCol, vecCol)
-        .copy(folded = index.folded ++ contributing)
-      saveTo.map(bumped.save).getOrElse(bumped)
-    }.getOrElse(index)
-
-  /** The IVF-PQ (IVFADC) net-effect compaction: same reduction, applied
-    * to codes AND the rerank-only vectors relation in lockstep (the
-    * split-tree invariant) — alive ids re-encode their LATEST vector
-    * under the FROZEN cells and FROZEN codebooks. Markers:
-    * [[IvfPqFoldedMarkerName]] + the family's upsert/retract pair. */
-  def compactMaintenanceIvfPqBatches(
-      spark: SparkSession,
-      acceptDir: String, upsertDir: String, retractDir: String,
-      index: graft.extensions.Similarity.IvfPqIndex,
-      idCol: String, vecCol: String,
-      saveTo: Option[String] = None): graft.extensions.Similarity.IvfPqIndex =
-    netCompaction(spark, Some(acceptDir), Some(upsertDir), Some(retractDir),
-        idCol, vecCol, FloatVec,
-        IvfPqFoldedMarkerName, IvfPqUpsertMarkerName, IvfPqRetractMarkerName,
-        index.savedDir, index.version) { (removeIds, addVecs, contributing) =>
-      val bumped = graft.extensions.Similarity.extendIvfPqIndex(
-        graft.extensions.Similarity.removeFromIvfPqIndex(index, removeIds, idCol),
-        addVecs, idCol, vecCol)
-        .copy(folded = index.folded ++ contributing)
-      saveTo.map(bumped.save).getOrElse(bumped)
-    }.getOrElse(index)
-
-  /** The sign-LSH TOP-K net-effect compaction: alive ids re-band their
-    * LATEST vector under the DETERMINISTIC hyperplanes. Markers:
-    * [[LshFoldedMarkerName]] + the family's upsert/retract pair. */
-  def compactMaintenanceLshBatches(
-      spark: SparkSession,
-      acceptDir: String, upsertDir: String, retractDir: String,
-      index: graft.extensions.Similarity.LshIndex,
-      idCol: String, vecCol: String,
-      saveTo: Option[String] = None): graft.extensions.Similarity.LshIndex =
-    netCompaction(spark, Some(acceptDir), Some(upsertDir), Some(retractDir),
-        idCol, vecCol, FloatVec,
-        LshFoldedMarkerName, LshUpsertMarkerName, LshRetractMarkerName,
-        index.savedDir, index.version) { (removeIds, addVecs, contributing) =>
-      val bumped = graft.extensions.Similarity.extendLshIndex(
-        graft.extensions.Similarity.removeFromLshIndex(index, removeIds, idCol),
-        addVecs, idCol, vecCol)
-        .copy(folded = index.folded ++ contributing)
-      saveTo.map(bumped.save).getOrElse(bumped)
-    }.getOrElse(index)
-
-  /** The PQ net-effect compaction: alive ids re-encode their LATEST
-    * vector under the FROZEN codebooks. Markers: [[PqFoldedMarkerName]]
-    * + the family's upsert/retract pair. */
-  def compactMaintenancePqBatches(
-      spark: SparkSession,
-      acceptDir: String, upsertDir: String, retractDir: String,
-      index: graft.extensions.Similarity.PqIndex,
-      idCol: String, vecCol: String,
-      saveTo: Option[String] = None): graft.extensions.Similarity.PqIndex =
-    netCompaction(spark, Some(acceptDir), Some(upsertDir), Some(retractDir),
-        idCol, vecCol, FloatVec,
-        PqFoldedMarkerName, PqUpsertMarkerName, PqRetractMarkerName,
-        index.savedDir, index.version) { (removeIds, addVecs, contributing) =>
-      val bumped = graft.extensions.Similarity.extendPqIndex(
-        graft.extensions.Similarity.removeFromPqIndex(index, removeIds, idCol),
-        addVecs, idCol, vecCol)
-        .copy(folded = index.folded ++ contributing)
-      saveTo.map(bumped.save).getOrElse(bumped)
-    }.getOrElse(index)
+    compact(spark, Some(acceptDir), Some(upsertDir), Some(retractDir),
+      index, idCol, vecCol, saveTo = saveTo)
 
   /** Shared skeleton of EVERY net-effect compaction except BM25 (whose
     * two-image algebra lives in [[netBm25Compaction]]) — the
-    * stale-handle guard → leased three-tree read → cross-class net
-    * reduction → family fold → markers sequence, parameterized over the
-    * family's marker triple, its image column/type, and its
-    * (removeFrom*, extend*) pair. The per-leg upsert/retract folds are
-    * the SAME skeleton with the other two legs absent (`None` dirs):
-    * an upsert-only window net-reduces to remove-every-amended-id +
-    * fold-latest-image, and a retract-only window to remove-only (the
-    * add set is empty BY CONSTRUCTION — every event's latest kind is
-    * retract — so the shrink closures keep their single-step version
-    * bump). The reduction: served (earliest event ≠ accept) ids land in
-    * `removeIds`; alive (latest event ≠ retract) ids land in `addImgs`
-    * with their LATEST image. `fold` runs BEFORE any marker
-    * (durable-then-mark: a `saveTo` write inside the fold that crashes
-    * leaves all trees unmarked AND their leases held, so the next
-    * attempt refuses until the operator confirms the crash and breaks
-    * the lease — see [[acquireFoldLease]]); a fold that THROWS (a
-    * contract refusal: NULL image, within-batch tie) releases its
-    * leases on the way out, so a fixed feed re-runs with no manual
+    * stale-handle guard → leased tree read → cross-class net reduction →
+    * family fold → markers sequence. The reduction: served (earliest
+    * event ≠ accept) ids land in `removeIds`; alive (latest event ≠
+    * retract) ids land in `addImgs` with their LATEST image. `fold` runs
+    * BEFORE any marker (durable-then-mark: a `saveTo` write inside the
+    * fold that crashes leaves all trees unmarked AND their leases held,
+    * so the next attempt refuses until the operator confirms the crash
+    * and breaks the lease — see [[acquireFoldLease]]); a fold that
+    * THROWS (a contract refusal: NULL image, within-batch tie) releases
+    * its leases on the way out, so a fixed feed re-runs with no manual
     * step. */
   private def netCompaction[I](
       spark: SparkSession,
       acceptDir: Option[String], upsertDir: Option[String],
-      retractDir: Option[String],
-      idCol: String, imgCol: String,
-      imgType: org.apache.spark.sql.types.DataType,
-      acceptMarker: String, upsertMarker: String, retractMarker: String,
-      savedDir: Option[String], version: Long)(
-      fold: (DataFrame, DataFrame, Seq[String]) => I): Option[I] = {
-    savedDir.foreach(d => graft.extensions.IndexMeta
-      .requireCurrent(spark, d, version, "compaction"))
+      retractDir: Option[String], index: I,
+      idCol: String, imgCol: String)(
+      fold: (DataFrame, DataFrame, Seq[String]) => I)(
+      implicit fam: IndexFamily[I]): Option[I] = {
+    fam.savedDir(index).foreach(d => graft.extensions.IndexMeta
+      .requireCurrent(spark, d, fam.version(index), "compaction"))
     maintenanceEvents(spark, idCol,
-      (acceptDir, acceptMarker,
+      (acceptDir, fam.acceptMarker,
         (df: DataFrame) => df.select(col(idCol), col("batch"),
           lit("accept").as("kind"), col(imgCol).as("__img"))),
-      (upsertDir, upsertMarker,
+      (upsertDir, fam.upsertMarker,
         (df: DataFrame) => df.select(col(idCol), col("batch"),
           lit("upsert").as("kind"), col(imgCol).as("__img"))),
-      (retractDir, retractMarker,
+      (retractDir, fam.retractMarker,
         (df: DataFrame) => df.select(col(idCol), col("batch"),
-          lit("retract").as("kind"), lit(null).cast(imgType).as("__img"))))
+          lit("retract").as("kind"),
+          lit(null).cast(fam.imageType).as("__img"))))
       .map { w =>
         try {
           val net = w.events.groupBy(col(idCol)).agg(
@@ -1571,10 +1047,6 @@ object CdcStream {
       }
   }
 
-  /** The element type of every vector family's image column. */
-  private val FloatVec = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.FloatType)
-
   /** The BM25 net skeleton — the family whose retraction needs the OLD
     * row image (earliest `__old` per id: what the stats actually hold)
     * and whose integer arithmetic makes the NULL-image guard and the
@@ -1582,33 +1054,37 @@ object CdcStream {
     * rows carry `textCol` as the new image; upsert rows both images;
     * retract rows their old image in `textCol` (the CDC delete's row
     * image — [[startRetractIngest]]'s convention). The guard fires on
-    * the netted retract set BEFORE any stats arithmetic, naming `what`
-    * so per-leg and net callers keep their distinct refusal texts. */
-  private def netBm25Compaction(
+    * the netted retract set BEFORE any stats arithmetic; its refusal
+    * names the per-leg fold (and tree) or the net compaction it ran
+    * in. */
+  private def netBm25Compaction[I](
       spark: SparkSession,
       acceptDir: Option[String], upsertDir: Option[String],
-      retractDir: Option[String],
-      stats: graft.extensions.Search.Bm25Stats,
-      idCol: String, textCol: String, oldTextCol: String, what: String)(
-      fold: (DataFrame, DataFrame, Seq[String]) =>
-        graft.extensions.Search.Bm25Stats): graft.extensions.Search.Bm25Stats = {
-    stats.savedDir.foreach(d => graft.extensions.IndexMeta
-      .requireCurrent(spark, d, stats.version, "compaction"))
+      retractDir: Option[String], stats: I,
+      idCol: String, textCol: String, oldTextCol: String)(
+      fold: (DataFrame, DataFrame, Seq[String]) => I)(
+      implicit fam: IndexFamily[I]): Option[I] = {
+    val what = (acceptDir, upsertDir, retractDir) match {
+      case (None, Some(d), None) => s"BM25 upsert fold of $d"
+      case (None, None, Some(d)) => s"BM25 retract fold of $d"
+      case _ => "BM25 net-effect compaction retract set"
+    }
+    fam.savedDir(stats).foreach(d => graft.extensions.IndexMeta
+      .requireCurrent(spark, d, fam.version(stats), "compaction"))
     maintenanceEvents(spark, idCol,
-      (acceptDir, Bm25FoldedMarkerName,
+      (acceptDir, fam.acceptMarker,
         (df: DataFrame) => df.select(col(idCol), col("batch"),
           lit("accept").as("kind"), col(textCol).as("__img"),
           lit(null).cast("string").as("__old"))),
-      (upsertDir, Bm25UpsertMarkerName,
+      (upsertDir, fam.upsertMarker,
         (df: DataFrame) => df.select(col(idCol), col("batch"),
           lit("upsert").as("kind"), col(textCol).as("__img"),
           col(oldTextCol).as("__old"))),
-      (retractDir, Bm25RetractMarkerName,
+      (retractDir, fam.retractMarker,
         (df: DataFrame) => df.select(col(idCol), col("batch"),
           lit("retract").as("kind"), lit(null).cast("string").as("__img"),
-          col(textCol).as("__old")))) match {
-      case None => stats
-      case Some(w) =>
+          col(textCol).as("__old"))))
+      .map { w =>
         try {
           val net = w.events.groupBy(col(idCol)).agg(
             min_by(col("kind"), col("batch")).as("__first_kind"),
@@ -1634,7 +1110,7 @@ object CdcStream {
             out
           } finally { net.unpersist(false); () }
         } catch { case e: Throwable => w.abort(); throw e }
-    }
+      }
   }
 
   /** A leased maintenance window: the checkpointed event union of the
@@ -1707,42 +1183,6 @@ object CdcStream {
     } catch { case e: Throwable => releaseAll(); throw e }
   }
 
-  /** Shared skeleton of the ACCEPT compaction folds: stale-handle
-    * guard, guarded LEASED sink read ([[consumeSinkTree]]), the
-    * family's fold, then the marker(s), then the lease release. `fold`
-    * runs BEFORE any marker lands — the durable-then-mark ordering
-    * every family relies on (a crash inside `fold`, including a
-    * `saveTo` write, leaves the tree unmarked so the next scheduled
-    * compaction re-runs — after the operator breaks the crashed
-    * attempt's lease, [[acquireFoldLease]]); a fold that THROWS (a
-    * contract refusal) releases the lease itself, so a fixed input
-    * re-runs with no manual step. `alsoMark` stamps sibling trees (a
-    * dedup ingest's provenance dir) with the same marker at the same
-    * moment; `alsoRefuse`/`alsoMarkSelf` carry a family's NET accept
-    * marker so per-leg and net accept folds of one tree refuse each
-    * other in BOTH directions (ADVICE r18). */
-  private def foldSinkTree[A](spark: SparkSession, sinkDir: String,
-                              marker: String, savedDir: Option[String],
-                              version: Long, keepBatch: Boolean = false,
-                              alsoMark: Seq[String] = Nil,
-                              alsoRefuse: Seq[String] = Nil,
-                              alsoMarkSelf: Seq[String] = Nil)
-                             (fold: DataFrame => A): Option[A] = {
-    savedDir.foreach(d => graft.extensions.IndexMeta
-      .requireCurrent(spark, d, version, "compaction"))
-    consumeSinkTree(spark, sinkDir, marker, keepBatch, alsoRefuse).map { tree =>
-      val out =
-        try fold(tree)
-        catch { case e: Throwable =>
-          releaseFoldLease(spark, sinkDir, marker); throw e }
-      markFolded(spark, sinkDir, marker)
-      alsoMarkSelf.foreach(markFolded(spark, sinkDir, _))
-      alsoMark.foreach(markFolded(spark, _, marker))
-      releaseFoldLease(spark, sinkDir, marker)
-      out
-    }
-  }
-
   /** Refuse loudly when a BM25 retract-side relation carries a NULL
     * image — [[graft.extensions.Search.retractBm25Stats]] maps NULL
     * text to dl 0 / no terms yet still decrements nDocs, leaving the
@@ -1766,63 +1206,6 @@ object CdcStream {
         "contract on startCdcMaintenanceIngest)")
   }
 
-  /** Marker a successful compaction writes at the root of every tree it
-    * consumed; its presence makes a double-fold unrepresentable. */
-  val FoldedMarkerName = "_FOLDED"
-
-  /** Per-family ACCEPT markers for the non-gate vector families' NET
-    * compactions ([[compactMaintenanceIvfBatches]] and siblings): one
-    * [[startVecMaintenanceIngest]] accept tree feeds all five vector
-    * families, so each family's net compaction must refuse only ITS own
-    * double-run — the retract/upsert sides' per-family design, extended
-    * to the accept tree. The gate family (embedding) keeps the shared
-    * [[FoldedMarkerName]]: its per-leg accept fold checks that same
-    * name, so the stray-per-leg-fold refusal still holds there. The
-    * IVF and IVF-PQ families' per-leg accept folds refuse AND co-stamp
-    * their family marker (`alsoRefuse`/`alsoMarkSelf`, ADVICE r18), so
-    * per-leg-after-net and net-after-per-leg both refuse — while the
-    * per-leg folds still lock out sibling families via the shared
-    * marker: mixing per-leg accept folds with a multi-family shared
-    * tree remains outside contract (use net compactions for every
-    * family consuming a shared triple). */
-  val IvfFoldedMarkerName = "_FOLDED_IVF"
-  val IvfPqFoldedMarkerName = "_FOLDED_IVFPQ"
-  val LshFoldedMarkerName = "_FOLDED_LSH"
-  val PqFoldedMarkerName = "_FOLDED_PQ"
-
-  /** The retract folds' markers — PER FAMILY, the same design as the
-    * accept side's [[FoldedMarkerName]]/[[Bm25FoldedMarkerName]] split:
-    * one CDC delete sink feeds every serving structure built over the
-    * deleted rows (the text-gram index AND the BM25 stats off one
-    * doc-delete tree; the vector families off a vec-delete tree), and
-    * each fold must refuse only ITS OWN double-run. Distinct from the
-    * accept markers, so pointing a retract compaction at an accept sink
-    * by mistake cannot be masked by the accept fold's stamp. */
-  val RetractMarkerName = "_FOLDED_RETRACT"
-  val EmbRetractMarkerName = "_FOLDED_RETRACT_EMB"
-  val IvfRetractMarkerName = "_FOLDED_RETRACT_IVF"
-  val IvfPqRetractMarkerName = "_FOLDED_RETRACT_IVFPQ"
-  val LshRetractMarkerName = "_FOLDED_RETRACT_LSH"
-  val PqRetractMarkerName = "_FOLDED_RETRACT_PQ"
-  val Bm25RetractMarkerName = "_FOLDED_RETRACT_BM25"
-
-  /** The upsert folds' markers — per family, same design as the retract
-    * side: one doc-upsert sink can feed the text-gram and BM25 folds,
-    * one vec-upsert sink all five vector folds, each refusing only its
-    * own double-run. */
-  val UpsertMarkerName = "_FOLDED_UPSERT"
-  val EmbUpsertMarkerName = "_FOLDED_UPSERT_EMB"
-  val IvfUpsertMarkerName = "_FOLDED_UPSERT_IVF"
-  val IvfPqUpsertMarkerName = "_FOLDED_UPSERT_IVFPQ"
-  val LshUpsertMarkerName = "_FOLDED_UPSERT_LSH"
-  val PqUpsertMarkerName = "_FOLDED_UPSERT_PQ"
-  val Bm25UpsertMarkerName = "_FOLDED_UPSERT_BM25"
-
-  /** The search-stats fold's own marker — distinct from
-    * [[FoldedMarkerName]] so the dedup-index compaction and the BM25
-    * compaction can consume ONE accepted-docs tree independently. */
-  val Bm25FoldedMarkerName = "_FOLDED_BM25"
-
   /** Guarded, LEASED read of a sink tree for compaction: refuses
     * (loudly) a tree already stamped with `marker` (or any `alsoRefuse`
     * sibling marker) — re-folding consumed batches would double-count
@@ -1834,10 +1217,10 @@ object CdcStream {
     * fold that committed between this function's first marker probe and
     * the lease acquisition would be invisible — exactly the
     * check-then-act window (VERDICT r18 #1) the lease closes. Callers
-    * own releasing the lease on every path ([[foldSinkTree]] /
+    * own releasing the lease on every path ([[compactAccepted]] /
     * [[maintenanceEvents]]). */
   private def consumeSinkTree(spark: SparkSession, sinkDir: String,
-                              marker: String = FoldedMarkerName,
+                              marker: String,
                               /** the upsert folds order images by the
                                 * batch partition column; everyone else
                                 * drops it */
@@ -1938,7 +1321,7 @@ object CdcStream {
     * stamped by hand) and this fold's result must be treated as a
     * duplicate — refuse loudly rather than quietly restamp. */
   private def markFolded(spark: SparkSession, dir: String,
-                         marker: String = FoldedMarkerName): Unit = {
+                         marker: String): Unit = {
     val root = new HPath(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(root)) {

@@ -87,4 +87,30 @@ class BenchPhaseSpec extends AnyFunSuite {
     val (p2, by2) = Bench.pickPass(Seq(loaded.copy(idx = 5), pass(6, Seq(9.9), 30.0)), 8.0)
     assert(p2.idx == 5 && by2 == "min_warm_total_ungated")
   }
+
+  /** A row that throws used to be timed anyway — the exception's wall
+    * time landed in the totals as a fast row. */
+  test("a failing row is named under errors and enters no total") {
+    var calls = 0
+    val (rows, failed) = Bench.timeRows(Seq(
+      "q_ok" -> (() => ()),
+      "q_boom" -> (() => throw new IllegalStateException("boom")),
+      // cold succeeds, the first warm rep throws: still a failed row
+      "q_late" -> (() => { calls += 1; if (calls > 1) sys.error("late") })))
+    assert(rows.map(_._1) === Seq("q_ok"))
+    assert(failed.map(_._1) === Seq("q_boom", "q_late"))
+    assert(failed.head._2.contains("boom"))
+
+    val pass = Bench.Pass(1, rows, 0.0, 0.0, errors = failed)
+    val (_, cold, warms) = rows.head
+    assert(pass.coldTotal === cold)
+    assert(pass.warmTotal === warms.sorted.apply(1))
+    assert(pass.floorSteady === warms.min)
+    val line = pass.fullLine("sf", "4")
+    assert(line.contains("\"errors\":[\"q_boom\",\"q_late\"]"))
+    // "queries" stays the last key, and holds no failed row
+    val queries = line.substring(line.lastIndexOf("\"queries\":"))
+    assert(queries.count(_ == '{') == 1 && queries.endsWith("}}"))
+    assert(!queries.contains("q_boom") && !queries.contains("q_late"))
+  }
 }

@@ -348,6 +348,25 @@ class SqlSurfaceSpec extends AnyFunSuite {
            |  '$statsDir', '$bmSave', 'doc_id', 'text')""".stripMargin).collect()
     }
     assert(noOld.getMessage.contains("old_col"))
+    // ...checked BEFORE the stats load: a missing index tree still
+    // refuses on the absent old_col, not on the load
+    val noOldFirst = intercept[Exception] {
+      spark.sql(
+        s"""CALL graft.compact_maintenance('bm25', '$a', '$u', '$r',
+           |  '${TestSpark.tmpDir("gi-none")}/absent', '$bmSave', 'doc_id',
+           |  'text')""".stripMargin).collect()
+    }
+    assert(noOldFirst.getMessage.contains("requires old_col"))
+    // old_col for a family that retracts by id is refused by name, not
+    // silently ignored
+    val strayOld = intercept[Exception] {
+      spark.sql(
+        s"""CALL graft.compact_maintenance('ivf', '$a', '$u', '$r',
+           |  '$idxDir', '$textSave', 'doc_id', 'text', 'old_text')"""
+          .stripMargin).collect()
+    }
+    assert(strayOld.getMessage.contains("old_col") &&
+      strayOld.getMessage.contains("does not apply"))
     val badFam = intercept[Exception] {
       spark.sql(
         s"""CALL graft.compact_maintenance('btree', '$a', '$u', '$r',

@@ -219,7 +219,7 @@ class IndexMetaSpec extends AnyFunSuite {
       .withColumn("batch", lit(0L))
       .write.partitionBy("batch").parquet(sink)
 
-    val bumped = graft.streaming.CdcStream.compactAcceptedBatches(
+    val bumped = graft.streaming.CdcStream.compactAccepted(
       spark, sink, v1, "doc_id", "text")
     assert(bumped.version == 2L)
     assert(bumped.folded == Seq(sink), "the fold must enter the lineage")
@@ -236,7 +236,7 @@ class IndexMetaSpec extends AnyFunSuite {
     IndexMeta.write(spark, dir,
       IndexMeta.Meta(7L, None, Nil, Map.empty))
     val err = intercept[IllegalArgumentException](
-      graft.streaming.CdcStream.compactAcceptedBatches(
+      graft.streaming.CdcStream.compactAccepted(
         spark, sink, v1, "doc_id", "text"))
     assert(err.getMessage.contains("compaction"))
   }

@@ -96,7 +96,7 @@ class RefreshPipelineSpec extends AnyFunSuite {
     "the serving index versions off the same diff") {
     import spark.implicits._
     val diff = CorpusOps.corpusDiff(oldCrawl, newCrawl, "doc_id", "text")
-    val refreshed = CorpusOps.refreshCorpusIndex(
+    val refreshed = CorpusOps.refreshIndex(
       Dedup.buildCorpusIndex(oldCrawl, "doc_id", "text"),
       newCrawl, "doc_id", "text", diff)
     val scratch = Dedup.buildCorpusIndex(newCrawl, "doc_id", "text")
@@ -156,7 +156,7 @@ class RefreshPipelineSpec extends AnyFunSuite {
     // all and extend semi-joins added/changed first, so the refreshed
     // index still equals a from-scratch build of the TRUE new crawl
     import spark.implicits._
-    val refreshedIdx = CorpusOps.refreshCorpusIndex(
+    val refreshedIdx = CorpusOps.refreshIndex(
       Dedup.buildCorpusIndex(oldCrawl, "doc_id", "text"),
       poison(newCrawl), "doc_id", "text", diff)
     val scratchIdx = Dedup.buildCorpusIndex(newCrawl, "doc_id", "text")

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** The vector-index legs of the refresh→index loop
-  * ([[CorpusOps.refreshEmbeddingIndex]] / refreshLshIndex /
-  * refreshIvfIndex / refreshPqIndex / refreshIvfPqIndex, all off one
+  * ([[CorpusOps.refreshIndex]] for the embedding, LSH, IVF, PQ and
+  * IVF-PQ families, all off one
   * [[CorpusOps.vectorDiff]]): refresh ≡ rebuild-under-the-frozen-
   * quantizer for every family, plus the O(changed) sentinel — unchanged
   * vectors are never re-banded/re-assigned/re-encoded. */
@@ -73,7 +73,7 @@ class VectorRefreshSpec extends AnyFunSuite {
 
   test("refreshEmbeddingIndex(build(old), new, diff) == " +
     "buildEmbeddingIndex(new): deterministic hyperplanes, exact") {
-    val refreshed = CorpusOps.refreshEmbeddingIndex(
+    val refreshed = CorpusOps.refreshIndex(
       Dedup.buildEmbeddingIndex(oldCrawl, "vec_id", "embedding",
         planes = 12, bands = 8),
       newCrawl, "vec_id", "embedding", diff)
@@ -86,7 +86,7 @@ class VectorRefreshSpec extends AnyFunSuite {
   }
 
   test("refreshLshIndex(fit(old), new, diff) == lshFit(new)") {
-    val refreshed = CorpusOps.refreshLshIndex(
+    val refreshed = CorpusOps.refreshIndex(
       Similarity.lshFit(oldCrawl, "vec_id", "embedding",
         planes = 12, bands = 4),
       newCrawl, "vec_id", "embedding", diff)
@@ -97,7 +97,7 @@ class VectorRefreshSpec extends AnyFunSuite {
 
   test("refreshIvfIndex: assigned == assignToCells(new, frozen centers)") {
     val old = Similarity.ivfFit(oldCrawl, "vec_id", "embedding", nlist = 8)
-    val refreshed = CorpusOps.refreshIvfIndex(old, newCrawl,
+    val refreshed = CorpusOps.refreshIndex(old, newCrawl,
       "vec_id", "embedding", diff)
     val expected = Similarity.assignToCells(newCrawl, old.centers,
       "vec_id", "embedding")
@@ -110,7 +110,7 @@ class VectorRefreshSpec extends AnyFunSuite {
     "codebooks") {
     val old = Similarity.pqFit(oldCrawl, "vec_id", "embedding",
       m = 8, ksub = 16)
-    val refreshed = CorpusOps.refreshPqIndex(old, newCrawl,
+    val refreshed = CorpusOps.refreshIndex(old, newCrawl,
       "vec_id", "embedding", diff)
     // rebuild-under-frozen-quantizer: extend an emptied copy with the
     // whole new crawl — the same frozen codebooks encode everything
@@ -123,7 +123,7 @@ class VectorRefreshSpec extends AnyFunSuite {
     "lockstep and equal a frozen-quantizer re-encode of new") {
     val old = Similarity.ivfPqFit(oldCrawl, "vec_id", "embedding",
       nlist = 4, m = 8, ksub = 16, residual = true)
-    val refreshed = CorpusOps.refreshIvfPqIndex(old, newCrawl,
+    val refreshed = CorpusOps.refreshIndex(old, newCrawl,
       "vec_id", "embedding", diff)
     val rebuilt = Similarity.extendIvfPqIndex(
       old.copy(codes = old.codes.limit(0), vectors = old.vectors.limit(0)),
@@ -143,7 +143,7 @@ class VectorRefreshSpec extends AnyFunSuite {
     // embedding leg: the result under a poisoned new crawl equals the
     // clean from-scratch build — a re-banded unchanged vector would
     // plant NaN buckets (sign(NaN) comparisons) or NaN vectors
-    val refreshedEmb = CorpusOps.refreshEmbeddingIndex(
+    val refreshedEmb = CorpusOps.refreshIndex(
       Dedup.buildEmbeddingIndex(oldCrawl, "vec_id", "embedding",
         planes = 12, bands = 8),
       poisonedNew, "vec_id", "embedding", diff)
@@ -155,7 +155,7 @@ class VectorRefreshSpec extends AnyFunSuite {
     // IVF leg: a re-assigned unchanged vector would carry its NaN
     // c_vec into the assigned relation
     val old = Similarity.ivfFit(oldCrawl, "vec_id", "embedding", nlist = 8)
-    val refreshedIvf = CorpusOps.refreshIvfIndex(old, poisonedNew,
+    val refreshedIvf = CorpusOps.refreshIndex(old, poisonedNew,
       "vec_id", "embedding", diff)
     val expected = Similarity.assignToCells(newCrawl, old.centers,
       "vec_id", "embedding")

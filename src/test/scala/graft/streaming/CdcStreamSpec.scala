@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.extensions.IndexFamily
 import graft.operators.CurrentState
 
 class CdcStreamSpec extends AnyFunSuite {
@@ -170,7 +171,7 @@ class CdcStreamSpec extends AnyFunSuite {
       spark.createDataFrame(
           java.util.Arrays.asList(accepted.head()), accepted.schema)
         .write.mode("overwrite").parquet(s"$sink/batch=9999")
-      val bumped = CdcStream.compactAcceptedBatches(
+      val bumped = CdcStream.compactAccepted(
         spark, sink, index, "doc_id", "text")
       def postingSet(ix: Dedup.CorpusIndex) =
         ix.postings.select("gram", "doc_id").as[(Long, Long)].collect().toSet
@@ -179,19 +180,19 @@ class CdcStreamSpec extends AnyFunSuite {
 
       // the fold stamped the tree; a second compaction refuses loudly
       // instead of double-counting the consumed batches
-      assert(new java.io.File(sink, CdcStream.FoldedMarkerName).exists())
+      assert(new java.io.File(sink, IndexFamily.FoldedMarker).exists())
       val err = intercept[IllegalArgumentException] {
-        CdcStream.compactAcceptedBatches(spark, sink, index, "doc_id", "text")
+        CdcStream.compactAccepted(spark, sink, index, "doc_id", "text")
       }
       assert(err.getMessage.contains("already compacted"))
 
       // an empty/missing tree is a no-op (no marker, same index back) —
       // a scheduled compaction racing an idle ingest must not throw
       val idle = TestSpark.tmpDir("graft-compact-idle")
-      val same = CdcStream.compactAcceptedBatches(
+      val same = CdcStream.compactAccepted(
         spark, idle, index, "doc_id", "text")
       assert(same eq index)
-      assert(!new java.io.File(idle, CdcStream.FoldedMarkerName).exists(),
+      assert(!new java.io.File(idle, IndexFamily.FoldedMarker).exists(),
         "a no-op fold must not stamp the tree: a later real fold still runs")
     } finally index.unpersist()
   }
@@ -221,7 +222,7 @@ class CdcStreamSpec extends AnyFunSuite {
       spark.createDataFrame(
           java.util.Arrays.asList(accepted.head()), accepted.schema)
         .write.mode("overwrite").parquet(s"$sink/batch=9999")
-      val bumped = CdcStream.compactAcceptedBm25Batches(
+      val bumped = CdcStream.compactAccepted(
         spark, sink, stats, "doc_id", "text")
       val refit = Search.bm25Fit(
         corpus.select("doc_id", "text")
@@ -234,25 +235,25 @@ class CdcStreamSpec extends AnyFunSuite {
       assert(bumped.folded.contains(sink))
 
       // the bm25 fold stamped ITS marker; a second bm25 fold refuses...
-      assert(new java.io.File(sink, CdcStream.Bm25FoldedMarkerName).exists())
+      assert(new java.io.File(sink, IndexFamily.Bm25.acceptMarker).exists())
       val err = intercept[IllegalArgumentException] {
-        CdcStream.compactAcceptedBm25Batches(spark, sink, stats, "doc_id", "text")
+        CdcStream.compactAccepted(spark, sink, stats, "doc_id", "text")
       }
       assert(err.getMessage.contains("already compacted"))
       // ...but the DEDUP-INDEX fold of the SAME tree still runs — the
       // two versioning loops consume one accepted-docs ingest
       // independently, each refusing only its own double-fold
-      assert(!new java.io.File(sink, CdcStream.FoldedMarkerName).exists())
-      val bumpedIndex = CdcStream.compactAcceptedBatches(
+      assert(!new java.io.File(sink, IndexFamily.FoldedMarker).exists())
+      val bumpedIndex = CdcStream.compactAccepted(
         spark, sink, index, "doc_id", "text")
       assert(bumpedIndex.version === index.version + 1)
-      assert(new java.io.File(sink, CdcStream.FoldedMarkerName).exists())
+      assert(new java.io.File(sink, IndexFamily.FoldedMarker).exists())
 
       // empty tree: no-op, no marker
       val idle = TestSpark.tmpDir("graft-bm25compact-idle")
-      assert(CdcStream.compactAcceptedBm25Batches(
+      assert(CdcStream.compactAccepted(
         spark, idle, stats, "doc_id", "text") eq stats)
-      assert(!new java.io.File(idle, CdcStream.Bm25FoldedMarkerName).exists())
+      assert(!new java.io.File(idle, IndexFamily.Bm25.acceptMarker).exists())
     } finally index.unpersist()
   }
 
@@ -266,12 +267,12 @@ class CdcStreamSpec extends AnyFunSuite {
     docs.filter(col("doc_id") % 5 === 0)
       .write.mode("overwrite").parquet(s"$sink/batch=0")
     val out = TestSpark.tmpDir("graft-bm25durable-out")
-    val durable = CdcStream.compactAcceptedBm25Batches(
+    val durable = CdcStream.compactAccepted(
       spark, sink, stats, "doc_id", "text", saveTo = Some(out))
     // the marker is down AND the bumped tree is on disk with the fold in
     // its lineage — a crash can no longer orphan consumed batches in the
     // window between extend and save (ADVICE r16: durable-then-mark)
-    assert(new java.io.File(sink, CdcStream.Bm25FoldedMarkerName).exists())
+    assert(new java.io.File(sink, IndexFamily.Bm25.acceptMarker).exists())
     assert(durable.savedDir.contains(out))
     val loaded = Search.loadBm25Stats(spark, out)
     val refit = Search.bm25Fit(docs, "doc_id", "text")
@@ -311,7 +312,7 @@ class CdcStreamSpec extends AnyFunSuite {
       spark.createDataFrame(
           java.util.Arrays.asList(accepted.head()), accepted.schema)
         .write.mode("overwrite").parquet(s"$prov/batch=0")
-      val bumped = CdcStream.compactAcceptedEmbeddingBatches(
+      val bumped = CdcStream.compactAccepted(
         spark, sink, index, "vec_id", "embedding", provenanceDir = Some(prov))
       def bucketSet(ix: Dedup.EmbeddingIndex) =
         ix.buckets.select("doc_id", "band", "bucket")
@@ -321,11 +322,11 @@ class CdcStreamSpec extends AnyFunSuite {
 
       // both the sink and the audit trail carry the version stamp, and
       // the consumed sink refuses a second fold
-      assert(new java.io.File(sink, CdcStream.FoldedMarkerName).exists())
-      assert(new java.io.File(prov, CdcStream.FoldedMarkerName).exists(),
+      assert(new java.io.File(sink, IndexFamily.FoldedMarker).exists())
+      assert(new java.io.File(prov, IndexFamily.FoldedMarker).exists(),
         "the drop-provenance tree must version together with the keep-set")
       assertThrows[IllegalArgumentException] {
-        CdcStream.compactAcceptedEmbeddingBatches(
+        CdcStream.compactAccepted(
           spark, sink, index, "vec_id", "embedding")
       }
     } finally index.unpersist()
@@ -466,7 +467,7 @@ class CdcStreamSpec extends AnyFunSuite {
       spark.createDataFrame(
           java.util.Arrays.asList(accepted.head()), accepted.schema)
         .write.mode("overwrite").parquet(s"$sink/batch=9999")
-      val bumped = CdcStream.compactAcceptedSemanticBatches(
+      val bumped = CdcStream.compactAccepted(
         spark, sink, index, "vec_id", "embedding")
       val scratch = Similarity.assignToCells(
         corpus.union(accepted.select("vec_id", "embedding")),
@@ -479,9 +480,9 @@ class CdcStreamSpec extends AnyFunSuite {
         bumped.folded.contains(sink))
 
       // the fold stamped the tree; a second compaction refuses loudly
-      assert(new java.io.File(sink, CdcStream.FoldedMarkerName).exists())
+      assert(new java.io.File(sink, IndexFamily.FoldedMarker).exists())
       assertThrows[IllegalArgumentException] {
-        CdcStream.compactAcceptedSemanticBatches(
+        CdcStream.compactAccepted(
           spark, sink, index, "vec_id", "embedding")
       }
     } finally { index.unpersist(); () }
@@ -516,7 +517,7 @@ class CdcStreamSpec extends AnyFunSuite {
       spark.createDataFrame(
           java.util.Arrays.asList(accepted.head()), accepted.schema)
         .write.mode("overwrite").parquet(s"$sink/batch=9999")
-      val bumped = CdcStream.compactAcceptedIvfPqBatches(
+      val bumped = CdcStream.compactAccepted(
         spark, sink, ivfpq, "vec_id", "embedding")
 
       // neither quantizer moved
@@ -551,9 +552,9 @@ class CdcStreamSpec extends AnyFunSuite {
       assert(seen.nonEmpty, "bumped index must serve probes")
 
       // the fold stamped the tree; a second compaction refuses loudly
-      assert(new java.io.File(sink, CdcStream.FoldedMarkerName).exists())
+      assert(new java.io.File(sink, IndexFamily.FoldedMarker).exists())
       assertThrows[IllegalArgumentException] {
-        CdcStream.compactAcceptedIvfPqBatches(
+        CdcStream.compactAccepted(
           spark, sink, ivfpq, "vec_id", "embedding")
       }
     } finally { ivf.unpersist(); ivfpq.unpersist(); () }
@@ -877,7 +878,7 @@ class CdcStreamSpec extends AnyFunSuite {
 
       // text-gram: shrink == from-scratch build on the survivors (the
       // removal contract carried through the sink read)
-      val shrunk = CdcStream.compactRetractedBatches(spark, sink, index, "doc_id")
+      val shrunk = CdcStream.compact(spark, None, None, Some(sink), index, "doc_id", "text")
       val scratch = Dedup.buildCorpusIndex(survivors, "doc_id", "text")
       def postingSet(ix: Dedup.CorpusIndex) =
         ix.postings.select("gram", "doc_id").as[(Long, Long)].collect().toSet
@@ -886,35 +887,35 @@ class CdcStreamSpec extends AnyFunSuite {
       assert(shrunk.folded.contains(sink))
 
       // its marker is down; a second text-gram fold refuses loudly...
-      assert(new java.io.File(sink, CdcStream.RetractMarkerName).exists())
+      assert(new java.io.File(sink, IndexFamily.Text.retractMarker).exists())
       val err = intercept[IllegalArgumentException] {
-        CdcStream.compactRetractedBatches(spark, sink, index, "doc_id")
+        CdcStream.compact(spark, None, None, Some(sink), index, "doc_id", "text")
       }
       assert(err.getMessage.contains("already compacted"))
 
       // ...but the BM25 fold of the SAME tree still runs (its own
       // marker), and retract == refit on the survivors — the
       // non-idempotent family, where the marker is load-bearing
-      assert(!new java.io.File(sink, CdcStream.Bm25RetractMarkerName).exists())
-      val shrunkStats = CdcStream.compactRetractedBm25Batches(
-        spark, sink, stats, "doc_id", "text")
+      assert(!new java.io.File(sink, IndexFamily.Bm25.retractMarker).exists())
+      val shrunkStats = CdcStream.compact(
+        spark, None, None, Some(sink), stats, "doc_id", "text")
       val refit = Search.bm25Fit(survivors, "doc_id", "text")
       assert(shrunkStats.nDocs === refit.nDocs &&
         shrunkStats.sumDl === refit.sumDl)
       def dfMap(s: Search.Bm25Stats) = s.docFreq.collect()
         .map(r => r.getAs[String]("term") -> r.getAs[Long]("df")).toMap
       assert(dfMap(shrunkStats) === dfMap(refit))
-      assert(new java.io.File(sink, CdcStream.Bm25RetractMarkerName).exists())
+      assert(new java.io.File(sink, IndexFamily.Bm25.retractMarker).exists())
       val err2 = intercept[IllegalArgumentException] {
-        CdcStream.compactRetractedBm25Batches(spark, sink, stats, "doc_id", "text")
+        CdcStream.compact(spark, None, None, Some(sink), stats, "doc_id", "text")
       }
       assert(err2.getMessage.contains("already compacted"))
 
       // an empty tree is a no-op for the shrink folds too
       val idle = TestSpark.tmpDir("graft-retract-idle")
-      assert(CdcStream.compactRetractedBatches(
-        spark, idle, index, "doc_id") eq index)
-      assert(!new java.io.File(idle, CdcStream.RetractMarkerName).exists())
+      assert(CdcStream.compact(
+        spark, None, None, Some(idle), index, "doc_id", "text") eq index)
+      assert(!new java.io.File(idle, IndexFamily.Text.retractMarker).exists())
     } finally index.unpersist()
   }
 
@@ -939,8 +940,8 @@ class CdcStreamSpec extends AnyFunSuite {
     q.awaitTermination()
 
     val survivors = vecs.filter(col("vec_id") % 4 =!= 0)
-    val shrunkEmb = CdcStream.compactRetractedEmbeddingBatches(
-      spark, sink, embIdx, "vec_id")
+    val shrunkEmb = CdcStream.compact(
+      spark, None, None, Some(sink), embIdx, "vec_id", "embedding")
     val scratchEmb = Dedup.buildEmbeddingIndex(survivors, "vec_id",
       "embedding", planes = 12, bands = 8)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -952,48 +953,48 @@ class CdcStreamSpec extends AnyFunSuite {
     assert(rows(shrunkEmb.vectors) === rows(scratchEmb.vectors))
 
     // the IVF fold of the SAME vec-delete tree runs under its own marker
-    assert(new java.io.File(sink, CdcStream.EmbRetractMarkerName).exists())
-    val shrunkIvf = CdcStream.compactRetractedIvfBatches(
-      spark, sink, ivfIdx, "vec_id")
+    assert(new java.io.File(sink, IndexFamily.Embedding.retractMarker).exists())
+    val shrunkIvf = CdcStream.compact(
+      spark, None, None, Some(sink), ivfIdx, "vec_id", "embedding")
     val expected = Similarity.assignToCells(survivors, ivfIdx.centers,
       "vec_id", "embedding")
     assert(rows(shrunkIvf.assigned) === rows(expected))
-    assert(new java.io.File(sink, CdcStream.IvfRetractMarkerName).exists())
+    assert(new java.io.File(sink, IndexFamily.Ivf.retractMarker).exists())
 
     // ...and the IVF-PQ fold too (third consumer of one tree): codes
     // and rerank vectors shrink in lockstep and equal a frozen-quantizer
     // re-encode of the survivors
     val ivfPqIdx = Similarity.ivfPqFit(vecs, "vec_id", "embedding",
       nlist = 4, m = 8, ksub = 16)
-    val shrunkPq = CdcStream.compactRetractedIvfPqBatches(
-      spark, sink, ivfPqIdx, "vec_id")
+    val shrunkPq = CdcStream.compact(
+      spark, None, None, Some(sink), ivfPqIdx, "vec_id", "embedding")
     val rebuilt = Similarity.extendIvfPqIndex(
       ivfPqIdx.copy(codes = ivfPqIdx.codes.limit(0),
         vectors = ivfPqIdx.vectors.limit(0)),
       survivors, "vec_id", "embedding")
     assert(rows(shrunkPq.codes) === rows(rebuilt.codes))
     assert(rows(shrunkPq.vectors) === rows(rebuilt.vectors))
-    assert(new java.io.File(sink, CdcStream.IvfPqRetractMarkerName).exists())
+    assert(new java.io.File(sink, IndexFamily.IvfPq.retractMarker).exists())
 
     // ...and the LSH top-k and plain-PQ folds (fourth and fifth
     // consumers): every vector family retires off ONE delete tree
     val lshIdx = Similarity.lshFit(vecs, "vec_id", "embedding",
       planes = 12, bands = 4)
-    val shrunkLsh = CdcStream.compactRetractedLshBatches(
-      spark, sink, lshIdx, "vec_id")
+    val shrunkLsh = CdcStream.compact(
+      spark, None, None, Some(sink), lshIdx, "vec_id", "embedding")
     val scratchLsh = Similarity.lshFit(survivors, "vec_id", "embedding",
       planes = 12, bands = 4)
     assert(rows(shrunkLsh.banded) === rows(scratchLsh.banded))
-    assert(new java.io.File(sink, CdcStream.LshRetractMarkerName).exists())
+    assert(new java.io.File(sink, IndexFamily.Lsh.retractMarker).exists())
 
     val pqIdx = Similarity.pqFit(vecs, "vec_id", "embedding", m = 8, ksub = 16)
-    val shrunkPlainPq = CdcStream.compactRetractedPqBatches(
-      spark, sink, pqIdx, "vec_id")
+    val shrunkPlainPq = CdcStream.compact(
+      spark, None, None, Some(sink), pqIdx, "vec_id", "embedding")
     val rebuiltPq = Similarity.extendPqIndex(
       pqIdx.copy(codes = pqIdx.codes.limit(0)),
       survivors, "vec_id", "embedding")
     assert(rows(shrunkPlainPq.codes) === rows(rebuiltPq.codes))
-    assert(new java.io.File(sink, CdcStream.PqRetractMarkerName).exists())
+    assert(new java.io.File(sink, IndexFamily.Pq.retractMarker).exists())
   }
 
   test("startUpsertIngest + compactUpserted*: CDC updates amend the " +
@@ -1048,8 +1049,8 @@ class CdcStreamSpec extends AnyFunSuite {
           .otherwise(col("text")).as("text"))
 
       // text-gram: upsert == from-scratch build on the amended corpus
-      val folded = CdcStream.compactUpsertedBatches(
-        spark, sink, index, "doc_id", "text")
+      val folded = CdcStream.compact(
+        spark, None, Some(sink), None, index, "doc_id", "text")
       val scratch = Dedup.buildCorpusIndex(amended, "doc_id", "text")
       def postingSet(ix: Dedup.CorpusIndex) =
         ix.postings.select("gram", "doc_id").as[(Long, Long)].collect().toSet
@@ -1059,9 +1060,9 @@ class CdcStreamSpec extends AnyFunSuite {
       assert(folded.folded.contains(sink))
 
       // its marker is down; a second text-gram fold refuses loudly...
-      assert(new java.io.File(sink, CdcStream.UpsertMarkerName).exists())
+      assert(new java.io.File(sink, IndexFamily.Text.upsertMarker).exists())
       val err = intercept[IllegalArgumentException] {
-        CdcStream.compactUpsertedBatches(spark, sink, index, "doc_id", "text")
+        CdcStream.compact(spark, None, Some(sink), None, index, "doc_id", "text")
       }
       assert(err.getMessage.contains("already compacted"))
 
@@ -1070,27 +1071,27 @@ class CdcStreamSpec extends AnyFunSuite {
       // the ORIGINAL old image (a latest-old bug would subtract v2 text
       // the stats never held) and folding the FINAL new image (an
       // earliest-new bug would serve v2)
-      assert(!new java.io.File(sink, CdcStream.Bm25UpsertMarkerName).exists())
-      val foldedStats = CdcStream.compactUpsertedBm25Batches(
-        spark, sink, stats, "doc_id", "text", "old_text")
+      assert(!new java.io.File(sink, IndexFamily.Bm25.upsertMarker).exists())
+      val foldedStats = CdcStream.compact(
+        spark, None, Some(sink), None, stats, "doc_id", "text", Some("old_text"))
       val refit = Search.bm25Fit(amended, "doc_id", "text")
       assert(foldedStats.nDocs === refit.nDocs &&
         foldedStats.sumDl === refit.sumDl)
       def dfMap(s: Search.Bm25Stats) = s.docFreq.collect()
         .map(r => r.getAs[String]("term") -> r.getAs[Long]("df")).toMap
       assert(dfMap(foldedStats) === dfMap(refit))
-      assert(new java.io.File(sink, CdcStream.Bm25UpsertMarkerName).exists())
+      assert(new java.io.File(sink, IndexFamily.Bm25.upsertMarker).exists())
       val err2 = intercept[IllegalArgumentException] {
-        CdcStream.compactUpsertedBm25Batches(
-          spark, sink, stats, "doc_id", "text", "old_text")
+        CdcStream.compact(
+          spark, None, Some(sink), None, stats, "doc_id", "text", Some("old_text"))
       }
       assert(err2.getMessage.contains("already compacted"))
 
       // an empty tree is a no-op for the upsert folds too
       val idle = TestSpark.tmpDir("graft-upsert-idle")
-      assert(CdcStream.compactUpsertedBatches(
-        spark, idle, index, "doc_id", "text") eq index)
-      assert(!new java.io.File(idle, CdcStream.UpsertMarkerName).exists())
+      assert(CdcStream.compact(
+        spark, None, Some(idle), None, index, "doc_id", "text") eq index)
+      assert(!new java.io.File(idle, IndexFamily.Text.upsertMarker).exists())
     } finally index.unpersist()
   }
 
@@ -1131,8 +1132,8 @@ class CdcStreamSpec extends AnyFunSuite {
       }).toSet
 
     // sign-LSH: deterministic hyperplanes, so upsert == scratch build
-    val foldedEmb = CdcStream.compactUpsertedEmbeddingBatches(
-      spark, sink, embIdx, "vec_id", "embedding")
+    val foldedEmb = CdcStream.compact(
+      spark, None, Some(sink), None, embIdx, "vec_id", "embedding")
     val scratchEmb = Dedup.buildEmbeddingIndex(amendedVecs, "vec_id",
       "embedding", planes = 12, bands = 8)
     assert(rows(foldedEmb.buckets) === rows(scratchEmb.buckets))
@@ -1140,48 +1141,48 @@ class CdcStreamSpec extends AnyFunSuite {
 
     // the IVF fold of the SAME vec-upsert tree runs under its own
     // marker: amended vectors re-assign to the FROZEN centroids
-    assert(new java.io.File(sink, CdcStream.EmbUpsertMarkerName).exists())
-    val foldedIvf = CdcStream.compactUpsertedIvfBatches(
-      spark, sink, ivfIdx, "vec_id", "embedding")
+    assert(new java.io.File(sink, IndexFamily.Embedding.upsertMarker).exists())
+    val foldedIvf = CdcStream.compact(
+      spark, None, Some(sink), None, ivfIdx, "vec_id", "embedding")
     val expected = Similarity.assignToCells(amendedVecs, ivfIdx.centers,
       "vec_id", "embedding")
     assert(rows(foldedIvf.assigned) === rows(expected))
-    assert(new java.io.File(sink, CdcStream.IvfUpsertMarkerName).exists())
+    assert(new java.io.File(sink, IndexFamily.Ivf.upsertMarker).exists())
 
     // ...and the IVF-PQ fold (third consumer of one tree): codes and
     // rerank vectors amend in lockstep, equal to a frozen-quantizer
     // re-encode of the amended set
     val ivfPqIdx = Similarity.ivfPqFit(vecs, "vec_id", "embedding",
       nlist = 4, m = 8, ksub = 16)
-    val foldedPq = CdcStream.compactUpsertedIvfPqBatches(
-      spark, sink, ivfPqIdx, "vec_id", "embedding")
+    val foldedPq = CdcStream.compact(
+      spark, None, Some(sink), None, ivfPqIdx, "vec_id", "embedding")
     val rebuilt = Similarity.extendIvfPqIndex(
       ivfPqIdx.copy(codes = ivfPqIdx.codes.limit(0),
         vectors = ivfPqIdx.vectors.limit(0)),
       amendedVecs, "vec_id", "embedding")
     assert(rows(foldedPq.codes) === rows(rebuilt.codes))
     assert(rows(foldedPq.vectors) === rows(rebuilt.vectors))
-    assert(new java.io.File(sink, CdcStream.IvfPqUpsertMarkerName).exists())
+    assert(new java.io.File(sink, IndexFamily.IvfPq.upsertMarker).exists())
 
     // ...and the LSH top-k and plain-PQ upsert folds (fourth and fifth
     // consumers of the same vec-upsert tree)
     val lshIdx = Similarity.lshFit(vecs, "vec_id", "embedding",
       planes = 12, bands = 4)
-    val foldedLsh = CdcStream.compactUpsertedLshBatches(
-      spark, sink, lshIdx, "vec_id", "embedding")
+    val foldedLsh = CdcStream.compact(
+      spark, None, Some(sink), None, lshIdx, "vec_id", "embedding")
     val scratchLsh = Similarity.lshFit(amendedVecs, "vec_id", "embedding",
       planes = 12, bands = 4)
     assert(rows(foldedLsh.banded) === rows(scratchLsh.banded))
-    assert(new java.io.File(sink, CdcStream.LshUpsertMarkerName).exists())
+    assert(new java.io.File(sink, IndexFamily.Lsh.upsertMarker).exists())
 
     val pqIdx = Similarity.pqFit(vecs, "vec_id", "embedding", m = 8, ksub = 16)
-    val foldedPlainPq = CdcStream.compactUpsertedPqBatches(
-      spark, sink, pqIdx, "vec_id", "embedding")
+    val foldedPlainPq = CdcStream.compact(
+      spark, None, Some(sink), None, pqIdx, "vec_id", "embedding")
     val rebuiltPq = Similarity.extendPqIndex(
       pqIdx.copy(codes = pqIdx.codes.limit(0)),
       amendedVecs, "vec_id", "embedding")
     assert(rows(foldedPlainPq.codes) === rows(rebuiltPq.codes))
-    assert(new java.io.File(sink, CdcStream.PqUpsertMarkerName).exists())
+    assert(new java.io.File(sink, IndexFamily.Pq.upsertMarker).exists())
   }
 
   test("startVecMaintenanceIngest: one vector stream routes all three " +
@@ -1217,11 +1218,11 @@ class CdcStreamSpec extends AnyFunSuite {
     q.awaitTermination()
 
     val accepted = spark.read.parquet(acceptDir).drop("batch")
-    val idx1 = CdcStream.compactRetractedEmbeddingBatches(
-      spark, retractDir, index0, "vec_id")
-    val idx2 = CdcStream.compactUpsertedEmbeddingBatches(
-      spark, upsertDir, idx1, "vec_id", "embedding")
-    val idx3 = CdcStream.compactAcceptedEmbeddingBatches(
+    val idx1 = CdcStream.compact(
+      spark, None, None, Some(retractDir), index0, "vec_id", "embedding")
+    val idx2 = CdcStream.compact(
+      spark, None, Some(upsertDir), None, idx1, "vec_id", "embedding")
+    val idx3 = CdcStream.compactAccepted(
       spark, acceptDir, idx2, "vec_id", "embedding")
 
     val finalVecs = corpus0.filter(col("vec_id") % 5 =!= 0)
@@ -1387,8 +1388,8 @@ class CdcStreamSpec extends AnyFunSuite {
     // PQ: net fold == re-encoding final under the FROZEN codebooks
     val pq0 = Similarity.pqFit(corpus0, "vec_id", "embedding",
       m = 8, ksub = 16)
-    val pqNet = CdcStream.compactMaintenancePqBatches(
-      spark, acceptDir, upsertDir, retractDir, pq0, "vec_id", "embedding")
+    val pqNet = CdcStream.compact(
+      spark, Some(acceptDir), Some(upsertDir), Some(retractDir), pq0, "vec_id", "embedding")
     val pqRebuilt = Similarity.extendPqIndex(
       pq0.copy(codes = pq0.codes.limit(0)), finalVecs, "vec_id", "embedding")
     assert(rows5(pqNet.codes) === rows5(pqRebuilt.codes))
@@ -1396,8 +1397,8 @@ class CdcStreamSpec extends AnyFunSuite {
     // IVF-PQ (residual): codes AND rerank vectors in lockstep
     val ipq0 = Similarity.ivfPqFit(corpus0, "vec_id", "embedding",
       nlist = 4, m = 8, ksub = 16, residual = true)
-    val ipqNet = CdcStream.compactMaintenanceIvfPqBatches(
-      spark, acceptDir, upsertDir, retractDir, ipq0, "vec_id", "embedding")
+    val ipqNet = CdcStream.compact(
+      spark, Some(acceptDir), Some(upsertDir), Some(retractDir), ipq0, "vec_id", "embedding")
     val ipqRebuilt = Similarity.extendIvfPqIndex(
       ipq0.copy(codes = ipq0.codes.limit(0), vectors = ipq0.vectors.limit(0)),
       finalVecs, "vec_id", "embedding")
@@ -1407,8 +1408,8 @@ class CdcStreamSpec extends AnyFunSuite {
     // LSH top-k: deterministic hyperplanes, so == a from-scratch fit
     val lsh0 = Similarity.lshFit(corpus0, "vec_id", "embedding",
       planes = 12, bands = 4)
-    val lshNet = CdcStream.compactMaintenanceLshBatches(
-      spark, acceptDir, upsertDir, retractDir, lsh0, "vec_id", "embedding")
+    val lshNet = CdcStream.compact(
+      spark, Some(acceptDir), Some(upsertDir), Some(retractDir), lsh0, "vec_id", "embedding")
     assert(rows5(lshNet.banded) === rows5(Similarity.lshFit(
       finalVecs, "vec_id", "embedding", planes = 12, bands = 4).banded))
 
@@ -1423,15 +1424,15 @@ class CdcStreamSpec extends AnyFunSuite {
 
     // every family stamped its OWN leg markers on all three trees
     val expect = Seq(
-      (acceptDir, Seq(CdcStream.IvfFoldedMarkerName,
-        CdcStream.IvfPqFoldedMarkerName, CdcStream.LshFoldedMarkerName,
-        CdcStream.PqFoldedMarkerName, CdcStream.FoldedMarkerName)),
-      (upsertDir, Seq(CdcStream.IvfUpsertMarkerName,
-        CdcStream.IvfPqUpsertMarkerName, CdcStream.LshUpsertMarkerName,
-        CdcStream.PqUpsertMarkerName, CdcStream.EmbUpsertMarkerName)),
-      (retractDir, Seq(CdcStream.IvfRetractMarkerName,
-        CdcStream.IvfPqRetractMarkerName, CdcStream.LshRetractMarkerName,
-        CdcStream.PqRetractMarkerName, CdcStream.EmbRetractMarkerName)))
+      (acceptDir, Seq(IndexFamily.Ivf.acceptMarker,
+        IndexFamily.IvfPq.acceptMarker, IndexFamily.Lsh.acceptMarker,
+        IndexFamily.Pq.acceptMarker, IndexFamily.FoldedMarker)),
+      (upsertDir, Seq(IndexFamily.Ivf.upsertMarker,
+        IndexFamily.IvfPq.upsertMarker, IndexFamily.Lsh.upsertMarker,
+        IndexFamily.Pq.upsertMarker, IndexFamily.Embedding.upsertMarker)),
+      (retractDir, Seq(IndexFamily.Ivf.retractMarker,
+        IndexFamily.IvfPq.retractMarker, IndexFamily.Lsh.retractMarker,
+        IndexFamily.Pq.retractMarker, IndexFamily.Embedding.retractMarker)))
     for ((d, ms) <- expect; m <- ms)
       assert(new java.io.File(d, m).exists(), s"$d missing $m")
     // ...each family refuses only ITS own double-run...
@@ -1442,8 +1443,8 @@ class CdcStreamSpec extends AnyFunSuite {
     assert(err.getMessage.contains("already compacted"))
     // ...and a stray per-leg fold of a net-compacted tree refuses too
     intercept[IllegalArgumentException] {
-      CdcStream.compactUpsertedIvfBatches(
-        spark, upsertDir, ivf0, "vec_id", "embedding")
+      CdcStream.compact(
+        spark, None, Some(upsertDir), None, ivf0, "vec_id", "embedding")
     }
   }
 
@@ -1485,24 +1486,24 @@ class CdcStreamSpec extends AnyFunSuite {
     // decrement nDocs while subtracting no terms) and leaves the trees
     // unmarked, so a fixed feed re-runs
     val err = intercept[IllegalArgumentException] {
-      CdcStream.compactMaintenanceBm25Batches(
-        spark, acceptDir, upsertDir, retractDir, stats0,
-        "doc_id", "text", "old_text")
+      CdcStream.compact(
+        spark, Some(acceptDir), Some(upsertDir), Some(retractDir), stats0,
+        "doc_id", "text", Some("old_text"))
     }
     assert(err.getMessage.contains("NULL") && err.getMessage.contains("id 5"))
-    assert(!new java.io.File(upsertDir, CdcStream.Bm25UpsertMarkerName).exists())
-    assert(!new java.io.File(retractDir, CdcStream.Bm25RetractMarkerName).exists())
+    assert(!new java.io.File(upsertDir, IndexFamily.Bm25.upsertMarker).exists())
+    assert(!new java.io.File(retractDir, IndexFamily.Bm25.retractMarker).exists())
     // the per-leg upsert fold pointed at the same tree refuses the same
     val err2 = intercept[IllegalArgumentException] {
-      CdcStream.compactUpsertedBm25Batches(
-        spark, upsertDir, stats0, "doc_id", "text", "old_text")
+      CdcStream.compact(
+        spark, None, Some(upsertDir), None, stats0, "doc_id", "text", Some("old_text"))
     }
     assert(err2.getMessage.contains("NULL"))
 
     // contrast: the TEXT-GRAM net fold is id-keyed (anti-join remove +
     // re-extend) — no old image needed — and lands doc 5 at its new text
-    val netted = CdcStream.compactMaintenanceBatches(
-      spark, acceptDir, upsertDir, retractDir, index0, "doc_id", "text")
+    val netted = CdcStream.compact(
+      spark, Some(acceptDir), Some(upsertDir), Some(retractDir), index0, "doc_id", "text")
     val finalCorpus = corpus0.filter(col("doc_id") =!= 5L)
       .unionByName(spark.createDataFrame(Seq(
         (5L, "doc five reinserted after an offline compaction")))
@@ -1561,8 +1562,8 @@ class CdcStreamSpec extends AnyFunSuite {
     val retired = spark.read.parquet(r2)
     assert(retired.count() === 1L &&
       retired.filter(col("text").isNull).count() === 1L)
-    val netted = CdcStream.compactMaintenanceBatches(
-      spark, a2, u2, r2, index0, "doc_id", "text")
+    val netted = CdcStream.compact(
+      spark, Some(a2), Some(u2), Some(r2), index0, "doc_id", "text")
     def posts(ix: graft.extensions.Dedup.CorpusIndex) =
       ix.postings.select("gram", "doc_id").as[(Long, Long)].collect().toSet
     assert(posts(netted) === posts(graft.extensions.Dedup.buildCorpusIndex(
@@ -1570,10 +1571,10 @@ class CdcStreamSpec extends AnyFunSuite {
     // the per-leg BM25 retract fold refuses the admitted NULL image
     val stats0 = graft.extensions.Search.bm25Fit(corpus0, "doc_id", "text")
     val bmErr = intercept[IllegalArgumentException] {
-      CdcStream.compactRetractedBm25Batches(spark, r2, stats0, "doc_id", "text")
+      CdcStream.compact(spark, None, None, Some(r2), stats0, "doc_id", "text")
     }
     assert(bmErr.getMessage.contains("NULL"))
-    assert(!new java.io.File(r2, CdcStream.Bm25RetractMarkerName).exists())
+    assert(!new java.io.File(r2, IndexFamily.Bm25.retractMarker).exists())
   }
 
   test("compactMaintenanceBatches: ids CROSSING op classes across " +
@@ -1662,8 +1663,8 @@ class CdcStreamSpec extends AnyFunSuite {
           (7L, "entirely new replacement content for doc seven")))
           .toDF("doc_id", "text"))
 
-      val netted = CdcStream.compactMaintenanceBatches(
-        spark, acceptDir, upsertDir, retractDir, index0, "doc_id", "text")
+      val netted = CdcStream.compact(
+        spark, Some(acceptDir), Some(upsertDir), Some(retractDir), index0, "doc_id", "text")
       val scratch = Dedup.buildCorpusIndex(finalCorpus, "doc_id", "text")
       def postingSet(ix: Dedup.CorpusIndex) =
         ix.postings.select("gram", "doc_id").as[(Long, Long)].collect().toSet
@@ -1672,19 +1673,19 @@ class CdcStreamSpec extends AnyFunSuite {
 
       // every consumed tree wears its LEG's marker: a stray per-leg
       // fold of an already-net-compacted tree refuses
-      assert(new java.io.File(acceptDir, CdcStream.FoldedMarkerName).exists())
-      assert(new java.io.File(upsertDir, CdcStream.UpsertMarkerName).exists())
-      assert(new java.io.File(retractDir, CdcStream.RetractMarkerName).exists())
+      assert(new java.io.File(acceptDir, IndexFamily.FoldedMarker).exists())
+      assert(new java.io.File(upsertDir, IndexFamily.Text.upsertMarker).exists())
+      assert(new java.io.File(retractDir, IndexFamily.Text.retractMarker).exists())
       intercept[IllegalArgumentException] {
-        CdcStream.compactUpsertedBatches(spark, upsertDir, index0, "doc_id", "text")
+        CdcStream.compact(spark, None, Some(upsertDir), None, index0, "doc_id", "text")
       }
 
       // BM25 net fold == refit on the final corpus (the earliest-old
       // image rule across legs: doc 3 retracts its ORIGINAL text even
       // though its delete row carries the intermediate amendment)
-      val nettedStats = CdcStream.compactMaintenanceBm25Batches(
-        spark, acceptDir, upsertDir, retractDir, stats0,
-        "doc_id", "text", "old_text")
+      val nettedStats = CdcStream.compact(
+        spark, Some(acceptDir), Some(upsertDir), Some(retractDir), stats0,
+        "doc_id", "text", Some("old_text"))
       val refit = Search.bm25Fit(finalCorpus, "doc_id", "text")
       assert(nettedStats.nDocs === refit.nDocs &&
         nettedStats.sumDl === refit.sumDl)
@@ -1706,12 +1707,12 @@ class CdcStreamSpec extends AnyFunSuite {
       corpus0.filter(col("doc_id") === 25L)
         .select(col("doc_id"), col("text"))
         .write.mode("overwrite").parquet(s"$r2/batch=0")
-      val partial = CdcStream.compactMaintenanceBatches(
-        spark, a2, u2, r2, index0, "doc_id", "text")
+      val partial = CdcStream.compact(
+        spark, Some(a2), Some(u2), Some(r2), index0, "doc_id", "text")
       assert(partial.folded === Seq(u2, r2))
-      assert(!new java.io.File(a2, CdcStream.FoldedMarkerName).exists())
-      assert(new java.io.File(u2, CdcStream.UpsertMarkerName).exists())
-      assert(new java.io.File(r2, CdcStream.RetractMarkerName).exists())
+      assert(!new java.io.File(a2, IndexFamily.FoldedMarker).exists())
+      assert(new java.io.File(u2, IndexFamily.Text.upsertMarker).exists())
+      assert(new java.io.File(r2, IndexFamily.Text.retractMarker).exists())
     } finally index0.unpersist()
   }
 
@@ -1769,11 +1770,11 @@ class CdcStreamSpec extends AnyFunSuite {
       // the full maintenance loop: retract, upsert, then accept folds —
       // disjoint id sets, one version chain — must land exactly on a
       // from-scratch build of the final corpus state
-      val idx1 = CdcStream.compactRetractedBatches(
-        spark, retractDir, index0, "doc_id")
-      val idx2 = CdcStream.compactUpsertedBatches(
-        spark, upsertDir, idx1, "doc_id", "text")
-      val idx3 = CdcStream.compactAcceptedBatches(
+      val idx1 = CdcStream.compact(
+        spark, None, None, Some(retractDir), index0, "doc_id", "text")
+      val idx2 = CdcStream.compact(
+        spark, None, Some(upsertDir), None, idx1, "doc_id", "text")
+      val idx3 = CdcStream.compactAccepted(
         spark, acceptDir, idx2, "doc_id", "text")
 
       val finalCorpus = corpus0.filter(col("doc_id") % 5 =!= 0)
@@ -1819,8 +1820,8 @@ class CdcStreamSpec extends AnyFunSuite {
     val threads = (1 to 2).map { _ =>
       new Thread(() => {
         gate.await()
-        try outs.add(Right(CdcStream.compactMaintenanceBm25Batches(
-          spark, a, u, r, stats, "doc_id", "text", "old_text")))
+        try outs.add(Right(CdcStream.compact(
+          spark, Some(a), Some(u), Some(r), stats, "doc_id", "text", Some("old_text"))))
         catch { case e: Throwable => outs.add(Left(e)) }
         ()
       })
@@ -1848,10 +1849,10 @@ class CdcStreamSpec extends AnyFunSuite {
     assert(dfMap(won) === dfMap(refit))
     // no lease survives the commit; a third attempt refuses on markers
     assert(!new java.io.File(u,
-      CdcStream.Bm25UpsertMarkerName + ".lock").exists())
+      IndexFamily.Bm25.upsertMarker + ".lock").exists())
     val again = intercept[IllegalArgumentException] {
-      CdcStream.compactMaintenanceBm25Batches(
-        spark, a, u, r, stats, "doc_id", "text", "old_text")
+      CdcStream.compact(
+        spark, Some(a), Some(u), Some(r), stats, "doc_id", "text", Some("old_text"))
     }
     assert(again.getMessage.contains("already compacted"))
 
@@ -1860,15 +1861,15 @@ class CdcStreamSpec extends AnyFunSuite {
     val r2 = TestSpark.tmpDir("graft-lease-r2")
     Seq((21L, docs.filter(col("doc_id") === 21L).select("text").as[String].head()))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$r2/batch=0")
-    val lock = new java.io.File(r2, CdcStream.Bm25RetractMarkerName + ".lock")
+    val lock = new java.io.File(r2, IndexFamily.Bm25.retractMarker + ".lock")
     assert(lock.createNewFile())
     val stale = intercept[IllegalStateException] {
-      CdcStream.compactRetractedBm25Batches(spark, r2, stats, "doc_id", "text")
+      CdcStream.compact(spark, None, None, Some(r2), stats, "doc_id", "text")
     }
     assert(stale.getMessage.contains("break the stale lease"))
     assert(lock.delete())
-    val shrunk = CdcStream.compactRetractedBm25Batches(
-      spark, r2, stats, "doc_id", "text")
+    val shrunk = CdcStream.compact(
+      spark, None, None, Some(r2), stats, "doc_id", "text")
     assert(shrunk.nDocs === stats.nDocs - 1)
 
     // a REFUSED fold (contract refusal, not a crash) releases its lease
@@ -1878,12 +1879,12 @@ class CdcStreamSpec extends AnyFunSuite {
     Seq((31L, null.asInstanceOf[String])).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$r3/batch=0")
     val nullErr = intercept[IllegalArgumentException] {
-      CdcStream.compactRetractedBm25Batches(spark, r3, stats, "doc_id", "text")
+      CdcStream.compact(spark, None, None, Some(r3), stats, "doc_id", "text")
     }
     assert(nullErr.getMessage.contains("NULL"))
     assert(!new java.io.File(r3,
-      CdcStream.Bm25RetractMarkerName + ".lock").exists())
-    assert(!new java.io.File(r3, CdcStream.Bm25RetractMarkerName).exists())
+      IndexFamily.Bm25.retractMarker + ".lock").exists())
+    assert(!new java.io.File(r3, IndexFamily.Bm25.retractMarker).exists())
   }
 
   test("per-leg and NET accept folds of one tree refuse each other in BOTH " +
@@ -1907,9 +1908,9 @@ class CdcStreamSpec extends AnyFunSuite {
     val netted = CdcStream.compactMaintenanceIvfBatches(
       spark, a1, u, r, ivfIdx, "vec_id", "embedding")
     assert(netted.version === ivfIdx.version + 2)
-    assert(new java.io.File(a1, CdcStream.IvfFoldedMarkerName).exists())
+    assert(new java.io.File(a1, IndexFamily.Ivf.acceptMarker).exists())
     val e1 = intercept[IllegalArgumentException] {
-      CdcStream.compactAcceptedSemanticBatches(
+      CdcStream.compactAccepted(
         spark, a1, ivfIdx, "vec_id", "embedding")
     }
     assert(e1.getMessage.contains("NET"))
@@ -1917,8 +1918,8 @@ class CdcStreamSpec extends AnyFunSuite {
     // runs — per-family independence intact
     val lshIdx = Similarity.lshFit(vecs, "vec_id", "embedding",
       planes = 12, bands = 4)
-    val lshNetted = CdcStream.compactMaintenanceLshBatches(
-      spark, a1, u, r, lshIdx, "vec_id", "embedding")
+    val lshNetted = CdcStream.compact(
+      spark, Some(a1), Some(u), Some(r), lshIdx, "vec_id", "embedding")
     assert(lshNetted.version === lshIdx.version + 2)
 
     // direction 2: the per-leg IVF-PQ accept fold runs first and
@@ -1928,13 +1929,13 @@ class CdcStreamSpec extends AnyFunSuite {
     novel.write.mode("overwrite").parquet(s"$a2/batch=0")
     val pqIdx = Similarity.ivfPqFit(vecs, "vec_id", "embedding",
       nlist = 4, m = 8, ksub = 16)
-    CdcStream.compactAcceptedIvfPqBatches(
+    CdcStream.compactAccepted(
       spark, a2, pqIdx, "vec_id", "embedding")
-    assert(new java.io.File(a2, CdcStream.FoldedMarkerName).exists())
-    assert(new java.io.File(a2, CdcStream.IvfPqFoldedMarkerName).exists())
+    assert(new java.io.File(a2, IndexFamily.FoldedMarker).exists())
+    assert(new java.io.File(a2, IndexFamily.IvfPq.acceptMarker).exists())
     val e2 = intercept[IllegalArgumentException] {
-      CdcStream.compactMaintenanceIvfPqBatches(
-        spark, a2, u, r, pqIdx, "vec_id", "embedding")
+      CdcStream.compact(
+        spark, Some(a2), Some(u), Some(r), pqIdx, "vec_id", "embedding")
     }
     assert(e2.getMessage.contains("already compacted"))
   }
@@ -1968,8 +1969,8 @@ class CdcStreamSpec extends AnyFunSuite {
       assert(spark.read.parquet(a).filter(col("doc_id") === 900L).count() === 1L)
       // an offline compaction bumps the SAVED tree IN PLACE (the
       // in-place-upgrade save path) while the stream keeps running...
-      val folded = CdcStream.compactMaintenanceBatches(
-        spark, a, u, r, loaded, "doc_id", "text", saveTo = Some(idxDir))
+      val folded = CdcStream.compact(
+        spark, Some(a), Some(u), Some(r), loaded, "doc_id", "text", saveTo = Some(idxDir))
       assert(folded.version === loaded.version + 2)
       // ...and the NEXT trigger refuses with the named error instead of
       // misrouting against the stale membership for many more triggers
@@ -2018,8 +2019,8 @@ class CdcStreamSpec extends AnyFunSuite {
       assert(spark.read.parquet(s"$r2/epoch=$v1")
         .filter(col("doc_id") === 7L).count() === 1L)
       // offline: fold THIS epoch's trees, save the bump in place
-      val folded2 = CdcStream.compactMaintenanceBatches(
-        spark, s"$a2/epoch=$v1", s"$u2/epoch=$v1", s"$r2/epoch=$v1",
+      val folded2 = CdcStream.compact(
+        spark, Some(s"$a2/epoch=$v1"), Some(s"$u2/epoch=$v1"), Some(s"$r2/epoch=$v1"),
         loaded2, "doc_id", "text", saveTo = Some(idxDir2))
       val v3 = folded2.version
       // window 2: doc 7 comes BACK with fresh content (truly novel to

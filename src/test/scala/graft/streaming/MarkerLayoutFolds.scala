@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.TestSpark
-import graft.extensions.{Dedup, Search, Similarity}
+import graft.extensions.{Dedup, IndexFamily, Search, Similarity}
 
 /** The fixture behind [[MarkerLayoutSpec]]: small indexes of all seven
   * families, fresh one-batch sink trees, and the compaction entry point
@@ -56,64 +56,24 @@ object MarkerLayoutFolds {
                  else vecs(spark).filter(col("vec_id") < 64)
     val (a, u, r) = (trees("accept"), trees("upsert"), trees("retract"))
     val (id, c) = if (isText(family)) ("doc_id", "text") else ("vec_id", "embedding")
-    family match {
-      case "text" =>
-        val ix = Dedup.buildCorpusIndex(served, id, c)
-        leg match {
-          case "accept" => CdcStream.compactAcceptedBatches(spark, a, ix, id, c)
-          case "upsert" => CdcStream.compactUpsertedBatches(spark, u, ix, id, c)
-          case "retract" => CdcStream.compactRetractedBatches(spark, r, ix, id)
-          case "net" => CdcStream.compactMaintenanceBatches(spark, a, u, r, ix, id, c)
-        }
-      case "bm25" =>
-        val st = Search.bm25Fit(served, id, c)
-        leg match {
-          case "accept" => CdcStream.compactAcceptedBm25Batches(spark, a, st, id, c)
-          case "upsert" =>
-            CdcStream.compactUpsertedBm25Batches(spark, u, st, id, c, "old_text")
-          case "retract" => CdcStream.compactRetractedBm25Batches(spark, r, st, id, c)
-          case "net" => CdcStream.compactMaintenanceBm25Batches(
-            spark, a, u, r, st, id, c, "old_text")
-        }
-      case "embedding" =>
-        val ix = Dedup.buildEmbeddingIndex(served, id, c)
-        leg match {
-          case "accept" => CdcStream.compactAcceptedEmbeddingBatches(spark, a, ix, id, c)
-          case "upsert" => CdcStream.compactUpsertedEmbeddingBatches(spark, u, ix, id, c)
-          case "retract" => CdcStream.compactRetractedEmbeddingBatches(spark, r, ix, id)
-          case "net" => CdcStream.compactVecMaintenanceBatches(spark, a, u, r, ix, id, c)
-        }
-      case "ivf" =>
-        val ix = Similarity.ivfFit(served, id, c, nlist = 4)
-        leg match {
-          case "accept" => CdcStream.compactAcceptedSemanticBatches(spark, a, ix, id, c)
-          case "upsert" => CdcStream.compactUpsertedIvfBatches(spark, u, ix, id, c)
-          case "retract" => CdcStream.compactRetractedIvfBatches(spark, r, ix, id)
-          case "net" => CdcStream.compactMaintenanceIvfBatches(spark, a, u, r, ix, id, c)
-        }
-      case "ivfpq" =>
-        val ix = Similarity.ivfPqFit(served, id, c, nlist = 4, m = 8, ksub = 16)
-        leg match {
-          case "accept" => CdcStream.compactAcceptedIvfPqBatches(spark, a, ix, id, c)
-          case "upsert" => CdcStream.compactUpsertedIvfPqBatches(spark, u, ix, id, c)
-          case "retract" => CdcStream.compactRetractedIvfPqBatches(spark, r, ix, id)
-          case "net" => CdcStream.compactMaintenanceIvfPqBatches(spark, a, u, r, ix, id, c)
-        }
-      case "lsh" =>
-        val ix = Similarity.lshFit(served, id, c)
-        leg match {
-          case "upsert" => CdcStream.compactUpsertedLshBatches(spark, u, ix, id, c)
-          case "retract" => CdcStream.compactRetractedLshBatches(spark, r, ix, id)
-          case "net" => CdcStream.compactMaintenanceLshBatches(spark, a, u, r, ix, id, c)
-        }
-      case "pq" =>
-        val ix = Similarity.pqFit(served, id, c, m = 8, ksub = 16)
-        leg match {
-          case "upsert" => CdcStream.compactUpsertedPqBatches(spark, u, ix, id, c)
-          case "retract" => CdcStream.compactRetractedPqBatches(spark, r, ix, id)
-          case "net" => CdcStream.compactMaintenancePqBatches(spark, a, u, r, ix, id, c)
-        }
+    def run[I](ix: I)(implicit fam: IndexFamily[I]): Unit = {
+      val old = if (fam.retractsByImage) Some("old_text") else None
+      leg match {
+        case "accept" => CdcStream.compactAccepted(spark, a, ix, id, c)
+        case "upsert" => CdcStream.compact(spark, None, Some(u), None, ix, id, c, old)
+        case "retract" => CdcStream.compact(spark, None, None, Some(r), ix, id, c)
+        case "net" => CdcStream.compact(spark, Some(a), Some(u), Some(r), ix, id, c, old)
+      }
+      ()
     }
-    ()
+    family match {
+      case "text" => run(Dedup.buildCorpusIndex(served, id, c))
+      case "bm25" => run(Search.bm25Fit(served, id, c))
+      case "embedding" => run(Dedup.buildEmbeddingIndex(served, id, c))
+      case "ivf" => run(Similarity.ivfFit(served, id, c, nlist = 4))
+      case "ivfpq" => run(Similarity.ivfPqFit(served, id, c, nlist = 4, m = 8, ksub = 16))
+      case "lsh" => run(Similarity.lshFit(served, id, c))
+      case "pq" => run(Similarity.pqFit(served, id, c, m = 8, ksub = 16))
+    }
   }
 }
