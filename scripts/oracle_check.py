@@ -1,13 +1,16 @@
 #!/usr/bin/env python3
-"""Local replica of the driver's DuckDB oracle compare for named queries.
+"""DuckDB oracle compare for a graft.Verify dump.
 
-Usage: oracle_check.py <sfDir> <dumpDir> <q1,q2,...>
+Usage: oracle_check.py <sfDir> <dumpDir> [q1,q2,...]
 
-Reads each query's Spark result from <dumpDir>/<name> (parquet written
-by `Scratch dumpq`), runs the query's oracleSql from SparkEntry (dumped
-as <dumpDir>/oracle_sql.json by Verify, or re-extracted here via a tiny
-Scratch call) against DuckDB views over <sfDir>, and compares the way
-the driver does: columns sorted by name, rows sorted, exact values.
+<dumpDir> is what `graft.Verify <sfDir> <dumpDir>` writes: each query's
+Spark result as parquet under the bare directory <dumpDir>/<name>/, and
+every query's oracleSql in <dumpDir>/oracle_sql.json. For each named
+query (default: every key of oracle_sql.json) the script runs the oracle
+against DuckDB views over <sfDir> and compares the results:
+columns sorted by name, rows sorted, floats at %.6g. A query with no
+dump is a failure. Prints `checked N/M` and exits non-zero when any
+check fails or nothing was checked.
 """
 import sys, json, glob
 import duckdb
@@ -32,16 +35,22 @@ def canon(rows, cols, normalize=True):
 
 
 def main():
-    sf_dir, dump_dir, names = sys.argv[1], sys.argv[2], sys.argv[3].split(",")
+    sf_dir, dump_dir = sys.argv[1], sys.argv[2]
     oracle = json.load(open(f"{dump_dir}/oracle_sql.json"))
+    names = sys.argv[3].split(",") if len(sys.argv) > 3 else sorted(oracle)
     con = duckdb.connect()
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     ok = True
+    checked = 0
     for n in names:
         files = glob.glob(f"{dump_dir}/{n}/*.parquet")
+        if not files:
+            print(f"{n}: NO DUMP (no parquet under {dump_dir}/{n}/)")
+            ok = False
+            continue
         sr = con.execute(
             f"SELECT * FROM read_parquet({files!r})")
         s_cols = [d[0] for d in sr.description]
@@ -71,7 +80,9 @@ def main():
                     else " [values differed pre-norm: %.6g normalization"
                          " was load-bearing]")
             print(f"{n}: pass ({len(sc[1])} rows){note}")
-    sys.exit(0 if ok else 1)
+        checked += 1
+    print(f"checked {checked}/{len(names)}")
+    sys.exit(0 if ok and checked > 0 else 1)
 
 
 main()

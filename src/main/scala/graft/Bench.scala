@@ -4,6 +4,8 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.Fixtures
+
 /**
  * Benchmark main: times every SparkEntry query end-to-end (plan + execute
  * via count) on SPARK_GRAFT_SF_DIR and emits ONE JSON line:
@@ -55,10 +57,10 @@ import org.apache.spark.sql.SparkSession
  */
 object Bench {
 
-  /** Family phases: (name, membership, post-phase cache release). Order:
-    * the cache-free relational rows run on a clean JVM first; cdc (live
-    * engine + compacted fixture) runs second and releases its caches
-    * before the cache-free text/multimodal rows; then the heavy
+  /** Family phases: (name, membership, post-phase fixture release).
+    * Order: the cache-free relational rows run on a clean JVM first; cdc
+    * (live engine + compacted fixture) runs second and releases its
+    * fixtures before the text/multimodal rows; then the heavy
     * cache-pinning dedup and sim families, each released before the
     * next starts. Within a phase rows run alphabetically —
     * the fit/probe orderings (dedup_exact_pairs_build before the gates,
@@ -66,18 +68,14 @@ object Bench {
     * within-family and survive. BenchPhaseSpec asserts every query name
     * matches exactly one phase, so a new family cannot silently run in
     * the leftover slot under another family's cache pressure. */
-  private[graft] val phases: Seq[(String, String => Boolean, () => Unit)] = Seq(
-    ("relational", n => n == "q1_agg" || n.startsWith("q_"), () => ()),
-    ("cdc", n => n.startsWith("cdc_"),
-      () => graft.queries.CdcQueries.clearCaches()),
+  private[graft] val phases: Seq[(String, String => Boolean, Option[Fixtures.Phase])] = Seq(
+    ("relational", n => n == "q1_agg" || n.startsWith("q_"), None),
+    ("cdc", n => n.startsWith("cdc_"), Some(Fixtures.Cdc)),
     ("text", n => n.startsWith("text_") || n.startsWith("multimodal_") ||
       n.startsWith("pipeline_") || n.startsWith("corpus_") ||
-      n.startsWith("search_") || n == "embeddings_stats",
-      () => graft.queries.NorthStarQueries.clearTextCaches()),
-    ("dedup", n => n.startsWith("dedup_"),
-      () => graft.queries.NorthStarQueries.clearDedupCaches()),
-    ("sim", n => n.startsWith("sim_"),
-      () => graft.queries.NorthStarQueries.clearSimCaches()))
+      n.startsWith("search_") || n == "embeddings_stats", Some(Fixtures.Text)),
+    ("dedup", n => n.startsWith("dedup_"), Some(Fixtures.Dedup)),
+    ("sim", n => n.startsWith("sim_"), Some(Fixtures.Sim)))
 
   /** 1-minute load average from /proc/loadavg (-1 if unreadable) — ambient
     * load is part of the artifact: a bench number without its load context
@@ -272,7 +270,7 @@ object Bench {
     val loadTrace = Array.fill(nRuns)(Vector.empty[Double])
     val errors = Array.fill(nRuns)(Vector.empty[(String, String)])
     val segments = phased.map { case (_, names, release) => (names, release) } :+
-      ((leftovers, () => ()))
+      ((leftovers, None))
     segments.foreach { case (names, release) =>
       (0 until nRuns).foreach { p =>
         val ls = loadAvg1()
@@ -282,7 +280,7 @@ object Bench {
         errors(p) = errors(p) ++ es
         loadTrace(p) = loadTrace(p) ++ Vector(ls, le)
       }
-      release()
+      release.foreach(Fixtures.release)
     }
     // final sweep of anything a release missed (was the between-pass reset)
     SparkEntry.clearCaches()

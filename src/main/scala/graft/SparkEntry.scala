@@ -29,13 +29,11 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     CdcQueries.oracles ++ RelationalQueries.oracles ++ NorthStarQueries.oracles
 
-  /** Release every session cache the query suites pin (persisted
-    * relations, IVF indexes, lookup engines + their temp trees). The
+  /** Release every fixture the query suites pin, in every session
+    * (persisted relations, fitted indexes, the lookup engine) and delete
+    * their temp trees — the four [[Fixtures]] phases at once. The
     * bench/verify mains call this before stopping the session; a
     * long-lived service embedding `queries` must call it when a corpus
     * version is retired. */
-  def clearCaches(): Unit = {
-    NorthStarQueries.clearCaches()
-    CdcQueries.clearCaches()
-  }
+  def clearCaches(): Unit = Fixtures.phases.foreach(Fixtures.release)
 }

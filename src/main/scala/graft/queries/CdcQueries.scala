@@ -32,16 +32,10 @@ object CdcQueries {
     * build+lookup cold and the bucket-pruned point lookup itself warm.
     * Five ticks traverse the whole fixture: the policy's bounded 14-day
     * steps cover January in two, then a jump-to-ceiling catches up. */
-  private final case class LookupFixture(
-      eng: graft.engine.CdcEngine, sink: String, state: String)
-
-  private val lookupEngineCache =
-    new java.util.concurrent.ConcurrentHashMap[String, LookupFixture]()
-
   private def lookupEngine(s: SparkSession, dir: String): graft.engine.CdcEngine =
-    lookupEngineCache.computeIfAbsent(dir, _ => {
-      val sink = java.nio.file.Files.createTempDirectory("graft-lookup-sink").toString
-      val state = java.nio.file.Files.createTempDirectory("graft-lookup-state").toString
+    Fixtures.memo(Fixtures.Cdc, s, dir, "lookupEngine") {
+      val sink = Fixtures.tempDir(Fixtures.Cdc, "graft-lookup-sink")
+      val state = Fixtures.tempDir(Fixtures.Cdc, "graft-lookup-state")
       val eng = new graft.engine.CdcEngine(s, dir, sink, state,
         policy = graft.policy.WatermarkPolicy.PolicyConfig(
           batchCount = 100, replicationBufferSecs = 180),
@@ -49,8 +43,8 @@ object CdcQueries {
       eng.seed(Seq(("events", "ts", Some("event_id"))))
       var clock = java.time.Instant.parse("2024-02-01T00:00:00Z")
       (1 to 5).foreach { _ => eng.tick(clock); clock = clock.plusSeconds(3600) }
-      LookupFixture(eng, sink, state)
-    }).eng
+      eng
+    }(_.close())
 
   /** Fold the four fixed window slices of `events` into a compacted state
     * under `stateDir` (the `cdc_current_state_compacted` build). Shared by
@@ -76,42 +70,9 @@ object CdcQueries {
     * fit/probe split again: the build row keeps paying the full fold, the
     * read row measures ONLY the compacted read path (a bounded scan of
     * `numBuckets` bucket dirs). */
-  private val compactedFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def compactedFixture(s: SparkSession, dir: String): String =
-    compactedFixtureCache.computeIfAbsent(dir, _ => {
-      val stateDir = java.nio.file.Files
-        .createTempDirectory("graft-compacted-fixture").toString
-      buildCompacted(s, dir, stateDir)
-      stateDir
-    })
-
-  /** Temp trees created by the from-scratch build row, swept by
-    * [[clearCaches]] (the row itself must NOT reuse them — it measures the
-    * build — but a long-lived service must not leak one per execution). */
-  private val buildScratchDirs =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
-
-  /** Release the per-dir lookup fixtures: stop each engine's capture pool
-    * and delete its temp sink/state trees. Also sweeps the compacted
-    * read-fixture and the build row's scratch dirs. Part of the
-    * suite-wide cache contract ([[graft.SparkEntry.clearCaches]]) — a
-    * long-lived service would otherwise accumulate one engine + temp
-    * trees per sf dir. */
-  def clearCaches(): Unit = {
-    def rm(d: String): Unit = graft.util.Util.deleteRecursively(new java.io.File(d))
-    lookupEngineCache.values.forEach { f =>
-      f.eng.close()
-      Seq(f.sink, f.state).foreach(rm)
-    }
-    lookupEngineCache.clear()
-    compactedFixtureCache.values.forEach(rm(_))
-    compactedFixtureCache.clear()
-    buildScratchDirs.forEach(rm(_))
-    buildScratchDirs.clear()
-  }
+    Fixtures.tree(Fixtures.Cdc, s, dir, "compactedFixture",
+      "graft-compacted-fixture")(buildCompacted(s, dir, _))
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S1/F1/P1/P3: windowed snapshot scan with half-open (lo, hi] bounds.
@@ -148,9 +109,9 @@ object CdcQueries {
     // cost); the steady-state read path is measured by the `_read` sibling.
     "cdc_current_state_compacted" -> ((s, dir) => {
       val ev = events(s, dir)
-      val stateDir = java.nio.file.Files
-        .createTempDirectory("graft-compacted-q").toString
-      buildScratchDirs.add(stateDir)
+      // a fresh tree per call (the row must not reuse one — it measures
+      // the build), deleted when the cdc phase is released
+      val stateDir = Fixtures.tempDir(Fixtures.Cdc, "graft-compacted-q")
       buildCompacted(s, dir, stateDir)
       graft.operators.CompactedState.read(s, stateDir)
         .getOrElse(sys.error("compacted state empty"))

@@ -123,33 +123,15 @@ object NorthStarQueries {
         lit(" re account "), col("c_custkey").cast("string")).as("note"))
 
   /** One fitted IVF index per sf dir, shared across probe calls. */
-  private val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Similarity.IvfIndex]()
-
   private def ivfIndex(dir: String, e: DataFrame): Similarity.IvfIndex =
-    ivfIndexCache.computeIfAbsent(dir, _ =>
-      Similarity.ivfFit(e, "vec_id", "embedding", nlist = 16).cache())
+    Fixtures.memo(Fixtures.Sim, e.sparkSession, dir, "ivfIndex")(
+      Similarity.ivfFit(e, "vec_id", "embedding", nlist = 16).cache())(_.unpersist())
 
   /** The clustered-fixture sibling of [[ivfIndex]] (sim_topk_ivf_probe's
-    * steady-state index) — same cache map, suffixed key, released by the
-    * same [[clearSimCaches]]. */
+    * steady-state index). */
   private def ivfClusteredIndex(dir: String, ce: DataFrame): Similarity.IvfIndex =
-    ivfIndexCache.computeIfAbsent(dir + "#clustered", _ =>
-      Similarity.ivfFit(ce, "vec_id", "embedding", nlist = 19).cache())
-
-  /** Per-rep maintenance sink triples for `sim_ivf_net_maintenance` —
-    * the sim phase's own queue (the net fold stamps per-family markers
-    * into a consumed triple, so each rep writes fresh trees), swept by
-    * [[clearSimCaches]]. */
-  private val vecSinkDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  private def newVecSink(): String = {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-vec-sink").toString
-    vecSinkDirs.add(out)
-    out
-  }
+    Fixtures.memo(Fixtures.Sim, ce.sparkSession, dir, "ivfClusteredIndex")(
+      Similarity.ivfFit(ce, "vec_id", "embedding", nlist = 19).cache())(_.unpersist())
 
   /** Pre-window serving state for `sim_ivf_net_maintenance`, per sf
     * dir: v_{N-1} — the shared clustered IVF index versioned BACKWARD
@@ -159,14 +141,12 @@ object NorthStarQueries {
     * stream, so the manufacture pays once in the first toucher's cold
     * rep and warm reps price the maintenance fold itself — three sink
     * writes + net reduce + remove + assign-extend + probe, the
-    * O(window) contract. Released by [[clearSimCaches]]. */
-  private val ivfNetFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (DataFrame, DataFrame, DataFrame, Similarity.IvfIndex)]()
-
+    * O(window) contract. The row writes each rep's maintenance sink
+    * triple to fresh sim-phase temp trees (the net fold stamps
+    * per-family markers into a consumed triple). */
   private def ivfNetFixture(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, Similarity.IvfIndex) =
-    ivfNetFixtureCache.computeIfAbsent(dir, _ => {
+    Fixtures.memo(Fixtures.Sim, s, dir, "ivfNetFixture") {
       val ce = requirePlantedHeadroom(clusteredEmbeddings(embs(s, dir)),
         "vec_id")
       val junk = ce.filter(col("vec_id") % 20 === 0)
@@ -199,24 +179,11 @@ object NorthStarQueries {
         .foreach(df => { df.count(); () })
       diff.unpersist(false)
       (accepts, upserts, retracts, cached)
-    })
+    } { case (a, u, r, ix) =>
+      a.unpersist(false); u.unpersist(false); r.unpersist(false)
+      ix.unpersist(); ()
+    }
 
-  /** The planted-fixture index the exact-oracle semantic-dedup rows
-    * share (same cache map / release path): an EXPLICIT 4-cell
-    * quantizer — centers at (0, ±2, ±2, 0…) — through the production
-    * [[Similarity.assignToCells]] path, i.e. the bring-your-own-
-    * quantizer composition a 100 TB pipeline uses when it runs SemDeDup
-    * over an existing index's cells instead of re-fitting. The centers
-    * are NUDGE-ORTHOGONAL by construction: assignment depends on
-    * components 2-3, which the planted +0.05-on-component-1 nudge never
-    * touches, and the component-1 term contributes identically to every
-    * center's distance — so each original and its near-copy co-cell
-    * BITWISE, structurally, and the within-cell pair set equals
-    * brute-force all-pairs at eps=0.9 with no sampling luck (KMeans
-    * cells, by contrast, split 1-3 planted pairs at sf0.01/0.1 —
-    * measured, Scratch semcell — which is exactly the recall loss the
-    * dedup_semantic_recall gate prices). Cells still prune: 4 cells
-    * score ~1/4 of the pair space. */
   /** The nudge-orthogonal explicit centroid table (±2 in components 2-3,
     * 0 elsewhere): 4 cells whose assignment ignores the nudged
     * component entirely. */
@@ -230,56 +197,64 @@ object NorthStarQueries {
     ).toDF("cell", "center")
   }
 
+  /** The planted-fixture index the exact-oracle semantic-dedup rows
+    * share: an EXPLICIT 4-cell quantizer — centers at (0, ±2, ±2, 0…) —
+    * through the production [[Similarity.assignToCells]] path, i.e. the
+    * bring-your-own-quantizer composition a 100 TB pipeline uses when it
+    * runs SemDeDup over an existing index's cells instead of re-fitting.
+    * The centers are NUDGE-ORTHOGONAL by construction: assignment
+    * depends on components 2-3, which the planted +0.05-on-component-1
+    * nudge never touches, and the component-1 term contributes
+    * identically to every center's distance — so each original and its
+    * near-copy co-cell BITWISE, structurally, and the within-cell pair
+    * set equals brute-force all-pairs at eps=0.9 with no sampling luck
+    * (KMeans cells, by contrast, split 1-3 planted pairs at sf0.01/0.1 —
+    * measured, Scratch semcell — which is exactly the recall loss the
+    * dedup_semantic_recall gate prices). Cells still prune: 4 cells
+    * score ~1/4 of the pair space. */
   private def ivfSemIndex(dir: String, pe: DataFrame): Similarity.IvfIndex =
-    ivfIndexCache.computeIfAbsent(dir + "#sem", _ => {
+    Fixtures.memo(Fixtures.Sim, pe.sparkSession, dir, "ivfSemIndex") {
       val centers = semCenters(pe.sparkSession)
       Similarity.IvfIndex(centers,
         Similarity.assignToCells(pe, centers, "vec_id", "embedding")).cache()
-    })
+    }(_.unpersist())
 
   /** Corpus-only sibling (raw embeddings, no planted rows) — the
     * existing-index side of the incremental SemDeDup probe. */
   private def ivfSemCorpusIndex(dir: String, e: DataFrame): Similarity.IvfIndex =
-    ivfIndexCache.computeIfAbsent(dir + "#semcorpus", _ => {
+    Fixtures.memo(Fixtures.Sim, e.sparkSession, dir, "ivfSemCorpusIndex") {
       val centers = semCenters(e.sparkSession)
       Similarity.IvfIndex(centers,
         Similarity.assignToCells(e.select("vec_id", "embedding"), centers,
           "vec_id", "embedding")).cache()
-    })
+    }(_.unpersist())
 
   /** KMeans-fit sibling (the paper's own quantizer) for the recall gate
-    * row — fit once per sf dir, released with the sim caches. */
+    * row — fit once per sf dir. */
   private def ivfSemKmeansIndex(dir: String, pe: DataFrame): Similarity.IvfIndex =
-    ivfIndexCache.computeIfAbsent(dir + "#semkm", _ =>
-      Similarity.ivfFit(pe, "vec_id", "embedding", nlist = 8).cache())
+    Fixtures.memo(Fixtures.Sim, pe.sparkSession, dir, "ivfSemKmeansIndex")(
+      Similarity.ivfFit(pe, "vec_id", "embedding", nlist = 8).cache())(_.unpersist())
 
   /** One fitted PQ index per sf dir on the planted fixture
-    * (sim_topk_pq_probe's steady state), released by [[clearSimCaches]]. */
-  private val pqIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Similarity.PqIndex]()
-
+    * (sim_topk_pq_probe's steady state). */
   private def pqPlantedIndex(dir: String, pe: DataFrame): Similarity.PqIndex =
-    pqIndexCache.computeIfAbsent(dir + "#planted", _ =>
-      Similarity.pqFit(pe, "vec_id", "embedding", m = 8, ksub = 16).cache())
+    Fixtures.memo(Fixtures.Sim, pe.sparkSession, dir, "pqPlantedIndex")(
+      Similarity.pqFit(pe, "vec_id", "embedding", m = 8, ksub = 16).cache())(_.unpersist())
 
   /** One fitted IVF-PQ index per sf dir on the planted fixture over the
     * nudge-orthogonal explicit coarse quantizer
-    * (sim_topk_ivfpq_probe's steady state), released by
-    * [[clearSimCaches]]. */
-  private val ivfPqIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Similarity.IvfPqIndex]()
-
+    * (sim_topk_ivfpq_probe's steady state). */
   private def ivfPqPlantedIndex(s: SparkSession, dir: String,
                                 pe: DataFrame): Similarity.IvfPqIndex =
-    ivfPqIndexCache.computeIfAbsent(dir + "#planted", _ =>
+    Fixtures.memo(Fixtures.Sim, s, dir, "ivfPqPlantedIndex")(
       Similarity.ivfPqFit(pe, "vec_id", "embedding", m = 8, ksub = 16,
-        centers = Some(semCenters(s))).cache())
+        centers = Some(semCenters(s))).cache())(_.unpersist())
 
   private def ivfPqResPlantedIndex(s: SparkSession, dir: String,
                                    pe: DataFrame): Similarity.IvfPqIndex =
-    ivfPqIndexCache.computeIfAbsent(dir + "#planted-res", _ =>
+    Fixtures.memo(Fixtures.Sim, s, dir, "ivfPqResPlantedIndex")(
       Similarity.ivfPqFit(pe, "vec_id", "embedding", m = 8, ksub = 16,
-        centers = Some(semCenters(s)), residual = true).cache())
+        centers = Some(semCenters(s)), residual = true).cache())(_.unpersist())
 
   /** The exact brute-force ground truth SHARED by the six ANN recall
     * gates (`sim_{ivf,ivf_extend,ivfpq,ivfpq_res,pq,lsh}_recall`): the
@@ -292,33 +267,29 @@ object NorthStarQueries {
     * `windowCensus` fit-probe pattern — and every gate measures the ANN
     * path under test plus one cached-truth join (VERDICT r19 #3).
     * `sim_topk_brute` — the row whose CONTRACT is the brute scan's price
-    * — deliberately does NOT read this fixture. Released by
-    * [[clearSimCaches]]. */
-  private val bruteTruthCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+    * — deliberately does NOT read this fixture. */
   private def bruteTruth10(s: SparkSession, dir: String): DataFrame =
-    bruteTruthCache.computeIfAbsent(dir, _ => {
+    Fixtures.frame(Fixtures.Sim, s, dir, "bruteTruth10") {
       val e = embs(s, dir)
       Similarity.bruteForceTopK(e, e.filter(col("vec_id") % 20 === 0),
         "vec_id", "embedding", k = 10)
         .select(col("query_id"), col("neighbor_id"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
-  /** The filtered sibling (same cache map / release path): the exact
-    * top-5 truth over the `label % 3 = 0` slice, shared by BOTH filtered
-    * ANN gates (`sim_topk_filtered_ivf`, `sim_topk_filtered_lsh`).
+  /** The filtered sibling: the exact top-5 truth over the
+    * `label % 3 = 0` slice, shared by BOTH filtered ANN gates
+    * (`sim_topk_filtered_ivf`, `sim_topk_filtered_lsh`).
     * `sim_topk_filtered` — the row whose contract IS the exact filtered
     * scan — keeps computing it. */
   private def bruteTruthFiltered5(s: SparkSession, dir: String): DataFrame =
-    bruteTruthCache.computeIfAbsent(dir + "#filtered5", _ => {
+    Fixtures.frame(Fixtures.Sim, s, dir, "bruteTruthFiltered5") {
       val e = embs(s, dir)
       Similarity.bruteForceTopK(e.filter(col("label") % 3 === 0),
         e.filter(col("vec_id") % 20 === 0), "vec_id", "embedding", k = 5)
         .select(col("query_id"), col("neighbor_id"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** The exact n-gram-Jaccard pair set, shared by BOTH dedup recall gates
     * (`dedup_minhash_sound`, `dedup_simhash_recall`): persisted per sf dir
@@ -330,11 +301,8 @@ object NorthStarQueries {
     * onto this cached relation once populated (identical logical plan), so
     * the exact pipeline's full cost appears exactly once per session, not
     * three times with run-to-run scheduling variance. */
-  private val exactPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def exactPairs(s: SparkSession, dir: String): DataFrame =
-    exactPairsCache.computeIfAbsent(dir, _ =>
+    Fixtures.frame(Fixtures.Dedup, s, dir, "exactPairs")(
       Dedup.ngramJaccardPairs(docs(s, dir), "doc_id", "text", threshold = 0.5)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
@@ -345,11 +313,8 @@ object NorthStarQueries {
     * back-to-back runs). Persisting the candidate side pins the gate's
     * cost to one build (cold) + one cached join (warm), the same warm/cold
     * contract as `exactPairs`. */
-  private val simPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def simPairs(s: SparkSession, dir: String): DataFrame =
-    simPairsCache.computeIfAbsent(dir, _ =>
+    Fixtures.frame(Fixtures.Dedup, s, dir, "simPairs")(
       Dedup.simhashDupPairs(docs(s, dir), "doc_id", "text", maxHamming = 16)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
@@ -358,21 +323,10 @@ object NorthStarQueries {
     * run and inherited its scheduling variance — back-to-back identical
     * runs measured warm 3.3s vs cold 1.2s. Same warm/cold contract as
     * the gates' candidate sides: one build (cold), cached reads (warm). */
-  private val minhashPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    minhashPairsCache.computeIfAbsent(dir, _ =>
+    Fixtures.frame(Fixtures.Dedup, s, dir, "minhashPairs")(
       Dedup.minhashDupPairs(docs(s, dir), "doc_id", "text", threshold = 0.5)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** The raw simhash pair set (`dedup_simhash_pairs`), persisted per sf
-    * dir — the same warm>cold scheduling variance the un-cached minhash
-    * pairs row had (and the same fix): back-to-back identical runs
-    * measured warm 2.8s vs cold 1.3s once the row no longer shared
-    * plan fragments with its siblings. */
-  private val simRawPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** The sign-LSH graduation fixture (round 16): every 10th vector plus
     * a x2-SCALED copy (+10M ids). Scaling by 2 is EXACT in IEEE float
@@ -411,8 +365,13 @@ object NorthStarQueries {
         .tokens(col("text")))).as("text")))
   }
 
+  /** The raw simhash pair set (`dedup_simhash_pairs`), persisted per sf
+    * dir — the same warm>cold scheduling variance the un-cached minhash
+    * pairs row had (and the same fix): back-to-back identical runs
+    * measured warm 2.8s vs cold 1.3s once the row no longer shared
+    * plan fragments with its siblings. */
   private def simRawPairs(s: SparkSession, dir: String): DataFrame =
-    simRawPairsCache.computeIfAbsent(dir, _ =>
+    Fixtures.frame(Fixtures.Dedup, s, dir, "simRawPairs")(
       Dedup.simhashDupPairs(simPlantedDocs(s, dir), "doc_id", "text",
         maxHamming = 0)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -439,34 +398,24 @@ object NorthStarQueries {
   /** The resolved near-dup GROUPS (connected components over the exact
     * pair set), cached per sf dir: `resolveDupGroups` returns a persisted
     * label relation (its iterative loop needs the pin), so one resolution
-    * is shared by the bench's cold+warm executions and released by
-    * [[clearCaches]]. */
-  private val dupGroupsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+    * is shared by the bench's cold+warm executions. */
   private def dupGroups(s: SparkSession, dir: String): DataFrame =
-    dupGroupsCache.computeIfAbsent(dir, _ =>
+    Fixtures.frame(Fixtures.Dedup, s, dir, "dupGroups")(
       Dedup.resolveDupGroups(exactPairs(s, dir)))
 
   /** Near-dup groups resolved from the MINHASH pair set (the LSH-driven
     * pipeline end to end, vs [[dupGroups]]' exact-pairs-driven one),
     * cached per sf dir like every other iterative/persisted side. */
-  private val mhGroupsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def mhGroups(s: SparkSession, dir: String): DataFrame =
-    mhGroupsCache.computeIfAbsent(dir, _ =>
+    Fixtures.frame(Fixtures.Dedup, s, dir, "mhGroups")(
       Dedup.resolveDupGroups(minhashPairs(s, dir)))
 
   /** Embedding-modality dup groups (connected components over the
     * sign-LSH pair set on the planted corpus), cached per sf dir —
     * `resolveDupGroups` returns a persisted relation, so an uncached
     * call would leak one pin per bench execution. */
-  private val embGroupsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def embGroups(s: SparkSession, dir: String): DataFrame =
-    embGroupsCache.computeIfAbsent(dir, _ =>
+    Fixtures.frame(Fixtures.Dedup, s, dir, "embGroups")(
       Dedup.resolveDupGroups(
         Dedup.embeddingDupPairs(plantedEmbeddings(embs(s, dir)), "vec_id",
           "embedding", threshold = 0.9, planes = 12, bands = 8)))
@@ -476,49 +425,39 @@ object NorthStarQueries {
     * the recall gate pins ([[simPairs]]) — regenerating it here doubled
     * the session's simhash build cost (measured 10.1s cold for this row
     * alone at sf0.1). */
-  private val shGroupsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def shGroups(s: SparkSession, dir: String): DataFrame =
-    shGroupsCache.computeIfAbsent(dir, _ =>
+    Fixtures.frame(Fixtures.Dedup, s, dir, "shGroups")(
       Dedup.resolveDupGroups(
         Dedup.verifyPairsExact(simPairs(s, dir), docs(s, dir),
           "doc_id", "text")))
 
   /** Sign-LSH bucket index over the embeddings table (the incremental
     * embedding-dedup fit side), persisted per sf dir. */
-  private val embIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.EmbeddingIndex]()
-
   private def embIndex(s: SparkSession, dir: String): Dedup.EmbeddingIndex =
-    embIndexCache.computeIfAbsent(dir, _ =>
+    Fixtures.memo(Fixtures.Dedup, s, dir, "embIndex")(
       Dedup.buildEmbeddingIndex(embs(s, dir), "vec_id", "embedding",
-        planes = 12, bands = 8).persist())
+        planes = 12, bands = 8).persist())(_.unpersist())
 
   /** Span-dedup EXPLODED WINDOW relation per sf dir (doc_id, win_start,
     * win_hash at n=8), persisted: the corpus-wide tokenize + explode is
     * the dominant cost of every text_window_* row, and before this was
     * shared each consumer re-paid it (r13: stats 11.3 s + scrub 10.6 s
     * warm while the census row sharing only the CENSUS read in 0.03 s).
-    * One explode now feeds census, stats and scrub alike. Released by
-    * [[clearTextCaches]]. */
-  private val windowRowsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+    * One explode now feeds census, stats and scrub alike. A text-phase
+    * fixture: pinning it through the whole dedup family put every dedup
+    * row under avoidable executor-storage pressure (r13's unexplained
+    * shared-subset drift's prime suspect was exactly this class of
+    * cross-phase pinning). */
   private def windowRowsShared(s: SparkSession, dir: String): DataFrame =
-    windowRowsCache.computeIfAbsent(dir, _ =>
+    Fixtures.frame(Fixtures.Text, s, dir, "windowRowsShared")(
       Dedup.windowRelation(docs(s, dir), "doc_id", "text", n = 8)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Span-dedup window census per sf dir (win_hash, n_docs, n_occ,
     * first_doc at n=8, minDocs=2), persisted and derived from the
-    * shared [[windowRowsShared]] explode. Released by
-    * [[clearTextCaches]]. */
-  private val windowCensusCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+    * shared [[windowRowsShared]] explode. */
   private def windowCensus(s: SparkSession, dir: String): DataFrame =
-    windowCensusCache.computeIfAbsent(dir, _ =>
+    Fixtures.frame(Fixtures.Text, s, dir, "windowCensus")(
       Dedup.duplicatedWindows(docs(s, dir), "doc_id", "text",
         n = 8, minDocs = 2, wins = Some(windowRowsShared(s, dir)))
         .persist())
@@ -615,61 +554,39 @@ object NorthStarQueries {
     * metrics + contaminated-id set), persisted per sf dir — what a
     * production refresh reads from storage instead of recomputing; the
     * corpus_refresh_e2e row carries unchanged docs from here and pays
-    * fresh work ONLY for the diff's added/changed set. Released by
-    * [[clearTextCaches]]. */
-  private val refreshPriorCache =
-    new java.util.concurrent.ConcurrentHashMap[String, CorpusOps.CrawlArtifacts]()
-
+    * fresh work ONLY for the diff's added/changed set. */
   private def refreshPrior(s: SparkSession, dir: String): CorpusOps.CrawlArtifacts =
-    refreshPriorCache.computeIfAbsent(dir, _ =>
+    Fixtures.memo(Fixtures.Text, s, dir, "refreshPrior")(
       CorpusOps.crawlArtifacts(diffOldDocs(s, dir), "doc_id", "text",
-        refreshEval(s, dir)).persist())
+        refreshEval(s, dir)).persist())(_.unpersist())
 
   /** Fitted BM25 corpus statistics per sf dir (doc-frequency table +
     * the two integer scalars), persisted: the fit-once side of the
-    * search fit/probe split. Released by [[clearTextCaches]]. */
-  private val bm25StatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Search.Bm25Stats]()
-
+    * search fit/probe split. */
   private def bm25Stats(s: SparkSession, dir: String): Search.Bm25Stats =
-    bm25StatsCache.computeIfAbsent(dir, _ =>
-      Search.bm25Fit(docs(s, dir), "doc_id", "text").persist())
+    Fixtures.memo(Fixtures.Text, s, dir, "bm25Stats")(
+      Search.bm25Fit(docs(s, dir), "doc_id", "text").persist())(_.unpersist())
 
   /** On-disk copy of [[bm25Stats]] per sf dir — the search analog of
     * [[savedIndexDir]], for the `search_bm25_saved` cold-start row
-    * (a fresh serving job loads the stats tree from storage); swept by
-    * [[clearTextCaches]] + the shutdown hook. */
-  private val savedBm25DirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * (a fresh serving job loads the stats tree from storage). */
   private def savedBm25Dir(s: SparkSession, dir: String): String =
-    savedBm25DirCache.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-bm25-stats").toString
-      bm25Stats(s, dir).save(out)
-      out
-    })
+    Fixtures.tree(Fixtures.Text, s, dir, "savedBm25Dir", "graft-bm25-stats")(out =>
+      bm25Stats(s, dir).save(out))
 
   /** Boilerplate LINES relation per sf dir (doc_id, source, line_no,
     * line, line_hash), persisted: the one explode of the family, shared
     * by census, stats and scrub (the window family's r13/r14 lesson
-    * applied from day one). Released by [[clearTextCaches]]. */
-  private val lineRowsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+    * applied from day one). */
   private def lineRowsShared(s: SparkSession, dir: String): DataFrame =
-    lineRowsCache.computeIfAbsent(dir, _ =>
+    Fixtures.frame(Fixtures.Text, s, dir, "lineRowsShared")(
       Dedup.lineRelation(linedDocs(s, dir), "doc_id", "text", "source")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Per-source boilerplate census (minDocs=3) per sf dir, persisted and
-    * derived from the shared [[lineRowsShared]] explode. Released by
-    * [[clearTextCaches]]. */
-  private val boilerCensusCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+    * derived from the shared [[lineRowsShared]] explode. */
   private def boilerCensus(s: SparkSession, dir: String): DataFrame =
-    boilerCensusCache.computeIfAbsent(dir, _ =>
+    Fixtures.frame(Fixtures.Text, s, dir, "boilerCensus")(
       Dedup.boilerplateLines(linedDocs(s, dir), "doc_id", "text", "source",
         minDocs = 3, lines = Some(lineRowsShared(s, dir)))
         .persist())
@@ -678,14 +595,11 @@ object NorthStarQueries {
     * persisted per sf dir: the fit side of the fit/probe split —
     * `dedup_incr_index_build` pays its materialization once (first in
     * bench order), `dedup_incremental` measures only the batch probe. */
-  private val corpusIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.CorpusIndex]()
-
   private def corpusIndex(s: SparkSession, dir: String): Dedup.CorpusIndex =
-    corpusIndexCache.computeIfAbsent(dir, _ =>
+    Fixtures.memo(Fixtures.Dedup, s, dir, "corpusIndex")(
       Dedup.buildCorpusIndex(
         docs(s, dir).filter(col("doc_id") % 5 =!= 0), "doc_id", "text")
-        .persist())
+        .persist())(_.unpersist())
 
   /** The FULL-corpus index (all docs — the old crawl of the two-crawl
     * fixture), persisted per sf dir: the fit side the removal/refresh
@@ -695,63 +609,20 @@ object NorthStarQueries {
     * O(changed+removed) incremental work that is those operators' cost
     * claim), not a from-scratch fit that would mask it. The build pays
     * once in the first toucher's cold rep (retract, alphabetically
-    * first), the corpusIndex pattern. Released by
-    * [[clearDedupCaches]]. */
-  private val fullIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.CorpusIndex]()
-
+    * first), the corpusIndex pattern. */
   private def fullCorpusIndex(s: SparkSession, dir: String): Dedup.CorpusIndex =
-    fullIndexCache.computeIfAbsent(dir, _ =>
-      Dedup.buildCorpusIndex(docs(s, dir), "doc_id", "text").persist())
+    Fixtures.memo(Fixtures.Dedup, s, dir, "fullCorpusIndex")(
+      Dedup.buildCorpusIndex(docs(s, dir), "doc_id", "text").persist())(
+      _.unpersist())
 
   /** On-disk copy of [[corpusIndex]] per sf dir (saved once per session),
     * for the production COLD-START path: a fresh ingest job loads the
     * persisted index from storage — no fitting session, no session cache.
     * The `dedup_incremental_saved` row probes through [[Dedup
-    * .loadCorpusIndex]] over this tree; swept by [[clearDedupCaches]]. */
-  private val savedIndexDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The saved-index temp trees are normally swept by
-    * [[clearDedupCaches]]; a bench/verify JVM that dies mid-run would
-    * leak them in /tmp, so a shutdown hook sweeps whatever is still
-    * registered at exit (idempotent with the normal sweep — the caches
-    * are cleared as they are deleted). */
-  private val tempDirShutdownHook: Unit =
-    java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      savedIndexDirCache.values.forEach(d =>
-        graft.util.Util.deleteRecursively(new java.io.File(d)))
-      savedEmbIndexDirCache.values.forEach(d =>
-        graft.util.Util.deleteRecursively(new java.io.File(d)))
-      savedBm25DirCache.values.forEach(d =>
-        graft.util.Util.deleteRecursively(new java.io.File(d)))
-      upsertSinkDirs.forEach(d =>
-        graft.util.Util.deleteRecursively(new java.io.File(d)))
-    }))
-
+    * .loadCorpusIndex]] over this tree. */
   private def savedIndexDir(s: SparkSession, dir: String): String =
-    savedIndexDirCache.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-corpus-index").toString
-      Dedup.saveCorpusIndex(corpusIndex(s, dir), out)
-      out
-    })
-
-  /** Upsert sink trees written by `dedup_upsert_fold` — one FRESH tree
-    * per rep because the fold stamps its `_FOLDED_UPSERT` marker into
-    * the consumed tree (a second fold of the same tree refuses by
-    * contract). Registered here so the dedup-cache sweep and the
-    * shutdown hook reclaim them; the trees are O(amended docs), not
-    * corpus-sized. */
-  private val upsertSinkDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  private def newUpsertSink(): String = {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-upsert-sink").toString
-    upsertSinkDirs.add(out)
-    out
-  }
+    Fixtures.tree(Fixtures.Dedup, s, dir, "savedIndexDir", "graft-corpus-index")(out =>
+      Dedup.saveCorpusIndex(corpusIndex(s, dir), out))
 
   /** The pre-upsert serving state for `dedup_upsert_fold`, per sf dir:
     * the skinny amend-image relation (doc_id, new text, partner stale
@@ -760,13 +631,10 @@ object NorthStarQueries {
     * in), both persisted. A serving deployment LOADS its index rather
     * than manufacturing it, so the manufacture pays once in the first
     * toucher's cold rep (the corpusIndex pattern) and warm reps price
-    * the streaming fold itself. Released by [[clearDedupCaches]]. */
-  private val upsertFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, Dedup.CorpusIndex)]()
-
+    * the streaming fold itself. */
   private def upsertFixture(s: SparkSession,
                             dir: String): (DataFrame, Dedup.CorpusIndex) =
-    upsertFixtureCache.computeIfAbsent(dir, _ => {
+    Fixtures.memo(Fixtures.Dedup, s, dir, "upsertFixture") {
       val d = docs(s, dir)
       val partners = d.filter(col("doc_id") % 5 === 0)
         .select(col("doc_id").as("p_id"), col("text").as("p_text"))
@@ -792,119 +660,14 @@ object NorthStarQueries {
       Seq(oldIdx.postings, oldIdx.shingles, oldIdx.dfCounts,
         oldIdx.docStats).foreach(df => { df.count(); () })
       (amend, oldIdx)
-    })
+    } { case (a, ix) => a.unpersist(false); ix.unpersist() }
 
   /** On-disk copy of [[embIndex]] per sf dir — the embedding analog of
     * [[savedIndexDir]], for the `dedup_embedding_incr_saved` cold-start
-    * row; swept by [[clearDedupCaches]]. */
-  private val savedEmbIndexDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * row. */
   private def savedEmbIndexDir(s: SparkSession, dir: String): String =
-    savedEmbIndexDirCache.computeIfAbsent(dir, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-emb-index").toString
-      Dedup.saveEmbeddingIndex(embIndex(s, dir), out)
-      out
-    })
-
-  /** Release the ~10 persisted relations the dedup_* rows pin (exact
-    * pairs, LSH candidate sides, dup groups, corpus/embedding indexes).
-    * Scoped so a phased consumer (Bench) can drop them the moment the
-    * dedup family finishes instead of letting them pressure every later
-    * query's heap — round 7 measured untouched relational rows 3-6x
-    * slower under the always-pinned regime. */
-  /** Release the text_window_* rows' pinned state (the shared exploded
-    * window relation + census). Scoped separately from the dedup caches
-    * so Bench can drop them when the TEXT phase finishes — pinning them
-    * through the whole dedup family put every dedup row under avoidable
-    * executor-storage pressure (r13's unexplained shared-subset drift's
-    * prime suspect was exactly this class of cross-phase pinning). */
-  def clearTextCaches(): Unit = {
-    refreshPriorCache.values.forEach(a => a.unpersist())
-    refreshPriorCache.clear()
-    bm25StatsCache.values.forEach(ix => ix.unpersist())
-    bm25StatsCache.clear()
-    savedBm25DirCache.values.forEach(d =>
-      graft.util.Util.deleteRecursively(new java.io.File(d)))
-    savedBm25DirCache.clear()
-    windowRowsCache.values.forEach(df => { df.unpersist(false); () })
-    windowRowsCache.clear()
-    windowCensusCache.values.forEach(df => { df.unpersist(false); () })
-    windowCensusCache.clear()
-    lineRowsCache.values.forEach(df => { df.unpersist(false); () })
-    lineRowsCache.clear()
-    boilerCensusCache.values.forEach(df => { df.unpersist(false); () })
-    boilerCensusCache.clear()
-  }
-
-  def clearDedupCaches(): Unit = {
-    exactPairsCache.values.forEach(df => { df.unpersist(false); () })
-    exactPairsCache.clear()
-    simPairsCache.values.forEach(df => { df.unpersist(false); () })
-    simPairsCache.clear()
-    minhashPairsCache.values.forEach(df => { df.unpersist(false); () })
-    minhashPairsCache.clear()
-    simRawPairsCache.values.forEach(df => { df.unpersist(false); () })
-    simRawPairsCache.clear()
-    dupGroupsCache.values.forEach(df => { df.unpersist(false); () })
-    dupGroupsCache.clear()
-    mhGroupsCache.values.forEach(df => { df.unpersist(false); () })
-    mhGroupsCache.clear()
-    shGroupsCache.values.forEach(df => { df.unpersist(false); () })
-    shGroupsCache.clear()
-    embGroupsCache.values.forEach(df => { df.unpersist(false); () })
-    embGroupsCache.clear()
-    embIndexCache.values.forEach(ix => ix.unpersist())
-    embIndexCache.clear()
-    corpusIndexCache.values.forEach(ix => ix.unpersist())
-    corpusIndexCache.clear()
-    fullIndexCache.values.forEach(ix => ix.unpersist())
-    fullIndexCache.clear()
-    savedIndexDirCache.values.forEach(d =>
-      graft.util.Util.deleteRecursively(new java.io.File(d)))
-    savedIndexDirCache.clear()
-    savedEmbIndexDirCache.values.forEach(d =>
-      graft.util.Util.deleteRecursively(new java.io.File(d)))
-    savedEmbIndexDirCache.clear()
-    upsertSinkDirs.forEach(d =>
-      graft.util.Util.deleteRecursively(new java.io.File(d)))
-    upsertSinkDirs.clear()
-    upsertFixtureCache.values.forEach { case (a, ix) =>
-      a.unpersist(false); ix.unpersist() }
-    upsertFixtureCache.clear()
-  }
-
-  /** Release the sim_* rows' pinned state (the fitted IVF/PQ/IVF-PQ
-    * indexes). */
-  def clearSimCaches(): Unit = {
-    ivfIndexCache.values.forEach(ix => { ix.unpersist(); () })
-    ivfIndexCache.clear()
-    pqIndexCache.values.forEach(ix => { ix.unpersist(); () })
-    pqIndexCache.clear()
-    ivfPqIndexCache.values.forEach(ix => { ix.unpersist(); () })
-    ivfPqIndexCache.clear()
-    ivfNetFixtureCache.values.forEach { case (a, u, r, ix) =>
-      a.unpersist(false); u.unpersist(false); r.unpersist(false)
-      ix.unpersist(); () }
-    ivfNetFixtureCache.clear()
-    bruteTruthCache.values.forEach(df => { df.unpersist(false); () })
-    bruteTruthCache.clear()
-    vecSinkDirs.forEach(d =>
-      graft.util.Util.deleteRecursively(new java.io.File(d)))
-    vecSinkDirs.clear()
-  }
-
-  /** Release every session cache this object pins (exact pairs, simhash
-    * candidates, dup groups, IVF indexes). The bench/verify mains call
-    * this before stopping the session; a LONG-LIVED service embedding
-    * these queries must call it when a corpus version is retired, or
-    * executor storage leaks one persisted relation per sf dir forever. */
-  def clearCaches(): Unit = {
-    clearTextCaches()
-    clearDedupCaches()
-    clearSimCaches()
-  }
+    Fixtures.tree(Fixtures.Dedup, s, dir, "savedEmbIndexDir", "graft-emb-index")(out =>
+      Dedup.saveEmbeddingIndex(embIndex(s, dir), out))
 
   /** The incremental-embedding-dedup probe batch, shared by the cached
     * and saved-index rows: planted near-copies of every 10th vector
@@ -1298,11 +1061,11 @@ object NorthStarQueries {
     // reps price the streaming fold itself — sink write + remove +
     // extend + probe, the O(amended) contract. The sink is a fresh
     // temp tree per rep (the fold stamps `_FOLDED_UPSERT` into it; a
-    // consumed tree refuses re-folding by contract), registered for
-    // the dedup-cache sweep.
+    // consumed tree refuses re-folding by contract), deleted when the
+    // dedup phase is released.
     "dedup_upsert_fold" -> ((s, dir) => {
       val (amend, oldIdx) = upsertFixture(s, dir)
-      val sink = newUpsertSink()
+      val sink = Fixtures.tempDir(Fixtures.Dedup, "graft-upsert-sink")
       amend.select(col("doc_id"), col("text"),
           col("p_text").as("old_text"))
         .write.mode("overwrite").parquet(s"$sink/batch=0")
@@ -1828,7 +1591,8 @@ object NorthStarQueries {
     // marker contract).
     "sim_ivf_net_maintenance" -> ((s, dir) => {
       val (accepts, upserts, retracts, oldIdx) = ivfNetFixture(s, dir)
-      val (a, u, r) = (newVecSink(), newVecSink(), newVecSink())
+      def sink(): String = Fixtures.tempDir(Fixtures.Sim, "graft-vec-sink")
+      val (a, u, r) = (sink(), sink(), sink())
       accepts.write.mode("overwrite").parquet(s"$a/batch=0")
       retracts.write.mode("overwrite").parquet(s"$r/batch=0")
       upserts.write.mode("overwrite").parquet(s"$u/batch=1")
@@ -2222,7 +1986,7 @@ object NorthStarQueries {
     // fence either. The oracle recomputes the components with the same
     // recursive CTE as dedup_near_groups, then the same rep-keyed split.
     // Named dedup_ (not text_) so Bench runs it in the DEDUP phase: it
-    // pins dupGroups, whose lifetime is clearDedupCaches — under the
+    // pins dupGroups, a dedup-phase fixture — under the
     // text_ prefix it cross-phase-pinned that relation through the text
     // family (ADVICE r15).
     "dedup_split_leakage_near" -> ((s, dir) =>
