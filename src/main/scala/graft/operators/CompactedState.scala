@@ -1,8 +1,11 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.sources.ParquetMeta
 
 /**
  * Incrementally-materialized current state (SURVEY §7.4's 100 TB posture):
@@ -64,22 +67,19 @@ object CompactedState {
         }.toMap
   }
 
-  /** The current compacted state (None before the first upsert).
-    * `mergeSchema` so a column added by a later batch (O6 additive
-    * evolution, which `upsert` accepts) survives the read: without it the
-    * footer-sampled schema can silently drop columns absent from whichever
-    * file Spark happens to sample. */
+  /** The current compacted state (None before the first upsert). Read
+    * through the footer cache ([[graft.sources.ParquetMeta.read]]): the
+    * schema is every current version file's footer schema merged, so a
+    * column added by a later batch (O6 additive evolution, which `upsert`
+    * accepts) survives the read — the `mergeSchema` result, with no
+    * schema-inference job. A single sampled footer could silently drop
+    * columns absent from whichever file it sampled. */
   def read(spark: SparkSession, dir: String): Option[DataFrame] = {
     val paths = latestVersions(spark, dir).values.map(_._2).toSeq
     if (paths.isEmpty) None
-    else Some(spark.read.option("mergeSchema", "true").parquet(paths: _*))
+    else Some(ParquetMeta.read(spark, paths: _*))
   }
 
-  /** Persisted layout contract: `numBuckets` determines which bucket dir a
-    * key hashes into, so changing it between runs re-buckets keys and
-    * resurrects stale rows (the old bucket's copy is no longer shadowed).
-    * First upsert writes `dir/_meta`; every later upsert fails fast on a
-    * mismatch instead of silently corrupting state. */
   /** The persisted `numBuckets` of an existing layout (None before the
     * first upsert or for pre-_meta layouts). A present-but-unparseable
     * `_meta` gets its OWN error, distinct from a genuine bucket-count
@@ -106,6 +106,11 @@ object CompactedState {
     }
   }
 
+  /** Persisted layout contract: `numBuckets` determines which bucket dir a
+    * key hashes into, so changing it between runs re-buckets keys and
+    * resurrects stale rows (the old bucket's copy is no longer shadowed).
+    * First upsert writes `dir/_meta`; every later upsert fails fast on a
+    * mismatch instead of silently corrupting state. */
   private def checkOrWriteMeta(f: FileSystem, dir: String, conf: Config): Unit = {
     val meta = new Path(s"$dir/_meta")
     def check(): Unit = {
@@ -164,8 +169,7 @@ object CompactedState {
       val merged0 =
         if (existingPaths.isEmpty) cachedBatch
         else cachedBatch.unionByName(
-          spark.read.option("mergeSchema", "true").parquet(existingPaths: _*),
-          allowMissingColumns = true)
+          ParquetMeta.read(spark, existingPaths: _*), allowMissingColumns = true)
       val merged = CurrentState
         .latestByKeyAgg(merged0, conf.keyCols, conf.orderCol, conf.tiebreakCols)
         .withColumn("__b", bucketExpr(conf))
@@ -222,13 +226,15 @@ object CompactedState {
     val keyLits = keyValues.zipWithIndex.map { case (v, i) =>
       keyTypes.lift(i).map(lit(v).cast).getOrElse(lit(v))
     }
-    // same hash as bucketExpr, evaluated on a one-row local plan
-    val bucket = spark.range(1)
+    // same hash as bucketExpr, over a one-row local relation: the
+    // optimizer folds it to a constant, so the probe starts no job
+    val oneRow = spark.createDataFrame(
+      java.util.Collections.singletonList(Row.empty), StructType(Nil))
+    val bucket = oneRow
       .select(pmod(xxhash64(keyLits: _*), lit(conf.numBuckets.toLong)))
       .head().getLong(0)
     latestVersions(spark, dir).get(bucket).map { case (_, path) =>
-      conf.keyCols.zip(keyLits).foldLeft(
-        spark.read.option("mergeSchema", "true").parquet(path)) {
+      conf.keyCols.zip(keyLits).foldLeft(ParquetMeta.read(spark, path)) {
         case (df, (c, v)) => df.filter(col(c) === v)
       }
     }
@@ -252,7 +258,10 @@ object CompactedState {
           .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
           .sortBy(-_.getPath.getName.stripPrefix("v=").toLong)
           .drop(retain)
-          .foreach(s => f.delete(s.getPath, true))
+          .foreach { s =>
+            f.delete(s.getPath, true)
+            ParquetMeta.forget(s.getPath.toString)
+          }
       }
   }
 }

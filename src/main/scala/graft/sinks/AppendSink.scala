@@ -86,9 +86,11 @@ object AppendSink {
   def appendEvolved(df: DataFrame, basePath: String, table: String): String =
     appendSnapshot(df, basePath, table, expected = None)
 
-  /** Read the snapshot log with per-file schema reconciliation. */
+  /** Read the snapshot log with per-file schema reconciliation: the
+    * footer cache merges every batch file's schema (the `mergeSchema`
+    * result, `snapshot_dt` partition column included) with no
+    * schema-inference job. */
   def readLog(spark: org.apache.spark.sql.SparkSession, basePath: String,
               table: String): DataFrame =
-    spark.read.option("mergeSchema", "true")
-      .parquet(s"$basePath/${cdcTableName(table)}")
+    graft.sources.ParquetMeta.read(spark, s"$basePath/${cdcTableName(table)}")
 }

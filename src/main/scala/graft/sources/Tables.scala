@@ -10,8 +10,19 @@ import org.apache.spark.sql.types._
  *
  * The reference discovers source tables from the PostgreSQL catalog
  * (`/root/reference/postgres.go:201-269`); in the file-backed harness the
- * "catalog" is a directory of parquet files. This loader normalizes physical
- * quirks so the rest of the engine sees clean Spark types:
+ * "catalog" is a directory of parquet files, and the reference's
+ * introspect-once becomes the footer cache: every load reads through
+ * [[ParquetMeta.read]], which resolves the schema from the files' footers
+ * on the driver, so a load (or a windowed capture load) starts no
+ * schema-inference job. Where a table's files agree — every harness table,
+ * and every source `perfbench`'s generator lands file by file — that
+ * schema is exactly the one `spark.read.parquet` infers. Where they
+ * disagree, Spark would take one arbitrary file's schema; the footer read
+ * merges all of them instead, a superset of any one file's, or a loud
+ * error on incompatible types.
+ *
+ * This loader also normalizes physical quirks so the rest of the engine
+ * sees clean Spark types:
  *
  *  - the `events.ts` NMS column has shipped under THREE physical encodings
  *    across harness generations — parquet `TIMESTAMP(NANOS)` (which Spark
@@ -50,7 +61,7 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val raw = ParquetMeta.read(spark, s"$dir/$name.parquet")
     tsColumns.getOrElse(name, Nil).foldLeft(raw)(normalize)
   }
 
@@ -87,7 +98,7 @@ object Tables {
       df.filter(col(tsCol) > bound(lo) && col(tsCol) <= bound(hi))
     } else {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = ParquetMeta.read(spark, s"$dir/$name.parquet")
       // Window the RAW column in its own physical type — this filter sits
       // below the normalizing projection, so it reaches the scan.
       val pruned: DataFrame = raw.schema(tsCol).dataType match {

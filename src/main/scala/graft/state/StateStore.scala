@@ -2,7 +2,7 @@ package graft.state
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SaveMode, SparkSession}
 
 /**
  * Per-table CDC state, mirroring the reference's SQLite `nmstables` row
@@ -115,40 +115,44 @@ final class StateStore(spark: SparkSession, dir: String) {
   /** Reads materialize EAGERLY under the catalog lock: a lazy Dataset
     * would list/scan the parquet at action time, racing `write`'s
     * rename swap and observing a mid-swap catalog. Served from the
-    * JVM-wide memo when the last publish's copy is still current (zero
-    * Spark jobs); the catalog is metadata-tiny, so the fallback collect
-    * is O(tables). */
-  def read(): Dataset[TableState] = lock.synchronized {
+    * JVM-wide memo when the last publish's copy is still current; the
+    * returned Dataset is a local relation over the memo rows, so its
+    * `collect()` is a local scan, not a Spark job. On a memo miss the
+    * catalog parquet is read with the `TableState` encoder's schema (no
+    * schema-inference job) and collected, O(tables). */
+  def read(): Dataset[TableState] = spark.createDataset(rows())
+
+  private def rows(): IndexedSeq[TableState] = lock.synchronized {
     recoverAside()
     val f = new java.io.File(path)
-    if (!f.exists()) spark.emptyDataset[TableState]
+    if (!f.exists()) IndexedSeq.empty
     else {
       val token = StateStore.catalogToken(f)
       val hit = StateStore.catalogMemo.get(absPath)
-      val rows =
-        if (hit != null && hit.mtime == token) hit.rows
-        else {
-          catalogScans.incrementAndGet()
-          val scanned =
-            spark.read.parquet(path).as[TableState].collect().toIndexedSeq
-          StateStore.catalogMemo.put(absPath,
-            StateStore.CachedCatalog(token, scanned))
-          scanned
-        }
-      spark.createDataset(rows)
+      if (hit != null && hit.mtime == token) hit.rows
+      else {
+        catalogScans.incrementAndGet()
+        val scanned = spark.read.schema(implicitly[Encoder[TableState]].schema)
+          .parquet(path).as[TableState].collect().toIndexedSeq
+        StateStore.catalogMemo.put(absPath,
+          StateStore.CachedCatalog(token, scanned))
+        scanned
+      }
     }
   }
 
+  /** The rows one DSN owns, filtered before the Dataset is built, so the
+    * engine's per-tick `readForDsn(dsn).collect()` starts no job. */
   def readForDsn(dsn: Int): Dataset[TableState] =
     // F4 — DSN ownership filter (`/root/reference/cdc.go:51-59`)
-    read().filter(_.dsn == dsn)
+    spark.createDataset(rows().filter(_.dsn == dsn))
 
   /** T4 — upsert by (dsn, name), replacing manual SELECT-then-INSERT/UPDATE
     * (`/root/reference/nmsdb.go:126-158`). */
   def upsert(states: Seq[TableState]): Unit = lock.synchronized {
     val keys = states.map(s => (s.dsn, s.name)).toSet
-    val kept = read().collect().filterNot(s => keys.contains((s.dsn, s.name)))
-    write(kept.toSeq ++ states)
+    val kept = rows().filterNot(s => keys.contains((s.dsn, s.name)))
+    write(kept ++ states)
   }
 
   /** T3 — watermark commit for ONE table, called only after the sink
@@ -168,7 +172,7 @@ final class StateStore(spark: SparkSession, dir: String) {
     if (commits.isEmpty) return
     lock.synchronized {
       val byKey = commits.map(c => (c.dsn, c.name) -> c).toMap
-      val updated = read().collect().toSeq.map { s =>
+      val updated = rows().map { s =>
         byKey.get((s.dsn, s.name)) match {
           case Some(c) => s.copy(nms = c.newNms, lastRowCount = c.rowCount,
             lastShovedOn = Some(c.shovedOn))

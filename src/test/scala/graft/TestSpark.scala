@@ -26,4 +26,23 @@ object TestSpark {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Run `body`; return its result and the call site (`collect at
+    * CdcEngine.scala:153`, the name of the job's final stage) of every
+    * Spark job it started. */
+  def jobSites[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        sites.add(js.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse(""))
+    }
+    org.apache.spark.ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusAccess.drain(sc)
+      (out, sites.toArray(Array.empty[String]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -142,26 +142,13 @@ class CdcEngineSpec extends AnyFunSuite {
     val eng = mkEngine()
     eng.seed(Seq(("events", "ts", Some("event_id"))))
 
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val cs = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("")
-        sites.add(cs)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val res = eng.tick(Instant.parse("2024-02-01T00:00:00Z"))
-      assert(res.map(_.rowsCaptured).sum > 0, "tick captured rows")
-      Thread.sleep(1000) // listener bus is async; let job-start events drain
-      val jobs = sites.toArray(Array.empty[String]).toSeq
-      assert(jobs.nonEmpty, "the capture write ran as a Spark job")
-      assert(!jobs.exists(_.startsWith("count at")),
-        s"tick must not run count() actions; saw: $jobs")
-      // and the observed count matches what actually landed in the log
-      assert(eng.cdcLog("events").count() == res.map(_.rowsCaptured).sum)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (res, jobs) = TestSpark.jobSites(eng.tick(Instant.parse("2024-02-01T00:00:00Z")))
+    assert(res.map(_.rowsCaptured).sum > 0, "tick captured rows")
+    assert(jobs.nonEmpty, "the capture write ran as a Spark job")
+    assert(!jobs.exists(_.startsWith("count at")),
+      s"tick must not run count() actions; saw: $jobs")
+    // and the observed count matches what actually landed in the log
+    assert(eng.cdcLog("events").count() == res.map(_.rowsCaptured).sum)
   }
 
   test("per-batch MERGE compaction tracks the recompute view exactly") {
@@ -316,9 +303,12 @@ class CdcEngineSpec extends AnyFunSuite {
     // caller-side type drift: an Int for the Long pk must coerce to the
     // column's stored type before bucket hashing (an uncoerced Int hashes
     // to a DIFFERENT bucket and silently returns nothing)
-    val viaInt = eng.currentStateLookup("events", some.head.toInt)
+    val (viaInt, lookupJobs) =
+      TestSpark.jobSites(eng.currentStateLookup("events", some.head.toInt))
     assert(viaInt.nonEmpty && viaInt.get.count() == 1L,
       "Int-typed key for a Long pk must still find the row")
+    // hashing the key and resolving the bucket's schema are driver-local
+    assert(lookupJobs.isEmpty, s"building a lookup must start no job: $lookupJobs")
 
     // a wrong bucket count must fail fast, not silently miss
     val bad = intercept[IllegalArgumentException] {
