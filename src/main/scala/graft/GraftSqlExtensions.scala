@@ -67,7 +67,9 @@ object GraftSqlExtensions {
 
   /** The one function table both injection paths share. */
   val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    // text analysis (composed Column kernels — codegen'd builtins)
+    // text analysis (Column kernels: native Catalyst expressions for the
+    // tokenizer, BPE count, lowercase and language ID, builtins for the
+    // rest; builtin higher-order lambdas run interpreted)
     lift("graft_tokens")(TextFunctions.tokens),
     lift("graft_lang_id")(TextFunctions.langId),
     lift("graft_quality_score")(TextFunctions.qualityScore),

@@ -306,13 +306,15 @@ object CorpusOps {
     * (re-tokenizes) the kernels once per metric reference. */
   def curationMetrics(df: DataFrame, idCol: Column,
                       textCol: Column): DataFrame =
-    // `__g2` staged beside `__toks` (r19; the text_rep_ngrams `__g2`
-    // lesson applied to the curation battery): dupNgramFrac +
-    // topNgramCharFrac referencing the tokenNgrams EXPRESSION rebuilt
-    // the 2-gram array ~5x per row (interpreted higher-order kernels
-    // share no subexpressions); the staged column is built once and
-    // both kernels read the attribute. pipeline_curate 2.7 -> 1.6 s,
-    // pipeline_funnel 2.5 -> 1.2 s min-warm at sf0.1, bit-identical.
+    // `__toks` and `__g2` are native kernels (Tokens, TokenNgrams), but
+    // staging them still pays: topNgramCharFracOfGrams folds both with
+    // interpreted `aggregate` lambdas (the token-char total and the
+    // run-length scan over the sorted grams), which share no
+    // subexpressions with the codegen'd projection, so an inlined
+    // array is rebuilt inside every lambda that references it (the
+    // 2-gram array was rebuilt ~5x per row before r19 staged it:
+    // pipeline_curate 2.7 -> 1.6 s, pipeline_funnel 2.5 -> 1.2 s
+    // min-warm at sf0.1, bit-identical).
     df.withColumn("__toks", TextFunctions.tokens(textCol))
       .withColumn("__g2", TextFunctions.tokenNgrams(col("__toks"), 2))
       .select(idCol.as("doc_id"),

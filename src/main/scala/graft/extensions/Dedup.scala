@@ -49,12 +49,15 @@ object Dedup {
     * (32-bit base x 31-bit odd multiplier keeps every permuted product
     * inside a 63-bit long: no overflow under ANSI mode, Spark 4 default.)
     *
-    * IMPORTANT expression-staging note: higher-order-function lambdas are
-    * interpreted (no whole-stage codegen, no common-subexpression
-    * elimination), so this array MUST be materialized as its own column
-    * and the permutations computed over that column reference — inlining
-    * it into each of the `numHashes` permutation expressions re-tokenizes
-    * and re-hashes the text per permutation (measured 30x slower). */
+    * IMPORTANT expression-staging note: the tokenizer is a native
+    * kernel, but this array is still built by interpreted higher-order
+    * lambdas (no whole-stage codegen, no common-subexpression
+    * elimination): `shingles`' `transform` over a `sequence` and the
+    * `xxhash64` `transform` here. Each of the `numHashes` permutations
+    * in [[minhashSignature]] is another `transform`, so the array MUST
+    * be materialized as its own column and the permutations computed
+    * over that column reference — inlining it re-shingles and re-hashes
+    * the text per permutation (measured 30x slower). */
   def minhashBase(text: Column, shingleK: Int = 3): Column =
     transform(TextFunctions.shingles(text, shingleK),
       s => xxhash64(s).bitwiseAND(lit(0xFFFFFFFFL)))
@@ -190,7 +193,9 @@ object Dedup {
   // -------------------------------------------------------------- SimHash
 
   /** Token-hash array for SimHash — materialize as a column before calling
-    * `simhash64` (same expression-staging rule as `minhashBase`). */
+    * `simhash64`: the tokenizer is native, but the `xxhash64` `transform`
+    * here and the 64 bit-vote `filter` lambdas of `simhash64` are
+    * interpreted (same expression-staging rule as `minhashBase`). */
   def tokenHashes(text: Column): Column =
     transform(TextFunctions.tokens(text), t => xxhash64(t))
 

@@ -183,7 +183,7 @@ object Search {
     * (dl, distinct terms) per document. */
   private def bm25PerDoc(df: DataFrame, textCol: String): DataFrame =
     // staged `__toks`: dl and the distinct-term set share ONE
-    // tokenization per row (interpreted higher-order kernels get no CSE)
+    // tokenization per row
     df.withColumn("__toks", TextFunctions.tokens(col(textCol)))
       .select(
         greatest(size(col("__toks")), lit(0)).cast("long").as("dl"),

@@ -157,12 +157,169 @@ object HashKernels {
 }
 
 /** Static kernels for [[TextExpressions]] — same rationale as
-  * [[HashKernels]]: the Column-composed forms walk the token array once
-  * per profile through the expression interpreter; these score all
-  * profiles in one pass per row. */
+  * [[HashKernels]]: the Column-composed forms run interpreted lambdas
+  * (one per split piece for the tokenizer, one per token per profile
+  * for language ID); these do each job in one pass per row. */
 object TextKernels {
 
+  import org.apache.spark.unsafe.Platform
   import org.apache.spark.unsafe.types.UTF8String
+
+  // ---- tokenizer -----------------------------------------------------
+
+  /** `Character.getType` categories of Java regex `\p{L}` and `\p{N}`
+    * (Lu Ll Lt Lm Lo, Nd Nl No): the token alphabet of `tokens`. */
+  private val LetterOrNumber: Int =
+    (1 << Character.UPPERCASE_LETTER) | (1 << Character.LOWERCASE_LETTER) |
+      (1 << Character.TITLECASE_LETTER) | (1 << Character.MODIFIER_LETTER) |
+      (1 << Character.OTHER_LETTER) | (1 << Character.DECIMAL_DIGIT_NUMBER) |
+      (1 << Character.LETTER_NUMBER) | (1 << Character.OTHER_NUMBER)
+
+  private def isLetterOrNumber(cp: Int): Boolean =
+    ((1 << Character.getType(cp)) & LetterOrNumber) != 0
+
+  private def isAsciiAlnum(b: Byte): Boolean =
+    (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9')
+
+  /** Lowercased text of a NON-ASCII string, exactly as Spark 4.1's
+    * UTF8_BINARY `lower` computes it before re-encoding: ICU case
+    * mappings over the valid (U+FFFD-repaired) string, or the JDK's
+    * `String.toLowerCase`. Neither path touches the collation case
+    * tables `CollationAwareUTF8String` builds on first use. */
+  private def lowerNonAscii(s: UTF8String, icu: Boolean): String =
+    if (icu) com.ibm.icu.lang.UCharacter.toLowerCase(s.toValidString)
+    else s.toString.toLowerCase
+
+  /** Spark's UTF8_BINARY `lower`, bit for bit, under
+    * `spark.sql.icu.caseMappings.enabled = icu`. */
+  def lowercase(s: UTF8String, icu: Boolean): UTF8String =
+    if (!icu) s.toLowerCase
+    else if (s.isFullAscii) s.toLowerCaseAscii
+    else UTF8String.fromString(lowerNonAscii(s, icu))
+
+  private val NoStrings = new GenericArrayData(Array.empty[Any])
+
+  /** `filter(split(lower(s), "[^\\p{L}\\p{N}]+"), len > 0)` in one pass:
+    * the maximal runs of letter/number code points of the lowercased
+    * text. ASCII rows are cut and lowercased straight from the bytes. */
+  def tokens(s: UTF8String, icu: Boolean): ArrayData = {
+    val base = s.getBaseObject
+    val start = s.getBaseOffset
+    val end = start + s.numBytes
+    var count = 0
+    var inToken = false
+    var p = start
+    while (p < end) {
+      val b = Platform.getByte(base, p)
+      if (b < 0) return tokensOf(lowerNonAscii(s, icu))
+      val w = isAsciiAlnum(b)
+      if (w && !inToken) count += 1
+      inToken = w
+      p += 1
+    }
+    if (count == 0) return NoStrings
+    val out = new Array[Any](count)
+    var k = 0
+    p = start
+    while (k < count) {
+      while (!isAsciiAlnum(Platform.getByte(base, p))) p += 1
+      var q = p
+      while (q < end && isAsciiAlnum(Platform.getByte(base, q))) q += 1
+      val bytes = new Array[Byte]((q - p).toInt)
+      var i = 0
+      while (i < bytes.length) {
+        val b = Platform.getByte(base, p + i)
+        bytes(i) = if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
+        i += 1
+      }
+      out(k) = UTF8String.fromBytes(bytes)
+      k += 1
+      p = q
+    }
+    new GenericArrayData(out)
+  }
+
+  /** The letter/number code-point runs of an already-lowercased string. */
+  private def tokensOf(s: String): ArrayData = {
+    val out = new java.util.ArrayList[UTF8String]()
+    var from = -1
+    var i = 0
+    while (i < s.length) {
+      val cp = s.codePointAt(i)
+      if (isLetterOrNumber(cp)) { if (from < 0) from = i }
+      else if (from >= 0) { out.add(UTF8String.fromString(s.substring(from, i))); from = -1 }
+      i += Character.charCount(cp)
+    }
+    if (from >= 0) out.add(UTF8String.fromString(s.substring(from)))
+    new GenericArrayData(out.toArray(new Array[UTF8String](0)).asInstanceOf[Array[Any]])
+  }
+
+  private val Space = UTF8String.fromString(" ")
+
+  /** Rolling space-joined `n`-grams of a token array (the composed
+    * `transform(filter(sequence…), concat_ws(" ", slice…))`): one gram per
+    * start position with a full window, none when the array is shorter
+    * than `n` or NULL. NULL elements are skipped in the join
+    * (`UTF8String.concatWs`, the kernel of `concat_ws`). */
+  def tokenNgrams(arr: ArrayData, n: Int): ArrayData = {
+    val m = if (arr == null) 0 else arr.numElements() - (n - 1)
+    if (m <= 0) return NoStrings
+    val window = new Array[UTF8String](n)
+    val out = new Array[Any](m)
+    var i = 0
+    while (i < m) {
+      var j = 0
+      while (j < n) {
+        window(j) = if (arr.isNullAt(i + j)) null else arr.getUTF8String(i + j)
+        j += 1
+      }
+      out(i) = UTF8String.concatWs(Space, window: _*)
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** Java regex of the composed BPE-ish count: a zero-width cut before and
+    * after every code point outside `\p{L}\p{N}`. */
+  private val BpeCut =
+    java.util.regex.Pattern.compile("(?=[^\\p{L}\\p{N}])|(?<=[^\\p{L}\\p{N}])")
+
+  /** `\s` of Java regex (no UNICODE_CHARACTER_CLASS): the ASCII set. */
+  private def isRegexSpace(c: Int): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == 0x0B || c == '\f' || c == '\r'
+
+  /** `size(filter(split(s, BpeCut), rlike("[^\\s]")))`: the pieces that hold
+    * a non-space character. An ASCII row is one pass over the bytes (each
+    * alphanumeric run and each other non-space byte is one piece); other
+    * rows cut the decoded string with the same regex, so the surrogate-
+    * pair quirks of the lookaround split are kept as they are. */
+  def tokenCountBpe(s: UTF8String): Long = {
+    val base = s.getBaseObject
+    val end = s.getBaseOffset + s.numBytes
+    var count = 0L
+    var inRun = false
+    var p = s.getBaseOffset
+    while (p < end) {
+      val b = Platform.getByte(base, p)
+      if (b < 0) return tokenCountBpeOf(s.toString)
+      val w = isAsciiAlnum(b)
+      if (w) { if (!inRun) count += 1 }
+      else if (!isRegexSpace(b)) count += 1
+      inRun = w
+      p += 1
+    }
+    count
+  }
+
+  private def tokenCountBpeOf(s: String): Long = {
+    var count = 0L
+    for (piece <- BpeCut.split(s, -1)) {
+      if (piece.exists(c => !isRegexSpace(c))) count += 1
+    }
+    count
+  }
+
+  // ---- token-array scoring -------------------------------------------
 
   private def toSet(words: Seq[String]): java.util.HashSet[UTF8String] = {
     val s = new java.util.HashSet[UTF8String](words.size * 2)

@@ -9,15 +9,25 @@ import org.apache.spark.sql.types.LongType
  * (north-star extension, SURVEY §2.11): tokenization, language ID,
  * quality scoring, token counting, fingerprinting.
  *
- * Everything here is composed from `org.apache.spark.sql.functions` —
- * whole-stage-codegen'd, no UDFs — so at 100 TB these run as tight
- * per-row loops inside the scan stage with no shuffle and no JVM
- * boundary crossings.
+ * Everything here is a per-row kernel with no UDF and no shuffle: the
+ * tokenizer, n-grams, BPE-ish count, lowercase, language ID and stopword
+ * ratio are native Catalyst expressions ([[TextExpressions]]) that stay
+ * inside whole-stage codegen, and the rest compose builtins. Builtin
+ * higher-order functions (`filter`, `transform`, `aggregate`) are NOT
+ * codegen'd: each lambda runs interpreted (`CodegenFallback`), per
+ * element and with no common-subexpression elimination, so a caller that
+ * feeds one array to several such kernels stages it as its own column.
+ * Each native kernel keeps its composed form as a `*Composed` reference,
+ * pinned to it by `TextFunctionsSpec`.
  */
 object TextFunctions {
 
-  /** Lowercased word tokens (runs of letters/digits). */
-  def tokens(text: Column): Column =
+  /** Lowercased word tokens (runs of letters/digits): one native pass
+    * ([[TextExpressions.Tokens]]). */
+  def tokens(text: Column): Column = TextExpressions.tokens(text)
+
+  /** Builtin-composed reference semantics of [[tokens]]. */
+  private[graft] def tokensComposed(text: Column): Column =
     filter(split(lower(text), "[^\\p{L}\\p{N}]+"), t => length(t) > 0)
 
   /** Whitespace-delimited token count — the cheap estimator (counts
@@ -29,8 +39,12 @@ object TextFunctions {
     * punctuation each count as one token — a deterministic proxy for
     * subword tokenizers when the real vocab isn't available. Whitespace
     * pieces are dropped by a `\s` test (Spark's `trim` strips only ASCII
-    * spaces, which would count tabs/newlines as tokens). */
-  def tokenCountBpe(text: Column): Column =
+    * spaces, which would count tabs/newlines as tokens). One native pass
+    * ([[TextExpressions.TokenCountBpe]]). */
+  def tokenCountBpe(text: Column): Column = TextExpressions.token_count_bpe(text)
+
+  /** Builtin-composed reference semantics of [[tokenCountBpe]]. */
+  private[graft] def tokenCountBpeComposed(text: Column): Column =
     size(filter(split(text, "(?=[^\\p{L}\\p{N}])|(?<=[^\\p{L}\\p{N}])"),
       t => t.rlike("[^\\s]"))).cast(LongType)
 
@@ -64,10 +78,11 @@ object TextFunctions {
     stopwordRatioFromTokens(tokens(text), stopwords)
 
   /** Token-staged variant: pass a PRE-MATERIALIZED tokens column so a
-    * multi-feature pipeline tokenizes each document once (HOF lambdas are
-    * interpreted with no common-subexpression elimination — the same
-    * staging rule as `Dedup.minhashBase`). The default stopword list runs
-    * as a one-pass native kernel; custom lists use the composed form. */
+    * multi-feature pipeline tokenizes each document once. With the
+    * default stopword list this is a native kernel and staging only
+    * saves the repeated tokenize; a custom list runs the composed form,
+    * whose `filter` lambda is interpreted with no common-subexpression
+    * elimination — the same staging rule as `Dedup.minhashBase`. */
   def stopwordRatioFromTokens(t: Column, stopwords: Seq[String] = EnglishStopwords): Column =
     if (stopwords == EnglishStopwords)
       when(size(t) === 0, 0.0).otherwise(
@@ -149,11 +164,16 @@ object TextFunctions {
 
   // --- within-document n-gram repetition (Gopher Rep-n) ---------------
 
-  /** Rolling space-joined n-gram strings over a token array (1-based
-    * starts). Docs shorter than n yield an EMPTY list: the sequence
-    * upper bound is clamped to 1 and the clamped element filtered out,
-    * because sequence(1, nonpositive) would DESCEND. */
-  def tokenNgrams(toks: Column, n: Int): Column =
+  /** Rolling space-joined n-gram strings over a token array: one native
+    * pass ([[TextExpressions.TokenNgrams]]). Docs shorter than n (and a
+    * NULL array) yield an EMPTY list. */
+  def tokenNgrams(toks: Column, n: Int): Column = TextExpressions.token_ngrams(toks, n)
+
+  /** Builtin-composed reference semantics of [[tokenNgrams]] (1-based
+    * starts): the sequence upper bound is clamped to 1 and the clamped
+    * element filtered out, because sequence(1, nonpositive) would
+    * DESCEND. */
+  private[graft] def tokenNgramsComposed(toks: Column, n: Int): Column =
     transform(
       filter(sequence(lit(1), greatest(size(toks) - (n - 1), lit(1))),
         i => i <= size(toks) - (n - 1)),
@@ -167,15 +187,14 @@ object TextFunctions {
   def dupNgramFrac(toks: Column, n: Int): Column =
     dupNgramFracOfGrams(if (n == 1) toks else tokenNgrams(toks, n))
 
-  /** [[dupNgramFrac]] over a PRECOMPUTED gram array. The higher-order
-    * kernels are interpreted with no common-subexpression sharing, so
-    * every textual reference to [[tokenNgrams]] is a full per-row gram
-    * REBUILD — a caller computing several same-n signals (the Rep-n
-    * battery pairs the n=2 duplicate fraction with the n=2 top-gram
-    * coverage) should project the gram array once in a separate
-    * Project (multi-use non-cheap aliases survive CollapseProject, the
-    * same sharing the `__toks` projection already rides) and feed both
-    * kernels from it. */
+  /** [[dupNgramFrac]] over a PRECOMPUTED gram array. The gram array is
+    * built natively, but [[topNgramCharFracOfGrams]] folds it with an
+    * interpreted `aggregate` lambda that shares no subexpressions, so a
+    * caller computing several same-n signals (the Rep-n battery pairs the
+    * n=2 duplicate fraction with the n=2 top-gram coverage) should project
+    * the gram array once in a separate Project (multi-use non-cheap
+    * aliases survive CollapseProject, the same sharing the `__toks`
+    * projection already rides) and feed both kernels from it. */
   def dupNgramFracOfGrams(g: Column): Column =
     when(size(g) === 0, lit(0.0)).otherwise(
       (size(g) - size(array_distinct(g))).cast("double")
@@ -252,13 +271,22 @@ object TextFunctions {
   // --- fingerprinting -------------------------------------------------
 
   /** Normalized content fingerprint: md5 of lowercased text with all
-    * whitespace collapsed — stable under reflow, oracle-reproducible. */
+    * whitespace collapsed — stable under reflow, oracle-reproducible.
+    * Lowercases with the native [[TextExpressions.Lowercase]]. */
   def fingerprintMd5(text: Column): Column =
+    md5(regexp_replace(TextExpressions.lowercase(text), "\\s+", " ").cast("binary"))
+
+  /** Builtin-composed reference semantics of [[fingerprintMd5]]. */
+  private[graft] def fingerprintMd5Composed(text: Column): Column =
     md5(regexp_replace(lower(text), "\\s+", " ").cast("binary"))
 
   /** 64-bit rolling-hash-style fingerprint (xxhash64 over the same
     * normalization) — cheaper join key than the md5 hex string. */
   def fingerprint64(text: Column): Column =
+    xxhash64(regexp_replace(TextExpressions.lowercase(text), "\\s+", " "))
+
+  /** Builtin-composed reference semantics of [[fingerprint64]]. */
+  private[graft] def fingerprint64Composed(text: Column): Column =
     xxhash64(regexp_replace(lower(text), "\\s+", " "))
 
   /** Word k-shingles as strings ("a b c"), the unit for MinHash/Jaccard. */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.extensions.{CorpusOps, Dedup, Multimodal, Search, Similarity}
-import graft.functions.TextFunctions
+import graft.functions.{TextExpressions, TextFunctions}
 import graft.sources.Tables
 
 /**
@@ -105,7 +105,7 @@ object NorthStarQueries {
       col("c_custkey"),
       concat(
         lit("Reach "), col("c_name"), lit(" at "),
-        lower(translate(col("c_name"), "#", ".")), lit("@example.com"),
+        TextExpressions.lowercase(translate(col("c_name"), "#", ".")), lit("@example.com"),
         when(col("c_custkey") % 3 === 0,
           concat(lit(" or call "),
             lpad((col("c_custkey") % 900 + 100).cast("string"), 3, "0"),

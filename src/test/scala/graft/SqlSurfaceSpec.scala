@@ -33,6 +33,30 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(viaSql === viaApi)
   }
 
+  test("graft_tokens / graft_fingerprint in SQL == Spark's lower+split and md5 " +
+      "normalization on adversarial text") {
+    val adversarial = graft.functions.TextFunctionsSpec
+    adversarial.adversarial(spark).createOrReplaceTempView("g_adversarial")
+    for (icu <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.icu.caseMappings.enabled", icu)
+      try {
+        val rows = spark.sql(
+          """SELECT id,
+            |  graft_tokens(t),
+            |  filter(split(lower(t), '[^\\p{L}\\p{N}]+'), x -> length(x) > 0),
+            |  graft_fingerprint(t),
+            |  md5(CAST(regexp_replace(lower(t), '\\s+', ' ') AS BINARY))
+            |FROM g_adversarial""".stripMargin).collect()
+        assert(rows.length == adversarial.size)
+        for (r <- rows) {
+          val what = s"icu=$icu row ${r.getInt(0)} (${adversarial.describe(r.getInt(0))})"
+          assert(r.get(1) == r.get(2), s"graft_tokens differs on $what")
+          assert(r.get(3) == r.get(4), s"graft_fingerprint differs on $what")
+        }
+      } finally spark.conf.unset("spark.sql.icu.caseMappings.enabled")
+    }
+  }
+
   test("text_langid through pure SQL == the oracle-pinned DataFrame query") {
     viewDocs()
     val viaSql = spark.sql(

@@ -35,6 +35,11 @@ class PlanShapeSpec extends AnyFunSuite {
   private def nodeCount(plan: String, node: String): Int =
     treeCount(plan, "\\b" + node + "\\b")
 
+  /** Tokenize sites in a plan string: the native `tokens(` kernel or a
+    * regex `split(` (the composed tokenizer's core). */
+  private def tokenizeSites(plan: String): Int =
+    "\\btokens\\(|\\bsplit\\(".r.findAllIn(plan).size
+
   test("capture window predicate reaches the parquet scan (raw-column pushdown)") {
     val plan = finalPlan("cdc_snapshot_window")
     // the half-open window must push as min/max-prunable filters on the RAW
@@ -84,11 +89,10 @@ class PlanShapeSpec extends AnyFunSuite {
         s"$q is a narrow one-pass kernel; no shuffle allowed:\n${plan.take(1500)}")
     }
     // the formatted tree stars nodes running inside WholeStageCodegen; the
-    // custom-Expression kernel projections must carry the star. (text_langid
-    // is excluded by design: it stages tokens through higher-order-function
-    // lambdas, which Spark evaluates interpreted — the documented trade-off
-    // in Dedup.minhashBase — so its Project legitimately leaves codegen.)
-    for (q <- Seq("text_stats", "text_fingerprint")) {
+    // custom-Expression kernel projections must carry the star (text_langid
+    // too: its tokenizer, BPE count, language and stopword kernels are all
+    // native, with no interpreted higher-order lambda left in the Project)
+    for (q <- Seq("text_stats", "text_fingerprint", "text_langid")) {
       val plan = finalPlan(q)
       assert(treeCount(plan, """\* Project""") >= 1,
         s"$q's kernel projection must stay inside whole-stage codegen:\n${plan.take(1500)}")
@@ -298,7 +302,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // keep it that way.
     val df = graft.SparkEntry.queries("text_rep_gate")(spark, dir)
     val plan = df.queryExecution.optimizedPlan.toString
-    val splits = "split\\(".r.findAllIn(plan).size
+    val splits = tokenizeSites(plan)
     assert(splits <= 2,
       s"tokenization appears ${splits}x — pushdown re-inlined the metrics:\n${plan.take(2000)}")
   }
@@ -532,15 +536,14 @@ class PlanShapeSpec extends AnyFunSuite {
       nodeCount(plan, "BroadcastHashJoin") == 0, "dedup by agg, not self-join")
     // the rep_gate barrier contract: pushdown must not re-inline the
     // metric kernels into the gate (each inlining re-tokenizes the doc).
-    // Exactly 3 split( sites are intrinsic: the staged __toks tokenize
+    // Exactly 2 tokenize sites are intrinsic: the staged __toks tokenize
     // appears once PER UNION LEG (base + planted copies — each row
-    // tokenizes once, in its own leg) and tokenCountBpe carries its own
-    // split over the raw text; re-inlining would add one per metric
-    // reference (~6+)
+    // tokenizes once, in its own leg); re-inlining would add one per
+    // metric reference (~6+)
     val opt = graft.SparkEntry.queries("pipeline_curate")(spark, dir)
       .queryExecution.optimizedPlan.toString
-    val splits = "split\\(".r.findAllIn(opt).size
-    assert(splits <= 3,
+    val splits = tokenizeSites(opt)
+    assert(splits <= 2,
       s"tokenization appears ${splits}x — pushdown re-inlined the metrics:\n${opt.take(2000)}")
   }
 
@@ -690,5 +693,40 @@ class PlanShapeSpec extends AnyFunSuite {
     val order = finalPlan("pipeline_shard_order")
     assert(nodeCount(order, "Window") == 1 && nodeCount(order, "Exchange") == 1,
       s"one shuffle on shard feeding the rank window:\n${order.take(2000)}")
+  }
+
+  test("text operators tokenize natively: no Lower, no lambda over a StringSplit") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, ArrayTransform, Expression,
+      Lower, StringSplit}
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.functions.col
+    import graft.extensions.{CorpusOps, Dedup, Search}
+
+    // Spark's Lower builds the collation case tables on first use, and a
+    // higher-order lambda over split() is the interpreted composed
+    // tokenizer; both are what the native Tokens kernel replaces
+    def hazards(plan: LogicalPlan): Seq[String] = {
+      def overSplit(e: Expression) = e.exists(_.isInstanceOf[StringSplit])
+      plan.collectWithSubqueries { case p => p.expressions }.flatten.flatMap(_.collect {
+        case l: Lower => l.toString
+        case f: ArrayFilter if overSplit(f.argument) => f.toString
+        case t: ArrayTransform if overSplit(t.argument) => t.toString
+      })
+    }
+    val docs = graft.sources.Tables.load(spark, dir, "documents")
+    assert(hazards(docs.select(graft.functions.TextFunctions.tokensComposed(col("text")))
+      .queryExecution.optimizedPlan).size == 2, "the matcher must flag the composed tokenizer")
+    val plans = Seq(
+      "curationMetrics" -> CorpusOps.curationMetrics(docs, col("doc_id"), col("text")),
+      "minhashDupPairs" -> Dedup.minhashDupPairs(docs, "doc_id", "text"),
+      "simhashDupPairs" -> Dedup.simhashDupPairs(docs, "doc_id", "text"),
+      "scrubDuplicatedWindows" -> Dedup.scrubDuplicatedWindows(docs, "doc_id", "text"),
+      "bm25Fit" -> Search.bm25Fit(docs, "doc_id", "text").docFreq)
+    for ((name, df) <- plans) {
+      val plan = df.queryExecution.optimizedPlan
+      assert(tokenizeSites(plan.toString) >= 1, s"$name must tokenize:\n$plan")
+      val found = hazards(plan)
+      assert(found.isEmpty, s"$name plans the composed tokenizer:\n${found.mkString("\n")}")
+    }
   }
 }
