@@ -137,7 +137,7 @@ object Bench {
     * every sketch they grade — the deliberate-recompute class by
     * construction, same as the recall gates' brute legs). The r16 sf1
     * attribution (PLANS.md) proved the warm-total spread concentrates
-    * HERE — GC pauses landing inside ~20k×20k brute joins, KMeans fits
+    * HERE — GC pauses landing inside ~20k×20k brute joins, k-means fits
     * and full-column percentile buffers — while steady-state rows hold
     * ±1-3%. So the artifact reports the two totals separately:
     * `value_steady` is the design-grading headline a regression hunt

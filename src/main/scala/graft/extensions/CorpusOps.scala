@@ -857,7 +857,7 @@ object CorpusOps {
     * sides assign to the index's frozen cells and only WITHIN-cell
     * pairs are cosine-scored (the SemDeDup pruning argument: a
     * >= eps-cosine pair lands in the same cell with high probability;
-    * recall is the cell-assignment recall, measured on a REAL KMeans
+    * recall is the cell-assignment recall, measured on a REAL k-means
     * quantizer by the `text_decontam_semantic_recall` gate — ≥ 0.95 on
     * the fixture, where only copy-matches can cross a boundary: an eval
     * row also present in the corpus assigns to its own cell and can

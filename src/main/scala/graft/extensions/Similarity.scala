@@ -264,21 +264,20 @@ object Similarity {
 
   /**
    * IVF (inverted-file) ANN top-k — the other classic scale path next to
-   * sign-LSH: a KMeans coarse quantizer (`nlist` cells, fixed seed)
+   * sign-LSH: a k-means coarse quantizer (`nlist` cells, seeded)
    * partitions the corpus; each query probes its `nprobe` nearest cells
    * and scores only those candidates.
    *
-   * At 100 TB: cell assignment is one `transform` pass; the probe join
-   * shuffles on the cell id (bounded, ~N/nlist per cell); centroids are
-   * tiny and broadcast. Training fits on a sample — pass `trainFraction`
-   * < 1 for very large corpora.
+   * At 100 TB: cell assignment is one narrow pass ([[assignToCells]]);
+   * the probe join shuffles on the cell id (bounded, ~N/nlist per cell);
+   * centroids are tiny and broadcast. Training reads a capped sample
+   * ([[trainingSample]]), so its cost does not grow with the corpus.
    */
   def ivfTopK(
       candidates: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int = 10,
-      nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L,
-      trainFraction: Double = 1.0): DataFrame =
-    ivfProbe(ivfFit(candidates, idCol, vecCol, nlist, seed, trainFraction),
+      nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L): DataFrame =
+    ivfProbe(ivfFit(candidates, idCol, vecCol, nlist, seed),
       queries, idCol, vecCol, k, nprobe)
 
   /**
@@ -357,17 +356,17 @@ object Similarity {
   }
 
   /** Assign vectors to their nearest cell of an EXISTING centroid table
-    * (squared Euclidean — KMeans' own metric; ties to the lowest cell
-    * id). The centroid matrix rides as ONE broadcast single-row
-    * relation (the sorted array-of-structs), and the argmin is a single
-    * `transform` + `array_min` over that column: zero shuffle, zero
-    * ML-pipeline dependency at probe/extend time, O(1) plan NODES in
-    * nlist, and — unlike the earlier `typedlit` formulation — O(1)
-    * TASK-BINARY bytes in nlist: a plan literal is serialized into
+    * (squared Euclidean — the k-means metric; ties to the lowest cell
+    * id). This is the only assignment path: [[ivfFit]], extension,
+    * IVF-PQ and the semantic-dedup probe all assign through it. The
+    * centroid matrix rides as ONE broadcast single-row relation (the
+    * sorted array-of-structs), and the argmin is a single
+    * `transform` + `array_min` over that column: zero shuffle, O(1) plan
+    * NODES in nlist, and — unlike the earlier `typedlit` formulation —
+    * O(1) TASK-BINARY bytes in nlist: a plan literal is serialized into
     * every task, so a production 64k-cell × 128-dim index would ship
     * ~32 MB with each of thousands of tasks, while the broadcast
-    * relation ships once per executor through the block manager (the
-    * same transport `KMeans.transform`'s model broadcast uses). The
+    * relation ships once per executor through the block manager. The
     * join is a 1-row BroadcastNestedLoopJoin — each output row
     * references the broadcast array, no per-row copy. Measured in
     * `Scratch ivfcells` at sf0.1 (PLANS.md round-12 table): closure-
@@ -379,16 +378,25 @@ object Similarity {
                     idCol: String, vecCol: String,
                     metaCols: Seq[String] = Nil): DataFrame = {
     require(!centers.isEmpty, "centroid table is empty")
+    assignNearest(vecs, centers, idCol, vecCol, metaCols)
+  }
+
+  /** [[assignToCells]] without its emptiness check, for a centroid table
+    * the caller just fitted (never empty). The check is itself a Spark
+    * job whenever the table is parquet-backed or matches a cached plan,
+    * which would add a job to every fit. */
+  private def assignNearest(vecs: DataFrame, centers: DataFrame,
+                            idCol: String, vecCol: String,
+                            metaCols: Seq[String]): DataFrame = {
     // struct field order (cell, center): sort_array orders by cell id,
     // so the argmin scan order — and therefore tie behavior — is
     // deterministic regardless of the centroid table's partitioning
     val ctrRow = broadcast(centers
       .agg(sort_array(collect_list(struct(col("cell"), col("center"))))
         .as("__ctrs")))
-    // same float-subtract/multiply + double-accumulate per cell as the
-    // literal formulation — assignment stays bit-identical to
-    // KMeans.transform (spec-pinned); struct (d2, cell) ordering keeps
-    // ties on the lowest cell id
+    // float subtract/multiply + double accumulate per cell (a plain
+    // argmin over the collected centers reproduces it, spec-pinned);
+    // struct (d2, cell) ordering keeps ties on the lowest cell id
     val best = array_min(transform(col("__ctrs"), c =>
       struct(
         aggregate(zip_with(col("c_vec"), c.getField("center"), (x, y) => (x - y) * (x - y)),
@@ -446,48 +454,96 @@ object Similarity {
       parent = index.savedDir.orElse(index.parent))
   }
 
+  // ---- quantizer training ---------------------------------------------
+  //
+  // IVF cells and PQ codebooks train with ONE seeded Lloyd's k-means on
+  // the driver, over at most `SamplePerCenter` rows per centroid collected
+  // in one Spark job. The cap is FAISS's max-points-per-centroid rule
+  // from the PQ/IVFADC line of work (Jégou et al., TPAMI 2011): training
+  // cost stays flat as the corpus grows, while assignment and encoding
+  // stay distributed passes over every row. At 2,000 × 64-d vectors a
+  // distributed fit was all scheduling (an 8-subspace PQ fit ran 132
+  // jobs in 5.5–6.0 s; the driver loop does it in ~0.5 s in one job).
+  // The price is driver work: the sample holds min(N, 256·k) vectors
+  // (k = 4,096 at 128-d is 1 GB of doubles), and each Lloyd's round
+  // costs 256·k²·d multiply-adds on one thread — seconds at the
+  // k ≤ 64 used here, tens of minutes at k = 4,096.
+
+  /** Training rows per centroid (FAISS's max_points_per_centroid). */
+  private[extensions] val SamplePerCenter = 256
+
+  /** The training sample: at most `rows` vectors of `vecCol`, taken in
+    * the order of a `seed`-ed hash of the id, then the id — one job, and
+    * the same rows in the same order however `df` is partitioned (ids
+    * are unique, the append-only contract every index family holds). */
+  private[extensions] def trainingSample(df: DataFrame, idCol: String,
+                                         vecCol: String, rows: Int,
+                                         seed: Long): Array[Array[Double]] = {
+    val sample = df.orderBy(xxhash64(lit(seed), col(idCol)), col(idCol))
+      .limit(rows).select(col(vecCol)).collect().map(_.getSeq[Float](0))
+    require(sample.nonEmpty && !sample.contains(null),
+      s"a quantizer trains on a non-empty sample with no NULL $vecCol")
+    sample.map(_.map(_.toDouble).toArray)
+  }
+
+  private def sqDist(a: Array[Double], b: Array[Double]): Double = {
+    var d = 0.0
+    var i = 0
+    while (i < a.length) { val x = a(i) - b(i); d += x * x; i += 1 }
+    d
+  }
+
+  /** Index of the center nearest `p` (squared Euclidean), ties to the
+    * lowest. */
+  private def nearest(p: Array[Double], centers: Array[Array[Double]]): Int =
+    centers.indices.minBy(c => sqDist(p, centers(c)))
+
+  /** Seeded Lloyd's k-means in MLlib's "random" mode: up to `k` distinct
+    * points of `pts`, drawn in a `seed`-shuffled order, are the initial
+    * centers; each of `iters` rounds moves every center to the mean of
+    * the points nearest it — an empty cell keeps its center. Fewer than
+    * `k` distinct points give fewer than `k` centers. */
+  private[extensions] def kmeans(pts: Array[Array[Double]], k: Int,
+                                 iters: Int, seed: Long): Array[Array[Double]] = {
+    require(pts.forall(_.length == pts.head.length), "training vectors differ in length")
+    val centers = new scala.util.Random(seed).shuffle(pts.indices.toVector)
+      .iterator.map(i => pts(i).toSeq).distinct.take(k).map(_.toArray).toArray
+    for (_ <- 0 until iters; (c, members) <- pts.groupBy(nearest(_, centers)))
+      centers(c) = members.transpose.map(_.sum / members.length)
+    centers
+  }
+
+  /** The coarse quantizer as a (cell, center) table: 5 Lloyd's rounds on
+    * the sample's first `SamplePerCenter * nlist` rows — cells need to be
+    * rough, not converged (recall comes from nprobe). */
+  private def coarseCenters(spark: org.apache.spark.sql.SparkSession,
+                            pts: Array[Array[Double]], nlist: Int,
+                            seed: Long): DataFrame = {
+    import spark.implicits._
+    kmeans(pts.take(SamplePerCenter * nlist), nlist, 5, seed).toSeq
+      .zipWithIndex.map { case (c, i) => (i, c.map(_.toFloat)) }
+      .toDF("cell", "center")
+  }
+
   /** Train the coarse quantizer and assign every candidate to its cell.
     * `metaCols` names metadata columns of `candidates` to carry into the
     * cell-assigned relation (and the saved parquet tree) so probes can
     * pre-filter candidates via [[IvfIndex.filtered]] — the production
     * filtered-ANN shape, where the predicate prunes INSIDE the index
-    * instead of post-filtering a ranked result. */
+    * instead of post-filtering a ranked result. One Spark job (the
+    * training sample); the assignment stays lazy. */
   def ivfFit(
       candidates: DataFrame, idCol: String, vecCol: String,
       nlist: Int = 16, seed: Long = 42L,
-      trainFraction: Double = 1.0, metaCols: Seq[String] = Nil): IvfIndex = {
-
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-
-    val cand = candidates.select(col(idCol).as("neighbor_id") +:
-        col(vecCol).as("c_vec") +: metaCols.map(col): _*)
-      .withColumn("features", array_to_vector(col("c_vec")))
-    val trainSet =
-      if (trainFraction >= 1.0) cand else cand.sample(trainFraction, seed)
-    // coarse quantization needs rough cells, not convergence: few
-    // iterations + random init keep the index build cheap (recall comes
-    // from nprobe, and k-means|| init costs more than the training here).
-    val model = new KMeans().setK(nlist).setSeed(seed).setMaxIter(5)
-      .setInitMode("random")
-      .setFeaturesCol("features").setPredictionCol("cell")
-      .fit(trainSet)
-    val assigned = model.transform(cand)
-      .select(col("neighbor_id") +: col("c_vec") +: col("cell") +:
-        metaCols.map(col): _*)
-
-    // centroid table is tiny: ship it broadcast and rank each query's
-    // cells by Euclidean distance (KMeans' own metric).
-    val spark = candidates.sparkSession
-    import spark.implicits._
-    val centers = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.map(_.toFloat)) }
-      .toSeq.toDF("cell", "center")
-    IvfIndex(centers, assigned)
+      metaCols: Seq[String] = Nil): IvfIndex = {
+    val centers = coarseCenters(candidates.sparkSession, trainingSample(
+      candidates, idCol, vecCol, SamplePerCenter * nlist, seed), nlist, seed)
+    IvfIndex(centers,
+      assignNearest(candidates, centers, idCol, vecCol, metaCols))
   }
 
   /** Each query's `nprobe` nearest cells by squared Euclidean distance
-    * to the centroid (KMeans' own metric, matching the assignment) —
+    * to the centroid (the k-means metric, matching the assignment) —
     * the coarse-pruning step shared by [[ivfProbe]] and [[ivfPqProbe]].
     * Returns (query_id, q_vec, cell), one row per probed cell. */
   private[extensions] def nearestCells(q: DataFrame, centers: DataFrame,
@@ -546,8 +602,8 @@ object Similarity {
   // codebook is m*ksub*dsub doubles (8 KB at 8x16x8) embedded as plan
   // literals — three orders below the 10.9 MB literal the IVF family
   // had to avoid (see PLANS.md "IVF taskKB"), so no broadcast machinery
-  // is needed. Training is a driver-side loop of `m` (small constant)
-  // sampled KMeans fits; encoding is one codegen'd pass.
+  // is needed. Training is `m` (small constant) driver k-means fits over
+  // one collected sample; encoding is one codegen'd pass.
 
   /** Stage the L2-normalized (double) copy of `vecCol` as `__vhat`.
     * Zero-norm vectors map to all-zeros (ADC and exact cosine both score
@@ -653,120 +709,44 @@ object Similarity {
     }
   }
 
-  /** Fit a PQ index: per-subspace KMeans codebooks (driver loop over the
-    * `m` subspaces — m is a small constant; each fit is distributed and
-    * runs on `trainFraction` of the corpus), then one codegen'd encode
-    * pass over all candidates. `metaCols` ride into the codes relation
-    * for [[PqIndex.filtered]]. */
-  /** Train the `m` per-subspace KMeans codebooks over a relation
-    * carrying the normalized `__vhat` column — shared by [[pqFit]] and
-    * [[ivfPqFit]] (m is a small constant; each fit is distributed and
-    * runs on `trainFraction` of the corpus).
-    *
-    * The m fits are INDEPENDENT (disjoint subspace slices of the same
-    * cached training relation, each with its own seed), so they run
-    * CONCURRENTLY from a small driver thread pool: a KMeans fit is a
-    * driver-orchestrated loop of many short jobs, and running the
-    * subspaces back to back left the cluster idle through every job's
-    * scheduling gap — overlapping them backfills those gaps (the
-    * independent-jobs pattern; FIFO scheduling gives exactly the
-    * desired back-fill). Each individual fit is unchanged — same data,
-    * same seed, same partitioning, so the codebooks are bit-identical
-    * to the sequential loop's (Scratch timeq at sf0.1/local[32]:
-    * sim_topk_ivfpq 8.4 -> 4.8 s, sim_topk_ivfpq_res 11.0 -> 5.1 s,
-    * sim_topk_pq 7.7 -> 5.9 s min-warm; all probe rows hash-identical
-    * vs the DuckDB oracle). The cache is materialized with one count()
-    * first so the m concurrent first readers do not race to populate
-    * it. */
-  private def trainCodebooks(base: DataFrame, m: Int, ksub: Int, dsub: Int,
-                             seed: Long,
-                             trainFraction: Double): Seq[Seq[Seq[Float]]] = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val train = (if (trainFraction >= 1.0) base
-                 else base.sample(trainFraction, seed))
-      .select(col("__vhat")).cache()
-    train.count()
-    val spark = train.sparkSession
-    // every fit's jobs run under one cancellable group, the pool threads
-    // are named for thread dumps, and the await is BOUNDED
-    // (spark.graft.pq.fitTimeoutSec, default 1800 s — generous next to
-    // the seconds-scale fits, tight next to Duration.Inf): one hung or
-    // failed subspace fit must fail the whole train fast and INTERRUPT
-    // its siblings instead of hanging the operator with a live pool
-    // (VERDICT r19 #5 — pool.shutdown() alone never interrupts running
-    // fits).
-    val timeoutSec = spark.conf.get("spark.graft.pq.fitTimeoutSec", "1800").toLong
-    val groupId = s"graft-pq-fit-${java.util.UUID.randomUUID()}"
-    val threadNo = new java.util.concurrent.atomic.AtomicInteger(0)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(m, 8),
-      (r: Runnable) => {
-        val t = new Thread(r, s"graft-pq-fit-${threadNo.getAndIncrement()}")
-        t.setDaemon(true)
-        t
-      })
-    val codebooks: Seq[Seq[Seq[Float]]] =
-      try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        val fits = (0 until m).map { sub =>
-          scala.concurrent.Future {
-            // job groups are thread-local: stamp the shared group in
-            // each pool thread so cancelJobGroup reaches every fit
-            spark.sparkContext.setJobGroup(groupId,
-              s"pq codebook fit sub=$sub", interruptOnCancel = true)
-            try {
-              // per-sub seed: identical-subspace data must not yield
-              // identical codebooks by construction; few iterations +
-              // random init as in ivfFit (cells need to be rough, recall
-              // comes from rerank)
-              new KMeans().setK(ksub).setSeed(seed + sub).setMaxIter(10)
-                .setInitMode("random")
-                .setFeaturesCol("features").setPredictionCol("cell")
-                .fit(train.select(array_to_vector(
-                  slice(col("__vhat"), sub * dsub + 1, dsub)).as("features")))
-                .clusterCenters.toSeq.map(_.toArray.toSeq.map(_.toFloat))
-            } finally spark.sparkContext.clearJobGroup()
-          }
-        }
-        try
-          scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(fits),
-            scala.concurrent.duration.Duration(timeoutSec,
-              java.util.concurrent.TimeUnit.SECONDS))
-        catch {
-          case e: Throwable =>
-            // first failure (or timeout) kills the group's running jobs
-            // and interrupts the pool — siblings fail fast, nothing
-            // keeps computing toward a result nobody will read
-            spark.sparkContext.cancelJobGroup(groupId)
-            pool.shutdownNow()
-            throw e
-        }
-      } finally {
-        pool.shutdown()
-        train.unpersist()
-      }
-    codebooks
+  /** `v` over its L2 norm (zero norm -> zeros), as [[withUnitVec]]. */
+  private def unitVec(v: Array[Double]): Array[Double] = {
+    val n = math.sqrt(v.map(x => x * x).sum)
+    if (n == 0) v.map(_ => 0.0) else v.map(_ / n)
   }
 
-  def pqFit(candidates: DataFrame, idCol: String, vecCol: String,
-            m: Int = 8, ksub: Int = 16, seed: Long = 42L,
-            trainFraction: Double = 1.0,
-            metaCols: Seq[String] = Nil): PqIndex = {
-    val base = withUnitVec(
-      candidates.select(col(idCol).as("neighbor_id") +:
-        col(vecCol).as("c_vec") +: metaCols.map(col): _*), "c_vec")
-    // dim: one-row driver read (schema metadata, not data volume)
-    val dim = base.select(size(col("c_vec"))).head().getInt(0)
+  /** The `m` per-subspace codebooks, trained on the driver from the
+    * (normalized, possibly residual) training vectors — shared by
+    * [[pqFit]] and [[ivfPqFit]]. Each subspace runs 10 Lloyd's rounds
+    * seeded `seed + sub`, so identical subspace data does not yield
+    * identical codebooks by construction; cells need to be rough,
+    * recall comes from the exact rerank. */
+  private def trainCodebooks(train: Array[Array[Double]], m: Int,
+                             ksub: Int, seed: Long): Seq[Seq[Seq[Float]]] = {
+    val dim = train.head.length
     require(m > 0 && dim % m == 0, s"dim $dim must divide into m=$m subspaces")
     val dsub = dim / m
+    (0 until m).map { sub =>
+      kmeans(train.map(_.slice(sub * dsub, (sub + 1) * dsub)), ksub, 10,
+        seed + sub).toSeq.map(_.toSeq.map(_.toFloat))
+    }
+  }
 
-    val codebooks = trainCodebooks(base, m, ksub, dsub, seed, trainFraction)
-
-    val codes = base
-      .withColumn("codes", encodeCodes(col("__vhat"), codebooks, dsub))
+  /** Fit a PQ index: per-subspace codebooks trained on the driver from
+    * one `SamplePerCenter * ksub`-row sample (the fit's only Spark job),
+    * then one codegen'd encode pass over all candidates. `metaCols`
+    * ride into the codes relation for [[PqIndex.filtered]]. */
+  def pqFit(candidates: DataFrame, idCol: String, vecCol: String,
+            m: Int = 8, ksub: Int = 16, seed: Long = 42L,
+            metaCols: Seq[String] = Nil): PqIndex = {
+    val pts = trainingSample(candidates, idCol, vecCol,
+      SamplePerCenter * ksub, seed)
+    val codebooks = trainCodebooks(pts.map(unitVec), m, ksub, seed)
+    val dim = pts.head.length
+    val codes = withUnitVec(
+      candidates.select(col(idCol).as("neighbor_id") +:
+        col(vecCol).as("c_vec") +: metaCols.map(col): _*), "c_vec")
+      .withColumn("codes", encodeCodes(col("__vhat"), codebooks, dim / m))
       .select(col("neighbor_id") +: col("codes") +: col("c_vec") +:
         metaCols.map(col): _*)
     PqIndex(codebooks, codes, m, ksub, dim)
@@ -896,9 +876,9 @@ object Similarity {
     val q = adcQueries(queries, idCol, vecCol, index.codebooks,
       index.dim / index.m)
 
-    // per-sub offsets into the flat ADC table: KMeans may return FEWER
+    // per-sub offsets into the flat ADC table: k-means returns FEWER
     // than `ksub` cells when a subspace has few distinct subvectors
-    // (k-means collapses duplicate points), so the stride is each sub's
+    // (it starts from distinct points), so the stride is each sub's
     // ACTUAL codebook size, not the requested ksub
     val offsets = index.codebooks.scanLeft(0)(_ + _.length)
 
@@ -1038,16 +1018,18 @@ object Similarity {
     }
   }
 
-  /** Fit an IVF-PQ index: the coarse KMeans quantizer assigns every
+  /** Fit an IVF-PQ index: the coarse k-means quantizer assigns every
     * candidate to a cell ([[ivfFit]]'s leg), and one shared per-subspace
     * codebook family compresses every (normalized) vector to m codes
     * ([[pqFit]]'s leg) — one codegen'd encode pass over the assigned
-    * relation. `metaCols` ride into the codes relation for
-    * [[IvfPqIndex.filtered]].
+    * relation. Both quantizers train from ONE collected sample: the cells
+    * on its first `SamplePerCenter * nlist` rows, the codebooks on its
+    * first `SamplePerCenter * ksub`. `metaCols` ride into the codes
+    * relation for [[IvfPqIndex.filtered]].
     *
     * `centers`: bring-your-own coarse quantizer — an explicit
     * (cell, center) table routed through the production
-    * [[assignToCells]] path instead of fitting KMeans, the same
+    * [[assignToCells]] path instead of fitting k-means, the same
     * existing-index composition [[semanticDupPairs]] supports: a
     * 100 TB pipeline that already operates an IVF index PQ-compresses
     * it without re-clustering (which would reassign the whole corpus
@@ -1058,42 +1040,59 @@ object Similarity {
     * encoding (see the section note): codebooks train on and codes
     * quantize vhat - chat(cell) instead of vhat. The subtraction is one
     * broadcast join against the nlist-row normalized-centroid table +
-    * a zip_with — same narrow shape as the encode itself. */
+    * a zip_with — same narrow shape as the encode itself; the codebooks
+    * train on the same residuals of the sample, formed on the driver
+    * ([[residuals]]). */
   def ivfPqFit(candidates: DataFrame, idCol: String, vecCol: String,
                nlist: Int = 16, m: Int = 8, ksub: Int = 16,
-               seed: Long = 42L, trainFraction: Double = 1.0,
+               seed: Long = 42L,
                metaCols: Seq[String] = Nil,
                centers: Option[DataFrame] = None,
                residual: Boolean = false): IvfPqIndex = {
-    val coarse = centers match {
-      case Some(c) => IvfIndex(c,
-        assignToCells(candidates, c, idCol, vecCol, metaCols))
-      case None => ivfFit(candidates, idCol, vecCol, nlist, seed,
-        trainFraction, metaCols)
-    }
-    val base0 = withUnitVec(coarse.assigned, "c_vec")
+    val pts = trainingSample(candidates, idCol, vecCol,
+      SamplePerCenter * centers.fold(math.max(nlist, ksub))(_ => ksub), seed)
+    val centerTable = centers.getOrElse(
+      coarseCenters(candidates.sparkSession, pts, nlist, seed))
+    val train = pts.take(SamplePerCenter * ksub)
+    val codebooks = trainCodebooks(
+      if (!residual) train.map(unitVec) else residuals(train, centerTable),
+      m, ksub, seed)
+    val dim = pts.head.length
+    val assigned =
+      if (centers.isEmpty) assignNearest(candidates, centerTable, idCol, vecCol, metaCols)
+      else assignToCells(candidates, centerTable, idCol, vecCol, metaCols)
+    val base0 = withUnitVec(assigned, "c_vec")
     val base =
       if (!residual) base0
-      else subtractCellCenter(base0, coarse.centers)
-    val dim = base.select(size(col("c_vec"))).head().getInt(0)
-    require(m > 0 && dim % m == 0, s"dim $dim must divide into m=$m subspaces")
-    val dsub = dim / m
-    val codebooks = trainCodebooks(base, m, ksub, dsub, seed, trainFraction)
+      else subtractCellCenter(base0, centerTable)
     val encoded = base
-      .withColumn("codes", encodeCodes(col("__vhat"), codebooks, dsub))
+      .withColumn("codes", encodeCodes(col("__vhat"), codebooks, dim / m))
     // codes-sized scan relation vs rerank-only vector relation: c_vec
     // rides the second, never the first (the stored/ scanned footprint
     // is the compression's whole point)
     val codes = encoded.select(col("neighbor_id") +: col("cell") +:
       col("codes") +: metaCols.map(col): _*)
     val vectors = encoded.select(col("neighbor_id"), col("cell"), col("c_vec"))
-    IvfPqIndex(coarse.centers, codebooks, codes, vectors, m, ksub, dim,
+    IvfPqIndex(centerTable, codebooks, codes, vectors, m, ksub, dim,
       residual = residual)
+  }
+
+  /** The residual training vectors unit(v) - unit(nearest center): the
+    * driver form of [[subtractCellCenter]] over the assigned cells. The
+    * centroids are collected in cell order (a fitted table is local, so
+    * that starts no job). */
+  private def residuals(pts: Array[Array[Double]],
+                        centers: DataFrame): Array[Array[Double]] = {
+    val ctrs = centers.select(col("cell"), col("center")).collect()
+      .sortBy(_.getInt(0)).map(_.getSeq[Float](1).map(_.toDouble).toArray)
+    pts.map { v =>
+      unitVec(v).zip(unitVec(ctrs(nearest(v, ctrs)))).map { case (x, c) => x - c }
+    }
   }
 
   /** The NORMALIZED (unit, double) centroid table (cell, __chat) — the
     * space residual encoding decomposes in: vhat = chat + r must hold in
-    * the same unit space the ADC scores, and the raw KMeans centers are
+    * the same unit space the ADC scores, and the raw k-means centers are
     * not unit vectors. */
   private def centersUnit(centers: DataFrame): DataFrame =
     withUnitVec(centers.select(col("cell"), col("center")), "center")

@@ -40,7 +40,15 @@ object TextFunctions {
     * subword tokenizers when the real vocab isn't available. Whitespace
     * pieces are dropped by a `\s` test (Spark's `trim` strips only ASCII
     * spaces, which would count tabs/newlines as tokens). One native pass
-    * ([[TextExpressions.TokenCountBpe]]). */
+    * ([[TextExpressions.TokenCountBpe]]).
+    *
+    * Known miscount on supplementary-plane text (code points above
+    * U+FFFF): the split's lookarounds test UTF-16 units, so each low
+    * surrogate reads as a non-letter. A supplementary letter or digit
+    * ends its run ("a𝐀b" counts 2, not 1) and a supplementary symbol
+    * splits between its surrogates ("a😀b" counts 4, not 3). The count
+    * is kept as is: `n_tokens_bpe` and its DuckDB oracle compute it the
+    * same way, so a fix must change both together. */
   def tokenCountBpe(text: Column): Column = TextExpressions.token_count_bpe(text)
 
   /** Builtin-composed reference semantics of [[tokenCountBpe]]. */

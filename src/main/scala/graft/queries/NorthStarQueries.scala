@@ -208,10 +208,10 @@ object NorthStarQueries {
     * identically to every center's distance — so each original and its
     * near-copy co-cell BITWISE, structurally, and the within-cell pair
     * set equals brute-force all-pairs at eps=0.9 with no sampling luck
-    * (KMeans cells, by contrast, split 1-3 planted pairs at sf0.01/0.1 —
-    * measured, Scratch semcell — which is exactly the recall loss the
-    * dedup_semantic_recall gate prices). Cells still prune: 4 cells
-    * score ~1/4 of the pair space. */
+    * (k-means cells, by contrast, can split planted pairs — which is
+    * exactly the recall loss the dedup_semantic_recall gate prices; on
+    * these fixtures none split, Scratch semcell). Cells still prune:
+    * 4 cells score ~1/4 of the pair space. */
   private def ivfSemIndex(dir: String, pe: DataFrame): Similarity.IvfIndex =
     Fixtures.memo(Fixtures.Sim, pe.sparkSession, dir, "ivfSemIndex") {
       val centers = semCenters(pe.sparkSession)
@@ -229,7 +229,7 @@ object NorthStarQueries {
           "vec_id", "embedding")).cache()
     }(_.unpersist())
 
-  /** KMeans-fit sibling (the paper's own quantizer) for the recall gate
+  /** k-means-fit sibling (the paper's own quantizer) for the recall gate
     * row — fit once per sf dir. */
   private def ivfSemKmeansIndex(dir: String, pe: DataFrame): Similarity.IvfIndex =
     Fixtures.memo(Fixtures.Sim, pe.sparkSession, dir, "ivfSemKmeansIndex")(
@@ -721,7 +721,7 @@ object NorthStarQueries {
     * within-cluster cosine ≈ 0.99+ (near-parallel vectors), cross-
     * cluster |cosine| well below it (signed base components), so every
     * query's true top-10 lives in its own ~26-to-105-member cluster
-    * and a KMeans fit at nlist=19 separates centers ~128 apart against
+    * and a k-means fit at nlist=19 separates centers ~128 apart against
     * intra-cluster spread <= 10. */
   private def clusteredEmbeddings(e: DataFrame): DataFrame =
     e.select(col("vec_id"),
@@ -813,7 +813,7 @@ object NorthStarQueries {
     // all pairs (no false extras possible), and every >= 0.9 pair's
     // members co-cell BITWISE by construction (assignment ignores the
     // nudged component), so the row hash-matches brute-force all-pairs
-    // — structural, not sampling luck. The KMeans-fit leg (where cell
+    // — structural, not sampling luck. The k-means-fit leg (where cell
     // boundaries DO cost measured recall) is priced separately by
     // dedup_semantic_recall. Every EXACT-oracle row in this family
     // passes maxCellSize = Int.MaxValue explicitly: the default cap
@@ -855,12 +855,12 @@ object NorthStarQueries {
           .agg(count(lit(1)).as("n_pairs")))
     }),
 
-    // ...and the paper's own KMeans quantizer, priced honestly: k-means
-    // cell boundaries LOSE pairs (the copy lands across the boundary —
-    // measured 50/50, 49/50, 197/200 found at sf0.001/0.01/0.1, Scratch
-    // semcell), which is SemDeDup's documented recall/cost trade. The
-    // gate floors recall at 0.95 (>= 2.5x margin to the worst measured
-    // loss); DuckDB supplies the true pair count.
+    // ...and the paper's own k-means quantizer, priced honestly: k-means
+    // cell boundaries CAN lose pairs (the copy lands across the
+    // boundary), which is SemDeDup's documented recall/cost trade —
+    // measured 50/50, 50/50, 200/200 found at sf0.001/0.01/0.1 (Scratch
+    // semcell). The gate floors recall at 0.95; DuckDB supplies the
+    // true pair count.
     "dedup_semantic_recall" -> ((s, dir) => {
       val pe = plantedEmbeddings(embs(s, dir))
       val found = Similarity.semanticDupPairs(
@@ -1460,10 +1460,10 @@ object NorthStarQueries {
     // qualifying cell members are ever scored (the production
     // vector-store shape; the brute-force row above pins the exact
     // semantics). Gated on recall vs the filtered brute-force truth —
-    // the sim_ivf_recall convention and 0.75 floor (measured 0.848 /
-    // 0.856 / 0.808 per SF on the 1-in-20 set). Fresh fit per call
-    // (fixed seed -> same cells as the cached index) so the row prices
-    // fit + filter + probe, uncached.
+    // the sim_ivf_recall convention and 0.75 floor (measured 0.768 /
+    // 0.856 / 0.818 per SF on the 1-in-20 set, Scratch recallgates).
+    // Fresh fit per call (fixed seed -> same cells as the cached index)
+    // so the row prices fit + filter + probe, uncached.
     "sim_topk_filtered_ivf" -> ((s, dir) => {
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") % 20 === 0)
@@ -1511,7 +1511,7 @@ object NorthStarQueries {
     // query ran first. Runs on the CLUSTERED fixture (IVF's favorable
     // regime — the near-uniform raw embeddings make recall track the
     // scanned fraction, PLANS.md curve), where probing 4 of 19 cells
-    // (21% scanned) returns EXACTLY the brute-force top-10 on every
+    // (23-24% scanned) returns EXACTLY the brute-force top-10 on every
     // fixture SF, so the row hash-checks against DuckDB brute force —
     // graduated from rows-only in round 13 by the same
     // still-pruning-oracle method as dedup_minhash_pairs. The
@@ -1538,7 +1538,7 @@ object NorthStarQueries {
     // centroids): the old crawl (vecOldCrawl over the CLUSTERED fixture)
     // refreshes to the clustered corpus itself, so the refreshed
     // index's assigned relation equals the shared fitted index's
-    // (assignToCells is spec-pinned bit-identical to KMeans.transform)
+    // (ivfFit itself assigns through assignToCells — one assignment path)
     // and the probe shares `sim_topk_ivf`'s brute-force hash oracle
     // VERBATIM. Discrimination: the junk rows are VERBATIM copies of
     // every query vector under +40M ids — a failed removal leaves a
@@ -1547,7 +1547,7 @@ object NorthStarQueries {
     // top-10 where it belongs. v_N is manufactured from the shared
     // index by versioning backward (the dedup_refresh_embed pattern),
     // so warm reps price diff + remove + assign-extend + probe — the
-    // O(changed+removed) incremental contract, not a KMeans refit.
+    // O(changed+removed) incremental contract, not a k-means refit.
     "sim_ivf_refresh" -> ((s, dir) => {
       val ce = requirePlantedHeadroom(clusteredEmbeddings(embs(s, dir)),
         "vec_id")
@@ -1646,7 +1646,7 @@ object NorthStarQueries {
     // rerank=20 AND 50 (Scratch ivfpqplanted, round 14) — so the row
     // hash-checks against DuckDB brute force: the sim_topk_pq
     // graduation method with real coarse pruning on top. The
-    // KMeans-everything operating point is priced by sim_ivfpq_recall.
+    // k-means-everything operating point is priced by sim_ivfpq_recall.
     "sim_topk_ivfpq" -> ((s, dir) => {
       val pe = plantedEmbeddings(embs(s, dir)).select("vec_id", "embedding")
       Similarity.ivfPqProbe(
@@ -1693,17 +1693,17 @@ object NorthStarQueries {
         .select(col("query_id"), col("neighbor_id"), col("rank"))
     }),
     // IVF-PQ recall floor vs brute on the (worst-case, near-uniform)
-    // raw embeddings with the FULL KMeans path (coarse nlist=16 +
+    // raw embeddings with the FULL k-means path (coarse nlist=16 +
     // m=8 x ksub=64 codebooks), probing 8 of 16 cells with exact
-    // re-rank of the ADC top-200. Measured 0.820 / 0.868 / 0.792 at
-    // sf0.001 / 0.01 / 0.1 (Scratch ivfpqrecall; deterministic — fixed
-    // seeds, fixed file partitioning), so the 0.70 floor holds
-    // everywhere with >= 90-bet margin. The honest decomposition: the
-    // coarse nprobe=8/16 pruning costs ~0.18 (sim_ivf_recall measures
-    // that leg alone) and the ADC cut a further ~0.03 — compression is
-    // nearly free once the rerank pass is exact; a broken composition
-    // (cell join, ADC stride, codebook mismatch) lands near
-    // rerank/N (~0.1).
+    // re-rank of the ADC top-200. Measured 0.776 / 0.852 / 0.785 at
+    // sf0.001 / 0.01 / 0.1 (Scratch ivfpqrecall; deterministic — seeded
+    // trainer on a partitioning-independent sample), so the 0.70 floor
+    // holds everywhere with >= 19-bet margin. The honest decomposition:
+    // the coarse nprobe=8/16 pruning costs 0.15-0.22 (sim_ivf_recall
+    // measures that leg alone) and the ADC cut a further 0-0.03 —
+    // compression is nearly free once the rerank pass is exact; a
+    // broken composition (cell join, ADC stride, codebook mismatch)
+    // lands near rerank/N (~0.1).
     "sim_ivfpq_recall" -> ((s, dir) => {
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") % 20 === 0)
@@ -1719,10 +1719,10 @@ object NorthStarQueries {
     // Residual-encoding recall at the SAME operating point as
     // sim_ivfpq_recall — prices the paper's fidelity claim (residual
     // codebooks model the tighter within-cell ball) on the worst-case
-    // near-uniform raw embeddings. Measured 0.820 / 0.868 / 0.740 at
+    // near-uniform raw embeddings. Measured 0.776 / 0.852 / 0.753 at
     // sf0.001 / 0.01 / 0.1 (Scratch ivfpqrecall, residual=true sweep) —
     // on THIS fixture residual matches direct at small SFs and trails
-    // it at sf0.1 (0.740 vs 0.792): near-uniform data has no tight
+    // it at sf0.1 (0.753 vs 0.785): near-uniform data has no tight
     // cells, so residuals are not smaller than the vectors and the
     // paper's fidelity gain has nothing to bite on (it needs clustered
     // corpora — PLANS.md round 15). The 0.70 floor holds everywhere;
@@ -1743,12 +1743,12 @@ object NorthStarQueries {
 
     // PQ ANN recall floor vs brute on the (worst-case, near-uniform)
     // raw embeddings: m=8 x ksub=64 codebooks, exact re-rank of the ADC
-    // top-200 (10% of the sf0.1 corpus). Measured 0.996 / 1.000 / 0.922
+    // top-200 (10% of the sf0.1 corpus). Measured 1.000 / 0.996 / 0.914
     // at sf0.001 / 0.01 / 0.1 (Scratch pqrecall sweep; deterministic —
-    // fixed KMeans seeds, fixed file partitioning), so the 0.85 floor
-    // holds everywhere with >= 70-bet margin; a broken ADC table or
+    // seeded trainer on a partitioning-independent sample), so the 0.85
+    // floor holds everywhere with >= 36-bet margin; a broken ADC table or
     // code stride lands near rerank/N (~0.1) and a broken encoder near
-    // 0. The sweep's ksub=16 / rerank<=50 rows (0.25-0.72) document the
+    // 0. The sweep's ksub=16 / rerank<=50 rows (0.26-0.70) document the
     // honest uniform-regime tradeoff — see PLANS.md "PQ recall".
     "sim_pq_recall" -> ((s, dir) => {
       val e = embs(s, dir)
@@ -1784,12 +1784,13 @@ object NorthStarQueries {
     // IVF ANN recall floor vs brute force, probing 8 of 16 cells.
     // Statistically powered (round 13): the probe set is every 20th
     // vector — 100 queries x k=10 = 1000 hit-bets at sf0.1 (250 at the
-    // smaller SFs), vs the old 1-in-100 set's 50. Measured 0.820 /
-    // 0.868 / 0.817 at sf0.001 / 0.01 / 0.1 (Scratch recallgates;
-    // deterministic — fixed KMeans seed, fixed file partitioning), so
-    // the 0.75 floor holds everywhere with >= 40-bet margin while any
-    // assignment or probe bug lands near the 50% scanned fraction only
-    // by luck and a broken kernel near 0.
+    // smaller SFs), vs the old 1-in-100 set's 50. Measured 0.776 /
+    // 0.852 / 0.815 at sf0.001 / 0.01 / 0.1 (Scratch recallgates;
+    // deterministic — seeded trainer on a partitioning-independent
+    // sample), so the 0.75 floor holds everywhere (the thinnest margin
+    // is 6 bets at sf0.001, 65 at sf0.1) while any assignment or probe
+    // bug lands near the 50% scanned fraction only by luck and a
+    // broken kernel near 0.
     "sim_ivf_recall" -> ((s, dir) => {
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") % 20 === 0)
@@ -1809,13 +1810,13 @@ object NorthStarQueries {
     // corpus, extend with the other half (extendIvfIndex assigns the
     // new vectors to the FROZEN centroids — no re-train, no corpus
     // reassignment), probe the extended index. Gated on recall vs the
-    // DuckDB-recomputable brute-force top-10 — measured 0.812 / 0.816 /
-    // 0.789 at sf0.001 / 0.01 / 0.1 on the 1-in-20 probe set (Scratch
-    // recallgates, round 13; deterministic: fixed KMeans seed, fixed
-    // file partitioning), so the 0.75 floor (the sim_ivf_recall
-    // sibling's) passes every SF while a broken assignment or an
-    // extension invisible to the probe lands near 0. Uncached by
-    // design — the row measures fit-half + extend + probe.
+    // DuckDB-recomputable brute-force top-10 — measured 0.836 / 0.812 /
+    // 0.824 at sf0.001 / 0.01 / 0.1 on the 1-in-20 probe set (Scratch
+    // recallgates; deterministic: seeded trainer on a
+    // partitioning-independent sample), so the 0.75 floor (the
+    // sim_ivf_recall sibling's) passes every SF while a broken
+    // assignment or an extension invisible to the probe lands near 0.
+    // Uncached by design — the row measures fit-half + extend + probe.
     "sim_ivf_extend_recall" -> ((s, dir) => {
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") % 20 === 0)
@@ -2199,15 +2200,16 @@ object NorthStarQueries {
         .select(col("vec_id"))
     }),
 
-    // ...and the cells path priced HONESTLY on the paper's own KMeans
+    // ...and the cells path priced HONESTLY on the paper's own k-means
     // quantizer (the _ivf row's explicit cells co-cell structurally, so
     // they prove exactness, not recall): cells-vs-brute contamination
     // recall under a real nlist=8 fit, gated >= 0.95. Only copy-matches
     // can cross a cell boundary — an eval vector also present in the
     // corpus assigns to its own cell and can never be missed — so the
-    // loss envelope is HALF the SemDeDup pair family's (measured 1-3
-    // split pairs per ~2N matches). DuckDB supplies the true
-    // contaminated count. The recall knob for harder distributions is
+    // loss envelope is HALF the SemDeDup pair family's (measured
+    // 100/100, 100/100, 400/400 found at sf0.001/0.01/0.1). DuckDB
+    // supplies the true contaminated count. The recall knob for
+    // harder distributions is
     // contaminatedIdsSemanticCells(nprobe = ...), documented there.
     "text_decontam_semantic_recall" -> ((s, dir) => {
       val pe = plantedEmbeddings(embs(s, dir)).select("vec_id", "embedding")
@@ -3755,8 +3757,8 @@ object NorthStarQueries {
     "sim_topk_ivf" -> ClusteredBruteTopKSql,
     "sim_topk_ivf_probe" -> ClusteredBruteTopKSql,
     // refresh(v_N, new-crawl, vectorDiff) lands the assigned relation on
-    // the shared fitted index's (frozen centroids; assignToCells ≡
-    // KMeans.transform, spec-pinned), so the probe returns the same
+    // the shared fitted index's (frozen centroids; ivfFit assigns
+    // through the same assignToCells), so the probe returns the same
     // brute-force top-10 the fit/probe rows hash-match
     "sim_ivf_refresh" -> ClusteredBruteTopKSql,
     "sim_ivf_net_maintenance" -> ClusteredBruteTopKSql,
@@ -3792,7 +3794,7 @@ object NorthStarQueries {
     // vertex-disjoint — EVERY one-drop-per-pair keep rule keeps exactly
     // total - n_pairs vectors (the far-from-centroid row's envelope;
     // WHICH member survives is rule-specific and pinned in
-    // SemanticDedupSpec). The KMeans leg gates on recall like the other
+    // SemanticDedupSpec). The k-means leg gates on recall like the other
     // ANN floors.
     "dedup_semantic_pairs" -> PlantedPairsSql,
     "dedup_semantic_recall" ->
@@ -3968,7 +3970,7 @@ object NorthStarQueries {
     // oracle (the planted pairs co-cell structurally — see the rows)
     "text_decontam_semantic" -> SemanticDecontamSql,
     "text_decontam_semantic_ivf" -> SemanticDecontamSql,
-    // the KMeans-cells recall gate: DuckDB recomputes the TRUE
+    // the k-means-cells recall gate: DuckDB recomputes the TRUE
     // contaminated count from brute cosine; the >= 0.95 verdict is the
     // Spark side's measured cells-vs-brute recall
     "text_decontam_semantic_recall" ->

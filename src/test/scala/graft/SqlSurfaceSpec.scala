@@ -445,7 +445,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
       postingSet(apiText))
 
     // ivf with a NAMED hyperparameter: the tree equals the API fit at
-    // the same nlist — the fixed KMeans seed makes CALL-fit ≡ API-fit
+    // the same nlist — the fixed seed makes CALL-fit ≡ API-fit
     // bitwise at the centers/assigned level
     val iDir = TestSpark.tmpDir("graft-fit-ivf")
     spark.sql(

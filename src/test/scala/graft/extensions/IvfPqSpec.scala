@@ -270,7 +270,7 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("nprobe=1 scans only the query's own cell — out-of-cell vectors cannot surface") {
-    // two well-separated blobs on axis 0 vs axis 1 force nlist=2 KMeans
+    // two well-separated blobs on axis 0 vs axis 1 force nlist=2 k-means
     // to split them; a query in blob A at nprobe=1 must never return a
     // blob-B id even though rerank would admit it
     val blobA = (0L until 40L).map(i =>

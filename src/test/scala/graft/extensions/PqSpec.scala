@@ -115,10 +115,9 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("a failing codebook fit fails the train fast and leaves the session usable") {
-    // A NULL embedding makes every subspace's KMeans fit throw. The
-    // bounded-await/cancel-group path (VERDICT r19 #5) must surface the
-    // failure promptly — not hang on Duration.Inf with a live pool — and
-    // must not wedge the session for subsequent jobs.
+    // A NULL embedding in the training sample makes the fit throw. The
+    // failure must surface promptly and must not wedge the session for
+    // subsequent jobs.
     val e = embs.filter(col("vec_id") < 100)
       .select(col("vec_id"),
         when(col("vec_id") === 7, lit(null)
@@ -130,7 +129,7 @@ class PqSpec extends AnyFunSuite {
     val secs = (System.nanoTime() - t0) / 1e9
     assert(err != null)
     assert(secs < 120.0, s"failing fit took ${secs}s — not fail-fast")
-    // session still serves jobs after the cancelled group
+    // session still serves jobs after the failed fit
     assert(embs.limit(1).count() == 1L)
   }
 }

@@ -27,8 +27,8 @@ class SemanticDedupSpec extends AnyFunSuite {
           (101L, Array(0.99f, wY, 0f, 0f)))
     ).toDF("vec_id", "embedding")
 
-  /** A hand-built single-cell index (Spark's KMeans refuses k = 1, and a
-    * one-cell index makes the pair plumbing + keep rules hand-checkable:
+  /** A hand-built single-cell index (a one-cell index makes the pair
+    * plumbing + keep rules hand-checkable:
     * pairs == brute force by construction). Centroid = e1, so
     * ctr_cos = 1.0 for every filler and 0.99 for the leaning vector. */
   private def fit(nlist: Int): Similarity.IvfIndex = {

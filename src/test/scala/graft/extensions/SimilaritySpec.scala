@@ -223,22 +223,30 @@ class SimilaritySpec extends AnyFunSuite {
     loaded.close()
   }
 
-  test("extendIvfIndex: frozen centroids, helper matches KMeans assignment, new vectors probe-visible") {
+  test("extendIvfIndex: frozen centroids, assignment matches a plain argmin, new vectors probe-visible") {
     val e = graft.sources.Tables.load(spark, graft.TestSpark.Sf0001, "embeddings")
     val a = e.filter(col("vec_id") % 2 === 0)
     val b = e.filter(col("vec_id") % 2 =!= 0)
     val idx = Similarity.ivfFit(a, "vec_id", "embedding", nlist = 8)
 
-    // the literal-centroid argmin helper must reproduce the fitted
-    // model's own cell assignment (same squared-Euclidean metric over
-    // the float centroid table) — the non-circular anchor for the
-    // extension's assignment semantics
-    val modelCells = idx.assigned.select("neighbor_id", "cell")
+    // the fitted assignment must equal a plain-Scala argmin over the
+    // collected centroids and vectors (squared Euclidean: float
+    // differences and squares summed in double, ties to the lowest
+    // cell) — the non-circular anchor for the assignment semantics that
+    // fit and extension share
+    val ctrs = idx.centers.select("cell", "center").as[(Int, Seq[Float])]
+      .collect().sortBy(_._1)
+    assert(ctrs.length == 8)
+    val argminCells = a.select("vec_id", "embedding").as[(Long, Seq[Float])]
+      .collect().map { case (id, v) =>
+        id -> ctrs.minBy { case (_, c) =>
+          v.indices.foldLeft(0.0) { (acc, i) => val d = v(i) - c(i); acc + d * d }
+        }._1
+      }.toMap
+    val fittedCells = idx.assigned.select("neighbor_id", "cell")
       .as[(Long, Int)].collect().toMap
-    val helperCells = Similarity.assignToCells(a, idx.centers, "vec_id", "embedding")
-      .select("neighbor_id", "cell").as[(Long, Int)].collect().toMap
-    assert(helperCells == modelCells,
-      "assignToCells must agree with KMeans.transform on the fitted corpus")
+    assert(fittedCells == argminCells,
+      "ivfFit's assignment must agree with the argmin over its own centroids")
 
     // extension: every corpus vector present exactly once, and the
     // result equals assigning the UNION with the same frozen centroids
