@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.extensions.{CorpusOps, IndexFamily}
+import graft.extensions.{CorpusOps, IndexFamily, Versioned}
 import graft.streaming.CdcStream
 
 /**
@@ -143,7 +143,7 @@ object GraftProcedureCatalog {
 
   /** The named family from the [[IndexFamily]] registry, or a refusal
     * listing the known ones. */
-  private def family(proc: String, f: String): IndexFamily[_] =
+  private def family(proc: String, f: String): IndexFamily[_ <: Versioned] =
     IndexFamily.named(f).getOrElse(throw new IllegalArgumentException(
       s"$proc: unknown index family '$f' — one of ${families.mkString(", ")}"))
 
@@ -200,14 +200,14 @@ object GraftProcedureCatalog {
       * coupled the audit row to each family's version-bump arithmetic;
       * `eq` reports what the entry point actually did) and the row must
       * not claim a saved_to it never wrote. */
-    private def fold[I](fam: IndexFamily[I], indexDir: String, saveTo: String,
-                        a: String, u: String, r: String, idCol: String,
-                        contentCol: String,
-                        oldCol: Option[String]): (Long, Long, Boolean) = {
+    private def fold[I <: Versioned](fam: IndexFamily[I], indexDir: String,
+                                     saveTo: String, a: String, u: String,
+                                     r: String, idCol: String, contentCol: String,
+                                     oldCol: Option[String]): (Long, Long, Boolean) = {
       val ix = fam.load(SparkSession.active, indexDir)
       val out = CdcStream.compact(SparkSession.active, Some(a), Some(u),
         Some(r), ix, idCol, contentCol, oldCol, Some(saveTo))(fam)
-      (fam.version(ix), fam.version(out),
+      (ix.version, out.version,
         !(out.asInstanceOf[AnyRef] eq ix.asInstanceOf[AnyRef]))
     }
   }
@@ -251,13 +251,14 @@ object GraftProcedureCatalog {
       summary(name, indexDir, Some(saveTo), oldV, newV)
     }
 
-    private def refresh[I](fam: IndexFamily[I], indexDir: String,
-                           saveTo: String, oldDf: DataFrame, newDf: DataFrame,
-                           idCol: String, contentCol: String,
-                           diff: DataFrame): (Long, Long) = {
+    private def refresh[I <: Versioned](fam: IndexFamily[I], indexDir: String,
+                                        saveTo: String, oldDf: DataFrame,
+                                        newDf: DataFrame, idCol: String,
+                                        contentCol: String,
+                                        diff: DataFrame): (Long, Long) = {
       val ix = fam.load(SparkSession.active, indexDir)
-      (fam.version(ix), fam.version(fam.save(
-        fam.refresh(ix, oldDf, newDf, idCol, contentCol, diff), saveTo)))
+      (ix.version, fam.save(
+        fam.refresh(ix, oldDf, newDf, idCol, contentCol, diff), saveTo).version)
     }
   }
 
@@ -275,8 +276,9 @@ object GraftProcedureCatalog {
     * entry points (`buildCorpusIndex`/`bm25Fit`/`buildEmbeddingIndex`/
     * `ivfFit`/`ivfPqFit`/`lshFit`/`pqFit`, all deterministic — fixed
     * seeds — so CALL-fit ≡ API-fit at the tree level, spec-pinned) and
-    * saving the tree to `save_to` (each family's save guard carries:
-    * clobbering an unrelated stamped tree refuses). Hyperparameters are
+    * saving the tree to `save_to` through the one guarded save
+    * ([[graft.extensions.IndexFamily.save]]: clobbering an unrelated
+    * stamped tree refuses). Hyperparameters are
     * per-family and literal-guarded the TVF way: a parameter that does
     * not apply to the family, or does not parse as its type, refuses
     * NAMING the parameter — a typo'd `planes` on an `ivf` fit must not

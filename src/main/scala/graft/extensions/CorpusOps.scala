@@ -996,9 +996,9 @@ object CorpusOps {
     * [[corpusDiff]] for the text families and [[vectorDiff]] for the
     * vector families. A family that retracts by image (BM25) needs the
     * old crawl: [[refreshBm25Stats]]. */
-  def refreshIndex[I](index: I, newDf: DataFrame, idCol: String,
-                      contentCol: String, diff: DataFrame)(
-                      implicit fam: IndexFamily[I]): I = {
+  def refreshIndex[I <: Versioned](index: I, newDf: DataFrame, idCol: String,
+                                   contentCol: String, diff: DataFrame)(
+                                   implicit fam: IndexFamily[I]): I = {
     require(!fam.retractsByImage, s"the ${fam.name} family retracts by " +
       "image: refresh it with the old crawl (refreshBm25Stats)")
     val (retired, fresh) = refreshIdSplit(diff, idCol)

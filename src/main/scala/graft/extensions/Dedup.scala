@@ -415,7 +415,7 @@ object Dedup {
                                  * tree, checked before close/compaction. */
                                version: Long = 1L,
                                folded: Seq[String] = Nil,
-                               parent: Option[String] = None) {
+                               parent: Option[String] = None) extends Versioned {
     private val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     def persist(): CorpusIndex = {
       postings.persist(lvl); shingles.persist(lvl); dfCounts.persist(lvl)
@@ -426,24 +426,8 @@ object Dedup {
       dfCounts.unpersist(false); docStats.unpersist(false); ()
     }
     /** Retire this corpus version in ONE call: unpersist the session
-      * pins AND delete the on-disk tree the index was saved to / loaded
-      * from, if any — the lifecycle a long-lived service needs per
-      * version (previously: unpersist + manual dir cleanup, which a
-      * dying JVM skips). After close() the version is gone for every
-      * consumer; don't close a tree other jobs still load from.
-      * REFUSES a stale handle: if the tree now stamps a different
-      * version (another job saved over it), deleting would destroy the
-      * wrong version. */
-    def close(): Unit = {
-      unpersist()
-      savedDir.foreach { d =>
-        val spark = postings.sparkSession
-        IndexMeta.requireCurrent(spark, d, version, "close()")
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(p, true)
-      }
-    }
+      * pins AND delete the on-disk tree ([[IndexFamily.close]]). */
+    def close(): Unit = IndexFamily.Text.close(this)
   }
 
   /** Build the [[CorpusIndex]] for [[dedupAgainstCorpus]]. One pass over
@@ -472,7 +456,7 @@ object Dedup {
     * df-cut postings — one combining count over the postings, paid at
     * BUILD time so every probe's candidate bound is a skinny join, not
     * a per-probe corpus aggregation. */
-  private def docStatsFrom(sh: DataFrame, postings: DataFrame): DataFrame =
+  private[extensions] def docStatsFrom(sh: DataFrame, postings: DataFrame): DataFrame =
     sh.select(col("doc_id"), size(col("sh")).cast("long").as("n_grams"))
       .join(postings.groupBy(col("doc_id")).agg(count(lit(1)).as("__ni")),
         Seq("doc_id"), "left")
@@ -543,19 +527,11 @@ object Dedup {
     val adjustedStats = index.docStats.join(dec, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_grams"),
         (col("n_indexed") - coalesce(col("__dec"), lit(0L))).as("n_indexed"))
-    CorpusIndex(
-      index.postings.join(crossing, Seq("gram"), "left_anti")
+    IndexFamily.Text.nextVersion(index.copy(
+      postings = index.postings.join(crossing, Seq("gram"), "left_anti")
         .union(newPostings),
-      index.shingles.union(newSh), mergedDf,
-      adjustedStats.union(docStatsFrom(newSh, newPostings)),
-      index.shingleK, cut,
-      // a NEW version: no savedDir (close() of the extension must not
-      // delete the parent's tree), version bumped, lineage carried —
-      // the parent's tree (if it ever had one) becomes this version's
-      // `parent`, so the natural save v1 → extend → save v2 chain stamps
-      // v1's path into v2's tree
-      version = index.version + 1, folded = index.folded,
-      parent = index.savedDir.orElse(index.parent))
+      shingles = index.shingles.union(newSh), dfCounts = mergedDf,
+      docStats = adjustedStats.union(docStatsFrom(newSh, newPostings))))
   }
 
   /** Shrink a [[CorpusIndex]] by a set of retired document ids — the
@@ -635,108 +611,29 @@ object Dedup {
       .join(inc, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_grams"),
         (col("n_indexed") + coalesce(col("__inc"), lit(0L))).as("n_indexed"))
-    CorpusIndex(newPostings, survivorSh, mergedDf, adjustedStats,
-      index.shingleK, cut,
-      version = index.version + 1, folded = index.folded,
-      parent = index.savedDir.orElse(index.parent))
+    IndexFamily.Text.nextVersion(index.copy(postings = newPostings,
+      shingles = survivorSh, dfCounts = mergedDf, docStats = adjustedStats))
   }
 
   /** Persist a [[CorpusIndex]] to storage so it outlives the session —
     * the production lifecycle: one job fits the index, every later
     * ingest job loads it. Plain parquet: the probe join never needs the
     * postings co-partitioned (at scale the batch side broadcasts), so
-    * bucketed-table ceremony buys nothing here. shingleK lands in a
-    * one-row meta table so a load can never probe with the wrong k.
-    * Returns the index with `savedDir` recorded, so [[CorpusIndex
-    * .close]] on the returned value retires the tree too. */
-  def saveCorpusIndex(index: CorpusIndex, dir: String): CorpusIndex = {
-    val spark = index.postings.sparkSession
-    import spark.implicits._
-    // the Bm25Stats.save contract, ported (r19): refuse clobbering an
-    // UNRELATED tree (the stale-handle hazard IndexMeta exists for),
-    // but allow an own re-save and the IN-PLACE UPGRADE — a same-dir
-    // version bump, which the mechanized maintenance loop
-    // (CdcStream.ReresolveOnCompaction) detects by probing THIS dir's
-    // stamp per trigger.
-    IndexMeta.read(spark, dir).foreach { stamp =>
-      val ownResave = stamp.version == index.version &&
-        index.savedDir.contains(dir)
-      val upgrade = stamp.version < index.version &&
-        index.parent.orElse(index.savedDir).contains(dir)
-      require(ownResave || upgrade,
-        s"save refused: $dir already stamps version ${stamp.version} and " +
-          s"this handle (version ${index.version}) does not descend from " +
-          "it — close() the old tree or save to a fresh directory")
-    }
-    // stage-then-swap with ALL stages written before ANY swap: an
-    // in-place upgrade's relations lazily READ this very tree, so the
-    // `__stage` writes keep every read path intact until the heavy
-    // writes complete, and the swap phase is pure renames that never
-    // re-evaluate a plan. (A crash mid-swap leaves a mixed tree, as the
-    // old serial overwrite did — but the window shrinks from the full
-    // rewrite to the renames.)
-    val hconf = spark.sessionState.newHadoopConf()
-    val rels = Seq(
-      "postings" -> index.postings, "shingles" -> index.shingles,
-      "df" -> index.dfCounts, "stats" -> index.docStats,
-      "meta" -> Seq((index.shingleK, index.maxGramDf))
-        .toDF("shingle_k", "max_gram_df"))
-    rels.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$dir/${name}__stage")
-    }
-    rels.foreach { case (name, _) =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
-      val stage = new org.apache.hadoop.fs.Path(s"$dir/${name}__stage")
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-      require(fs.rename(stage, p), s"could not move $stage into place at $p")
-    }
-    IndexMeta.write(spark, dir, IndexMeta.Meta(index.version,
-      parent = index.parent.orElse(index.savedDir).filterNot(_ == dir),
-      folded = index.folded,
-      rows = IndexMeta.rowCounts(spark, dir,
-        Seq("postings", "shingles", "df", "stats"))))
-    index.copy(savedDir = Some(dir))
-  }
+    * bucketed-table ceremony buys nothing here. shingleK and maxGramDf
+    * land in a one-row meta table so a load can never probe with the
+    * wrong k. [[IndexFamily.save]] holds the overwrite guard and the
+    * stage-then-swap write; the returned handle reads the saved tree, so
+    * [[CorpusIndex.close]] on it retires the tree too. */
+  def saveCorpusIndex(index: CorpusIndex, dir: String): CorpusIndex =
+    IndexFamily.Text.save(index, dir)
 
   /** Load a [[CorpusIndex]] written by [[saveCorpusIndex]]. Call
     * [[CorpusIndex.persist]] before probing many batches against it.
-    * Backward compatible with trees written by earlier format versions:
-    * a meta table without `max_gram_df` loads with the historical
-    * default (100 — the only cut any old index was built with), and a
-    * tree without the `df` dictionary recomputes it from the stored
-    * shingle sets (one regroup, paid once at load — the cost every
-    * extension used to pay). */
+    * Trees written by earlier format versions still load (see
+    * [[IndexFamily.Text]]). */
   def loadCorpusIndex(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): CorpusIndex = {
-    val metaDf = spark.read.parquet(s"$dir/meta")
-    val maxGramDf =
-      if (metaDf.columns.contains("max_gram_df"))
-        metaDf.select(col("max_gram_df")).head().getInt(0)
-      else 100
-    val shingleK = metaDf.select(col("shingle_k")).head().getInt(0)
-    val shingles = spark.read.parquet(s"$dir/shingles")
-    val hconf = spark.sessionState.newHadoopConf()
-    def subtreeExists(name: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
-      p.getFileSystem(hconf).exists(p)
-    }
-    val dfCounts =
-      if (subtreeExists("df")) spark.read.parquet(s"$dir/df")
-      else shingles.select(col("doc_id"), explode(col("sh")).as("gram"))
-        .groupBy(col("gram")).agg(count(lit(1)).as("df"))
-    val postings = spark.read.parquet(s"$dir/postings")
-    val docStats =
-      if (subtreeExists("stats")) spark.read.parquet(s"$dir/stats")
-      else docStatsFrom(shingles, postings)
-    val stamp = IndexMeta.read(spark, dir)
-    CorpusIndex(
-      postings, shingles, dfCounts, docStats,
-      shingleK, maxGramDf, savedDir = Some(dir),
-      version = stamp.map(_.version).getOrElse(1L),
-      folded = stamp.map(_.folded).getOrElse(Nil),
-      parent = stamp.flatMap(_.parent))
-  }
+                      dir: String): CorpusIndex =
+    IndexFamily.Text.load(spark, dir)
 
   /**
    * INCREMENTAL ingest dedup: drop every batch doc whose exact n-gram
@@ -883,7 +780,7 @@ object Dedup {
                                   savedDir: Option[String] = None,
                                   version: Long = 1L,
                                   folded: Seq[String] = Nil,
-                                  parent: Option[String] = None) {
+                                  parent: Option[String] = None) extends Versioned {
     private val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     def persist(): EmbeddingIndex = {
       buckets.persist(lvl); vectors.persist(lvl); this
@@ -891,19 +788,8 @@ object Dedup {
     def unpersist(): Unit = {
       buckets.unpersist(false); vectors.unpersist(false); ()
     }
-    /** Retire this index version in ONE call — unpersist + delete the
-      * saved tree, if any; same contract as [[CorpusIndex.close]],
-      * including the stale-handle refusal ([[IndexMeta]]). */
-    def close(): Unit = {
-      unpersist()
-      savedDir.foreach { d =>
-        val spark = buckets.sparkSession
-        IndexMeta.requireCurrent(spark, d, version, "close()")
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(p, true)
-      }
-    }
+    /** Retire this index version in ONE call ([[IndexFamily.close]]). */
+    def close(): Unit = IndexFamily.Embedding.close(this)
   }
 
   private def signBands(df: DataFrame, idCol: String, vecCol: String,
@@ -938,14 +824,11 @@ object Dedup {
     * both paths. Same append-only id contract as the text form. */
   def extendEmbeddingIndex(index: EmbeddingIndex, newDocs: DataFrame,
                            idCol: String, vecCol: String): EmbeddingIndex =
-    EmbeddingIndex(
-      index.buckets.union(
+    IndexFamily.Embedding.nextVersion(index.copy(
+      buckets = index.buckets.union(
         signBands(newDocs, idCol, vecCol, index.planes, index.bands)),
-      index.vectors.union(
-        newDocs.select(col(idCol).as("doc_id"), col(vecCol).as("v"))),
-      index.planes, index.bands,
-      version = index.version + 1, folded = index.folded,
-      parent = index.savedDir.orElse(index.parent))
+      vectors = index.vectors.union(
+        newDocs.select(col(idCol).as("doc_id"), col(vecCol).as("v")))))
 
   /** Shrink an [[EmbeddingIndex]] by retired ids — the embedding leg of
     * the removal lifecycle ([[removeFromCorpusIndex]] is the text
@@ -960,49 +843,24 @@ object Dedup {
   def removeFromEmbeddingIndex(index: EmbeddingIndex, removedIds: DataFrame,
                                idCol: String): EmbeddingIndex = {
     val rm = removedIds.select(col(idCol).as("doc_id")).distinct()
-    EmbeddingIndex(
-      index.buckets.join(rm, Seq("doc_id"), "left_anti"),
-      index.vectors.join(rm, Seq("doc_id"), "left_anti"),
-      index.planes, index.bands,
-      version = index.version + 1, folded = index.folded,
-      parent = index.savedDir.orElse(index.parent))
+    IndexFamily.Embedding.nextVersion(index.copy(
+      buckets = index.buckets.join(rm, Seq("doc_id"), "left_anti"),
+      vectors = index.vectors.join(rm, Seq("doc_id"), "left_anti")))
   }
 
   /** Persist an [[EmbeddingIndex]] to storage — the embedding analog of
-    * [[saveCorpusIndex]], same production lifecycle: one job fits the
-    * index, every later ingest job loads it. planes/bands land in a
-    * one-row meta table so a load can never probe with mismatched
-    * hyperplanes (the silent-never-match failure class). Returns the
-    * index with `savedDir` recorded for [[EmbeddingIndex.close]]. */
-  def saveEmbeddingIndex(index: EmbeddingIndex, dir: String): EmbeddingIndex = {
-    index.buckets.write.mode("overwrite").parquet(s"$dir/buckets")
-    index.vectors.write.mode("overwrite").parquet(s"$dir/vectors")
-    val spark = index.buckets.sparkSession
-    import spark.implicits._
-    Seq((index.planes, index.bands)).toDF("planes", "bands")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    IndexMeta.write(spark, dir, IndexMeta.Meta(index.version,
-      parent = index.parent.orElse(index.savedDir).filterNot(_ == dir),
-      folded = index.folded,
-      rows = IndexMeta.rowCounts(spark, dir, Seq("buckets", "vectors"))))
-    index.copy(savedDir = Some(dir))
-  }
+    * [[saveCorpusIndex]], same production lifecycle and the same
+    * [[IndexFamily.save]]. planes/bands land in a one-row meta table so a
+    * load can never probe with mismatched hyperplanes (the
+    * silent-never-match failure class). */
+  def saveEmbeddingIndex(index: EmbeddingIndex, dir: String): EmbeddingIndex =
+    IndexFamily.Embedding.save(index, dir)
 
   /** Load an [[EmbeddingIndex]] written by [[saveEmbeddingIndex]]. Call
     * [[EmbeddingIndex.persist]] before probing many batches against it. */
   def loadEmbeddingIndex(spark: org.apache.spark.sql.SparkSession,
-                         dir: String): EmbeddingIndex = {
-    val meta = spark.read.parquet(s"$dir/meta")
-      .select(col("planes"), col("bands")).head()
-    val stamp = IndexMeta.read(spark, dir)
-    EmbeddingIndex(
-      spark.read.parquet(s"$dir/buckets"),
-      spark.read.parquet(s"$dir/vectors"),
-      meta.getInt(0), meta.getInt(1), savedDir = Some(dir),
-      version = stamp.map(_.version).getOrElse(1L),
-      folded = stamp.map(_.folded).getOrElse(Nil),
-      parent = stamp.flatMap(_.parent))
-  }
+                         dir: String): EmbeddingIndex =
+    IndexFamily.Embedding.load(spark, dir)
 
   /** INCREMENTAL embedding dedup: drop every batch vector whose exact
     * cosine against SOME indexed corpus vector reaches `threshold`;

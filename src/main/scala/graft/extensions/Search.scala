@@ -113,70 +113,20 @@ object Search {
                              savedDir: Option[String] = None,
                              version: Long = 1L,
                              folded: Seq[String] = Nil,
-                             parent: Option[String] = None) {
+                             parent: Option[String] = None) extends Versioned {
     def persist(): this.type = { docFreq.persist(); this }
     def unpersist(): Unit = { docFreq.unpersist(); () }
 
     /** Persist the stats to storage so they outlive the session: the
       * vocabulary-sized df table as parquet, the two integer scalars in
       * a one-row meta table, and the [[IndexMeta]] version stamp — a
-      * load can never probe with mismatched scalars, and close()/extend
-      * on a stale handle refuses exactly like the other families.
-      *
-      * Two overwrite hazards are closed here (ADVICE r16), making the
-      * natural `extend(load(dir)).save(dir)` in-place upgrade safe:
-      * - A STAMPED tree is refused unless this handle descends from it
-      *   (its own idempotent re-save, or an upgrade of the tree it was
-      *   extended from) — a stale v1 handle can no longer clobber a v2
-      *   tree the way `close()` already refuses to delete one.
-      * - The df relation is written STAGE-THEN-SWAP: an in-place
-      *   upgrade's lazy docFreq plan READS `$dir/df`, so a direct
-      *   overwrite would consume its own input mid-write. The staged
-      *   write evaluates the plan against the old files, then one
-      *   rename swaps the new tree in. The returned handle re-points
-      *   docFreq at the saved files (identical rows, truncated lineage),
-      *   so it stays valid after the old files are gone. */
-    def save(dir: String): Bm25Stats = {
-      val spark = docFreq.sparkSession
-      import spark.implicits._
-      IndexMeta.read(spark, dir).foreach { stamp =>
-        val ownResave = stamp.version == version && savedDir.contains(dir)
-        val upgrade = stamp.version < version &&
-          parent.orElse(savedDir).contains(dir)
-        require(ownResave || upgrade,
-          s"save refused: $dir already stamps version ${stamp.version} and " +
-            s"this handle (version $version) does not descend from it — " +
-            "close() the old tree or save to a fresh directory")
-      }
-      val hconf = spark.sessionState.newHadoopConf()
-      val dfPath = new org.apache.hadoop.fs.Path(s"$dir/df")
-      val stage = new org.apache.hadoop.fs.Path(s"$dir/df__stage")
-      val fs = dfPath.getFileSystem(hconf)
-      docFreq.write.mode("overwrite").parquet(stage.toString)
-      if (fs.exists(dfPath)) fs.delete(dfPath, true)
-      require(fs.rename(stage, dfPath),
-        s"could not move $stage into place at $dfPath")
-      Seq((nDocs, sumDl)).toDF("n_docs", "sum_dl")
-        .write.mode("overwrite").parquet(s"$dir/meta")
-      IndexMeta.write(spark, dir, IndexMeta.Meta(version,
-        parent = parent.orElse(savedDir).filterNot(_ == dir),
-        folded = folded,
-        rows = IndexMeta.rowCounts(spark, dir, Seq("df"))))
-      copy(docFreq = spark.read.parquet(s"$dir/df"), savedDir = Some(dir))
-    }
+      * load can never probe with mismatched scalars. The overwrite guard
+      * and the stage-then-swap write of [[IndexFamily.save]] make the
+      * natural `extend(load(dir)).save(dir)` in-place upgrade safe. */
+    def save(dir: String): Bm25Stats = IndexFamily.Bm25.save(this, dir)
 
-    /** Retire this stats version in ONE call — unpersist + delete the
-      * saved tree, refusing a stale handle ([[IndexMeta]]). */
-    def close(): Unit = {
-      unpersist()
-      savedDir.foreach { d =>
-        val spark = docFreq.sparkSession
-        IndexMeta.requireCurrent(spark, d, version, "close()")
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(p, true)
-      }
-    }
+    /** Retire this stats version in ONE call ([[IndexFamily.close]]). */
+    def close(): Unit = IndexFamily.Bm25.close(this)
   }
 
   /** The one-pass per-doc projection both fit and extend reduce:
@@ -203,17 +153,8 @@ object Search {
   /** Load [[Bm25Stats]] written by [[Bm25Stats.save]]. Call `persist()`
     * before serving many probes from it. */
   def loadBm25Stats(spark: org.apache.spark.sql.SparkSession,
-                    dir: String): Bm25Stats = {
-    val meta = spark.read.parquet(s"$dir/meta")
-      .select(col("n_docs"), col("sum_dl")).head()
-    val stamp = IndexMeta.read(spark, dir)
-    Bm25Stats(spark.read.parquet(s"$dir/df"),
-      meta.getLong(0), meta.getLong(1),
-      savedDir = Some(dir),
-      version = stamp.map(_.version).getOrElse(1L),
-      folded = stamp.map(_.folded).getOrElse(Nil),
-      parent = stamp.flatMap(_.parent))
-  }
+                    dir: String): Bm25Stats =
+    IndexFamily.Bm25.load(spark, dir)
 
   /** Grow fitted stats with `newDocs` WITHOUT rescanning the fitted
     * corpus — O(new docs): the batch's df table merges into the stored
@@ -247,11 +188,9 @@ object Search {
       .select(col("term"),
         (coalesce(col("df"), lit(0L)) + coalesce(col("__new"), lit(0L)))
           .as("df"))
-    stats.copy(docFreq = merged,
+    IndexFamily.Bm25.nextVersion(stats.copy(docFreq = merged,
       nDocs = stats.nDocs + row.getLong(0),
-      sumDl = stats.sumDl + row.getLong(1),
-      savedDir = None, version = stats.version + 1,
-      parent = stats.savedDir.orElse(stats.parent))
+      sumDl = stats.sumDl + row.getLong(1)))
   }
 
   /** Shrink fitted stats by a set of retired documents — the REMOVAL
@@ -283,11 +222,9 @@ object Search {
       .select(col("term"),
         (col("df") - coalesce(col("__dec"), lit(0L))).as("df"))
       .filter(col("df") > 0L)
-    stats.copy(docFreq = merged,
+    IndexFamily.Bm25.nextVersion(stats.copy(docFreq = merged,
       nDocs = stats.nDocs - row.getLong(0),
-      sumDl = stats.sumDl - row.getLong(1),
-      savedDir = None, version = stats.version + 1,
-      parent = stats.savedDir.orElse(stats.parent))
+      sumDl = stats.sumDl - row.getLong(1)))
   }
 
   /** BM25 top-k against a fitted [[Bm25Stats]]: the per-term document

@@ -112,7 +112,7 @@ object Similarity {
                             savedDir: Option[String] = None,
                             version: Long = 1L,
                             folded: Seq[String] = Nil,
-                            parent: Option[String] = None) {
+                            parent: Option[String] = None) extends Versioned {
     /** Pin the banded relation in executor storage for repeated probing. */
     def cache(): LshIndex = { banded.cache(); this }
 
@@ -134,39 +134,12 @@ object Similarity {
 
     def unpersist(): LshIndex = { banded.unpersist(false); this }
 
-    /** Persist; planes/bands land in a one-row meta table so a load can
-      * never probe with mismatched hyperplanes. Returns the index with
-      * `savedDir` recorded for [[close]]. NOTE the stale-guard's scope:
-      * save stamps the handle's CURRENT version (extend/compact are what
-      * bump), so two different indexes saved in sequence over the same
-      * dir at the same version are indistinguishable to the guard —
-      * in-place re-save at an unchanged version is outside its
-      * protection (same for all index families). */
-    def save(dir: String): LshIndex = {
-      banded.write.mode("overwrite").parquet(s"$dir/banded")
-      val spark = banded.sparkSession
-      import spark.implicits._
-      Seq((planes, bands)).toDF("planes", "bands")
-        .write.mode("overwrite").parquet(s"$dir/meta")
-      IndexMeta.write(spark, dir, IndexMeta.Meta(version,
-        parent = parent.orElse(savedDir).filterNot(_ == dir), folded = folded,
-        rows = IndexMeta.rowCounts(spark, dir, Seq("banded"))))
-      copy(savedDir = Some(dir))
-    }
+    /** Persist ([[IndexFamily.save]]); planes/bands land in a one-row meta
+      * table so a load can never probe with mismatched hyperplanes. */
+    def save(dir: String): LshIndex = IndexFamily.Lsh.save(this, dir)
 
-    /** Retire this index version in ONE call — unpersist + delete the
-      * saved tree, if any; same contract as `CorpusIndex.close`,
-      * including the stale-handle refusal ([[IndexMeta]]). */
-    def close(): Unit = {
-      unpersist()
-      savedDir.foreach { d =>
-        val spark = banded.sparkSession
-        IndexMeta.requireCurrent(spark, d, version, "close()")
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(p, true)
-      }
-    }
+    /** Retire this index version in ONE call ([[IndexFamily.close]]). */
+    def close(): Unit = IndexFamily.Lsh.close(this)
   }
 
   /** The (id, vec, band, bucket, meta…) banded relation both index fit
@@ -197,16 +170,8 @@ object Similarity {
     LshIndex(bandVectors(candidates, idCol, vecCol, "neighbor_id", "c_vec",
       planes, bands, metaCols), planes, bands)
 
-  def loadLshIndex(spark: org.apache.spark.sql.SparkSession, dir: String): LshIndex = {
-    val meta = spark.read.parquet(s"$dir/meta")
-      .select(col("planes"), col("bands")).head()
-    val stamp = IndexMeta.read(spark, dir)
-    LshIndex(spark.read.parquet(s"$dir/banded"),
-      meta.getInt(0), meta.getInt(1), savedDir = Some(dir),
-      version = stamp.map(_.version).getOrElse(1L),
-      folded = stamp.map(_.folded).getOrElse(Nil),
-      parent = stamp.flatMap(_.parent))
-  }
+  def loadLshIndex(spark: org.apache.spark.sql.SparkSession, dir: String): LshIndex =
+    IndexFamily.Lsh.load(spark, dir)
 
   /** Grow an [[LshIndex]] with `newVecs` WITHOUT refitting — bands the
     * new vectors with the index's OWN planes/bands and unions, exactly
@@ -218,14 +183,9 @@ object Similarity {
                      idCol: String, vecCol: String): LshIndex = {
     val metaCols = index.banded.columns.toSeq
       .filterNot(Set("neighbor_id", "c_vec", "band", "bucket"))
-    // a NEW version: savedDir dropped (close() of the extension must not
-    // delete the parent's tree), version bumped, lineage carried — the
-    // parent's tree becomes this version's `parent` for the next save
-    index.copy(banded = index.banded.unionByName(
+    IndexFamily.Lsh.nextVersion(index.copy(banded = index.banded.unionByName(
       bandVectors(newVecs, idCol, vecCol, "neighbor_id", "c_vec",
-        index.planes, index.bands, metaCols)),
-      savedDir = None, version = index.version + 1,
-      parent = index.savedDir.orElse(index.parent))
+        index.planes, index.bands, metaCols))))
   }
 
   /** Shrink an [[LshIndex]] by retired ids — one streaming anti-join on
@@ -236,9 +196,8 @@ object Similarity {
   def removeFromLshIndex(index: LshIndex, removedIds: DataFrame,
                          idCol: String): LshIndex = {
     val rm = removedIds.select(col(idCol).as("neighbor_id")).distinct()
-    index.copy(banded = index.banded.join(rm, Seq("neighbor_id"), "left_anti"),
-      savedDir = None, version = index.version + 1,
-      parent = index.savedDir.orElse(index.parent))
+    IndexFamily.Lsh.nextVersion(
+      index.copy(banded = index.banded.join(rm, Seq("neighbor_id"), "left_anti")))
   }
 
   /** Probe a fitted [[LshIndex]]: only candidates sharing a query's
@@ -291,7 +250,7 @@ object Similarity {
                             savedDir: Option[String] = None,
                             version: Long = 1L,
                             folded: Seq[String] = Nil,
-                            parent: Option[String] = None) {
+                            parent: Option[String] = None) extends Versioned {
     /** Pin the assignment in executor storage for repeated probing. */
     def cache(): IvfIndex = { assigned.cache(); centers.cache(); this }
 
@@ -317,43 +276,15 @@ object Similarity {
       assigned.unpersist(false); centers.unpersist(false); this
     }
 
-    /** Returns the index with `savedDir` recorded for [[close]]. */
-    def save(dir: String): IvfIndex = {
-      centers.write.mode("overwrite").parquet(s"$dir/centers")
-      assigned.write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dir/assigned")
-      val spark = centers.sparkSession
-      IndexMeta.write(spark, dir, IndexMeta.Meta(version,
-        parent = parent.orElse(savedDir).filterNot(_ == dir), folded = folded,
-        rows = IndexMeta.rowCounts(spark, dir, Seq("centers", "assigned"))))
-      copy(savedDir = Some(dir))
-    }
+    /** Persist ([[IndexFamily.save]]), `assigned` partitioned by cell. */
+    def save(dir: String): IvfIndex = IndexFamily.Ivf.save(this, dir)
 
-    /** Retire this index version in ONE call — unpersist + delete the
-      * saved tree, if any; same contract as `CorpusIndex.close`,
-      * including the stale-handle refusal ([[IndexMeta]]). */
-    def close(): Unit = {
-      unpersist()
-      savedDir.foreach { d =>
-        val spark = centers.sparkSession
-        IndexMeta.requireCurrent(spark, d, version, "close()")
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(p, true)
-      }
-    }
+    /** Retire this index version in ONE call ([[IndexFamily.close]]). */
+    def close(): Unit = IndexFamily.Ivf.close(this)
   }
 
-  def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String): IvfIndex = {
-    val stamp = IndexMeta.read(spark, dir)
-    IvfIndex(
-      spark.read.parquet(s"$dir/centers"),
-      spark.read.parquet(s"$dir/assigned"),
-      savedDir = Some(dir),
-      version = stamp.map(_.version).getOrElse(1L),
-      folded = stamp.map(_.folded).getOrElse(Nil),
-      parent = stamp.flatMap(_.parent))
-  }
+  def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String): IvfIndex =
+    IndexFamily.Ivf.load(spark, dir)
 
   /** Assign vectors to their nearest cell of an EXISTING centroid table
     * (squared Euclidean — the k-means metric; ties to the lowest cell
@@ -377,17 +308,6 @@ object Similarity {
   def assignToCells(vecs: DataFrame, centers: DataFrame,
                     idCol: String, vecCol: String,
                     metaCols: Seq[String] = Nil): DataFrame = {
-    require(!centers.isEmpty, "centroid table is empty")
-    assignNearest(vecs, centers, idCol, vecCol, metaCols)
-  }
-
-  /** [[assignToCells]] without its emptiness check, for a centroid table
-    * the caller just fitted (never empty). The check is itself a Spark
-    * job whenever the table is parquet-backed or matches a cached plan,
-    * which would add a job to every fit. */
-  private def assignNearest(vecs: DataFrame, centers: DataFrame,
-                            idCol: String, vecCol: String,
-                            metaCols: Seq[String]): DataFrame = {
     // struct field order (cell, center): sort_array orders by cell id,
     // so the argmin scan order — and therefore tie behavior — is
     // deterministic regardless of the centroid table's partitioning
@@ -396,12 +316,14 @@ object Similarity {
         .as("__ctrs")))
     // float subtract/multiply + double accumulate per cell (a plain
     // argmin over the collected centers reproduces it, spec-pinned);
-    // struct (d2, cell) ordering keeps ties on the lowest cell id
-    val best = array_min(transform(col("__ctrs"), c =>
+    // struct (d2, cell) ordering keeps ties on the lowest cell id. An
+    // empty table fails in this pass, not in a separate emptiness job.
+    val best = when(size(col("__ctrs")) > 0, array_min(transform(col("__ctrs"), c =>
       struct(
         aggregate(zip_with(col("c_vec"), c.getField("center"), (x, y) => (x - y) * (x - y)),
           lit(0.0d), (acc, x) => acc + x).as("d2"),
-        c.getField("cell").as("cell"))))
+        c.getField("cell").as("cell")))))
+      .otherwise(raise_error(lit("centroid table is empty")))
     vecs.select(col(idCol).as("neighbor_id") +: col(vecCol).as("c_vec") +:
         metaCols.map(col): _*)
       .crossJoin(ctrRow)
@@ -428,11 +350,8 @@ object Similarity {
                      idCol: String, vecCol: String): IvfIndex = {
     val metaCols = index.assigned.columns.toSeq
       .filterNot(Set("neighbor_id", "c_vec", "cell"))
-    IvfIndex(index.centers,
-      index.assigned.unionByName(
-        assignToCells(newVecs, index.centers, idCol, vecCol, metaCols)),
-      version = index.version + 1, folded = index.folded,
-      parent = index.savedDir.orElse(index.parent))
+    IndexFamily.Ivf.nextVersion(index.copy(assigned = index.assigned.unionByName(
+      assignToCells(newVecs, index.centers, idCol, vecCol, metaCols))))
   }
 
   /** Shrink an [[IvfIndex]] by retired ids — the IVF leg of the removal
@@ -448,10 +367,8 @@ object Similarity {
   def removeFromIvfIndex(index: IvfIndex, removedIds: DataFrame,
                          idCol: String): IvfIndex = {
     val rm = removedIds.select(col(idCol).as("neighbor_id")).distinct()
-    IvfIndex(index.centers,
-      index.assigned.join(rm, Seq("neighbor_id"), "left_anti"),
-      version = index.version + 1, folded = index.folded,
-      parent = index.savedDir.orElse(index.parent))
+    IndexFamily.Ivf.nextVersion(
+      index.copy(assigned = index.assigned.join(rm, Seq("neighbor_id"), "left_anti")))
   }
 
   // ---- quantizer training ---------------------------------------------
@@ -538,8 +455,7 @@ object Similarity {
       metaCols: Seq[String] = Nil): IvfIndex = {
     val centers = coarseCenters(candidates.sparkSession, trainingSample(
       candidates, idCol, vecCol, SamplePerCenter * nlist, seed), nlist, seed)
-    IvfIndex(centers,
-      assignNearest(candidates, centers, idCol, vecCol, metaCols))
+    IvfIndex(centers, assignToCells(candidates, centers, idCol, vecCol, metaCols))
   }
 
   /** Each query's `nprobe` nearest cells by squared Euclidean distance
@@ -666,7 +582,7 @@ object Similarity {
                            savedDir: Option[String] = None,
                            version: Long = 1L,
                            folded: Seq[String] = Nil,
-                           parent: Option[String] = None) {
+                           parent: Option[String] = None) extends Versioned {
     def cache(): PqIndex = { codes.cache(); this }
     def unpersist(): PqIndex = { codes.unpersist(false); this }
 
@@ -676,37 +592,29 @@ object Similarity {
     def filtered(predicate: Column): PqIndex =
       copy(codes = codes.filter(predicate), savedDir = None, parent = None)
 
-    /** Persist codes + codebooks + hyperparameters; a load can never
-      * probe with a mismatched codebook. Same stale-guard scope note as
-      * [[LshIndex.save]]. */
-    def save(dir: String): PqIndex = {
-      val spark = codes.sparkSession
-      import spark.implicits._
-      codes.write.mode("overwrite").parquet(s"$dir/codes")
-      codebooks.zipWithIndex.flatMap { case (cells, sub) =>
-        cells.zipWithIndex.map { case (c, cell) => (sub, cell, c) }
-      }.toDF("sub", "cell", "center")
-        .write.mode("overwrite").parquet(s"$dir/codebooks")
-      Seq((m, ksub, dim)).toDF("m", "ksub", "dim")
-        .write.mode("overwrite").parquet(s"$dir/meta")
-      IndexMeta.write(spark, dir, IndexMeta.Meta(version,
-        parent = parent.orElse(savedDir).filterNot(_ == dir), folded = folded,
-        rows = IndexMeta.rowCounts(spark, dir, Seq("codes"))))
-      copy(savedDir = Some(dir))
-    }
+    /** Persist codes + codebooks + hyperparameters ([[IndexFamily.save]]);
+      * a load can never probe with a mismatched codebook. */
+    def save(dir: String): PqIndex = IndexFamily.Pq.save(this, dir)
 
-    /** Retire this index version in ONE call — unpersist + delete the
-      * saved tree, with the stale-handle refusal ([[IndexMeta]]). */
-    def close(): Unit = {
-      unpersist()
-      savedDir.foreach { d =>
-        val spark = codes.sparkSession
-        IndexMeta.requireCurrent(spark, d, version, "close()")
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(p, true)
-      }
-    }
+    /** Retire this index version in ONE call ([[IndexFamily.close]]). */
+    def close(): Unit = IndexFamily.Pq.close(this)
+  }
+
+  /** The codebooks as the saved (sub, cell, center) table. */
+  private[extensions] def codebookTable(spark: org.apache.spark.sql.SparkSession,
+                                        codebooks: Seq[Seq[Seq[Float]]]): DataFrame = {
+    import spark.implicits._
+    codebooks.zipWithIndex.flatMap { case (cells, sub) =>
+      cells.zipWithIndex.map { case (c, cell) => (sub, cell, c) }
+    }.toDF("sub", "cell", "center")
+  }
+
+  /** The `m` codebooks back from the rows of [[codebookTable]]. */
+  private[extensions] def codebooksFrom(rows: Array[org.apache.spark.sql.Row],
+                                        m: Int): Seq[Seq[Seq[Float]]] = {
+    val cb = rows.map(r => (r.getAs[Int]("sub"), r.getAs[Int]("cell"),
+      r.getAs[scala.collection.Seq[Float]]("center").toSeq))
+    (0 until m).map(sub => cb.filter(_._1 == sub).sortBy(_._2).map(_._3).toSeq)
   }
 
   /** `v` over its L2 norm (zero norm -> zeros), as [[withUnitVec]]. */
@@ -753,24 +661,8 @@ object Similarity {
   }
 
   def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
-                  dir: String): PqIndex = {
-    val meta = spark.read.parquet(s"$dir/meta")
-      .select(col("m"), col("ksub"), col("dim")).head()
-    val (m, ksub, dim) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val cb = spark.read.parquet(s"$dir/codebooks")
-      .select(col("sub"), col("cell"), col("center"))
-      .collect() // m*ksub rows of dsub floats — 8 KB-scale index metadata
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2)))
-    val codebooks = (0 until m).map { sub =>
-      cb.filter(_._1 == sub).sortBy(_._2).map(_._3.toSeq).toSeq
-    }
-    val stamp = IndexMeta.read(spark, dir)
-    PqIndex(codebooks, spark.read.parquet(s"$dir/codes"), m, ksub, dim,
-      savedDir = Some(dir),
-      version = stamp.map(_.version).getOrElse(1L),
-      folded = stamp.map(_.folded).getOrElse(Nil),
-      parent = stamp.flatMap(_.parent))
-  }
+                  dir: String): PqIndex =
+    IndexFamily.Pq.load(spark, dir)
 
   /** Grow a [[PqIndex]] with `newVecs` WITHOUT refitting: encode against
     * the FROZEN codebooks and union — exactly O(new vectors), the
@@ -787,9 +679,7 @@ object Similarity {
       .withColumn("codes", encodeCodes(col("__vhat"), index.codebooks, dsub))
       .select(col("neighbor_id") +: col("codes") +: col("c_vec") +:
         metaCols.map(col): _*)
-    index.copy(codes = index.codes.unionByName(enc),
-      savedDir = None, version = index.version + 1,
-      parent = index.savedDir.orElse(index.parent))
+    IndexFamily.Pq.nextVersion(index.copy(codes = index.codes.unionByName(enc)))
   }
 
   /** Shrink a [[PqIndex]] by retired ids — one streaming anti-join on
@@ -800,9 +690,8 @@ object Similarity {
   def removeFromPqIndex(index: PqIndex, removedIds: DataFrame,
                         idCol: String): PqIndex = {
     val rm = removedIds.select(col(idCol).as("neighbor_id")).distinct()
-    index.copy(codes = index.codes.join(rm, Seq("neighbor_id"), "left_anti"),
-      savedDir = None, version = index.version + 1,
-      parent = index.savedDir.orElse(index.parent))
+    IndexFamily.Pq.nextVersion(
+      index.copy(codes = index.codes.join(rm, Seq("neighbor_id"), "left_anti")))
   }
 
   /** The (query_id, q_vec, __dt) probe relation: queries normalized,
@@ -955,7 +844,7 @@ object Similarity {
                               savedDir: Option[String] = None,
                               version: Long = 1L,
                               folded: Seq[String] = Nil,
-                              parent: Option[String] = None) {
+                              parent: Option[String] = None) extends Versioned {
     def cache(): IvfPqIndex = {
       codes.cache(); vectors.cache(); centers.cache(); this
     }
@@ -976,46 +865,17 @@ object Similarity {
 
     /** Persist centers + codes (partitioned by cell) + the rerank-only
       * vectors relation (also cell-partitioned) + codebooks +
-      * hyperparameters; a load can never probe with a mismatched
-      * codebook or centroid table. `c_vec` lives ONLY in the vectors
-      * tree: storing it beside every code row meant the 32x code
-      * compression never shrank the stored footprint — at 100 TB the
-      * codes tree is the hot ADC scan and must stay codes-sized, while
-      * the vector tree is touched only by the rerank-sized exact pass
-      * (VERDICT r14 #7). Same stale-guard scope note as
-      * [[LshIndex.save]]. */
-    def save(dir: String): IvfPqIndex = {
-      val spark = codes.sparkSession
-      import spark.implicits._
-      centers.write.mode("overwrite").parquet(s"$dir/centers")
-      codes.write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dir/codes")
-      vectors.write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dir/vectors")
-      codebooks.zipWithIndex.flatMap { case (cells, sub) =>
-        cells.zipWithIndex.map { case (c, cell) => (sub, cell, c) }
-      }.toDF("sub", "cell", "center")
-        .write.mode("overwrite").parquet(s"$dir/codebooks")
-      Seq((m, ksub, dim, residual)).toDF("m", "ksub", "dim", "residual")
-        .write.mode("overwrite").parquet(s"$dir/meta")
-      IndexMeta.write(spark, dir, IndexMeta.Meta(version,
-        parent = parent.orElse(savedDir).filterNot(_ == dir), folded = folded,
-        rows = IndexMeta.rowCounts(spark, dir, Seq("codes", "vectors"))))
-      copy(savedDir = Some(dir))
-    }
+      * hyperparameters ([[IndexFamily.save]]); a load can never probe
+      * with a mismatched codebook or centroid table. `c_vec` lives ONLY
+      * in the vectors tree: storing it beside every code row meant the
+      * 32x code compression never shrank the stored footprint — at
+      * 100 TB the codes tree is the hot ADC scan and must stay
+      * codes-sized, while the vector tree is touched only by the
+      * rerank-sized exact pass (VERDICT r14 #7). */
+    def save(dir: String): IvfPqIndex = IndexFamily.IvfPq.save(this, dir)
 
-    /** Retire this index version in ONE call — unpersist + delete the
-      * saved tree, with the stale-handle refusal ([[IndexMeta]]). */
-    def close(): Unit = {
-      unpersist()
-      savedDir.foreach { d =>
-        val spark = codes.sparkSession
-        IndexMeta.requireCurrent(spark, d, version, "close()")
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(p, true)
-      }
-    }
+    /** Retire this index version in ONE call ([[IndexFamily.close]]). */
+    def close(): Unit = IndexFamily.IvfPq.close(this)
   }
 
   /** Fit an IVF-PQ index: the coarse k-means quantizer assigns every
@@ -1058,10 +918,8 @@ object Similarity {
       if (!residual) train.map(unitVec) else residuals(train, centerTable),
       m, ksub, seed)
     val dim = pts.head.length
-    val assigned =
-      if (centers.isEmpty) assignNearest(candidates, centerTable, idCol, vecCol, metaCols)
-      else assignToCells(candidates, centerTable, idCol, vecCol, metaCols)
-    val base0 = withUnitVec(assigned, "c_vec")
+    val base0 = withUnitVec(
+      assignToCells(candidates, centerTable, idCol, vecCol, metaCols), "c_vec")
     val base =
       if (!residual) base0
       else subtractCellCenter(base0, centerTable)
@@ -1109,36 +967,8 @@ object Similarity {
       .drop("__chat")
 
   def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): IvfPqIndex = {
-    val metaDf = spark.read.parquet(s"$dir/meta")
-    // pre-residual trees carry no flag — they are direct-encoded
-    val residual = metaDf.schema.fieldNames.contains("residual") &&
-      metaDf.select(col("residual")).head().getBoolean(0)
-    val meta = metaDf.select(col("m"), col("ksub"), col("dim")).head()
-    val (m, ksub, dim) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val cb = spark.read.parquet(s"$dir/codebooks")
-      .select(col("sub"), col("cell"), col("center"))
-      .collect() // m*ksub rows of dsub floats — 8 KB-scale index metadata
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2)))
-    val codebooks = (0 until m).map { sub =>
-      cb.filter(_._1 == sub).sortBy(_._2).map(_._3.toSeq).toSeq
-    }
-    val stamp = IndexMeta.read(spark, dir)
-    val codes = spark.read.parquet(s"$dir/codes")
-    // backward compatible with pre-split trees (c_vec inline in codes):
-    // derive the vectors relation from the codes read instead
-    val vPath = new org.apache.hadoop.fs.Path(s"$dir/vectors")
-    val vectors =
-      if (vPath.getFileSystem(spark.sessionState.newHadoopConf()).exists(vPath))
-        spark.read.parquet(s"$dir/vectors")
-      else codes.select(col("neighbor_id"), col("cell"), col("c_vec"))
-    IvfPqIndex(spark.read.parquet(s"$dir/centers"), codebooks,
-      codes.drop("c_vec"), vectors, m, ksub, dim, residual = residual,
-      savedDir = Some(dir),
-      version = stamp.map(_.version).getOrElse(1L),
-      folded = stamp.map(_.folded).getOrElse(Nil),
-      parent = stamp.flatMap(_.parent))
-  }
+                     dir: String): IvfPqIndex =
+    IndexFamily.IvfPq.load(spark, dir)
 
   /** Grow an [[IvfPqIndex]] with `newVecs` WITHOUT re-training either
     * quantizer: assign to the FROZEN cells ([[assignToCells]]) and
@@ -1161,13 +991,11 @@ object Similarity {
       else subtractCellCenter(assigned0, index.centers)
     val enc = assigned
       .withColumn("codes", encodeCodes(col("__vhat"), index.codebooks, dsub))
-    index.copy(
+    IndexFamily.IvfPq.nextVersion(index.copy(
       codes = index.codes.unionByName(enc.select(col("neighbor_id") +:
         col("cell") +: col("codes") +: metaCols.map(col): _*)),
       vectors = index.vectors.unionByName(
-        enc.select(col("neighbor_id"), col("cell"), col("c_vec"))),
-      savedDir = None, version = index.version + 1,
-      parent = index.savedDir.orElse(index.parent))
+        enc.select(col("neighbor_id"), col("cell"), col("c_vec")))))
   }
 
   /** Shrink an [[IvfPqIndex]] by retired ids — the IVFADC leg of the
@@ -1180,11 +1008,9 @@ object Similarity {
   def removeFromIvfPqIndex(index: IvfPqIndex, removedIds: DataFrame,
                            idCol: String): IvfPqIndex = {
     val rm = removedIds.select(col(idCol).as("neighbor_id")).distinct()
-    index.copy(
+    IndexFamily.IvfPq.nextVersion(index.copy(
       codes = index.codes.join(rm, Seq("neighbor_id"), "left_anti"),
-      vectors = index.vectors.join(rm, Seq("neighbor_id"), "left_anti"),
-      savedDir = None, version = index.version + 1,
-      parent = index.savedDir.orElse(index.parent))
+      vectors = index.vectors.join(rm, Seq("neighbor_id"), "left_anti")))
   }
 
   /** Probe a fitted [[IvfPqIndex]]: rank the query's `nprobe` nearest

@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 
-import graft.extensions.IndexFamily
+import graft.extensions.{IndexFamily, Versioned}
 import graft.sinks.AppendSink
+import graft.sources.ParquetMeta
 
 /**
  * Structured-Streaming CDC ingestion — the streaming re-expression of the
@@ -64,7 +65,7 @@ object CdcStream {
     * what `readStream.schema(...)` needs. */
   def rawFileSchema(spark: SparkSession, path: String): StructType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(path).schema
+    ParquetMeta.read(spark, path).schema
   }
 
   /**
@@ -173,18 +174,17 @@ object CdcStream {
     * metadata read, no Spark job) and apply the policy. `ref` carries
     * the current handle across triggers — foreachBatch runs serially on
     * the driver, so a plain reference cell is race-free. */
-  private def resolveHandle[I](spark: SparkSession,
-                               ref: java.util.concurrent.atomic.AtomicReference[I],
-                               policy: CompactionPolicy)(
-                               implicit fam: IndexFamily[I]): I = {
+  private def resolveHandle[I <: Versioned](
+      spark: SparkSession, ref: java.util.concurrent.atomic.AtomicReference[I],
+      policy: CompactionPolicy)(implicit fam: IndexFamily[I]): I = {
     val cur = ref.get()
-    (policy, fam.savedDir(cur)) match {
+    (policy, cur.savedDir) match {
       case (FrozenHandle, _) | (_, None) => cur
       case (_, Some(d)) =>
         graft.extensions.IndexMeta.read(spark, d).map(_.version) match {
-          case Some(v) if v != fam.version(cur) => policy match {
+          case Some(v) if v != cur.version => policy match {
             case FailStreamOnCompaction => throw new IllegalStateException(
-              s"restart required: index version moved (${fam.version(cur)} -> $v) " +
+              s"restart required: index version moved (${cur.version} -> $v) " +
                 s"at $d — an offline compaction saved a new version in place " +
                 "while this ingest ran; the frozen handle's membership/stats " +
                 "would misroute from here on. Restart the ingest on the new " +
@@ -843,7 +843,7 @@ object CdcStream {
     * session memory. (BM25's extend snapshots the sink read eagerly, so
     * batches a still-running ingest appends after the fold cannot leak
     * into later evaluations of its lazy df merge.) */
-  def compactAccepted[I](
+  def compactAccepted[I <: Versioned](
       spark: SparkSession, sinkDir: String, index: I,
       idCol: String, contentCol: String,
       provenanceDir: Option[String] = None,
@@ -853,8 +853,8 @@ object CdcStream {
     // tree then refuse each other in BOTH directions
     val marker = fam.legAcceptMarker
     val netMarker = Seq(fam.acceptMarker).filter(_ != marker)
-    fam.savedDir(index).foreach(d => graft.extensions.IndexMeta
-      .requireCurrent(spark, d, fam.version(index), "compaction"))
+    index.savedDir.foreach(d => graft.extensions.IndexMeta
+      .requireCurrent(spark, d, index.version, "compaction"))
     consumeSinkTree(spark, sinkDir, marker,
         alsoRefuse = netMarker).map { accepted =>
       // the fold runs BEFORE any marker lands (durable-then-mark: a crash
@@ -868,7 +868,7 @@ object CdcStream {
           // stamps it into the tree (IndexMeta)
           val bumped = fam.withFolded(
             fam.extend(index, accepted.dropDuplicates(idCol), idCol, contentCol),
-            fam.folded(index) :+ sinkDir)
+            index.folded :+ sinkDir)
           saveTo.fold(bumped)(fam.save(bumped, _))
         } catch { case e: Throwable =>
           releaseFoldLease(spark, sinkDir, marker); throw e }
@@ -941,7 +941,7 @@ object CdcStream {
     * caller persists the lazy bump would orphan all three trees'
     * events): the bumped index is saved BEFORE any marker lands, so a
     * crash re-runs the fold instead. */
-  def compact[I](
+  def compact[I <: Versioned](
       spark: SparkSession,
       acceptDir: Option[String], upsertDir: Option[String],
       retractDir: Option[String],
@@ -960,7 +960,7 @@ object CdcStream {
       val bumped = fam.withFolded(
         if (shrinkOnly) shrunk
         else fam.extend(shrunk, addRows, idCol, contentCol),
-        fam.folded(index) ++ contributing)
+        index.folded ++ contributing)
       saveTo.fold(bumped)(fam.save(bumped, _))
     }
     (if (fam.retractsByImage)
@@ -1010,15 +1010,15 @@ object CdcStream {
     * THROWS (a contract refusal: NULL image, within-batch tie) releases
     * its leases on the way out, so a fixed feed re-runs with no manual
     * step. */
-  private def netCompaction[I](
+  private def netCompaction[I <: Versioned](
       spark: SparkSession,
       acceptDir: Option[String], upsertDir: Option[String],
       retractDir: Option[String], index: I,
       idCol: String, imgCol: String)(
       fold: (DataFrame, DataFrame, Seq[String]) => I)(
       implicit fam: IndexFamily[I]): Option[I] = {
-    fam.savedDir(index).foreach(d => graft.extensions.IndexMeta
-      .requireCurrent(spark, d, fam.version(index), "compaction"))
+    index.savedDir.foreach(d => graft.extensions.IndexMeta
+      .requireCurrent(spark, d, index.version, "compaction"))
     maintenanceEvents(spark, idCol,
       (acceptDir, fam.acceptMarker,
         (df: DataFrame) => df.select(col(idCol), col("batch"),
@@ -1057,7 +1057,7 @@ object CdcStream {
     * the netted retract set BEFORE any stats arithmetic; its refusal
     * names the per-leg fold (and tree) or the net compaction it ran
     * in. */
-  private def netBm25Compaction[I](
+  private def netBm25Compaction[I <: Versioned](
       spark: SparkSession,
       acceptDir: Option[String], upsertDir: Option[String],
       retractDir: Option[String], stats: I,
@@ -1069,8 +1069,8 @@ object CdcStream {
       case (None, None, Some(d)) => s"BM25 retract fold of $d"
       case _ => "BM25 net-effect compaction retract set"
     }
-    fam.savedDir(stats).foreach(d => graft.extensions.IndexMeta
-      .requireCurrent(spark, d, fam.version(stats), "compaction"))
+    stats.savedDir.foreach(d => graft.extensions.IndexMeta
+      .requireCurrent(spark, d, stats.version, "compaction"))
     maintenanceEvents(spark, idCol,
       (acceptDir, fam.acceptMarker,
         (df: DataFrame) => df.select(col(idCol), col("batch"),
@@ -1253,7 +1253,7 @@ object CdcStream {
       try refuseMarked()
       catch { case e: Throwable =>
         fs.delete(leasePath(root, marker), false); throw e }
-      val df = spark.read.parquet(sinkDir)
+      val df = ParquetMeta.read(spark, sinkDir)
       Some(if (keepBatch) df else df.drop("batch"))
     }
   }

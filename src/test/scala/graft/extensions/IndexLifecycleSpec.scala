@@ -1,0 +1,119 @@
+package graft.extensions
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
+
+/** The saved-tree lifecycle every family shares ([[IndexFamily.save]],
+  * [[IndexFamily.load]]): an in-place upgrade round-trips, an unrelated
+  * save over a stamped tree is refused, and a load reads no schema. */
+class IndexLifecycleSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  private def docs = graft.sources.Tables.load(spark, TestSpark.Sf0001, "documents")
+    .select(col("doc_id"), col("text"))
+  private def vecs = graft.sources.Tables.load(spark, TestSpark.Sf0001, "embeddings")
+    .select(col("vec_id"), col("embedding"))
+
+  /** (base rows, extension rows, id column, content column). */
+  private def data(fam: IndexFamily[_ <: Versioned]): (DataFrame, DataFrame, String, String) =
+    if (fam.imageType == StringType)
+      (docs.filter(col("doc_id") < 100),
+        docs.filter(col("doc_id").between(100, 149)), "doc_id", "text")
+    else
+      (vecs.filter(col("vec_id") < 200),
+        vecs.filter(col("vec_id").between(200, 259)), "vec_id", "embedding")
+
+  private def fit[I <: Versioned](fam: IndexFamily[I], df: DataFrame): I =
+    (fam.name match {
+      case "text" => Dedup.buildCorpusIndex(df, "doc_id", "text")
+      case "bm25" => Search.bm25Fit(df, "doc_id", "text")
+      case "embedding" => Dedup.buildEmbeddingIndex(df, "vec_id", "embedding")
+      case "ivf" => Similarity.ivfFit(df, "vec_id", "embedding", nlist = 4)
+      case "ivfpq" => Similarity.ivfPqFit(df, "vec_id", "embedding", nlist = 4, m = 8, ksub = 8)
+      case "lsh" => Similarity.lshFit(df, "vec_id", "embedding")
+      case "pq" => Similarity.pqFit(df, "vec_id", "embedding", m = 8, ksub = 8)
+    }).asInstanceOf[I]
+
+  /** Every relation's rows, columns by name, as a sorted multiset. */
+  private def contents[I <: Versioned](fam: IndexFamily[I], ix: I): Map[String, Seq[String]] =
+    fam.relations(ix).map { r =>
+      r.name -> r.frame.select(r.frame.columns.sorted.map(col).toIndexedSeq: _*).collect()
+        .map(_.toSeq.map {
+          case a: scala.collection.Seq[_] => a.toList
+          case x => x
+        }.mkString("|")).toSeq.sorted
+    }.toMap
+
+  private def saved(fam: IndexFamily[_ <: Versioned]): String = {
+    val dir = TestSpark.tmpDir(s"graft-lifecycle-${fam.name}")
+    def go[I <: Versioned](f: IndexFamily[I]): Unit = { f.save(fit(f, data(f)._1), dir); () }
+    go(fam)
+    dir
+  }
+
+  /** Jobs a load may start: a `head` of the parameter table, and the
+    * codebook collect of the PQ families. */
+  private val loadJobs = Map("ivf" -> 0, "embedding" -> 1, "lsh" -> 1, "bm25" -> 1,
+    "text" -> 1, "pq" -> 2, "ivfpq" -> 2)
+
+  IndexFamily.all.foreach { fam =>
+    test(s"${fam.name}: extend(load(d)).save(d) upgrades the tree in place") {
+      def check[I <: Versioned](f: IndexFamily[I]): Unit = {
+        val dir = saved(f)
+        val (_, more, idCol, contentCol) = data(f)
+        val v1 = contents(f, f.load(spark, dir))
+        val ext = f.extend(f.load(spark, dir), more, idCol, contentCol)
+        val want = contents(f, ext)
+        assert(want != v1, "the extension must change the index")
+        val out = f.save(ext, dir)
+        assert(out.version == 2L && out.savedDir.contains(dir))
+        assert(IndexMeta.read(spark, dir).map(_.version).contains(2L))
+        assert(!new java.io.File(dir).list().exists(_.endsWith("__stage")),
+          "the save must leave no stage directory behind")
+        assert(contents(f, out) == want, "the returned handle reads the saved tree")
+        val reloaded = f.load(spark, dir)
+        assert(reloaded.version == 2L)
+        assert(contents(f, reloaded) == want, "a fresh load reads the extended tree")
+        assert(f.params(reloaded) == f.params(ext))
+        f.close(reloaded)
+      }
+      check(fam)
+    }
+
+    test(s"${fam.name}: saving an unrelated fit over a stamped tree is refused") {
+      def check[I <: Versioned](f: IndexFamily[I]): Unit = {
+        val dir = saved(f)
+        val before = contents(f, f.load(spark, dir))
+        val err = intercept[IllegalArgumentException](f.save(fit(f, data(f)._1), dir))
+        assert(err.getMessage.contains("save refused"))
+        val kept = f.load(spark, dir)
+        assert(kept.version == 1L)
+        assert(contents(f, kept) == before, "the refused save must leave the tree intact")
+        f.close(kept)
+      }
+      check(fam)
+    }
+
+    test(s"${fam.name}: a load starts no schema-inference job") {
+      val dir = saved(fam)
+      val (ix, sites) = TestSpark.jobSites(fam.load(spark, dir))
+      info(s"${sites.size} job(s): $sites")
+      assert(!sites.exists(_.startsWith("parquet at")), s"schema inference in $sites")
+      assert(sites.size <= loadJobs(fam.name), s"jobs $sites")
+      assert(ix.version == 1L)
+    }
+  }
+
+  test("extending a loaded IVF index starts no job") {
+    val dir = saved(IndexFamily.Ivf)
+    val loaded = Similarity.loadIvfIndex(spark, dir)
+    val more = data(IndexFamily.Ivf)._2
+    val (_, sites) = TestSpark.jobSites(
+      Similarity.extendIvfIndex(loaded, more, "vec_id", "embedding"))
+    assert(sites.isEmpty, s"extend started $sites")
+  }
+}

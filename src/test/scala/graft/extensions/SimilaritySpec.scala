@@ -330,6 +330,16 @@ class SimilaritySpec extends AnyFunSuite {
     assert(pqRemoved.version === pqAll.version + 1)
   }
 
+  test("assignToCells fails on an empty centroid table, naming it") {
+    val e = graft.sources.Tables.load(spark, TestSpark.Sf0001, "embeddings")
+    val idx = Similarity.ivfFit(e, "vec_id", "embedding", nlist = 4)
+    val err = intercept[Exception](Similarity.assignToCells(e,
+      idx.centers.filter(lit(false)), "vec_id", "embedding").collect())
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("centroid table is empty")), s"got $err")
+  }
+
   test("assignToCells ships centroids by broadcast, not as a plan literal") {
     val e = graft.sources.Tables.load(spark, graft.TestSpark.Sf0001, "embeddings")
     val idx = Similarity.ivfFit(e, "vec_id", "embedding", nlist = 8)

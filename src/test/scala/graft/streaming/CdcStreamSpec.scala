@@ -2039,6 +2039,59 @@ class CdcStreamSpec extends AnyFunSuite {
       assert(ups2.filter(col("doc_id") === 910L).count() === 1L)
       assert(ups2.filter(col("doc_id") === 7L).count() === 0L)
     } finally { if (q2.isActive) q2.stop() }
+
+    // ---- ReresolveOnCompaction, a vector gate compacted IN PLACE -------
+    val e = graft.sources.Tables.load(spark, TestSpark.Sf0001, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    def fresh(id: Long, srcId: Long, op: String) =
+      e.filter(col("vec_id") === srcId).select(lit(id).as("vec_id"),
+        transform(col("embedding"), x => (x * lit(-1.0f)).cast("float")).as("embedding"),
+        lit(op).as("op"))
+    val gateDir = TestSpark.tmpDir("graft-mech3-gate")
+    Dedup.saveEmbeddingIndex(Dedup.buildEmbeddingIndex(
+      e.filter(col("vec_id") < 200), "vec_id", "embedding"), gateDir)
+    val gate = Dedup.loadEmbeddingIndex(spark, gateDir)
+    val g1 = gate.version
+    val src3 = TestSpark.tmpDir("graft-mech3-src")
+    val (a3, u3, r3) = (TestSpark.tmpDir("graft-mech3-a"),
+      TestSpark.tmpDir("graft-mech3-u"), TestSpark.tmpDir("graft-mech3-r"))
+    // window 1: vector 7 leaves, novel vector 5000 arrives
+    fresh(5000L, 250L, "insert")
+      .unionByName(e.filter(col("vec_id") === 7L).withColumn("op", lit("delete")))
+      .coalesce(1).write.mode("append").parquet(src3)
+    val q3 = CdcStream.startVecMaintenanceIngest(
+      spark.readStream.schema(spark.read.parquet(src3).schema).parquet(src3),
+      gate, "vec_id", "embedding", "op", a3, u3, r3,
+      TestSpark.tmpDir("graft-mech3-ckpt"),
+      availableNow = false, batchPeriodSecs = 1L,
+      onCompaction = CdcStream.ReresolveOnCompaction)
+    try {
+      q3.processAllAvailable()
+      assert(spark.read.parquet(s"$a3/epoch=$g1")
+        .filter(col("vec_id") === 5000L).count() === 1L)
+      // offline: fold this epoch's trees into the gate's OWN tree
+      val folded3 = CdcStream.compact(spark, Some(s"$a3/epoch=$g1"),
+        Some(s"$u3/epoch=$g1"), Some(s"$r3/epoch=$g1"), gate,
+        "vec_id", "embedding", saveTo = Some(gateDir))
+      val g3 = folded3.version
+      assert(g3 === g1 + 2)
+      val reloaded = Dedup.loadEmbeddingIndex(spark, gateDir)
+      assert(reloaded.version === g3)
+      assert(reloaded.vectors.select("doc_id").as[Long].collect().toSet ===
+        ((0L until 200L).toSet - 7L + 5000L))
+      assert(folded3.vectors.count() === reloaded.vectors.count())
+      // window 2: vector 7 comes back with fresh content (novel to the
+      // compacted gate) and 5000, now served, re-arrives
+      Thread.sleep(1100)
+      fresh(7L, 251L, "insert").unionByName(fresh(5000L, 250L, "insert"))
+        .coalesce(1).write.mode("append").parquet(src3)
+      q3.processAllAvailable()
+      val acc3 = spark.read.parquet(s"$a3/epoch=$g3")
+      assert(acc3.filter(col("vec_id") === 7L).count() === 1L)
+      val ups3 = spark.read.parquet(s"$u3/epoch=$g3")
+      assert(ups3.filter(col("vec_id") === 5000L).count() === 1L)
+      assert(ups3.filter(col("vec_id") === 7L).count() === 0L)
+    } finally { if (q3.isActive) q3.stop() }
   }
 
   test("mapGroupsWithState user sessions accumulate per key") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.TestSpark
-import graft.extensions.{Dedup, IndexFamily, Search, Similarity}
+import graft.extensions.{Dedup, IndexFamily, Search, Similarity, Versioned}
 
 /** The fixture behind [[MarkerLayoutSpec]]: small indexes of all seven
   * families, fresh one-batch sink trees, and the compaction entry point
@@ -56,7 +56,7 @@ object MarkerLayoutFolds {
                  else vecs(spark).filter(col("vec_id") < 64)
     val (a, u, r) = (trees("accept"), trees("upsert"), trees("retract"))
     val (id, c) = if (isText(family)) ("doc_id", "text") else ("vec_id", "embedding")
-    def run[I](ix: I)(implicit fam: IndexFamily[I]): Unit = {
+    def run[I <: Versioned](ix: I)(implicit fam: IndexFamily[I]): Unit = {
       val old = if (fam.retractsByImage) Some("old_text") else None
       leg match {
         case "accept" => CdcStream.compactAccepted(spark, a, ix, id, c)
