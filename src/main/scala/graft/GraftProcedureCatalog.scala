@@ -141,6 +141,9 @@ object GraftProcedureCatalog {
 
   private val families = IndexFamily.all.map(_.name)
 
+  /** Every family's fit hyperparameters, in registry order. */
+  private val hyperNames = IndexFamily.all.flatMap(_.hyperparameters.map(_._1)).distinct
+
   /** The named family from the [[IndexFamily]] registry, or a refusal
     * listing the known ones. */
   private def family(proc: String, f: String): IndexFamily[_ <: Versioned] =
@@ -162,7 +165,8 @@ object GraftProcedureCatalog {
   private object CompactMaintenance extends GraftProcedure(
     "compact_maintenance",
     "Net-effect CDC compaction of the accept/upsert/retract sink trees " +
-      "into a saved index, as one durable version bump",
+      "into a saved index, saved once; a fold that runs moves the " +
+      "version by 2 (remove, then extend)",
     Array(
       in("family", families.mkString("|")),
       in("accept_dir", "the maintenance ingest's accept sink tree"),
@@ -272,17 +276,18 @@ object GraftProcedureCatalog {
     * content_col[, hyperparameters...])` — the FIT tier of the pure-SQL
     * lifecycle (VERDICT r18 #4): the TVF tier probes saved trees, the
     * CALL maintenance tier compacts/refreshes them, and this procedure
-    * creates them in the first place, delegating to the exact Scala fit
-    * entry points (`buildCorpusIndex`/`bm25Fit`/`buildEmbeddingIndex`/
-    * `ivfFit`/`ivfPqFit`/`lshFit`/`pqFit`, all deterministic — fixed
-    * seeds — so CALL-fit ≡ API-fit at the tree level, spec-pinned) and
-    * saving the tree to `save_to` through the one guarded save
+    * creates them in the first place through the family's own
+    * [[graft.extensions.IndexFamily.fit]] (deterministic — fixed seeds —
+    * so CALL-fit ≡ API-fit at the tree level, spec-pinned) and saves the
+    * tree to `save_to` through the one guarded save
     * ([[graft.extensions.IndexFamily.save]]: clobbering an unrelated
-    * stamped tree refuses). Hyperparameters are
-    * per-family and literal-guarded the TVF way: a parameter that does
-    * not apply to the family, or does not parse as its type, refuses
-    * NAMING the parameter — a typo'd `planes` on an `ivf` fit must not
-    * silently fit a default-shaped index. */
+    * stamped tree refuses). The hyperparameters, their order and their
+    * defaults come from the registry
+    * ([[graft.extensions.IndexFamily.hyperparameters]]); each is
+    * literal-guarded the TVF way: a parameter that does not apply to the
+    * family, or does not parse as its type, refuses NAMING the parameter
+    * — a typo'd `planes` on an `ivf` fit must not silently fit a
+    * default-shaped index. */
   private object FitIndex extends GraftProcedure(
     "fit_index",
     "Fit an index of the named family on a table/view and save the " +
@@ -292,93 +297,46 @@ object GraftProcedureCatalog {
       in("source_table", "table/view to fit on (session catalog)"),
       in("save_to", "directory for the fitted tree"),
       in("id_col", "document/vector id column"),
-      in("content_col", "text column (text/bm25) or vector column"),
-      inOpt("shingle_k", "text: shingle width (default 3)"),
-      inOpt("max_gram_df", "text: df cut (default 100)"),
-      inOpt("planes", "embedding/lsh: hyperplanes (default 12)"),
-      inOpt("bands", "embedding: bands (default 8); lsh (default 4)"),
-      inOpt("nlist", "ivf/ivfpq: coarse cells (default 16)"),
-      inOpt("m", "pq/ivfpq: subvectors (default 8)"),
-      inOpt("ksub", "pq/ivfpq: codewords per subvector (default 16)"),
-      inOpt("residual", "ivfpq: true|false residual encoding (default false)"))) {
+      in("content_col", "text column (text/bm25) or vector column")) ++
+      hyperNames.map(n => inOpt(n, IndexFamily.all.flatMap(f =>
+        f.hyperparameters.collect { case (`n`, d) => s"${f.name} (default $d)" })
+        .mkString("; ")))) {
 
-    private val applicable: Map[String, Set[String]] = Map(
-      "text" -> Set("shingle_k", "max_gram_df"),
-      "bm25" -> Set.empty,
-      "embedding" -> Set("planes", "bands"),
-      "ivf" -> Set("nlist"),
-      "ivfpq" -> Set("nlist", "m", "ksub", "residual"),
-      "lsh" -> Set("planes", "bands"),
-      "pq" -> Set("m", "ksub"))
-
-    private def intArg(name: String, v: Option[String], default: Int): Int =
-      v.map { s =>
+    /** `s` as the type of `default`, refused naming the parameter. */
+    private def parse(name: String, s: String, default: Any): Any = default match {
+      case _: Int =>
         try s.trim.toInt
         catch { case _: NumberFormatException =>
           throw new IllegalArgumentException(
             s"fit_index: parameter '$name' must be an integer, got '$s'") }
-      }.getOrElse(default)
-
-    private def boolArg(name: String, v: Option[String],
-                        default: Boolean): Boolean =
-      v.map(_.trim.toLowerCase match {
+      case _: Boolean => s.trim.toLowerCase match {
         case "true" => true
         case "false" => false
-        case s => throw new IllegalArgumentException(
-          s"fit_index: parameter '$name' must be true or false, got '$s'")
-      }).getOrElse(default)
+        case v => throw new IllegalArgumentException(
+          s"fit_index: parameter '$name' must be true or false, got '$v'")
+      }
+    }
 
     override def call(input: InternalRow): util.Iterator[Scan] = {
-      val spark = SparkSession.active
-      import graft.extensions.{Dedup, Search, Similarity}
       val family = str(input, 0).toLowerCase
       val sourceTable = str(input, 1)
       val saveTo = str(input, 2)
       val (idCol, contentCol) = (str(input, 3), str(input, 4))
-      val hyper = Seq("shingle_k", "max_gram_df", "planes", "bands",
-        "nlist", "m", "ksub", "residual")
-        .zipWithIndex.map { case (n, i) => n -> strOpt(input, 5 + i) }.toMap
-      val ok = applicable(GraftProcedureCatalog.family("fit_index", family).name)
-      hyper.collect { case (n, Some(_)) if !ok(n) => n }.toSeq.sorted match {
+      val fam = GraftProcedureCatalog.family("fit_index", family)
+      val takes = fam.hyperparameters.toMap
+      val passed = hyperNames.zipWithIndex.flatMap { case (n, i) =>
+        strOpt(input, 5 + i).map(n -> _) }
+      passed.map(_._1).filterNot(takes.contains) match {
         case Seq() => ()
         case bad => throw new IllegalArgumentException(
-          s"fit_index: parameter(s) ${bad.mkString(", ")} do not apply to " +
-            s"family '$family'" + (if (ok.isEmpty) " (it has no " +
-              "hyperparameters)" else s" — it takes ${ok.toSeq.sorted
+          s"fit_index: parameter(s) ${bad.sorted.mkString(", ")} do not apply to " +
+            s"family '$family'" + (if (takes.isEmpty) " (it has no " +
+              "hyperparameters)" else s" — it takes ${takes.keys.toSeq.sorted
               .mkString(", ")}"))
       }
-      val df = spark.table(sourceTable)
-      val version = family match {
-        case "text" =>
-          Dedup.saveCorpusIndex(Dedup.buildCorpusIndex(df, idCol, contentCol,
-            shingleK = intArg("shingle_k", hyper("shingle_k"), 3),
-            maxGramDf = intArg("max_gram_df", hyper("max_gram_df"), 100)),
-            saveTo).version
-        case "bm25" =>
-          Search.bm25Fit(df, idCol, contentCol).save(saveTo).version
-        case "embedding" =>
-          Dedup.saveEmbeddingIndex(Dedup.buildEmbeddingIndex(df, idCol,
-            contentCol, planes = intArg("planes", hyper("planes"), 12),
-            bands = intArg("bands", hyper("bands"), 8)), saveTo).version
-        case "ivf" =>
-          Similarity.ivfFit(df, idCol, contentCol,
-            nlist = intArg("nlist", hyper("nlist"), 16)).save(saveTo).version
-        case "ivfpq" =>
-          Similarity.ivfPqFit(df, idCol, contentCol,
-            nlist = intArg("nlist", hyper("nlist"), 16),
-            m = intArg("m", hyper("m"), 8),
-            ksub = intArg("ksub", hyper("ksub"), 16),
-            residual = boolArg("residual", hyper("residual"), default = false))
-            .save(saveTo).version
-        case "lsh" =>
-          Similarity.lshFit(df, idCol, contentCol,
-            planes = intArg("planes", hyper("planes"), 12),
-            bands = intArg("bands", hyper("bands"), 4)).save(saveTo).version
-        case "pq" =>
-          Similarity.pqFit(df, idCol, contentCol,
-            m = intArg("m", hyper("m"), 8),
-            ksub = intArg("ksub", hyper("ksub"), 16)).save(saveTo).version
-      }
+      val hyper = passed.map { case (n, v) => n -> parse(n, v, takes(n)) }.toMap
+      val version = fitAndSave(fam, SparkSession.active.table(sourceTable),
+        idCol, contentCol, hyper, saveTo)
       val row = InternalRow(UTF8String.fromString(family),
         UTF8String.fromString(sourceTable), UTF8String.fromString(saveTo),
         version)
@@ -388,6 +346,12 @@ object GraftProcedureCatalog {
       }
       util.Collections.singletonList(scan).iterator()
     }
+
+    private def fitAndSave[I <: Versioned](fam: IndexFamily[I], df: DataFrame,
+                                           idCol: String, contentCol: String,
+                                           hyper: Map[String, Any],
+                                           saveTo: String): Long =
+      fam.save(fam.fit(df, idCol, contentCol, hyper), saveTo).version
   }
 
   private[graft] val procedures: Map[String, UnboundProcedure] = Map(

@@ -1008,10 +1008,10 @@ object CorpusOps {
 
   /** The BM25 leg of the refresh→index loop: retract the `removed` and
     * `changed` documents' contributions (exact integer subtraction —
-    * [[Search.retractBm25Stats]] needs their OLD text, which a refresh
+    * [[IndexFamily.Bm25.remove]] needs their OLD text, which a refresh
     * has on hand by construction: it just diffed against it), then fold
     * the `added` and `changed` documents' new text in via
-    * [[Search.extendBm25Stats]]. EXACT end to end:
+    * [[IndexFamily.Bm25.extend]]. EXACT end to end:
     * `refreshBm25Stats(fit(old), old, new, diff) ≡ fit(new)` — df
     * counts and the two scalars are additive in both directions, so a
     * probe against the refreshed stats is bit-identical to one against
@@ -1022,8 +1022,8 @@ object CorpusOps {
                        newDf: DataFrame, idCol: String, textCol: String,
                        diff: DataFrame): Search.Bm25Stats = {
     val (retired, fresh) = refreshIdSplit(diff, idCol)
-    Search.extendBm25Stats(
-      Search.retractBm25Stats(stats,
+    IndexFamily.Bm25.extend(
+      IndexFamily.Bm25.remove(stats,
         oldDf.join(retired, Seq(idCol), "left_semi"), idCol, textCol),
       newDf.join(fresh, Seq(idCol), "left_semi"), idCol, textCol)
   }
@@ -1039,7 +1039,7 @@ object CorpusOps {
     // execution via exchange reuse — an eager localCheckpoint here
     // re-ran the join as a standalone barrier job per call and measured
     // no better (within ambient noise) on every refresh row at sf0.1,
-    // unlike the exchange-free newSh kernel in extendCorpusIndex where
+    // unlike the exchange-free newSh kernel in IndexFamily.Text.extend where
     // the same pattern wins 2.2x. Barrier jobs that buy nothing are a
     // straggler surface at scale; keep the lazy form.
     diff.filter(col("status").isin("removed", "changed")).select(col(idCol)),

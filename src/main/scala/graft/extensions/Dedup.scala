@@ -130,7 +130,7 @@ object Dedup {
   /** Distinct 64-bit-hashed shingle sets: Jaccard over these equals exact
     * shingle-set Jaccard up to ~2^-64 collisions, and long-array set ops
     * are far cheaper than string-array ones in the verify join. */
-  private def hashedShingleSets(df: DataFrame, idCol: String, textCol: String,
+  private[extensions] def hashedShingleSets(df: DataFrame, idCol: String, textCol: String,
                                 shingleK: Int): DataFrame =
     df.select(col(idCol).as("doc_id"),
       graft.functions.HashExpressions.hashed_shingles(
@@ -381,7 +381,7 @@ object Dedup {
    * shingle batches with the same k the index was built with — a
    * mismatched k makes every candidate join miss and silently disables
    * dedup, so the parameter is not probe-side configurable. `maxGramDf`
-   * rides along for the same reason: [[extendCorpusIndex]] must re-cut
+   * rides along for the same reason: [[IndexFamily.Text.extend]] must re-cut
    * with the df the index was built with, or the extended index drifts
    * from a from-scratch build. `dfCounts` is the gram DICTIONARY —
    * (gram, df) over ALL grams including the cut ones — kept so
@@ -462,158 +462,6 @@ object Dedup {
         Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_grams"),
         coalesce(col("__ni"), lit(0L)).as("n_indexed"))
-
-  /** Grow a [[CorpusIndex]] with `newDocs` WITHOUT re-tokenizing the
-    * existing corpus — the versioning step the streaming ingest's
-    * "accepted batches do not auto-join the index" contract defers to
-    * the pipeline. Cost is O(new docs + crossing grams), NOT O(corpus):
-    * the new docs are shingled and grouped once; the stored gram
-    * dictionary ([[CorpusIndex.dfCounts]], one skinny row per distinct
-    * gram) is merged with the new-doc gram counts; and the OLD postings
-    * — the only corpus-sized relation — are touched by exactly one
-    * anti-join against the grams whose df CROSSES the cut with this
-    * extension (a near-empty set in practice, broadcast at any scale),
-    * so they stream through unregrouped. Before round 9 this regrouped
-    * every gram of old∪new per version bump — the full-corpus-gram
-    * shuffle the 100 TB story could not carry. The df-cut semantics are
-    * unchanged: a gram that crosses the cut only once the new docs
-    * arrive is dropped exactly as a from-scratch build would drop it,
-    * so extend(build(A), B) ≡ build(A ∪ B) (spec-pinned at the
-    * postings AND dictionary level). `newDocs` ids must be new
-    * (append-only versioning, the same contract a from-scratch build
-    * has on duplicate ids): re-adding an indexed id double-counts its
-    * grams' df on both paths alike. */
-  def extendCorpusIndex(index: CorpusIndex, newDocs: DataFrame,
-                        idCol: String, textCol: String): CorpusIndex = {
-    val cut = index.maxGramDf
-    // ONE shingling of the new docs, materialized eagerly: the extended
-    // index references this relation from SIX places (inverted postings
-    // -> df merge/keep/postings, the shingle union, and docStatsFrom),
-    // and Spark has no plan-level CSE outside exchange reuse — a lazy
-    // newSh re-ran the tokenize+shingle kernel once per consumer in
-    // every downstream probe plan. The checkpoint is O(new docs) of
-    // skinny (id, gram-hash array) rows — the same eager-skinny pattern
-    // as the streaming folds' event union. Measured (Scratch timeq,
-    // sf0.1, like ambient windows): dedup_incr_index_extend
-    // 4.0 -> 1.8 s min-warm. Contrast refreshIdSplit in CorpusOps,
-    // where the same pattern on an EXCHANGE-bearing relation buys
-    // nothing (exchange reuse already shares the execution).
-    val newSh = hashedShingleSets(newDocs, idCol, textCol, index.shingleK)
-      .localCheckpoint(true)
-    val newInv = newSh.select(col("doc_id"), explode(col("sh")).as("gram"))
-    val newDf = newInv.groupBy(col("gram")).agg(count(lit(1)).as("__new"))
-    // updated dictionary: df only ever grows under the append-only
-    // contract, so a full-outer merge of two skinny relations is exact
-    val mergedDf = index.dfCounts.join(newDf, Seq("gram"), "full_outer")
-      .select(col("gram"),
-        (coalesce(col("df"), lit(0L)) + coalesce(col("__new"), lit(0L))).as("df"))
-    // grams the extension pushes OVER the cut: previously kept, and only
-    // grams the new docs actually touch can move — join against newDf,
-    // never the dictionary alone
-    val crossing = index.dfCounts.filter(col("df") <= cut)
-      .join(newDf, Seq("gram"))
-      .filter(col("df") + col("__new") > cut)
-      .select(col("gram"))
-    // new postings survive iff their gram's MERGED df clears the cut
-    val newKeep = newDf.join(index.dfCounts, Seq("gram"), "left")
-      .filter(coalesce(col("df"), lit(0L)) + col("__new") <= cut)
-      .select(col("gram"))
-    val newPostings = newInv.join(newKeep, Seq("gram"), "left_semi")
-    // doc stats stay in lockstep at O(crossing + new): old docs lose
-    // exactly their postings on crossing grams (the same skinny set the
-    // postings anti-join removes), new docs get a from-scratch count
-    val dec = index.postings.join(crossing, Seq("gram"))
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("__dec"))
-    val adjustedStats = index.docStats.join(dec, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_grams"),
-        (col("n_indexed") - coalesce(col("__dec"), lit(0L))).as("n_indexed"))
-    IndexFamily.Text.nextVersion(index.copy(
-      postings = index.postings.join(crossing, Seq("gram"), "left_anti")
-        .union(newPostings),
-      shingles = index.shingles.union(newSh), dfCounts = mergedDf,
-      docStats = adjustedStats.union(docStatsFrom(newSh, newPostings))))
-  }
-
-  /** Shrink a [[CorpusIndex]] by a set of retired document ids — the
-    * REMOVAL half of the versioning lifecycle (extend is the other): a
-    * crawl refresh classifies documents `removed`/`changed`
-    * ([[CorpusOps.corpusDiff]]), and before this existed their grams
-    * stayed in the serving index forever — a probe could drop a fresh
-    * batch doc as a "duplicate" of a document the corpus no longer
-    * contains. Needs only IDS, not the retired documents' text: the
-    * index's own stored shingle relation reconstructs their grams.
-    *
-    * EXACT, not a tombstone approximation:
-    * `removeFromCorpusIndex(build(A), R) ≡ build(A \ R)` at the
-    * postings, dictionary AND doc-stats level (spec-pinned). The subtle
-    * half is the df cut running BACKWARD: a gram the removal pulls back
-    * under the cut (df was > maxGramDf, now ≤) was never indexed, but a
-    * from-scratch build on the survivors WOULD index it — so its
-    * surviving postings are re-admitted from the stored shingle sets.
-    * The mirror image of [[extendCorpusIndex]]'s crossing-over logic.
-    *
-    * Cost shape at 100 TB: the removed set reconstructs its grams via
-    * one semi-join against the shingle relation (O(removed)); the
-    * dictionary updates by one skinny merge; the corpus-sized postings
-    * are touched by exactly one streaming anti-join on doc_id; and the
-    * re-admission leg is one narrow map-side pass over the stored
-    * shingle arrays against the BROADCAST crossing-back gram set —
-    * bounded by the removed docs' own distinct grams, near-empty in
-    * practice. A removal so large its gram set cannot broadcast is past
-    * the point where a rebuild is cheaper anyway.
-    *
-    * `changed` documents are remove-then-extend: retire the old id here,
-    * fold the new text via [[extendCorpusIndex]] (append-only ids make
-    * in-place mutation unrepresentable) — the composition
-    * [[CorpusOps.refreshIndex]] packages. */
-  def removeFromCorpusIndex(index: CorpusIndex, removedIds: DataFrame,
-                            idCol: String): CorpusIndex = {
-    val cut = index.maxGramDf
-    val rm = removedIds.select(col(idCol).as("doc_id")).distinct()
-    // the retired docs' grams, from the index's OWN stored shingles
-    val rmInv = index.shingles.join(rm, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), explode(col("sh")).as("gram"))
-    val decDf = rmInv.groupBy(col("gram")).agg(count(lit(1)).as("__dec"))
-    // updated dictionary: df only shrinks; a gram whose last holder left
-    // drops out entirely (a from-scratch build would never see it)
-    val mergedDf = index.dfCounts.join(decDf, Seq("gram"), "left")
-      .select(col("gram"),
-        (col("df") - coalesce(col("__dec"), lit(0L))).as("df"))
-      .filter(col("df") > 0L)
-    // grams pulled BACK UNDER the cut: only grams the removed docs
-    // actually touched can move — join against decDf, never the
-    // dictionary alone
-    val crossingBack = index.dfCounts.filter(col("df") > cut)
-      .join(decDf, Seq("gram"))
-      .filter(col("df") - col("__dec") <= cut)
-      .select(col("gram"))
-    val survivorSh = index.shingles.join(rm, Seq("doc_id"), "left_anti")
-    // materialized eagerly (r19): the re-admission leg is a pure narrow
-    // pipeline (survivor-shingle explode against the broadcast
-    // crossing-back set — no exchange, so nothing shares it), and it is
-    // referenced from BOTH the postings union and the doc-stats
-    // adjustment — lazily it ran the corpus-wide explode twice per
-    // probe plan. The checkpointed result is bounded by the removed
-    // docs' own distinct grams (near-empty in practice), the
-    // extendCorpusIndex newSh pattern run backward.
-    val readmitted = survivorSh
-      .select(col("doc_id"), explode(col("sh")).as("gram"))
-      .join(broadcast(crossingBack), Seq("gram"), "left_semi")
-      .select(col("doc_id"), col("gram"))
-      .localCheckpoint(true)
-    val newPostings = index.postings.join(rm, Seq("doc_id"), "left_anti")
-      .union(readmitted)
-    // doc stats in lockstep: survivors GAIN exactly their re-admitted
-    // postings; removed rows drop; n_grams (a pure per-doc function of
-    // text) is untouched
-    val inc = readmitted.groupBy(col("doc_id")).agg(count(lit(1)).as("__inc"))
-    val adjustedStats = index.docStats.join(rm, Seq("doc_id"), "left_anti")
-      .join(inc, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_grams"),
-        (col("n_indexed") + coalesce(col("__inc"), lit(0L))).as("n_indexed"))
-    IndexFamily.Text.nextVersion(index.copy(postings = newPostings,
-      shingles = survivorSh, dfCounts = mergedDf, docStats = adjustedStats))
-  }
 
   /** Persist a [[CorpusIndex]] to storage so it outlives the session —
     * the production lifecycle: one job fits the index, every later
@@ -792,7 +640,7 @@ object Dedup {
     def close(): Unit = IndexFamily.Embedding.close(this)
   }
 
-  private def signBands(df: DataFrame, idCol: String, vecCol: String,
+  private[extensions] def signBands(df: DataFrame, idCol: String, vecCol: String,
                         planes: Int, bands: Int): DataFrame =
     df.select(col(idCol).as("doc_id"),
       explode(array((0 until bands).map { b =>
@@ -802,50 +650,13 @@ object Dedup {
       }: _*)).as("bb"))
       .select(col("doc_id"), col("bb.band"), col("bb.bucket"))
 
-  /** Build the [[EmbeddingIndex]] for [[dedupEmbeddingsAgainstCorpus]]. */
+  /** Build the [[EmbeddingIndex]] for [[dedupEmbeddingsAgainstCorpus]],
+    * with the encode its extend runs ([[IndexFamily.Embedding]]). */
   def buildEmbeddingIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                          planes: Int = 12, bands: Int = 8): EmbeddingIndex =
-    EmbeddingIndex(
-      signBands(corpus, idCol, vecCol, planes, bands),
-      corpus.select(col(idCol).as("doc_id"), col(vecCol).as("v")),
-      planes, bands)
-
-  /** Grow an [[EmbeddingIndex]] with `newDocs` WITHOUT refitting — the
-    * embedding analog of [[extendCorpusIndex]], completing the
-    * versioning symmetry: bucket the new vectors with the index's OWN
-    * planes/bands (they ride with the index precisely so this is
-    * possible — fresh hyperplanes would silently never match the old
-    * buckets), then union the skinny bucket relation and the vector
-    * table. No df-cut exists on the embedding side, so extension is
-    * exactly O(new vectors) with no crossing-gram bookkeeping, and
-    * extend(build(A), B) ≡ build(A ∪ B) holds bucket-for-bucket
-    * (spec-pinned): the hyperplanes are derived deterministically from
-    * (plane, dim) hashes, so the same vector buckets identically on
-    * both paths. Same append-only id contract as the text form. */
-  def extendEmbeddingIndex(index: EmbeddingIndex, newDocs: DataFrame,
-                           idCol: String, vecCol: String): EmbeddingIndex =
-    IndexFamily.Embedding.nextVersion(index.copy(
-      buckets = index.buckets.union(
-        signBands(newDocs, idCol, vecCol, index.planes, index.bands)),
-      vectors = index.vectors.union(
-        newDocs.select(col(idCol).as("doc_id"), col(vecCol).as("v")))))
-
-  /** Shrink an [[EmbeddingIndex]] by retired ids — the embedding leg of
-    * the removal lifecycle ([[removeFromCorpusIndex]] is the text
-    * analog). No df-cut exists on this side, so removal is exactly two
-    * streaming anti-joins on the skinny bucket relation and the vector
-    * table, and `remove(build(A), R) ≡ build(A \ R)` holds
-    * bucket-for-bucket with no re-admission bookkeeping (the
-    * hyperplanes are deterministic, so survivors' buckets are identical
-    * on both paths; spec-pinned). O(corpus) rows streamed, zero
-    * shuffles beyond the anti-join's own exchange; at production ratios
-    * the removed-id set broadcasts. */
-  def removeFromEmbeddingIndex(index: EmbeddingIndex, removedIds: DataFrame,
-                               idCol: String): EmbeddingIndex = {
-    val rm = removedIds.select(col(idCol).as("doc_id")).distinct()
-    IndexFamily.Embedding.nextVersion(index.copy(
-      buckets = index.buckets.join(rm, Seq("doc_id"), "left_anti"),
-      vectors = index.vectors.join(rm, Seq("doc_id"), "left_anti")))
+                          planes: Int = 12, bands: Int = 8): EmbeddingIndex = {
+    val Seq(buckets, vectors) =
+      IndexFamily.Embedding.encode((planes, bands), corpus, idCol, vecCol, Nil)
+    EmbeddingIndex(buckets, vectors, planes, bands)
   }
 
   /** Persist an [[EmbeddingIndex]] to storage — the embedding analog of

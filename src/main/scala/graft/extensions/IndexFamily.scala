@@ -2,7 +2,7 @@ package graft.extensions
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, count, explode, lit}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, explode, lit, sum}
 import org.apache.spark.sql.types._
 
 import graft.sources.ParquetMeta
@@ -21,7 +21,7 @@ trait Versioned {
  * What the index-maintenance lifecycle needs to know about one index
  * family, in one place: its name on the SQL surface, the markers its
  * compactions stamp on consumed sink trees, the type of its content
- * column, what its saved tree holds, and its extend/remove pair. The
+ * column, what its saved tree holds, and its fit, extend and remove. The
  * compactions ([[graft.streaming.CdcStream.compactAccepted]] /
  * [[graft.streaming.CdcStream.compact]]), the refresh loop
  * ([[CorpusOps.refreshIndex]]), the streaming handle resolution and the
@@ -36,7 +36,9 @@ trait Versioned {
  * Every family versions by extension: `extend` and `remove` each return
  * a NEW version ([[nextVersion]]), and both carry their family's
  * build-equivalence (remove ≡ and extend ≡ rebuild under the family's
- * frozen quantizer, spec-pinned per family).
+ * frozen quantizer, spec-pinned per family). The five vector families
+ * share one extend and one remove ([[IndexFamily.Quantized]]); the text
+ * and BM25 families keep their own df-cut and subtraction algorithms.
  *
  * Markers are on-disk names: a tree stamped by one release must be
  * recognised by the next, so the strings never change
@@ -55,7 +57,7 @@ abstract class IndexFamily[I <: Versioned](
     val retractMarker: String,
     /** Type of the content column: text, or a float vector. */
     val imageType: DataType) {
-  import IndexFamily.{Relation, Tree}
+  import IndexFamily.{Hyper, Relation, Tree}
 
   /** The marker the per-leg ACCEPT fold stamps. The dedup ingests' accept
     * trees carry the shared [[IndexFamily.FoldedMarker]]; a family whose
@@ -71,6 +73,27 @@ abstract class IndexFamily[I <: Versioned](
     * compacts through the two-image net skeleton, requires the old-image
     * column for upsert trees, and refreshes from the old crawl. */
   def retractsByImage: Boolean = false
+
+  /** The fit hyperparameters in the order `CALL graft.fit_index` lists
+    * them, each with the default of the family's Scala fit. The default's
+    * type (Int or Boolean) is the type a value parses as. */
+  def hyperparameters: Seq[(String, Any)] = Nil
+
+  /** Fit an index on `df`: the family's Scala fit, with `hyper` overriding
+    * [[hyperparameters]] by name. A name the family does not take, or a
+    * value of another type than its default, is refused. */
+  final def fit(df: DataFrame, idCol: String, contentCol: String,
+                hyper: Map[String, Any] = Map.empty): I = {
+    val defaults = hyperparameters.toMap
+    hyper.foreach { case (n, v) =>
+      require(defaults.get(n).exists(_.getClass == v.getClass),
+        s"the $name family takes no hyperparameter $n = $v; it takes " +
+          hyperparameters.map { case (k, d) => s"$k (default $d)" }.mkString(", "))
+    }
+    fitWith(df, idCol, contentCol, new Hyper(defaults ++ hyper))
+  }
+
+  protected def fitWith(df: DataFrame, idCol: String, contentCol: String, h: Hyper): I
 
   /** The parquet relations of the index's saved tree. */
   protected[extensions] def relations(index: I): Seq[Relation]
@@ -121,7 +144,9 @@ abstract class IndexFamily[I <: Versioned](
     * onto) may overwrite it. The guard compares versions only: a handle
     * loaded from `dir` passes as its own re-save while the tree stamps
     * its version, even if another index of that version was saved there
-    * since.
+    * since. A present but unreadable stamp refuses every save, as it
+    * refuses close and compaction, until [[IndexMeta.clearCorruptStamp]]
+    * leaves the tree unstamped.
     *
     * Every relation is first written to `<name>__stage`, then all are
     * swapped in by renames and the stamp is written last. An in-place
@@ -134,14 +159,18 @@ abstract class IndexFamily[I <: Versioned](
   def save(index: I, dir: String): I = {
     val rels = relations(index)
     val spark = rels.head.frame.sparkSession
-    IndexMeta.read(spark, dir).foreach { stamp =>
-      val ownResave = stamp.version == index.version && index.savedDir.contains(dir)
-      val upgrade = stamp.version < index.version &&
-        index.parent.orElse(index.savedDir).contains(dir)
-      require(ownResave || upgrade,
-        s"save refused: $dir already stamps version ${stamp.version} and " +
-          s"this handle (version ${index.version}) does not descend from " +
-          "it — close() the old tree or save to a fresh directory")
+    IndexMeta.readStamp(spark, dir) match {
+      case IndexMeta.Stamp.Present(stamp) =>
+        val ownResave = stamp.version == index.version && index.savedDir.contains(dir)
+        val upgrade = stamp.version < index.version &&
+          index.parent.orElse(index.savedDir).contains(dir)
+        require(ownResave || upgrade,
+          s"save refused: $dir already stamps version ${stamp.version} and " +
+            s"this handle (version ${index.version}) does not descend from " +
+            "it — close() the old tree or save to a fresh directory")
+      case IndexMeta.Stamp.Corrupt(reason) =>
+        throw new IllegalArgumentException(IndexMeta.unreadable("save", dir, reason))
+      case IndexMeta.Stamp.Absent => ()
     }
     val tables = rels ++ IndexFamily.paramTable(spark, params(index))
     tables.foreach { r =>
@@ -221,6 +250,12 @@ object IndexFamily {
       if (meta.schema.fieldNames.contains(name)) meta.getAs[T](name) else default
   }
 
+  /** A fit's hyperparameter values by name, defaults filled in. */
+  final class Hyper private[IndexFamily] (values: Map[String, Any]) {
+    def int(name: String): Int = values(name).asInstanceOf[Int]
+    def bool(name: String): Boolean = values(name).asInstanceOf[Boolean]
+  }
+
   /** The `meta` table of `ps`: one row, one non-null column per parameter. */
   private def paramTable(spark: SparkSession, ps: Seq[(String, Any)]): Seq[Relation] =
     if (ps.isEmpty) Nil
@@ -238,15 +273,74 @@ object IndexFamily {
     * [[IndexFamily.legAcceptMarker]]). */
   val FoldedMarker = "_FOLDED"
 
-  private val FloatVec = ArrayType(FloatType)
+  /**
+   * A vector family: a FROZEN quantizer `Q` (hyperplanes, cells,
+   * codebooks) plus relations of encoded rows, each keyed by one id
+   * column. Its one [[encode]] turns rows into every relation's new rows
+   * under a quantizer. The family's Scala fit trains the quantizer, then
+   * builds its relations with that same encode; [[extend]] unions each
+   * relation with the encoded new rows under the index's own quantizer.
+   * So `extend(fit(A), B) ≡ fit(A ∪ B)` under the frozen quantizer
+   * because both run the same code. [[remove]] anti-joins every relation
+   * on the id: survivors keep their fitted rows verbatim, so
+   * `remove(fit(A ∪ R), R) ≡ fit(A)` under the same quantizer (both
+   * spec-pinned per family).
+   *
+   * Neither moves the quantizer: moving it would re-encode the whole
+   * corpus and invalidate every saved cell partition and issued probe
+   * plan, so re-fit when churn degrades cell occupancy or recall. Both
+   * cost O(changed rows); the corpus-sized relations stream through
+   * untouched. Ids are append-only, as for a fit: re-adding an indexed
+   * id duplicates its rows. Metadata columns the index carries (`metaCols`
+   * at fit, for filtered probes) must be supplied by the extension rows.
+   */
+  abstract class Quantized[I <: Versioned, Q](
+      name: String, acceptMarker: String, upsertMarker: String, retractMarker: String,
+      /** The id column every encoded relation carries. */
+      idKey: String,
+      /** The first encoded relation's own columns: any other column of it
+        * is a metadata column. */
+      ownCols: Set[String])
+      extends IndexFamily[I](name, acceptMarker, upsertMarker, retractMarker,
+        ArrayType(FloatType)) {
 
-  /** The text-gram dedup index ([[Dedup.CorpusIndex]]). Removal needs
-    * only ids: the index's stored shingles reconstruct the retired grams,
-    * and the backward df-cut re-admits grams the removal brings back
-    * under the cut, so remove ≡ rebuild on the survivors. */
+    /** The index's frozen quantizer: all that [[encode]] reads of it. */
+    protected def quantizer(index: I): Q
+
+    /** The index's relations of encoded rows, in [[encode]]'s order. */
+    protected def encoded(index: I): Seq[DataFrame]
+
+    protected def withEncoded(index: I, rels: Seq[DataFrame]): I
+
+    /** Each encoded relation's rows for `df` (ids in `idCol`, vectors in
+      * `vecCol`) under `q`, carrying `metaCols`. */
+    private[extensions] def encode(q: Q, df: DataFrame, idCol: String, vecCol: String,
+                                   metaCols: Seq[String]): Seq[DataFrame]
+
+    def extend(index: I, rows: DataFrame, idCol: String, vecCol: String): I = {
+      val rels = encoded(index)
+      val metaCols = rels.head.columns.toSeq.filterNot(ownCols)
+      nextVersion(withEncoded(index, rels.zip(
+        encode(quantizer(index), rows, idCol, vecCol, metaCols))
+        .map { case (rel, add) => rel.unionByName(add) }))
+    }
+
+    def remove(index: I, rows: DataFrame, idCol: String, vecCol: String): I = {
+      val rm = rows.select(col(idCol).as(idKey)).distinct()
+      nextVersion(withEncoded(index,
+        encoded(index).map(_.join(rm, Seq(idKey), "left_anti"))))
+    }
+  }
+
+  /** The text-gram dedup index ([[Dedup.CorpusIndex]]). */
   implicit object Text extends IndexFamily[Dedup.CorpusIndex](
       "text", FoldedMarker, "_FOLDED_UPSERT",
       "_FOLDED_RETRACT", StringType) {
+    override val hyperparameters: Seq[(String, Any)] =
+      Seq("shingle_k" -> 3, "max_gram_df" -> 100)
+    protected def fitWith(df: DataFrame, idCol: String, textCol: String,
+                          h: Hyper): Dedup.CorpusIndex =
+      Dedup.buildCorpusIndex(df, idCol, textCol, h.int("shingle_k"), h.int("max_gram_df"))
     protected[extensions] def relations(i: Dedup.CorpusIndex): Seq[Relation] = Seq(
       Relation("postings", i.postings), Relation("shingles", i.shingles),
       Relation("df", i.dfCounts), Relation("stats", i.docStats))
@@ -268,12 +362,153 @@ object IndexFamily {
                               parent: Option[String]): Dedup.CorpusIndex =
       i.copy(savedDir = savedDir, version = version, folded = folded, parent = parent)
     protected def unpersist(i: Dedup.CorpusIndex): Unit = i.unpersist()
-    def extend(i: Dedup.CorpusIndex, rows: DataFrame, idCol: String,
-               contentCol: String): Dedup.CorpusIndex =
-      Dedup.extendCorpusIndex(i, rows, idCol, contentCol)
-    def remove(i: Dedup.CorpusIndex, rows: DataFrame, idCol: String,
-               contentCol: String): Dedup.CorpusIndex =
-      Dedup.removeFromCorpusIndex(i, rows, idCol)
+
+    /** Grow the index with `newDocs` WITHOUT re-tokenizing the existing
+      * corpus — the versioning step the streaming ingest's "accepted
+      * batches do not auto-join the index" contract defers to the
+      * pipeline. Cost is O(new docs + crossing grams), NOT O(corpus):
+      * the new docs are shingled and grouped once; the stored gram
+      * dictionary ([[Dedup.CorpusIndex.dfCounts]], one skinny row per
+      * distinct gram) is merged with the new-doc gram counts; and the OLD
+      * postings — the only corpus-sized relation — are touched by exactly
+      * one anti-join against the grams whose df CROSSES the cut with this
+      * extension (a near-empty set in practice, broadcast at any scale),
+      * so they stream through unregrouped. The df-cut semantics are
+      * unchanged: a gram that crosses the cut only once the new docs
+      * arrive is dropped exactly as a from-scratch build would drop it,
+      * so extend(build(A), B) ≡ build(A ∪ B) (spec-pinned at the
+      * postings AND dictionary level). `newDocs` ids must be new
+      * (append-only versioning, the same contract a from-scratch build
+      * has on duplicate ids): re-adding an indexed id double-counts its
+      * grams' df on both paths alike. */
+    def extend(index: Dedup.CorpusIndex, newDocs: DataFrame, idCol: String,
+               textCol: String): Dedup.CorpusIndex = {
+      val cut = index.maxGramDf
+      // ONE shingling of the new docs, materialized eagerly: the extended
+      // index references this relation from SIX places (inverted postings
+      // -> df merge/keep/postings, the shingle union, and docStatsFrom),
+      // and Spark has no plan-level CSE outside exchange reuse — a lazy
+      // newSh re-ran the tokenize+shingle kernel once per consumer in
+      // every downstream probe plan. The checkpoint is O(new docs) of
+      // skinny (id, gram-hash array) rows — the same eager-skinny pattern
+      // as the streaming folds' event union. Measured (Scratch timeq,
+      // sf0.1, like ambient windows): dedup_incr_index_extend
+      // 4.0 -> 1.8 s min-warm. Contrast refreshIdSplit in CorpusOps,
+      // where the same pattern on an EXCHANGE-bearing relation buys
+      // nothing (exchange reuse already shares the execution).
+      val newSh = Dedup.hashedShingleSets(newDocs, idCol, textCol, index.shingleK)
+        .localCheckpoint(true)
+      val newInv = newSh.select(col("doc_id"), explode(col("sh")).as("gram"))
+      val newDf = newInv.groupBy(col("gram")).agg(count(lit(1)).as("__new"))
+      // updated dictionary: df only ever grows under the append-only
+      // contract, so a full-outer merge of two skinny relations is exact
+      val mergedDf = index.dfCounts.join(newDf, Seq("gram"), "full_outer")
+        .select(col("gram"),
+          (coalesce(col("df"), lit(0L)) + coalesce(col("__new"), lit(0L))).as("df"))
+      // grams the extension pushes OVER the cut: previously kept, and only
+      // grams the new docs actually touch can move — join against newDf,
+      // never the dictionary alone
+      val crossing = index.dfCounts.filter(col("df") <= cut)
+        .join(newDf, Seq("gram"))
+        .filter(col("df") + col("__new") > cut)
+        .select(col("gram"))
+      // new postings survive iff their gram's MERGED df clears the cut
+      val newKeep = newDf.join(index.dfCounts, Seq("gram"), "left")
+        .filter(coalesce(col("df"), lit(0L)) + col("__new") <= cut)
+        .select(col("gram"))
+      val newPostings = newInv.join(newKeep, Seq("gram"), "left_semi")
+      // doc stats stay in lockstep at O(crossing + new): old docs lose
+      // exactly their postings on crossing grams (the same skinny set the
+      // postings anti-join removes), new docs get a from-scratch count
+      val dec = index.postings.join(crossing, Seq("gram"))
+        .groupBy(col("doc_id")).agg(count(lit(1)).as("__dec"))
+      val adjustedStats = index.docStats.join(dec, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("n_grams"),
+          (col("n_indexed") - coalesce(col("__dec"), lit(0L))).as("n_indexed"))
+      nextVersion(index.copy(
+        postings = index.postings.join(crossing, Seq("gram"), "left_anti")
+          .union(newPostings),
+        shingles = index.shingles.union(newSh), dfCounts = mergedDf,
+        docStats = adjustedStats.union(Dedup.docStatsFrom(newSh, newPostings))))
+    }
+
+    /** Shrink the index by a set of retired document ids — the REMOVAL
+      * half of the versioning lifecycle: a crawl refresh classifies
+      * documents `removed`/`changed` ([[CorpusOps.corpusDiff]]), and
+      * without it their grams would stay in the serving index forever —
+      * a probe could drop a fresh batch doc as a "duplicate" of a
+      * document the corpus no longer contains. Needs only IDS, not the
+      * retired documents' text: the index's own stored shingle relation
+      * reconstructs their grams.
+      *
+      * EXACT, not a tombstone approximation: `remove(build(A), R) ≡
+      * build(A \ R)` at the postings, dictionary AND doc-stats level
+      * (spec-pinned). The subtle half is the df cut running BACKWARD: a
+      * gram the removal pulls back under the cut (df was > maxGramDf,
+      * now ≤) was never indexed, but a from-scratch build on the
+      * survivors WOULD index it — so its surviving postings are
+      * re-admitted from the stored shingle sets. The mirror image of
+      * [[extend]]'s crossing-over logic.
+      *
+      * Cost shape at 100 TB: the removed set reconstructs its grams via
+      * one semi-join against the shingle relation (O(removed)); the
+      * dictionary updates by one skinny merge; the corpus-sized postings
+      * are touched by exactly one streaming anti-join on doc_id; and the
+      * re-admission leg is one narrow map-side pass over the stored
+      * shingle arrays against the BROADCAST crossing-back gram set —
+      * bounded by the removed docs' own distinct grams, near-empty in
+      * practice. A removal so large its gram set cannot broadcast is past
+      * the point where a rebuild is cheaper anyway. `changed` documents
+      * are remove-then-extend — the composition
+      * [[CorpusOps.refreshIndex]] packages. */
+    def remove(index: Dedup.CorpusIndex, removedIds: DataFrame, idCol: String,
+               textCol: String): Dedup.CorpusIndex = {
+      val cut = index.maxGramDf
+      val rm = removedIds.select(col(idCol).as("doc_id")).distinct()
+      // the retired docs' grams, from the index's OWN stored shingles
+      val rmInv = index.shingles.join(rm, Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), explode(col("sh")).as("gram"))
+      val decDf = rmInv.groupBy(col("gram")).agg(count(lit(1)).as("__dec"))
+      // updated dictionary: df only shrinks; a gram whose last holder left
+      // drops out entirely (a from-scratch build would never see it)
+      val mergedDf = index.dfCounts.join(decDf, Seq("gram"), "left")
+        .select(col("gram"),
+          (col("df") - coalesce(col("__dec"), lit(0L))).as("df"))
+        .filter(col("df") > 0L)
+      // grams pulled BACK UNDER the cut: only grams the removed docs
+      // actually touched can move — join against decDf, never the
+      // dictionary alone
+      val crossingBack = index.dfCounts.filter(col("df") > cut)
+        .join(decDf, Seq("gram"))
+        .filter(col("df") - col("__dec") <= cut)
+        .select(col("gram"))
+      val survivorSh = index.shingles.join(rm, Seq("doc_id"), "left_anti")
+      // materialized eagerly (r19): the re-admission leg is a pure narrow
+      // pipeline (survivor-shingle explode against the broadcast
+      // crossing-back set — no exchange, so nothing shares it), and it is
+      // referenced from BOTH the postings union and the doc-stats
+      // adjustment — lazily it ran the corpus-wide explode twice per
+      // probe plan. The checkpointed result is bounded by the removed
+      // docs' own distinct grams (near-empty in practice), the extend
+      // newSh pattern run backward.
+      val readmitted = survivorSh
+        .select(col("doc_id"), explode(col("sh")).as("gram"))
+        .join(broadcast(crossingBack), Seq("gram"), "left_semi")
+        .select(col("doc_id"), col("gram"))
+        .localCheckpoint(true)
+      val newPostings = index.postings.join(rm, Seq("doc_id"), "left_anti")
+        .union(readmitted)
+      // doc stats in lockstep: survivors GAIN exactly their re-admitted
+      // postings; removed rows drop; n_grams (a pure per-doc function of
+      // text) is untouched
+      val inc = readmitted.groupBy(col("doc_id")).agg(count(lit(1)).as("__inc"))
+      val adjustedStats = index.docStats.join(rm, Seq("doc_id"), "left_anti")
+        .join(inc, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("n_grams"),
+          (col("n_indexed") + coalesce(col("__inc"), lit(0L))).as("n_indexed"))
+      nextVersion(index.copy(postings = newPostings,
+        shingles = survivorSh, dfCounts = mergedDf, docStats = adjustedStats))
+    }
   }
 
   /** The BM25 search statistics ([[Search.Bm25Stats]]) — the family whose
@@ -286,12 +521,24 @@ object IndexFamily {
     * image corrupts df counts silently. The markers are correctness here,
     * not audit: a double-fold would subtract twice. Its accept trees are
     * the doc ingests' (also folded by the text family), so its per-leg
-    * accept marker is its own. */
+    * accept marker is its own.
+    *
+    * Both halves take ONE SNAPSHOT of their input: the per-doc projection
+    * is eagerly localCheckpoint'ed before anything reads it, so the
+    * scalar sums (evaluated at the call) and the df merge (evaluated
+    * whenever the stats are later used) see the SAME rows even when the
+    * input is a live source — e.g. a streaming sink still receiving
+    * batches, where a fully lazy fold let later appends leak into the df
+    * counts while the eagerly collected scalars excluded them. The
+    * checkpoint is O(changed docs) of SKINNY rows (dl + distinct terms). */
   implicit object Bm25 extends IndexFamily[Search.Bm25Stats](
       "bm25", "_FOLDED_BM25", "_FOLDED_UPSERT_BM25",
       "_FOLDED_RETRACT_BM25", StringType) {
     override val legAcceptMarker: String = acceptMarker
     override val retractsByImage = true
+    protected def fitWith(df: DataFrame, idCol: String, textCol: String,
+                          h: Hyper): Search.Bm25Stats =
+      Search.bm25Fit(df, idCol, textCol)
     protected[extensions] def relations(s: Search.Bm25Stats): Seq[Relation] =
       Seq(Relation("df", s.docFreq))
     override protected[extensions] def params(s: Search.Bm25Stats): Seq[(String, Any)] =
@@ -303,12 +550,64 @@ object IndexFamily {
                               parent: Option[String]): Search.Bm25Stats =
       s.copy(savedDir = savedDir, version = version, folded = folded, parent = parent)
     protected def unpersist(s: Search.Bm25Stats): Unit = s.unpersist()
-    def extend(s: Search.Bm25Stats, rows: DataFrame, idCol: String,
-               contentCol: String): Search.Bm25Stats =
-      Search.extendBm25Stats(s, rows, idCol, contentCol)
-    def remove(s: Search.Bm25Stats, rows: DataFrame, idCol: String,
-               contentCol: String): Search.Bm25Stats =
-      Search.retractBm25Stats(s, rows, idCol, contentCol)
+
+    /** Grow fitted stats with `newDocs` WITHOUT rescanning the fitted
+      * corpus — O(new docs): the batch's df table merges into the stored
+      * one by a full-outer sum of two skinny vocabulary relations, and
+      * the two scalars add. Exact, not approximate: document frequency,
+      * doc count and length sum are all additive over a disjoint corpus
+      * union, so extend(fit(A), B) ≡ fit(A ∪ B) — the equivalence the
+      * spec pins. `newDocs` ids must be new (the append-only contract
+      * every extend in the engine shares): re-adding a fitted doc
+      * double-counts on both paths alike. */
+    def extend(stats: Search.Bm25Stats, newDocs: DataFrame, idCol: String,
+               textCol: String): Search.Bm25Stats = {
+      val perDoc = Search.bm25PerDoc(newDocs, textCol).localCheckpoint(true)
+      val row = perDoc.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)))
+        .head()
+      val newDf = perDoc
+        .select(explode(col("__ts")).as("term"))
+        .groupBy(col("term")).agg(count(lit(1)).as("__new"))
+      val merged = stats.docFreq.join(newDf, Seq("term"), "full_outer")
+        .select(col("term"),
+          (coalesce(col("df"), lit(0L)) + coalesce(col("__new"), lit(0L)))
+            .as("df"))
+      nextVersion(stats.copy(docFreq = merged,
+        nDocs = stats.nDocs + row.getLong(0),
+        sumDl = stats.sumDl + row.getLong(1)))
+    }
+
+    /** Shrink fitted stats by a set of retired documents: document
+      * frequency, doc count and length sum are all additive, so retiring
+      * documents is exact integer SUBTRACTION of their per-doc
+      * contributions, O(removed docs), and `remove(fit(A), R) ≡
+      * fit(A \ R)` exactly (spec-pinned) — a term whose last holder
+      * leaves drops out of the vocabulary entirely, exactly as a refit
+      * would drop it. `removedDocs` must be the fitted rows VERBATIM
+      * (same ids, same text — a refresh has the previous crawl on hand by
+      * construction): retracting a never-fitted or amended document
+      * under-/over-subtracts on both paths alike, the mirror of extend's
+      * append-only contract. Unlike the text-gram index (whose stored
+      * shingles reconstruct retired docs' grams), the stats keep no
+      * per-document state — the retired TEXT re-derives the
+      * contributions. */
+    def remove(stats: Search.Bm25Stats, removedDocs: DataFrame, idCol: String,
+               textCol: String): Search.Bm25Stats = {
+      val perDoc = Search.bm25PerDoc(removedDocs, textCol).localCheckpoint(true)
+      val row = perDoc.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)))
+        .head()
+      val decDf = perDoc
+        .select(explode(col("__ts")).as("term"))
+        .groupBy(col("term")).agg(count(lit(1)).as("__dec"))
+      val merged = stats.docFreq.join(decDf, Seq("term"), "left")
+        .select(col("term"),
+          (col("df") - coalesce(col("__dec"), lit(0L))).as("df"))
+        .filter(col("df") > 0L)
+      nextVersion(stats.copy(docFreq = merged,
+        nDocs = stats.nDocs - row.getLong(0),
+        sumDl = stats.sumDl - row.getLong(1)))
+    }
+
     override def refresh(s: Search.Bm25Stats, oldDf: DataFrame,
                          newDf: DataFrame, idCol: String, contentCol: String,
                          diff: DataFrame): Search.Bm25Stats =
@@ -317,12 +616,16 @@ object IndexFamily {
 
   /** The sign-LSH dedup bucket index ([[Dedup.EmbeddingIndex]]) — the
     * novelty gate of the vector maintenance ingest, so its net accept
-    * marker is the shared one. The hyperplanes are deterministic:
-    * buckets and vectors mutate in lockstep and remove/extend ≡ rebuild
-    * on the resulting vector set. */
-  implicit object Embedding extends IndexFamily[Dedup.EmbeddingIndex](
-      "embedding", FoldedMarker, "_FOLDED_UPSERT_EMB",
-      "_FOLDED_RETRACT_EMB", FloatVec) {
+    * marker is the shared one. Its quantizer is the (planes, bands) pair
+    * the deterministic hyperplanes derive from; buckets and vectors
+    * mutate in lockstep. */
+  implicit object Embedding extends Quantized[Dedup.EmbeddingIndex, (Int, Int)](
+      "embedding", FoldedMarker, "_FOLDED_UPSERT_EMB", "_FOLDED_RETRACT_EMB",
+      "doc_id", Set("doc_id", "band", "bucket")) {
+    override val hyperparameters: Seq[(String, Any)] = Seq("planes" -> 12, "bands" -> 8)
+    protected def fitWith(df: DataFrame, idCol: String, vecCol: String,
+                          h: Hyper): Dedup.EmbeddingIndex =
+      Dedup.buildEmbeddingIndex(df, idCol, vecCol, h.int("planes"), h.int("bands"))
     protected[extensions] def relations(i: Dedup.EmbeddingIndex): Seq[Relation] =
       Seq(Relation("buckets", i.buckets), Relation("vectors", i.vectors))
     override protected[extensions] def params(i: Dedup.EmbeddingIndex): Seq[(String, Any)] =
@@ -335,22 +638,29 @@ object IndexFamily {
                               parent: Option[String]): Dedup.EmbeddingIndex =
       i.copy(savedDir = savedDir, version = version, folded = folded, parent = parent)
     protected def unpersist(i: Dedup.EmbeddingIndex): Unit = i.unpersist()
-    def extend(i: Dedup.EmbeddingIndex, rows: DataFrame, idCol: String,
-               contentCol: String): Dedup.EmbeddingIndex =
-      Dedup.extendEmbeddingIndex(i, rows, idCol, contentCol)
-    def remove(i: Dedup.EmbeddingIndex, rows: DataFrame, idCol: String,
-               contentCol: String): Dedup.EmbeddingIndex =
-      Dedup.removeFromEmbeddingIndex(i, rows, idCol)
+    protected def quantizer(i: Dedup.EmbeddingIndex): (Int, Int) = (i.planes, i.bands)
+    protected def encoded(i: Dedup.EmbeddingIndex): Seq[DataFrame] = Seq(i.buckets, i.vectors)
+    protected def withEncoded(i: Dedup.EmbeddingIndex,
+                              rels: Seq[DataFrame]): Dedup.EmbeddingIndex =
+      i.copy(buckets = rels(0), vectors = rels(1))
+    /** (doc_id, band, bucket) for every band, and (doc_id, v). */
+    private[extensions] def encode(q: (Int, Int), df: DataFrame, idCol: String,
+                                   vecCol: String, metaCols: Seq[String]): Seq[DataFrame] =
+      Seq(Dedup.signBands(df, idCol, vecCol, q._1, q._2),
+        df.select(col(idCol).as("doc_id"), col(vecCol).as("v")))
   }
 
   /** The cell-partitioned ANN index ([[Similarity.IvfIndex]]), shared by
-    * ANN probes and the semantic dedup ingest. New and amended vectors
-    * assign to the FROZEN centroids, so every saved cell partition stays
-    * valid and the maintained index ≡ assignToCells of the final vector
-    * set; re-fit only when churn degrades cell occupancy. */
-  implicit object Ivf extends IndexFamily[Similarity.IvfIndex](
-      "ivf", "_FOLDED_IVF", "_FOLDED_UPSERT_IVF",
-      "_FOLDED_RETRACT_IVF", FloatVec) {
+    * ANN probes and the semantic dedup ingest. Its quantizer is the
+    * centroid table: rows assign to the FROZEN cells, so every saved cell
+    * partition stays valid. */
+  implicit object Ivf extends Quantized[Similarity.IvfIndex, DataFrame](
+      "ivf", "_FOLDED_IVF", "_FOLDED_UPSERT_IVF", "_FOLDED_RETRACT_IVF",
+      "neighbor_id", Set("neighbor_id", "c_vec", "cell")) {
+    override val hyperparameters: Seq[(String, Any)] = Seq("nlist" -> 16)
+    protected def fitWith(df: DataFrame, idCol: String, vecCol: String,
+                          h: Hyper): Similarity.IvfIndex =
+      Similarity.ivfFit(df, idCol, vecCol, nlist = h.int("nlist"))
     protected[extensions] def relations(i: Similarity.IvfIndex): Seq[Relation] = Seq(
       Relation("centers", i.centers), Relation("assigned", i.assigned, byCell = true))
     protected def open(t: Tree): Similarity.IvfIndex =
@@ -360,22 +670,31 @@ object IndexFamily {
                               parent: Option[String]): Similarity.IvfIndex =
       i.copy(savedDir = savedDir, version = version, folded = folded, parent = parent)
     protected def unpersist(i: Similarity.IvfIndex): Unit = i.unpersist()
-    def extend(i: Similarity.IvfIndex, rows: DataFrame, idCol: String,
-               contentCol: String): Similarity.IvfIndex =
-      Similarity.extendIvfIndex(i, rows, idCol, contentCol)
-    def remove(i: Similarity.IvfIndex, rows: DataFrame, idCol: String,
-               contentCol: String): Similarity.IvfIndex =
-      Similarity.removeFromIvfIndex(i, rows, idCol)
+    protected def quantizer(i: Similarity.IvfIndex): DataFrame = i.centers
+    protected def encoded(i: Similarity.IvfIndex): Seq[DataFrame] = Seq(i.assigned)
+    protected def withEncoded(i: Similarity.IvfIndex,
+                              rels: Seq[DataFrame]): Similarity.IvfIndex =
+      i.copy(assigned = rels(0))
+    /** (neighbor_id, c_vec, cell, meta…): each row in its nearest cell. */
+    private[extensions] def encode(centers: DataFrame, df: DataFrame, idCol: String,
+                                   vecCol: String, metaCols: Seq[String]): Seq[DataFrame] =
+      Seq(Similarity.assignToCells(df, centers, idCol, vecCol, metaCols))
   }
 
-  /** The IVFADC index ([[Similarity.IvfPqIndex]]): FROZEN cells and
-    * FROZEN codebooks, so every saved cell partition, ADC table and
-    * previously-issued probe plan stays valid. Both halves mutate the
-    * codes AND the rerank-only vectors relation together, preserving the
-    * split-tree invariant. */
-  implicit object IvfPq extends IndexFamily[Similarity.IvfPqIndex](
-      "ivfpq", "_FOLDED_IVFPQ", "_FOLDED_UPSERT_IVFPQ",
-      "_FOLDED_RETRACT_IVFPQ", FloatVec) {
+  /** The IVFADC index ([[Similarity.IvfPqIndex]]). Its quantizer is the
+    * centroid table, the codebooks and the residual flag; the codes and
+    * the rerank-only vectors relation mutate in lockstep (the split-tree
+    * invariant). */
+  implicit object IvfPq extends Quantized[Similarity.IvfPqIndex,
+      (DataFrame, Seq[Seq[Seq[Float]]], Boolean)](
+      "ivfpq", "_FOLDED_IVFPQ", "_FOLDED_UPSERT_IVFPQ", "_FOLDED_RETRACT_IVFPQ",
+      "neighbor_id", Set("neighbor_id", "cell", "codes")) {
+    override val hyperparameters: Seq[(String, Any)] =
+      Seq("nlist" -> 16, "m" -> 8, "ksub" -> 16, "residual" -> false)
+    protected def fitWith(df: DataFrame, idCol: String, vecCol: String,
+                          h: Hyper): Similarity.IvfPqIndex =
+      Similarity.ivfPqFit(df, idCol, vecCol, nlist = h.int("nlist"), m = h.int("m"),
+        ksub = h.int("ksub"), residual = h.bool("residual"))
     protected[extensions] def relations(i: Similarity.IvfPqIndex): Seq[Relation] = Seq(
       Relation("centers", i.centers, counted = false),
       Relation("codes", i.codes, byCell = true),
@@ -398,20 +717,39 @@ object IndexFamily {
                               parent: Option[String]): Similarity.IvfPqIndex =
       i.copy(savedDir = savedDir, version = version, folded = folded, parent = parent)
     protected def unpersist(i: Similarity.IvfPqIndex): Unit = i.unpersist()
-    def extend(i: Similarity.IvfPqIndex, rows: DataFrame, idCol: String,
-               contentCol: String): Similarity.IvfPqIndex =
-      Similarity.extendIvfPqIndex(i, rows, idCol, contentCol)
-    def remove(i: Similarity.IvfPqIndex, rows: DataFrame, idCol: String,
-               contentCol: String): Similarity.IvfPqIndex =
-      Similarity.removeFromIvfPqIndex(i, rows, idCol)
+    protected def quantizer(i: Similarity.IvfPqIndex) = (i.centers, i.codebooks, i.residual)
+    protected def encoded(i: Similarity.IvfPqIndex): Seq[DataFrame] = Seq(i.codes, i.vectors)
+    protected def withEncoded(i: Similarity.IvfPqIndex,
+                              rels: Seq[DataFrame]): Similarity.IvfPqIndex =
+      i.copy(codes = rels(0), vectors = rels(1))
+    /** (neighbor_id, cell, codes, meta…) and (neighbor_id, cell, c_vec):
+      * each row in its nearest cell, its unit vector — or, residual, its
+      * difference to the unit centroid of that same cell — coded against
+      * the codebooks. `c_vec` rides only the second relation: the stored
+      * and scanned codes stay codes-sized, the compression's point. */
+    private[extensions] def encode(q: (DataFrame, Seq[Seq[Seq[Float]]], Boolean),
+                                   df: DataFrame, idCol: String, vecCol: String,
+                                   metaCols: Seq[String]): Seq[DataFrame] = {
+      val (centers, codebooks, residual) = q
+      val unit = Similarity.withUnitVec(
+        Similarity.assignToCells(df, centers, idCol, vecCol, metaCols), "c_vec")
+      val enc = (if (residual) Similarity.subtractCellCenter(unit, centers) else unit)
+        .withColumn("codes", Similarity.encodeCodes(col("__vhat"), codebooks))
+      Seq(enc.select(col("neighbor_id") +: col("cell") +: col("codes") +: metaCols.map(col): _*),
+        enc.select(col("neighbor_id"), col("cell"), col("c_vec")))
+    }
   }
 
   /** The sign-LSH top-k retrieval index ([[Similarity.LshIndex]]): one
-    * banded relation under DETERMINISTIC hyperplanes, so remove/extend
-    * ≡ a from-scratch fit of the resulting vector set. */
-  implicit object Lsh extends IndexFamily[Similarity.LshIndex](
-      "lsh", "_FOLDED_LSH", "_FOLDED_UPSERT_LSH",
-      "_FOLDED_RETRACT_LSH", FloatVec) {
+    * banded relation under the deterministic hyperplanes its
+    * (planes, bands) quantizer derives. */
+  implicit object Lsh extends Quantized[Similarity.LshIndex, (Int, Int)](
+      "lsh", "_FOLDED_LSH", "_FOLDED_UPSERT_LSH", "_FOLDED_RETRACT_LSH",
+      "neighbor_id", Set("neighbor_id", "c_vec", "band", "bucket")) {
+    override val hyperparameters: Seq[(String, Any)] = Seq("planes" -> 12, "bands" -> 4)
+    protected def fitWith(df: DataFrame, idCol: String, vecCol: String,
+                          h: Hyper): Similarity.LshIndex =
+      Similarity.lshFit(df, idCol, vecCol, h.int("planes"), h.int("bands"))
     protected[extensions] def relations(i: Similarity.LshIndex): Seq[Relation] =
       Seq(Relation("banded", i.banded))
     override protected[extensions] def params(i: Similarity.LshIndex): Seq[(String, Any)] =
@@ -423,20 +761,27 @@ object IndexFamily {
                               parent: Option[String]): Similarity.LshIndex =
       i.copy(savedDir = savedDir, version = version, folded = folded, parent = parent)
     protected def unpersist(i: Similarity.LshIndex): Unit = i.unpersist()
-    def extend(i: Similarity.LshIndex, rows: DataFrame, idCol: String,
-               contentCol: String): Similarity.LshIndex =
-      Similarity.extendLshIndex(i, rows, idCol, contentCol)
-    def remove(i: Similarity.LshIndex, rows: DataFrame, idCol: String,
-               contentCol: String): Similarity.LshIndex =
-      Similarity.removeFromLshIndex(i, rows, idCol)
+    protected def quantizer(i: Similarity.LshIndex): (Int, Int) = (i.planes, i.bands)
+    protected def encoded(i: Similarity.LshIndex): Seq[DataFrame] = Seq(i.banded)
+    protected def withEncoded(i: Similarity.LshIndex,
+                              rels: Seq[DataFrame]): Similarity.LshIndex =
+      i.copy(banded = rels(0))
+    /** (neighbor_id, c_vec, band, bucket, meta…) for every band. */
+    private[extensions] def encode(q: (Int, Int), df: DataFrame, idCol: String,
+                                   vecCol: String, metaCols: Seq[String]): Seq[DataFrame] =
+      Seq(Similarity.bandVectors(df, idCol, vecCol, "neighbor_id", "c_vec",
+        q._1, q._2, metaCols))
   }
 
-  /** The product-quantized index ([[Similarity.PqIndex]]): vectors encode
-    * under the FROZEN codebooks, so survivors' codes are the fitted rows
-    * verbatim and new codes equal a re-encode under the same codebooks. */
-  implicit object Pq extends IndexFamily[Similarity.PqIndex](
-      "pq", "_FOLDED_PQ", "_FOLDED_UPSERT_PQ",
-      "_FOLDED_RETRACT_PQ", FloatVec) {
+  /** The product-quantized index ([[Similarity.PqIndex]]): its quantizer
+    * is the codebooks. */
+  implicit object Pq extends Quantized[Similarity.PqIndex, Seq[Seq[Seq[Float]]]](
+      "pq", "_FOLDED_PQ", "_FOLDED_UPSERT_PQ", "_FOLDED_RETRACT_PQ",
+      "neighbor_id", Set("neighbor_id", "codes", "c_vec")) {
+    override val hyperparameters: Seq[(String, Any)] = Seq("m" -> 8, "ksub" -> 16)
+    protected def fitWith(df: DataFrame, idCol: String, vecCol: String,
+                          h: Hyper): Similarity.PqIndex =
+      Similarity.pqFit(df, idCol, vecCol, h.int("m"), h.int("ksub"))
     protected[extensions] def relations(i: Similarity.PqIndex): Seq[Relation] = Seq(
       Relation("codes", i.codes),
       Relation("codebooks", Similarity.codebookTable(i.codes.sparkSession, i.codebooks),
@@ -453,12 +798,20 @@ object IndexFamily {
                               parent: Option[String]): Similarity.PqIndex =
       i.copy(savedDir = savedDir, version = version, folded = folded, parent = parent)
     protected def unpersist(i: Similarity.PqIndex): Unit = i.unpersist()
-    def extend(i: Similarity.PqIndex, rows: DataFrame, idCol: String,
-               contentCol: String): Similarity.PqIndex =
-      Similarity.extendPqIndex(i, rows, idCol, contentCol)
-    def remove(i: Similarity.PqIndex, rows: DataFrame, idCol: String,
-               contentCol: String): Similarity.PqIndex =
-      Similarity.removeFromPqIndex(i, rows, idCol)
+    protected def quantizer(i: Similarity.PqIndex): Seq[Seq[Seq[Float]]] = i.codebooks
+    protected def encoded(i: Similarity.PqIndex): Seq[DataFrame] = Seq(i.codes)
+    protected def withEncoded(i: Similarity.PqIndex,
+                              rels: Seq[DataFrame]): Similarity.PqIndex =
+      i.copy(codes = rels(0))
+    /** (neighbor_id, codes, c_vec, meta…): each row's unit vector coded
+      * against the codebooks. */
+    private[extensions] def encode(codebooks: Seq[Seq[Seq[Float]]], df: DataFrame,
+                                   idCol: String, vecCol: String,
+                                   metaCols: Seq[String]): Seq[DataFrame] =
+      Seq(Similarity.withUnitVec(df.select(col(idCol).as("neighbor_id") +:
+          col(vecCol).as("c_vec") +: metaCols.map(col): _*), "c_vec")
+        .withColumn("codes", Similarity.encodeCodes(col("__vhat"), codebooks))
+        .select(col("neighbor_id") +: col("codes") +: col("c_vec") +: metaCols.map(col): _*))
   }
 
   /** The registry, in the order the SQL surface lists the families.

@@ -173,12 +173,15 @@ object IndexMeta {
             s"handle is version $haveVersion — reload the tree (or re-point " +
             "the handle) before operating on it")
       case Stamp.Corrupt(reason) =>
-        throw new IllegalArgumentException(
-          s"$op refused: index tree $dir carries a present but UNREADABLE " +
-            s"$FileName ($reason) — the tree's version is unknown, so this " +
-            "may not be the version this handle believes it holds. Repair " +
-            "the stamp, or force with IndexMeta.clearCorruptStamp after " +
-            "verifying the tree out of band")
+        throw new IllegalArgumentException(unreadable(op, dir, reason))
       case Stamp.Absent => ()
     }
+
+  /** The refusal of `op` on a tree whose stamp is present but unreadable. */
+  private[extensions] def unreadable(op: String, dir: String, reason: String): String =
+    s"$op refused: index tree $dir carries a present but UNREADABLE " +
+      s"$FileName ($reason) — the tree's version is unknown, so this " +
+      "may not be the version this handle believes it holds. Repair " +
+      "the stamp, or force with IndexMeta.clearCorruptStamp after " +
+      "verifying the tree out of band"
 }

@@ -129,9 +129,9 @@ object Search {
     def close(): Unit = IndexFamily.Bm25.close(this)
   }
 
-  /** The one-pass per-doc projection both fit and extend reduce:
+  /** The one-pass per-doc projection the fit, extend and remove reduce:
     * (dl, distinct terms) per document. */
-  private def bm25PerDoc(df: DataFrame, textCol: String): DataFrame =
+  private[extensions] def bm25PerDoc(df: DataFrame, textCol: String): DataFrame =
     // staged `__toks`: dl and the distinct-term set share ONE
     // tokenization per row
     df.withColumn("__toks", TextFunctions.tokens(col(textCol)))
@@ -155,77 +155,6 @@ object Search {
   def loadBm25Stats(spark: org.apache.spark.sql.SparkSession,
                     dir: String): Bm25Stats =
     IndexFamily.Bm25.load(spark, dir)
-
-  /** Grow fitted stats with `newDocs` WITHOUT rescanning the fitted
-    * corpus — O(new docs): the batch's df table merges into the stored
-    * one by a full-outer sum of two skinny vocabulary relations, and
-    * the two scalars add. Exact, not approximate: document frequency,
-    * doc count and length sum are all additive over a disjoint corpus
-    * union, so extend(fit(A), B) ≡ fit(A ∪ B) — the equivalence the
-    * spec pins. `newDocs` ids must be new (the append-only contract
-    * every extend in the engine shares): re-adding a fitted doc
-    * double-counts on both paths alike. Version bumps; the old tree's
-    * path moves into `parent` ([[IndexMeta]] lineage).
-    *
-    * ONE SNAPSHOT feeds both halves (ADVICE r16): the per-doc projection
-    * is eagerly localCheckpoint'ed before anything reads it, so the
-    * scalar sums (evaluated here) and the df merge (evaluated whenever
-    * the stats are later used) see the SAME rows even when `newDocs` is
-    * a live source — e.g. a streaming sink still receiving batches,
-    * where the old fully-lazy fold let post-extend appends leak into the
-    * df counts while the eagerly-collected scalars excluded them. The
-    * checkpoint is O(new docs) of SKINNY rows (dl + distinct terms), not
-    * corpus-sized. */
-  def extendBm25Stats(stats: Bm25Stats, newDocs: DataFrame,
-                      idCol: String, textCol: String): Bm25Stats = {
-    val perDoc = bm25PerDoc(newDocs, textCol).localCheckpoint(true)
-    val row = perDoc.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)))
-      .head()
-    val newDf = perDoc
-      .select(explode(col("__ts")).as("term"))
-      .groupBy(col("term")).agg(count(lit(1)).as("__new"))
-    val merged = stats.docFreq.join(newDf, Seq("term"), "full_outer")
-      .select(col("term"),
-        (coalesce(col("df"), lit(0L)) + coalesce(col("__new"), lit(0L)))
-          .as("df"))
-    IndexFamily.Bm25.nextVersion(stats.copy(docFreq = merged,
-      nDocs = stats.nDocs + row.getLong(0),
-      sumDl = stats.sumDl + row.getLong(1)))
-  }
-
-  /** Shrink fitted stats by a set of retired documents — the REMOVAL
-    * half of the BM25 lifecycle ([[extendBm25Stats]] is the other):
-    * document frequency, doc count and length sum are all additive, so
-    * retiring documents is exact integer SUBTRACTION of their per-doc
-    * contributions, O(removed docs), and
-    * `retract(fit(A), R) ≡ fit(A \ R)` exactly (spec-pinned) — a term
-    * whose last holder leaves drops out of the vocabulary entirely,
-    * exactly as a refit would drop it. `removedDocs` must be the fitted
-    * rows VERBATIM (same ids, same text — a refresh has the previous
-    * crawl on hand by construction): retracting a never-fitted or
-    * amended document under-/over-subtracts on both paths alike, the
-    * mirror of extend's append-only contract. Unlike the text-gram
-    * index (whose stored shingles reconstruct retired docs' grams),
-    * the stats keep no per-document state — the retired TEXT re-derives
-    * the contributions. `changed` documents are retract-then-extend —
-    * the composition [[CorpusOps.refreshBm25Stats]] packages. Same
-    * one-snapshot localCheckpoint contract as extend. */
-  def retractBm25Stats(stats: Bm25Stats, removedDocs: DataFrame,
-                       idCol: String, textCol: String): Bm25Stats = {
-    val perDoc = bm25PerDoc(removedDocs, textCol).localCheckpoint(true)
-    val row = perDoc.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)))
-      .head()
-    val decDf = perDoc
-      .select(explode(col("__ts")).as("term"))
-      .groupBy(col("term")).agg(count(lit(1)).as("__dec"))
-    val merged = stats.docFreq.join(decDf, Seq("term"), "left")
-      .select(col("term"),
-        (col("df") - coalesce(col("__dec"), lit(0L))).as("df"))
-      .filter(col("df") > 0L)
-    IndexFamily.Bm25.nextVersion(stats.copy(docFreq = merged,
-      nDocs = stats.nDocs - row.getLong(0),
-      sumDl = stats.sumDl - row.getLong(1)))
-  }
 
   /** BM25 top-k against a fitted [[Bm25Stats]]: the per-term document
     * frequencies are looked up from the (tiny) query-filtered slice of

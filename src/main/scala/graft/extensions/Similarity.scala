@@ -146,7 +146,7 @@ object Similarity {
     * and probe use; hyperplanes derive deterministically from
     * (plane, dim) hashes, so both sides band identically with no shared
     * RNG state. */
-  private def bandVectors(df: DataFrame, idCol: String, vecCol: String,
+  private[extensions] def bandVectors(df: DataFrame, idCol: String, vecCol: String,
                           idAs: String, vecAs: String,
                           planes: Int, bands: Int,
                           metaCols: Seq[String]): DataFrame =
@@ -160,45 +160,19 @@ object Similarity {
       .select(col(idAs) +: col(vecAs) +: col("bb.band") +: col("bb.bucket") +:
         metaCols.map(col): _*)
 
-  /** Fit the sign-LSH index: band every candidate. `metaCols` names
+  /** Fit the sign-LSH index: band every candidate with the encode its
+    * extend runs ([[IndexFamily.Lsh]]). `metaCols` names
     * metadata columns to carry into the banded relation (and the saved
     * parquet tree) so probes can pre-filter candidates via
     * [[LshIndex.filtered]] — the production filtered-ANN shape. */
   def lshFit(candidates: DataFrame, idCol: String, vecCol: String,
              planes: Int = 12, bands: Int = 4,
              metaCols: Seq[String] = Nil): LshIndex =
-    LshIndex(bandVectors(candidates, idCol, vecCol, "neighbor_id", "c_vec",
-      planes, bands, metaCols), planes, bands)
+    LshIndex(IndexFamily.Lsh.encode((planes, bands), candidates, idCol, vecCol,
+      metaCols).head, planes, bands)
 
   def loadLshIndex(spark: org.apache.spark.sql.SparkSession, dir: String): LshIndex =
     IndexFamily.Lsh.load(spark, dir)
-
-  /** Grow an [[LshIndex]] with `newVecs` WITHOUT refitting — bands the
-    * new vectors with the index's OWN planes/bands and unions, exactly
-    * O(new vectors); the corpus-sized banded relation is untouched.
-    * Metadata columns carried by the index are preserved (`newVecs`
-    * must supply them), so filtered probes see old and new vectors
-    * alike. Same append-only id contract as the other index families. */
-  def extendLshIndex(index: LshIndex, newVecs: DataFrame,
-                     idCol: String, vecCol: String): LshIndex = {
-    val metaCols = index.banded.columns.toSeq
-      .filterNot(Set("neighbor_id", "c_vec", "band", "bucket"))
-    IndexFamily.Lsh.nextVersion(index.copy(banded = index.banded.unionByName(
-      bandVectors(newVecs, idCol, vecCol, "neighbor_id", "c_vec",
-        index.planes, index.bands, metaCols))))
-  }
-
-  /** Shrink an [[LshIndex]] by retired ids — one streaming anti-join on
-    * the banded relation. The hyperplanes are deterministic, so
-    * `remove(fit(A ∪ R), R) ≡ fit(A)` bucket-for-bucket with no
-    * re-admission bookkeeping (the same argument as
-    * [[graft.extensions.Dedup.removeFromEmbeddingIndex]]). */
-  def removeFromLshIndex(index: LshIndex, removedIds: DataFrame,
-                         idCol: String): LshIndex = {
-    val rm = removedIds.select(col(idCol).as("neighbor_id")).distinct()
-    IndexFamily.Lsh.nextVersion(
-      index.copy(banded = index.banded.join(rm, Seq("neighbor_id"), "left_anti")))
-  }
 
   /** Probe a fitted [[LshIndex]]: only candidates sharing a query's
     * bucket in at least one band are scored; the banded probe side is
@@ -332,45 +306,6 @@ object Similarity {
         col("__best.cell").as("cell") +: metaCols.map(col): _*)
   }
 
-  /** Grow an [[IvfIndex]] with `newVecs` WITHOUT re-training the coarse
-    * quantizer — the IVF leg of the index-versioning symmetry
-    * (`extendCorpusIndex` / `extendEmbeddingIndex` are the text and
-    * LSH analogs): new vectors are assigned to the EXISTING centroids
-    * via [[assignToCells]] and unioned into the cell-assigned corpus.
-    * Extension is exactly O(new vectors), one narrow projection — at
-    * 100 TB the corpus-sized `assigned` relation is untouched. The
-    * centroids deliberately do NOT move (re-clustering would reassign
-    * the whole corpus and invalidate every saved cell partition); as
-    * with any IVF, re-fit when the data distribution drifts enough
-    * that cell occupancy degrades recall. Same append-only id contract
-    * as the other index families. Metadata columns carried by the index
-    * (`ivfFit(metaCols = ...)`) are preserved: `newVecs` must supply the
-    * same columns, so filtered probes see old and new vectors alike. */
-  def extendIvfIndex(index: IvfIndex, newVecs: DataFrame,
-                     idCol: String, vecCol: String): IvfIndex = {
-    val metaCols = index.assigned.columns.toSeq
-      .filterNot(Set("neighbor_id", "c_vec", "cell"))
-    IndexFamily.Ivf.nextVersion(index.copy(assigned = index.assigned.unionByName(
-      assignToCells(newVecs, index.centers, idCol, vecCol, metaCols))))
-  }
-
-  /** Shrink an [[IvfIndex]] by retired ids — the IVF leg of the removal
-    * lifecycle. One streaming anti-join on the cell-assigned relation;
-    * the centroids deliberately do NOT move (re-clustering would
-    * reassign the whole corpus and invalidate every saved cell
-    * partition — the same frozen-quantizer contract [[extendIvfIndex]]
-    * holds), so the exactness statement is
-    * `remove(index, R).assigned ≡ assignToCells(A \ R, index.centers)`
-    * — survivors' cells are identical on both paths (spec-pinned).
-    * As with extend, re-fit when enough of the corpus has churned that
-    * cell occupancy degrades recall. */
-  def removeFromIvfIndex(index: IvfIndex, removedIds: DataFrame,
-                         idCol: String): IvfIndex = {
-    val rm = removedIds.select(col(idCol).as("neighbor_id")).distinct()
-    IndexFamily.Ivf.nextVersion(
-      index.copy(assigned = index.assigned.join(rm, Seq("neighbor_id"), "left_anti")))
-  }
-
   // ---- quantizer training ---------------------------------------------
   //
   // IVF cells and PQ codebooks train with ONE seeded Lloyd's k-means on
@@ -442,8 +377,9 @@ object Similarity {
       .toDF("cell", "center")
   }
 
-  /** Train the coarse quantizer and assign every candidate to its cell.
-    * `metaCols` names metadata columns of `candidates` to carry into the
+  /** Train the coarse quantizer and assign every candidate to its cell,
+    * with the encode its extend runs ([[IndexFamily.Ivf]]). `metaCols`
+    * names metadata columns of `candidates` to carry into the
     * cell-assigned relation (and the saved parquet tree) so probes can
     * pre-filter candidates via [[IvfIndex.filtered]] — the production
     * filtered-ANN shape, where the predicate prunes INSIDE the index
@@ -455,7 +391,8 @@ object Similarity {
       metaCols: Seq[String] = Nil): IvfIndex = {
     val centers = coarseCenters(candidates.sparkSession, trainingSample(
       candidates, idCol, vecCol, SamplePerCenter * nlist, seed), nlist, seed)
-    IvfIndex(centers, assignToCells(candidates, centers, idCol, vecCol, metaCols))
+    IvfIndex(centers, IndexFamily.Ivf.encode(centers, candidates, idCol, vecCol,
+      metaCols).head)
   }
 
   /** Each query's `nprobe` nearest cells by squared Euclidean distance
@@ -526,7 +463,7 @@ object Similarity {
     * them 0 against everything). Norm is computed once per row via a
     * staged `__n` column — higher-order lambdas share no subexpressions,
     * so inlining `norm` per element would be O(dim^2)/row. */
-  private def withUnitVec(df: DataFrame, vecCol: String): DataFrame =
+  private[extensions] def withUnitVec(df: DataFrame, vecCol: String): DataFrame =
     df.withColumn("__n", norm(col(vecCol)))
       .withColumn("__vhat",
         when(col("__n") === 0, transform(col(vecCol), _ => lit(0.0)))
@@ -538,8 +475,9 @@ object Similarity {
     * strict `<` keeps the LOWEST cell on exact ties — deterministic).
     * One sequential fold over the ksub cells per subspace, all inside
     * codegen. */
-  private def encodeCodes(vhat: Column, codebooks: Seq[Seq[Seq[Float]]],
-                          dsub: Int): Column =
+  private[extensions] def encodeCodes(vhat: Column,
+                                      codebooks: Seq[Seq[Seq[Float]]]): Column = {
+    val dsub = codebooks.head.head.length
     array(codebooks.indices.map { sub =>
       val cb = typedlit(codebooks(sub).map(_.map(_.toDouble)))
       val subvec = slice(vhat, sub * dsub + 1, dsub)
@@ -554,6 +492,7 @@ object Similarity {
         },
         acc => acc.getField("cell"))
     }: _*)
+  }
 
   /** The per-query ADC lookup table: a flat m*ksub double array where
     * entry [sub*ksub + cell] = dot(q-subvector, codebook[sub][cell]).
@@ -642,57 +581,22 @@ object Similarity {
 
   /** Fit a PQ index: per-subspace codebooks trained on the driver from
     * one `SamplePerCenter * ksub`-row sample (the fit's only Spark job),
-    * then one codegen'd encode pass over all candidates. `metaCols`
-    * ride into the codes relation for [[PqIndex.filtered]]. */
+    * then one codegen'd encode pass over all candidates, the one its
+    * extend runs ([[IndexFamily.Pq]]). `metaCols` ride into the codes
+    * relation for [[PqIndex.filtered]]. */
   def pqFit(candidates: DataFrame, idCol: String, vecCol: String,
             m: Int = 8, ksub: Int = 16, seed: Long = 42L,
             metaCols: Seq[String] = Nil): PqIndex = {
     val pts = trainingSample(candidates, idCol, vecCol,
       SamplePerCenter * ksub, seed)
     val codebooks = trainCodebooks(pts.map(unitVec), m, ksub, seed)
-    val dim = pts.head.length
-    val codes = withUnitVec(
-      candidates.select(col(idCol).as("neighbor_id") +:
-        col(vecCol).as("c_vec") +: metaCols.map(col): _*), "c_vec")
-      .withColumn("codes", encodeCodes(col("__vhat"), codebooks, dim / m))
-      .select(col("neighbor_id") +: col("codes") +: col("c_vec") +:
-        metaCols.map(col): _*)
-    PqIndex(codebooks, codes, m, ksub, dim)
+    PqIndex(codebooks, IndexFamily.Pq.encode(codebooks, candidates, idCol, vecCol,
+      metaCols).head, m, ksub, pts.head.length)
   }
 
   def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
                   dir: String): PqIndex =
     IndexFamily.Pq.load(spark, dir)
-
-  /** Grow a [[PqIndex]] with `newVecs` WITHOUT refitting: encode against
-    * the FROZEN codebooks and union — exactly O(new vectors), the
-    * corpus-sized codes relation untouched. Same version-bump lineage as
-    * the other families. */
-  def extendPqIndex(index: PqIndex, newVecs: DataFrame,
-                    idCol: String, vecCol: String): PqIndex = {
-    val metaCols = index.codes.columns.toSeq
-      .filterNot(Set("neighbor_id", "codes", "c_vec"))
-    val dsub = index.dim / index.m
-    val enc = withUnitVec(
-      newVecs.select(col(idCol).as("neighbor_id") +:
-        col(vecCol).as("c_vec") +: metaCols.map(col): _*), "c_vec")
-      .withColumn("codes", encodeCodes(col("__vhat"), index.codebooks, dsub))
-      .select(col("neighbor_id") +: col("codes") +: col("c_vec") +:
-        metaCols.map(col): _*)
-    IndexFamily.Pq.nextVersion(index.copy(codes = index.codes.unionByName(enc)))
-  }
-
-  /** Shrink a [[PqIndex]] by retired ids — one streaming anti-join on
-    * the codes relation under the FROZEN codebooks (survivors' codes
-    * are the fitted rows verbatim; re-encoding `A \ R` under the same
-    * codebooks is bitwise identical, the [[extendPqIndex]] contract
-    * run backward). */
-  def removeFromPqIndex(index: PqIndex, removedIds: DataFrame,
-                        idCol: String): PqIndex = {
-    val rm = removedIds.select(col(idCol).as("neighbor_id")).distinct()
-    IndexFamily.Pq.nextVersion(
-      index.copy(codes = index.codes.join(rm, Seq("neighbor_id"), "left_anti")))
-  }
 
   /** The (query_id, q_vec, __dt) probe relation: queries normalized,
     * each with its precomputed flat ADC lookup table. */
@@ -882,7 +786,8 @@ object Similarity {
     * candidate to a cell ([[ivfFit]]'s leg), and one shared per-subspace
     * codebook family compresses every (normalized) vector to m codes
     * ([[pqFit]]'s leg) — one codegen'd encode pass over the assigned
-    * relation. Both quantizers train from ONE collected sample: the cells
+    * relation, the one its extend runs ([[IndexFamily.IvfPq]]). Both
+    * quantizers train from ONE collected sample: the cells
     * on its first `SamplePerCenter * nlist` rows, the codebooks on its
     * first `SamplePerCenter * ksub`. `metaCols` ride into the codes
     * relation for [[IvfPqIndex.filtered]].
@@ -917,21 +822,9 @@ object Similarity {
     val codebooks = trainCodebooks(
       if (!residual) train.map(unitVec) else residuals(train, centerTable),
       m, ksub, seed)
-    val dim = pts.head.length
-    val base0 = withUnitVec(
-      assignToCells(candidates, centerTable, idCol, vecCol, metaCols), "c_vec")
-    val base =
-      if (!residual) base0
-      else subtractCellCenter(base0, centerTable)
-    val encoded = base
-      .withColumn("codes", encodeCodes(col("__vhat"), codebooks, dim / m))
-    // codes-sized scan relation vs rerank-only vector relation: c_vec
-    // rides the second, never the first (the stored/ scanned footprint
-    // is the compression's whole point)
-    val codes = encoded.select(col("neighbor_id") +: col("cell") +:
-      col("codes") +: metaCols.map(col): _*)
-    val vectors = encoded.select(col("neighbor_id"), col("cell"), col("c_vec"))
-    IvfPqIndex(centerTable, codebooks, codes, vectors, m, ksub, dim,
+    val Seq(codes, vectors) = IndexFamily.IvfPq.encode(
+      (centerTable, codebooks, residual), candidates, idCol, vecCol, metaCols)
+    IvfPqIndex(centerTable, codebooks, codes, vectors, m, ksub, pts.head.length,
       residual = residual)
   }
 
@@ -959,7 +852,7 @@ object Similarity {
   /** Replace `__vhat` with the cell residual vhat - chat(cell): one
     * broadcast join against the nlist-row normalized-centroid table +
     * one zip_with — narrow, no shuffle of the corpus side. */
-  private def subtractCellCenter(assigned: DataFrame,
+  private[extensions] def subtractCellCenter(assigned: DataFrame,
                                  centers: DataFrame): DataFrame =
     assigned.join(broadcast(centersUnit(centers)), Seq("cell"))
       .withColumn("__vhat",
@@ -969,49 +862,6 @@ object Similarity {
   def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
                      dir: String): IvfPqIndex =
     IndexFamily.IvfPq.load(spark, dir)
-
-  /** Grow an [[IvfPqIndex]] with `newVecs` WITHOUT re-training either
-    * quantizer: assign to the FROZEN cells ([[assignToCells]]) and
-    * encode against the FROZEN codebooks — exactly O(new vectors), the
-    * corpus-sized codes relation untouched. Same version-bump lineage
-    * and append-only id contract as the other families; metadata
-    * columns carried by the index must be supplied by `newVecs`. */
-  def extendIvfPqIndex(index: IvfPqIndex, newVecs: DataFrame,
-                       idCol: String, vecCol: String): IvfPqIndex = {
-    val metaCols = index.codes.columns.toSeq
-      .filterNot(Set("neighbor_id", "cell", "codes"))
-    val dsub = index.dim / index.m
-    val assigned0 = withUnitVec(
-      assignToCells(newVecs, index.centers, idCol, vecCol, metaCols),
-      "c_vec")
-    // a residual index encodes residuals against the SAME frozen centers
-    // the assignment used — the coupling the section note documents
-    val assigned =
-      if (!index.residual) assigned0
-      else subtractCellCenter(assigned0, index.centers)
-    val enc = assigned
-      .withColumn("codes", encodeCodes(col("__vhat"), index.codebooks, dsub))
-    IndexFamily.IvfPq.nextVersion(index.copy(
-      codes = index.codes.unionByName(enc.select(col("neighbor_id") +:
-        col("cell") +: col("codes") +: metaCols.map(col): _*)),
-      vectors = index.vectors.unionByName(
-        enc.select(col("neighbor_id"), col("cell"), col("c_vec")))))
-  }
-
-  /** Shrink an [[IvfPqIndex]] by retired ids — the IVFADC leg of the
-    * removal lifecycle: two streaming anti-joins keep the codes and the
-    * rerank-only vectors relation in lockstep (the split-tree
-    * invariant). Cells and codebooks stay FROZEN, exactly as in
-    * [[extendIvfPqIndex]], so survivors' codes are bitwise identical to
-    * re-encoding `A \ R` under the same quantizers (spec-pinned) and
-    * every previously-issued probe plan stays valid. */
-  def removeFromIvfPqIndex(index: IvfPqIndex, removedIds: DataFrame,
-                           idCol: String): IvfPqIndex = {
-    val rm = removedIds.select(col(idCol).as("neighbor_id")).distinct()
-    IndexFamily.IvfPq.nextVersion(index.copy(
-      codes = index.codes.join(rm, Seq("neighbor_id"), "left_anti"),
-      vectors = index.vectors.join(rm, Seq("neighbor_id"), "left_anti")))
-  }
 
   /** Probe a fitted [[IvfPqIndex]]: rank the query's `nprobe` nearest
     * cells (coarse pruning — the scan never touches the other
@@ -1179,7 +1029,7 @@ object Similarity {
     * cosine-score each batch vector against its cell's members only.
     * Returns (idCol, corpus_id, cosine) for every batch/corpus pairing
     * at >= eps — corpus-wins provenance, ready for an anti-join drop or
-    * an `extendIvfIndex` accept of the novel remainder (the same
+    * an `IndexFamily.Ivf.extend` accept of the novel remainder (the same
     * accept→bump lifecycle the other index families run). */
   def semanticDupAgainstIndex(index: IvfIndex, batch: DataFrame,
                               idCol: String, vecCol: String,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.extensions.{CorpusOps, Dedup, Multimodal, Search, Similarity}
+import graft.extensions.{CorpusOps, Dedup, IndexFamily, Multimodal, Search, Similarity}
 import graft.functions.{TextExpressions, TextFunctions}
 import graft.sources.Tables
 
@@ -162,9 +162,9 @@ object NorthStarQueries {
         .select("vec_id")
       val retired = diff.filter(col("status").isin("removed", "changed"))
         .select("vec_id")
-      val oldIdx = Similarity.extendIvfIndex(
-        Similarity.removeFromIvfIndex(ivfClusteredIndex(dir, ce), fresh,
-          "vec_id"),
+      val oldIdx = IndexFamily.Ivf.extend(
+        IndexFamily.Ivf.remove(ivfClusteredIndex(dir, ce), fresh,
+          "vec_id", "embedding"),
         old.join(retired, Seq("vec_id"), "left_semi"), "vec_id", "embedding")
       val accepts = ce.join(diff.filter(col("status") === "added")
         .select("vec_id"), Seq("vec_id"), "left_semi").persist()
@@ -644,9 +644,9 @@ object NorthStarQueries {
         .join(partners, Seq("p_id"))
         .select(col("doc_id"), col("text"), col("p_text"))
         .persist()
-      val oldIdx = Dedup.extendCorpusIndex(
-        Dedup.removeFromCorpusIndex(corpusIndex(s, dir),
-          amend.select(col("doc_id")), "doc_id"),
+      val oldIdx = IndexFamily.Text.extend(
+        IndexFamily.Text.remove(corpusIndex(s, dir),
+          amend.select(col("doc_id")), "doc_id", "text"),
         amend.select(col("doc_id"), col("p_text").as("text")),
         "doc_id", "text").persist()
       // materialize the manufacture HERE, structurally (r17 judge #4):
@@ -896,7 +896,7 @@ object NorthStarQueries {
     }),
 
     // ...and the survivor set (corpus-wins): every planted copy drops,
-    // every novel vector survives — ready for extendIvfIndex to accept.
+    // every novel vector survives — ready for IndexFamily.Ivf.extend to accept.
     "dedup_semantic_incr_keep" -> ((s, dir) => {
       val e = embs(s, dir)
       Similarity.semanticDedupBatch(
@@ -969,7 +969,7 @@ object NorthStarQueries {
         corpusIndex(s, dir), "doc_id", "text")),
 
     // Corpus VERSIONING end to end: build the index on HALF the corpus,
-    // EXTEND it with the other half (extendCorpusIndex — shingles the new
+    // EXTEND it with the other half (IndexFamily.Text.extend — shingles the new
     // docs only, re-cuts df over the union), probe the same batch. Must
     // hash-match the from-scratch index's keep-set (same oracle as
     // `dedup_incremental`): extend(build(A), B) ≡ build(A ∪ B), also
@@ -980,7 +980,7 @@ object NorthStarQueries {
       val m = col("doc_id") % 5
       val base = Dedup.buildCorpusIndex(
         d.filter(m === 1 || m === 2), "doc_id", "text")
-      val extended = Dedup.extendCorpusIndex(base,
+      val extended = IndexFamily.Text.extend(base,
         d.filter(m === 3 || m === 4), "doc_id", "text")
       Dedup.dedupAgainstCorpus(d.filter(m === 0), extended, "doc_id", "text")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
@@ -988,7 +988,7 @@ object NorthStarQueries {
 
     // The REMOVAL half of the versioning lifecycle, oracle-checked end
     // to end: build the index on the FULL corpus, retire the batch ids
-    // (doc_id % 5 == 0) via removeFromCorpusIndex — ids only, the
+    // (doc_id % 5 == 0) via IndexFamily.Text.remove — ids only, the
     // stored shingles reconstruct their grams — and probe that same
     // batch against the shrunk index. remove(build(all), B) ≡
     // build(all \ B) is the exactness contract (including the df cut
@@ -1005,8 +1005,8 @@ object NorthStarQueries {
     // incremental work that is the operator's actual cost claim.
     "dedup_incr_index_retract" -> ((s, dir) => {
       val d = docs(s, dir)
-      val shrunk = Dedup.removeFromCorpusIndex(fullCorpusIndex(s, dir),
-        d.filter(col("doc_id") % 5 === 0).select(col("doc_id")), "doc_id")
+      val shrunk = IndexFamily.Text.remove(fullCorpusIndex(s, dir),
+        d.filter(col("doc_id") % 5 === 0).select(col("doc_id")), "doc_id", "text")
       Dedup.dedupAgainstCorpus(d.filter(col("doc_id") % 5 === 0),
         shrunk, "doc_id", "text")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
@@ -1106,8 +1106,8 @@ object NorthStarQueries {
         .select("vec_id")
       val retired = diff.filter(col("status").isin("removed", "changed"))
         .select("vec_id")
-      val oldIdx = Dedup.extendEmbeddingIndex(
-        Dedup.removeFromEmbeddingIndex(embIndex(s, dir), fresh, "vec_id"),
+      val oldIdx = IndexFamily.Embedding.extend(
+        IndexFamily.Embedding.remove(embIndex(s, dir), fresh, "vec_id", "embedding"),
         old.join(retired, Seq("vec_id"), "left_semi"),
         "vec_id", "embedding")
       val refreshed = CorpusOps.refreshIndex(oldIdx, e,
@@ -1120,7 +1120,7 @@ object NorthStarQueries {
     // The full PRODUCTION VERSIONING LOOP in one plan: probe batch 1
     // (doc_id % 10 == 0) against the corpus index (doc_id % 5 != 0),
     // fold the ACCEPTED novel docs into the index as a version bump
-    // (extendCorpusIndex — the same fold `CdcStream.compactAccepted`
+    // (IndexFamily.Text.extend — the same fold `CdcStream.compactAccepted`
     // applies to the streaming sink, spec'd there with a forced
     // cross-batch replay), then probe batch 2
     // (doc_id % 10 == 5) against version N+1 — so a batch-2 doc is
@@ -1154,7 +1154,7 @@ object NorthStarQueries {
       val accepted = Dedup.dedupAgainstCorpus(
         d.filter(col("doc_id") % 10 === 0), idx, "doc_id", "text")
         .localCheckpoint(true)
-      val v2 = Dedup.extendCorpusIndex(idx, accepted, "doc_id", "text")
+      val v2 = IndexFamily.Text.extend(idx, accepted, "doc_id", "text")
       Dedup.dedupAgainstCorpus(
         d.filter(col("doc_id") % 5 === 0 && col("doc_id") % 10 =!= 0),
         v2, "doc_id", "text")
@@ -1337,7 +1337,7 @@ object NorthStarQueries {
     // Embedding-index VERSIONING end to end (the embedding analog of
     // `dedup_incr_index_extend`, completing the lifecycle symmetry):
     // fit the index on HALF the corpus, EXTEND it with the other half
-    // (extendEmbeddingIndex buckets the new vectors with the fitted
+    // (IndexFamily.Embedding.extend buckets the new vectors with the fitted
     // index's own planes/bands), probe the same planted batch. Must
     // produce the keep-set a full-corpus index produces (same
     // float-exact oracle as `dedup_embedding_incr`): extend(build(A),
@@ -1349,7 +1349,7 @@ object NorthStarQueries {
       val base = Dedup.buildEmbeddingIndex(
         e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
         planes = 12, bands = 8)
-      val extended = Dedup.extendEmbeddingIndex(base,
+      val extended = IndexFamily.Embedding.extend(base,
         e.filter(col("vec_id") % 2 =!= 0), "vec_id", "embedding")
       Dedup.dedupEmbeddingsAgainstCorpus(embIncrBatch(e), extended,
         "vec_id", "embedding", threshold = 0.9)
@@ -1360,7 +1360,7 @@ object NorthStarQueries {
     // (`dedup_version_bump`'s sibling — every index family ships the
     // full lifecycle): probe batch 1 (negated copies of every 7th
     // vector — novel vs the corpus) against version N, fold its
-    // survivors in via extendEmbeddingIndex (the same fold `CdcStream
+    // survivors in via IndexFamily.Embedding.extend (the same fold `CdcStream
     // .compactAccepted` applies to the streaming sink),
     // then probe batch 2 against version N+1. Batch 2 plants
     // near-copies of the NEGATED batch-1 vectors (+0.05 nudge, ids
@@ -1379,7 +1379,7 @@ object NorthStarQueries {
         transform(col("embedding"), x => -x).as("embedding"))
       val accepted = Dedup.dedupEmbeddingsAgainstCorpus(b1, idx,
         "vec_id", "embedding", threshold = 0.9)
-      val v2 = Dedup.extendEmbeddingIndex(idx, accepted, "vec_id", "embedding")
+      val v2 = IndexFamily.Embedding.extend(idx, accepted, "vec_id", "embedding")
       val b2 = e.filter(col("vec_id") % 7 === 0).select(
           (col("vec_id") + 30000000L).as("vec_id"),
           concat(array(-col("embedding").getItem(0) + lit(0.05f)),
@@ -1559,9 +1559,9 @@ object NorthStarQueries {
         .select("vec_id")
       val retired = diff.filter(col("status").isin("removed", "changed"))
         .select("vec_id")
-      val oldIdx = Similarity.extendIvfIndex(
-        Similarity.removeFromIvfIndex(ivfClusteredIndex(dir, ce), fresh,
-          "vec_id"),
+      val oldIdx = IndexFamily.Ivf.extend(
+        IndexFamily.Ivf.remove(ivfClusteredIndex(dir, ce), fresh,
+          "vec_id", "embedding"),
         old.join(retired, Seq("vec_id"), "left_semi"), "vec_id", "embedding")
       val refreshed = CorpusOps.refreshIndex(oldIdx, ce,
         "vec_id", "embedding", diff)
@@ -1807,7 +1807,7 @@ object NorthStarQueries {
     // IVF index VERSIONING end to end (the IVF leg of the symmetry
     // `dedup_incr_index_extend` / `dedup_emb_index_extend` cover for
     // the text and LSH families): fit the coarse quantizer on HALF the
-    // corpus, extend with the other half (extendIvfIndex assigns the
+    // corpus, extend with the other half (IndexFamily.Ivf.extend assigns the
     // new vectors to the FROZEN centroids — no re-train, no corpus
     // reassignment), probe the extended index. Gated on recall vs the
     // DuckDB-recomputable brute-force top-10 — measured 0.836 / 0.812 /
@@ -1820,7 +1820,7 @@ object NorthStarQueries {
     "sim_ivf_extend_recall" -> ((s, dir) => {
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") % 20 === 0)
-      val ext = Similarity.extendIvfIndex(
+      val ext = IndexFamily.Ivf.extend(
         Similarity.ivfFit(e.filter(col("vec_id") % 2 === 0),
           "vec_id", "embedding", nlist = 16),
         e.filter(col("vec_id") % 2 =!= 0), "vec_id", "embedding")
@@ -2091,7 +2091,7 @@ object NorthStarQueries {
     // the extend leg itself inside the driver's correctness gate.
     "search_bm25_extend" -> ((s, dir) => {
       val d = docs(s, dir)
-      val ext = Search.extendBm25Stats(
+      val ext = IndexFamily.Bm25.extend(
         Search.bm25Fit(d.filter(col("doc_id") % 2 === 0), "doc_id", "text"),
         d.filter(col("doc_id") % 2 =!= 0), "doc_id", "text")
       Search.bm25TopKFitted(d, ext, "doc_id", "text",
@@ -2109,7 +2109,7 @@ object NorthStarQueries {
       val junk = d.filter(col("doc_id") % 7 === 0)
         .crossJoin(broadcast(d.agg((max(col("doc_id")) + 1).as("__off"))))
         .select((col("doc_id") + col("__off")).as("doc_id"), col("text"))
-      val retracted = Search.retractBm25Stats(
+      val retracted = IndexFamily.Bm25.remove(
         Search.bm25Fit(d.select(col("doc_id"), col("text")).unionByName(junk),
           "doc_id", "text"),
         junk, "doc_id", "text")

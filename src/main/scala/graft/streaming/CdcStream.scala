@@ -141,8 +141,9 @@ object CdcStream {
     * trees the compaction consumed are already marked, so
     * post-compaction batches written there would be orphaned. Handles
     * with NO saved tree (in-memory fits) cannot be probed — for them
-    * every policy degrades to [[FrozenHandle]] and the documented
-    * restart contract governs. */
+    * every policy keeps the frozen handle, and the operator owns the
+    * drain → fold → restart-on-the-new-handle rhythm documented on
+    * [[startCdcMaintenanceIngest]]. */
   sealed trait CompactionPolicy
 
   /** Refuse the trigger with a named `restart required: index version
@@ -165,11 +166,6 @@ object CdcStream {
     * folding to close it. */
   case object ReresolveOnCompaction extends CompactionPolicy
 
-  /** r18 behavior: no per-trigger probe; the operator owns the
-    * drain → fold → restart-on-the-new-handle rhythm (the documented
-    * operating contract on [[startCdcMaintenanceIngest]]). */
-  case object FrozenHandle extends CompactionPolicy
-
   /** Per-trigger handle resolution: probe the saved tree's stamp (O(1)
     * metadata read, no Spark job) and apply the policy. `ref` carries
     * the current handle across triggers — foreachBatch runs serially on
@@ -178,9 +174,9 @@ object CdcStream {
       spark: SparkSession, ref: java.util.concurrent.atomic.AtomicReference[I],
       policy: CompactionPolicy)(implicit fam: IndexFamily[I]): I = {
     val cur = ref.get()
-    (policy, cur.savedDir) match {
-      case (FrozenHandle, _) | (_, None) => cur
-      case (_, Some(d)) =>
+    cur.savedDir match {
+      case None => cur
+      case Some(d) =>
         graft.extensions.IndexMeta.read(spark, d).map(_.version) match {
           case Some(v) if v != cur.version => policy match {
             case FailStreamOnCompaction => throw new IllegalStateException(
@@ -192,7 +188,6 @@ object CdcStream {
                 "ReresolveOnCompaction to roll automatically)")
             case ReresolveOnCompaction =>
               val fresh = fam.load(spark, d); ref.set(fresh); fresh
-            case FrozenHandle => cur
           }
           case _ => cur
         }
@@ -1096,7 +1091,7 @@ object CdcStream {
             val retractDocs = net.filter(col("__first_kind") =!= "accept")
               .select(col(idCol), col("__first_old").as(textCol))
             // refuse loudly, never drift: a NULL earliest-old reaching
-            // retractBm25Stats would decrement nDocs while subtracting
+            // IndexFamily.Bm25.remove would decrement nDocs while subtracting
             // no terms — silent corruption of every later score. A NULL
             // here means a retract-side id whose old image the feed
             // never carried: most often an ingest still routing against
@@ -1157,7 +1152,7 @@ object CdcStream {
         // ONE eager materialization of the skinny event union: the
         // collision guard below and every downstream reference of the
         // min_by/max_by aggregation read the checkpoint, not the sink
-        // parquet trees over again (removeFrom*'s multi-join plans
+        // parquet trees over again (the removals' multi-join plans
         // reference the net relation several times per evaluation)
         val events = present.reduce(_ unionByName _).localCheckpoint(true)
         val dup = events.groupBy(col(idCol), col("batch"))
@@ -1184,7 +1179,7 @@ object CdcStream {
   }
 
   /** Refuse loudly when a BM25 retract-side relation carries a NULL
-    * image — [[graft.extensions.Search.retractBm25Stats]] maps NULL
+    * image — [[graft.extensions.IndexFamily.Bm25.remove]] maps NULL
     * text to dl 0 / no terms yet still decrements nDocs, leaving the
     * stats permanently one doc low per NULL row: the exact
     * silent-drift class the fold battery's other guards (within-batch

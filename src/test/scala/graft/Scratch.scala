@@ -499,7 +499,7 @@ object Scratch {
               .queryExecution.toRdd.count(); ()
           }
           time3("extend O(new) dictionary-merge") {
-            val ext = extensions.Dedup.extendCorpusIndex(ix, batchDocs, "doc_id", "text")
+            val ext = extensions.IndexFamily.Text.extend(ix, batchDocs, "doc_id", "text")
             ext.postings.queryExecution.toRdd.count()
             ext.dfCounts.queryExecution.toRdd.count(); ()
           }
@@ -608,7 +608,7 @@ object Scratch {
         val q = e.filter(col("vec_id") % 100 === 0)
         val idx = extensions.Similarity.ivfFit(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", nlist = 16)
-        val ext = extensions.Similarity.extendIvfIndex(
+        val ext = extensions.IndexFamily.Ivf.extend(
           idx, e.filter(col("vec_id") % 2 =!= 0), "vec_id", "embedding")
         val brute = extensions.Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 10)
           .select(col("query_id"), col("neighbor_id"))
@@ -1137,7 +1137,7 @@ object Scratch {
           show("ivf_p8", ratio(brute10,
             Similarity.ivfProbe(ivf, q, "vec_id", "embedding", k = 10, nprobe = 8)
               .select(col("query_id"), col("neighbor_id"))))
-          val ext = Similarity.extendIvfIndex(
+          val ext = extensions.IndexFamily.Ivf.extend(
             Similarity.ivfFit(e.filter(col("vec_id") % 2 === 0),
               "vec_id", "embedding", nlist = 16),
             e.filter(col("vec_id") % 2 =!= 0), "vec_id", "embedding")

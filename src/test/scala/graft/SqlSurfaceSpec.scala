@@ -419,6 +419,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
   test("CALL graft.fit_index completes the pure-SQL lifecycle: CALL-fit " +
     "== API-fit tree-for-tree (deterministic seeds), hyperparameters " +
     "literal-guarded per family") {
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
     import graft.extensions.{Dedup, Similarity}
     val docs = graft.sources.Tables.load(spark, TestSpark.Sf0001, "documents")
@@ -428,21 +429,51 @@ class SqlSurfaceSpec extends AnyFunSuite {
       .filter(col("vec_id") < 300).select(col("vec_id"), col("embedding"))
     vecs.createOrReplaceTempView("g_fit_vecs")
 
-    // text: the CALL-fitted tree == the API-fitted index, posting for
-    // posting, and the audit row names what happened
-    val tDir = TestSpark.tmpDir("graft-fit-text")
-    val apiText = Dedup.buildCorpusIndex(docs, "doc_id", "text")
-    val trow = spark.sql(
-      s"""CALL graft.fit_index('text', 'g_fit_docs', '$tDir',
-         |  'doc_id', 'text')""".stripMargin).collect().head
-    assert(trow.getAs[String]("family") === "text" &&
-      trow.getAs[String]("saved_to") === tDir &&
-      trow.getAs[Long]("version") === apiText.version)
-    def postingSet(ix: Dedup.CorpusIndex) =
-      ix.postings.select("gram", "doc_id").collect()
-        .map(x => (x.getLong(0), x.getLong(1))).toSet
-    assert(postingSet(Dedup.loadCorpusIndex(spark, tDir)) ===
-      postingSet(apiText))
+    // every family: the CALL-fitted tree with default hyperparameters ==
+    // the Scala fit with ITS OWN defaults, relation by relation — pins
+    // the registry's defaults against the Scala signatures
+    import graft.extensions.{IndexFamily, IndexLifecycleSpec, Search, Versioned}
+    val scalaFit: Map[String, DataFrame => Versioned] = Map(
+      "text" -> (Dedup.buildCorpusIndex(_, "doc_id", "text")),
+      "bm25" -> (Search.bm25Fit(_, "doc_id", "text")),
+      "embedding" -> (Dedup.buildEmbeddingIndex(_, "vec_id", "embedding")),
+      "ivf" -> (Similarity.ivfFit(_, "vec_id", "embedding")),
+      "ivfpq" -> (Similarity.ivfPqFit(_, "vec_id", "embedding")),
+      "lsh" -> (Similarity.lshFit(_, "vec_id", "embedding")),
+      "pq" -> (Similarity.pqFit(_, "vec_id", "embedding")))
+    def sameTree[I <: Versioned](fam: IndexFamily[I], dir: String, api: Versioned): Unit = {
+      val (loaded, want) = (fam.load(spark, dir), api.asInstanceOf[I])
+      assert(IndexLifecycleSpec.contents(fam, loaded) === IndexLifecycleSpec.contents(fam, want),
+        s"${fam.name}: CALL-fit != API-fit")
+    }
+    IndexFamily.all.foreach { fam =>
+      val text = fam.imageType == org.apache.spark.sql.types.StringType
+      val dir = TestSpark.tmpDir(s"graft-fit-${fam.name}")
+      val row = spark.sql(
+        s"""CALL graft.fit_index('${fam.name}', '${if (text) "g_fit_docs" else "g_fit_vecs"}',
+           |  '$dir', '${if (text) "doc_id" else "vec_id"}',
+           |  '${if (text) "text" else "embedding"}')""".stripMargin).collect().head
+      assert(row.getAs[String]("family") === fam.name &&
+        row.getAs[String]("saved_to") === dir && row.getAs[Long]("version") === 1L)
+      sameTree(fam, dir, scalaFit(fam.name)(if (text) docs else vecs))
+    }
+
+    // ivfpq's boolean hyperparameter: residual => 'true' fits the
+    // residual encoding, and a non-boolean value refuses by name
+    val rDir = TestSpark.tmpDir("graft-fit-ivfpq-residual")
+    spark.sql(
+      s"""CALL graft.fit_index('ivfpq', 'g_fit_vecs', '$rDir',
+         |  'vec_id', 'embedding', residual => 'true')""".stripMargin).collect()
+    sameTree(IndexFamily.IvfPq, rDir,
+      Similarity.ivfPqFit(vecs, "vec_id", "embedding", residual = true))
+    val badBool = intercept[Exception] {
+      spark.sql(
+        s"""CALL graft.fit_index('ivfpq', 'g_fit_vecs',
+           |  '${TestSpark.tmpDir("gf-x0")}', 'vec_id', 'embedding',
+           |  residual => 'maybe')""".stripMargin).collect()
+    }
+    assert(badBool.getMessage.contains("residual") &&
+      badBool.getMessage.contains("true or false"))
 
     // ivf with a NAMED hyperparameter: the tree equals the API fit at
     // the same nlist — the fixed seed makes CALL-fit ≡ API-fit

@@ -221,7 +221,7 @@ class DedupSpec extends AnyFunSuite {
     val b = (21L to 40L).map(i => (i, if (i % 4 == 0) "alpha beta gamma delta repeated"
       else text())).toDF("doc_id", "text")
 
-    val extended = Dedup.extendCorpusIndex(
+    val extended = IndexFamily.Text.extend(
       Dedup.buildCorpusIndex(a, "doc_id", "text", maxGramDf = 3),
       b, "doc_id", "text")
     val scratch = Dedup.buildCorpusIndex(a.union(b), "doc_id", "text", maxGramDf = 3)
@@ -265,7 +265,7 @@ class DedupSpec extends AnyFunSuite {
     // build(A∪B∪C)
     val c = (41L to 50L).map(i => (i, if (i % 3 == 0) "alpha beta gamma delta repeated"
       else text())).toDF("doc_id", "text")
-    val twice = Dedup.extendCorpusIndex(extended, c, "doc_id", "text")
+    val twice = IndexFamily.Text.extend(extended, c, "doc_id", "text")
     val scratch3 = Dedup.buildCorpusIndex(a.union(b).union(c), "doc_id", "text",
       maxGramDf = 3)
     assert(postingSet(twice) == postingSet(scratch3),
@@ -304,8 +304,8 @@ class DedupSpec extends AnyFunSuite {
     assert(aDf.exists { case (g, df) => df <= 3 && combinedDf(g) > 3 },
       "fixture sanity: some gram must cross BACK under the cut on removal")
 
-    val removed = Dedup.removeFromCorpusIndex(combined,
-      r.select(col("doc_id")), "doc_id")
+    val removed = IndexFamily.Text.remove(combined,
+      r.select(col("doc_id")), "doc_id", "text")
     def postingSet(ix: Dedup.CorpusIndex) =
       ix.postings.select("gram", "doc_id").as[(Long, Long)].collect().toSet
     assert(postingSet(removed) == postingSet(scratchA),
@@ -333,7 +333,7 @@ class DedupSpec extends AnyFunSuite {
     // remove-then-extend (the `changed` path) round-trips through the
     // merged dictionary: extend(remove(build(A∪R), R), C) ≡ build(A∪C)
     val c = (41L to 50L).map(i => (i, text())).toDF("doc_id", "text")
-    val roundTrip = Dedup.extendCorpusIndex(removed, c, "doc_id", "text")
+    val roundTrip = IndexFamily.Text.extend(removed, c, "doc_id", "text")
     val scratchAC = Dedup.buildCorpusIndex(a.union(c), "doc_id", "text", maxGramDf = 3)
     assert(postingSet(roundTrip) == postingSet(scratchAC))
     assert(dfMap(roundTrip) == dfMap(scratchAC))
@@ -345,8 +345,8 @@ class DedupSpec extends AnyFunSuite {
     val all = e.select(col("vec_id"), col("embedding"))
     val keepSide = all.filter(col("vec_id") % 3 =!= 0)
     val rmIds = all.filter(col("vec_id") % 3 === 0).select(col("vec_id"))
-    val removed = Dedup.removeFromEmbeddingIndex(
-      Dedup.buildEmbeddingIndex(all, "vec_id", "embedding"), rmIds, "vec_id")
+    val removed = IndexFamily.Embedding.remove(
+      Dedup.buildEmbeddingIndex(all, "vec_id", "embedding"), rmIds, "vec_id", "embedding")
     val scratch = Dedup.buildEmbeddingIndex(keepSide, "vec_id", "embedding")
     def bucketSet(ix: Dedup.EmbeddingIndex) =
       ix.buckets.select("doc_id", "band", "bucket")
@@ -407,7 +407,7 @@ class DedupSpec extends AnyFunSuite {
     val bRows = (21L to 40L).map(i => (i, vec()))
     val b = bRows.toDF("vec_id", "embedding")
 
-    val extended = Dedup.extendEmbeddingIndex(
+    val extended = IndexFamily.Embedding.extend(
       Dedup.buildEmbeddingIndex(a, "vec_id", "embedding", planes = 12, bands = 8),
       b, "vec_id", "embedding")
     val scratch = Dedup.buildEmbeddingIndex(a.union(b), "vec_id", "embedding",
@@ -522,8 +522,8 @@ class DedupSpec extends AnyFunSuite {
         .select("doc_id").as[Long].collect().toSet
     assert(kept(loaded) == kept(index))
     val newDocs = Seq((6L, "entirely novel appended document text")).toDF("doc_id", "text")
-    assert(dfMap(Dedup.extendCorpusIndex(loaded, newDocs, "doc_id", "text")) ==
-      dfMap(Dedup.extendCorpusIndex(index, newDocs, "doc_id", "text")))
+    assert(dfMap(IndexFamily.Text.extend(loaded, newDocs, "doc_id", "text")) ==
+      dfMap(IndexFamily.Text.extend(index, newDocs, "doc_id", "text")))
     loaded.close()
   }
 
@@ -537,7 +537,7 @@ class DedupSpec extends AnyFunSuite {
     val ixDir = graft.TestSpark.tmpDir("graft-extend-plan")
     Dedup.saveCorpusIndex(Dedup.buildCorpusIndex(docs, "doc_id", "text"), ixDir)
     val loaded = Dedup.loadCorpusIndex(spark, ixDir)
-    val ext = Dedup.extendCorpusIndex(loaded,
+    val ext = IndexFamily.Text.extend(loaded,
       Seq((10L, "brand new appended words")).toDF("doc_id", "text"),
       "doc_id", "text")
     def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution

@@ -7,10 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** The saved-tree lifecycle every family shares ([[IndexFamily.save]],
-  * [[IndexFamily.load]]): an in-place upgrade round-trips, an unrelated
-  * save over a stamped tree is refused, and a load reads no schema. */
+/** The lifecycle every family shares ([[IndexFamily.save]],
+  * [[IndexFamily.load]], extend and remove): an in-place upgrade
+  * round-trips, an unrelated save over a stamped or corrupt-stamped tree
+  * is refused, a load reads no schema, and removing what was just added
+  * restores the index. */
 class IndexLifecycleSpec extends AnyFunSuite {
+  import IndexLifecycleSpec.contents
   private lazy val spark = TestSpark.spark
 
   private def docs = graft.sources.Tables.load(spark, TestSpark.Sf0001, "documents")
@@ -27,26 +30,16 @@ class IndexLifecycleSpec extends AnyFunSuite {
       (vecs.filter(col("vec_id") < 200),
         vecs.filter(col("vec_id").between(200, 259)), "vec_id", "embedding")
 
-  private def fit[I <: Versioned](fam: IndexFamily[I], df: DataFrame): I =
-    (fam.name match {
-      case "text" => Dedup.buildCorpusIndex(df, "doc_id", "text")
-      case "bm25" => Search.bm25Fit(df, "doc_id", "text")
-      case "embedding" => Dedup.buildEmbeddingIndex(df, "vec_id", "embedding")
-      case "ivf" => Similarity.ivfFit(df, "vec_id", "embedding", nlist = 4)
-      case "ivfpq" => Similarity.ivfPqFit(df, "vec_id", "embedding", nlist = 4, m = 8, ksub = 8)
-      case "lsh" => Similarity.lshFit(df, "vec_id", "embedding")
-      case "pq" => Similarity.pqFit(df, "vec_id", "embedding", m = 8, ksub = 8)
-    }).asInstanceOf[I]
+  /** Non-default hyperparameters that keep the fixture's fits small. */
+  private val hyper: Map[String, Map[String, Any]] = Map(
+    "ivf" -> Map("nlist" -> 4),
+    "ivfpq" -> Map("nlist" -> 4, "m" -> 8, "ksub" -> 8),
+    "pq" -> Map("m" -> 8, "ksub" -> 8))
 
-  /** Every relation's rows, columns by name, as a sorted multiset. */
-  private def contents[I <: Versioned](fam: IndexFamily[I], ix: I): Map[String, Seq[String]] =
-    fam.relations(ix).map { r =>
-      r.name -> r.frame.select(r.frame.columns.sorted.map(col).toIndexedSeq: _*).collect()
-        .map(_.toSeq.map {
-          case a: scala.collection.Seq[_] => a.toList
-          case x => x
-        }.mkString("|")).toSeq.sorted
-    }.toMap
+  private def fit[I <: Versioned](fam: IndexFamily[I], df: DataFrame): I = {
+    val (_, _, idCol, contentCol) = data(fam)
+    fam.fit(df, idCol, contentCol, hyper.getOrElse(fam.name, Map.empty))
+  }
 
   private def saved(fam: IndexFamily[_ <: Versioned]): String = {
     val dir = TestSpark.tmpDir(s"graft-lifecycle-${fam.name}")
@@ -98,6 +91,37 @@ class IndexLifecycleSpec extends AnyFunSuite {
       check(fam)
     }
 
+    test(s"${fam.name}: a corrupt stamp refuses every save until it is cleared") {
+      def check[I <: Versioned](f: IndexFamily[I]): Unit = {
+        val dir = saved(f)
+        // a truncated stamp, written through the Hadoop FS so its checksum
+        // file stays in step
+        val p = new org.apache.hadoop.fs.Path(dir, IndexMeta.FileName)
+        val w = p.getFileSystem(spark.sessionState.newHadoopConf()).create(p, true)
+        try w.write("""{"version": 1, "fol""".getBytes) finally w.close()
+        val err = intercept[IllegalArgumentException](f.save(fit(f, data(f)._1), dir))
+        assert(err.getMessage.contains("save refused") &&
+          err.getMessage.contains("UNREADABLE"), err.getMessage)
+        assert(IndexMeta.clearCorruptStamp(spark, dir))
+        val out = f.save(fit(f, data(f)._1), dir)
+        assert(IndexMeta.read(spark, dir).map(_.version).contains(out.version))
+        f.close(out)
+      }
+      check(fam)
+    }
+
+    test(s"${fam.name}: remove(extend(ix, B), B) restores ix") {
+      def check[I <: Versioned](f: IndexFamily[I]): Unit = {
+        val (base, more, idCol, contentCol) = data(f)
+        val ix = fit(f, base)
+        val back = f.remove(f.extend(ix, more, idCol, contentCol), more, idCol, contentCol)
+        assert(back.version == ix.version + 2)
+        assert(contents(f, back) == contents(f, ix))
+        assert(f.params(back) == f.params(ix))
+      }
+      check(fam)
+    }
+
     test(s"${fam.name}: a load starts no schema-inference job") {
       val dir = saved(fam)
       val (ix, sites) = TestSpark.jobSites(fam.load(spark, dir))
@@ -113,7 +137,20 @@ class IndexLifecycleSpec extends AnyFunSuite {
     val loaded = Similarity.loadIvfIndex(spark, dir)
     val more = data(IndexFamily.Ivf)._2
     val (_, sites) = TestSpark.jobSites(
-      Similarity.extendIvfIndex(loaded, more, "vec_id", "embedding"))
+      IndexFamily.Ivf.extend(loaded, more, "vec_id", "embedding"))
     assert(sites.isEmpty, s"extend started $sites")
   }
+}
+
+object IndexLifecycleSpec {
+
+  /** Every relation's rows, columns by name, as a sorted multiset. */
+  def contents[I <: Versioned](fam: IndexFamily[I], ix: I): Map[String, Seq[String]] =
+    fam.relations(ix).map { r =>
+      r.name -> r.frame.select(r.frame.columns.sorted.map(col).toIndexedSeq: _*).collect()
+        .map(_.toSeq.map {
+          case a: scala.collection.Seq[_] => a.toList
+          case x => x
+        }.mkString("|")).toSeq.sorted
+    }.toMap
 }

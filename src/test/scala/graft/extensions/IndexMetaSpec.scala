@@ -41,7 +41,7 @@ class IndexMetaSpec extends AnyFunSuite {
     val d2 = TestSpark.tmpDir("graft-meta-p2")
     val v1 = Dedup.saveCorpusIndex(
       Dedup.buildCorpusIndex(docs.filter(col("doc_id") < 100), "doc_id", "text"), d1)
-    val v2 = Dedup.extendCorpusIndex(v1,
+    val v2 = IndexFamily.Text.extend(v1,
       docs.filter(col("doc_id") >= 100 && col("doc_id") < 150), "doc_id", "text")
     assert(v2.version == 2L)
     assert(v2.savedDir.isEmpty, "an extension must not inherit the parent's tree")
@@ -67,7 +67,7 @@ class IndexMetaSpec extends AnyFunSuite {
     // points at `dir`, but the save overwrites that very tree — a stamp
     // with parent == dir would name a tree that no longer exists, and a
     // lineage walker would loop on it forever
-    val ext = Dedup.extendCorpusIndex(Dedup.loadCorpusIndex(spark, dir),
+    val ext = IndexFamily.Text.extend(Dedup.loadCorpusIndex(spark, dir),
       docs.filter(col("doc_id") >= 100 && col("doc_id") < 150), "doc_id", "text")
     assert(ext.parent.contains(dir))
     val mat = Dedup.CorpusIndex(
@@ -92,7 +92,7 @@ class IndexMetaSpec extends AnyFunSuite {
     // Materialize the extension's inputs BEFORE overwriting (the lazy
     // plans read the old files) — in production the jobs are distinct
     // and the new version is computed from its own inputs.
-    val ext = Dedup.extendCorpusIndex(v1,
+    val ext = IndexFamily.Text.extend(v1,
       docs.filter(col("doc_id") >= 100 && col("doc_id") < 150), "doc_id", "text")
     // carry LINEAGE through the materialization: the in-place-upgrade
     // save guard (r19, the Bm25Stats.save contract ported) admits a
@@ -122,7 +122,7 @@ class IndexMetaSpec extends AnyFunSuite {
     val ivf = Similarity.ivfFit(e, "vec_id", "embedding", nlist = 4).save(ivfDir)
     assert(IndexMeta.read(spark, ivfDir).get.version == 1L)
     assert(Similarity.loadIvfIndex(spark, ivfDir).version == 1L)
-    val ivf2 = Similarity.extendIvfIndex(ivf, e.limit(0), "vec_id", "embedding")
+    val ivf2 = IndexFamily.Ivf.extend(ivf, e.limit(0), "vec_id", "embedding")
     assert(ivf2.version == 2L && ivf2.savedDir.isEmpty)
     assert(ivf2.parent.contains(ivfDir), "IVF extension must carry lineage")
     ivf.close()
@@ -131,7 +131,7 @@ class IndexMetaSpec extends AnyFunSuite {
     val lsh = Similarity.lshFit(e, "vec_id", "embedding").save(lshDir)
     assert(IndexMeta.read(spark, lshDir).get.version == 1L)
     assert(Similarity.loadLshIndex(spark, lshDir).version == 1L)
-    val lsh2 = Similarity.extendLshIndex(lsh, e.limit(0), "vec_id", "embedding")
+    val lsh2 = IndexFamily.Lsh.extend(lsh, e.limit(0), "vec_id", "embedding")
     assert(lsh2.version == 2L && lsh2.savedDir.isEmpty,
       "an LSH extension must not inherit the parent's tree")
     assert(lsh2.parent.contains(lshDir), "LSH extension must carry lineage")
@@ -142,7 +142,7 @@ class IndexMetaSpec extends AnyFunSuite {
       .save(pqDir)
     assert(IndexMeta.read(spark, pqDir).get.version == 1L)
     assert(Similarity.loadPqIndex(spark, pqDir).version == 1L)
-    val pq2 = Similarity.extendPqIndex(pq, e.limit(0), "vec_id", "embedding")
+    val pq2 = IndexFamily.Pq.extend(pq, e.limit(0), "vec_id", "embedding")
     assert(pq2.version == 2L && pq2.savedDir.isEmpty,
       "a PQ extension must not inherit the parent's tree")
     assert(pq2.parent.contains(pqDir), "PQ extension must carry lineage")
@@ -153,7 +153,7 @@ class IndexMetaSpec extends AnyFunSuite {
       Dedup.buildEmbeddingIndex(e, "vec_id", "embedding"), embDir)
     assert(IndexMeta.read(spark, embDir).get.version == 1L)
     assert(Dedup.loadEmbeddingIndex(spark, embDir).version == 1L)
-    val emb2 = Dedup.extendEmbeddingIndex(emb, e.limit(0), "vec_id", "embedding")
+    val emb2 = IndexFamily.Embedding.extend(emb, e.limit(0), "vec_id", "embedding")
     assert(emb2.version == 2L)
     assert(emb2.parent.contains(embDir), "embedding extension must carry lineage")
     emb.close()

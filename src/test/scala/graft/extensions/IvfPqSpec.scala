@@ -100,7 +100,7 @@ class IvfPqSpec extends AnyFunSuite {
     val dir = TestSpark.tmpDir("graft-ivfpq-extend")
     val half = Similarity.ivfPqFit(e.filter(col("vec_id") < 150),
       "vec_id", "embedding", nlist = 4, m = 8, ksub = 8).save(dir)
-    val ext = Similarity.extendIvfPqIndex(half,
+    val ext = IndexFamily.IvfPq.extend(half,
       e.filter(col("vec_id") >= 150), "vec_id", "embedding")
     assert(ext.codebooks == half.codebooks, "extension must not refit PQ")
     assert(ext.centers eq half.centers, "extension must not move centroids")
@@ -122,7 +122,7 @@ class IvfPqSpec extends AnyFunSuite {
     val idx = Similarity.ivfPqFit(e, "vec_id", "embedding",
       nlist = 4, m = 8, ksub = 8)
     val rmIds = e.filter(col("vec_id") % 3 === 0).select(col("vec_id"))
-    val removed = Similarity.removeFromIvfPqIndex(idx, rmIds, "vec_id")
+    val removed = IndexFamily.IvfPq.remove(idx, rmIds, "vec_id", "embedding")
     assert(removed.codebooks == idx.codebooks && (removed.centers eq idx.centers),
       "removal must not refit either quantizer")
     assert(removed.version === idx.version + 1)
@@ -239,7 +239,7 @@ class IvfPqSpec extends AnyFunSuite {
     assert(rows(loaded) === rows(idx))
     // extend: residuals of the NEW vectors are taken against the same
     // frozen centers the assignment used, encoded with frozen codebooks
-    val ext = Similarity.extendIvfPqIndex(loaded,
+    val ext = IndexFamily.IvfPq.extend(loaded,
       e.filter(col("vec_id") >= 150), "vec_id", "embedding")
     assert(ext.residual && ext.codebooks == loaded.codebooks)
     val seen = Similarity.ivfPqProbe(ext,

@@ -79,7 +79,7 @@ class PqSpec extends AnyFunSuite {
     val dir = TestSpark.tmpDir("graft-pq-extend")
     val half = Similarity.pqFit(e.filter(col("vec_id") < 150),
       "vec_id", "embedding", m = 8, ksub = 8).save(dir)
-    val ext = Similarity.extendPqIndex(half,
+    val ext = IndexFamily.Pq.extend(half,
       e.filter(col("vec_id") >= 150), "vec_id", "embedding")
     assert(ext.codebooks == half.codebooks, "extension must not refit")
     assert(ext.version == 2L && ext.savedDir.isEmpty)

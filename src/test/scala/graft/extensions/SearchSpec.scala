@@ -189,7 +189,7 @@ class SearchSpec extends AnyFunSuite {
   test("extendBm25Stats == refit on the union corpus, exactly") {
     val a = corpus.filter(col("doc_id") <= 2L)
     val b = corpus.filter(col("doc_id") > 2L)
-    val ext = Search.extendBm25Stats(
+    val ext = IndexFamily.Bm25.extend(
       Search.bm25Fit(a, "doc_id", "text"), b, "doc_id", "text")
     val refit = Search.bm25Fit(corpus, "doc_id", "text")
     assert(ext.nDocs === refit.nDocs && ext.sumDl === refit.sumDl)
@@ -209,7 +209,7 @@ class SearchSpec extends AnyFunSuite {
   test("retractBm25Stats == refit on the surviving corpus, exactly") {
     val survivors = corpus.filter(col("doc_id") <= 2L)
     val retired = corpus.filter(col("doc_id") > 2L)
-    val retracted = Search.retractBm25Stats(
+    val retracted = IndexFamily.Bm25.remove(
       Search.bm25Fit(corpus, "doc_id", "text"), retired, "doc_id", "text")
     val refit = Search.bm25Fit(survivors, "doc_id", "text")
     assert(retracted.nDocs === refit.nDocs && retracted.sumDl === refit.sumDl)
@@ -233,8 +233,8 @@ class SearchSpec extends AnyFunSuite {
     // retract-then-extend (the `changed` document path) round-trips:
     // retire doc 2's old text, fold its amended text back in
     val amended = Seq((2L, "cat fish fish fish amended")).toDF("doc_id", "text")
-    val refreshed = Search.extendBm25Stats(
-      Search.retractBm25Stats(Search.bm25Fit(corpus, "doc_id", "text"),
+    val refreshed = IndexFamily.Bm25.extend(
+      IndexFamily.Bm25.remove(Search.bm25Fit(corpus, "doc_id", "text"),
         corpus.filter(col("doc_id") === 2L), "doc_id", "text"),
       amended, "doc_id", "text")
     val target = Search.bm25Fit(
@@ -248,7 +248,7 @@ class SearchSpec extends AnyFunSuite {
     val dir = graft.TestSpark.tmpDir("graft-bm25-stale")
     val v1 = Search.bm25Fit(corpus.filter(col("doc_id") <= 2L),
       "doc_id", "text").save(dir)
-    val ext = Search.extendBm25Stats(v1,
+    val ext = IndexFamily.Bm25.extend(v1,
       corpus.filter(col("doc_id") > 2L), "doc_id", "text")
     assert(ext.version === 2L)
     assert(ext.savedDir.isEmpty,
@@ -275,7 +275,7 @@ class SearchSpec extends AnyFunSuite {
     val dir = graft.TestSpark.tmpDir("graft-bm25-clobber")
     val v1 = Search.bm25Fit(corpus.filter(col("doc_id") <= 2L),
       "doc_id", "text").save(dir)
-    val v2 = Search.extendBm25Stats(v1,
+    val v2 = IndexFamily.Bm25.extend(v1,
       corpus.filter(col("doc_id") > 2L), "doc_id", "text").save(dir)
     // the stale v1 handle may no longer clobber the v2 tree...
     val stale = intercept[IllegalArgumentException](v1.save(dir))
@@ -298,7 +298,7 @@ class SearchSpec extends AnyFunSuite {
     // the ADVICE r16 failure shape verbatim: the loaded handle's lazy df
     // plan reads $dir/df, and save(dir) used to overwrite those files
     // while the staged plan still needed them
-    val upgraded = Search.extendBm25Stats(Search.loadBm25Stats(spark, dir),
+    val upgraded = IndexFamily.Bm25.extend(Search.loadBm25Stats(spark, dir),
       corpus.filter(col("doc_id") > 2L), "doc_id", "text").save(dir)
     val refit = Search.bm25Fit(corpus, "doc_id", "text")
     val reload = Search.loadBm25Stats(spark, dir)
@@ -314,7 +314,7 @@ class SearchSpec extends AnyFunSuite {
     "extend never leak into the df merge") {
     val dir = graft.TestSpark.tmpDir("graft-bm25-snapshot")
     corpus.filter(col("doc_id") > 2L).write.mode("overwrite").parquet(dir)
-    val ext = Search.extendBm25Stats(
+    val ext = IndexFamily.Bm25.extend(
       Search.bm25Fit(corpus.filter(col("doc_id") <= 2L), "doc_id", "text"),
       spark.read.parquet(dir), "doc_id", "text")
     // the source grows AFTER the extend (a streaming sink still

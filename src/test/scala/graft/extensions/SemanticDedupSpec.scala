@@ -135,7 +135,7 @@ class SemanticDedupSpec extends AnyFunSuite {
     val idx = fit(1)
     val novel = Seq((201L, Array(0f, 0f, 1f, 0f)),
       (202L, Array(0f, 0f, 1f, 0.01f))).toDF("vec_id", "embedding")
-    val extended = Similarity.extendIvfIndex(idx, novel, "vec_id", "embedding")
+    val extended = IndexFamily.Ivf.extend(idx, novel, "vec_id", "embedding")
     val direct = Similarity.IvfIndex(idx.centers,
       Similarity.assignToCells(corpus.unionByName(novel),
         idx.centers, "vec_id", "embedding"))

@@ -189,7 +189,7 @@ class SimilaritySpec extends AnyFunSuite {
     // of an extended index sees old and new vectors alike
     val half = Similarity.ivfFit(e.filter(col("vec_id") % 2 === 0),
       "vec_id", "embedding", nlist = 16, metaCols = Seq("label"))
-    val ext = Similarity.extendIvfIndex(half,
+    val ext = IndexFamily.Ivf.extend(half,
       e.filter(col("vec_id") % 2 =!= 0), "vec_id", "embedding")
     assert(ext.assigned.columns.contains("label"))
     val extHits = Similarity.ivfProbe(ext.filtered(pred), q,
@@ -250,7 +250,7 @@ class SimilaritySpec extends AnyFunSuite {
 
     // extension: every corpus vector present exactly once, and the
     // result equals assigning the UNION with the same frozen centroids
-    val extended = Similarity.extendIvfIndex(idx, b, "vec_id", "embedding")
+    val extended = IndexFamily.Ivf.extend(idx, b, "vec_id", "embedding")
     assert(extended.assigned.count() == e.count())
     val extCells = extended.assigned.select("neighbor_id", "cell")
       .as[(Long, Int)].collect().toMap
@@ -277,7 +277,7 @@ class SimilaritySpec extends AnyFunSuite {
     val e = graft.sources.Tables.load(spark, graft.TestSpark.Sf0001, "embeddings")
     val idx = Similarity.ivfFit(e, "vec_id", "embedding", nlist = 8)
     val rmIds = e.filter(col("vec_id") % 3 === 0).select(col("vec_id"))
-    val removed = Similarity.removeFromIvfIndex(idx, rmIds, "vec_id")
+    val removed = IndexFamily.Ivf.remove(idx, rmIds, "vec_id", "embedding")
     // frozen-quantizer exactness: the surviving assignment equals
     // assigning the survivors with the SAME centers
     val gotCells = removed.assigned.select("neighbor_id", "cell")
@@ -311,7 +311,7 @@ class SimilaritySpec extends AnyFunSuite {
     // band-for-band, the embedding-index argument
     val lshAll = Similarity.lshFit(e, "vec_id", "embedding",
       planes = 8, bands = 4)
-    val lshRemoved = Similarity.removeFromLshIndex(lshAll, rmIds, "vec_id")
+    val lshRemoved = IndexFamily.Lsh.remove(lshAll, rmIds, "vec_id", "embedding")
     val lshScratch = Similarity.lshFit(e.filter(col("vec_id") % 3 =!= 0),
       "vec_id", "embedding", planes = 8, bands = 4)
     def bandSet(ix: Similarity.LshIndex) =
@@ -323,7 +323,7 @@ class SimilaritySpec extends AnyFunSuite {
     // PQ: frozen codebooks — survivors' codes are the fitted rows
     // verbatim, retired ids absent
     val pqAll = Similarity.pqFit(e, "vec_id", "embedding", m = 8, ksub = 8)
-    val pqRemoved = Similarity.removeFromPqIndex(pqAll, rmIds, "vec_id")
+    val pqRemoved = IndexFamily.Pq.remove(pqAll, rmIds, "vec_id", "embedding")
     assert(pqRemoved.codebooks == pqAll.codebooks)
     assert(pqRemoved.codes.select("neighbor_id").as[Long].collect().toSet
       == survIds)
@@ -386,7 +386,7 @@ class SimilaritySpec extends AnyFunSuite {
     // extended index sees old and new vectors alike
     val half = Similarity.lshFit(e.filter(col("vec_id") % 2 === 0),
       "vec_id", "embedding", planes = 2, bands = 16, metaCols = Seq("label"))
-    val ext = Similarity.extendLshIndex(half,
+    val ext = IndexFamily.Lsh.extend(half,
       e.filter(col("vec_id") % 2 =!= 0), "vec_id", "embedding")
     assert(ext.banded.columns.contains("label"))
     val extHits = Similarity.lshProbe(ext.filtered(pred), q,

@@ -114,7 +114,7 @@ class VectorRefreshSpec extends AnyFunSuite {
       "vec_id", "embedding", diff)
     // rebuild-under-frozen-quantizer: extend an emptied copy with the
     // whole new crawl — the same frozen codebooks encode everything
-    val rebuilt = Similarity.extendPqIndex(
+    val rebuilt = IndexFamily.Pq.extend(
       old.copy(codes = old.codes.limit(0)), newCrawl, "vec_id", "embedding")
     assert(rows(refreshed.codes) === rows(rebuilt.codes))
   }
@@ -125,7 +125,7 @@ class VectorRefreshSpec extends AnyFunSuite {
       nlist = 4, m = 8, ksub = 16, residual = true)
     val refreshed = CorpusOps.refreshIndex(old, newCrawl,
       "vec_id", "embedding", diff)
-    val rebuilt = Similarity.extendIvfPqIndex(
+    val rebuilt = IndexFamily.IvfPq.extend(
       old.copy(codes = old.codes.limit(0), vectors = old.vectors.limit(0)),
       newCrawl, "vec_id", "embedding")
     assert(rows(refreshed.codes) === rows(rebuilt.codes))

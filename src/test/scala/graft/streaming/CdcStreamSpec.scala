@@ -968,7 +968,7 @@ class CdcStreamSpec extends AnyFunSuite {
       nlist = 4, m = 8, ksub = 16)
     val shrunkPq = CdcStream.compact(
       spark, None, None, Some(sink), ivfPqIdx, "vec_id", "embedding")
-    val rebuilt = Similarity.extendIvfPqIndex(
+    val rebuilt = IndexFamily.IvfPq.extend(
       ivfPqIdx.copy(codes = ivfPqIdx.codes.limit(0),
         vectors = ivfPqIdx.vectors.limit(0)),
       survivors, "vec_id", "embedding")
@@ -990,7 +990,7 @@ class CdcStreamSpec extends AnyFunSuite {
     val pqIdx = Similarity.pqFit(vecs, "vec_id", "embedding", m = 8, ksub = 16)
     val shrunkPlainPq = CdcStream.compact(
       spark, None, None, Some(sink), pqIdx, "vec_id", "embedding")
-    val rebuiltPq = Similarity.extendPqIndex(
+    val rebuiltPq = IndexFamily.Pq.extend(
       pqIdx.copy(codes = pqIdx.codes.limit(0)),
       survivors, "vec_id", "embedding")
     assert(rows(shrunkPlainPq.codes) === rows(rebuiltPq.codes))
@@ -1156,7 +1156,7 @@ class CdcStreamSpec extends AnyFunSuite {
       nlist = 4, m = 8, ksub = 16)
     val foldedPq = CdcStream.compact(
       spark, None, Some(sink), None, ivfPqIdx, "vec_id", "embedding")
-    val rebuilt = Similarity.extendIvfPqIndex(
+    val rebuilt = IndexFamily.IvfPq.extend(
       ivfPqIdx.copy(codes = ivfPqIdx.codes.limit(0),
         vectors = ivfPqIdx.vectors.limit(0)),
       amendedVecs, "vec_id", "embedding")
@@ -1178,7 +1178,7 @@ class CdcStreamSpec extends AnyFunSuite {
     val pqIdx = Similarity.pqFit(vecs, "vec_id", "embedding", m = 8, ksub = 16)
     val foldedPlainPq = CdcStream.compact(
       spark, None, Some(sink), None, pqIdx, "vec_id", "embedding")
-    val rebuiltPq = Similarity.extendPqIndex(
+    val rebuiltPq = IndexFamily.Pq.extend(
       pqIdx.copy(codes = pqIdx.codes.limit(0)),
       amendedVecs, "vec_id", "embedding")
     assert(rows(foldedPlainPq.codes) === rows(rebuiltPq.codes))
@@ -1390,7 +1390,7 @@ class CdcStreamSpec extends AnyFunSuite {
       m = 8, ksub = 16)
     val pqNet = CdcStream.compact(
       spark, Some(acceptDir), Some(upsertDir), Some(retractDir), pq0, "vec_id", "embedding")
-    val pqRebuilt = Similarity.extendPqIndex(
+    val pqRebuilt = IndexFamily.Pq.extend(
       pq0.copy(codes = pq0.codes.limit(0)), finalVecs, "vec_id", "embedding")
     assert(rows5(pqNet.codes) === rows5(pqRebuilt.codes))
 
@@ -1399,7 +1399,7 @@ class CdcStreamSpec extends AnyFunSuite {
       nlist = 4, m = 8, ksub = 16, residual = true)
     val ipqNet = CdcStream.compact(
       spark, Some(acceptDir), Some(upsertDir), Some(retractDir), ipq0, "vec_id", "embedding")
-    val ipqRebuilt = Similarity.extendIvfPqIndex(
+    val ipqRebuilt = IndexFamily.IvfPq.extend(
       ipq0.copy(codes = ipq0.codes.limit(0), vectors = ipq0.vectors.limit(0)),
       finalVecs, "vec_id", "embedding")
     assert(rows5(ipqNet.codes) === rows5(ipqRebuilt.codes))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.TestSpark
-import graft.extensions.{Dedup, IndexFamily, Search, Similarity, Versioned}
+import graft.extensions.{IndexFamily, Versioned}
 
 /** The fixture behind [[MarkerLayoutSpec]]: small indexes of all seven
   * families, fresh one-batch sink trees, and the compaction entry point
@@ -48,6 +48,12 @@ object MarkerLayoutFolds {
     trees
   }
 
+  /** Non-default hyperparameters that keep the fixture's fits small. */
+  private val hyper: Map[String, Map[String, Any]] = Map(
+    "ivf" -> Map("nlist" -> 4),
+    "ivfpq" -> Map("nlist" -> 4, "m" -> 8, "ksub" -> 16),
+    "pq" -> Map("m" -> 8, "ksub" -> 16))
+
   /** Run the (family, leg) compaction over `trees` against a freshly
     * fitted in-memory index of the served set. */
   def fold(spark: SparkSession, family: String, leg: String,
@@ -56,7 +62,8 @@ object MarkerLayoutFolds {
                  else vecs(spark).filter(col("vec_id") < 64)
     val (a, u, r) = (trees("accept"), trees("upsert"), trees("retract"))
     val (id, c) = if (isText(family)) ("doc_id", "text") else ("vec_id", "embedding")
-    def run[I <: Versioned](ix: I)(implicit fam: IndexFamily[I]): Unit = {
+    def run[I <: Versioned](implicit fam: IndexFamily[I]): Unit = {
+      val ix = fam.fit(served, id, c, hyper.getOrElse(family, Map.empty))
       val old = if (fam.retractsByImage) Some("old_text") else None
       leg match {
         case "accept" => CdcStream.compactAccepted(spark, a, ix, id, c)
@@ -66,14 +73,6 @@ object MarkerLayoutFolds {
       }
       ()
     }
-    family match {
-      case "text" => run(Dedup.buildCorpusIndex(served, id, c))
-      case "bm25" => run(Search.bm25Fit(served, id, c))
-      case "embedding" => run(Dedup.buildEmbeddingIndex(served, id, c))
-      case "ivf" => run(Similarity.ivfFit(served, id, c, nlist = 4))
-      case "ivfpq" => run(Similarity.ivfPqFit(served, id, c, nlist = 4, m = 8, ksub = 16))
-      case "lsh" => run(Similarity.lshFit(served, id, c))
-      case "pq" => run(Similarity.pqFit(served, id, c, m = 8, ksub = 16))
-    }
+    run(IndexFamily.named(family).get)
   }
 }
