@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.functions.TextFunctions
+import graft.util.Util.releaseCheckpoints
 
 /**
  * Deduplication suite for training-data pipelines (north-star, SURVEY
@@ -299,10 +300,25 @@ object Dedup {
    * per round, ONE shuffle join of the skinny (node, label) relation
    * against the symmetric edge list, converging in O(graph diameter)
    * rounds. Near-dup clusters are near-cliques (diameter 1-2 in
-   * practice), so rounds stay single digits; the per-round convergence
-   * probe is a LIMIT-1 count, not a collect. Labels persist per round and
-   * the previous round unpersists, so executor storage holds two skinny
-   * relations regardless of round count.
+   * practice), so rounds stay single digits.
+   *
+   * Lineage: the edge list, the round-0 labels and every round's labels
+   * are eager `localCheckpoint`s, so each round plans over two leaves
+   * instead of a stack of nested caches whose explain string (rebuilt at
+   * every SQL execution start and AQE update) doubled per round. Each
+   * round computes its `moved` flag next to the new label, so the
+   * convergence probe is a LIMIT-1 filter over that checkpoint. The loop
+   * frees each superseded round's blocks and, on every exit, the edge
+   * list's, so executor storage holds two skinny relations regardless of
+   * round count. The returned frame is the last round's checkpoint, not a
+   * `CacheManager` entry: `unpersist` on it is a no-op. Free it with
+   * [[graft.util.Util.releaseCheckpoints]], or its blocks go once it is
+   * unreachable (Spark's `ContextCleaner`).
+   *
+   * Executor loss: checkpoint blocks live on the executor that computed
+   * them and have no lineage to recompute from, so losing one fails the
+   * call (or a later read of the result) loudly with a missing-block
+   * error; it is never silently recomputed.
    *
    * @return (doc_id, group_id) for every doc appearing in a pair;
    *         group_id = min doc_id of the component. Fails loudly if
@@ -311,48 +327,44 @@ object Dedup {
    */
   def resolveDupGroups(pairs: DataFrame, idA: String = "id_a",
                        idB: String = "id_b", maxIters: Int = 20): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val fwd = pairs.select(col(idA).cast(LongType).as("src"),
       col(idB).cast(LongType).as("dst"))
     val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist(lvl)
-    // round 0: label(v) = min(v, neighbors(v))
-    var labels = edges.groupBy(col("src").as("id"))
-      .agg(min(col("dst")).as("nmin"))
-      .select(col("id"), least(col("id"), col("nmin")).as("label"))
-      .persist(lvl)
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxIters) {
-      // label'(v) = min(label(v), min over neighbors u of label(u))
-      val neigh = edges
-        .join(labels.select(col("id").as("dst"), col("label").as("dlabel")), Seq("dst"))
-        .groupBy(col("src").as("id")).agg(min(col("dlabel")).as("nlabel"))
-      val next = labels.join(neigh, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-        .persist(lvl)
-      // materialize next FULLY before releasing its parent: a short-circuit
-      // probe would cache only the partitions it scanned, and the next
-      // round would recompute the holes through an already-unpersisted
-      // lineage — O(rounds) re-joins on a deep graph
-      next.count()
-      val changed = next
-        .join(labels.select(col("id"), col("label").as("old")), Seq("id"))
-        .filter(col("label") =!= col("old")).limit(1).count()
-      labels.unpersist(false)
-      labels = next
-      converged = changed == 0L
-      rounds += 1
-    }
-    edges.unpersist(false)
-    if (!converged) {
-      labels.unpersist(false) // nothing is returned; don't strand the pin
-      throw new IllegalStateException(
-        s"connected components did not converge in $maxIters rounds; " +
-          "the pair graph has a path longer than maxIters — raise it")
-    }
-    labels.select(col("id").as("doc_id"), col("label").as("group_id"))
+      .distinct().localCheckpoint(true)
+    var labels: DataFrame = null
+    try {
+      // round 0: label(v) = min(v, neighbors(v))
+      labels = edges.groupBy(col("src").as("id"))
+        .agg(min(col("dst")).as("nmin"))
+        .select(col("id"), least(col("id"), col("nmin")).as("label"))
+        .localCheckpoint(true)
+      var converged = false
+      var rounds = 0
+      while (!converged && rounds < maxIters) {
+        // label'(v) = min(label(v), min over neighbors u of label(u))
+        val neigh = edges
+          .join(labels.select(col("id").as("dst"), col("label").as("dlabel")), Seq("dst"))
+          .groupBy(col("src").as("id")).agg(min(col("dlabel")).as("nlabel"))
+        val next = labels.join(neigh, Seq("id"), "left")
+          .select(col("id"),
+            least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
+            coalesce(col("nlabel") < col("label"), lit(false)).as("moved"))
+          .localCheckpoint(true) // eager: every partition, before its parent goes
+        releaseCheckpoints(labels)
+        labels = next
+        converged = labels.filter(col("moved")).limit(1).count() == 0L
+        rounds += 1
+      }
+      if (!converged)
+        throw new IllegalStateException(
+          s"connected components did not converge in $maxIters rounds; " +
+            "the pair graph has a path longer than maxIters — raise it")
+      labels.select(col("id").as("doc_id"), col("label").as("group_id"))
+    } catch {
+      case e: Throwable =>
+        if (labels != null) releaseCheckpoints(labels) // nothing is returned; don't strand it
+        throw e
+    } finally releaseCheckpoints(edges)
   }
 
   /** The terminal dedup step: drop every NON-representative member of a

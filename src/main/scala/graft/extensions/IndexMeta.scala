@@ -88,17 +88,12 @@ object IndexMeta {
     val p = new HPath(new HPath(dir), FileName)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) Stamp.Absent
-    else {
-      val in = fs.open(p)
-      val bytes =
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val chunk = new Array[Byte](4096)
-          var n = in.read(chunk)
-          while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-          buf.toByteArray
-        } finally in.close()
+    else
       scala.util.Try {
+        // inside the Try: bytes edited outside Hadoop no longer match the
+        // stamp's .crc sidecar, and the checksummed read throws
+        val in = fs.open(p)
+        val bytes = try in.readAllBytes() finally in.close()
         val node = new ObjectMapper().readTree(bytes)
         Meta(
           node.get("version").asLong(),
@@ -110,7 +105,6 @@ object IndexMeta {
             .getOrElse(Map.empty))
       }.fold(e => Stamp.Corrupt(String.valueOf(e.getMessage)),
         Stamp.Present(_))
-    }
   }
 
   /** Lenient view for NON-destructive paths (loads): a corrupted stamp

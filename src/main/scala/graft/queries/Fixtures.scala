@@ -71,10 +71,16 @@ private[graft] object Fixtures {
     catch { case e: Throwable => store.remove(key, cell); throw e }
   }
 
-  /** [[memo]] for a persisted relation, unpersisted on release. */
+  /** [[memo]] for a persisted or checkpointed relation, freed on release:
+    * unpersisted, and every checkpoint it reads released. A frame fixture
+    * owns the checkpoints its build made (`Dedup.resolveDupGroups`
+    * returns one). */
   def frame(phase: Phase, s: SparkSession, dir: String, name: String)(
       build: => DataFrame): DataFrame =
-    memo(phase, s, dir, name)(build)(df => { df.unpersist(false); () })
+    memo(phase, s, dir, name)(build) { df =>
+      df.unpersist(false)
+      graft.util.Util.releaseCheckpoints(df)
+    }
 
   /** [[memo]] for an on-disk tree: `write` fills a fresh [[tempDir]]
     * once, and the tree is deleted when `phase` is released. */

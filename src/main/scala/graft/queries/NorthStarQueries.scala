@@ -396,24 +396,24 @@ object NorthStarQueries {
   }
 
   /** The resolved near-dup GROUPS (connected components over the exact
-    * pair set), cached per sf dir: `resolveDupGroups` returns a persisted
-    * label relation (its iterative loop needs the pin), so one resolution
-    * is shared by the bench's cold+warm executions. */
+    * pair set), cached per sf dir: `resolveDupGroups` returns a
+    * checkpointed label relation, so one resolution (its rounds run
+    * eagerly) is shared by the bench's cold+warm executions. */
   private def dupGroups(s: SparkSession, dir: String): DataFrame =
     Fixtures.frame(Fixtures.Dedup, s, dir, "dupGroups")(
       Dedup.resolveDupGroups(exactPairs(s, dir)))
 
   /** Near-dup groups resolved from the MINHASH pair set (the LSH-driven
     * pipeline end to end, vs [[dupGroups]]' exact-pairs-driven one),
-    * cached per sf dir like every other iterative/persisted side. */
+    * cached per sf dir like every other iterative/checkpointed side. */
   private def mhGroups(s: SparkSession, dir: String): DataFrame =
     Fixtures.frame(Fixtures.Dedup, s, dir, "mhGroups")(
       Dedup.resolveDupGroups(minhashPairs(s, dir)))
 
   /** Embedding-modality dup groups (connected components over the
     * sign-LSH pair set on the planted corpus), cached per sf dir —
-    * `resolveDupGroups` returns a persisted relation, so an uncached
-    * call would leak one pin per bench execution. */
+    * `resolveDupGroups` runs its rounds eagerly and returns a
+    * checkpoint, so an uncached call would redo them per bench execution. */
   private def embGroups(s: SparkSession, dir: String): DataFrame =
     Fixtures.frame(Fixtures.Dedup, s, dir, "embGroups")(
       Dedup.resolveDupGroups(
@@ -421,7 +421,7 @@ object NorthStarQueries {
           "embedding", threshold = 0.9, planes = 12, bands = 8)))
 
   /** Near-dup groups resolved from the VERIFIED simhash pair set,
-    * cached per sf dir. Reuses the persisted Hamming-16 candidate side
+    * checkpointed by `resolveDupGroups` and cached per sf dir. Reuses the persisted Hamming-16 candidate side
     * the recall gate pins ([[simPairs]]) — regenerating it here doubled
     * the session's simhash build cost (measured 10.1s cold for this row
     * alone at sf0.1). */

@@ -4,6 +4,9 @@ import java.sql.Timestamp
 import java.time.{LocalDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+
 /** Small shared helpers. */
 object Util {
 
@@ -22,5 +25,13 @@ object Util {
     if (f.isDirectory)
       Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(); ()
+  }
+
+  /** Free the blocks of every checkpoint `df` reads: the RDDs under its
+    * `LogicalRDD` leaves. A checkpoint is no `CacheManager` entry, so
+    * `unpersist` on the frame does not reach them. */
+  def releaseCheckpoints(df: DataFrame): Unit = df.queryExecution.logical.foreach {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
   }
 }

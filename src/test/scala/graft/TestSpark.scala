@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole test run. */
@@ -27,22 +29,57 @@ object TestSpark {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** Run `body`; return its result and the call site (`collect at
-    * CdcEngine.scala:153`, the name of the job's final stage) of every
-    * Spark job it started. */
-  def jobSites[T](body: => T): (T, Seq[String]) = {
+  /** Run `body` with `listener` attached, draining the bus before and
+    * after, so the listener sees exactly the events `body` posted. */
+  private def listening[T](listener: org.apache.spark.scheduler.SparkListener)(body: => T): T = {
     val sc = spark.sparkContext
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        sites.add(js.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse(""))
-    }
     org.apache.spark.ListenerBusAccess.drain(sc)
     sc.addSparkListener(listener)
     try {
       val out = body
       org.apache.spark.ListenerBusAccess.drain(sc)
-      (out, sites.toArray(Array.empty[String]).toSeq)
+      out
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Run `body`; return its result and the call site (`collect at
+    * CdcEngine.scala:153`, the name of the job's final stage) of every
+    * Spark job it started. */
+  def jobSites[T](body: => T): (T, Seq[String]) = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val out = listening(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        sites.add(js.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse(""))
+    })(body)
+    (out, sites.toArray(Array.empty[String]).toSeq)
+  }
+
+  /** Run `body`; return its result and, per SQL execution it started, the
+    * characters of physical-plan text posted: the formatted explain Spark
+    * builds at every execution start and every AQE plan update, UI or not. */
+  def planTextPosted[T](body: => T): (T, Map[Long, Long]) = {
+    import org.apache.spark.sql.execution.ui._
+    val chars = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+    def add(id: Long, plan: String): Unit = chars.merge(id, plan.length.toLong, _ + _)
+    val out = listening(new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: SparkListenerSQLExecutionStart => add(s.executionId, s.physicalPlanDescription)
+          case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+            add(u.executionId, u.physicalPlanDescription)
+          case _ =>
+        }
+    })(body)
+    (out, chars.asScala.toMap)
+  }
+
+  /** Ids of the RDDs the context holds persisted right now. */
+  def persistentRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Entries in the session's `CacheManager` (Spark keeps the list private). */
+  def cacheEntries: Int = {
+    val f = classOf[org.apache.spark.sql.execution.CacheManager].getDeclaredField("cachedData")
+    f.setAccessible(true)
+    f.get(spark.sharedState.cacheManager).asInstanceOf[Seq[_]].size
   }
 }

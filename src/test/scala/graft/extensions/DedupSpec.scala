@@ -86,11 +86,12 @@ class DedupSpec extends AnyFunSuite {
     assert(near.nonEmpty && near.get._3 > 0.5 && near.get._3 < 1.0)
   }
 
+  // chain 1-2-3 (needs >1 propagation round), clique {20,21,22}, pair {10,11}
+  private def chainCliquePair = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L),
+    (21L, 22L), (20L, 22L)).toDF("id_a", "id_b")
+
   test("resolveDupGroups: transitive closure, min-id labels, chain + clique + pair") {
-    // chain 1-2-3 (needs >1 propagation round), clique {20,21,22}, pair {10,11}
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L), (20L, 22L))
-      .toDF("id_a", "id_b")
-    val resolved = Dedup.resolveDupGroups(pairs) // persisted; released below
+    val resolved = Dedup.resolveDupGroups(chainCliquePair) // a checkpoint; released below
     val groups = resolved.as[(Long, Long)].collect().toMap
     assert(groups == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
@@ -101,7 +102,51 @@ class DedupSpec extends AnyFunSuite {
     val kept = Dedup.keepRepresentatives(corpus, "doc_id", resolved)
       .as[Long].collect().toSet
     assert(kept == Set(1L, 10L, 20L, 99L))
-    resolved.unpersist(false)
+    graft.util.Util.releaseCheckpoints(resolved)
+  }
+
+  test("resolveDupGroups strands no pin: no cache entry, one persisted RDD (the result)") {
+    // shifted ids: the plans must not equal the test above's, or a cache
+    // entry it left could be reused instead of added
+    val pairs = chainCliquePair.select(col("id_a") + 100, col("id_b") + 100)
+      .toDF("id_a", "id_b")
+    val (cached, rdds) = (TestSpark.cacheEntries, TestSpark.persistentRdds)
+    val resolved = Dedup.resolveDupGroups(pairs)
+    assert(TestSpark.cacheEntries == cached, "the loop must leave no CacheManager entry")
+    val added = TestSpark.persistentRdds -- rdds
+    assert(added.size <= 1, s"only the returned checkpoint may stay persisted: $added")
+    // ...and that one is the RDD under the returned frame
+    val leaves = resolved.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    assert(added.subsetOf(leaves.toSet))
+    assert(resolved.count() == 8L)
+    graft.util.Util.releaseCheckpoints(resolved)
+    assert((TestSpark.persistentRdds -- rdds).isEmpty, "releaseCheckpoints frees the result")
+  }
+
+  test("resolveDupGroups over a three-deep persisted input: only the edge list prints it") {
+    // corpus -> exact -> pairs, each persisted: every InMemoryRelation
+    // prints its whole cached plan, and Spark re-formats the plan at each
+    // SQL execution start and AQE update. The one execution that reads
+    // `pairs` (the edge list) must print that stack; the rounds, which
+    // plan over checkpoint leaves, must not print it again.
+    val docs = graft.sources.Tables.load(spark, TestSpark.Sf0001, "documents")
+      .select(col("doc_id"), col("text"))
+    val corpus = docs.union(docs.filter(col("doc_id") % 5 === 1).select(
+      (col("doc_id") + 1000000L).as("doc_id"), concat(col("text"), lit(" x")).as("text")))
+      .persist()
+    val exact = Dedup.exactDedup(corpus, "doc_id", "text").persist()
+    val pairs = Dedup.minhashDupPairs(exact, "doc_id", "text").persist()
+    try {
+      assert(pairs.count() > 0L)
+      val (groups, perExecution) = TestSpark.planTextPosted(Dedup.resolveDupGroups(pairs))
+      assert(groups.count() > 0L)
+      val input = perExecution.values.max
+      val loop = perExecution.values.sum - input
+      assert(loop < 256L * 1024,
+        s"the rounds posted $loop chars of plan text (the input's query: $input)")
+    } finally Seq(pairs, exact, corpus).foreach(_.unpersist(false))
   }
 
   test("verified simhash pairs: Hamming candidates filtered to exact-Jaccard dups") {

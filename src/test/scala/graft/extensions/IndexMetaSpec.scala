@@ -191,6 +191,23 @@ class IndexMetaSpec extends AnyFunSuite {
     v1.unpersist()
   }
 
+  test("a stamp truncated outside Hadoop (stale .crc) reads as Corrupt and clears") {
+    val dir = TestSpark.tmpDir("graft-meta-crc")
+    val v1 = Dedup.saveCorpusIndex(
+      Dedup.buildCorpusIndex(docs.filter(col("doc_id") < 50), "doc_id", "text"), dir)
+    // written behind the checksummed FS: the .crc sidecar now describes
+    // bytes that are no longer there
+    val stamp = java.nio.file.Paths.get(dir, IndexMeta.FileName)
+    java.nio.file.Files.write(stamp, """{"version": 1, "fol""".getBytes)
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, s".${IndexMeta.FileName}.crc")))
+    assert(IndexMeta.readStamp(spark, dir).isInstanceOf[IndexMeta.Stamp.Corrupt])
+    assert(IndexMeta.read(spark, dir).isEmpty, "a lenient load must not throw")
+    assert(IndexMeta.clearCorruptStamp(spark, dir))
+    assert(!java.nio.file.Files.exists(stamp))
+    assert(IndexMeta.readStamp(spark, dir) == IndexMeta.Stamp.Absent)
+    v1.close()
+  }
+
   test("a genuinely unstamped pre-stamp tree still retires; a valid stamp refuses clearing") {
     val dir = TestSpark.tmpDir("graft-meta-prestamp")
     val v1 = Dedup.saveCorpusIndex(

@@ -3,6 +3,7 @@ package graft.queries
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -61,15 +62,22 @@ class FixturesSpec extends AnyFunSuite {
         again(k).asInstanceOf[AnyRef] eq v.asInstanceOf[AnyRef] })
       assert(Fixtures.tempDirs(Fixtures.Dedup) === trees)
 
-      // storageLevel is the CacheManager's answer for the relation's plan
+      // pinned: a CacheManager entry for the relation's plan (its
+      // storageLevel), or, for a checkpoint such as dupGroups, the
+      // persisted RDD under its LogicalRDD leaf
+      def pinned(df: DataFrame): Boolean = df.storageLevel != StorageLevel.NONE ||
+        df.queryExecution.logical.collectLeaves().exists {
+          case r: LogicalRDD => r.rdd.getStorageLevel != StorageLevel.NONE
+          case _ => false
+        }
       val relations = Seq(dedup("dupGroups"), dedup("exactPairs"))
         .map(_.asInstanceOf[DataFrame]) :+
         dedup("corpusIndex").asInstanceOf[CorpusIndex].postings
-      assert(relations.forall(_.storageLevel != StorageLevel.NONE))
+      assert(relations.forall(pinned))
 
       Fixtures.release(Fixtures.Dedup)
       assert(Fixtures.entries(Fixtures.Dedup).isEmpty)
-      assert(relations.forall(_.storageLevel == StorageLevel.NONE))
+      assert(!relations.exists(pinned))
       assert(Fixtures.tempDirs(Fixtures.Dedup).isEmpty)
       assert(trees.forall(d => !new java.io.File(d).exists))
       // the text phase's fixtures are untouched

@@ -729,4 +729,26 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(found.isEmpty, s"$name plans the composed tokenizer:\n${found.mkString("\n")}")
     }
   }
+
+  test("dup-group resolution: the returned plan does not grow with the round count") {
+    import spark.implicits._
+    import graft.extensions.Dedup
+
+    // a path 1-2-...-n takes n-2 propagation rounds to reach every node
+    def path(edges: Int) = (1L to edges.toLong).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    def nodes(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect { case p => p }.size
+    val long = Dedup.resolveDupGroups(path(12))
+    val short = Dedup.resolveDupGroups(path(1))
+    assert(nodes(long) == nodes(short),
+      s"12-edge plan:\n${long.queryExecution.analyzed}\n1-edge plan:\n${short.queryExecution.analyzed}")
+    // the min-id closure: one component, labelled by its smallest id
+    assert(long.as[(Long, Long)].collect().toMap == (1L to 13L).map(_ -> 1L).toMap)
+
+    // too few rounds still fails loudly, and frees everything it pinned
+    val before = graft.TestSpark.persistentRdds
+    intercept[IllegalStateException](Dedup.resolveDupGroups(path(12), maxIters = 3))
+    assert(graft.TestSpark.persistentRdds.subsetOf(before),
+      "a non-converging call must leave no persistent RDD behind")
+  }
 }
