@@ -155,7 +155,16 @@ abstract class IndexFamily[I <: Versioned](
     * crash mid-swap leaves a mixed tree, but only for the renames. The
     * returned handle reads the saved files (the handle saved may read
     * files the swap deleted); its parameter table and codebooks come
-    * from memory. */
+    * from memory.
+    *
+    * The layout serves the probe, which opens every file of the cells it
+    * reads, each open a footer read and a reader. Each
+    * [[IndexFamily.Relation.byCell]] relation is rebalanced on `cell`
+    * before its partitioned write, so a cell is one file however many
+    * tasks the frame's plan has (a fold's union has one per input file);
+    * AQE splits a skewed cell into advisory-size files. A family writes
+    * each quantizer table as one file by coalescing it where it lists its
+    * relations. */
   def save(index: I, dir: String): I = {
     val rels = relations(index)
     val spark = rels.head.frame.sparkSession
@@ -174,8 +183,9 @@ abstract class IndexFamily[I <: Versioned](
     }
     val tables = rels ++ IndexFamily.paramTable(spark, params(index))
     tables.foreach { r =>
-      val w = r.frame.write.mode("overwrite")
-      (if (r.byCell) w.partitionBy("cell") else w).parquet(s"$dir/${r.name}__stage")
+      if (r.byCell) r.frame.hint("rebalance", col("cell")).write.mode("overwrite")
+        .partitionBy("cell").parquet(s"$dir/${r.name}__stage")
+      else r.frame.write.mode("overwrite").parquet(s"$dir/${r.name}__stage")
     }
     val fs = new HPath(dir).getFileSystem(spark.sessionState.newHadoopConf())
     tables.foreach { r =>
@@ -220,7 +230,8 @@ object IndexFamily {
 
   /** One parquet relation of a saved tree: its directory under the tree
     * root, whether `_meta.json` records its row count, and whether it is
-    * partitioned by `cell` (so a probe prunes cells at the file level). */
+    * partitioned by `cell`, so a probe prunes cells at the file level and
+    * reads each cell from one file ([[IndexFamily.save]]). */
   final case class Relation(name: String, frame: DataFrame,
                             counted: Boolean = true, byCell: Boolean = false)
 
@@ -662,7 +673,8 @@ object IndexFamily {
                           h: Hyper): Similarity.IvfIndex =
       Similarity.ivfFit(df, idCol, vecCol, nlist = h.int("nlist"))
     protected[extensions] def relations(i: Similarity.IvfIndex): Seq[Relation] = Seq(
-      Relation("centers", i.centers), Relation("assigned", i.assigned, byCell = true))
+      Relation("centers", i.centers.coalesce(1)),
+      Relation("assigned", i.assigned, byCell = true))
     protected def open(t: Tree): Similarity.IvfIndex =
       Similarity.IvfIndex(t("centers"), t("assigned"))
     protected def withLineage(i: Similarity.IvfIndex, savedDir: Option[String],
@@ -696,11 +708,11 @@ object IndexFamily {
       Similarity.ivfPqFit(df, idCol, vecCol, nlist = h.int("nlist"), m = h.int("m"),
         ksub = h.int("ksub"), residual = h.bool("residual"))
     protected[extensions] def relations(i: Similarity.IvfPqIndex): Seq[Relation] = Seq(
-      Relation("centers", i.centers, counted = false),
+      Relation("centers", i.centers.coalesce(1), counted = false),
       Relation("codes", i.codes, byCell = true),
       Relation("vectors", i.vectors, byCell = true),
-      Relation("codebooks", Similarity.codebookTable(i.codes.sparkSession, i.codebooks),
-        counted = false))
+      Relation("codebooks", Similarity.codebookTable(i.codes.sparkSession, i.codebooks)
+        .coalesce(1), counted = false))
     override protected[extensions] def params(i: Similarity.IvfPqIndex): Seq[(String, Any)] =
       Seq("m" -> i.m, "ksub" -> i.ksub, "dim" -> i.dim, "residual" -> i.residual)
     /** Older trees: no `residual` flag means direct encoding, and trees
@@ -784,8 +796,8 @@ object IndexFamily {
       Similarity.pqFit(df, idCol, vecCol, h.int("m"), h.int("ksub"))
     protected[extensions] def relations(i: Similarity.PqIndex): Seq[Relation] = Seq(
       Relation("codes", i.codes),
-      Relation("codebooks", Similarity.codebookTable(i.codes.sparkSession, i.codebooks),
-        counted = false))
+      Relation("codebooks", Similarity.codebookTable(i.codes.sparkSession, i.codebooks)
+        .coalesce(1), counted = false))
     override protected[extensions] def params(i: Similarity.PqIndex): Seq[(String, Any)] =
       Seq("m" -> i.m, "ksub" -> i.ksub, "dim" -> i.dim)
     protected def open(t: Tree): Similarity.PqIndex = {

@@ -176,7 +176,11 @@ object Similarity {
 
   /** Probe a fitted [[LshIndex]]: only candidates sharing a query's
     * bucket in at least one band are scored; the banded probe side is
-    * tiny and broadcast. */
+    * tiny and broadcast. A neighbour sharing k bands with a query is
+    * scored k times, so the dedup aggregate keeps its own exchange on
+    * (query_id, neighbor_id): its map-side partial max collapses the band
+    * duplicates before the shuffle, which a `query_id` exchange under the
+    * aggregate (as [[ivfProbe]] has) would ship whole. */
   def lshProbe(index: LshIndex, queries: DataFrame,
                idCol: String, vecCol: String, k: Int = 10): DataFrame = {
     val q = broadcast(bandVectors(queries, idCol, vecCol,
@@ -217,8 +221,9 @@ object Similarity {
    * A fitted IVF index: the tiny centroid table plus the cell-assigned
    * corpus. Build ONCE (`ivfFit`), reuse across probe calls — a real
    * pipeline never re-trains the quantizer per query. `save`/`loadIvfIndex`
-   * persist it as parquet partitioned by cell, so a 100 TB corpus's index
-   * is probed with cell-partition pruning and zero rebuild cost.
+   * persist it as parquet partitioned by cell, one file per cell, so a
+   * 100 TB corpus's index is probed with cell-partition pruning and zero
+   * rebuild cost.
    */
   final case class IvfIndex(centers: DataFrame, assigned: DataFrame,
                             savedDir: Option[String] = None,
@@ -410,7 +415,15 @@ object Similarity {
       .filter(col("__pr") <= nprobe)
       .select(col("query_id"), col("q_vec"), col("cell"))
 
-  /** Probe a fitted index: score only the `nprobe` nearest cells' members. */
+  /** Probe a fitted index: score only the `nprobe` nearest cells' members.
+    *
+    * Ranking costs one exchange: the scored pairs are hash-partitioned on
+    * `query_id`, which satisfies both the (query_id, neighbor_id) dedup
+    * aggregate and the rank window, so both run in one stage. A map-side
+    * partial aggregate would buy nothing here: each id sits in one cell
+    * and a query probes distinct cells, so its pairs are already unique.
+    * The aggregate stays for an id added twice (the append-only misuse),
+    * which surfaces once, with its larger cosine. */
   def ivfProbe(
       index: IvfIndex, queries: DataFrame,
       idCol: String, vecCol: String, k: Int = 10,
@@ -426,6 +439,7 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         graft.functions.VectorExpressions
           .cosine_similarity(col("q_vec"), col("c_vec")).as("cosine"))
+      .repartition(col("query_id"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(max(col("cosine")).as("cosine"))
     val w = Window.partitionBy(col("query_id"))

@@ -1263,10 +1263,10 @@ object CdcStream {
     * text/vector folds that is wasted work, but BM25's integer
     * retraction is NOT idempotent, and before the lease both racers
     * passed the marker check (check-then-act) and double-subtracted.
-    * The create is atomic on HDFS-like stores; on a local FS that
-    * checks-then-creates, two racers can both pass — then the LAST
-    * writer's token is on disk and exactly one read-back matches, so
-    * exactly one caller wins either way. A crashed fold leaves its
+    * The create is atomic on HDFS-like stores. Hadoop's local FS checks,
+    * then creates (truncating), so a racer that read its token back
+    * before the other's create also won; there the lock is created with
+    * `CREATE_NEW` (O_EXCL) instead. A crashed fold leaves its
     * lease behind DELIBERATELY: the next attempt refuses with the lock
     * path, and the operator breaks the lease (delete the file) only
     * after confirming no compaction is live — the crash-then-rerun
@@ -1281,10 +1281,15 @@ object CdcStream {
         "it — for BM25, double-subtracting the non-idempotent stats. If " +
         "the holder crashed (no compaction is actually running), break " +
         "the stale lease by deleting the lock file and re-run")
+    val bytes = token.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     try {
-      val out = fs.create(p, false)
-      try out.write(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      if (fs.getScheme == "file")
+        java.nio.file.Files.write(java.nio.file.Paths.get(fs.makeQualified(p).toUri), bytes,
+          java.nio.file.StandardOpenOption.CREATE_NEW)
+      else {
+        val out = fs.create(p, false)
+        try out.write(bytes) finally out.close()
+      }
     } catch {
       case _: org.apache.hadoop.fs.FileAlreadyExistsException => refuse()
       case _: java.nio.file.FileAlreadyExistsException => refuse()

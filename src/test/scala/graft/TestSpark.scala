@@ -29,6 +29,16 @@ object TestSpark {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** Parquet data files under `dir`, counted per directory (its path
+    * relative to `dir`; `""` for `dir` itself). */
+  def parquetFiles(dir: String): Map[String, Int] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator.asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+      .toSeq.groupBy(p => root.relativize(p.getParent).toString).map { case (d, fs) => d -> fs.size }
+    finally walk.close()
+  }
+
   /** Run `body` with `listener` attached, draining the bus before and
     * after, so the listener sees exactly the events `body` posted. */
   private def listening[T](listener: org.apache.spark.scheduler.SparkListener)(body: => T): T = {

@@ -132,6 +132,61 @@ class IndexLifecycleSpec extends AnyFunSuite {
     }
   }
 
+  /** Each family's quantizer tables, which a save writes as one file. */
+  private val quantizerTables = Map("ivf" -> Seq("centers"),
+    "ivfpq" -> Seq("centers", "codebooks"), "pq" -> Seq("codebooks"))
+
+  /** The saved layout: every `cell=*` directory of a cell-partitioned
+    * relation holds one file, and so does each quantizer table. */
+  private def assertLayout[I <: Versioned](f: IndexFamily[I], ix: I, dir: String): Unit = {
+    val files = TestSpark.parquetFiles(dir)
+    f.relations(ix).filter(_.byCell).foreach { r =>
+      val cells = files.filter(_._1.startsWith(s"${r.name}/cell="))
+      assert(cells.nonEmpty && cells.values.forall(_ == 1), s"${r.name}: $cells")
+      assert(!files.contains(r.name), s"${r.name} holds files outside its cells")
+    }
+    quantizerTables(f.name).foreach(t => assert(files.get(t).contains(1), s"$t: $files"))
+  }
+
+  Seq[IndexFamily[_ <: Versioned]](IndexFamily.Ivf, IndexFamily.IvfPq, IndexFamily.Pq)
+    .foreach { fam =>
+      test(s"${fam.name}: a save writes one file per cell and per quantizer table, " +
+        "fitted and folded") {
+        def check[I <: Versioned](f: IndexFamily[I]): Unit = {
+          val (base, more, idCol, contentCol) = data(f)
+          val dir = TestSpark.tmpDir(s"graft-layout-${f.name}")
+          assertLayout(f, f.save(fit(f, base), dir), dir)
+          // a fold as the maintenance loop runs it: retire, add, save in place
+          val folded = f.save(f.extend(f.remove(f.load(spark, dir),
+            base.filter(col(idCol) < 50), idCol, contentCol), more, idCol, contentCol), dir)
+          assertLayout(f, folded, dir)
+          f.close(folded)
+        }
+        check(fam)
+      }
+    }
+
+  test("an index whose every id was removed saves and loads as before") {
+    def emptied[I <: Versioned](f: IndexFamily[I], dir: String): I = {
+      val (base, _, idCol, contentCol) = data(f)
+      f.save(f.remove(fit(f, base), base, idCol, contentCol), dir)
+    }
+    // PQ's codes relation is one unpartitioned file: an empty one keeps its
+    // footer schema, so the tree round-trips with no rows
+    val pqDir = TestSpark.tmpDir("graft-empty-pq")
+    val pq = emptied(IndexFamily.Pq, pqDir)
+    val reloaded = IndexFamily.Pq.load(spark, pqDir)
+    assert(reloaded.codes.count() == 0L &&
+      contents(IndexFamily.Pq, reloaded) == contents(IndexFamily.Pq, pq))
+    // a cell-partitioned relation with no rows writes no file, so reading
+    // the saved tree back cannot infer its schema
+    Seq[IndexFamily[_ <: Versioned]](IndexFamily.Ivf, IndexFamily.IvfPq).foreach { f =>
+      val err = intercept[org.apache.spark.sql.AnalysisException](
+        emptied(f, TestSpark.tmpDir(s"graft-empty-${f.name}")))
+      assert(err.getMessage.contains("UNABLE_TO_INFER_SCHEMA"), err.getMessage)
+    }
+  }
+
   test("extending a loaded IVF index starts no job") {
     val dir = saved(IndexFamily.Ivf)
     val loaded = Similarity.loadIvfIndex(spark, dir)

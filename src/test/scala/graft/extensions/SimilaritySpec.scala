@@ -272,6 +272,44 @@ class SimilaritySpec extends AnyFunSuite {
     assert(top == bId, s"near-copy of extension vector $bId must be its top-1, got $top")
   }
 
+  test("ivfProbe: an id extended twice surfaces once, with its larger cosine") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{transform => atransform}
+    val e = graft.sources.Tables.load(spark, graft.TestSpark.Sf0001, "embeddings")
+    val idx = Similarity.ivfFit(e, "vec_id", "embedding", nlist = 8)
+    // re-adding held ids is the append-only misuse: each id below 40 now
+    // has two rows, the second a perturbed copy, in the same or another cell
+    val twice = IndexFamily.Ivf.extend(idx, e.filter(col("vec_id") < 40).select(col("vec_id"),
+      atransform(col("embedding"), (x, i) => x + when(i % 2 === 0, 0.05f).otherwise(-0.05f))
+        .as("embedding")), "vec_id", "embedding")
+    val queries = e.filter(col("vec_id") < 40).select((col("vec_id") + 90000).as("vec_id"),
+      atransform(col("embedding"), x => x * 1.01f + 0.001f).as("embedding"))
+    val (k, nprobe) = (5, 4)
+    val got = Similarity.ivfProbe(twice, queries, "vec_id", "embedding", k, nprobe)
+      .as[(Long, Long, Double, Long)].collect().sorted
+    assert(got.map(r => (r._1, r._2)).distinct.length == got.length,
+      "each neighbour surfaces once per query")
+
+    // the reference: the same scored pairs, deduplicated by a
+    // (query_id, neighbor_id) aggregate and ranked behind its own exchange
+    val scored = twice.assigned.join(broadcast(Similarity.nearestCells(
+        queries.select(col("vec_id").as("query_id"), col("embedding").as("q_vec")),
+        twice.centers, nprobe)), Seq("cell"))
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        graft.functions.VectorExpressions.cosine_similarity(col("q_vec"), col("c_vec"))
+          .as("cosine"))
+    assert(scored.count() > scored.select("query_id", "neighbor_id").distinct().count(),
+      "some query must score both rows of a duplicated id")
+    val want = scored.groupBy(col("query_id"), col("neighbor_id"))
+      .agg(max(col("cosine")).as("cosine"))
+      .withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(col("cosine").desc, col("neighbor_id").asc)).cast("long"))
+      .filter(col("rank") <= k)
+      .as[(Long, Long, Double, Long)].collect().sorted
+    assert(got.toSeq == want.toSeq)
+  }
+
   test("removeFromIvfIndex: survivors keep their frozen-cell assignment; " +
     "retired ids vanish from probes") {
     val e = graft.sources.Tables.load(spark, graft.TestSpark.Sf0001, "embeddings")

@@ -512,6 +512,56 @@ class PlanShapeSpec extends AnyFunSuite {
     loaded.close()
   }
 
+  test("IVF probe on a saved index: one rank exchange, dedup and rank in one stage") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      AdaptiveSparkPlanHelper, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.functions.col
+    val e = graft.sources.Tables.load(spark, dir, "embeddings")
+      .filter(col("vec_id") < 300)
+    val idxDir = TestSpark.tmpDir("graft-ivf-planshape")
+    graft.extensions.Similarity.ivfFit(e, "vec_id", "embedding", nlist = 4).save(idxDir)
+    val loaded = graft.extensions.Similarity.loadIvfIndex(spark, idxDir)
+    val df = graft.extensions.Similarity.ivfProbe(loaded,
+      e.filter(col("vec_id") < 4), "vec_id", "embedding", k = 5, nprobe = 2)
+    df.queryExecution.toRdd.count()
+    val plan = df.queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+    val root = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan match {
+        case result: QueryStageExec => result.plan
+        case p => p
+      }
+      case p => p
+    }
+    // two hash exchanges, both on query_id: the nearestCells window's and
+    // the one the dedup aggregate and the rank window share
+    assert(nodeCount(plan, "Exchange") == 2, s"two exchanges:\n${plan.take(3000)}")
+    val keys = new AdaptiveSparkPlanHelper {}.collect(root) {
+      case s: ShuffleExchangeExec => s.outputPartitioning
+    }
+    assert(keys.size == 2 && keys.forall {
+      case h: HashPartitioning => h.expressions.map(_.sql) == Seq("query_id")
+      case _ => false
+    }, s"both exchanges hash on query_id alone: $keys")
+    assert(nodeCount(plan, "SortMergeJoin") == 0,
+      s"the cell join broadcasts the probed cells:\n${plan.take(2000)}")
+    // below the rank Window, the dedup aggregate runs before any stage boundary
+    def stage(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: QueryStageExec | _: Exchange => Nil
+      case _ => p.children.flatMap(stage)
+    })
+    // the topmost Window ranks; the nearestCells one sits behind the probe broadcast
+    val win = root.collectFirst { case w: WindowExec => w }
+    assert(win.exists(stage(_).exists(_.isInstanceOf[BaseAggregateExec])),
+      s"the dedup aggregate must sit in the rank Window's stage:\n$root")
+    loaded.close()
+  }
+
   test("classifier score: pure scan projection, zero shuffles") {
     // tokenize -> bucket -> weight-sum is all within-row arithmetic;
     // ANY Exchange here means a 100 TB corpus shuffles to be scored
