@@ -10,7 +10,7 @@
 #     dir in /tmp;
 #   - the leaked-spill sweep below, which otherwise disk-starves the
 #     NEXT attempt ("No space left on device");
-#   - fixture generated on demand via Scratch gensf (10x key-shifted
+#   - fixture generated on demand via graft.GenSf (10x key-shifted
 #     union of the driver's sf0.1 tables — bench-only data, gitignored).
 #
 # Usage: scripts/bench_sf1.sh   (from anywhere; runs in the repo root)
@@ -21,7 +21,7 @@ SF1="$PWD/.benchdata/sf1"
 if [ ! -d "$SF1" ]; then
   echo "[bench_sf1] generating $SF1 (10x of /root/testdata/sf0.1)"
   SPARK_DRIVER_MEM=32g sbt -batch \
-    "Test/runMain graft.Scratch gensf /root/testdata/sf0.1 $SF1 10"
+    "Test/runMain graft.GenSf /root/testdata/sf0.1 $SF1 10"
 fi
 
 # sweep spill/blockmgr dirs leaked by previously KILLED local-mode runs

@@ -35,15 +35,22 @@ object CdcEngine {
 
   final case class TickResult(table: String, decision: Decision, rowsCaptured: Long)
 
-  /** Build an engine from the reference-compatible env config. */
+  /** Build an engine from the reference-compatible env config. The engine
+    * writes the parquet change log only, so a config asking for the
+    * JSON-lines file output is refused rather than silently ignored. */
   def fromConfig(spark: SparkSession, sourceDir: String, sinkDir: String,
                  stateDir: String, conf: GraftConfig = GraftConfig.fromEnv(),
-                 dsn: Int = 1): CdcEngine =
+                 dsn: Int = 1): CdcEngine = {
+    require(!conf.jsonLinesOutput, "OUTPUT_TYPE=FILE selects a JSON-lines " +
+      "file output, which the engine does not write: it writes the parquet " +
+      "change log (AppendSink.appendJsonLines writes JSON lines from a " +
+      "DataFrame). Unset OUTPUT_TYPE.")
     new CdcEngine(spark, sourceDir, sinkDir, stateDir, dsn,
       policy = conf.policy, munge = conf.munge,
       concurrency = conf.concurrentStreams,
       batchBytes = Some(conf.batchBytes),
       excludedTables = conf.excludedTables)
+  }
 }
 
 final class CdcEngine(

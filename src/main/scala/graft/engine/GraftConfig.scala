@@ -17,7 +17,8 @@ import graft.util.Util.utcTs
  *   MUNGE_TIMESTAMPS_BEFORE_MIN / _BEFORE_EPOCH         (postgres.go:72-101)
  *   MUNGE_INVALID_TIMESTAMPS_TO_NULL / _TO_MIN
  *   MUNGE_TIMESTAMPS_MIN   (the minimum-timestamp bound, 'yyyy-MM-dd HH:mm:ss')
- *   OUTPUT_TYPE            (FILE -> JSON-lines sink, else parquet log)
+ *   OUTPUT_TYPE            (FILE, the JSON-lines file output, is refused by
+ *                          `CdcEngine.fromConfig`: the engine writes a parquet log)
  */
 final case class GraftConfig(
     batchCount: Long = 4096L,

@@ -164,7 +164,8 @@ abstract class IndexFamily[I <: Versioned](
     * tasks the frame's plan has (a fold's union has one per input file);
     * AQE splits a skewed cell into advisory-size files. A family writes
     * each quantizer table as one file by coalescing it where it lists its
-    * relations. */
+    * relations. A relation with no rows at all is saved as one zero-row
+    * file, so an emptied index re-opens. */
   def save(index: I, dir: String): I = {
     val rels = relations(index)
     val spark = rels.head.frame.sparkSession
@@ -182,12 +183,20 @@ abstract class IndexFamily[I <: Versioned](
       case IndexMeta.Stamp.Absent => ()
     }
     val tables = rels ++ IndexFamily.paramTable(spark, params(index))
-    tables.foreach { r =>
-      if (r.byCell) r.frame.hint("rebalance", col("cell")).write.mode("overwrite")
-        .partitionBy("cell").parquet(s"$dir/${r.name}__stage")
-      else r.frame.write.mode("overwrite").parquet(s"$dir/${r.name}__stage")
-    }
     val fs = new HPath(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    tables.foreach { r =>
+      val stage = s"$dir/${r.name}__stage"
+      if (r.byCell) {
+        r.frame.hint("rebalance", col("cell")).write.mode("overwrite")
+          .partitionBy("cell").parquet(stage)
+        // an empty relation writes no cell=* directory and so no footer to
+        // read its schema back from: keep the schema in one zero-row file
+        // (a listing, not a job, tells the two apart)
+        if (fs.globStatus(new HPath(stage, "cell=*")).isEmpty)
+          spark.createDataFrame(java.util.Collections.emptyList[Row](), r.frame.schema)
+            .write.mode("append").parquet(stage)
+      } else r.frame.write.mode("overwrite").parquet(stage)
+    }
     tables.foreach { r =>
       val (p, stage) = (new HPath(dir, r.name), new HPath(dir, s"${r.name}__stage"))
       if (fs.exists(p)) fs.delete(p, true)
@@ -402,8 +411,9 @@ object IndexFamily {
       // newSh re-ran the tokenize+shingle kernel once per consumer in
       // every downstream probe plan. The checkpoint is O(new docs) of
       // skinny (id, gram-hash array) rows — the same eager-skinny pattern
-      // as the streaming folds' event union. Measured (Scratch timeq,
-      // sf0.1, like ambient windows): dedup_incr_index_extend
+      // as the streaming folds' event union. Measured (sf0.1, like
+      // ambient windows; PLANS.md "Measurements the code comments
+      // cite"): dedup_incr_index_extend
       // 4.0 -> 1.8 s min-warm. Contrast refreshIdSplit in CorpusOps,
       // where the same pattern on an EXCHANGE-bearing relation buys
       // nothing (exchange reuse already shares the execution).

@@ -278,8 +278,8 @@ object Similarity {
     * ~32 MB with each of thousands of tasks, while the broadcast
     * relation ships once per executor through the block manager. The
     * join is a 1-row BroadcastNestedLoopJoin — each output row
-    * references the broadcast array, no per-row copy. Measured in
-    * `Scratch ivfcells` at sf0.1 (PLANS.md round-12 table): closure-
+    * references the broadcast array, no per-row copy. Measured at
+    * sf0.1 (PLANS.md "assignToCells: task-binary size flat"): closure-
     * serialized task binary flat at 43 KB from nlist=16 to 16384 vs
     * 10.9 MB/task for the literal shape at 16384×64; plan nodes flat
     * for both; run time is the inherent O(nlist × dim) arithmetic
@@ -1075,8 +1075,12 @@ object Similarity {
                          idCol: String, vecCol: String,
                          eps: Double = 0.95,
                          maxCellSize: Int = 100000): DataFrame =
-    batch.join(
-      broadcast(semanticDupAgainstIndex(index, batch, idCol, vecCol, eps,
-        maxCellSize).select(col(idCol)).distinct()),
-      Seq(idCol), "left_anti")
+    semanticKeepSet(batch,
+      semanticDupAgainstIndex(index, batch, idCol, vecCol, eps, maxCellSize), idCol)
+
+  /** The batch rows with no row in `matches` ([[semanticDupAgainstIndex]]'s
+    * shape), so a caller that also audits the matches probes once. */
+  private[graft] def semanticKeepSet(batch: DataFrame, matches: DataFrame,
+                                     idCol: String): DataFrame =
+    batch.join(broadcast(matches.select(col(idCol)).distinct()), Seq(idCol), "left_anti")
 }

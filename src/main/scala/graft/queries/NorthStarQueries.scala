@@ -210,7 +210,7 @@ object NorthStarQueries {
     * set equals brute-force all-pairs at eps=0.9 with no sampling luck
     * (k-means cells, by contrast, can split planted pairs — which is
     * exactly the recall loss the dedup_semantic_recall gate prices; on
-    * these fixtures none split, Scratch semcell). Cells still prune:
+    * these fixtures none split, PLANS.md "SemDeDup"). Cells still prune:
     * 4 cells score ~1/4 of the pair space. */
   private def ivfSemIndex(dir: String, pe: DataFrame): Similarity.IvfIndex =
     Fixtures.memo(Fixtures.Sim, pe.sparkSession, dir, "ivfSemIndex") {
@@ -352,7 +352,7 @@ object NorthStarQueries {
     * sorted-token-multiset equality, which DuckDB recomputes. The
     * 1-in-10 subsample matters: the full corpus's planted one-token-
     * edit near-dups genuinely collide at Hamming 0 too (correct
-    * simhash behavior, measured — Scratch simhasheq), but a multiset
+    * simhash behavior, measured — PLANS.md "simhash graduation"), but a multiset
     * oracle cannot express them; the subsample separates every such
     * pair, and the measured pair set is EQUAL to the oracle at all
     * three fixture SFs. */
@@ -654,7 +654,8 @@ object NorthStarQueries {
       // manufacture pays inside whichever rep first touches each
       // relation — the count pins the whole cost into the first
       // toucher's cold rep, so warm reps deterministically price the
-      // fold itself. Verified at idle (Scratch timeq, sf0.1): cold
+      // fold itself. Verified at idle (sf0.1, PLANS.md "Pricing
+      // experiments (r17 judge #4 and #6)"): cold
       // ~20 s carries the manufacture, warm 3.2-4.6 s.
       amend.count()
       Seq(oldIdx.postings, oldIdx.shingles, oldIdx.dfCounts,
@@ -774,8 +775,8 @@ object NorthStarQueries {
     // token-reversed planted fixture at Hamming 0 (see simPlantedDocs:
     // order-invariance makes each copy's simhash equal its original's
     // BITWISE, so the pair set equals DuckDB-computable sorted-token-
-    // multiset equality — measured EQUAL at all three SFs, Scratch
-    // simhasheq). The full banded pipeline (simhash64, 4x16-bit band
+    // multiset equality — measured EQUAL at all three SFs, PLANS.md
+    // "simhash graduation"). The full banded pipeline (simhash64, 4x16-bit band
     // explode, bucket join, XOR/bit_count verify) runs unchanged; the
     // wide-Hamming candidate economics stay priced by
     // dedup_simhash_recall (maxHamming=16, hash-matched gate).
@@ -788,10 +789,10 @@ object NorthStarQueries {
       // the LSH bucketing + verify join are exercised on real signal.
       // At 12 planes x 8 bands a 0.9988-cosine pair misses all bands
       // w.p. ~8e-7, and measured recall is exactly 1.0 on every fixture
-      // SF (Scratch anneq: pair set EQUAL to brute force, 200/200 at
-      // sf0.1), so the row hash-checks against the planted brute-force
-      // SQL — the bands=2 partial-recall regime stays covered by the
-      // dedup_embedding_sound floor gate.
+      // SF (pair set EQUAL to brute force, 200/200 at sf0.1; PLANS.md
+      // "Measurements the code comments cite"), so the row hash-checks
+      // against the planted brute-force SQL — the bands=2 partial-recall
+      // regime stays covered by the dedup_embedding_sound floor gate.
       Dedup.embeddingDupPairs(plantedEmbeddings(embs(s, dir)), "vec_id",
         "embedding", threshold = 0.9, planes = 12, bands = 8)),
     "dedup_embedding_exact" -> ((s, dir) => {
@@ -858,9 +859,9 @@ object NorthStarQueries {
     // ...and the paper's own k-means quantizer, priced honestly: k-means
     // cell boundaries CAN lose pairs (the copy lands across the
     // boundary), which is SemDeDup's documented recall/cost trade —
-    // measured 50/50, 50/50, 200/200 found at sf0.001/0.01/0.1 (Scratch
-    // semcell). The gate floors recall at 0.95; DuckDB supplies the
-    // true pair count.
+    // measured 50/50, 50/50, 200/200 found at sf0.001/0.01/0.1
+    // (PLANS.md "Measurements the code comments cite"). The gate floors
+    // recall at 0.95; DuckDB supplies the true pair count.
     "dedup_semantic_recall" -> ((s, dir) => {
       val pe = plantedEmbeddings(embs(s, dir))
       val found = Similarity.semanticDupPairs(
@@ -1461,7 +1462,8 @@ object NorthStarQueries {
     // vector-store shape; the brute-force row above pins the exact
     // semantics). Gated on recall vs the filtered brute-force truth —
     // the sim_ivf_recall convention and 0.75 floor (measured 0.768 /
-    // 0.856 / 0.818 per SF on the 1-in-20 set, Scratch recallgates).
+    // 0.856 / 0.818 per SF on the 1-in-20 set, PLANS.md "Measurements
+    // the code comments cite").
     // Fresh fit per call (fixed seed -> same cells as the cached index)
     // so the row prices fit + filter + probe, uncached.
     "sim_topk_filtered_ivf" -> ((s, dir) => {
@@ -1489,7 +1491,7 @@ object NorthStarQueries {
     // convention; weakest-neighbor miss probability ~1e-3), gated at
     // the shared >= 0.75 floor vs the filtered brute-force truth
     // (measured 1.000 at every SF on the 1-in-20 probe set —
-    // Scratch recallgates, round 13).
+    // PLANS.md "IVF trained-centers recall curve", round 13).
     "sim_topk_filtered_lsh" -> ((s, dir) => {
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") % 20 === 0)
@@ -1610,7 +1612,7 @@ object NorthStarQueries {
     // 0.9988-cosine copy; the copy's codes quantize (near-)identically
     // to the query's, so it always survives the ADC cut and wins the
     // exact re-rank — measured EQUAL to brute-force top-1 row-for-row
-    // at every fixture SF (Scratch pqrecall, round 13), so the row
+    // at every fixture SF (PLANS.md "PQ recall sweep", round 13), so the row
     // hash-checks against DuckDB brute force: the same still-pruning
     // graduation method as sim_topk_ivf. The unfavorable-regime
     // (uniform embeddings) operating point is covered by sim_pq_recall.
@@ -1643,7 +1645,7 @@ object NorthStarQueries {
     // 0.9988-cosine copy co-cells with it STRUCTURALLY, and nprobe=1
     // scans only the query's own cell — measured 25% of the corpus at
     // every fixture SF with top-1 EQUAL to brute force row-for-row at
-    // rerank=20 AND 50 (Scratch ivfpqplanted, round 14) — so the row
+    // rerank=20 AND 50 (PLANS.md "IVF-PQ composition", round 14) — so the row
     // hash-checks against DuckDB brute force: the sim_topk_pq
     // graduation method with real coarse pruning on top. The
     // k-means-everything operating point is priced by sim_ivfpq_recall.
@@ -1696,7 +1698,8 @@ object NorthStarQueries {
     // raw embeddings with the FULL k-means path (coarse nlist=16 +
     // m=8 x ksub=64 codebooks), probing 8 of 16 cells with exact
     // re-rank of the ADC top-200. Measured 0.776 / 0.852 / 0.785 at
-    // sf0.001 / 0.01 / 0.1 (Scratch ivfpqrecall; deterministic — seeded
+    // sf0.001 / 0.01 / 0.1 (PLANS.md "Measurements the code comments
+    // cite"; deterministic — seeded
     // trainer on a partitioning-independent sample), so the 0.70 floor
     // holds everywhere with >= 19-bet margin. The honest decomposition:
     // the coarse nprobe=8/16 pruning costs 0.15-0.22 (sim_ivf_recall
@@ -1720,7 +1723,8 @@ object NorthStarQueries {
     // sim_ivfpq_recall — prices the paper's fidelity claim (residual
     // codebooks model the tighter within-cell ball) on the worst-case
     // near-uniform raw embeddings. Measured 0.776 / 0.852 / 0.753 at
-    // sf0.001 / 0.01 / 0.1 (Scratch ivfpqrecall, residual=true sweep) —
+    // sf0.001 / 0.01 / 0.1 (residual=true sweep, PLANS.md
+    // "Measurements the code comments cite") —
     // on THIS fixture residual matches direct at small SFs and trails
     // it at sf0.1 (0.753 vs 0.785): near-uniform data has no tight
     // cells, so residuals are not smaller than the vectors and the
@@ -1744,7 +1748,8 @@ object NorthStarQueries {
     // PQ ANN recall floor vs brute on the (worst-case, near-uniform)
     // raw embeddings: m=8 x ksub=64 codebooks, exact re-rank of the ADC
     // top-200 (10% of the sf0.1 corpus). Measured 1.000 / 0.996 / 0.914
-    // at sf0.001 / 0.01 / 0.1 (Scratch pqrecall sweep; deterministic —
+    // at sf0.001 / 0.01 / 0.1 (PLANS.md "Measurements the code
+    // comments cite"; deterministic —
     // seeded trainer on a partitioning-independent sample), so the 0.85
     // floor holds everywhere with >= 36-bet margin; a broken ADC table or
     // code stride lands near rerank/N (~0.1) and a broken encoder near
@@ -1785,7 +1790,8 @@ object NorthStarQueries {
     // Statistically powered (round 13): the probe set is every 20th
     // vector — 100 queries x k=10 = 1000 hit-bets at sf0.1 (250 at the
     // smaller SFs), vs the old 1-in-100 set's 50. Measured 0.776 /
-    // 0.852 / 0.815 at sf0.001 / 0.01 / 0.1 (Scratch recallgates;
+    // 0.852 / 0.815 at sf0.001 / 0.01 / 0.1 (PLANS.md "Measurements
+    // the code comments cite";
     // deterministic — seeded trainer on a partitioning-independent
     // sample), so the 0.75 floor holds everywhere (the thinnest margin
     // is 6 bets at sf0.001, 65 at sf0.1) while any assignment or probe
@@ -1811,8 +1817,8 @@ object NorthStarQueries {
     // new vectors to the FROZEN centroids — no re-train, no corpus
     // reassignment), probe the extended index. Gated on recall vs the
     // DuckDB-recomputable brute-force top-10 — measured 0.836 / 0.812 /
-    // 0.824 at sf0.001 / 0.01 / 0.1 on the 1-in-20 probe set (Scratch
-    // recallgates; deterministic: seeded trainer on a
+    // 0.824 at sf0.001 / 0.01 / 0.1 on the 1-in-20 probe set (PLANS.md
+    // "Measurements the code comments cite"; deterministic: seeded trainer on a
     // partitioning-independent sample), so the 0.75 floor (the
     // sim_ivf_recall sibling's) passes every SF while a broken
     // assignment or an extension invisible to the probe lands near 0.
@@ -3478,7 +3484,8 @@ object NorthStarQueries {
     // The raw minhash pair row shares the exact-pairs oracle: with the
     // decorrelated permutations (see HashKernels.minhashSignature) the
     // banded candidates at 8x4 catch EVERY >= 0.5-Jaccard pair on all
-    // three fixture SFs (Scratch mheq: 28/28, 25/25, 256/256 — the
+    // three fixture SFs (28/28, 25/25, 256/256, PLANS.md "Measurements
+    // the code comments cite" — the
     // pre-fix kernel missed 9 of 256 at sf0.1), and the verify step is
     // the same exact-Jaccard kernel, so the emitted set and values are
     // bit-identical to the inverted-index SQL. A bucketing, banding, or
@@ -3767,7 +3774,7 @@ object NorthStarQueries {
     // IVF-PQ planted rows: nprobe=1 over the nudge-orthogonal explicit
     // cells scans only the query's own cell, which structurally holds
     // the true top-1 (the planted copy) — measured EQUAL to brute
-    // force at every fixture SF (Scratch ivfpqplanted), so the same
+    // force at every fixture SF (PLANS.md "IVF-PQ composition"), so the same
     // brute-force top-1 truth applies.
     "sim_topk_ivfpq" -> PlantedBruteTop1Sql,
     "sim_topk_ivfpq_probe" -> PlantedBruteTop1Sql,

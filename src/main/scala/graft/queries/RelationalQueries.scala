@@ -236,7 +236,7 @@ object RelationalQueries {
       // array form: ONE value buffer per group serves both quantiles —
       // two scalar percentile() aggregates each collect their own copy
       // of every group's values. Measured on an idle session at sf0.1
-      // (Scratch pctl, 6 reps): array 1.0-1.4 s warm vs scalar
+      // (6 reps, PLANS.md "q_percentile drift"): array 1.0-1.4 s warm vs scalar
       // 1.5-2.0 s. The round-7 bench's 5.4 s warm for this row was
       // session cache pressure (value-buffering aggregates are the
       // allocation pattern most sensitive to heap competition), fixed
@@ -262,7 +262,8 @@ object RelationalQueries {
     // the 3-row group key — one agg mixing them plans an Expand that
     // pushes every row twice through the percentile buffers (measured
     // 4.3 s warm mixed vs ~2 s split at sf0.1; same Expand economics as
-    // the `Scratch sketch` shoot-out on the global form).
+    // the shoot-out on the global form, PLANS.md "Measurements the
+    // code comments cite").
     "q_approx_sketch" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
       val distincts = li.groupBy(col("l_returnflag")).agg(
@@ -298,7 +299,8 @@ object RelationalQueries {
     // Formulation: DISTINCT aggregate split from the value-buffering
     // aggregates and cross-joined (both single-row) — the mixed one-agg
     // form plans an Expand that pushes every row twice through the
-    // percentile buffers (`Scratch sketch` at sf0.1: split 1.9 s warm /
+    // percentile buffers (sf0.1, PLANS.md "Measurements the code
+    // comments cite": split 1.9 s warm /
     // 2.0 s cold vs mixed 2.1 s / 4.4 s; same economics as the grouped
     // q_approx_sketch split).
     "q_sketch_accuracy" -> ((s, dir) => {
@@ -334,7 +336,8 @@ object RelationalQueries {
 
     // Correlated NOT EXISTS: the null-aware anti-join surface.
     // Round-7's warm(2.67s) > cold(1.25s) inversion does not reproduce
-    // on an idle session (Scratch repeat, 8 reps at sf0.1: 6.1 s first
+    // on an idle session (8 reps at sf0.1, PLANS.md "Measurements the
+    // code comments cite": 6.1 s first
     // touch, then 0.8-1.1 s steady) — it was scheduling variance under
     // the pre-phasing bench's session-wide cache pinning.
     "q_not_exists" -> ((s, dir) => {

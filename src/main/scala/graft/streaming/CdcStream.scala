@@ -4,12 +4,13 @@ import java.sql.Timestamp
 
 import org.apache.hadoop.fs.{Path => HPath}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
+import org.apache.spark.storage.StorageLevel
 
-import graft.extensions.{IndexFamily, Versioned}
+import graft.extensions.{CorpusOps, Dedup, IndexFamily, Similarity, Versioned}
 import graft.sinks.AppendSink
 import graft.sources.ParquetMeta
 
@@ -69,12 +70,63 @@ object CdcStream {
   }
 
   /**
+   * The runner every streaming leg starts on, and the replay contract they
+   * all share. `body` runs once per micro-batch under the checkpoint at
+   * `checkpointDir`, so a committed batch id is never run again. Every sink
+   * a leg writes, apart from [[startIngest]]'s change log, goes through
+   * [[writeBatch]]: an OVERWRITE of `<dir>/batch=<id>`. The crash window
+   * between a sink write and the checkpoint commit, where a plain append
+   * would duplicate the batch on replay, then rewrites the same subdir
+   * with the same rows. Each leg writes its subdirs unconditionally, even
+   * empty: a replay whose result shrank (an index hot-swapped between a
+   * crashed attempt and its replay) must still replace the crashed
+   * attempt's rows. Readers `spark.read.parquet(dir)` and see `batch` as a
+   * partition column; the compactions read `batch=*` trees and order
+   * images by `batch`.
+   *
+   * `trigger` is the run mode (T6 x T8): `Trigger.AvailableNow()` drains
+   * what has arrived and stops; `Trigger.ProcessingTime(period)` runs
+   * continuously, one micro-batch per period (BQ_BATCH_PERIOD,
+   * `benthos.go:121-124`).
+   */
+  private def everyBatch(stream: DataFrame, checkpointDir: String, trigger: Trigger)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(body)
+      .trigger(trigger)
+      .start()
+
+  /** Overwrite `rows` into `<dir>/batch=<batchId>` — the one sink layout of
+    * [[everyBatch]]'s contract. */
+  private def writeBatch(rows: DataFrame, dir: String, batchId: Long): Unit =
+    rows.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+
+  /** One relation, two sinks: `keep` of `shared` lands in `sinkDir`, and,
+    * when `auditDir` is given, `audit` of it lands there. Only then is
+    * `shared` persisted, so the probe or kernel battery behind it runs once
+    * for both; with no audit the keep-set is exactly the single-sink
+    * operator's. Both sinks share the batch id, so a replay reconciles the
+    * audit with the rows it describes. */
+  private def keepAndAudit(shared: DataFrame, sinkDir: String,
+                           auditDir: Option[String], batchId: Long)(
+      keep: DataFrame => DataFrame, audit: DataFrame => DataFrame): Unit =
+    auditDir.fold(writeBatch(keep(shared), sinkDir, batchId)) { ad =>
+      val m = shared.persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        writeBatch(keep(m), sinkDir, batchId)
+        writeBatch(audit(m), ad, batchId)
+      } finally { m.unpersist(false); () }
+    }
+
+  /**
    * Start CDC ingestion: change stream -> watermarked pk-dedup ->
    * checkpointed append into `<table>_cdc`. Exactly-once to the sink
    * across restarts comes from the checkpoint (committed batch ids are
    * not re-appended); residual duplicates from at-least-once upstream are
    * collapsed by `dropDuplicatesWithinWatermark` and, terminally, by the
-   * current-state view (W1).
+   * current-state view (W1). The one leg that appends through
+   * [[graft.sinks.AppendSink]] instead of [[writeBatch]].
    */
   def startIngest(
       spark: SparkSession,
@@ -85,10 +137,7 @@ object CdcStream {
       nmsCol: String,
       pkCol: String,
       watermarkDelay: String = "1 hour",
-      availableNow: Boolean = true,
-      /** T8 BQ_BATCH_PERIOD (`benthos.go:121-124`): max time between
-        * flushes -> the processing-time trigger interval. */
-      batchPeriodSecs: Long = 10L,
+      trigger: Trigger = Trigger.AvailableNow(),
       /** Also MERGE each micro-batch into `<table>_cdc_state` (SURVEY
         * §7.4) — same compaction as the batch engine's
         * `maintainCurrentState`, idempotent per batch id on replay. */
@@ -99,35 +148,25 @@ object CdcStream {
       .withWatermark(nmsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark(pkCol, nmsCol)
 
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // batch-constant snapshot_tm (P3): a REAL capture timestamp,
-        // recorded once per batch id in the checkpoint dir so a replay of
-        // the same epoch stamps identically (idempotent re-runs) while
-        // `snapshot_dt` partitioning/retention stays meaningful.
-        val snapTm = getOrRecordBatchTime(spark, checkpointDir, batchId)
-        val stamped = batch.withColumn("snapshot_tm",
-          lit(snapTm).cast(TimestampType))
-        if (!stamped.isEmpty) {
-          AppendSink.appendSnapshot(stamped, sinkDir, table)
-          if (maintainCurrentState) {
-            graft.operators.CompactedState.upsert(spark,
-              s"$sinkDir/${AppendSink.cdcTableName(table)}_state", stamped,
-              graft.operators.CompactedState.Config(
-                Seq(pkCol), "snapshot_tm", Seq(nmsCol)))
-          }
+    everyBatch(stream, checkpointDir, trigger) { (batch, batchId) =>
+      // batch-constant snapshot_tm (P3): a REAL capture timestamp,
+      // recorded once per batch id in the checkpoint dir so a replay of
+      // the same epoch stamps identically (idempotent re-runs) while
+      // `snapshot_dt` partitioning/retention stays meaningful.
+      val snapTm = getOrRecordBatchTime(spark, checkpointDir, batchId)
+      val stamped = batch.withColumn("snapshot_tm",
+        lit(snapTm).cast(TimestampType))
+      if (!stamped.isEmpty) {
+        AppendSink.appendSnapshot(stamped, sinkDir, table)
+        if (maintainCurrentState) {
+          graft.operators.CompactedState.upsert(spark,
+            s"$sinkDir/${AppendSink.cdcTableName(table)}_state", stamped,
+            graft.operators.CompactedState.Config(
+              Seq(pkCol), "snapshot_tm", Seq(nmsCol)))
         }
-        ()
       }
-    writer.trigger(batchTrigger(availableNow, batchPeriodSecs)).start()
+    }
   }
-
-  /** T6 x T8: run-once drains with AvailableNow; continuous mode fires on
-    * the configured batch period. */
-  private[streaming] def batchTrigger(availableNow: Boolean, batchPeriodSecs: Long): Trigger =
-    if (availableNow) Trigger.AvailableNow()
-    else Trigger.ProcessingTime(s"$batchPeriodSecs seconds")
 
   // ---- restart-after-compaction mechanization (VERDICT r18 #3) --------
 
@@ -162,7 +201,7 @@ object CdcStream {
     * Residual window (documented, not closed): a compaction running
     * CONCURRENTLY with an in-flight trigger can consume an epoch tree
     * while that trigger's write to it is still in flight — fold between
-    * triggers (the availableNow cadence) or quiesce the stream while
+    * triggers (the AvailableNow cadence) or quiesce the stream while
     * folding to close it. */
   case object ReresolveOnCompaction extends CompactionPolicy
 
@@ -248,11 +287,65 @@ object CdcStream {
                     joinCols: Seq[String], how: String = "left"): DataFrame =
     stream.join(broadcast(dim), joinCols, how)
 
+  /** Streaming CURATION ingest — the text-funnel analog of the dedup
+    * ingest legs: each micro-batch runs the langid → quality →
+    * repetition → within-batch-exact-dedup battery
+    * ([[graft.extensions.CorpusOps.curate]]: zero-shuffle within-row
+    * kernels + ONE keep-first combining shuffle, O(batch) per trigger)
+    * and only curated survivors land in the sink, carrying the
+    * metadata a curated shard carries (quality, token budget,
+    * fingerprint). Cross-batch dedup is deliberately NOT this leg's
+    * job — chain the sink into [[startCorpusDedupIngest]] for that;
+    * gating the firehose BEFORE the index probe is the production
+    * composition (the gates are the cheap stage). `statsDir`
+    * additionally records each batch's funnel attrition
+    * ([[graft.extensions.CorpusOps.curationFunnel]]) next to the data,
+    * both from one metrics relation. The gates are stateless
+    * (row-local), so replay is trivially idempotent. */
+  def startCurationIngest(
+      docStream: DataFrame,
+      idCol: String, textCol: String,
+      sinkDir: String, checkpointDir: String,
+      lang: String = "en", minQuality: Double = 0.5,
+      maxDup2: Double = 0.05, maxTop2: Double = 0.12,
+      trigger: Trigger = Trigger.AvailableNow(),
+      statsDir: Option[String] = None): StreamingQuery =
+    everyBatch(docStream, checkpointDir, trigger) { (batch, batchId) =>
+      keepAndAudit(CorpusOps.curationMetrics(batch, col(idCol), col(textCol)),
+        sinkDir, statsDir, batchId)(
+        CorpusOps.curateFromMetrics(_, lang, minQuality, maxDup2, maxTop2),
+        m => CorpusOps.funnelFromMetrics(m, lang, minQuality, maxDup2, maxTop2)
+          .withColumn("batch_id", lit(batchId)))
+    }
+
+  /** Streaming BOILERPLATE SCRUB ingest — the line-level complement of
+    * the curation leg: each micro-batch is rebuilt against a FROZEN
+    * per-source boilerplate census (fit offline with
+    * [[graft.extensions.Dedup.boilerplateLines]] over the corpus the
+    * pipeline already holds). O(batch) per trigger: the line explode
+    * touches only the batch's rows, and the census joins as the (tiny)
+    * flagged set — that a site's boilerplate is a small stable set is
+    * exactly what makes it boilerplate. The census is deliberately
+    * frozen between refreshes, same contract as the dedup legs' frozen
+    * indexes: a census that drifted with every batch would make replay
+    * non-idempotent (and let one weird batch redefine a source's
+    * boilerplate); refresh offline, restart the leg. */
+  def startBoilerplateScrubIngest(
+      docStream: DataFrame,
+      census: DataFrame,
+      idCol: String, textCol: String, sourceCol: String,
+      sinkDir: String, checkpointDir: String,
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    everyBatch(docStream, checkpointDir, trigger) { (batch, batchId) =>
+      writeBatch(Dedup.scrubBoilerplate(
+        batch, idCol, textCol, sourceCol, census = Some(census)), sinkDir, batchId)
+    }
+
   /**
    * Streaming ingest dedup against a persisted corpus index: every
    * micro-batch of arriving documents is probed with
    * [[graft.extensions.Dedup.dedupAgainstCorpus]] — O(batch) work per
-   * trigger against the fit-once index — and only novel docs append to
+   * trigger against the fit-once index — and only novel docs land in
    * the sink. `foreachBatch` hands each micro-batch over as a static
    * DataFrame, so the exact batch semantics (inverted-index candidates +
    * exact-Jaccard verify + broadcast anti-join) apply unchanged; a
@@ -270,147 +363,23 @@ object CdcStream {
    * the idempotent offline bump. Quality gates / decontamination
    * compose UPSTREAM: transform `docStream` (filter, [[graft.extensions
    * .CorpusOps]] ops) before passing it in; the ingest needs no hook.
-   *
-   * Exactly-once to the sink: committed batch ids are not re-run
-   * (checkpoint), and each batch writes by OVERWRITE into its own
-   * `batch=<id>` subdirectory — so the crash window between a sink write
-   * and the checkpoint commit, where a plain append would duplicate the
-   * batch on replay, instead overwrites the same subdir with the same
-   * rows. Readers `spark.read.parquet(sinkDir)` and see `batch` as a
-   * partition column.
+   * `provenanceDir` records each dropped doc's best corpus match, from
+   * the same match relation as the keep-set.
    */
-  /** Streaming CURATION ingest — the text-funnel analog of the dedup
-    * ingest legs: each micro-batch runs the langid → quality →
-    * repetition → within-batch-exact-dedup battery
-    * ([[graft.extensions.CorpusOps.curate]]: zero-shuffle within-row
-    * kernels + ONE keep-first combining shuffle, O(batch) per trigger)
-    * and only curated survivors land in the sink, carrying the
-    * metadata a curated shard carries (quality, token budget,
-    * fingerprint). Cross-batch dedup is deliberately NOT this leg's
-    * job — chain the sink into [[startCorpusDedupIngest]] for that;
-    * gating the firehose BEFORE the index probe is the production
-    * composition (the gates are the cheap stage). `statsDir`
-    * additionally records each batch's funnel attrition
-    * ([[graft.extensions.CorpusOps.curationFunnel]]) next to the data;
-    * when enabled, the kernel battery runs ONCE behind a persisted
-    * metrics relation shared by both sinks. Both sinks use the
-    * per-batch `batch=<id>` OVERWRITE, so replay after any crash point
-    * reconciles the audit trail with the rows it describes; the gates
-    * are stateless (row-local), so replay is trivially idempotent. */
-  def startCurationIngest(
-      docStream: DataFrame,
-      idCol: String, textCol: String,
-      sinkDir: String, checkpointDir: String,
-      lang: String = "en", minQuality: Double = 0.5,
-      maxDup2: Double = 0.05, maxTop2: Double = 0.12,
-      availableNow: Boolean = true,
-      batchPeriodSecs: Long = 10L,
-      statsDir: Option[String] = None): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.extensions.CorpusOps
-        statsDir match {
-          case None =>
-            CorpusOps.curate(batch, col(idCol), col(textCol),
-              lang, minQuality, maxDup2, maxTop2)
-              .write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
-          case Some(sd) =>
-            val metrics = CorpusOps.curationMetrics(
-              batch, col(idCol), col(textCol))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              CorpusOps.curateFromMetrics(metrics,
-                lang, minQuality, maxDup2, maxTop2)
-                .write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
-              CorpusOps.funnelFromMetrics(metrics,
-                lang, minQuality, maxDup2, maxTop2)
-                .withColumn("batch_id", lit(batchId))
-                .write.mode("overwrite").parquet(s"$sd/batch=$batchId")
-            } finally { metrics.unpersist(false); () }
-        }
-        ()
-      }
-      .trigger(batchTrigger(availableNow, batchPeriodSecs))
-      .start()
-
-  /** Streaming BOILERPLATE SCRUB ingest — the line-level complement of
-    * the curation leg: each micro-batch is rebuilt against a FROZEN
-    * per-source boilerplate census (fit offline with
-    * [[graft.extensions.Dedup.boilerplateLines]] over the corpus the
-    * pipeline already holds). O(batch) per trigger: the line explode
-    * touches only the batch's rows, and the census joins as the (tiny)
-    * flagged set — that a site's boilerplate is a small stable set is
-    * exactly what makes it boilerplate. The census is deliberately
-    * frozen between refreshes, same contract as the dedup legs' frozen
-    * indexes: a census that drifted with every batch would make replay
-    * non-idempotent (and let one weird batch redefine a source's
-    * boilerplate); refresh offline, restart the leg. Stateless given
-    * the census, so the per-batch `batch=<id>` OVERWRITE replay
-    * contract is trivially idempotent. */
-  def startBoilerplateScrubIngest(
-      docStream: DataFrame,
-      census: DataFrame,
-      idCol: String, textCol: String, sourceCol: String,
-      sinkDir: String, checkpointDir: String,
-      availableNow: Boolean = true,
-      batchPeriodSecs: Long = 10L): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.extensions.Dedup.scrubBoilerplate(
-          batch, idCol, textCol, sourceCol, census = Some(census))
-          .write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
-        ()
-      }
-      .trigger(batchTrigger(availableNow, batchPeriodSecs))
-      .start()
-
   def startCorpusDedupIngest(
       docStream: DataFrame,
-      index: graft.extensions.Dedup.CorpusIndex,
+      index: Dedup.CorpusIndex,
       idCol: String, textCol: String,
       sinkDir: String, checkpointDir: String,
       threshold: Double = 0.5,
-      availableNow: Boolean = true,
-      batchPeriodSecs: Long = 10L,
+      trigger: Trigger = Trigger.AvailableNow(),
       provenanceDir: Option[String] = None): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // ALWAYS write the batch subdir, even when novel is empty: a
-        // replayed batch whose novel set shrank to empty (the caller
-        // swapped in a refreshed index between a crashed attempt and
-        // its replay) must still reconcile the subdir, or the crashed
-        // attempt's now-stale rows would survive as batch=<id>. The
-        // unconditional overwrite keeps replay idempotent in all cases.
-        provenanceDir match {
-          case None =>
-            graft.extensions.Dedup.dedupAgainstCorpus(
-              batch, index, idCol, textCol, threshold = threshold)
-              .write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
-          case Some(pd) =>
-            // auditing enabled: run the probe ONCE, persist the skinny
-            // match relation, and derive BOTH the keep-set anti-join and
-            // the provenance aggregate from it — the candidate join +
-            // Jaccard verify is the per-batch cost, and rebuilding it
-            // for the audit sink would double it. Both sinks share the
-            // per-batch overwrite contract, so a replay reconciles the
-            // audit trail with the keep-set it sits next to.
-            val matches = graft.extensions.Dedup.corpusDupMatches(
-              batch, index, idCol, textCol, threshold)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              graft.extensions.Dedup.keepSetFromMatches(batch, matches, idCol)
-                .write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
-              graft.extensions.Dedup.provenanceFromMatches(matches, idCol, "jaccard")
-                .write.mode("overwrite").parquet(s"$pd/batch=$batchId")
-            } finally { matches.unpersist(false); () }
-        }
-        ()
-      }
-      .trigger(batchTrigger(availableNow, batchPeriodSecs))
-      .start()
+    everyBatch(docStream, checkpointDir, trigger) { (batch, batchId) =>
+      keepAndAudit(Dedup.corpusDupMatches(batch, index, idCol, textCol, threshold),
+        sinkDir, provenanceDir, batchId)(
+        Dedup.keepSetFromMatches(batch, _, idCol),
+        Dedup.provenanceFromMatches(_, idCol, "jaccard"))
+    }
 
   /** The VECTOR analog of [[startCdcMaintenanceIngest]]: one
     * checkpointed pass per trigger routes an embedding change log's
@@ -422,19 +391,14 @@ object CdcStream {
     * [[compact]] net-reduces all three trees for any vector family
     * (cross-class-safe, the [[startCdcMaintenanceIngest]] argument);
     * the per-leg folds remain correct when compaction cadence
-    * guarantees class-disjoint windows. Micro-batch
-    * persisted once, change log read once; the gate probe is the only
-    * non-narrow work. Same OPERATING CONTRACT as
+    * guarantees class-disjoint windows. Same OPERATING CONTRACT as
     * [[startCdcMaintenanceIngest]]: the gate and reinsert router key
     * off the handle frozen at stream start — and for a SAVED handle the
-    * contract is now mechanized per trigger by `onCompaction`
-    * ([[CompactionPolicy]]): the default refuses the trigger with the
-    * named `restart required` error the moment the saved tree's version
-    * moves; [[ReresolveOnCompaction]] reloads and rolls the sinks to
-    * `epoch=<version>` subtrees instead. */
+    * contract is mechanized per trigger by `onCompaction`
+    * ([[CompactionPolicy]]). */
   def startVecMaintenanceIngest(
       changeStream: DataFrame,
-      index: graft.extensions.Dedup.EmbeddingIndex,
+      index: Dedup.EmbeddingIndex,
       idCol: String, vecCol: String,
       opCol: String,
       acceptDir: String, upsertDir: String, retractDir: String,
@@ -442,87 +406,39 @@ object CdcStream {
       insertOp: String = "insert", updateOp: String = "update",
       deleteOp: String = "delete",
       threshold: Double = 0.95,
-      availableNow: Boolean = true,
-      batchPeriodSecs: Long = 10L,
-      onCompaction: CompactionPolicy = FailStreamOnCompaction): StreamingQuery = {
-    val handle = new java.util.concurrent.atomic.AtomicReference(index)
-    changeStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ix = resolveHandle(batch.sparkSession, handle, onCompaction)
-        val ep = epochSuffix(onCompaction, ix.version)
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // reinserts (id already served) bypass the novelty gate and
-          // route to the upsert sink — the delete→reinsert hole the doc
-          // ingest documents; the id split is one broadcast-batch join
-          // against the index's skinny id→vector relation
-          val ins = b.filter(col(opCol) === insertOp).drop(opCol)
-          val known = ix.vectors.select(col("doc_id").as(idCol))
-          graft.extensions.Dedup.dedupEmbeddingsAgainstCorpus(
-            ins.join(known, Seq(idCol), "left_anti"),
-            ix, idCol, vecCol, threshold = threshold)
-            .write.mode("overwrite").parquet(s"$acceptDir$ep/batch=$batchId")
-          b.filter(col(opCol) === updateOp)
-            .select(col(idCol), col(vecCol))
-            .unionByName(ins.join(known, Seq(idCol), "left_semi")
-              .select(col(idCol), col(vecCol)))
-            .write.mode("overwrite").parquet(s"$upsertDir$ep/batch=$batchId")
-          b.filter(col(opCol) === deleteOp)
-            .select(col(idCol))
-            .write.mode("overwrite").parquet(s"$retractDir$ep/batch=$batchId")
-        } finally { b.unpersist(false); () }
-        ()
-      }
-      .trigger(batchTrigger(availableNow, batchPeriodSecs))
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow(),
+      onCompaction: CompactionPolicy = FailStreamOnCompaction): StreamingQuery =
+    maintenanceIngest(changeStream, index, idCol, opCol,
+      (insertOp, updateOp, deleteOp), (acceptDir, upsertDir, retractDir),
+      checkpointDir, trigger, onCompaction)(
+      served = _.vectors, insertDrops = Seq(opCol),
+      gate = (novel, ix) => Dedup.dedupEmbeddingsAgainstCorpus(
+        novel, ix, idCol, vecCol, threshold = threshold),
+      updated = Seq(col(idCol), col(vecCol)),
+      reinserted = Seq(col(idCol), col(vecCol)),
+      retired = (deletes, _) => deletes.select(col(idCol)))
 
   /** Streaming EMBEDDING dedup ingest — the embedding analog of
     * [[startCorpusDedupIngest]], same contract end to end: each
     * micro-batch probes the sign-LSH bucket index via
     * [[graft.extensions.Dedup.dedupEmbeddingsAgainstCorpus]] (O(batch)
-    * per trigger), only novel vectors land in the sink, the index is
+    * per trigger), only novel vectors land in the sink, and the index is
     * resolved by reference per trigger (hot-swappable between
-    * triggers), and each batch OVERWRITES its own `batch=<id>` subdir —
-    * replay after ANY crash point, including a replay whose novel set
-    * shrank to empty under a swapped index, reconciles the subdir
-    * instead of duplicating or stranding rows. */
+    * triggers). */
   def startEmbeddingDedupIngest(
       vecStream: DataFrame,
-      index: graft.extensions.Dedup.EmbeddingIndex,
+      index: Dedup.EmbeddingIndex,
       idCol: String, vecCol: String,
       sinkDir: String, checkpointDir: String,
       threshold: Double = 0.95,
-      availableNow: Boolean = true,
-      batchPeriodSecs: Long = 10L,
+      trigger: Trigger = Trigger.AvailableNow(),
       provenanceDir: Option[String] = None): StreamingQuery =
-    vecStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // same single-probe structure as the text ingest: with auditing
-        // on, one persisted match relation feeds both sinks
-        provenanceDir match {
-          case None =>
-            graft.extensions.Dedup.dedupEmbeddingsAgainstCorpus(
-              batch, index, idCol, vecCol, threshold = threshold)
-              .write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
-          case Some(pd) =>
-            val matches = graft.extensions.Dedup.embeddingDupMatches(
-              batch, index, idCol, vecCol, threshold)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              graft.extensions.Dedup.keepSetFromMatches(batch, matches, idCol)
-                .write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
-              graft.extensions.Dedup.provenanceFromMatches(matches, idCol, "cosine")
-                .write.mode("overwrite").parquet(s"$pd/batch=$batchId")
-            } finally { matches.unpersist(false); () }
-        }
-        ()
-      }
-      .trigger(batchTrigger(availableNow, batchPeriodSecs))
-      .start()
+    everyBatch(vecStream, checkpointDir, trigger) { (batch, batchId) =>
+      keepAndAudit(Dedup.embeddingDupMatches(batch, index, idCol, vecCol, threshold),
+        sinkDir, provenanceDir, batchId)(
+        Dedup.keepSetFromMatches(batch, _, idCol),
+        Dedup.provenanceFromMatches(_, idCol, "cosine"))
+    }
 
   /** Streaming SEMANTIC dedup ingest — the SemDeDup leg of the ingest
     * symmetry ([[startCorpusDedupIngest]] text / n-gram Jaccard,
@@ -532,49 +448,29 @@ object CdcStream {
     * against co-celled corpus members only
     * ([[graft.extensions.Similarity.semanticDedupBatch]], O(batch) —
     * the corpus-sized assigned relation never reshuffles); only
-    * corpus-novel vectors land in the sink. Same contract end to end:
-    * the index is resolved by reference per trigger (hot-swappable
-    * between triggers), each batch OVERWRITES its own `batch=<id>`
-    * subdir so replay after any crash point reconciles instead of
-    * duplicating, and `provenanceDir` runs the probe ONCE and derives
-    * both the keep-set and the best-match drop audit from the same
-    * persisted match relation. */
+    * corpus-novel vectors land in the sink. The index is resolved by
+    * reference per trigger (hot-swappable between triggers), and
+    * `provenanceDir` records the best-match drop audit from the same
+    * match relation as the keep-set. */
   def startSemanticDedupIngest(
       vecStream: DataFrame,
-      index: graft.extensions.Similarity.IvfIndex,
+      index: Similarity.IvfIndex,
       idCol: String, vecCol: String,
       sinkDir: String, checkpointDir: String,
       eps: Double = 0.95,
       maxCellSize: Int = 100000,
-      availableNow: Boolean = true,
-      batchPeriodSecs: Long = 10L,
+      trigger: Trigger = Trigger.AvailableNow(),
       provenanceDir: Option[String] = None): StreamingQuery =
-    vecStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        provenanceDir match {
-          case None =>
-            graft.extensions.Similarity.semanticDedupBatch(
-              index, batch, idCol, vecCol, eps, maxCellSize)
-              .write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
-          case Some(pd) =>
-            // the probe's (idCol, corpus_id, cosine) matches under the
-            // shared (batch_id, corpus_id, score) audit contract
-            val matches = graft.extensions.Similarity.semanticDupAgainstIndex(
-              index, batch, idCol, vecCol, eps, maxCellSize)
-              .withColumnRenamed(idCol, "batch_id")
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              graft.extensions.Dedup.keepSetFromMatches(batch, matches, idCol)
-                .write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
-              graft.extensions.Dedup.provenanceFromMatches(matches, idCol, "cosine")
-                .write.mode("overwrite").parquet(s"$pd/batch=$batchId")
-            } finally { matches.unpersist(false); () }
-        }
-        ()
-      }
-      .trigger(batchTrigger(availableNow, batchPeriodSecs))
-      .start()
+    everyBatch(vecStream, checkpointDir, trigger) { (batch, batchId) =>
+      keepAndAudit(Similarity.semanticDupAgainstIndex(
+          index, batch, idCol, vecCol, eps, maxCellSize),
+        sinkDir, provenanceDir, batchId)(
+        Similarity.semanticKeepSet(batch, _, idCol),
+        // the (idCol, corpus_id, cosine) matches under the shared
+        // (batch_id, corpus_id, score) audit contract
+        m => Dedup.provenanceFromMatches(
+          m.withColumnRenamed(idCol, "batch_id"), idCol, "cosine"))
+    }
 
   /** Streaming RETRACT ingest — the DELETE half of CDC-driven index
     * maintenance, completing the loop the accept legs opened: a change
@@ -590,8 +486,7 @@ object CdcStream {
     * subtraction is not idempotent under replay, exactly the
     * double-count class the accept legs' offline-fold contract guards
     * against — so shrinking an index is the same idempotent compaction
-    * step as growing one ([[compact]] with only `retractDir`), and the
-    * per-batch `batch=<id>` OVERWRITE keeps the sink itself replay-safe.
+    * step as growing one ([[compact]] with only `retractDir`).
     * AMENDED rows are not this leg's job: an update is remove-then-add —
     * in batch the refresh loop
     * ([[graft.extensions.CorpusOps.refreshIndex]]) expresses it off a
@@ -604,20 +499,8 @@ object CdcStream {
       opCol: String, deleteOp: String,
       keepCols: Seq[String],
       sinkDir: String, checkpointDir: String,
-      availableNow: Boolean = true,
-      batchPeriodSecs: Long = 10L): StreamingQuery =
-    changeStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // unconditional overwrite, even for a batch with no deletes —
-        // the same replay-reconciliation argument as the accept legs
-        batch.filter(col(opCol) === deleteOp)
-          .select(keepCols.map(col): _*)
-          .write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
-        ()
-      }
-      .trigger(batchTrigger(availableNow, batchPeriodSecs))
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    opIngest(changeStream, opCol, deleteOp, keepCols, sinkDir, checkpointDir, trigger)
 
   /** Streaming UPSERT ingest — the AMENDED-row leg of CDC-driven index
     * maintenance, the last op class after the accept (insert) and
@@ -629,34 +512,33 @@ object CdcStream {
     * micro-batch's update ops (both images: `keepCols` names the new
     * image incl. the id plus whatever old-image columns downstream
     * retraction needs, e.g. `old_text` for BM25) into a
-    * batch-partitioned sink, per-batch OVERWRITE replay contract, and
-    * the upsert fold ([[compact]]) applies remove-then-extend offline as
-    * one idempotent compaction step. The batch partition column is the
-    * ORDER the folds need: an id amended twice in one compaction window
-    * must retract what the index actually holds (the EARLIEST old
-    * image) and serve what the source last said (the LATEST new image)
-    * — intermediate images are skipped entirely, exactly as a rebuild
-    * on the final state would. Within one micro-batch the source must
-    * emit at most one update per id (the standard CDC log-reader
-    * contract; pre-compact per key upstream otherwise) — batch order is
-    * the only ordering the sink stores. */
+    * batch-partitioned sink, and the upsert fold ([[compact]]) applies
+    * remove-then-extend offline as one idempotent compaction step. The
+    * batch partition column is the ORDER the folds need: an id amended
+    * twice in one compaction window must retract what the index
+    * actually holds (the EARLIEST old image) and serve what the source
+    * last said (the LATEST new image) — intermediate images are skipped
+    * entirely, exactly as a rebuild on the final state would. Within one
+    * micro-batch the source must emit at most one update per id (the
+    * standard CDC log-reader contract; pre-compact per key upstream
+    * otherwise) — batch order is the only ordering the sink stores. */
   def startUpsertIngest(
       changeStream: DataFrame,
       opCol: String, updateOp: String,
       keepCols: Seq[String],
       sinkDir: String, checkpointDir: String,
-      availableNow: Boolean = true,
-      batchPeriodSecs: Long = 10L): StreamingQuery =
-    changeStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.filter(col(opCol) === updateOp)
-          .select(keepCols.map(col): _*)
-          .write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
-        ()
-      }
-      .trigger(batchTrigger(availableNow, batchPeriodSecs))
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    opIngest(changeStream, opCol, updateOp, keepCols, sinkDir, checkpointDir, trigger)
+
+  /** The retract and upsert legs: each micro-batch's `op` rows, projected
+    * to `keepCols`. */
+  private def opIngest(changeStream: DataFrame, opCol: String, op: String,
+                       keepCols: Seq[String], sinkDir: String,
+                       checkpointDir: String, trigger: Trigger): StreamingQuery =
+    everyBatch(changeStream, checkpointDir, trigger) { (batch, batchId) =>
+      writeBatch(batch.filter(col(opCol) === op).select(keepCols.map(col): _*),
+        sinkDir, batchId)
+    }
 
   /** ONE stream, ALL THREE CDC op classes — the production maintenance
     * shape. The single-leg ingests ([[startCorpusDedupIngest]] /
@@ -670,26 +552,25 @@ object CdcStream {
     *  - UPDATES land BOTH row images in `upsertDir`, bypassing the gate
     *    (the new image would match its own stale index entry and be
     *    eaten — the [[startUpsertIngest]] rationale);
-    *  - DELETES land their old row image in `retractDir`.
+    *  - DELETES land their old row image in `retractDir`. A feed's delete
+    *    may carry its image in the row columns (`textCol`) or, in the
+    *    before/after-image (Debezium) shape, in `oldTextCol`; either is
+    *    accepted.
     *
     * The micro-batch is persisted once and feeds all three routes, so
     * the change log is read ONCE per trigger; the insert leg's index
     * probe is the only non-narrow work — the update/delete legs are
-    * pure projections. All three sinks share the per-batch `batch=<id>`
-    * OVERWRITE replay contract (each route writes its subdir
-    * unconditionally, even when empty — the replay-reconciliation
-    * argument of the accept legs), and downstream ONE net-effect
-    * compaction versions the index off all three trees:
-    * [[compact]], for the text-gram index and the BM25 stats alike. CDC
-    * guarantees at most one event per id per TRIGGER, but a compaction
-    * window spans many triggers, and an id can cross op classes
-    * between them (insert then update, update then delete, delete then
-    * re-insert) — the per-leg folds assume class-disjoint id sets and
-    * would violate
-    * extend's append-only contract on such a window; the net-effect
-    * compaction reduces every id to one net operation instead. Use the
-    * per-leg folds ([[compactAccepted]], [[compact]] with one tree) only
-    * when compaction cadence guarantees class-disjoint windows.
+    * pure projections. Downstream ONE net-effect compaction versions the
+    * index off all three trees: [[compact]], for the text-gram index and
+    * the BM25 stats alike. CDC guarantees at most one event per id per
+    * TRIGGER, but a compaction window spans many triggers, and an id can
+    * cross op classes between them (insert then update, update then
+    * delete, delete then re-insert) — the per-leg folds assume
+    * class-disjoint id sets and would violate extend's append-only
+    * contract on such a window; the net-effect compaction reduces every
+    * id to one net operation instead. Use the per-leg folds
+    * ([[compactAccepted]], [[compact]] with one tree) only when
+    * compaction cadence guarantees class-disjoint windows.
     *
     * OPERATING CONTRACT — restart (or re-resolve) after every
     * compaction: the novelty gate and the reinsert router classify
@@ -706,7 +587,7 @@ object CdcStream {
     * swap-between-triggers rhythm [[compactAccepted]] documents
     * for the single-leg ingests. The versioned-fold guards protect the
     * FOLDS against a stale handle; for a SAVED handle the ROUTING side
-    * is now mechanized per trigger by `onCompaction`
+    * is mechanized per trigger by `onCompaction`
     * ([[CompactionPolicy]]): the default probes the saved tree's stamp
     * (O(1)) each trigger and refuses with the named `restart required`
     * error the moment the version moves, and
@@ -716,7 +597,7 @@ object CdcStream {
     * in CdcStreamSpec ("stale frozen index", "restart required"). */
   def startCdcMaintenanceIngest(
       changeStream: DataFrame,
-      index: graft.extensions.Dedup.CorpusIndex,
+      index: Dedup.CorpusIndex,
       idCol: String, textCol: String, oldTextCol: String,
       opCol: String,
       acceptDir: String, upsertDir: String, retractDir: String,
@@ -724,77 +605,79 @@ object CdcStream {
       insertOp: String = "insert", updateOp: String = "update",
       deleteOp: String = "delete",
       threshold: Double = 0.5,
-      availableNow: Boolean = true,
-      batchPeriodSecs: Long = 10L,
-      /** Refuse deletes carrying NEITHER row image (default). A feed
-        * that emits deletes by key only is usable when the retract
-        * sink feeds ONLY id-keyed retraction (the text-gram/vector
-        * anti-joins — the text net fold handles NULL images by
-        * construction): pass false to admit such rows. The BM25 folds
-        * still refuse NULL images at compaction regardless, so the
-        * opt-out cannot reopen the silent-nDocs-drift path — it only
-        * moves the refusal from the trigger to the (BM25) fold.
-        * (Moved to the parameter tail, ADVICE r18: new optionals
-        * append, so positional `availableNow`/`batchPeriodSecs`
-        * callers keep their meaning.) */
+      trigger: Trigger = Trigger.AvailableNow(),
+      /** Refuse deletes carrying NEITHER row image (default) — BM25
+        * retraction of a NULL image decrements nDocs while subtracting
+        * no terms, so the stream fails at the trigger, not many
+        * triggers later at a compaction. A feed that emits deletes by
+        * key only is usable when the retract sink feeds ONLY id-keyed
+        * retraction (the text-gram/vector anti-joins — the text net
+        * fold handles NULL images by construction): pass false to admit
+        * such rows. The BM25 folds still refuse NULL images at
+        * compaction regardless, so the opt-out cannot reopen the
+        * silent-nDocs-drift path — it only moves the refusal from the
+        * trigger to the (BM25) fold. */
       requireDeleteImages: Boolean = true,
-      onCompaction: CompactionPolicy = FailStreamOnCompaction): StreamingQuery = {
+      onCompaction: CompactionPolicy = FailStreamOnCompaction): StreamingQuery =
+    maintenanceIngest(changeStream, index, idCol, opCol,
+      (insertOp, updateOp, deleteOp), (acceptDir, upsertDir, retractDir),
+      checkpointDir, trigger, onCompaction)(
+      served = _.docStats, insertDrops = Seq(opCol, oldTextCol),
+      gate = (novel, ix) => Dedup.dedupAgainstCorpus(
+        novel, ix, idCol, textCol, threshold = threshold),
+      updated = Seq(col(idCol), col(textCol), col(oldTextCol)),
+      reinserted = Seq(col(idCol), col(textCol),
+        lit(null).cast("string").as(oldTextCol)),
+      retired = { (deletes, batchId) =>
+        val dels = deletes.select(col(idCol),
+          coalesce(col(textCol), col(oldTextCol)).as(textCol))
+        // one skinny limit(1) probe per trigger on the persisted batch
+        if (requireDeleteImages)
+          requireNonNullImages(dels, idCol, textCol,
+            s"maintenance ingest delete route (micro-batch $batchId)")
+        dels
+      })
+
+  /** The per-trigger routing both maintenance ingests share. The handle is
+    * resolved under `onCompaction` and the micro-batch persisted once. Of
+    * its inserts (less `insertDrops`), those whose id the index does not
+    * yet serve (`served`' `doc_id`) face the novelty `gate` into the
+    * accept tree. RE-INSERTS — an id the index already serves (a doc
+    * deleted earlier in the window coming back, at the extreme with
+    * byte-identical content) — must NOT face the gate: it would match the
+    * doc's own still-frozen entry and silently eat it. They go to the
+    * upsert tree as `reinserted`, next to the updates as `updated`
+    * (remove-then-add is exactly reinsert semantics); the id split is one
+    * broadcast-batch semi/anti join against the index's skinny per-id
+    * relation. The deletes go to the retract tree as `retired`. */
+  private def maintenanceIngest[I <: Versioned](
+      changeStream: DataFrame, index: I, idCol: String, opCol: String,
+      ops: (String, String, String), dirs: (String, String, String),
+      checkpointDir: String, trigger: Trigger, onCompaction: CompactionPolicy)(
+      served: I => DataFrame, insertDrops: Seq[String],
+      gate: (DataFrame, I) => DataFrame,
+      updated: Seq[Column], reinserted: Seq[Column],
+      retired: (DataFrame, Long) => DataFrame)(
+      implicit fam: IndexFamily[I]): StreamingQuery = {
+    val (insertOp, updateOp, deleteOp) = ops
+    val (acceptDir, upsertDir, retractDir) = dirs
     val handle = new java.util.concurrent.atomic.AtomicReference(index)
-    changeStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ix = resolveHandle(batch.sparkSession, handle, onCompaction)
-        val ep = epochSuffix(onCompaction, ix.version)
-        val b = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val ins = b.filter(col(opCol) === insertOp).drop(opCol, oldTextCol)
-          // RE-INSERTS — inserts whose id the serving index already
-          // holds (a doc deleted earlier in this window coming back, at
-          // the extreme with byte-identical content) — must NOT face
-          // the novelty gate: the gate would match the doc's own
-          // still-frozen entry and silently eat it, permanently losing
-          // the doc from the index (the delete→reinsert hole). Route
-          // them to the UPSERT sink instead (remove-then-add is exactly
-          // reinsert semantics; their old image is the window's earlier
-          // retract event, which the BM25 net fold's earliest-old rule
-          // picks up — a reinsert without a preceding delete is a
-          // malformed feed). The id split is one broadcast-batch
-          // semi/anti join against the index's skinny per-doc relation.
-          val known = ix.docStats.select(col("doc_id").as(idCol))
-          graft.extensions.Dedup.dedupAgainstCorpus(
-            ins.join(known, Seq(idCol), "left_anti"),
-            ix, idCol, textCol, threshold = threshold)
-            .write.mode("overwrite").parquet(s"$acceptDir$ep/batch=$batchId")
-          b.filter(col(opCol) === updateOp)
-            .select(col(idCol), col(textCol), col(oldTextCol))
-            .unionByName(ins.join(known, Seq(idCol), "left_semi")
-              .select(col(idCol), col(textCol),
-                lit(null).cast("string").as(oldTextCol)))
-            .write.mode("overwrite").parquet(s"$upsertDir$ep/batch=$batchId")
-          // a delete's old row image: some feeds carry it in the row
-          // columns (textCol), before/after-image feeds (Debezium
-          // shape: after = NULL on delete) carry it in oldTextCol —
-          // coalesce accepts both conventions. A delete carrying
-          // NEITHER image refuses loudly here (failing the stream)
-          // instead of writing a NULL-image retract row: BM25
-          // retraction of a NULL image decrements nDocs while
-          // subtracting no terms, and by the time a compaction's own
-          // guard caught it the feed would be many triggers further on.
-          // One skinny limit(1) probe per trigger on the persisted
-          // batch.
-          val dels = b.filter(col(opCol) === deleteOp)
-            .select(col(idCol),
-              coalesce(col(textCol), col(oldTextCol)).as(textCol))
-          if (requireDeleteImages)
-            requireNonNullImages(dels, idCol, textCol,
-              s"maintenance ingest delete route (micro-batch $batchId)")
-          dels.write.mode("overwrite").parquet(s"$retractDir$ep/batch=$batchId")
-        } finally { b.unpersist(false); () }
-        ()
-      }
-      .trigger(batchTrigger(availableNow, batchPeriodSecs))
-      .start()
+    everyBatch(changeStream, checkpointDir, trigger) { (batch, batchId) =>
+      val ix = resolveHandle(batch.sparkSession, handle, onCompaction)
+      val ep = epochSuffix(onCompaction, ix.version)
+      val b = batch.persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val ins = b.filter(col(opCol) === insertOp).drop(insertDrops: _*)
+        val known = served(ix).select(col("doc_id").as(idCol))
+        writeBatch(gate(ins.join(known, Seq(idCol), "left_anti"), ix),
+          s"$acceptDir$ep", batchId)
+        writeBatch(b.filter(col(opCol) === updateOp).select(updated: _*)
+          .unionByName(ins.join(known, Seq(idCol), "left_semi").select(reinserted: _*)),
+          s"$upsertDir$ep", batchId)
+        writeBatch(retired(b.filter(col(opCol) === deleteOp), batchId),
+          s"$retractDir$ep", batchId)
+      } finally { b.unpersist(false); () }
+    }
   }
 
   /** Close the loop between the streaming ingest and index versioning:
@@ -1086,7 +969,7 @@ object CdcStream {
             max_by(col("kind"), col("batch")).as("__last_kind"),
             min_by(col("__old"), col("batch")).as("__first_old"),
             max_by(col("__img"), col("batch")).as("__last_img"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            .persist(StorageLevel.MEMORY_AND_DISK)
           try {
             val retractDocs = net.filter(col("__first_kind") =!= "accept")
               .select(col(idCol), col("__first_old").as(textCol))
@@ -1239,6 +1122,7 @@ object CdcStream {
       }
     }
     refuseMarked()
+    // the layout [[writeBatch]] writes
     val hasRows = fs.exists(root) &&
       Option(fs.globStatus(new HPath(root, "batch=*/part-*")))
         .exists(_.nonEmpty)
@@ -1401,15 +1285,22 @@ object CdcStream {
       .flatMapGroupsWithState[Set[Long], UserEvent](
         OutputMode.Append(), GroupStateTimeout.NoTimeout) {
         (_: Long, rows: Iterator[UserEvent], state: GroupState[Set[Long]]) =>
-          var s = state.getOption.getOrElse(Set.empty[Long])
-          val out = Vector.newBuilder[UserEvent]
-          rows.foreach { e =>
-            val id = eventKey(e)
-            if (!s(id)) { s += id; out += e }
-          }
-          state.update(s)
-          out.result().iterator
+          emitUnseen(rows, state, eventKey)
       }
+  }
+
+  /** The rows whose `eventKey` the key's seen-set lacks, in arrival order;
+    * each emitted key joins the set. */
+  private def emitUnseen(rows: Iterator[UserEvent], state: GroupState[Set[Long]],
+                         eventKey: UserEvent => Long): Iterator[UserEvent] = {
+    var s = state.getOption.getOrElse(Set.empty[Long])
+    val out = Vector.newBuilder[UserEvent]
+    rows.foreach { e =>
+      val id = eventKey(e)
+      if (!s(id)) { s += id; out += e }
+    }
+    state.update(s)
+    out.result().iterator
   }
 
   /** Production form of [[dedupStream]]: `EventTimeTimeout` evicts a
@@ -1439,18 +1330,12 @@ object CdcStream {
             state.remove()
             Iterator.empty
           } else {
-            var s = state.getOption.getOrElse(Set.empty[Long])
-            val out = Vector.newBuilder[UserEvent]
-            rows.foreach { e =>
-              val id = eventKey(e)
-              if (!s(id)) { s += id; out += e }
-            }
-            state.update(s)
+            val out = emitUnseen(rows, state, eventKey)
             // timeout fires once the watermark advances TTL past where it
             // is now (must be set anew each invocation — timeouts clear on
             // every state update)
             state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + stateTtlMs)
-            out.result().iterator
+            out
           }
       }
   }

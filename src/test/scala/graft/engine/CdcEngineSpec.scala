@@ -23,6 +23,16 @@ class CdcEngineSpec extends AnyFunSuite {
       concurrency = 2)
   }
 
+  test("fromConfig builds from the default config and refuses OUTPUT_TYPE=FILE") {
+    val (sink, state) = (TestSpark.tmpDir("graft-conf-sink"), TestSpark.tmpDir("graft-conf-state"))
+    val eng = CdcEngine.fromConfig(spark, TestSpark.Sf0001, sink, state,
+      GraftConfig.fromEnv(Map.empty))
+    assert(eng.sinkDir == sink)
+    val err = intercept[IllegalArgumentException](CdcEngine.fromConfig(spark,
+      TestSpark.Sf0001, sink, state, GraftConfig.fromEnv(Map("OUTPUT_TYPE" -> "FILE"))))
+    assert(err.getMessage.contains("OUTPUT_TYPE"), err.getMessage)
+  }
+
   test("seed -> ticks capture the whole table exactly once; view = recompute") {
     val eng = mkEngine()
     eng.seed(Seq(("events", "ts", Some("event_id"))))

@@ -188,7 +188,8 @@ class IvfPqSpec extends AnyFunSuite {
     // to the vector and the codebooks model a far smaller ball. The
     // clustered fixture (19 planted clusters, within-cluster spread
     // <= 10 in one dim vs centers ~128 apart) is exactly that regime.
-    // Measured sweep (Scratch resregime, sf0.001): at nlist=19, m=8,
+    // Measured sweep (sf0.001, PLANS.md "Residual IVFADC demonstrated in
+    // its regime"): at nlist=19, m=8,
     // ksub=16, nprobe=2 — rerank 10: 0.328 vs 0.676; rerank 20: 0.520
     // vs 0.816; rerank 50: 0.836 vs 0.948. Gate at rerank=20 with
     // generous slack under the measured 0.296 margin.

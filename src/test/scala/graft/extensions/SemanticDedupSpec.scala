@@ -11,8 +11,8 @@ import graft.TestSpark
   * The nlist=1 tests make clustering trivial (one cell) so the pair
   * plumbing and both keep rules are checked against hand-computable
   * truth; the fixture-scale cell-pruning behavior (pairs == brute force
-  * because planted pairs co-cell at nlist=8) is measured by `Scratch
-  * semcell` and hash-checked by the dedup_semantic_* oracles.
+  * because planted pairs co-cell at nlist=8) is measured in PLANS.md
+  * "SemDeDup" and hash-checked by the dedup_semantic_* oracles.
   */
 class SemanticDedupSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark

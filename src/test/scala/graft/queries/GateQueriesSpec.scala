@@ -77,7 +77,7 @@ class GateQueriesSpec extends AnyFunSuite {
   test("sim_topk_ivfpq equals brute-force top-1 on the planted fixture while pruning AND compressing") {
     // the premise of the round-14 oracle graduation: nprobe=1 over the
     // nudge-orthogonal explicit 4-cell quantizer scans ~25% of the
-    // corpus (measured, Scratch ivfpqplanted) in 32x-compressed codes,
+    // corpus (measured, PLANS.md "IVF-PQ composition") in 32x-compressed codes,
     // and each query's 0.9988-cosine planted copy co-cells with it
     // STRUCTURALLY (assignment ignores the nudged component) — so the
     // true top-1 survives the ADC cut and wins the exact re-rank. A

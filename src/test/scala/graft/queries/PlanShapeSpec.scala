@@ -265,9 +265,10 @@ class PlanShapeSpec extends AnyFunSuite {
     // aggregates and the value-buffering aggregates (exact percentile
     // buffers) in SEPARATE subplans joined at the end: mixing them makes
     // Catalyst plan an Expand that pushes every row through the
-    // percentile buffers twice (measured 4.4 s -> 2.0 s cold in `Scratch
-    // sketch`). At 100 TB the Expand doubles the widest shuffle in the
-    // query. Pin the shape so the regression can't silently return.
+    // percentile buffers twice (measured 4.4 s -> 2.0 s cold, PLANS.md
+    // "Measurements the code comments cite"). At 100 TB the Expand
+    // doubles the widest shuffle in the query. Pin the shape so the
+    // regression can't silently return.
     for (q <- Seq("q_sketch_accuracy", "q_approx_sketch")) {
       val plan = finalPlan(q)
       assert(nodeCount(plan, "Expand") == 0,

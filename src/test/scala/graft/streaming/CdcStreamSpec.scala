@@ -373,6 +373,29 @@ class CdcStreamSpec extends AnyFunSuite {
       q2.awaitTermination()
       assert(spark.read.parquet(sink).select("vec_id").as[Long].collect().toSet
         == expected, "full replay must overwrite, not duplicate")
+
+      // with an audit dir: the same keep-set, the batch operator's
+      // provenance beside it, and a replay that changes neither sink
+      val (auditSink, prov) = (TestSpark.tmpDir("graft-emb-stream-asink"),
+        TestSpark.tmpDir("graft-emb-stream-prov"))
+      def audited(ckpt: String): (Seq[String], Seq[String]) = {
+        CdcStream.startEmbeddingDedupIngest(
+          spark.readStream.schema(spark.read.parquet(src).schema).parquet(src),
+          index, "vec_id", "embedding", auditSink, TestSpark.tmpDir(ckpt),
+          threshold = 0.9, provenanceDir = Some(prov)).awaitTermination()
+        def rows(dir: String) =
+          spark.read.parquet(dir).collect().map(_.mkString("|")).toSeq.sorted
+        (rows(auditSink), rows(prov))
+      }
+      val (keptRows, provRows) = audited("graft-emb-stream-ackpt")
+      assert(spark.read.parquet(auditSink).select("vec_id").as[Long].collect().toSet
+        == kept, "the audited keep-set equals the unaudited one")
+      val audit = spark.read.parquet(prov).select("vec_id", "corpus_id", "cosine")
+        .as[(Long, Long, Double)].collect().toSet
+      assert(audit.nonEmpty && audit == Dedup.embeddingDupProvenance(batch, index,
+        "vec_id", "embedding", threshold = 0.9).as[(Long, Long, Double)].collect().toSet)
+      assert(audited("graft-emb-stream-ackpt2") == ((keptRows, provRows)),
+        "a replay leaves both sinks unchanged")
     } finally index.unpersist()
   }
 
@@ -662,13 +685,6 @@ class CdcStreamSpec extends AnyFunSuite {
       spark.read.parquet(s"$sink/events_cdc").drop("snapshot_dt"),
       Seq("event_id"), "snapshot_tm", Seq("ts"))
     assert(after.except(view).isEmpty && view.except(after).isEmpty)
-  }
-
-  test("T8 batch period drives the continuous-mode trigger") {
-    assert(CdcStream.batchTrigger(availableNow = true, 99L) ==
-      Trigger.AvailableNow())
-    assert(CdcStream.batchTrigger(availableNow = false, 7L) ==
-      Trigger.ProcessingTime("7 seconds"))
   }
 
   test("per-batch capture time is recorded once and stable across replays") {
@@ -1963,7 +1979,7 @@ class CdcStreamSpec extends AnyFunSuite {
       spark.readStream.schema(spark.read.parquet(src).schema).parquet(src),
       loaded, "doc_id", "text", "old_text", "op",
       a, u, r, TestSpark.tmpDir("graft-mech-ckpt"),
-      availableNow = false, batchPeriodSecs = 1L)
+      trigger = Trigger.ProcessingTime("1 second"))
     try {
       q.processAllAvailable()
       assert(spark.read.parquet(a).filter(col("doc_id") === 900L).count() === 1L)
@@ -2009,7 +2025,7 @@ class CdcStreamSpec extends AnyFunSuite {
       spark.readStream.schema(spark.read.parquet(src2).schema).parquet(src2),
       loaded2, "doc_id", "text", "old_text", "op",
       a2, u2, r2, TestSpark.tmpDir("graft-mech2-ckpt"),
-      availableNow = false, batchPeriodSecs = 1L,
+      trigger = Trigger.ProcessingTime("1 second"),
       onCompaction = CdcStream.ReresolveOnCompaction)
     try {
       q2.processAllAvailable()
@@ -2063,7 +2079,7 @@ class CdcStreamSpec extends AnyFunSuite {
       spark.readStream.schema(spark.read.parquet(src3).schema).parquet(src3),
       gate, "vec_id", "embedding", "op", a3, u3, r3,
       TestSpark.tmpDir("graft-mech3-ckpt"),
-      availableNow = false, batchPeriodSecs = 1L,
+      trigger = Trigger.ProcessingTime("1 second"),
       onCompaction = CdcStream.ReresolveOnCompaction)
     try {
       q3.processAllAvailable()
