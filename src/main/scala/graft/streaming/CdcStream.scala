@@ -626,6 +626,9 @@ object CdcStream {
       gate = (novel, ix) => Dedup.dedupAgainstCorpus(
         novel, ix, idCol, textCol, threshold = threshold),
       updated = Seq(col(idCol), col(textCol), col(oldTextCol)),
+      // a reinsert's old image is the window's earlier retract event,
+      // which the BM25 net fold's earliest-old rule picks up (a reinsert
+      // with no preceding delete is a malformed feed)
       reinserted = Seq(col(idCol), col(textCol),
         lit(null).cast("string").as(oldTextCol)),
       retired = { (deletes, batchId) =>
@@ -640,9 +643,9 @@ object CdcStream {
 
   /** The per-trigger routing both maintenance ingests share. The handle is
     * resolved under `onCompaction` and the micro-batch persisted once. Of
-    * its inserts (less `insertDrops`), those whose id the index does not
-    * yet serve (`served`' `doc_id`) face the novelty `gate` into the
-    * accept tree. RE-INSERTS — an id the index already serves (a doc
+    * its inserts (less `insertDrops`), those whose id is not among the
+    * `doc_id`s of `served` face the novelty `gate` into the accept
+    * tree. RE-INSERTS — an id the index already serves (a doc
     * deleted earlier in the window coming back, at the extreme with
     * byte-identical content) — must NOT face the gate: it would match the
     * doc's own still-frozen entry and silently eat it. They go to the
