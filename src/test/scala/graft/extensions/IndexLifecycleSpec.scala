@@ -166,7 +166,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
       }
     }
 
-  test("an index whose every id was removed saves and loads with zero rows") {
+  test("an index whose every id was removed saves and loads as before") {
     // PQ's codes relation is unpartitioned; IVF's and IVF-PQ's relations
     // are cell-partitioned, where an empty one holds no cell directory
     Seq[IndexFamily[_ <: Versioned]](IndexFamily.Pq, IndexFamily.Ivf, IndexFamily.IvfPq)
