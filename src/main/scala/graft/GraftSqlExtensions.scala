@@ -163,7 +163,7 @@ object GraftSqlExtensions {
         .split(",").toSeq.map(_.trim).filter(_.nonEmpty)
       plan(graft.extensions.Search.bm25TopKFitted(
         spark.table(strArg(fn, exprs.head, "corpusTable")),
-        graft.extensions.Search.loadBm25Stats(spark,
+        graft.extensions.IndexFamily.Bm25.load(spark,
           strArg(fn, exprs(3), "statsDir")),
         strArg(fn, exprs(1), "idCol"), strArg(fn, exprs(2), "textCol"),
         terms,
@@ -176,7 +176,7 @@ object GraftSqlExtensions {
       val spark = SparkSession.active
       plan(graft.extensions.Dedup.dedupAgainstCorpus(
         spark.table(strArg(fn, exprs.head, "batchTable")),
-        graft.extensions.Dedup.loadCorpusIndex(spark,
+        graft.extensions.IndexFamily.Text.load(spark,
           strArg(fn, exprs(3), "indexDir")),
         strArg(fn, exprs(1), "idCol"), strArg(fn, exprs(2), "textCol"),
         threshold =
@@ -211,7 +211,7 @@ object GraftSqlExtensions {
       arity(fn, exprs, 4, 5, 6, 7)
       val spark = SparkSession.active
       plan(graft.extensions.Similarity.ivfPqProbe(
-        graft.extensions.Similarity.loadIvfPqIndex(spark,
+        graft.extensions.IndexFamily.IvfPq.load(spark,
           strArg(fn, exprs(3), "indexDir")),
         spark.table(strArg(fn, exprs.head, "queryTable")),
         strArg(fn, exprs(1), "idCol"), strArg(fn, exprs(2), "vecCol"),
@@ -229,7 +229,7 @@ object GraftSqlExtensions {
       arity(fn, exprs, 4, 5)
       val spark = SparkSession.active
       plan(graft.extensions.Similarity.lshProbe(
-        graft.extensions.Similarity.loadLshIndex(spark,
+        graft.extensions.IndexFamily.Lsh.load(spark,
           strArg(fn, exprs(3), "indexDir")),
         spark.table(strArg(fn, exprs.head, "queryTable")),
         strArg(fn, exprs(1), "idCol"), strArg(fn, exprs(2), "vecCol"),
@@ -243,7 +243,7 @@ object GraftSqlExtensions {
       arity(fn, exprs, 4, 5, 6)
       val spark = SparkSession.active
       plan(graft.extensions.Similarity.pqProbe(
-        graft.extensions.Similarity.loadPqIndex(spark,
+        graft.extensions.IndexFamily.Pq.load(spark,
           strArg(fn, exprs(3), "indexDir")),
         spark.table(strArg(fn, exprs.head, "queryTable")),
         strArg(fn, exprs(1), "idCol"), strArg(fn, exprs(2), "vecCol"),

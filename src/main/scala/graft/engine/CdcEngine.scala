@@ -15,6 +15,7 @@ import graft.policy.WatermarkPolicy
 import graft.policy.WatermarkPolicy.{Advance, Decision, PolicyConfig, Skip}
 import graft.sinks.AppendSink
 import graft.state.{StateStore, TableState}
+import graft.util.SmallFile
 
 /**
  * The CDC control loop — the reference's `-seed` / `-cdc` flows
@@ -138,10 +139,17 @@ final class CdcEngine(
     * end of engine life; ticks must not run after. The pool's threads are
     * daemons, so skipping close() never blocks JVM exit — this exists for
     * long-lived services that build many engines. */
-  def close(): Unit = {
-    capturePool.shutdown()
-    state.close() // drop the retired state dir's JVM-wide catalog memo entry
-  }
+  def close(): Unit = capturePool.shutdown()
+
+  /** The tables this engine's DSN owns, less the excluded ones: a table
+    * added to the exclusion list after seeding is neither captured nor
+    * described (F3, `seed.go:42-50` pairing). */
+  private def tracked(): Seq[TableState] =
+    state.readForDsn(dsn).collect().toSeq.filterNot(t => excludedTables(t.name))
+
+  private def tableState(table: String): TableState =
+    state.readForDsn(dsn).collect().find(_.name == table)
+      .getOrElse(sys.error(s"unknown table $table"))
 
   /** One capture tick over all tracked tables (one `cdc()` pass).
     *
@@ -155,11 +163,7 @@ final class CdcEngine(
     * re-runs that window — the same at-least-once window the per-table
     * form had between append and commit; W1 dedup absorbs it.) */
   def tick(now: Instant = Instant.now()): Seq[TickResult] = {
-    // F3: exclusion also guards capture, so a table added to the list
-    // after seeding stops being captured (`seed.go:42-50` pairing)
-    val tracked = state.readForDsn(dsn).collect().toSeq
-      .filterNot(t => excludedTables(t.name))
-    val futures = tracked.map { t =>
+    val futures = tracked().map { t =>
       Future(captureOne(t, now)).transform(scala.util.Success(_))
     }
     val outcomes = Await.result(Future.sequence(futures), Duration.Inf)
@@ -264,9 +268,7 @@ final class CdcEngine(
     * but the current version when no reader can be live. */
   def vacuumCompactedState(retain: Int = 2): Unit =
     if (maintainCurrentState)
-      state.readForDsn(dsn).collect().toSeq
-        .filterNot(t => excludedTables(t.name))
-        .filter(_.pKeyColumn.isDefined)
+      tracked().filter(_.pKeyColumn.isDefined)
         .foreach(t => CompactedState.vacuum(spark, compactedStateDir(t.name), retain))
 
   /**
@@ -278,9 +280,7 @@ final class CdcEngine(
   def dumpStreamConfigs(): Seq[String] = {
     val fs = new org.apache.hadoop.fs.Path(sinkDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    // same exclusion as tick(): never describe a pipeline that won't run
-    state.readForDsn(dsn).collect().toSeq
-      .filterNot(t => excludedTables(t.name)).map { t =>
+    tracked().map { t =>
       def js(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
       val mungeJson = munge match {
         case Some(m) =>
@@ -301,9 +301,7 @@ final class CdcEngine(
            |}""".stripMargin
       val path = new org.apache.hadoop.fs.Path(
         s"$sinkDir/stream_configs/${dsn}_${t.name}.json")
-      fs.mkdirs(path.getParent)
-      val out = fs.create(path, true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
+      SmallFile.replace(fs, path, content.getBytes("UTF-8"))
       path.toString
     }
   }
@@ -369,8 +367,7 @@ final class CdcEngine(
     * compacted path must agree with this by construction (fold equivalence
     * of `max_by`); kept public as the correctness oracle for it. */
   def recomputeCurrentState(table: String): DataFrame = {
-    val t = state.readForDsn(dsn).collect().find(_.name == table)
-      .getOrElse(sys.error(s"unknown table $table"))
+    val t = tableState(table)
     val pk = t.pKeyColumn.getOrElse(sys.error(s"no pkey for $table; view requires one"))
     CurrentState.latestByKeyAgg(
       cdcLog(table).drop("snapshot_dt"), Seq(pk), "snapshot_tm", Seq(t.nmsColumn))
@@ -395,8 +392,7 @@ final class CdcEngine(
     * silently return no rows. */
   def currentStateLookup(table: String, pkValue: Any): Option[DataFrame] = {
     require(maintainCurrentState, s"lookup requires maintainCurrentState = true")
-    val t = state.readForDsn(dsn).collect().find(_.name == table)
-      .getOrElse(sys.error(s"unknown table $table"))
+    val t = tableState(table)
     val pk = t.pKeyColumn.getOrElse(sys.error(s"no pkey for $table; lookup requires one"))
     val pkType = t.schemaJson.flatMap { j =>
       org.apache.spark.sql.types.DataType.fromJson(j) match {

@@ -437,9 +437,6 @@ object Dedup {
       postings.unpersist(false); shingles.unpersist(false)
       dfCounts.unpersist(false); docStats.unpersist(false); ()
     }
-    /** Retire this corpus version in ONE call: unpersist the session
-      * pins AND delete the on-disk tree ([[IndexFamily.close]]). */
-    def close(): Unit = IndexFamily.Text.close(this)
   }
 
   /** Build the [[CorpusIndex]] for [[dedupAgainstCorpus]]. One pass over
@@ -474,26 +471,6 @@ object Dedup {
         Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_grams"),
         coalesce(col("__ni"), lit(0L)).as("n_indexed"))
-
-  /** Persist a [[CorpusIndex]] to storage so it outlives the session —
-    * the production lifecycle: one job fits the index, every later
-    * ingest job loads it. Plain parquet: the probe join never needs the
-    * postings co-partitioned (at scale the batch side broadcasts), so
-    * bucketed-table ceremony buys nothing here. shingleK and maxGramDf
-    * land in a one-row meta table so a load can never probe with the
-    * wrong k. [[IndexFamily.save]] holds the overwrite guard and the
-    * stage-then-swap write; the returned handle reads the saved tree, so
-    * [[CorpusIndex.close]] on it retires the tree too. */
-  def saveCorpusIndex(index: CorpusIndex, dir: String): CorpusIndex =
-    IndexFamily.Text.save(index, dir)
-
-  /** Load a [[CorpusIndex]] written by [[saveCorpusIndex]]. Call
-    * [[CorpusIndex.persist]] before probing many batches against it.
-    * Trees written by earlier format versions still load (see
-    * [[IndexFamily.Text]]). */
-  def loadCorpusIndex(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): CorpusIndex =
-    IndexFamily.Text.load(spark, dir)
 
   /**
    * INCREMENTAL ingest dedup: drop every batch doc whose exact n-gram
@@ -648,8 +625,6 @@ object Dedup {
     def unpersist(): Unit = {
       buckets.unpersist(false); vectors.unpersist(false); ()
     }
-    /** Retire this index version in ONE call ([[IndexFamily.close]]). */
-    def close(): Unit = IndexFamily.Embedding.close(this)
   }
 
   private[extensions] def signBands(df: DataFrame, idCol: String, vecCol: String,
@@ -672,7 +647,7 @@ object Dedup {
   }
 
   /** Persist an [[EmbeddingIndex]] to storage — the embedding analog of
-    * [[saveCorpusIndex]], same production lifecycle and the same
+    * `IndexFamily.Text.save`, same production lifecycle and the same
     * [[IndexFamily.save]]. planes/bands land in a one-row meta table so a
     * load can never probe with mismatched hyperplanes (the
     * silent-never-match failure class). */

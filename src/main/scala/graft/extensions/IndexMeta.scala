@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
 
 import scala.jdk.CollectionConverters._
 
+import graft.util.SmallFile
+
 /**
  * Version + lineage stamp for saved index trees: a tiny `_meta.json` at
  * the tree root recording which version the tree holds, the tree it was
@@ -42,33 +44,13 @@ object IndexMeta {
     meta.folded.foreach(fn.add)
     val rn = root.putObject("rows")
     meta.rows.toSeq.sortBy(_._1).foreach { case (k, v) => rn.put(k, v) }
+    // one-step replace: a crash mid-write must not leave a truncated
+    // stamp where a valid one stood, nor leave the tree UNSTAMPED (which
+    // the lenient read degrades to no-version-checks, the exact hazard
+    // the stamp refuses)
     val p = new HPath(new HPath(dir), FileName)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // tmp + overwrite-rename: a crash mid-write must not leave a
-    // truncated stamp where a valid one stood, and a crash between the
-    // steps must not leave the tree UNSTAMPED (which the lenient read
-    // degrades to no-version-checks — the exact hazard the stamp
-    // refuses). FileContext.rename(OVERWRITE) replaces in one step; the
-    // delete+rename fallback (FS without FileContext support) keeps a
-    // small unstamped window but never a truncated stamp.
-    val tmp = new HPath(new HPath(dir), FileName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(om.writerWithDefaultPrettyPrinter.writeValueAsBytes(root))
-    finally out.close()
-    try {
-      org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, fs.getConf)
-        .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      // IOException covers UnsupportedFileSystemException (no
-      // AbstractFileSystem bound for the scheme — getFileContext itself
-      // throws before rename is even attempted) and FileNotFoundException;
-      // UnsupportedOperationException covers an FS whose FileContext
-      // exists but rejects atomic overwrite-rename. All degrade to the
-      // delete+rename fallback rather than failing the save.
-      case _: UnsupportedOperationException | _: java.io.IOException =>
-        if (fs.exists(p)) fs.delete(p, false)
-        require(fs.rename(tmp, p), s"could not move $tmp into place at $p")
-    }
+    SmallFile.replace(p.getFileSystem(spark.sessionState.newHadoopConf()), p,
+      om.writerWithDefaultPrettyPrinter.writeValueAsBytes(root))
   }
 
   /** The three stamp states a tree can be in. Absent and Corrupt are NOT
@@ -87,24 +69,20 @@ object IndexMeta {
   def readStamp(spark: SparkSession, dir: String): Stamp = {
     val p = new HPath(new HPath(dir), FileName)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Stamp.Absent
-    else
-      scala.util.Try {
-        // inside the Try: bytes edited outside Hadoop no longer match the
-        // stamp's .crc sidecar, and the checksummed read throws
-        val in = fs.open(p)
-        val bytes = try in.readAllBytes() finally in.close()
-        val node = new ObjectMapper().readTree(bytes)
-        Meta(
-          node.get("version").asLong(),
-          Option(node.get("parent")).map(_.asText()),
-          Option(node.get("folded"))
-            .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil),
-          Option(node.get("rows"))
-            .map(_.fields().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap)
-            .getOrElse(Map.empty))
-      }.fold(e => Stamp.Corrupt(String.valueOf(e.getMessage)),
-        Stamp.Present(_))
+    // the read is inside the Try: bytes edited outside Hadoop no longer
+    // match the stamp's .crc sidecar, and the checksummed read throws
+    scala.util.Try(SmallFile.read(fs, p).map { bytes =>
+      val node = new ObjectMapper().readTree(bytes)
+      Meta(
+        node.get("version").asLong(),
+        Option(node.get("parent")).map(_.asText()),
+        Option(node.get("folded"))
+          .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil),
+        Option(node.get("rows"))
+          .map(_.fields().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap)
+          .getOrElse(Map.empty))
+    }).fold(e => Stamp.Corrupt(String.valueOf(e.getMessage)),
+      _.fold[Stamp](Stamp.Absent)(Stamp.Present(_)))
   }
 
   /** Lenient view for NON-destructive paths (loads): a corrupted stamp

@@ -47,20 +47,7 @@ object Search {
       "bm25Scores: the projection kernel is for QUERY-sized term sets " +
         "(<= 64); an analysis over a large vocabulary wants the " +
         "corpus_word_freq inverted-index shape instead")
-    // STAGE the token array once (`__toks`): higher-order kernels are
-    // interpreted — no common-subexpression elimination — so referencing
-    // the tokens EXPRESSION from dl plus every tf column re-tokenized
-    // the text 1+|terms| times per row (the text_rep_ngrams `__g2`
-    // lesson applied to the search family)
-    val tfs = df
-      .withColumn("__toks", TextFunctions.tokens(col(textCol)))
-      .select(
-        col(idCol) +:
-          greatest(size(col("__toks")), lit(0)).cast("long").as("dl") +:
-          terms.zipWithIndex.map { case (t, i) =>
-            size(filter(col("__toks"), x => x === lit(t)))
-              .cast("long").as(s"__tf$i")
-          }: _*)
+    val tfs = termFreqs(df, idCol, textCol, terms)
     // corpus stats: ONE scalar row of exact integer sums (N, sum dl,
     // per-term document frequencies) — broadcast back via a 1-row join
     val stats = tfs.agg(
@@ -68,19 +55,43 @@ object Search {
       sum(col("dl")).as("__sumdl") +:
         terms.indices.map(i =>
           sum(when(col(s"__tf$i") > 0, 1L).otherwise(0L)).as(s"__df$i")): _*)
-    val scored = tfs.join(broadcast(stats))
-    val avgdl = col("__sumdl").cast("double") / col("__n").cast("double")
+    val idf = (i: Int) => log(lit(1.0) +
+      (col("__n").cast("double") - col(s"__df$i") + lit(0.5)) /
+        (col(s"__df$i").cast("double") + lit(0.5)))
+    scoreMatches(tfs.join(broadcast(stats)), idCol, terms.size, idf,
+      col("__sumdl").cast("double") / col("__n").cast("double"), k1, b)
+  }
+
+  /** (id, dl, __tf0 .. __tfN) per document: its length and each query
+    * term's count. The token array is STAGED once (`__toks`):
+    * higher-order kernels are interpreted — no common-subexpression
+    * elimination — so referencing the tokens EXPRESSION from dl plus
+    * every tf column re-tokenized the text 1+|terms| times per row (the
+    * text_rep_ngrams `__g2` lesson applied to the search family). */
+  private def termFreqs(df: DataFrame, idCol: String, textCol: String,
+                        terms: Seq[String]): DataFrame =
+    df.withColumn("__toks", TextFunctions.tokens(col(textCol)))
+      .select(
+        col(idCol) +:
+          greatest(size(col("__toks")), lit(0)).cast("long").as("dl") +:
+          terms.zipWithIndex.map { case (t, i) =>
+            size(filter(col("__toks"), x => x === lit(t)))
+              .cast("long").as(s"__tf$i")
+          }: _*)
+
+  /** (id, score, dl) of the rows of [[termFreqs]] that hold at least one
+    * term. The score is a fixed-order sum, term 0 first and term n last
+    * (never a float SUM aggregate), of idf * tf * (k1 + 1) / (tf + norm). */
+  private def scoreMatches(tfs: DataFrame, idCol: String, nTerms: Int,
+                           idf: Int => Column, avgdl: Column,
+                           k1: Double, b: Double): DataFrame = {
     val norm = lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / avgdl)
-    // fixed-order sum: term 0 first, term n last — never a float SUM agg
-    val score = terms.indices.map { i =>
+    val score = (0 until nTerms).map { i =>
       val tf = col(s"__tf$i").cast("double")
-      val idf = log(lit(1.0) +
-        (col("__n").cast("double") - col(s"__df$i") + lit(0.5)) /
-          (col(s"__df$i").cast("double") + lit(0.5)))
-      idf * tf * lit(k1 + 1.0) / (tf + norm)
+      idf(i) * tf * lit(k1 + 1.0) / (tf + norm)
     }.reduce(_ + _)
-    scored
-      .filter(terms.indices.map(i => col(s"__tf$i") > 0).reduce(_ || _))
+    tfs
+      .filter((0 until nTerms).map(i => col(s"__tf$i") > 0).reduce(_ || _))
       .select(col(idCol), score.as("score"), col("dl"))
   }
 
@@ -116,17 +127,6 @@ object Search {
                              parent: Option[String] = None) extends Versioned {
     def persist(): this.type = { docFreq.persist(); this }
     def unpersist(): Unit = { docFreq.unpersist(); () }
-
-    /** Persist the stats to storage so they outlive the session: the
-      * vocabulary-sized df table as parquet, the two integer scalars in
-      * a one-row meta table, and the [[IndexMeta]] version stamp — a
-      * load can never probe with mismatched scalars. The overwrite guard
-      * and the stage-then-swap write of [[IndexFamily.save]] make the
-      * natural `extend(load(dir)).save(dir)` in-place upgrade safe. */
-    def save(dir: String): Bm25Stats = IndexFamily.Bm25.save(this, dir)
-
-    /** Retire this stats version in ONE call ([[IndexFamily.close]]). */
-    def close(): Unit = IndexFamily.Bm25.close(this)
   }
 
   /** The one-pass per-doc projection the fit, extend and remove reduce:
@@ -150,12 +150,6 @@ object Search {
     Bm25Stats(docFreq, row.getLong(0), row.getLong(1))
   }
 
-  /** Load [[Bm25Stats]] written by [[Bm25Stats.save]]. Call `persist()`
-    * before serving many probes from it. */
-  def loadBm25Stats(spark: org.apache.spark.sql.SparkSession,
-                    dir: String): Bm25Stats =
-    IndexFamily.Bm25.load(spark, dir)
-
   /** BM25 top-k against a fitted [[Bm25Stats]]: the per-term document
     * frequencies are looked up from the (tiny) query-filtered slice of
     * the vocabulary relation — a driver-side collect bounded by the
@@ -177,27 +171,12 @@ object Search {
       .toMap
     val n = stats.nDocs.toDouble
     val avgdl = stats.sumDl.toDouble / n
-    // staged `__toks` — same one-tokenization-per-row rule as bm25Scores
-    val tfs = df
-      .withColumn("__toks", TextFunctions.tokens(col(textCol)))
-      .select(
-        col(idCol) +:
-          greatest(size(col("__toks")), lit(0)).cast("long").as("dl") +:
-          terms.zipWithIndex.map { case (t, i) =>
-            size(filter(col("__toks"), x => x === lit(t)))
-              .cast("long").as(s"__tf$i")
-          }: _*)
-    val norm = lit(k1) * (lit(1.0 - b) +
-      lit(b) * col("dl").cast("double") / lit(avgdl))
-    val score = terms.zipWithIndex.map { case (t, i) =>
-      val dfT = dfs.getOrElse(t, 0L)
-      val idf = math.log(1.0 + ((n - dfT) + 0.5) / (dfT.toDouble + 0.5))
-      val tf = col(s"__tf$i").cast("double")
-      lit(idf) * tf * lit(k1 + 1.0) / (tf + norm)
-    }.reduce(_ + _)
-    tfs
-      .filter(terms.indices.map(i => col(s"__tf$i") > 0).reduce(_ || _))
-      .select(col(idCol), score.as("score"), col("dl"))
+    val idf = (i: Int) => {
+      val dfT = dfs.getOrElse(terms(i), 0L)
+      lit(math.log(1.0 + ((n - dfT) + 0.5) / (dfT.toDouble + 0.5)))
+    }
+    scoreMatches(termFreqs(df, idCol, textCol, terms), idCol, terms.size,
+      idf, lit(avgdl), k1, b)
       .orderBy(col("score").desc, col(idCol))
       .limit(k)
   }

@@ -133,13 +133,6 @@ object Similarity {
       copy(banded = banded.filter(predicate), savedDir = None, parent = None)
 
     def unpersist(): LshIndex = { banded.unpersist(false); this }
-
-    /** Persist ([[IndexFamily.save]]); planes/bands land in a one-row meta
-      * table so a load can never probe with mismatched hyperplanes. */
-    def save(dir: String): LshIndex = IndexFamily.Lsh.save(this, dir)
-
-    /** Retire this index version in ONE call ([[IndexFamily.close]]). */
-    def close(): Unit = IndexFamily.Lsh.close(this)
   }
 
   /** The (id, vec, band, bucket, meta…) banded relation both index fit
@@ -170,9 +163,6 @@ object Similarity {
              metaCols: Seq[String] = Nil): LshIndex =
     LshIndex(IndexFamily.Lsh.encode((planes, bands), candidates, idCol, vecCol,
       metaCols).head, planes, bands)
-
-  def loadLshIndex(spark: org.apache.spark.sql.SparkSession, dir: String): LshIndex =
-    IndexFamily.Lsh.load(spark, dir)
 
   /** Probe a fitted [[LshIndex]]: only candidates sharing a query's
     * bucket in at least one band are scored; the banded probe side is
@@ -257,9 +247,6 @@ object Similarity {
 
     /** Persist ([[IndexFamily.save]]), `assigned` partitioned by cell. */
     def save(dir: String): IvfIndex = IndexFamily.Ivf.save(this, dir)
-
-    /** Retire this index version in ONE call ([[IndexFamily.close]]). */
-    def close(): Unit = IndexFamily.Ivf.close(this)
   }
 
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String): IvfIndex =
@@ -544,13 +531,6 @@ object Similarity {
       * so a subset can't retire or masquerade as the full tree). */
     def filtered(predicate: Column): PqIndex =
       copy(codes = codes.filter(predicate), savedDir = None, parent = None)
-
-    /** Persist codes + codebooks + hyperparameters ([[IndexFamily.save]]);
-      * a load can never probe with a mismatched codebook. */
-    def save(dir: String): PqIndex = IndexFamily.Pq.save(this, dir)
-
-    /** Retire this index version in ONE call ([[IndexFamily.close]]). */
-    def close(): Unit = IndexFamily.Pq.close(this)
   }
 
   /** The codebooks as the saved (sub, cell, center) table. */
@@ -607,10 +587,6 @@ object Similarity {
     PqIndex(codebooks, IndexFamily.Pq.encode(codebooks, candidates, idCol, vecCol,
       metaCols).head, m, ksub, pts.head.length)
   }
-
-  def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
-                  dir: String): PqIndex =
-    IndexFamily.Pq.load(spark, dir)
 
   /** The (query_id, q_vec, __dt) probe relation: queries normalized,
     * each with its precomputed flat ADC lookup table. */
@@ -780,20 +756,6 @@ object Similarity {
       * vector can never surface. */
     def filtered(predicate: Column): IvfPqIndex =
       copy(codes = codes.filter(predicate), savedDir = None, parent = None)
-
-    /** Persist centers + codes (partitioned by cell) + the rerank-only
-      * vectors relation (also cell-partitioned) + codebooks +
-      * hyperparameters ([[IndexFamily.save]]); a load can never probe
-      * with a mismatched codebook or centroid table. `c_vec` lives ONLY
-      * in the vectors tree: storing it beside every code row meant the
-      * 32x code compression never shrank the stored footprint — at
-      * 100 TB the codes tree is the hot ADC scan and must stay
-      * codes-sized, while the vector tree is touched only by the
-      * rerank-sized exact pass (VERDICT r14 #7). */
-    def save(dir: String): IvfPqIndex = IndexFamily.IvfPq.save(this, dir)
-
-    /** Retire this index version in ONE call ([[IndexFamily.close]]). */
-    def close(): Unit = IndexFamily.IvfPq.close(this)
   }
 
   /** Fit an IVF-PQ index: the coarse k-means quantizer assigns every
@@ -872,10 +834,6 @@ object Similarity {
       .withColumn("__vhat",
         zip_with(col("__vhat"), col("__chat"), (x, y) => x - y))
       .drop("__chat")
-
-  def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): IvfPqIndex =
-    IndexFamily.IvfPq.load(spark, dir)
 
   /** Probe a fitted [[IvfPqIndex]]: rank the query's `nprobe` nearest
     * cells (coarse pruning — the scan never touches the other

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.ParquetMeta
+import graft.util.SmallFile
 
 /**
  * Incrementally-materialized current state (SURVEY §7.4's 100 TB posture):
@@ -80,67 +81,37 @@ object CompactedState {
     else Some(ParquetMeta.read(spark, paths: _*))
   }
 
-  /** The persisted `numBuckets` of an existing layout (None before the
-    * first upsert or for pre-_meta layouts). A present-but-unparseable
-    * `_meta` gets its OWN error, distinct from a genuine bucket-count
-    * mismatch: reporting corruption as "numBuckets mismatch" sends the
-    * operator chasing the wrong repair, and silently ignoring it would
-    * let a lookup probe the wrong dir. */
-  private def readMeta(f: FileSystem, dir: String): Option[Int] = {
-    val meta = new Path(s"$dir/_meta")
-    if (!f.exists(meta)) None
-    else {
-      val in = f.open(meta)
-      val content =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val parsed =
-        "\"numBuckets\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(content).map(_.group(1).toInt)
-      if (parsed.isEmpty)
-        throw new IllegalStateException(
-          s"corrupt _meta for compacted state at $dir (content: " +
-            s"'${content.take(120)}'): cannot determine the on-disk bucket " +
-            "layout; restore _meta from the layout's known numBuckets before " +
-            "upserting or probing")
-      parsed
-    }
+  private def metaPath(dir: String): Path = new Path(s"$dir/_meta")
+
+  /** The `numBuckets` a layout's `_meta` records. A present-but-
+    * unparseable `_meta` gets its OWN error, distinct from a genuine
+    * bucket-count mismatch: reporting corruption as "numBuckets
+    * mismatch" sends the operator chasing the wrong repair, and silently
+    * ignoring it would let a lookup probe the wrong dir. */
+  private def parseMeta(dir: String, bytes: Array[Byte]): Int = {
+    val content = new String(bytes, "UTF-8")
+    "\"numBuckets\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(content).map(_.group(1).toInt)
+      .getOrElse(throw new IllegalStateException(
+        s"corrupt _meta for compacted state at $dir (content: " +
+          s"'${content.take(120)}'): cannot determine the on-disk bucket " +
+          "layout; restore _meta from the layout's known numBuckets before " +
+          "upserting or probing"))
   }
 
   /** Persisted layout contract: `numBuckets` determines which bucket dir a
     * key hashes into, so changing it between runs re-buckets keys and
     * resurrects stale rows (the old bucket's copy is no longer shadowed).
-    * First upsert writes `dir/_meta`; every later upsert fails fast on a
-    * mismatch instead of silently corrupting state. */
+    * The first upsert publishes `dir/_meta` (of two racing first upserts,
+    * one layout wins and the other is checked against it); every later
+    * upsert fails fast on a mismatch instead of silently corrupting
+    * state. */
   private def checkOrWriteMeta(f: FileSystem, dir: String, conf: Config): Unit = {
-    val meta = new Path(s"$dir/_meta")
-    def check(): Unit = {
-      val persisted = readMeta(f, dir) // throws its own error if corrupt
-      require(persisted.contains(conf.numBuckets),
-        s"numBuckets mismatch for compacted state at $dir: on-disk layout uses " +
-          s"numBuckets=${persisted.map(_.toString).getOrElse("<absent>")}, config says " +
-          s"${conf.numBuckets}; re-bucketing existing state would resurrect stale rows")
-    }
-    if (f.exists(meta)) check()
-    else {
-      // temp file + rename: FileSystem.create is not atomic, and a crash
-      // mid-write would leave a truncated _meta that wedges every later
-      // upsert with a corruption error until manually repaired. The tmp
-      // name is per-attempt unique — a SHARED tmp path would let two
-      // concurrent first upserts truncate each other mid-write and publish
-      // interleaved bytes.
-      f.mkdirs(new Path(dir))
-      val tmp = new Path(
-        s"$dir/._meta.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      val out = f.create(tmp, true)
-      try out.write(s"""{"numBuckets": ${conf.numBuckets}}""".getBytes("UTF-8"))
-      finally out.close()
-      if (!f.rename(tmp, meta)) f.delete(tmp, false)
-      // ALWAYS validate the published content rather than trusting the
-      // rename return value: on POSIX-backed filesystems rename over an
-      // existing destination succeeds, so a lost race can otherwise leave
-      // a winner whose bucket count disagrees with this writer's layout.
-      check()
-    }
+    val persisted = parseMeta(dir, SmallFile.readOrPublish(f, metaPath(dir),
+      s"""{"numBuckets": ${conf.numBuckets}}""".getBytes("UTF-8")))
+    require(persisted == conf.numBuckets,
+      s"numBuckets mismatch for compacted state at $dir: on-disk layout uses " +
+        s"numBuckets=$persisted, config says ${conf.numBuckets}; re-bucketing " +
+        "existing state would resurrect stale rows")
   }
 
   /** MERGE one batch into the compacted state. Idempotent per batch.
@@ -217,7 +188,7 @@ object CompactedState {
         s"got ${keyValues.length}")
     require(keyTypes.isEmpty || keyTypes.length == keyValues.length,
       s"keyTypes must be empty or match keyValues, got ${keyTypes.length}")
-    readMeta(fs(spark, dir), dir).foreach { persisted =>
+    SmallFile.read(fs(spark, dir), metaPath(dir)).map(parseMeta(dir, _)).foreach { persisted =>
       require(persisted == conf.numBuckets,
         s"numBuckets mismatch for compacted state at $dir: on-disk layout uses " +
           s"numBuckets=$persisted, config says ${conf.numBuckets}; probing with the " +

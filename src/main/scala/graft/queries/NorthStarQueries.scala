@@ -572,7 +572,7 @@ object NorthStarQueries {
     * (a fresh serving job loads the stats tree from storage). */
   private def savedBm25Dir(s: SparkSession, dir: String): String =
     Fixtures.tree(Fixtures.Text, s, dir, "savedBm25Dir", "graft-bm25-stats")(out =>
-      bm25Stats(s, dir).save(out))
+      IndexFamily.Bm25.save(bm25Stats(s, dir), out))
 
   /** Boilerplate LINES relation per sf dir (doc_id, source, line_no,
     * line, line_hash), persisted: the one explode of the family, shared
@@ -618,11 +618,11 @@ object NorthStarQueries {
   /** On-disk copy of [[corpusIndex]] per sf dir (saved once per session),
     * for the production COLD-START path: a fresh ingest job loads the
     * persisted index from storage — no fitting session, no session cache.
-    * The `dedup_incremental_saved` row probes through [[Dedup
-    * .loadCorpusIndex]] over this tree. */
+    * The `dedup_incremental_saved` row probes through
+    * `IndexFamily.Text.load` over this tree. */
   private def savedIndexDir(s: SparkSession, dir: String): String =
     Fixtures.tree(Fixtures.Dedup, s, dir, "savedIndexDir", "graft-corpus-index")(out =>
-      Dedup.saveCorpusIndex(corpusIndex(s, dir), out))
+      IndexFamily.Text.save(corpusIndex(s, dir), out))
 
   /** The pre-upsert serving state for `dedup_upsert_fold`, per sf dir:
     * the skinny amend-image relation (doc_id, new text, partner stale
@@ -946,8 +946,8 @@ object NorthStarQueries {
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))),
 
     // ...and the persisted-lifecycle COLD-START path: the same probe
-    // served by an index LOADED FROM DISK (`loadCorpusIndex` over a tree
-    // `saveCorpusIndex` wrote), not the fitting session's cache — the
+    // served by an index LOADED FROM DISK (`IndexFamily.Text.load` over a
+    // tree `IndexFamily.Text.save` wrote), not the fitting session's cache — the
     // production shape where the fit job and every ingest job are
     // different processes. Identical oracle to `dedup_incremental`; the
     // cold execution additionally pays the one-time save. No persist on
@@ -956,7 +956,7 @@ object NorthStarQueries {
     "dedup_incremental_saved" -> ((s, dir) =>
       Dedup.dedupAgainstCorpus(
         docs(s, dir).filter(col("doc_id") % 5 === 0),
-        Dedup.loadCorpusIndex(s, savedIndexDir(s, dir)), "doc_id", "text")
+        IndexFamily.Text.load(s, savedIndexDir(s, dir)), "doc_id", "text")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))),
 
     // ...and the probe's AUDIT surface: every dropped batch doc with
@@ -2080,14 +2080,14 @@ object NorthStarQueries {
       Search.bm25TopKFitted(docs(s, dir), bm25Stats(s, dir),
         "doc_id", "text", Seq("spark", "vector", "quasar"), k = 20)),
     // ...and the COLD-START serving path: the same probe answered from
-    // an ON-DISK stats tree through `loadBm25Stats` (the search analog
+    // an ON-DISK stats tree through `IndexFamily.Bm25.load` (the search analog
     // of `dedup_incremental_saved`) — the production shape where the
     // fit job and every serving job are different processes. The saved
     // stats reproduce the fitted ones exactly (integer df/scalars), so
     // the probe is bit-identical to one-shot and shares its oracle.
     "search_bm25_saved" -> ((s, dir) =>
       Search.bm25TopKFitted(docs(s, dir),
-        Search.loadBm25Stats(s, savedBm25Dir(s, dir)),
+        IndexFamily.Bm25.load(s, savedBm25Dir(s, dir)),
         "doc_id", "text", Seq("spark", "vector", "quasar"), k = 20)),
     // ...and the CORPUS-BUMP serving path: stats fitted on half the
     // corpus, EXTENDED with the other half (O(new docs) — df counts and

@@ -2,7 +2,14 @@ package graft.state
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, Encoder, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+
+import graft.util.SmallFile
 
 /**
  * Per-table CDC state, mirroring the reference's SQLite `nmstables` row
@@ -37,61 +44,55 @@ object StateStore {
     * single-instance scheduling. */
   private val pathLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private[state] def lockFor(path: String): Object =
-    pathLocks.computeIfAbsent(new java.io.File(path).getAbsolutePath,
-      _ => new Object)
+  private def lockFor(qualifiedPath: String): Object =
+    pathLocks.computeIfAbsent(qualifiedPath, _ => new Object)
 
-  /** JVM-wide materialized-catalog memo, keyed like [[lockFor]]: every
-    * writer in scope (cross-process writers are out of scope, same as the
-    * lock) refreshes it on publish, so reads between writes cost zero
-    * Spark jobs — a tick's 4-5 catalog reads were each a parquet
-    * list+scan+collect job, pure driver latency at 10k tables × many
-    * ticks. The dir mtime rides along as a staleness guard for external
-    * mutation (a test wiping the dir): mismatch → fall through to a real
-    * scan. */
-  private final case class CachedCatalog(mtime: Long, rows: IndexedSeq[TableState])
-  private val catalogMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, CachedCatalog]()
+  private val mapper = new ObjectMapper()
 
-  /** Staleness token for the memo: dir mtime alone has millisecond (or
-    * coarser) granularity, so a delete-and-rewrite inside one tick of
-    * the filesystem clock would alias; folding in the child listing
-    * (names, lengths, mtimes — parquet part names carry UUIDs, so any
-    * rewrite changes them) closes that hole without reading any data.
-    * Child names hash through xxhash64 (not 32-bit String.hashCode):
-    * the guard exists precisely for out-of-band rewrites, so a
-    * same-mtime same-length replacement must not be able to alias on a
-    * 32-bit name collision. */
-  private[state] def catalogToken(f: java.io.File): Long = {
-    val children = Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-    children.sortBy(_.getName).foldLeft(f.lastModified()) { (acc, c) =>
-      val nameHash = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-        .hash(org.apache.spark.unsafe.types.UTF8String.fromString(c.getName),
-          org.apache.spark.sql.types.StringType, 42L)
-      ((acc * 31 + nameHash) * 31 + c.length()) * 31 + c.lastModified()
+  /** The catalog file: a JSON array, one object per row, timestamps as
+    * epoch microseconds (the precision Spark's encoder keeps, so a
+    * watermark round-trips bit for bit). */
+  private[state] def encode(rows: Seq[TableState]): Array[Byte] = {
+    val arr = mapper.createArrayNode()
+    rows.foreach { s =>
+      val o = arr.addObject()
+      o.put("name", s.name)
+      o.put("schemaName", s.schemaName)
+      o.put("nmsColumn", s.nmsColumn)
+      s.pKeyColumn.foreach(v => o.put("pKeyColumn", v))
+      s.schemaJson.foreach(v => o.put("schemaJson", v))
+      o.put("nms", DateTimeUtils.fromJavaTimestamp(s.nms))
+      o.put("lastRowCount", s.lastRowCount)
+      o.put("dsn", s.dsn)
+      s.lastShovedOn.foreach(t => o.put("lastShovedOn", DateTimeUtils.fromJavaTimestamp(t)))
     }
+    mapper.writeValueAsBytes(arr)
   }
 
-  /** Drop a retired store path's memo entry — the hook [[StateStore.close]]
-    * uses so a long-lived multi-DSN service does not accumulate one cached
-    * catalog per deleted/retired state dir for the life of the JVM. The
-    * per-path LOCK entry deliberately stays: it is one bare Object, and
-    * evicting it while a sibling store on the same path is still live
-    * would hand the next store a DIFFERENT lock object — two "mutually
-    * excluded" writers interleaving. */
-  private[state] def evictMemo(absPath: String): Unit = {
-    catalogMemo.remove(absPath); ()
-  }
+  private[state] def decode(bytes: Array[Byte]): IndexedSeq[TableState] =
+    mapper.readTree(bytes).elements().asScala.map { o =>
+      def opt(k: String): Option[JsonNode] = Option(o.get(k)).filterNot(_.isNull)
+      def ts(n: JsonNode) = DateTimeUtils.toJavaTimestamp(n.asLong())
+      TableState(o.get("name").asText(), o.get("schemaName").asText(),
+        o.get("nmsColumn").asText(), opt("pKeyColumn").map(_.asText()),
+        opt("schemaJson").map(_.asText()), ts(o.get("nms")),
+        o.get("lastRowCount").asLong(), o.get("dsn").asInt(),
+        opt("lastShovedOn").map(ts))
+    }.toIndexedSeq
 }
 
 /**
- * Parquet-backed state catalog, replacing SQLite (`/root/reference/
- * nmsdb.go:33-212`). One row per (dsn, table); tiny — it is metadata, not
- * data — so read-modify-overwrite is fine at any scale (the 100 TB lives
- * in the captured tables, not here). Commits batch to ONE catalog rewrite
- * per engine tick ([[commitAll]]): the per-table rewrite this replaces was
- * O(catalog) per table per tick — the tick bottleneck at 10k+ tracked
- * tables.
+ * File-backed state catalog, replacing SQLite (`/root/reference/
+ * nmsdb.go:33-212`): one JSON file, `<stateDir>/nmstables.json`, one row
+ * per (dsn, table). It is metadata, not data, so every read parses the
+ * file on the driver (no Spark job) and every commit rewrites it through
+ * [[graft.util.SmallFile.replace]], so a crash at any point leaves the
+ * previous catalog or the new one. Commits batch to ONE catalog rewrite
+ * per engine tick ([[commitAll]]).
+ *
+ * A state dir an earlier build wrote holds the catalog as a parquet
+ * directory (`nmstables/`) instead; the first read finds no JSON file,
+ * reads that directory once and publishes it as JSON.
  *
  * Not reproduced from the reference: the 8-column / 7-placeholder INSERT
  * bug (`nmsdb.go:148-151`).
@@ -99,47 +100,45 @@ object StateStore {
 final class StateStore(spark: SparkSession, dir: String) {
   import spark.implicits._
 
-  private val path = s"$dir/nmstables"
-  private val absPath = new java.io.File(path).getAbsolutePath
-  private val lock = StateStore.lockFor(path)
+  private val file = new Path(dir, "nmstables.json")
+  private val fs = file.getFileSystem(spark.sessionState.newHadoopConf())
+  private val lock = StateStore.lockFor(fs.makeQualified(file).toString)
 
   /** Catalog rewrites performed by this store (observability for the
     * one-write-per-tick contract; a per-table regression shows up here). */
   val catalogWrites = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Parquet scans the memo could not serve (observability for the
-    * zero-jobs-between-writes contract: a no-write tick must not grow
-    * this). */
+  /** Reads of an earlier build's parquet catalog: one per migrated state
+    * dir, zero in steady state. */
   val catalogScans = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Reads materialize EAGERLY under the catalog lock: a lazy Dataset
-    * would list/scan the parquet at action time, racing `write`'s
-    * rename swap and observing a mid-swap catalog. Served from the
-    * JVM-wide memo when the last publish's copy is still current; the
-    * returned Dataset is a local relation over the memo rows, so its
-    * `collect()` is a local scan, not a Spark job. On a memo miss the
-    * catalog parquet is read with the `TableState` encoder's schema (no
-    * schema-inference job) and collected, O(tables). */
+  /** A local relation over the parsed rows: its `collect()` is a local
+    * scan, not a Spark job. */
   def read(): Dataset[TableState] = spark.createDataset(rows())
 
   private def rows(): IndexedSeq[TableState] = lock.synchronized {
-    recoverAside()
-    val f = new java.io.File(path)
-    if (!f.exists()) IndexedSeq.empty
-    else {
-      val token = StateStore.catalogToken(f)
-      val hit = StateStore.catalogMemo.get(absPath)
-      if (hit != null && hit.mtime == token) hit.rows
-      else {
-        catalogScans.incrementAndGet()
-        val scanned = spark.read.schema(implicitly[Encoder[TableState]].schema)
-          .parquet(path).as[TableState].collect().toIndexedSeq
-        StateStore.catalogMemo.put(absPath,
-          StateStore.CachedCatalog(token, scanned))
-        scanned
-      }
+    SmallFile.read(fs, file) match {
+      case Some(bytes) =>
+        try StateStore.decode(bytes)
+        catch { case e: Exception =>
+          throw new IllegalStateException(s"corrupt state catalog $file: ${e.getMessage}", e) }
+      case None => migrate()
     }
   }
+
+  /** The parquet catalog an earlier build kept, read schema-first and
+    * published as JSON; its rename-aside copy (`nmstables.old`) stands in
+    * when a crash left only that. */
+  private def migrate(): IndexedSeq[TableState] =
+    Seq("nmstables", "nmstables.old").map(new Path(dir, _)).find(fs.exists) match {
+      case None => IndexedSeq.empty
+      case Some(legacy) =>
+        catalogScans.incrementAndGet()
+        val migrated = spark.read.schema(implicitly[Encoder[TableState]].schema)
+          .parquet(legacy.toString).as[TableState].collect().toIndexedSeq
+        write(migrated)
+        migrated
+    }
 
   /** The rows one DSN owns, filtered before the Dataset is built, so the
     * engine's per-tick `readForDsn(dsn).collect()` starts no job. */
@@ -183,57 +182,12 @@ final class StateStore(spark: SparkSession, dir: String) {
     }
   }
 
-  /** Release this store's JVM-wide memo entry. Call when the state dir
-    * is retired (engine shutdown, test teardown) — the memo holds the
-    * full cached catalog rows, a slow leak across many short-lived
-    * state dirs in one long-lived process. Safe to keep using the store
-    * afterwards: the next read just falls through to a real scan. */
-  def close(): Unit = StateStore.evictMemo(absPath)
-
   /** O8 — JSONL state backup (`/root/reference/nmsdb.go:160-177`). */
   def exportJsonl(outPath: String): Unit =
     read().toDF().coalesce(1).write.mode(SaveMode.Overwrite).json(outPath)
 
-  /** Rename-aside publish: stage the new catalog in `.tmp`, move the live
-    * catalog ASIDE (`.old`) rather than deleting it, publish `.tmp`, then
-    * drop the aside. At every crash point a complete catalog exists on
-    * disk — either `path` (before the aside move, or after publish) or
-    * `path.old` (between the two renames; [[recoverAside]] restores it on
-    * the next read). The delete-then-rename this replaces had a window
-    * where a crash left NO live catalog. */
   private def write(states: Seq[TableState]): Unit = {
     catalogWrites.incrementAndGet()
-    val tmp = s"$path.tmp"
-    states.toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    recoverAside() // a crash-orphaned aside is the live catalog; restore first
-    val target = new java.io.File(path)
-    val aside = new java.io.File(s"$path.old")
-    deleteRecursively(aside) // stale aside from a crash after a past publish
-    if (target.exists() && !target.renameTo(aside))
-      throw new java.io.IOException(s"state swap failed: $path -> $path.old")
-    if (!new java.io.File(tmp).renameTo(target)) {
-      aside.renameTo(target) // restore the previous catalog before failing
-      throw new java.io.IOException(s"state swap failed: $tmp -> $path")
-    }
-    deleteRecursively(aside)
-    StateStore.catalogMemo.put(absPath,
-      StateStore.CachedCatalog(StateStore.catalogToken(target),
-        states.toIndexedSeq))
+    SmallFile.replace(fs, file, StateStore.encode(states))
   }
-
-  /** Crash recovery for the rename-aside window: no live catalog but an
-    * aside present means the crash hit between `path -> path.old` and
-    * `tmp -> path` — the aside IS the last durable catalog; restore it.
-    * Both present (crash after publish, before aside cleanup): `path` is
-    * newer and wins; the stale aside is swept by the next write. */
-  private def recoverAside(): Unit = {
-    val target = new java.io.File(path)
-    val aside = new java.io.File(s"$path.old")
-    if (!target.exists() && aside.exists() && !aside.renameTo(target))
-      throw new java.io.IOException(
-        s"state recovery failed: $path.old -> $path")
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit =
-    graft.util.Util.deleteRecursively(f)
 }

@@ -13,6 +13,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.extensions.{CorpusOps, Dedup, IndexFamily, Similarity, Versioned}
 import graft.sinks.AppendSink
 import graft.sources.ParquetMeta
+import graft.util.SmallFile
 
 /**
  * Structured-Streaming CDC ingestion — the streaming re-expression of the
@@ -246,35 +247,15 @@ object CdcStream {
    * replay of the same batch id reads the recorded value back — so
    * `snapshot_tm` is both real (partition pruning and retention on
    * `snapshot_dt` work) and replay-stable (re-runs are byte-identical).
-   * foreachBatch runs serially on the driver, so no write races.
    */
   private[streaming] def getOrRecordBatchTime(
       spark: SparkSession, checkpointDir: String, batchId: Long,
       now: () => Long = () => System.currentTimeMillis()): Timestamp = {
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(s"$checkpointDir/graft_snapshot_tm")
-    val fs = dir.getFileSystem(conf)
-    val f = new org.apache.hadoop.fs.Path(dir, batchId.toString)
-    if (fs.exists(f)) {
-      val in = new java.io.DataInputStream(fs.open(f))
-      try new Timestamp(in.readLong()) finally in.close()
-    } else {
-      val ms = now()
-      fs.mkdirs(dir)
-      // write-then-rename so a crash mid-write can never leave a truncated
-      // file that poisons every replay of this batch id
-      val tmp = new org.apache.hadoop.fs.Path(dir, s".${batchId}.tmp")
-      val out = new java.io.DataOutputStream(fs.create(tmp, true))
-      try out.writeLong(ms) finally out.close()
-      if (!fs.rename(tmp, f)) {
-        fs.delete(tmp, false)
-        require(fs.exists(f), s"could not publish batch time for batch $batchId")
-        // lost a (theoretical) race: use the published value
-        val in = new java.io.DataInputStream(fs.open(f))
-        try return new Timestamp(in.readLong()) finally in.close()
-      }
-      new Timestamp(ms)
-    }
+    val f = new HPath(s"$checkpointDir/graft_snapshot_tm/$batchId")
+    val bytes = SmallFile.readOrPublish(
+      f.getFileSystem(spark.sessionState.newHadoopConf()), f,
+      java.nio.ByteBuffer.allocate(8).putLong(now()).array())
+    new Timestamp(java.nio.ByteBuffer.wrap(bytes).getLong)
   }
 
   /** Stream-static enrichment: join the change stream against a (small)
@@ -1143,53 +1124,28 @@ object CdcStream {
   private def leasePath(root: HPath, marker: String): HPath =
     new HPath(root, marker + ".lock")
 
-  /** Take the EXCLUSIVE fold lease of (tree, leg): an `overwrite=false`
-    * create of `<marker>.lock` plus a token read-back. Two concurrent
+  /** Take the EXCLUSIVE fold lease of (tree, leg): publish
+    * `<marker>.lock` only if no lease is there. Two concurrent
     * compactions of one tree — an orchestrator retry, a cron overlap,
     * two operators — must not both fold it: for the idempotent
     * text/vector folds that is wasted work, but BM25's integer
     * retraction is NOT idempotent, and before the lease both racers
     * passed the marker check (check-then-act) and double-subtracted.
-    * The create is atomic on HDFS-like stores. Hadoop's local FS checks,
-    * then creates (truncating), so a racer that read its token back
-    * before the other's create also won; there the lock is created with
-    * `CREATE_NEW` (O_EXCL) instead. A crashed fold leaves its
-    * lease behind DELIBERATELY: the next attempt refuses with the lock
-    * path, and the operator breaks the lease (delete the file) only
-    * after confirming no compaction is live — the crash-then-rerun
-    * story stays available, but never silently concurrent. */
+    * A crashed fold leaves its lease behind DELIBERATELY: the next
+    * attempt refuses with the lock path, and the operator breaks the
+    * lease (delete the file) only after confirming no compaction is
+    * live — the crash-then-rerun story stays available, but never
+    * silently concurrent. */
   private def acquireFoldLease(fs: org.apache.hadoop.fs.FileSystem,
                                root: HPath, marker: String): Unit = {
     val p = leasePath(root, marker)
-    val token = java.util.UUID.randomUUID().toString
-    def refuse(): Nothing = throw new IllegalStateException(
-      s"a compaction of $root ($marker) is already IN FLIGHT: fold lease " +
-        s"$p is held. Two concurrent folds of one tree would both consume " +
-        "it — for BM25, double-subtracting the non-idempotent stats. If " +
-        "the holder crashed (no compaction is actually running), break " +
-        "the stale lease by deleting the lock file and re-run")
-    val bytes = token.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    try {
-      if (fs.getScheme == "file")
-        java.nio.file.Files.write(java.nio.file.Paths.get(fs.makeQualified(p).toUri), bytes,
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-      else {
-        val out = fs.create(p, false)
-        try out.write(bytes) finally out.close()
-      }
-    } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => refuse()
-      case _: java.nio.file.FileAlreadyExistsException => refuse()
-    }
-    val in = fs.open(p)
-    val held =
-      try {
-        val buf = new Array[Byte](80)
-        val n = in.read(buf)
-        new String(buf, 0, math.max(n, 0),
-          java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
-    if (held != token) refuse()
+    if (!SmallFile.publishIfAbsent(fs, p, Array.emptyByteArray))
+      throw new IllegalStateException(
+        s"a compaction of $root ($marker) is already IN FLIGHT: fold lease " +
+          s"$p is held. Two concurrent folds of one tree would both consume " +
+          "it — for BM25, double-subtracting the non-idempotent stats. If " +
+          "the holder crashed (no compaction is actually running), break " +
+          "the stale lease by deleting the lock file and re-run")
   }
 
   /** Idempotent lease release — delete-if-present, so abort paths may
@@ -1202,28 +1158,23 @@ object CdcStream {
     if (fs.exists(p)) { fs.delete(p, false); () }
   }
 
-  /** Stamp a consumed tree — EXCLUSIVELY (`overwrite=false`): under the
-    * fold lease a marker collision is unrepresentable, so one firing
-    * means a fold ran WITHOUT the lease discipline (or an operator
-    * stamped by hand) and this fold's result must be treated as a
-    * duplicate — refuse loudly rather than quietly restamp. */
+  /** Stamp a consumed tree — EXCLUSIVELY: under the fold lease a marker
+    * collision is unrepresentable, so one firing means a fold ran WITHOUT
+    * the lease discipline (or an operator stamped by hand) and this
+    * fold's result must be treated as a duplicate — refuse loudly rather
+    * than quietly restamp. */
   private def markFolded(spark: SparkSession, dir: String,
                          marker: String): Unit = {
     val root = new HPath(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(root)) {
-      try fs.create(new HPath(root, marker), false).close()
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-             _: java.nio.file.FileAlreadyExistsException =>
-          throw new IllegalStateException(
-            s"$marker already present at $dir: a concurrent compaction " +
-              "consumed this tree while this fold ran — the fold lease " +
-              "makes this unrepresentable for lease-disciplined callers, " +
-              "so a collision here means a fold bypassed the lease; " +
-              "DISCARD this fold's result (the winner's fold stands)")
-      }
-    }
+    if (fs.exists(root) &&
+        !SmallFile.publishIfAbsent(fs, new HPath(root, marker), Array.emptyByteArray))
+      throw new IllegalStateException(
+        s"$marker already present at $dir: a concurrent compaction " +
+          "consumed this tree while this fold ran — the fold lease " +
+          "makes this unrepresentable for lease-disciplined callers, " +
+          "so a collision here means a fold bypassed the lease; " +
+          "DISCARD this fold's result (the winner's fold stands)")
   }
 
   /** Tumbling/sliding-window aggregation over the change stream with

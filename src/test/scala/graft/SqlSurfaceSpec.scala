@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.extensions.IndexFamily
+
 /** The SQL surface (GraftSqlExtensions): two oracle-pinned queries
   * reproduced through `spark.sql` ONLY — no DataFrame API in the loop —
   * proving a pure-SQL user gets bit-identical results, via the
@@ -80,7 +82,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
     viewDocs()
     val docs = graft.sources.Tables.load(spark, TestSpark.Sf0001, "documents")
     val statsDir = TestSpark.tmpDir("graft-sql-bm25")
-    graft.extensions.Search.bm25Fit(docs, "doc_id", "text").save(statsDir)
+    IndexFamily.Bm25.save(graft.extensions.Search.bm25Fit(docs, "doc_id", "text"), statsDir)
     // the search_bm25_saved shape with ZERO Scala in the query loop:
     // corpus by view name, stats by tree path, terms/k as literals
     val viaSql = spark.sql(
@@ -100,7 +102,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
     docs.filter(org.apache.spark.sql.functions.col("doc_id") % 5 === 0)
       .createOrReplaceTempView("g_batch")
     val indexDir = TestSpark.tmpDir("graft-sql-corpus-index")
-    graft.extensions.Dedup.saveCorpusIndex(
+    IndexFamily.Text.save(
       graft.extensions.Dedup.buildCorpusIndex(
         docs.filter(org.apache.spark.sql.functions.col("doc_id") % 5 =!= 0),
         "doc_id", "text"),
@@ -151,8 +153,8 @@ class SqlSurfaceSpec extends AnyFunSuite {
     queries.createOrReplaceTempView("g_pq_queries")
     for (residual <- Seq(false, true)) {
       val indexDir = TestSpark.tmpDir(s"graft-sql-ivfpq-$residual")
-      graft.extensions.Similarity.ivfPqFit(e, "vec_id", "embedding",
-        nlist = 4, m = 8, ksub = 16, residual = residual).save(indexDir)
+      IndexFamily.IvfPq.save(graft.extensions.Similarity.ivfPqFit(e, "vec_id", "embedding",
+        nlist = 4, m = 8, ksub = 16, residual = residual), indexDir)
       // the encoding flag travels in the tree's meta — the TVF call is
       // identical for both
       val viaSql = spark.sql(
@@ -161,7 +163,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
            |  '$indexDir', 10, 2, 50)""".stripMargin)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val viaApi = graft.extensions.Similarity.ivfPqProbe(
-        graft.extensions.Similarity.loadIvfPqIndex(spark, indexDir),
+        IndexFamily.IvfPq.load(spark, indexDir),
         queries, "vec_id", "embedding", k = 10, nprobe = 2, rerank = 50)
         .select("query_id", "neighbor_id", "rank")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -183,24 +185,24 @@ class SqlSurfaceSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
     val lshDir = TestSpark.tmpDir("graft-sql-lsh")
-    graft.extensions.Similarity
-      .lshFit(e, "vec_id", "embedding", planes = 12, bands = 4).save(lshDir)
+    IndexFamily.Lsh.save(graft.extensions.Similarity
+      .lshFit(e, "vec_id", "embedding", planes = 12, bands = 4), lshDir)
     val lshSql = triples(spark.sql(
       s"""SELECT * FROM graft_lsh_topk('g_ann_queries', 'vec_id',
          |  'embedding', '$lshDir', 10)""".stripMargin))
     val lshApi = triples(graft.extensions.Similarity.lshProbe(
-      graft.extensions.Similarity.loadLshIndex(spark, lshDir),
+      IndexFamily.Lsh.load(spark, lshDir),
       queries, "vec_id", "embedding", k = 10))
     assert(lshSql === lshApi)
 
     val pqDir = TestSpark.tmpDir("graft-sql-pq")
-    graft.extensions.Similarity
-      .pqFit(e, "vec_id", "embedding", m = 8, ksub = 16).save(pqDir)
+    IndexFamily.Pq.save(graft.extensions.Similarity
+      .pqFit(e, "vec_id", "embedding", m = 8, ksub = 16), pqDir)
     val pqSql = triples(spark.sql(
       s"""SELECT * FROM graft_pq_topk('g_ann_queries', 'vec_id',
          |  'embedding', '$pqDir', 10, 50)""".stripMargin))
     val pqApi = triples(graft.extensions.Similarity.pqProbe(
-      graft.extensions.Similarity.loadPqIndex(spark, pqDir),
+      IndexFamily.Pq.load(spark, pqDir),
       queries, "vec_id", "embedding", k = 10, rerank = 50))
     assert(pqSql === pqApi)
   }
@@ -294,9 +296,9 @@ class SqlSurfaceSpec extends AnyFunSuite {
     val corpus0 = docs.filter(col("doc_id") < 120)
     val idxDir = TestSpark.tmpDir("graft-call-idx")
     val statsDir = TestSpark.tmpDir("graft-call-stats")
-    Dedup.saveCorpusIndex(
+    IndexFamily.Text.save(
       Dedup.buildCorpusIndex(corpus0, "doc_id", "text"), idxDir)
-    Search.bm25Fit(corpus0, "doc_id", "text").save(statsDir)
+    IndexFamily.Bm25.save(Search.bm25Fit(corpus0, "doc_id", "text"), statsDir)
     // one shared maintenance window, written in sink shape: doc 20
     // amended (upsert, both images), doc 25 retired (retract, old
     // image), no accepts (missing tree)
@@ -331,7 +333,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
     def postingSet(ix: Dedup.CorpusIndex) =
       ix.postings.select("gram", "doc_id").collect()
         .map(x => (x.getLong(0), x.getLong(1))).toSet
-    assert(postingSet(Dedup.loadCorpusIndex(spark, textSave)) ===
+    assert(postingSet(IndexFamily.Text.load(spark, textSave)) ===
       postingSet(Dedup.buildCorpusIndex(finalCorpus, "doc_id", "text")))
 
     // bm25 off the SAME trees (its own markers), old_col named
@@ -340,7 +342,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
       s"""CALL graft.compact_maintenance('bm25', '$a', '$u', '$r',
          |  '$statsDir', '$bmSave', 'doc_id', 'text', 'old_text')""".stripMargin)
       .collect()
-    val folded = Search.loadBm25Stats(spark, bmSave)
+    val folded = IndexFamily.Bm25.load(spark, bmSave)
     val refit = Search.bm25Fit(finalCorpus, "doc_id", "text")
     assert(folded.nDocs === refit.nDocs && folded.sumDl === refit.sumDl)
     def dfMap(s: Search.Bm25Stats) = s.docFreq.collect()

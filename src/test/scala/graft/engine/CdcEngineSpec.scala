@@ -127,7 +127,7 @@ class CdcEngineSpec extends AnyFunSuite {
     assert(eng.state.readForDsn(1).count() == 2)
   }
 
-  test("a no-write tick costs zero catalog scans (memo serves every read)") {
+  test("a no-write tick starts no Spark job and writes no catalog") {
     val eng = mkEngine()
     eng.seed(Seq(("events", "ts", Some("event_id"))))
     val now = Instant.parse("2024-02-01T00:00:00Z")
@@ -138,14 +138,29 @@ class CdcEngineSpec extends AnyFunSuite {
     // same clock again: policy case 1 (recently shoved, nearly caught up)
     // skips every table — no capture, no commit, NO catalog write...
     val writes0 = eng.state.catalogWrites.get()
-    val scans0 = eng.state.catalogScans.get()
-    val res = eng.tick(now)
+    val (res, sites) = TestSpark.jobSites(eng.tick(now))
     assert(res.forall(_.decision.isInstanceOf[graft.policy.WatermarkPolicy.Skip]))
     assert(eng.state.catalogWrites.get() == writes0, "skip tick must not write")
-    // ...and the tick's catalog READS are all memo hits: the last write
-    // populated the memo, so a no-write tick issues zero parquet scans
-    assert(eng.state.catalogScans.get() == scans0,
-      "a no-write tick must not scan the catalog parquet")
+    // ...and its catalog READS are driver-side parses of the catalog
+    // file, with live counts from footers: the tick starts no job at all
+    assert(sites.isEmpty, s"a no-write tick started jobs: $sites")
+    assert(eng.state.catalogScans.get() == 0L)
+  }
+
+  test("a state dir given as a file: URI seeds, ticks and reads back its watermark") {
+    val stateDir = "file:" + TestSpark.tmpDir("graft-state-uri")
+    val eng = new CdcEngine(spark, TestSpark.Sf0001, TestSpark.tmpDir("graft-sink-uri"),
+      stateDir, policy = PolicyConfig(batchCount = 100, replicationBufferSecs = 180),
+      concurrency = 2)
+    eng.seed(Seq(("events", "ts", Some("event_id"))))
+    val seeded = eng.state.readForDsn(1).collect().head
+    val res = eng.tick(Instant.parse("2024-02-01T00:00:00Z"))
+    assert(res.map(_.rowsCaptured).sum > 0)
+    // a fresh engine over the same URI reads the committed watermark
+    val reread = new CdcEngine(spark, TestSpark.Sf0001, eng.sinkDir, stateDir)
+      .state.readForDsn(1).collect().head
+    assert(reread.nms.after(seeded.nms) && reread.lastShovedOn.nonEmpty)
+    assert(reread == eng.state.readForDsn(1).collect().head)
   }
 
   test("tick is single-pass: no count() jobs; rows come from write-side metrics") {

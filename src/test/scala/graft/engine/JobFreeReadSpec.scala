@@ -11,7 +11,7 @@ import graft.sources.Tables
 import graft.util.Util.utcTs
 
 /** Building a CDC read is metadata work on the driver: parquet schemas come
-  * from footers and the state catalog from its memo, so none of these
+  * from footers and the state catalog from its JSON file, so none of these
   * starts a Spark job. A tick's jobs are its captures, merges and writes —
   * never a schema inference or a catalog collect. */
 class JobFreeReadSpec extends AnyFunSuite {
@@ -58,12 +58,13 @@ class JobFreeReadSpec extends AnyFunSuite {
     eng.tick(t0) // the first batch creates the compacted state
     val (res, sites) = TestSpark.jobSites(eng.tick(t0.plusSeconds(3600)))
     assert(res.map(_.rowsCaptured).sum > 0, "the measured tick captured rows and merged them")
-    // the only parquet jobs are the two writes: the log append and the
-    // catalog commit (the compacted-state publish runs under AQE's sites)
+    // the only parquet job is the log append: the catalog commit is a
+    // driver-side file write (the compacted-state publish runs under
+    // AQE's sites)
     val parquetFiles = sites.filter(_.startsWith("parquet at "))
       .map(_.stripPrefix("parquet at ").takeWhile(_ != ':')).sorted
-    assert(parquetFiles == Seq("AppendSink.scala", "StateStore.scala"),
-      s"a tick's parquet jobs must be its two writes, no schema inference: $sites")
+    assert(parquetFiles == Seq("AppendSink.scala"),
+      s"a tick's parquet job must be its log append, no schema inference: $sites")
     assert(!sites.exists(_.startsWith("collect at CdcEngine")),
       s"a tick must not collect the state catalog as a job: $sites")
   }

@@ -202,8 +202,8 @@ class DedupSpec extends AnyFunSuite {
       // save/load round-trip: a reloaded index (fresh session lifecycle)
       // probes to the identical keep-set
       val ixDir = graft.TestSpark.tmpDir("graft-corpus-index")
-      Dedup.saveCorpusIndex(index, ixDir)
-      val loaded = Dedup.loadCorpusIndex(spark, ixDir)
+      IndexFamily.Text.save(index, ixDir)
+      val loaded = IndexFamily.Text.load(spark, ixDir)
       val keptLoaded = Dedup.dedupAgainstCorpus(batch, loaded, "doc_id", "text")
         .select("doc_id").as[Long].collect().toSet
       assert(keptLoaded == kept, "reloaded index must probe identically")
@@ -212,7 +212,7 @@ class DedupSpec extends AnyFunSuite {
       // (the load recorded its dir); a never-saved index has nothing
       // on disk to delete and close() is just unpersist
       assert(loaded.savedDir.contains(ixDir))
-      loaded.close()
+      IndexFamily.Text.close(loaded)
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(ixDir)),
         "close() must delete the saved index tree")
       assert(index.savedDir.isEmpty)
@@ -547,11 +547,11 @@ class DedupSpec extends AnyFunSuite {
     // includes outliving the format change
     val ixDir = graft.TestSpark.tmpDir("graft-oldfmt-index")
     val index = Dedup.buildCorpusIndex(docs, "doc_id", "text")
-    Dedup.saveCorpusIndex(index, ixDir)
+    IndexFamily.Text.save(index, ixDir)
     graft.util.Util.deleteRecursively(new java.io.File(s"$ixDir/df"))
     Seq(3).toDF("shingle_k").write.mode("overwrite").parquet(s"$ixDir/meta")
 
-    val loaded = Dedup.loadCorpusIndex(spark, ixDir)
+    val loaded = IndexFamily.Text.load(spark, ixDir)
     assert(loaded.shingleK == 3 && loaded.maxGramDf == 100)
     def dfMap(ix: Dedup.CorpusIndex) =
       ix.dfCounts.select("gram", "df").as[(Long, Long)].collect().toMap
@@ -569,7 +569,7 @@ class DedupSpec extends AnyFunSuite {
     val newDocs = Seq((6L, "entirely novel appended document text")).toDF("doc_id", "text")
     assert(dfMap(IndexFamily.Text.extend(loaded, newDocs, "doc_id", "text")) ==
       dfMap(IndexFamily.Text.extend(index, newDocs, "doc_id", "text")))
-    loaded.close()
+    IndexFamily.Text.close(loaded)
   }
 
   test("O(new) extension: the plans never re-read the old corpus's shingle sets") {
@@ -580,8 +580,8 @@ class DedupSpec extends AnyFunSuite {
     // regression to the regroup shape shows up as a scan of the saved
     // shingles tree inside the postings/dictionary plans.
     val ixDir = graft.TestSpark.tmpDir("graft-extend-plan")
-    Dedup.saveCorpusIndex(Dedup.buildCorpusIndex(docs, "doc_id", "text"), ixDir)
-    val loaded = Dedup.loadCorpusIndex(spark, ixDir)
+    IndexFamily.Text.save(Dedup.buildCorpusIndex(docs, "doc_id", "text"), ixDir)
+    val loaded = IndexFamily.Text.load(spark, ixDir)
     val ext = IndexFamily.Text.extend(loaded,
       Seq((10L, "brand new appended words")).toDF("doc_id", "text"),
       "doc_id", "text")
@@ -594,7 +594,7 @@ class DedupSpec extends AnyFunSuite {
       "postings update must not re-derive from the shingles tree")
     assert(postingsPlan.contains("LeftAnti"),
       s"old postings must be touched by one anti-join only:\n${postingsPlan.take(2000)}")
-    loaded.close()
+    IndexFamily.Text.close(loaded)
   }
 
   test("incremental embedding dedup: near-copies drop, orthogonal/negated vectors survive") {
@@ -628,7 +628,7 @@ class DedupSpec extends AnyFunSuite {
       assert(keptLoaded == kept, "reloaded embedding index must probe identically")
 
       // one-call retirement, same contract as the text form
-      loaded.close()
+      IndexFamily.Embedding.close(loaded)
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(ixDir)),
         "close() must delete the saved embedding index tree")
     } finally index.unpersist()

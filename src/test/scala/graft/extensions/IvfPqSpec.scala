@@ -72,7 +72,7 @@ class IvfPqSpec extends AnyFunSuite {
     assert(rows(idx) === oneShot)
 
     val dir = TestSpark.tmpDir("graft-ivfpq-roundtrip")
-    val saved = idx.save(dir)
+    val saved = IndexFamily.IvfPq.save(idx, dir)
     // the saved codes tree is parquet partitioned BY CELL — the physical
     // layout the probe's nprobe pruning rides on at scale
     val cellDirs = new java.io.File(s"$dir/codes").listFiles()
@@ -87,19 +87,19 @@ class IvfPqSpec extends AnyFunSuite {
     assert(vecDirs.length == 4, "vectors tree is cell-partitioned too")
     assert(spark.read.parquet(s"$dir/vectors").columns.toSet ==
       Set("neighbor_id", "cell", "c_vec"))
-    val loaded = Similarity.loadIvfPqIndex(spark, dir)
+    val loaded = IndexFamily.IvfPq.load(spark, dir)
     assert(loaded.m == 8 && loaded.ksub == 8 && loaded.dim == idx.dim)
     assert(loaded.codebooks == idx.codebooks,
       "codebooks must round-trip float-exact")
     assert(rows(loaded) === oneShot)
-    saved.close()
+    IndexFamily.IvfPq.close(saved)
   }
 
   test("extend assigns to FROZEN cells, encodes with FROZEN codebooks, bumps version, carries lineage") {
     val e = embs.filter(col("vec_id") < 300)
     val dir = TestSpark.tmpDir("graft-ivfpq-extend")
-    val half = Similarity.ivfPqFit(e.filter(col("vec_id") < 150),
-      "vec_id", "embedding", nlist = 4, m = 8, ksub = 8).save(dir)
+    val half = IndexFamily.IvfPq.save(Similarity.ivfPqFit(e.filter(col("vec_id") < 150),
+      "vec_id", "embedding", nlist = 4, m = 8, ksub = 8), dir)
     val ext = IndexFamily.IvfPq.extend(half,
       e.filter(col("vec_id") >= 150), "vec_id", "embedding")
     assert(ext.codebooks == half.codebooks, "extension must not refit PQ")
@@ -113,7 +113,7 @@ class IvfPqSpec extends AnyFunSuite {
       .select("neighbor_id").as[Long].collect().toSet
     assert(seen.exists(_ >= 150), "extended vectors must be probe-visible")
     assert(seen.size == 299, "every other vector ranks within k=300")
-    half.close()
+    IndexFamily.IvfPq.close(half)
   }
 
   test("removeFromIvfPqIndex keeps codes and vectors in lockstep under " +
@@ -227,8 +227,8 @@ class IvfPqSpec extends AnyFunSuite {
     val idx = Similarity.ivfPqFit(e.filter(col("vec_id") < 150),
       "vec_id", "embedding", nlist = 4, m = 8, ksub = 8, residual = true)
     assert(idx.residual)
-    val saved = idx.save(dir)
-    val loaded = Similarity.loadIvfPqIndex(spark, dir)
+    val saved = IndexFamily.IvfPq.save(idx, dir)
+    val loaded = IndexFamily.IvfPq.load(spark, dir)
     assert(loaded.residual,
       "a loaded residual tree must keep decoding in residual space — " +
         "a dropped flag silently mis-scores every ADC probe")
@@ -249,7 +249,7 @@ class IvfPqSpec extends AnyFunSuite {
       .select("neighbor_id").as[Long].collect().toSet
     assert(seen.exists(_ >= 150), "extended vectors must be probe-visible")
     assert(seen.size == 299, "every other vector ranks within k=300")
-    saved.close()
+    IndexFamily.IvfPq.close(saved)
   }
 
   test("filtered view prunes candidates before the cell scan and drops lineage") {

@@ -65,20 +65,20 @@ class PqSpec extends AnyFunSuite {
     assert(rows(idx) === oneShot)
 
     val dir = TestSpark.tmpDir("graft-pq-roundtrip")
-    val saved = idx.save(dir)
-    val loaded = Similarity.loadPqIndex(spark, dir)
+    val saved = IndexFamily.Pq.save(idx, dir)
+    val loaded = IndexFamily.Pq.load(spark, dir)
     assert(loaded.m == 8 && loaded.ksub == 8 && loaded.dim == idx.dim)
     assert(loaded.codebooks == idx.codebooks,
       "codebooks must round-trip float-exact")
     assert(rows(loaded) === oneShot)
-    saved.close()
+    IndexFamily.Pq.close(saved)
   }
 
   test("extend encodes with FROZEN codebooks, bumps version, carries lineage") {
     val e = embs.filter(col("vec_id") < 300)
     val dir = TestSpark.tmpDir("graft-pq-extend")
-    val half = Similarity.pqFit(e.filter(col("vec_id") < 150),
-      "vec_id", "embedding", m = 8, ksub = 8).save(dir)
+    val half = IndexFamily.Pq.save(Similarity.pqFit(e.filter(col("vec_id") < 150),
+      "vec_id", "embedding", m = 8, ksub = 8), dir)
     val ext = IndexFamily.Pq.extend(half,
       e.filter(col("vec_id") >= 150), "vec_id", "embedding")
     assert(ext.codebooks == half.codebooks, "extension must not refit")
@@ -93,7 +93,7 @@ class PqSpec extends AnyFunSuite {
       .select("neighbor_id").as[Long].collect().toSet
     assert(seen.exists(_ >= 150), "extended vectors must be probe-visible")
     assert(seen.size == 299, "every other vector ranks within k=300")
-    half.close()
+    IndexFamily.Pq.close(half)
   }
 
   test("filtered view prunes candidates before ADC and drops lineage") {

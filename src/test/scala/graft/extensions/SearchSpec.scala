@@ -164,13 +164,13 @@ class SearchSpec extends AnyFunSuite {
   test("bm25 stats save/load round-trips and serves bit-identical probes") {
     val dir = graft.TestSpark.tmpDir("graft-bm25-v1")
     val stats = Search.bm25Fit(corpus, "doc_id", "text")
-    val saved = stats.save(dir)
+    val saved = IndexFamily.Bm25.save(stats, dir)
     assert(saved.version === 1L && saved.savedDir.contains(dir))
     val stamp = IndexMeta.read(spark, dir).get
     assert(stamp.version === 1L && stamp.parent.isEmpty)
     assert(stamp.rows("df") === stats.docFreq.count())
 
-    val loaded = Search.loadBm25Stats(spark, dir)
+    val loaded = IndexFamily.Bm25.load(spark, dir)
     assert(loaded.nDocs === stats.nDocs && loaded.sumDl === stats.sumDl)
     val terms = Seq("cat", "dog", "zzz_absent")
     val oneShot = Search.bm25TopK(corpus, "doc_id", "text", terms, k = 4)
@@ -182,7 +182,7 @@ class SearchSpec extends AnyFunSuite {
         r.getAs[Double]("score"))).toSeq
     assert(served === oneShot,
       "a probe served from a saved tree must be bit-identical to one-shot")
-    loaded.close()
+    IndexFamily.Bm25.close(loaded)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
   }
 
@@ -246,8 +246,8 @@ class SearchSpec extends AnyFunSuite {
 
   test("bm25 extend bumps version + lineage; stale close refuses") {
     val dir = graft.TestSpark.tmpDir("graft-bm25-stale")
-    val v1 = Search.bm25Fit(corpus.filter(col("doc_id") <= 2L),
-      "doc_id", "text").save(dir)
+    val v1 = IndexFamily.Bm25.save(Search.bm25Fit(corpus.filter(col("doc_id") <= 2L),
+      "doc_id", "text"), dir)
     val ext = IndexFamily.Bm25.extend(v1,
       corpus.filter(col("doc_id") > 2L), "doc_id", "text")
     assert(ext.version === 2L)
@@ -257,57 +257,56 @@ class SearchSpec extends AnyFunSuite {
     // the extension saves over the SAME tree directly: save() stages the
     // df write and swaps, so the lazy merged plan reading the old files
     // needs no caller-side materialization (ADVICE r16)
-    val v2 = ext.save(dir)
+    val v2 = IndexFamily.Bm25.save(ext, dir)
     assert(IndexMeta.read(spark, dir).get.version === 2L)
     assert(IndexMeta.read(spark, dir).get.parent.isEmpty,
       "in-place re-save must not stamp a self-referential parent")
     // the returned handle re-points at the saved files, so it still
     // serves after the old v1 files are gone
     assert(v2.docFreq.count() > 0L)
-    val e = intercept[IllegalArgumentException](v1.close())
+    val e = intercept[IllegalArgumentException](IndexFamily.Bm25.close(v1))
     assert(e.getMessage.contains("version 2") &&
       e.getMessage.contains("version 1"))
-    v2.close()
+    IndexFamily.Bm25.close(v2)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
   }
 
   test("save refuses a stamped tree the handle does not descend from") {
     val dir = graft.TestSpark.tmpDir("graft-bm25-clobber")
-    val v1 = Search.bm25Fit(corpus.filter(col("doc_id") <= 2L),
-      "doc_id", "text").save(dir)
-    val v2 = IndexFamily.Bm25.extend(v1,
-      corpus.filter(col("doc_id") > 2L), "doc_id", "text").save(dir)
+    val v1 = IndexFamily.Bm25.save(Search.bm25Fit(corpus.filter(col("doc_id") <= 2L),
+      "doc_id", "text"), dir)
+    val v2 = IndexFamily.Bm25.save(IndexFamily.Bm25.extend(v1,
+      corpus.filter(col("doc_id") > 2L), "doc_id", "text"), dir)
     // the stale v1 handle may no longer clobber the v2 tree...
-    val stale = intercept[IllegalArgumentException](v1.save(dir))
+    val stale = intercept[IllegalArgumentException](IndexFamily.Bm25.save(v1, dir))
     assert(stale.getMessage.contains("version 2"))
     // ...and an unrelated fit (no lineage into dir) is refused too
     val alien = intercept[IllegalArgumentException] {
-      Search.bm25Fit(corpus, "doc_id", "text").save(dir)
+      IndexFamily.Bm25.save(Search.bm25Fit(corpus, "doc_id", "text"), dir)
     }
     assert(alien.getMessage.contains("does not descend"))
     // idempotent re-save of the current version stays allowed
-    v2.save(dir)
-    v2.close()
+    IndexFamily.Bm25.save(v2, dir)
+    IndexFamily.Bm25.close(v2)
   }
 
   test("extend(load(dir)).save(dir) upgrades in place without clobbering " +
     "its own lazy input") {
     val dir = graft.TestSpark.tmpDir("graft-bm25-inplace")
-    Search.bm25Fit(corpus.filter(col("doc_id") <= 2L), "doc_id", "text")
-      .save(dir)
+    IndexFamily.Bm25.save(Search.bm25Fit(corpus.filter(col("doc_id") <= 2L), "doc_id", "text"), dir)
     // the ADVICE r16 failure shape verbatim: the loaded handle's lazy df
     // plan reads $dir/df, and save(dir) used to overwrite those files
     // while the staged plan still needed them
-    val upgraded = IndexFamily.Bm25.extend(Search.loadBm25Stats(spark, dir),
-      corpus.filter(col("doc_id") > 2L), "doc_id", "text").save(dir)
+    val upgraded = IndexFamily.Bm25.save(IndexFamily.Bm25.extend(IndexFamily.Bm25.load(spark, dir),
+      corpus.filter(col("doc_id") > 2L), "doc_id", "text"), dir)
     val refit = Search.bm25Fit(corpus, "doc_id", "text")
-    val reload = Search.loadBm25Stats(spark, dir)
+    val reload = IndexFamily.Bm25.load(spark, dir)
     assert(reload.version === 2L)
     assert(reload.nDocs === refit.nDocs && reload.sumDl === refit.sumDl)
     def dfMap(s: Search.Bm25Stats) = s.docFreq.collect()
       .map(r => r.getAs[String]("term") -> r.getAs[Long]("df")).toMap
     assert(dfMap(reload) === dfMap(refit))
-    upgraded.close()
+    IndexFamily.Bm25.close(upgraded)
   }
 
   test("extendBm25Stats snapshots newDocs: source rows appended after the " +

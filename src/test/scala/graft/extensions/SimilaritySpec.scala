@@ -156,7 +156,7 @@ class SimilaritySpec extends AnyFunSuite {
 
     // one-call version retirement, same contract as CorpusIndex.close
     assert(loaded.savedDir.contains(dir))
-    loaded.close()
+    IndexFamily.Ivf.close(loaded)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir)),
       "close() must delete the saved IVF tree")
   }
@@ -220,7 +220,7 @@ class SimilaritySpec extends AnyFunSuite {
     val view = loaded.filtered(pred)
     assert(view.savedDir.isEmpty && view.parent.isEmpty,
       "filtered view must drop savedDir and parent")
-    loaded.close()
+    IndexFamily.Ivf.close(loaded)
   }
 
   test("extendIvfIndex: frozen centroids, assignment matches a plain argmin, new vectors probe-visible") {
@@ -438,8 +438,8 @@ class SimilaritySpec extends AnyFunSuite {
     // index, filter, probe) gives the same answer, with the predicate
     // reaching the parquet scan of the saved banded relation
     val dir = graft.TestSpark.tmpDir("graft-lsh-meta")
-    idx.save(dir)
-    val loaded = Similarity.loadLshIndex(spark, dir)
+    IndexFamily.Lsh.save(idx, dir)
+    val loaded = IndexFamily.Lsh.load(spark, dir)
     val loadedHits = Similarity.lshProbe(loaded.filtered(pred), q,
       "vec_id", "embedding", k = 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
@@ -451,7 +451,7 @@ class SimilaritySpec extends AnyFunSuite {
     val view = loaded.filtered(pred)
     assert(view.savedDir.isEmpty && view.parent.isEmpty,
       "filtered LSH view must drop savedDir and parent")
-    loaded.close()
+    IndexFamily.Lsh.close(loaded)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir)),
       "close() must delete the saved LSH tree")
   }

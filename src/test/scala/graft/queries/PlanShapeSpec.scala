@@ -3,6 +3,7 @@ package graft.queries
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.extensions.IndexFamily
 
 /**
  * Physical-plan regression guards for the scale-critical plan shapes
@@ -430,9 +431,9 @@ class PlanShapeSpec extends AnyFunSuite {
     val e = graft.sources.Tables.load(spark, dir, "embeddings")
       .filter(col("vec_id") < 300)
     val idxDir = TestSpark.tmpDir("graft-pq-planshape")
-    graft.extensions.Similarity.pqFit(e, "vec_id", "embedding",
-      m = 8, ksub = 8).save(idxDir)
-    val loaded = graft.extensions.Similarity.loadPqIndex(spark, idxDir)
+    IndexFamily.Pq.save(graft.extensions.Similarity.pqFit(e, "vec_id", "embedding",
+      m = 8, ksub = 8), idxDir)
+    val loaded = IndexFamily.Pq.load(spark, idxDir)
     val df = graft.extensions.Similarity.pqProbe(loaded,
       e.filter(col("vec_id") === 0), "vec_id", "embedding",
       k = 5, rerank = 20)
@@ -459,7 +460,7 @@ class PlanShapeSpec extends AnyFunSuite {
       .find(_.startsWith("Input")).exists(l =>
         l.contains("Input [3]") && !l.contains("q_vec")),
       s"ADC rank window must see only the skinny triple:\n${winBlock.get}")
-    loaded.close()
+    IndexFamily.Pq.close(loaded)
   }
 
   test("IVF-PQ probe on a saved index: codes-only ADC scan over the cell-partitioned tree") {
@@ -467,9 +468,9 @@ class PlanShapeSpec extends AnyFunSuite {
     val e = graft.sources.Tables.load(spark, dir, "embeddings")
       .filter(col("vec_id") < 300)
     val idxDir = TestSpark.tmpDir("graft-ivfpq-planshape")
-    graft.extensions.Similarity.ivfPqFit(e, "vec_id", "embedding",
-      nlist = 4, m = 8, ksub = 8).save(idxDir)
-    val loaded = graft.extensions.Similarity.loadIvfPqIndex(spark, idxDir)
+    IndexFamily.IvfPq.save(graft.extensions.Similarity.ivfPqFit(e, "vec_id", "embedding",
+      nlist = 4, m = 8, ksub = 8), idxDir)
+    val loaded = IndexFamily.IvfPq.load(spark, idxDir)
     val df = graft.extensions.Similarity.ivfPqProbe(loaded,
       e.filter(col("vec_id") === 0), "vec_id", "embedding",
       k = 5, nprobe = 2, rerank = 20)
@@ -510,7 +511,7 @@ class PlanShapeSpec extends AnyFunSuite {
       .find(_.startsWith("Input")).exists(l =>
         l.contains("Input [4]") && l.contains("cell") && !l.contains("q_vec")),
       s"ADC rank window must see only (query_id, neighbor_id, cell, __adc):\n${winBlock.get}")
-    loaded.close()
+    IndexFamily.IvfPq.close(loaded)
   }
 
   test("IVF probe on a saved index: one rank exchange, dedup and rank in one stage") {
@@ -560,7 +561,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val win = root.collectFirst { case w: WindowExec => w }
     assert(win.exists(stage(_).exists(_.isInstanceOf[BaseAggregateExec])),
       s"the dedup aggregate must sit in the rank Window's stage:\n$root")
-    loaded.close()
+    IndexFamily.Ivf.close(loaded)
   }
 
   test("classifier score: pure scan projection, zero shuffles") {

@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** StateStore durability + read-path contracts: the rename-aside publish
-  * must leave a readable catalog at EVERY crash point, and reads between
-  * writes must be served from the in-memory memo (zero parquet scans). */
+/** StateStore durability + read-path contracts: every commit replaces
+  * the one JSON catalog file in one step, so a crash leaves the last
+  * commit readable; reads parse that file on the driver and start no
+  * Spark job; an earlier build's parquet catalog migrates on first read. */
 class StateStoreSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -19,111 +20,49 @@ class StateStoreSpec extends AnyFunSuite {
     schemaJson = None, nms = ts("2024-01-01 00:00:00"), lastRowCount = 10L,
     dsn = dsn, lastShovedOn = None)
 
-  test("crash between aside and publish: read() recovers the aside catalog") {
-    val dir = TestSpark.tmpDir("graft-store-crash1")
+  private def catalogFile(dir: String) = java.nio.file.Paths.get(dir, "nmstables.json")
+
+  test("crash before the rename: a leftover temp catalog is ignored and the last commit reads back") {
+    val dir = TestSpark.tmpDir("graft-store-crash")
     val store = new StateStore(spark, dir)
     store.upsert(Seq(mkState("events"), mkState("orders")))
-
-    // simulate the crash window: the live catalog was moved aside but the
-    // new one was never published (write died between the two renames)
-    val live = new java.io.File(s"$dir/nmstables")
-    val aside = new java.io.File(s"$dir/nmstables.old")
-    assert(live.renameTo(aside), "test setup: move catalog aside")
-    assert(!live.exists() && aside.exists())
-
-    // a FRESH store (post-crash process) must recover and serve the data;
-    // fresh store also dodges the memo (different path would not — same
-    // path, but mtime changed by the rename? the memo key is the path and
-    // the live dir is GONE, so recovery must run before any memo check)
-    val reborn = new StateStore(spark, dir)
-    val rows = reborn.read().collect()
-    assert(rows.map(_.name).toSet == Set("events", "orders"))
-    assert(live.exists() && !aside.exists(), "recovery restored the catalog")
-  }
-
-  test("crash after publish before aside cleanup: newest wins, next write sweeps") {
-    val dir = TestSpark.tmpDir("graft-store-crash2")
-    val store = new StateStore(spark, dir)
-    store.upsert(Seq(mkState("events")))
-
-    // leave a STALE aside next to a newer live catalog (crash after
-    // publish, before the aside delete): plant the old version out-of-band
-    // — going through upsert would (correctly) recover-and-sweep it
-    val live = new java.io.File(s"$dir/nmstables")
-    val aside = new java.io.File(s"$dir/nmstables.old")
-    val prior = TestSpark.tmpDir("graft-store-crash2-prior")
-    new StateStore(spark, prior).upsert(Seq(mkState("stale_only")))
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$prior/nmstables"), aside.toPath)
-    store.upsert(Seq(mkState("events"), mkState("orders")))
-    // the publish swept the planted aside; re-plant to model the crash
-    // window itself (publish landed, aside delete did not)
-    if (!aside.exists()) {
-      val prior2 = TestSpark.tmpDir("graft-store-crash2-prior2")
-      new StateStore(spark, prior2).upsert(Seq(mkState("stale_only")))
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(s"$prior2/nmstables"), aside.toPath)
-    }
-    assert(live.exists() && aside.exists(), "both versions on disk")
-
+    // a commit that died after staging its temp file, before the rename
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir,
+      s".nmstables.json.${java.util.UUID.randomUUID()}.tmp"), "[{\"na".getBytes("UTF-8"))
     val rows = new StateStore(spark, dir).read().collect()
-    assert(rows.map(_.name).toSet == Set("events", "orders"), "live catalog wins")
-
-    // the next write sweeps the stale aside
-    store.commit(1, "events", ts("2024-02-01 00:00:00"), 20L,
-      ts("2024-02-01 00:00:00"))
-    assert(!aside.exists(), "stale aside swept by the next publish")
-    assert(new StateStore(spark, dir).read().count() == 2)
+    assert(rows.map(_.name).toSet == Set("events", "orders"))
+    // and the next commit publishes over it as usual
+    store.commit(1, "events", ts("2024-02-01 00:00:00"), 20L, ts("2024-02-01 00:00:00"))
+    assert(new StateStore(spark, dir).read().collect()
+      .find(_.name == "events").get.lastRowCount == 20L)
   }
 
-  test("failed publish restores the previous catalog before throwing") {
-    val dir = TestSpark.tmpDir("graft-store-crash3")
-    val store = new StateStore(spark, dir)
-    store.upsert(Seq(mkState("events")))
-    // sabotage the publish: occupy the tmp path's rename TARGET with a
-    // read-only parent is fragile cross-platform; instead verify the
-    // invariant the restore protects — after ANY failed write attempt the
-    // catalog still reads. Simulate by corrupting tmp after staging is
-    // not injectable without a subclass, so assert the recovery invariant
-    // directly: aside-only layout (the worst crash point) always reads.
-    val live = new java.io.File(s"$dir/nmstables")
-    assert(live.renameTo(new java.io.File(s"$dir/nmstables.old")))
-    assert(store.read().count() == 1, "same-store read recovers the aside too")
-    assert(live.exists())
-  }
-
-  test("reads between writes are memo hits: no parquet scan jobs") {
-    val dir = TestSpark.tmpDir("graft-store-memo")
+  test("reads between writes parse the catalog file: no Spark job") {
+    val dir = TestSpark.tmpDir("graft-store-reads")
     val store = new StateStore(spark, dir)
     store.upsert(Seq(mkState("events"), mkState("orders")))
-
-    // the write refreshed the memo, so every following read is free
-    val scans0 = store.catalogScans.get()
-    (1 to 5).foreach(_ => assert(store.read().count() == 2))
-    (1 to 3).foreach(_ => assert(store.readForDsn(1).count() == 2))
-    assert(store.catalogScans.get() == scans0,
-      "reads after a write must be served from the memo")
-
-    // a SECOND store over the same path shares the JVM-wide memo
     val sibling = new StateStore(spark, dir)
-    val sibScans0 = sibling.catalogScans.get()
-    assert(sibling.read().count() == 2)
-    assert(sibling.catalogScans.get() == sibScans0,
-      "the memo is path-keyed, not instance-keyed (multi-DSN engines share it)")
+    val (_, sites) = TestSpark.jobSites {
+      (1 to 5).foreach(_ => assert(store.read().collect().length == 2))
+      (1 to 3).foreach(_ => assert(store.readForDsn(1).collect().length == 2))
+      assert(sibling.read().collect().length == 2)
+    }
+    assert(sites.isEmpty, s"catalog reads started jobs: $sites")
+    assert(store.catalogScans.get() == 0L && sibling.catalogScans.get() == 0L)
 
-    // commits update both disk and memo coherently
-    store.commit(1, "events", ts("2024-03-01 00:00:00"), 42L,
-      ts("2024-03-01 00:00:00"))
+    // a commit through one store is what the other reads next, and a
+    // watermark round-trips at microsecond precision
+    val nms = ts("2024-03-01 00:00:00")
+    nms.setNanos(123456000)
+    sibling.commit(1, "events", nms, 42L, ts("2024-03-01 00:00:00"))
     val after = store.read().collect().find(_.name == "events").get
-    assert(after.lastRowCount == 42L)
-    assert(store.catalogScans.get() == scans0, "post-commit read still memo-served")
+    assert(after.lastRowCount == 42L && after.nms == nms)
   }
 
   test("concurrent multi-DSN commits never lose updates through the memo") {
     // two engines (separate StateStore instances, same path — the
-    // multi-DSN deployment) commit interleaved; the per-path lock plus
-    // the write-refreshed memo must serialize read-modify-rewrite cycles
-    // so every commit survives
+    // multi-DSN deployment) commit interleaved; the per-path lock must
+    // serialize read-modify-rewrite cycles so every commit survives
     val dir = TestSpark.tmpDir("graft-store-race")
     val a = new StateStore(spark, dir)
     val b = new StateStore(spark, dir)
@@ -154,41 +93,54 @@ class StateStoreSpec extends AnyFunSuite {
     assert(fin.count(_.lastShovedOn.isEmpty) == 4)
   }
 
-  test("external mutation invalidates the memo via mtime") {
+  test("an out-of-band catalog replacement is seen by the next read") {
     val dir = TestSpark.tmpDir("graft-store-ext")
     val store = new StateStore(spark, dir)
     store.upsert(Seq(mkState("events")))
     assert(store.read().count() == 1)
-
-    // an out-of-band writer replaces the catalog (test fixture reset, a
-    // manual repair): mtime changes, the memo must fall through to a scan
-    val live = new java.io.File(s"$dir/nmstables")
+    // an operator restores another catalog file (a backup, a repair)
     val other = TestSpark.tmpDir("graft-store-ext2")
     new StateStore(spark, other).upsert(Seq(mkState("events"), mkState("orders")))
-    graft.util.Util.deleteRecursively(live)
-    assert(new java.io.File(s"$other/nmstables").renameTo(live))
-    // NO mtime nudge: the staleness token folds in the child listing
-    // (parquet part names are unique per write), so even a same-mtime
-    // replacement must invalidate the memo
-    assert(store.read().count() == 2, "memo must not serve the replaced catalog")
+    java.nio.file.Files.copy(catalogFile(other), catalogFile(dir),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(other, ".nmstables.json.crc"),
+      java.nio.file.Paths.get(dir, ".nmstables.json.crc"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    assert(store.read().count() == 2)
   }
 
-  test("close() evicts the memo entry; the store still works afterwards") {
-    val dir = TestSpark.tmpDir("graft-store-close")
+  test("crash between aside and publish: read() recovers the aside catalog") {
+    // an earlier build's rename-aside publish died between moving its
+    // parquet catalog aside and publishing the new one: only the aside
+    // holds the last durable catalog, and the first read migrates it
+    val dir = TestSpark.tmpDir("graft-store-aside")
+    import spark.implicits._
+    Seq(mkState("events"), mkState("orders")).toDS().coalesce(1)
+      .write.parquet(s"$dir/nmstables.old")
     val store = new StateStore(spark, dir)
-    store.upsert(Seq(mkState("events")))
-    val scans0 = store.catalogScans.get()
-    store.read()
-    assert(store.catalogScans.get() == scans0, "write populated the memo")
+    assert(store.read().collect().map(_.name).toSet == Set("events", "orders"))
+    assert(store.catalogScans.get() == 1L)
+    assert(new StateStore(spark, dir).read().count() == 2)
+  }
 
-    // retire the path: the JVM-wide memo must not keep this dir's full
-    // catalog rows alive for the life of the process
-    store.close()
-    store.read()
-    assert(store.catalogScans.get() == scans0 + 1,
-      "post-close read falls through to a real scan (memo entry gone)")
-    // ...and repopulates the memo like any scan
-    store.read()
-    assert(store.catalogScans.get() == scans0 + 1)
+  test("an earlier build's parquet catalog migrates on first read; catalogScans counts that read once") {
+    val dir = TestSpark.tmpDir("graft-store-legacy")
+    val shoved = ts("2024-01-02 03:04:05")
+    shoved.setNanos(987654000)
+    val legacy = Seq(mkState("events").copy(schemaJson = Some("{\"type\":\"struct\"}"),
+      lastShovedOn = Some(shoved)), mkState("orders", dsn = 2).copy(pKeyColumn = None))
+    import spark.implicits._
+    legacy.toDS().coalesce(1).write.parquet(s"$dir/nmstables")
+
+    val store = new StateStore(spark, dir)
+    assert(store.read().collect().toSeq.sortBy(_.name) == legacy)
+    assert(store.catalogScans.get() == 1L && store.catalogWrites.get() == 1L)
+    assert(java.nio.file.Files.exists(catalogFile(dir)), "published as JSON")
+    // later reads, in this store or a fresh one, parse the JSON file
+    assert(store.readForDsn(2).collect().map(_.name).toSeq == Seq("orders"))
+    assert(store.catalogScans.get() == 1L)
+    val fresh = new StateStore(spark, dir)
+    assert(fresh.read().collect().toSeq.sortBy(_.name) == legacy)
+    assert(fresh.catalogScans.get() == 0L)
   }
 }

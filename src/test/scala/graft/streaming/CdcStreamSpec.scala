@@ -274,11 +274,11 @@ class CdcStreamSpec extends AnyFunSuite {
     // window between extend and save (ADVICE r16: durable-then-mark)
     assert(new java.io.File(sink, IndexFamily.Bm25.acceptMarker).exists())
     assert(durable.savedDir.contains(out))
-    val loaded = Search.loadBm25Stats(spark, out)
+    val loaded = IndexFamily.Bm25.load(spark, out)
     val refit = Search.bm25Fit(docs, "doc_id", "text")
     assert(loaded.version === 2L && loaded.folded.contains(sink))
     assert(loaded.nDocs === refit.nDocs && loaded.sumDl === refit.sumDl)
-    durable.close()
+    IndexFamily.Bm25.close(durable)
   }
 
   test("compactAcceptedEmbeddingBatches folds the vector sink once, with the saved planes") {
@@ -1966,8 +1966,8 @@ class CdcStreamSpec extends AnyFunSuite {
 
     // ---- default (FailStreamOnCompaction) -----------------------------
     val idxDir = TestSpark.tmpDir("graft-mech-idx")
-    Dedup.saveCorpusIndex(Dedup.buildCorpusIndex(d0, "doc_id", "text"), idxDir)
-    val loaded = Dedup.loadCorpusIndex(spark, idxDir)
+    IndexFamily.Text.save(Dedup.buildCorpusIndex(d0, "doc_id", "text"), idxDir)
+    val loaded = IndexFamily.Text.load(spark, idxDir)
     val src = TestSpark.tmpDir("graft-mech-src")
     val (a, u, r) = (TestSpark.tmpDir("graft-mech-a"),
       TestSpark.tmpDir("graft-mech-u"), TestSpark.tmpDir("graft-mech-r"))
@@ -2008,8 +2008,8 @@ class CdcStreamSpec extends AnyFunSuite {
 
     // ---- ReresolveOnCompaction ----------------------------------------
     val idxDir2 = TestSpark.tmpDir("graft-mech2-idx")
-    Dedup.saveCorpusIndex(Dedup.buildCorpusIndex(d0, "doc_id", "text"), idxDir2)
-    val loaded2 = Dedup.loadCorpusIndex(spark, idxDir2)
+    IndexFamily.Text.save(Dedup.buildCorpusIndex(d0, "doc_id", "text"), idxDir2)
+    val loaded2 = IndexFamily.Text.load(spark, idxDir2)
     val v1 = loaded2.version
     val t7 = d0.filter(col("doc_id") === 7L).select("text").as[String].head()
     val src2 = TestSpark.tmpDir("graft-mech2-src")
