@@ -82,8 +82,8 @@ object StateStore {
 }
 
 /**
- * File-backed state catalog, replacing SQLite (`/root/reference/
- * nmsdb.go:33-212`): one JSON file, `<stateDir>/nmstables.json`, one row
+ * File-backed state catalog, replacing the reference's SQLite table
+ * (`nmsdb.go:33-212`): one JSON file, `<stateDir>/nmstables.json`, one row
  * per (dsn, table). It is metadata, not data, so every read parses the
  * file on the driver (no Spark job) and every commit rewrites it through
  * [[graft.util.SmallFile.replace]], so a crash at any point leaves the
