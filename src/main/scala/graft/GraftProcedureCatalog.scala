@@ -218,13 +218,12 @@ object GraftProcedureCatalog {
 
   /** `CALL graft.refresh_index(family, index_dir, save_to, old_table,
     * new_table, id_col, content_col)` — the refresh→index loop
-    * ([[graft.extensions.CorpusOps.refreshIndex]] /
-    * `refreshBm25Stats`) for any of the seven families: diff the two
-    * crawls (corpusDiff for text/bm25, vectorDiff for the vector
-    * families — two skinny (id, hash) projections; content never
-    * shuffles), retire removed∪changed, fold added∪changed under the
-    * FROZEN quantizer, save the bump to `save_to`. Tables resolve
-    * through the session catalog, so views and pushdown compose. */
+    * ([[graft.extensions.IndexFamily.refresh]]) for any of the seven
+    * families: diff the two crawls (corpusDiff for text/bm25, vectorDiff
+    * for the vector families — two skinny (id, hash) projections;
+    * content never shuffles), retire removed∪changed, fold added∪changed
+    * under the FROZEN quantizer, save the bump to `save_to`. Tables
+    * resolve through the session catalog, so views and pushdown compose. */
   private object RefreshIndex extends GraftProcedure(
     "refresh_index",
     "Version a saved index onto a refreshed crawl via the skinny " +

@@ -142,8 +142,8 @@ final class CdcEngine(
   def close(): Unit = capturePool.shutdown()
 
   /** The tables this engine's DSN owns, less the excluded ones: a table
-    * added to the exclusion list after seeding is neither captured nor
-    * described (F3, `seed.go:42-50` pairing). */
+    * added to the exclusion list after seeding is neither captured,
+    * described nor served (F3, `seed.go:42-50` pairing). */
   private def tracked(): Seq[TableState] =
     state.readForDsn(dsn).collect().toSeq.filterNot(t => excludedTables(t.name))
 
@@ -162,8 +162,10 @@ final class CdcEngine(
     * (A driver crash between a table's append and the tick-end commit
     * re-runs that window — the same at-least-once window the per-table
     * form had between append and commit; W1 dedup absorbs it.) */
-  def tick(now: Instant = Instant.now()): Seq[TickResult] = {
-    val futures = tracked().map { t =>
+  def tick(now: Instant = Instant.now()): Seq[TickResult] = tick(now, tracked())
+
+  private def tick(now: Instant, tables: Seq[TableState]): Seq[TickResult] = {
+    val futures = tables.map { t =>
       Future(captureOne(t, now)).transform(scala.util.Success(_))
     }
     val outcomes = Await.result(Future.sequence(futures), Duration.Inf)
@@ -251,13 +253,17 @@ final class CdcEngine(
     * storage stays O(current state) without yanking files out from under
     * the advertised serving path. Views registered via
     * [[registerCurrentStateViews]] are re-registered after each tick so
-    * they re-resolve onto the newest version. */
+    * they re-resolve onto the newest version. Each tick reads the
+    * tracked tables once and hands them to the capture, the vacuum and
+    * the view refresh (what they read of a table is fixed at seeding);
+    * the tick-end commit re-reads the catalog under its lock. */
   def run(maxTicks: Int, now: () => Instant = () => Instant.now()): Seq[Seq[TickResult]] = {
     dumpStreamConfigs()
     (1 to maxTicks).map { _ =>
-      val r = tick(now())
-      vacuumCompactedState()
-      if (viewsRegistered) registerCurrentStateViews()
+      val tables = tracked()
+      val r = tick(now(), tables)
+      vacuumCompactedState(2, tables)
+      if (viewsRegistered) registerCurrentStateViews(tables)
       r
     }
   }
@@ -267,8 +273,11 @@ final class CdcEngine(
     * listing is one tick stale; pass `retain = 1` to reclaim everything
     * but the current version when no reader can be live. */
   def vacuumCompactedState(retain: Int = 2): Unit =
+    vacuumCompactedState(retain, tracked())
+
+  private def vacuumCompactedState(retain: Int, tables: Seq[TableState]): Unit =
     if (maintainCurrentState)
-      tracked().filter(_.pKeyColumn.isDefined)
+      tables.filter(_.pKeyColumn.isDefined)
         .foreach(t => CompactedState.vacuum(spark, compactedStateDir(t.name), retain))
 
   /**
@@ -326,8 +335,11 @@ final class CdcEngine(
     * vacuum keeps one superseded version as grace), so SQL readers always
     * resolve. A caller driving [[tick]] manually must re-register (or
     * re-call [[currentState]]) after compaction-advancing ticks. */
-  def registerCurrentStateViews(): Seq[String] = {
-    val names = state.readForDsn(dsn).collect().toSeq.flatMap { t =>
+  def registerCurrentStateViews(): Seq[String] =
+    registerCurrentStateViews(tracked())
+
+  private def registerCurrentStateViews(tables: Seq[TableState]): Seq[String] = {
+    val names = tables.flatMap { t =>
       t.pKeyColumn.map { pk =>
         compactedIfAvailable(t.name) match {
           case Some(compacted) => compacted.createOrReplaceTempView(t.name)

@@ -977,74 +977,6 @@ object CorpusOps {
         .unionByName(fresh.contaminated))
   }
 
-  /** Version a SERVING index off the same diff that drives the artifact
-    * refresh — the leg of the production refresh loop
-    * [[refreshArtifacts]] deliberately leaves to the index lifecycle:
-    * `removed` and `changed` ids retire via the family's `remove` (ids
-    * only — e.g. the text-gram index's stored shingles reconstruct their
-    * grams; the retired content is not needed), then `added` and
-    * `changed` rows fold in via its `extend` under the FROZEN quantizer
-    * — a changed row is remove-then-add, the only mutation an
-    * append-only index family can express. EXACT: both halves carry
-    * their family's build-equivalence, so `refreshIndex(build(old), new,
-    * diff) ≡ build(new)` under the same quantizer (spec-pinned per
-    * family in RefreshPipelineSpec / VectorRefreshSpec; oracle-pinned by
-    * `dedup_refresh_index`, `dedup_refresh_embed` and `sim_ivf_refresh`).
-    * O(changed + removed) heavy work: the extend input is diff-selected
-    * BEFORE any shingling/banding/assignment/encoding kernel runs, so
-    * unchanged rows are never re-processed (sentinel spec-pinned). Use
-    * [[corpusDiff]] for the text families and [[vectorDiff]] for the
-    * vector families. A family that retracts by image (BM25) needs the
-    * old crawl: [[refreshBm25Stats]]. */
-  def refreshIndex[I <: Versioned](index: I, newDf: DataFrame, idCol: String,
-                                   contentCol: String, diff: DataFrame)(
-                                   implicit fam: IndexFamily[I]): I = {
-    require(!fam.retractsByImage, s"the ${fam.name} family retracts by " +
-      "image: refresh it with the old crawl (refreshBm25Stats)")
-    val (retired, fresh) = refreshIdSplit(diff, idCol)
-    fam.extend(fam.remove(index, retired, idCol, contentCol),
-      newDf.join(fresh, Seq(idCol), "left_semi"), idCol, contentCol)
-  }
-
-  /** The BM25 leg of the refresh→index loop: retract the `removed` and
-    * `changed` documents' contributions (exact integer subtraction —
-    * [[IndexFamily.Bm25.remove]] needs their OLD text, which a refresh
-    * has on hand by construction: it just diffed against it), then fold
-    * the `added` and `changed` documents' new text in via
-    * [[IndexFamily.Bm25.extend]]. EXACT end to end:
-    * `refreshBm25Stats(fit(old), old, new, diff) ≡ fit(new)` — df
-    * counts and the two scalars are additive in both directions, so a
-    * probe against the refreshed stats is bit-identical to one against
-    * a from-scratch fit of the new crawl (oracle-pinned by
-    * `search_bm25_refresh`). Unchanged documents are never re-tokenized
-    * on either half (poisoned-sentinel spec-pinned). */
-  def refreshBm25Stats(stats: Search.Bm25Stats, oldDf: DataFrame,
-                       newDf: DataFrame, idCol: String, textCol: String,
-                       diff: DataFrame): Search.Bm25Stats = {
-    val (retired, fresh) = refreshIdSplit(diff, idCol)
-    IndexFamily.Bm25.extend(
-      IndexFamily.Bm25.remove(stats,
-        oldDf.join(retired, Seq(idCol), "left_semi"), idCol, textCol),
-      newDf.join(fresh, Seq(idCol), "left_semi"), idCol, textCol)
-  }
-
-  /** A diff split into the two id sets every index refresh consumes:
-    * (retired = removed ∪ changed, fresh = added ∪ changed) — a changed
-    * document is remove-then-add, the only mutation an append-only
-    * index family can express. */
-  private def refreshIdSplit(diff: DataFrame,
-                             idCol: String): (DataFrame, DataFrame) = (
-    // NOT checkpointed (r19 A/B): the diff's full-outer join sits on an
-    // Exchange, so its many downstream references already share ONE
-    // execution via exchange reuse — an eager localCheckpoint here
-    // re-ran the join as a standalone barrier job per call and measured
-    // no better (within ambient noise) on every refresh row at sf0.1,
-    // unlike the exchange-free newSh kernel in IndexFamily.Text.extend where
-    // the same pattern wins 2.2x. Barrier jobs that buy nothing are a
-    // straggler surface at scale; keep the lazy form.
-    diff.filter(col("status").isin("removed", "changed")).select(col(idCol)),
-    diff.filter(col("status").isin("added", "changed")).select(col(idCol)))
-
   /** The refresh pipeline's ATTRITION record — the one-row dashboard a
     * refresh publishes next to its export: what the diff decided
     * (added/changed/removed/same), how many docs the refreshed corpus

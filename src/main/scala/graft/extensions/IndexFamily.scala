@@ -24,7 +24,7 @@ trait Versioned {
  * column, what its saved tree holds, and its fit, extend and remove. The
  * compactions ([[graft.streaming.CdcStream.compactAccepted]] /
  * [[graft.streaming.CdcStream.compact]]), the refresh loop
- * ([[CorpusOps.refreshIndex]]), the streaming handle resolution and the
+ * ([[IndexFamily.refresh]]), the streaming handle resolution and the
  * `CALL graft.*` procedures are written once against this typeclass, so
  * adding or changing a family touches its instance only.
  *
@@ -69,8 +69,8 @@ abstract class IndexFamily[I <: Versioned](
   def legAcceptMarker: String = IndexFamily.FoldedMarker
 
   /** Whether removal SUBTRACTS the retired rows' contributions and so
-    * needs their old image, not only the id (BM25). Such a family
-    * compacts through the two-image net skeleton, requires the old-image
+    * needs their old image, not only the id (BM25). Such a family's
+    * compaction carries and guards the old image, requires the old-image
     * column for upsert trees, and refreshes from the old crawl. */
   def retractsByImage: Boolean = false
 
@@ -118,11 +118,38 @@ abstract class IndexFamily[I <: Versioned](
     * `contentCol` for a family that [[retractsByImage]]. */
   def remove(index: I, rows: DataFrame, idCol: String, contentCol: String): I
 
-  /** Version the index onto a refreshed crawl, given the two crawls and
-    * their diff ([[CorpusOps.corpusDiff]] / [[CorpusOps.vectorDiff]]). */
-  def refresh(index: I, oldDf: DataFrame, newDf: DataFrame, idCol: String,
-              contentCol: String, diff: DataFrame): I =
-    CorpusOps.refreshIndex(index, newDf, idCol, contentCol, diff)(this)
+  /** Version a SERVING index off the same diff that drives the artifact
+    * refresh ([[CorpusOps.refreshArtifacts]]): `removed` and `changed`
+    * rows retire via [[remove]], then `added` and `changed` rows of
+    * `newDf` fold in via [[extend]] under the FROZEN quantizer — a
+    * changed row is remove-then-add, the only mutation an append-only
+    * index family can express. The retired rows are the ids alone, or,
+    * for a family that [[retractsByImage]], those ids' rows of `oldDf`
+    * (the old crawl a refresh has on hand by construction: it just
+    * diffed against it). EXACT: both halves carry their family's
+    * build-equivalence, so `refresh(build(old), old, new, diff) ≡
+    * build(new)` (spec-pinned per family in RefreshPipelineSpec /
+    * VectorRefreshSpec; oracle-pinned by `dedup_refresh_index`,
+    * `dedup_refresh_embed`, `sim_ivf_refresh` and `search_bm25_refresh`).
+    * O(changed + removed) heavy work: the extend input is diff-selected
+    * BEFORE any tokenizing, shingling, banding, assignment or encoding
+    * kernel runs, so unchanged rows are never re-processed (sentinel
+    * spec-pinned). `diff` is [[CorpusOps.corpusDiff]] for the text
+    * families and [[CorpusOps.vectorDiff]] for the vector families. It
+    * is NOT checkpointed (r19 A/B): its full-outer join sits on an
+    * Exchange, so its downstream references already share one execution
+    * by exchange reuse, and an eager checkpoint measured no better. */
+  final def refresh(index: I, oldDf: DataFrame, newDf: DataFrame, idCol: String,
+                    contentCol: String, diff: DataFrame): I = {
+    def ids(statuses: String*) =
+      diff.filter(col("status").isin(statuses: _*)).select(col(idCol))
+    val retired = ids("removed", "changed")
+    extend(
+      remove(index,
+        if (retractsByImage) oldDf.join(retired, Seq(idCol), "left_semi") else retired,
+        idCol, contentCol),
+      newDf.join(ids("added", "changed"), Seq(idCol), "left_semi"), idCol, contentCol)
+  }
 
   def withFolded(index: I, folded: Seq[String]): I =
     withLineage(index, index.savedDir, index.version, folded, index.parent)
@@ -414,7 +441,7 @@ object IndexFamily {
       // as the streaming folds' event union. Measured (sf0.1, like
       // ambient windows; PLANS.md "Measurements the code comments
       // cite"): dedup_incr_index_extend
-      // 4.0 -> 1.8 s min-warm. Contrast refreshIdSplit in CorpusOps,
+      // 4.0 -> 1.8 s min-warm. Contrast the diff split in `refresh`,
       // where the same pattern on an EXCHANGE-bearing relation buys
       // nothing (exchange reuse already shares the execution).
       val newSh = Dedup.hashedShingleSets(newDocs, idCol, textCol, index.shingleK)
@@ -481,7 +508,7 @@ object IndexFamily {
       * practice. A removal so large its gram set cannot broadcast is past
       * the point where a rebuild is cheaper anyway. `changed` documents
       * are remove-then-extend — the composition
-      * [[CorpusOps.refreshIndex]] packages. */
+      * [[IndexFamily.refresh]] packages. */
     def remove(index: Dedup.CorpusIndex, removedIds: DataFrame, idCol: String,
                textCol: String): Dedup.CorpusIndex = {
       val cut = index.maxGramDf
@@ -629,10 +656,6 @@ object IndexFamily {
         sumDl = stats.sumDl - row.getLong(1)))
     }
 
-    override def refresh(s: Search.Bm25Stats, oldDf: DataFrame,
-                         newDf: DataFrame, idCol: String, contentCol: String,
-                         diff: DataFrame): Search.Bm25Stats =
-      CorpusOps.refreshBm25Stats(s, oldDf, newDf, idCol, contentCol, diff)
   }
 
   /** The sign-LSH dedup bucket index ([[Dedup.EmbeddingIndex]]) — the

@@ -1029,9 +1029,9 @@ object NorthStarQueries {
     "dedup_refresh_index" -> ((s, dir) => {
       val old = diffOldDocs(s, dir)
       val newC = diffNewDocs(s, dir)
-      val refreshed = CorpusOps.refreshIndex(
+      val refreshed = IndexFamily.Text.refresh(
         fullCorpusIndex(s, dir),
-        newC, "doc_id", "text",
+        old, newC, "doc_id", "text",
         CorpusOps.corpusDiff(old, newC, "doc_id", "text"))
       Dedup.dedupAgainstCorpus(
         docs(s, dir).filter(col("doc_id") % 5 === 0), refreshed,
@@ -1079,7 +1079,7 @@ object NorthStarQueries {
     }),
 
     // The refresh→index loop for the EMBEDDING family
-    // ([[CorpusOps.refreshIndex]] off one [[vectorDiff]]): the
+    // ([[IndexFamily.refresh]] off one [[vectorDiff]]): the
     // old crawl (vecOldCrawl — %13 missing, %11 negated, junk under
     // +40M) refreshes to the raw embeddings corpus, so the refreshed
     // index must equal the SHARED fitted index bitwise (deterministic
@@ -1111,7 +1111,7 @@ object NorthStarQueries {
         IndexFamily.Embedding.remove(embIndex(s, dir), fresh, "vec_id", "embedding"),
         old.join(retired, Seq("vec_id"), "left_semi"),
         "vec_id", "embedding")
-      val refreshed = CorpusOps.refreshIndex(oldIdx, e,
+      val refreshed = IndexFamily.Embedding.refresh(oldIdx, old, e,
         "vec_id", "embedding", diff)
       Dedup.dedupEmbeddingsAgainstCorpus(embIncrBatch(e), refreshed,
         "vec_id", "embedding", threshold = 0.9)
@@ -1536,7 +1536,7 @@ object NorthStarQueries {
         .select(col("query_id"), col("neighbor_id"), col("rank"))
     }),
     // The refresh→index loop for the IVF family
-    // ([[CorpusOps.refreshIndex]] off one [[vectorDiff]], frozen
+    // ([[IndexFamily.refresh]] off one [[vectorDiff]], frozen
     // centroids): the old crawl (vecOldCrawl over the CLUSTERED fixture)
     // refreshes to the clustered corpus itself, so the refreshed
     // index's assigned relation equals the shared fitted index's
@@ -1565,7 +1565,7 @@ object NorthStarQueries {
         IndexFamily.Ivf.remove(ivfClusteredIndex(dir, ce), fresh,
           "vec_id", "embedding"),
         old.join(retired, Seq("vec_id"), "left_semi"), "vec_id", "embedding")
-      val refreshed = CorpusOps.refreshIndex(oldIdx, ce,
+      val refreshed = IndexFamily.Ivf.refresh(oldIdx, old, ce,
         "vec_id", "embedding", diff)
       Similarity.ivfProbe(refreshed, ce.filter(col("vec_id") % 20 === 0),
         "vec_id", "embedding", k = 10, nprobe = 4)
@@ -2136,7 +2136,7 @@ object NorthStarQueries {
     "search_bm25_refresh" -> ((s, dir) => {
       val old = diffOldDocs(s, dir)
       val newC = diffNewDocs(s, dir)
-      val refreshed = CorpusOps.refreshBm25Stats(
+      val refreshed = IndexFamily.Bm25.refresh(
         bm25Stats(s, dir),
         old, newC, "doc_id", "text",
         CorpusOps.corpusDiff(old, newC, "doc_id", "text"))

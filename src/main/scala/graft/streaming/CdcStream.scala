@@ -470,7 +470,7 @@ object CdcStream {
     * step as growing one ([[compact]] with only `retractDir`).
     * AMENDED rows are not this leg's job: an update is remove-then-add —
     * in batch the refresh loop
-    * ([[graft.extensions.CorpusOps.refreshIndex]]) expresses it off a
+    * ([[graft.extensions.IndexFamily.refresh]]) expresses it off a
     * corpus diff, and in streaming [[startUpsertIngest]] collects both
     * row images for the upsert fold — routing an update's new image
     * through a dedup ingest would let the novelty gate eat it (it
@@ -688,23 +688,13 @@ object CdcStream {
     * ([[graft.extensions.IndexFamily.legAcceptMarker]]) and a second
     * compaction of the same tree REFUSES loudly instead of silently
     * double-counting. One accepted-docs tree can feed both the text-gram
-    * and the BM25 fold: each is tracked by its own marker. A compaction
-    * that finds no committed batch rows (empty or missing tree — a
-    * scheduled fold racing an idle ingest) is a natural no-op: the input
-    * index is returned unchanged and no marker is written, so a later
-    * real fold still runs. Pass the ingest's `provenanceDir` to stamp the
-    * audit trail with the same marker at the same moment — the drop
-    * provenance then versions together with the keep-set it explains.
-    *
-    * Marker ordering (ADVICE r16): when `saveTo` is given, the bumped
-    * index is made DURABLE (saved, with the fold already in its lineage)
-    * BEFORE the marker lands — a crash between extend and save then
-    * leaves the sink unmarked, so the next scheduled compaction simply
-    * re-runs. Without `saveTo` the caller owns persisting the returned
-    * handle promptly: the marker is down but the bump lives only in
-    * session memory. (BM25's extend snapshots the sink read eagerly, so
-    * batches a still-running ingest appends after the fold cannot leak
-    * into later evaluations of its lazy df merge.) */
+    * and the BM25 fold: each is tracked by its own marker. Pass the
+    * ingest's `provenanceDir` to stamp the audit trail with the same
+    * marker at the same moment — the drop provenance then versions
+    * together with the keep-set it explains. The guard, lease, marker and
+    * `saveTo` contract is [[leasedFold]]'s. (BM25's extend snapshots the
+    * sink read eagerly, so batches a still-running ingest appends after
+    * the fold cannot leak into later evaluations of its lazy df merge.) */
   def compactAccepted[I <: Versioned](
       spark: SparkSession, sinkDir: String, index: I,
       idCol: String, contentCol: String,
@@ -714,31 +704,12 @@ object CdcStream {
     // from the leg's (ADVICE r18): per-leg and net accept folds of one
     // tree then refuse each other in BOTH directions
     val marker = fam.legAcceptMarker
-    val netMarker = Seq(fam.acceptMarker).filter(_ != marker)
-    index.savedDir.foreach(d => graft.extensions.IndexMeta
-      .requireCurrent(spark, d, index.version, "compaction"))
-    consumeSinkTree(spark, sinkDir, marker,
-        alsoRefuse = netMarker).map { accepted =>
-      // the fold runs BEFORE any marker lands (durable-then-mark: a crash
-      // inside it, including the save, leaves the tree unmarked and its
-      // lease held — see [[acquireFoldLease]]); a fold that THROWS (a
-      // contract refusal) releases the lease, so a fixed input re-runs
-      // with no manual step
-      val out =
-        try {
-          // the fold lands in the new version's lineage, so the save
-          // stamps it into the tree (IndexMeta)
-          val bumped = fam.withFolded(
-            fam.extend(index, accepted.dropDuplicates(idCol), idCol, contentCol),
-            index.folded :+ sinkDir)
-          saveTo.fold(bumped)(fam.save(bumped, _))
-        } catch { case e: Throwable =>
-          releaseFoldLease(spark, sinkDir, marker); throw e }
-      (marker +: netMarker).foreach(markFolded(spark, sinkDir, _))
-      provenanceDir.foreach(markFolded(spark, _, marker))
-      releaseFoldLease(spark, sinkDir, marker)
-      out
-    }.getOrElse(index)
+    leasedFold(spark, index, saveTo,
+      Seq(SinkTree(sinkDir, marker, Seq(fam.acceptMarker).filter(_ != marker))),
+      provenanceDir.map(_ -> marker)) { frames =>
+      fam.extend(index, frames.flatten.head.drop("batch").dropDuplicates(idCol),
+        idCol, contentCol)
+    }
   }
 
   // ---- net-effect maintenance compaction ----------------------------
@@ -787,22 +758,26 @@ object CdcStream {
     * when compaction cadence guarantees class-disjoint windows.
     *
     * Version arithmetic: a retract-only call bumps once (remove); every
-    * other shape bumps twice (remove, then extend). Contracts:
-    * stale-handle guard; empty/missing trees contribute nothing (all
-    * empty → no-op, no markers, the INPUT handle is returned — callers
-    * use `eq` as the no-op signal); cross-leg (id, batch) collisions
-    * refuse loudly (CDC emits one event per id per trigger); each
-    * consumed tree is stamped with its OWN leg's family marker, so a
-    * stray per-leg fold of a net-compacted tree refuses and several
-    * families can net-fold ONE shared tree triple in any order; the
-    * trees that contributed events land in the fold lineage.
-    * `oldContentCol` names the upsert rows' OLD image and applies only to
-    * a family that retracts by image (required there when `upsertDir` is
-    * given). `saveTo` is durable-then-mark (which a multi-tree fold
-    * needs MORE, not less: a crash after the markers but before the
-    * caller persists the lazy bump would orphan all three trees'
-    * events): the bumped index is saved BEFORE any marker lands, so a
-    * crash re-runs the fold instead. */
+    * other shape bumps twice (remove, then extend). Contracts: the
+    * [[leasedFold]] guard, lease, `saveTo` and marker protocol, each
+    * consumed tree stamped with its OWN leg's family marker (so a stray
+    * per-leg fold of a net-compacted tree refuses and several families
+    * can net-fold ONE shared tree triple in any order); cross-leg (id,
+    * batch) collisions refuse loudly (CDC emits one event per id per
+    * trigger). `oldContentCol` names the upsert rows' OLD image and
+    * applies only to a family that retracts by image (required there
+    * when `upsertDir` is given).
+    *
+    * The reduction: served (earliest event ≠ accept) ids are removed;
+    * alive (latest event ≠ retract) ids are extended with their LATEST
+    * image. A family that retracts by image (BM25) also carries each
+    * event's OLD image (`__old`: accept rows none, upsert rows
+    * `oldContentCol`, retract rows `contentCol`, the CDC delete's row
+    * image — [[startRetractIngest]]'s convention) and removes with the
+    * EARLIEST one, what the stats actually hold; its integer arithmetic
+    * makes a NULL old image a refusal, raised on the netted retract set
+    * BEFORE any stats arithmetic and naming the per-leg fold (and tree)
+    * or the net compaction it ran in. */
   def compact[I <: Versioned](
       spark: SparkSession,
       acceptDir: Option[String], upsertDir: Option[String],
@@ -810,32 +785,84 @@ object CdcStream {
       index: I, idCol: String, contentCol: String,
       oldContentCol: Option[String] = None,
       saveTo: Option[String] = None)(implicit fam: IndexFamily[I]): I = {
-    require(oldContentCol.isEmpty || fam.retractsByImage,
+    val byImage = fam.retractsByImage
+    require(oldContentCol.isEmpty || byImage,
       s"oldContentCol applies only to a family that retracts by image; " +
         s"the ${fam.name} family retracts by id alone")
+    val oldCol = oldContentCol.getOrElse {
+      require(!byImage || upsertDir.isEmpty, s"the ${fam.name} family needs " +
+        "oldContentCol to fold an upsert tree (the OLD-image column " +
+        "its retraction subtracts)")
+      contentCol
+    }
     // a retract-only window's add set is empty BY CONSTRUCTION (every
     // event's latest kind is retract): remove only, one version bump
     val shrinkOnly = acceptDir.isEmpty && upsertDir.isEmpty
-    def fold(removeRows: DataFrame, addRows: DataFrame,
-             contributing: Seq[String]): I = {
-      val shrunk = fam.remove(index, removeRows, idCol, contentCol)
-      val bumped = fam.withFolded(
+    val noImage = lit(null).cast(fam.imageType)
+    // (tree, event kind, new image, old image) of each present leg
+    val legs = Seq(
+      (acceptDir, fam.acceptMarker, "accept", col(contentCol), noImage),
+      (upsertDir, fam.upsertMarker, "upsert", col(contentCol), col(oldCol)),
+      (retractDir, fam.retractMarker, "retract", noImage, col(contentCol)))
+      .flatMap { case (dir, marker, kind, img, old) =>
+        dir.map(d => (SinkTree(d, marker), kind, img, old)) }
+    leasedFold(spark, index, saveTo, legs.map(_._1)) { frames =>
+      // ONE eager materialization of the skinny event union: the
+      // collision guard below and every downstream reference of the
+      // min_by/max_by aggregation read the checkpoint, not the sink
+      // parquet trees over again (the removals' multi-join plans
+      // reference the net relation several times per evaluation)
+      val events = legs.zip(frames).flatMap { case ((_, kind, img, old), frame) =>
+        frame.map(_.select(Seq(col(idCol), col("batch"), lit(kind).as("kind"),
+          img.as("__img")) ++ (if (byImage) Seq(old.as("__old")) else Nil): _*))
+      }.reduce(_ unionByName _).localCheckpoint(true)
+      val dup = events.groupBy(col(idCol), col("batch"))
+        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1L)
+        .limit(1).collect()
+      if (dup.nonEmpty) throw new IllegalArgumentException(
+        s"maintenance sinks hold ${dup.head.get(2)} events for id " +
+          s"${dup.head.get(0)} in micro-batch ${dup.head.get(1)}: CDC " +
+          "emits at most one event per id per trigger (the standard " +
+          "log-reader contract — pre-compact per key per trigger " +
+          "upstream), so a within-batch collision means the feed is " +
+          "not key-compacted and the earliest/latest image picks " +
+          "would be nondeterministic — fix the feed")
+      val aggs = Seq(
+        min_by(col("kind"), col("batch")).as("__first_kind"),
+        max_by(col("kind"), col("batch")).as("__last_kind")) ++
+        (if (byImage) Seq(min_by(col("__old"), col("batch")).as("__first_old"))
+         else Nil) :+
+        max_by(col("__img"), col("batch")).as("__last_img")
+      val grouped = events.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
+      val net =
+        if (byImage) grouped.persist(StorageLevel.MEMORY_AND_DISK) else grouped
+      try {
+        val served = net.filter(col("__first_kind") =!= "accept")
+        val removed =
+          if (!byImage) served.select(col(idCol))
+          else {
+            val docs = served.select(col(idCol), col("__first_old").as(contentCol))
+            // refuse loudly, never drift: a NULL earliest-old reaching
+            // IndexFamily.Bm25.remove would decrement nDocs while
+            // subtracting no terms — silent corruption of every later
+            // score. A NULL here means a retract-side id whose old image
+            // the feed never carried: most often an ingest still routing
+            // against an index handle frozen BEFORE an offline compaction
+            // (see the contract on [[startCdcMaintenanceIngest]]).
+            requireNonNullImages(docs, idCol, contentCol,
+              (acceptDir, upsertDir, retractDir) match {
+                case (None, Some(d), None) => s"BM25 upsert fold of $d"
+                case (None, None, Some(d)) => s"BM25 retract fold of $d"
+                case _ => "BM25 net-effect compaction retract set"
+              })
+            docs
+          }
+        val shrunk = fam.remove(index, removed, idCol, contentCol)
         if (shrinkOnly) shrunk
-        else fam.extend(shrunk, addRows, idCol, contentCol),
-        index.folded ++ contributing)
-      saveTo.fold(bumped)(fam.save(bumped, _))
+        else fam.extend(shrunk, net.filter(col("__last_kind") =!= "retract")
+          .select(col(idCol), col("__last_img").as(contentCol)), idCol, contentCol)
+      } finally if (byImage) { net.unpersist(false); () }
     }
-    (if (fam.retractsByImage)
-      netBm25Compaction(spark, acceptDir, upsertDir, retractDir, index,
-        idCol, contentCol, oldContentCol.getOrElse {
-          require(upsertDir.isEmpty, s"the ${fam.name} family needs " +
-            "oldContentCol to fold an upsert tree (the OLD-image column " +
-            "its retraction subtracts)")
-          contentCol
-        })(fold)
-    else
-      netCompaction(spark, acceptDir, upsertDir, retractDir, index,
-        idCol, contentCol)(fold)).getOrElse(index)
   }
 
   /** The vector net compaction of the sign-LSH gate index, under its
@@ -859,190 +886,67 @@ object CdcStream {
     compact(spark, Some(acceptDir), Some(upsertDir), Some(retractDir),
       index, idCol, vecCol, saveTo = saveTo)
 
-  /** Shared skeleton of EVERY net-effect compaction except BM25 (whose
-    * two-image algebra lives in [[netBm25Compaction]]) — the
-    * stale-handle guard → leased tree read → cross-class net reduction →
-    * family fold → markers sequence. The reduction: served (earliest
-    * event ≠ accept) ids land in `removeIds`; alive (latest event ≠
-    * retract) ids land in `addImgs` with their LATEST image. `fold` runs
-    * BEFORE any marker (durable-then-mark: a `saveTo` write inside the
-    * fold that crashes leaves all trees unmarked AND their leases held,
-    * so the next attempt refuses until the operator confirms the crash
-    * and breaks the lease — see [[acquireFoldLease]]); a fold that
-    * THROWS (a contract refusal: NULL image, within-batch tie) releases
-    * its leases on the way out, so a fixed feed re-runs with no manual
-    * step. */
-  private def netCompaction[I <: Versioned](
-      spark: SparkSession,
-      acceptDir: Option[String], upsertDir: Option[String],
-      retractDir: Option[String], index: I,
-      idCol: String, imgCol: String)(
-      fold: (DataFrame, DataFrame, Seq[String]) => I)(
-      implicit fam: IndexFamily[I]): Option[I] = {
+  /** A sink tree a [[leasedFold]] consumes: `marker` is the one it refuses,
+    * leases and stamps; `coMarkers` (a per-leg accept fold's NET accept
+    * marker) are refused and stamped with it. */
+  private final case class SinkTree(dir: String, marker: String,
+                                    coMarkers: Seq[String] = Nil)
+
+  /** The one commit protocol every index compaction goes through —
+    * durable-then-mark, the rule the reference applies to a table's
+    * watermark (committed only after its append succeeded). In order:
+    *
+    *  1. the stale-handle guard: a handle whose saved tree now holds
+    *     another version refuses;
+    *  2. each tree already stamped with its marker (or a co-marker)
+    *     refuses;
+    *  3. each tree with committed batch rows takes its exclusive
+    *     `<marker>.lock` lease ([[acquireFoldLease]] — two concurrent
+    *     compactions of one tree must not both fold it), with the marker
+    *     re-checked under the lease; an absent, empty or missing tree
+    *     takes no lease, is handed to `fold` as None and stays unmarked,
+    *     so a later real fold still runs;
+    *  4. `fold` runs over the consumed frames (one per tree, in order,
+    *     `batch` kept) — unless every tree was empty: then the INPUT
+    *     handle is returned untouched, no marker lands (callers use `eq`
+    *     as the no-op signal);
+    *  5. the trees that contributed rows join the result's `folded`
+    *     lineage, and `saveTo` saves it, the lineage stamped in the tree;
+    *  6. each contributing tree is stamped with its marker and co-markers
+    *     and `stamp` (a provenance tree and its marker) is stamped, then
+    *     the leases are released.
+    *
+    * A crash anywhere before step 6 leaves every tree unmarked, so the
+    * next attempt re-runs the fold instead of orphaning the events, but
+    * its leases held: that attempt refuses until the operator confirms
+    * the crash and breaks the lease. A fold that THROWS (a contract
+    * refusal: a NULL image, a within-batch tie, a missing column) only
+    * releases its leases, so a fixed input re-runs with no manual step.
+    * Without `saveTo` the caller owns persisting the returned handle
+    * promptly: the markers are down but the bump lives only in session
+    * memory. */
+  private def leasedFold[I <: Versioned](
+      spark: SparkSession, index: I, saveTo: Option[String],
+      trees: Seq[SinkTree], stamp: Option[(String, String)] = None)(
+      fold: Seq[Option[DataFrame]] => I)(implicit fam: IndexFamily[I]): I = {
     index.savedDir.foreach(d => graft.extensions.IndexMeta
       .requireCurrent(spark, d, index.version, "compaction"))
-    maintenanceEvents(spark, idCol,
-      (acceptDir, fam.acceptMarker,
-        (df: DataFrame) => df.select(col(idCol), col("batch"),
-          lit("accept").as("kind"), col(imgCol).as("__img"))),
-      (upsertDir, fam.upsertMarker,
-        (df: DataFrame) => df.select(col(idCol), col("batch"),
-          lit("upsert").as("kind"), col(imgCol).as("__img"))),
-      (retractDir, fam.retractMarker,
-        (df: DataFrame) => df.select(col(idCol), col("batch"),
-          lit("retract").as("kind"),
-          lit(null).cast(fam.imageType).as("__img"))))
-      .map { w =>
-        try {
-          val net = w.events.groupBy(col(idCol)).agg(
-            min_by(col("kind"), col("batch")).as("__first_kind"),
-            max_by(col("kind"), col("batch")).as("__last_kind"),
-            max_by(col("__img"), col("batch")).as("__last_img"))
-          val removeIds = net.filter(col("__first_kind") =!= "accept")
-            .select(col(idCol))
-          val addImgs = net.filter(col("__last_kind") =!= "retract")
-            .select(col(idCol), col("__last_img").as(imgCol))
-          val out = fold(removeIds, addImgs, w.contributing)
-          w.commit()
-          out
-        } catch { case e: Throwable => w.abort(); throw e }
-      }
-  }
-
-  /** The BM25 net skeleton — the family whose retraction needs the OLD
-    * row image (earliest `__old` per id: what the stats actually hold)
-    * and whose integer arithmetic makes the NULL-image guard and the
-    * marker/lease discipline correctness, not audit. Shapes: accept
-    * rows carry `textCol` as the new image; upsert rows both images;
-    * retract rows their old image in `textCol` (the CDC delete's row
-    * image — [[startRetractIngest]]'s convention). The guard fires on
-    * the netted retract set BEFORE any stats arithmetic; its refusal
-    * names the per-leg fold (and tree) or the net compaction it ran
-    * in. */
-  private def netBm25Compaction[I <: Versioned](
-      spark: SparkSession,
-      acceptDir: Option[String], upsertDir: Option[String],
-      retractDir: Option[String], stats: I,
-      idCol: String, textCol: String, oldTextCol: String)(
-      fold: (DataFrame, DataFrame, Seq[String]) => I)(
-      implicit fam: IndexFamily[I]): Option[I] = {
-    val what = (acceptDir, upsertDir, retractDir) match {
-      case (None, Some(d), None) => s"BM25 upsert fold of $d"
-      case (None, None, Some(d)) => s"BM25 retract fold of $d"
-      case _ => "BM25 net-effect compaction retract set"
-    }
-    stats.savedDir.foreach(d => graft.extensions.IndexMeta
-      .requireCurrent(spark, d, stats.version, "compaction"))
-    maintenanceEvents(spark, idCol,
-      (acceptDir, fam.acceptMarker,
-        (df: DataFrame) => df.select(col(idCol), col("batch"),
-          lit("accept").as("kind"), col(textCol).as("__img"),
-          lit(null).cast("string").as("__old"))),
-      (upsertDir, fam.upsertMarker,
-        (df: DataFrame) => df.select(col(idCol), col("batch"),
-          lit("upsert").as("kind"), col(textCol).as("__img"),
-          col(oldTextCol).as("__old"))),
-      (retractDir, fam.retractMarker,
-        (df: DataFrame) => df.select(col(idCol), col("batch"),
-          lit("retract").as("kind"), lit(null).cast("string").as("__img"),
-          col(textCol).as("__old"))))
-      .map { w =>
-        try {
-          val net = w.events.groupBy(col(idCol)).agg(
-            min_by(col("kind"), col("batch")).as("__first_kind"),
-            max_by(col("kind"), col("batch")).as("__last_kind"),
-            min_by(col("__old"), col("batch")).as("__first_old"),
-            max_by(col("__img"), col("batch")).as("__last_img"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          try {
-            val retractDocs = net.filter(col("__first_kind") =!= "accept")
-              .select(col(idCol), col("__first_old").as(textCol))
-            // refuse loudly, never drift: a NULL earliest-old reaching
-            // IndexFamily.Bm25.remove would decrement nDocs while subtracting
-            // no terms — silent corruption of every later score. A NULL
-            // here means a retract-side id whose old image the feed
-            // never carried: most often an ingest still routing against
-            // an index handle frozen BEFORE an offline compaction (see
-            // the contract on [[startCdcMaintenanceIngest]]).
-            requireNonNullImages(retractDocs, idCol, textCol, what)
-            val extendDocs = net.filter(col("__last_kind") =!= "retract")
-              .select(col(idCol), col("__last_img").as(textCol))
-            val out = fold(retractDocs, extendDocs, w.contributing)
-            w.commit()
-            out
-          } finally { net.unpersist(false); () }
-        } catch { case e: Throwable => w.abort(); throw e }
-      }
-  }
-
-  /** A leased maintenance window: the checkpointed event union of the
-    * present legs, the contributing tree dirs, and the two terminal
-    * moves — `commit` stamps each contributing tree with its leg marker
-    * (exclusively) then releases the leases; `abort` only releases, so
-    * a refused fold is re-runnable without a manual lease break. Both
-    * are idempotent in the release step. */
-  private final case class MaintWindow(
-      events: DataFrame, contributing: Seq[String],
-      commit: () => Unit, abort: () => Unit)
-
-  /** Guarded, LEASED read of the maintenance trees: refuses any present
-    * tree already stamped with its leg's marker, takes each present
-    * tree's exclusive fold lease ([[acquireFoldLease]] — two concurrent
-    * compactions of one tree must not both fold it), normalizes each to
-    * the (id, batch, kind, images...) event shape via `shape`, unions
-    * the non-empty ones, and refuses loudly on a cross-leg (id, batch)
-    * collision — CDC emits at most one event per id per trigger, and a
-    * violated precondition here would make min_by/max_by's image picks
-    * nondeterministic. Absent (`None` dir) and empty/missing trees
-    * contribute nothing, take no lease and stay unmarked, so a later
-    * real fold still runs. Returns None when every leg is absent or
-    * empty; every refusal path releases whatever leases were already
-    * acquired. */
-  private def maintenanceEvents(
-      spark: SparkSession, idCol: String,
-      legs: (Option[String], String, DataFrame => DataFrame)*)
-      : Option[MaintWindow] = {
-    val acquired = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    def releaseAll(): Unit =
-      acquired.foreach { case (d, m) => releaseFoldLease(spark, d, m) }
+    val leased = scala.collection.mutable.ArrayBuffer[SinkTree]()
     try {
-      val read = legs.flatMap { case (dirOpt, marker, shape) =>
-        dirOpt.map { dir =>
-          val t = consumeSinkTree(spark, dir, marker, keepBatch = true)
-          if (t.isDefined) acquired += ((dir, marker))
-          (dir, marker, t.map(shape))
-        }
+      val frames = trees.map { t =>
+        val frame = consumeSinkTree(spark, t)
+        if (frame.isDefined) leased += t
+        frame
       }
-      val present = read.flatMap(_._3)
-      if (present.isEmpty) None
+      if (leased.isEmpty) index
       else {
-        // ONE eager materialization of the skinny event union: the
-        // collision guard below and every downstream reference of the
-        // min_by/max_by aggregation read the checkpoint, not the sink
-        // parquet trees over again (the removals' multi-join plans
-        // reference the net relation several times per evaluation)
-        val events = present.reduce(_ unionByName _).localCheckpoint(true)
-        val dup = events.groupBy(col(idCol), col("batch"))
-          .agg(count(lit(1)).as("__n")).filter(col("__n") > 1L)
-          .limit(1).collect()
-        if (dup.nonEmpty) throw new IllegalArgumentException(
-          s"maintenance sinks hold ${dup.head.get(2)} events for id " +
-            s"${dup.head.get(0)} in micro-batch ${dup.head.get(1)}: CDC " +
-            "emits at most one event per id per trigger (the standard " +
-            "log-reader contract — pre-compact per key per trigger " +
-            "upstream), so a within-batch collision means the feed is " +
-            "not key-compacted and the earliest/latest image picks " +
-            "would be nondeterministic — fix the feed")
-        Some(MaintWindow(events,
-          read.collect { case (dir, _, Some(_)) => dir },
-          commit = () => {
-            read.foreach { case (dir, marker, t) =>
-              if (t.isDefined) markFolded(spark, dir, marker) }
-            releaseAll()
-          },
-          abort = () => releaseAll()))
+        val bumped = fam.withFolded(fold(frames), index.folded ++ leased.map(_.dir))
+        val out = saveTo.fold(bumped)(fam.save(bumped, _))
+        leased.foreach(t => (t.marker +: t.coMarkers).foreach(markFolded(spark, t.dir, _)))
+        stamp.foreach { case (dir, marker) => markFolded(spark, dir, marker) }
+        out
       }
-    } catch { case e: Throwable => releaseAll(); throw e }
+    } finally leased.foreach(t => releaseFoldLease(spark, t.dir, t.marker))
   }
 
   /** Refuse loudly when a BM25 retract-side relation carries a NULL
@@ -1069,36 +973,29 @@ object CdcStream {
   }
 
   /** Guarded, LEASED read of a sink tree for compaction: refuses
-    * (loudly) a tree already stamped with `marker` (or any `alsoRefuse`
-    * sibling marker) — re-folding consumed batches would double-count
-    * gram dfs and break extend's append-only id contract — returns None
-    * for a tree with no committed batch rows (a compaction racing an
-    * idle ingest is a no-op, no lease taken), and otherwise ACQUIRES
-    * the tree's exclusive fold lease before handing the rows out, with
-    * the marker re-checked UNDER the lease: without the re-check, a
-    * fold that committed between this function's first marker probe and
-    * the lease acquisition would be invisible — exactly the
-    * check-then-act window (VERDICT r18 #1) the lease closes. Callers
-    * own releasing the lease on every path ([[compactAccepted]] /
-    * [[maintenanceEvents]]). */
-  private def consumeSinkTree(spark: SparkSession, sinkDir: String,
-                              marker: String,
-                              /** the upsert folds order images by the
-                                * batch partition column; everyone else
-                                * drops it */
-                              keepBatch: Boolean = false,
-                              alsoRefuse: Seq[String] = Nil): Option[DataFrame] = {
-    val root = new HPath(sinkDir)
+    * (loudly) a tree already stamped with its marker or a co-marker —
+    * re-folding consumed batches would double-count gram dfs and break
+    * extend's append-only id contract — returns None for a tree with no
+    * committed batch rows (a compaction racing an idle ingest is a
+    * no-op, no lease taken), and otherwise ACQUIRES the tree's exclusive
+    * fold lease before handing the rows out, with the markers re-checked
+    * UNDER the lease: without the re-check, a fold that committed
+    * between this function's first marker probe and the lease
+    * acquisition would be invisible — exactly the check-then-act window
+    * (VERDICT r18 #1) the lease closes. [[leasedFold]] releases the
+    * lease on every path. */
+  private def consumeSinkTree(spark: SparkSession, tree: SinkTree): Option[DataFrame] = {
+    val root = new HPath(tree.dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     def refuseMarked(): Unit = {
-      require(!fs.exists(new HPath(root, marker)),
-        s"sink tree $sinkDir was already compacted ($marker " +
+      require(!fs.exists(new HPath(root, tree.marker)),
+        s"sink tree ${tree.dir} was already compacted (${tree.marker} " +
           "present): re-folding consumed batches would double-count them " +
           "in the extended index — point the ingest at a fresh sink tree " +
           "for the next version")
-      alsoRefuse.foreach { m =>
+      tree.coMarkers.foreach { m =>
         require(!fs.exists(new HPath(root, m)),
-          s"sink tree $sinkDir was already consumed by this family's NET " +
+          s"sink tree ${tree.dir} was already consumed by this family's NET " +
             s"compaction ($m present): a per-leg accept fold would re-fold " +
             "the same accepted batches into the same index (duplicate ids " +
             "through extend's append-only contract) — point the ingest at " +
@@ -1112,12 +1009,11 @@ object CdcStream {
         .exists(_.nonEmpty)
     if (!hasRows) None
     else {
-      acquireFoldLease(fs, root, marker)
+      acquireFoldLease(fs, root, tree.marker)
       try refuseMarked()
       catch { case e: Throwable =>
-        fs.delete(leasePath(root, marker), false); throw e }
-      val df = ParquetMeta.read(spark, sinkDir)
-      Some(if (keepBatch) df else df.drop("batch"))
+        fs.delete(leasePath(root, tree.marker), false); throw e }
+      Some(ParquetMeta.read(spark, tree.dir))
     }
   }
 
@@ -1148,14 +1044,13 @@ object CdcStream {
           "the stale lease by deleting the lock file and re-run")
   }
 
-  /** Idempotent lease release — delete-if-present, so abort paths may
-    * run it after a commit already released. */
+  /** Release the fold lease of (tree, leg). */
   private def releaseFoldLease(spark: SparkSession, dir: String,
                                marker: String): Unit = {
     val root = new HPath(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val p = leasePath(root, marker)
-    if (fs.exists(p)) { fs.delete(p, false); () }
+    root.getFileSystem(spark.sessionState.newHadoopConf())
+      .delete(leasePath(root, marker), false)
+    ()
   }
 
   /** Stamp a consumed tree — EXCLUSIVELY: under the fold lease a marker

@@ -381,6 +381,8 @@ class CdcEngineSpec extends AnyFunSuite {
       policy = PolicyConfig(batchCount = 1000, replicationBufferSecs = 180),
       concurrency = 2, excludedTables = Set("events"))
     assert(eng2.tick(Instant.parse("2024-02-01T01:00:00Z")).isEmpty)
+    // ...and gets no serving view
+    assert(!eng2.registerCurrentStateViews().contains("events"))
   }
 
   test("T3 under failure: a failed capture leaves the watermark uncommitted; retry loses nothing") {

@@ -96,9 +96,9 @@ class RefreshPipelineSpec extends AnyFunSuite {
     "the serving index versions off the same diff") {
     import spark.implicits._
     val diff = CorpusOps.corpusDiff(oldCrawl, newCrawl, "doc_id", "text")
-    val refreshed = CorpusOps.refreshIndex(
+    val refreshed = IndexFamily.Text.refresh(
       Dedup.buildCorpusIndex(oldCrawl, "doc_id", "text"),
-      newCrawl, "doc_id", "text", diff)
+      oldCrawl, newCrawl, "doc_id", "text", diff)
     val scratch = Dedup.buildCorpusIndex(newCrawl, "doc_id", "text")
     def postingSet(ix: Dedup.CorpusIndex) =
       ix.postings.select("gram", "doc_id").as[(Long, Long)].collect().toSet
@@ -120,7 +120,7 @@ class RefreshPipelineSpec extends AnyFunSuite {
   test("refreshBm25Stats(fit(old), diff) == bm25Fit(new); unchanged docs " +
     "are never re-tokenized on either index leg (poisoned text)") {
     val diff = CorpusOps.corpusDiff(oldCrawl, newCrawl, "doc_id", "text")
-    val refreshed = CorpusOps.refreshBm25Stats(
+    val refreshed = IndexFamily.Bm25.refresh(
       Search.bm25Fit(oldCrawl, "doc_id", "text"),
       oldCrawl, newCrawl, "doc_id", "text", diff)
     val scratch = Search.bm25Fit(newCrawl, "doc_id", "text")
@@ -142,7 +142,7 @@ class RefreshPipelineSpec extends AnyFunSuite {
       .select(col("doc_id"),
         when(col("__same").isNotNull, lit("zzpoisonzz")).otherwise(col("text"))
           .as("text"))
-    val refreshedPoisoned = CorpusOps.refreshBm25Stats(
+    val refreshedPoisoned = IndexFamily.Bm25.refresh(
       Search.bm25Fit(oldCrawl, "doc_id", "text"),
       poison(oldCrawl), poison(newCrawl), "doc_id", "text", diff)
     assert(refreshedPoisoned.nDocs === scratch.nDocs &&
@@ -156,9 +156,9 @@ class RefreshPipelineSpec extends AnyFunSuite {
     // all and extend semi-joins added/changed first, so the refreshed
     // index still equals a from-scratch build of the TRUE new crawl
     import spark.implicits._
-    val refreshedIdx = CorpusOps.refreshIndex(
+    val refreshedIdx = IndexFamily.Text.refresh(
       Dedup.buildCorpusIndex(oldCrawl, "doc_id", "text"),
-      poison(newCrawl), "doc_id", "text", diff)
+      oldCrawl, poison(newCrawl), "doc_id", "text", diff)
     val scratchIdx = Dedup.buildCorpusIndex(newCrawl, "doc_id", "text")
     def postingSet(ix: Dedup.CorpusIndex) =
       ix.postings.select("gram", "doc_id").as[(Long, Long)].collect().toSet

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** The vector-index legs of the refresh→index loop
-  * ([[CorpusOps.refreshIndex]] for the embedding, LSH, IVF, PQ and
+  * ([[IndexFamily.refresh]] for the embedding, LSH, IVF, PQ and
   * IVF-PQ families, all off one
   * [[CorpusOps.vectorDiff]]): refresh ≡ rebuild-under-the-frozen-
   * quantizer for every family, plus the O(changed) sentinel — unchanged
@@ -73,10 +73,10 @@ class VectorRefreshSpec extends AnyFunSuite {
 
   test("refreshEmbeddingIndex(build(old), new, diff) == " +
     "buildEmbeddingIndex(new): deterministic hyperplanes, exact") {
-    val refreshed = CorpusOps.refreshIndex(
+    val refreshed = IndexFamily.Embedding.refresh(
       Dedup.buildEmbeddingIndex(oldCrawl, "vec_id", "embedding",
         planes = 12, bands = 8),
-      newCrawl, "vec_id", "embedding", diff)
+      oldCrawl, newCrawl, "vec_id", "embedding", diff)
     val scratch = Dedup.buildEmbeddingIndex(newCrawl, "vec_id", "embedding",
       planes = 12, bands = 8)
     assert(rows(refreshed.buckets) === rows(scratch.buckets))
@@ -86,10 +86,10 @@ class VectorRefreshSpec extends AnyFunSuite {
   }
 
   test("refreshLshIndex(fit(old), new, diff) == lshFit(new)") {
-    val refreshed = CorpusOps.refreshIndex(
+    val refreshed = IndexFamily.Lsh.refresh(
       Similarity.lshFit(oldCrawl, "vec_id", "embedding",
         planes = 12, bands = 4),
-      newCrawl, "vec_id", "embedding", diff)
+      oldCrawl, newCrawl, "vec_id", "embedding", diff)
     val scratch = Similarity.lshFit(newCrawl, "vec_id", "embedding",
       planes = 12, bands = 4)
     assert(rows(refreshed.banded) === rows(scratch.banded))
@@ -97,7 +97,7 @@ class VectorRefreshSpec extends AnyFunSuite {
 
   test("refreshIvfIndex: assigned == assignToCells(new, frozen centers)") {
     val old = Similarity.ivfFit(oldCrawl, "vec_id", "embedding", nlist = 8)
-    val refreshed = CorpusOps.refreshIndex(old, newCrawl,
+    val refreshed = IndexFamily.Ivf.refresh(old, oldCrawl, newCrawl,
       "vec_id", "embedding", diff)
     val expected = Similarity.assignToCells(newCrawl, old.centers,
       "vec_id", "embedding")
@@ -110,7 +110,7 @@ class VectorRefreshSpec extends AnyFunSuite {
     "codebooks") {
     val old = Similarity.pqFit(oldCrawl, "vec_id", "embedding",
       m = 8, ksub = 16)
-    val refreshed = CorpusOps.refreshIndex(old, newCrawl,
+    val refreshed = IndexFamily.Pq.refresh(old, oldCrawl, newCrawl,
       "vec_id", "embedding", diff)
     // rebuild-under-frozen-quantizer: extend an emptied copy with the
     // whole new crawl — the same frozen codebooks encode everything
@@ -123,7 +123,7 @@ class VectorRefreshSpec extends AnyFunSuite {
     "lockstep and equal a frozen-quantizer re-encode of new") {
     val old = Similarity.ivfPqFit(oldCrawl, "vec_id", "embedding",
       nlist = 4, m = 8, ksub = 16, residual = true)
-    val refreshed = CorpusOps.refreshIndex(old, newCrawl,
+    val refreshed = IndexFamily.IvfPq.refresh(old, oldCrawl, newCrawl,
       "vec_id", "embedding", diff)
     val rebuilt = IndexFamily.IvfPq.extend(
       old.copy(codes = old.codes.limit(0), vectors = old.vectors.limit(0)),
@@ -143,10 +143,10 @@ class VectorRefreshSpec extends AnyFunSuite {
     // embedding leg: the result under a poisoned new crawl equals the
     // clean from-scratch build — a re-banded unchanged vector would
     // plant NaN buckets (sign(NaN) comparisons) or NaN vectors
-    val refreshedEmb = CorpusOps.refreshIndex(
+    val refreshedEmb = IndexFamily.Embedding.refresh(
       Dedup.buildEmbeddingIndex(oldCrawl, "vec_id", "embedding",
         planes = 12, bands = 8),
-      poisonedNew, "vec_id", "embedding", diff)
+      oldCrawl, poisonedNew, "vec_id", "embedding", diff)
     val scratchEmb = Dedup.buildEmbeddingIndex(newCrawl, "vec_id",
       "embedding", planes = 12, bands = 8)
     assert(rows(refreshedEmb.buckets) === rows(scratchEmb.buckets))
@@ -155,7 +155,7 @@ class VectorRefreshSpec extends AnyFunSuite {
     // IVF leg: a re-assigned unchanged vector would carry its NaN
     // c_vec into the assigned relation
     val old = Similarity.ivfFit(oldCrawl, "vec_id", "embedding", nlist = 8)
-    val refreshedIvf = CorpusOps.refreshIndex(old, poisonedNew,
+    val refreshedIvf = IndexFamily.Ivf.refresh(old, oldCrawl, poisonedNew,
       "vec_id", "embedding", diff)
     val expected = Similarity.assignToCells(newCrawl, old.centers,
       "vec_id", "embedding")

@@ -28,8 +28,17 @@ object MarkerLayoutFolds {
   def writeTrees(spark: SparkSession, family: String): Map[String, String] = {
     val trees = Seq("accept", "upsert", "retract")
       .map(t => t -> TestSpark.tmpDir(s"graft-layout-$family-$t")).toMap
+    fillTrees(spark, family, trees)
+    trees
+  }
+
+  /** (Over)write the `batch=0` rows of [[writeTrees]]'s trees, the id
+    * column named `idAs` when given. */
+  def fillTrees(spark: SparkSession, family: String, trees: Map[String, String],
+                idAs: Option[String] = None): Unit = {
     def write(t: String, df: DataFrame): Unit =
-      df.write.mode("overwrite").parquet(s"${trees(t)}/batch=0")
+      idAs.fold(df)(df.withColumnRenamed(df.columns.head, _))
+        .write.mode("overwrite").parquet(s"${trees(t)}/batch=0")
     if (isText(family)) {
       val d = docs(spark)
       write("accept", d.filter(col("doc_id") >= 40))
@@ -45,7 +54,6 @@ object MarkerLayoutFolds {
       write("retract", v.filter(col("vec_id").between(10, 13))
         .select(col("vec_id")))
     }
-    trees
   }
 
   /** Non-default hyperparameters that keep the fixture's fits small. */
