@@ -208,30 +208,35 @@ final class CdcEngine(
         // row-group pruning / database WHERE) even for nanos-encoded NMS
         // columns; snapshotWindow's own filter is then a no-op.
         val windowed = src.loadWindowed(t.name, t.nmsColumn, lo, hi)
-        // Single pass: count the rows as a side-effect of the write
-        // (CollectMetrics), never as a second scan of the window.
-        val obs = org.apache.spark.sql.Observation()
         val snapBase = processor(
           Snapshot.snapshotWindow(windowed, t.nmsColumn, lo, hi, snapTm, munge))
+        val compaction = t.pKeyColumn.filter(_ => maintainCurrentState)
+          .map(pk => CompactedState.Config(Seq(pk), "snapshot_tm", Seq(t.nmsColumn)))
         // When compaction also consumes the batch, pin ONE materialization:
         // re-planning the window against a LIVE source (JDBC) between the
         // append and the merge could observe different rows, silently
-        // diverging the compacted table from the log.
-        val compacting = maintainCurrentState && t.pKeyColumn.isDefined
+        // diverging the compacted table from the log — and the merge must
+        // see exactly the rows whose buckets the append observed.
         val stable =
-          if (compacting)
+          if (compaction.isDefined)
             snapBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           else snapBase
         try {
-          val snap = stable.observe(obs, count(lit(1)).as("rows"))
+          // Single pass: the row count, and for a compacting table the
+          // touched buckets, are side-effects of the write (CollectMetrics),
+          // never a second scan of the window or a probe job in the merge.
+          val obs = org.apache.spark.sql.Observation()
+          val snap = stable.observe(obs, count(lit(1)).as("rows"),
+            compaction.map(CompactedState.touchedBuckets(_).as("buckets")).toSeq: _*)
           AppendSink.appendSnapshot(snap, sinkDir, t.name, maxFileBytes = batchBytes)
-          val captured = obs.get("rows").asInstanceOf[Long]
+          val metrics = obs.get
+          val captured = metrics("rows").asInstanceOf[Long]
           // MERGE the batch into the compacted current state BEFORE the
-          // watermark commit: a failure re-runs the window and the upsert
+          // watermark commit: a failure re-runs the window and the merge
           // is idempotent, so the compacted table never misses a batch.
-          if (compacting) t.pKeyColumn.foreach { pk =>
-            CompactedState.upsert(spark, compactedStateDir(t.name), stable,
-              CompactedState.Config(Seq(pk), "snapshot_tm", Seq(t.nmsColumn)))
+          compaction.foreach { conf =>
+            CompactedState.merge(spark, compactedStateDir(t.name), stable, conf,
+              metrics("buckets").asInstanceOf[scala.collection.Seq[Long]].toSet)
           }
           // T3: the commit is handed to tick() only after the append
           // succeeded; tick() applies all successful tables' commits in
@@ -239,7 +244,7 @@ final class CdcEngine(
           (TickResult(t.name, decision, captured),
             Some(StateStore.Commit(dsn, t.name, hi, liveCount, snapTm)))
         } finally {
-          if (compacting) stable.unpersist(false)
+          if (compaction.isDefined) stable.unpersist(false)
         }
     }
   }
@@ -256,11 +261,13 @@ final class CdcEngine(
     * they re-resolve onto the newest version. Each tick reads the
     * tracked tables once and hands them to the capture, the vacuum and
     * the view refresh (what they read of a table is fixed at seeding);
-    * the tick-end commit re-reads the catalog under its lock. */
+    * the first tick reuses the rows the config dump read, and the
+    * tick-end commit re-reads the catalog under its lock. */
   def run(maxTicks: Int, now: () => Instant = () => Instant.now()): Seq[Seq[TickResult]] = {
-    dumpStreamConfigs()
-    (1 to maxTicks).map { _ =>
-      val tables = tracked()
+    val first = tracked()
+    dumpStreamConfigs(first)
+    (1 to maxTicks).map { i =>
+      val tables = if (i == 1) first else tracked()
       val r = tick(now(), tables)
       vacuumCompactedState(2, tables)
       if (viewsRegistered) registerCurrentStateViews(tables)
@@ -286,10 +293,12 @@ final class CdcEngine(
    * capture pipeline (the reference writes its assembled Benthos YAML the
    * same way, `/root/reference/benthos.go:146-160`).
    */
-  def dumpStreamConfigs(): Seq[String] = {
+  def dumpStreamConfigs(): Seq[String] = dumpStreamConfigs(tracked())
+
+  private def dumpStreamConfigs(tables: Seq[TableState]): Seq[String] = {
     val fs = new org.apache.hadoop.fs.Path(sinkDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    tracked().map { t =>
+    tables.map { t =>
       def js(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
       val mungeJson = munge match {
         case Some(m) =>

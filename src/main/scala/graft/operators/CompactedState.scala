@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -21,11 +21,16 @@ import graft.util.SmallFile
  *
  *   - state lives under `dir/bucket=<b>/v=<n>/` — the key space is hashed
  *     into `numBuckets` buckets, each holding its own version history;
- *   - an upsert computes the batch's touched buckets (<= numBuckets
- *     values, the one driver-side collect, by construction tiny), merges
- *     batch + those buckets' current state with one partial-aggregating
- *     `max_by` per key, and writes ONLY the touched buckets as a new
- *     version — untouched buckets are never read or rewritten;
+ *   - an upsert knows the batch's touched buckets (<= numBuckets values):
+ *     the engine observes them on its log append (`touchedBuckets`, no
+ *     extra job), other callers pay one probe; it merges batch + those
+ *     buckets' current state in ONE exchange on the bucket column (the
+ *     per-key `max_by` groups by bucket and key, so the exchange's
+ *     partitioning already satisfies it) and writes ONLY the touched
+ *     buckets as a new version — untouched buckets are never read or
+ *     rewritten. AQE coalesces the tiny reducers into one write task, and
+ *     since coalescing never splits a reducer, each touched bucket is
+ *     written as exactly one file;
  *   - readers take the max version per bucket, so a crashed upsert (a
  *     partly-written new version is never `v=max` for all its buckets —
  *     the rename is per-bucket last) is superseded by the re-run, and
@@ -114,46 +119,61 @@ object CompactedState {
         "existing state would resurrect stale rows")
   }
 
+  /** The touched-bucket metric: the set of bucket ids a batch's keys
+    * hash into. Observe it on a pass that already runs over the batch
+    * (`Dataset.observe` on the log append) and hand the set to [[merge]],
+    * so the merge needs no probe job of its own. */
+  def touchedBuckets(conf: Config): Column = collect_set(bucketExpr(conf))
+
   /** MERGE one batch into the compacted state. Idempotent per batch.
     *
-    * The batch is PERSISTED for the call's duration (r19): the upsert
-    * reads it twice — the touched-bucket probe, then the merge — and
-    * the batch is commonly a computed relation (a filtered capture
-    * window, a transformed stream), so an unpersisted plan re-ran its
-    * full derivation for the second read. MEMORY_AND_DISK, released in
-    * a finally-block, so a failed write cannot leak executor storage. */
+    * The batch is read twice, by the touched-bucket probe and by the
+    * merge, and is commonly a computed relation (a filtered capture
+    * window, a transformed stream), so it is PERSISTED for the call's
+    * duration and released in a finally-block. A caller that already
+    * holds the batch persisted and has observed [[touchedBuckets]] calls
+    * [[merge]] directly. */
   def upsert(spark: SparkSession, dir: String, batch: DataFrame, conf: Config): Unit = {
-    val withB = batch.withColumn("__b", bucketExpr(conf))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val stable = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val touched = withB.select(col("__b")).distinct()
-        .collect().map(_.getLong(0)).toSet // <= numBuckets rows by construction
-      if (touched.isEmpty) return
-      checkOrWriteMeta(fs(spark, dir), dir, conf)
+      val touched = stable.select(touchedBuckets(conf)).collect()
+        .head.getSeq[Long](0).toSet // <= numBuckets values by construction
+      merge(spark, dir, stable, conf, touched)
+    } finally { stable.unpersist(false); () }
+  }
 
-      val current = latestVersions(spark, dir)
-      val existingPaths = current.filter { case (b, _) => touched(b) }.values.map(_._2).toSeq
-      // additive schema evolution (O6): per-file schemas reconcile on read and
-      // the union null-fills columns either side predates — a batch carrying a
-      // new column must not wedge the capture loop
-      val cachedBatch = withB.drop("__b")
-      val merged0 =
-        if (existingPaths.isEmpty) cachedBatch
-        else cachedBatch.unionByName(
-          ParquetMeta.read(spark, existingPaths: _*), allowMissingColumns = true)
-      val merged = CurrentState
-        .latestByKeyAgg(merged0, conf.keyCols, conf.orderCol, conf.tiebreakCols)
-        .withColumn("__b", bucketExpr(conf))
+  /** MERGE one batch whose touched buckets are known. `touched` must be
+    * the batch's [[touchedBuckets]] over the same rows `batch` yields (a
+    * persisted or otherwise deterministic batch): a bucket missing from it
+    * would drop that bucket's updates. An empty set is an empty batch and
+    * writes nothing, not even `_meta`. */
+  def merge(spark: SparkSession, dir: String, batch: DataFrame, conf: Config,
+            touched: Set[Long]): Unit = {
+    if (touched.isEmpty) return
+    val f = fs(spark, dir)
+    checkOrWriteMeta(f, dir, conf)
 
-      val newV = (current.values.map(_._1) ++ Seq(0L)).max + 1
-      val f = fs(spark, dir)
-      val stage = new Path(s"$dir/_stage_v$newV")
-      // cluster output by bucket before the partitioned write: one file per
-      // touched bucket instead of (shuffle partitions x buckets) shards —
-      // state file count stays O(numBuckets), not O(batches x partitions).
-      merged.repartition(math.max(1, touched.size), col("__b"))
-        .write.mode("overwrite").partitionBy("__b").parquet(stage.toString)
+    val current = latestVersions(spark, dir)
+    val existingPaths = current.filter { case (b, _) => touched(b) }.values.map(_._2).toSeq
+    // additive schema evolution (O6): per-file schemas reconcile on read and
+    // the union null-fills columns either side predates — a batch carrying a
+    // new column must not wedge the capture loop
+    val union =
+      if (existingPaths.isEmpty) batch
+      else batch.unionByName(
+        ParquetMeta.read(spark, existingPaths: _*), allowMissingColumns = true)
+    // one exchange: hash-partitioning on the bucket satisfies the per-key
+    // aggregate grouped by (bucket, key), so no second exchange is planned;
+    // with no partition count AQE coalesces the reducers, and a bucket is
+    // never split across reducers, so each touched bucket is one file
+    val merged = CurrentState.latestByKeyAgg(
+      union.withColumn("__b", bucketExpr(conf)).repartition(col("__b")),
+      "__b" +: conf.keyCols, conf.orderCol, conf.tiebreakCols)
 
+    val newV = (current.values.map(_._1) ++ Seq(0L)).max + 1
+    val stage = new Path(s"$dir/_stage_v$newV")
+    try {
+      merged.write.mode("overwrite").partitionBy("__b").parquet(stage.toString)
       // publish: move each staged bucket dir to bucket=<b>/v=<newV>
       f.listStatus(stage).toSeq
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("__b="))
@@ -166,8 +186,7 @@ object CompactedState {
           // (the watermark commits after this returns)
           require(f.rename(s.getPath, target), s"failed to publish $target")
         }
-      f.delete(stage, true)
-    } finally { withB.unpersist(false); () }
+    } finally { f.delete(stage, true); () }
   }
 
   /** Point lookup: the current state of ONE key, reading ONLY the bucket
@@ -216,23 +235,34 @@ object CompactedState {
     * when no reader can hold a stale listing. `retain = 2` leaves a
     * one-version grace window so a reader that resolved its file listing
     * before the latest upsert (a held `read` DataFrame, a registered temp
-    * view) still finds its files — the engine loop runs with this. */
+    * view) still finds its files — the engine loop runs with this.
+    *
+    * Also reclaims every orphaned `_stage_v<N>` a crashed publish left
+    * behind, for `N` strictly below the newest published version: the
+    * next upsert after a crash takes a higher version, so nothing else
+    * ever deletes such a dir, while a stage at the newest version may
+    * belong to a publish still in flight. */
   def vacuum(spark: SparkSession, dir: String, retain: Int = 1): Unit = {
     require(retain >= 1, s"vacuum must retain at least the current version, got $retain")
     val f = fs(spark, dir)
     val root = new Path(dir)
     if (!f.exists(root)) return
-    f.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      .foreach { b =>
-        f.listStatus(b.getPath).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-          .sortBy(-_.getPath.getName.stripPrefix("v=").toLong)
-          .drop(retain)
-          .foreach { s =>
-            f.delete(s.getPath, true)
-            ParquetMeta.forget(s.getPath.toString)
-          }
-      }
+    val entries = f.listStatus(root).toSeq.filter(_.isDirectory)
+    def version(p: Path) = p.getName.stripPrefix("v=").toLong
+    val versions = entries.filter(_.getPath.getName.startsWith("bucket=")).map { b =>
+      f.listStatus(b.getPath).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
+        .map(_.getPath).sortBy(-version(_))
+    }
+    versions.flatMap(_.drop(retain)).foreach { p =>
+      f.delete(p, true)
+      ParquetMeta.forget(p.toString)
+    }
+    versions.flatMap(_.headOption).map(version).maxOption.foreach { maxV =>
+      entries.map(_.getPath).filter { p =>
+        p.getName.startsWith("_stage_v") &&
+          p.getName.stripPrefix("_stage_v").toLongOption.exists(_ < maxV)
+      }.foreach(f.delete(_, true))
+    }
   }
 }

@@ -112,11 +112,16 @@ final class StateStore(spark: SparkSession, dir: String) {
     * dir, zero in steady state. */
   val catalogScans = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Parses of the catalog file (every read, upsert and commit parses it
+    * once), so a caller that reads it more often than it needs shows up. */
+  val catalogReads = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** A local relation over the parsed rows: its `collect()` is a local
     * scan, not a Spark job. */
   def read(): Dataset[TableState] = spark.createDataset(rows())
 
   private def rows(): IndexedSeq[TableState] = lock.synchronized {
+    catalogReads.incrementAndGet()
     SmallFile.read(fs, file) match {
       case Some(bytes) =>
         try StateStore.decode(bytes)

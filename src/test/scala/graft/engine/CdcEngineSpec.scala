@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.operators.CurrentState
-import graft.policy.WatermarkPolicy.PolicyConfig
+import graft.policy.WatermarkPolicy.{Advance, PolicyConfig}
 
 /** End-to-end slice (SURVEY §7.2): seed state for `events`, run capture
   * ticks with a synthetic clock, and prove the current-state view equals a
@@ -343,6 +343,70 @@ class CdcEngineSpec extends AnyFunSuite {
         Seq(some.head))
     }
     assert(bad.getMessage.contains("numBuckets mismatch"))
+  }
+
+  test("the append's observed buckets equal the probe's: engine and upsert publish the same state") {
+    import graft.operators.CompactedState
+    val sink = TestSpark.tmpDir("graft-sink-observed")
+    val eng = new CdcEngine(spark, TestSpark.Sf0001, sink, TestSpark.tmpDir("graft-state-observed"),
+      policy = PolicyConfig(batchCount = 100, replicationBufferSecs = 180),
+      concurrency = 2, maintainCurrentState = true)
+    eng.seed(Seq(("events", "ts", Some("event_id"))))
+    var clock = Instant.parse("2024-02-01T00:00:00Z")
+    (1 to 4).foreach { _ => eng.tick(clock); clock = clock.plusSeconds(3600) }
+
+    // replay the engine's batches, as the log holds them, through the
+    // probing upsert into a second dir
+    val log = eng.cdcLog("events").drop("snapshot_dt")
+    val stamps = log.select("snapshot_tm").distinct().collect()
+      .map(_.getTimestamp(0)).sortBy(_.getTime)
+    assert(stamps.length >= 2, s"the ticks captured ${stamps.length} batch(es)")
+    val probed = TestSpark.tmpDir("graft-compact-probed")
+    val conf = CompactedState.Config(Seq("event_id"), "snapshot_tm", Seq("ts"))
+    stamps.foreach(ts =>
+      CompactedState.upsert(spark, probed, log.filter(col("snapshot_tm") === lit(ts)), conf))
+
+    val observed = s"$sink/events_cdc_state"
+    def layout(dir: String) = TestSpark.parquetFiles(dir).filter(_._1.startsWith("bucket="))
+    assert(layout(observed) == layout(probed))
+    val a = CompactedState.read(spark, observed).get
+    val b = CompactedState.read(spark, probed).get.select(a.columns.map(col).toIndexedSeq: _*)
+    assert(a.except(b).isEmpty && b.except(a).isEmpty)
+  }
+
+  test("a window that captures 0 rows writes no _meta and no version") {
+    val sink = TestSpark.tmpDir("graft-sink-empty")
+    val eng = new CdcEngine(spark, TestSpark.Sf0001, sink, TestSpark.tmpDir("graft-state-empty"),
+      policy = PolicyConfig(batchCount = 100, replicationBufferSecs = 180),
+      concurrency = 2, processor = _.filter(lit(false)), maintainCurrentState = true)
+    eng.seed(Seq(("events", "ts", Some("event_id"))))
+    val res = eng.tick(Instant.parse("2024-02-01T00:00:00Z"))
+    assert(res.map(_.decision).forall(_.isInstanceOf[Advance]), res)
+    assert(res.map(_.rowsCaptured).sum == 0L)
+    val dir = new java.io.File(s"$sink/events_cdc_state")
+    assert(!new java.io.File(dir, "_meta").exists())
+    assert(Option(dir.list()).forall(_.forall(!_.startsWith("bucket="))),
+      s"an empty window published a version: ${Option(dir.list()).map(_.toSeq)}")
+  }
+
+  test("run reads the state catalog once per tick plus once per commit") {
+    val eng = mkEngine()
+    eng.seed(Seq(("events", "ts", Some("event_id"))))
+    var clock = Instant.parse("2024-02-01T00:00:00Z")
+    val next = () => { val c = clock; clock = clock.plusSeconds(3600); c }
+    def reads[T](body: => T): (T, Long) = {
+      val r0 = eng.state.catalogReads.get()
+      val out = body
+      (out, eng.state.catalogReads.get() - r0)
+    }
+    // every tick advances, so every tick commits
+    val (one, oneReads) = reads(eng.run(1, next))
+    assert(one.flatten.forall(_.decision.isInstanceOf[Advance]), one)
+    // the config dump's read serves the first tick; the commit re-reads
+    assert(oneReads == 2L)
+    val (three, threeReads) = reads(eng.run(3, next))
+    assert(three.flatten.forall(_.decision.isInstanceOf[Advance]), three)
+    assert(threeReads == 6L)
   }
 
   test("ParquetMeta.rowCount reads footers only and is exact") {

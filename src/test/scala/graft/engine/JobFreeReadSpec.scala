@@ -68,4 +68,19 @@ class JobFreeReadSpec extends AnyFunSuite {
     assert(!sites.exists(_.startsWith("collect at CdcEngine")),
       s"a tick must not collect the state catalog as a job: $sites")
   }
+
+  test("a compacting tick merges without a probe job: at most 3 jobs per table") {
+    val eng = engine(compacting = true)
+    eng.seed(Seq(("events", "ts", Some("event_id"))))
+    val t0 = Instant.parse("2024-02-01T00:00:00Z")
+    eng.tick(t0)
+    val (res, sites) = TestSpark.jobSites(eng.tick(t0.plusSeconds(3600)))
+    assert(res.map(_.rowsCaptured).sum > 0, "the measured tick captured rows and merged them")
+    // the touched buckets ride on the append's observation, so the merge
+    // starts no collect of its own
+    assert(!sites.exists(_.startsWith("collect at CompactedState")),
+      s"the merge must not probe the batch's buckets: $sites")
+    // the append, the merge's one shuffle map stage and the merge's write
+    assert(sites.size <= 3, s"a compacting table's tick ran ${sites.size} jobs: $sites")
+  }
 }

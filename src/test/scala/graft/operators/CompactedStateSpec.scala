@@ -95,4 +95,69 @@ class CompactedStateSpec extends AnyFunSuite {
     }
     assert(look.getMessage.contains("corrupt _meta"))
   }
+
+  /** `bucket=<b>/v=<n>` -> its parquet file count, for every version dir. */
+  private def versionFiles(dir: String): Map[String, Int] =
+    TestSpark.parquetFiles(dir).filter(_._1.startsWith("bucket="))
+
+  private def bucketOf = pmod(xxhash64(col("user_id")), lit(conf.numBuckets.toLong))
+
+  private def assertOneFilePerTouchedBucket(tag: String): Unit = {
+    val dir = TestSpark.tmpDir(s"graft-compact-shape-$tag")
+    CompactedState.upsert(spark, dir, events, conf)
+    val first = versionFiles(dir)
+    assert(first.keySet == (0 until conf.numBuckets).map(b => s"bucket=$b/v=1").toSet, s"$tag: $first")
+    assert(first.values.forall(_ == 1), s"$tag: one data file per touched bucket: $first")
+    // a batch touching two buckets publishes exactly those two, one file
+    // each; every other bucket keeps its single version
+    CompactedState.upsert(spark, dir, events.filter(bucketOf.isin(1L, 5L)), conf)
+    val second = versionFiles(dir)
+    assert(second -- first.keySet == Map("bucket=1/v=2" -> 1, "bucket=5/v=2" -> 1), s"$tag: $second")
+    assert(first.keySet.subsetOf(second.keySet), s"$tag: $second")
+    val folded = CompactedState.read(spark, dir).get
+    assert(folded.except(recompute).isEmpty && recompute.except(folded).isEmpty, tag)
+  }
+
+  test("each touched bucket is written as one file, untouched buckets gain no version (AQE on)") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assertOneFilePerTouchedBucket("aqe")
+  }
+
+  test("each touched bucket is written as one file without AQE's coalescing") {
+    val key = "spark.sql.adaptive.enabled"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try assertOneFilePerTouchedBucket("noaqe")
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("merge with an empty touched set writes neither _meta nor a version") {
+    val dir = TestSpark.tmpDir("graft-compact-empty")
+    CompactedState.upsert(spark, dir, events.filter(lit(false)), conf)
+    CompactedState.merge(spark, dir, events.limit(0), conf, Set.empty)
+    assert(new java.io.File(dir).list().isEmpty)
+    assert(CompactedState.read(spark, dir).isEmpty)
+  }
+
+  test("vacuum reclaims an orphaned stage dir below the newest version, never one at it") {
+    val dir = TestSpark.tmpDir("graft-compact-orphan")
+    CompactedState.upsert(spark, dir, events.filter(col("event_id") % 2 === 0), conf)
+    CompactedState.upsert(spark, dir, events.filter(col("event_id") % 2 === 1), conf)
+    assert(versionFiles(dir).keySet.contains("bucket=3/v=2"))
+    // a publish that crashed after its write left _stage_v1 behind; a
+    // stage at the newest version may be a publish still in flight
+    val orphan = new java.io.File(s"$dir/_stage_v1/__b=3")
+    val inFlight = new java.io.File(s"$dir/_stage_v2/__b=3")
+    Seq(orphan, inFlight).foreach { d =>
+      assert(d.mkdirs())
+      java.nio.file.Files.copy(
+        new java.io.File(s"$dir/bucket=3/v=2").listFiles().find(_.getName.endsWith(".parquet")).get.toPath,
+        new java.io.File(d, "part-00000.parquet").toPath)
+    }
+    val before = CompactedState.read(spark, dir).get.collect().toSet
+    CompactedState.vacuum(spark, dir, retain = 2)
+    assert(!new java.io.File(s"$dir/_stage_v1").exists(), "the orphaned stage must be reclaimed")
+    assert(inFlight.exists(), "a stage at the newest version must survive")
+    assert(CompactedState.read(spark, dir).get.collect().toSet == before)
+  }
 }
