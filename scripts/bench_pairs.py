@@ -2,12 +2,12 @@
 """Alternating-pairs comparison of two checkouts on one workload.
 
     python3 scripts/bench_pairs.py --workload W --parent DIR --change DIR \\
-        [--seeds 1-5] [--seconds N]
+        [--seeds 1-5]
 
-For each seed it runs `perfbench/run.py --trace 0` once in each checkout:
-the parent first on odd seeds, the change first on even ones, so a drift
-in the machine's load falls on both sides alike. It then prints, per
-end_to_end metric of BENCHMARK.json:
+For each seed it runs `perfbench/run.py --trace 0` once in each checkout,
+for BENCHMARK.json's `run_seconds`: the parent first on odd seeds, the
+change first on even ones, so a drift in the machine's load falls on
+both sides alike. It then prints, per end_to_end metric of BENCHMARK.json:
 
   - each pair's parent and change value;
   - each side's median, and the spread of the parent's runs (the distance
@@ -65,11 +65,10 @@ def main():
     ap.add_argument("--parent", required=True, help="checkout of the parent commit")
     ap.add_argument("--change", required=True, help="checkout of the change")
     ap.add_argument("--seeds", default="1-5")
-    ap.add_argument("--seconds", type=float)
     args = ap.parse_args()
     with open(os.path.join(args.change, "BENCHMARK.json")) as fh:
         spec = json.load(fh)
-    secs = args.seconds or spec["run_seconds"]
+    secs = spec["run_seconds"]
     sides = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
 
     values = {m["name"]: {"parent": [], "change": []} for m in spec["end_to_end"]}

@@ -121,7 +121,7 @@ object CompactedState {
 
   /** The touched-bucket metric: the set of bucket ids a batch's keys
     * hash into. Observe it on a pass that already runs over the batch
-    * (`Dataset.observe` on the log append) and hand the set to [[merge]],
+    * (`Dataset.observe` on the log append) and hand the set to `merge`,
     * so the merge needs no probe job of its own. */
   def touchedBuckets(conf: Config): Column = collect_set(bucketExpr(conf))
 
@@ -132,7 +132,7 @@ object CompactedState {
     * window, a transformed stream), so it is PERSISTED for the call's
     * duration and released in a finally-block. A caller that already
     * holds the batch persisted and has observed [[touchedBuckets]] calls
-    * [[merge]] directly. */
+    * `merge` directly. */
   def upsert(spark: SparkSession, dir: String, batch: DataFrame, conf: Config): Unit = {
     val stable = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -144,10 +144,13 @@ object CompactedState {
 
   /** MERGE one batch whose touched buckets are known. `touched` must be
     * the batch's [[touchedBuckets]] over the same rows `batch` yields (a
-    * persisted or otherwise deterministic batch): a bucket missing from it
-    * would drop that bucket's updates. An empty set is an empty batch and
-    * writes nothing, not even `_meta`. */
-  def merge(spark: SparkSession, dir: String, batch: DataFrame, conf: Config,
+    * persisted or otherwise deterministic batch). Every bucket the batch's
+    * rows fall in is published as a new version, so if one is missing
+    * from `touched`, its current files are not unioned in and its new
+    * version holds only the batch's rows: the bucket's whole prior state
+    * is replaced by them. An empty set is an empty batch and writes
+    * nothing, not even `_meta`. */
+  private[graft] def merge(spark: SparkSession, dir: String, batch: DataFrame, conf: Config,
             touched: Set[Long]): Unit = {
     if (touched.isEmpty) return
     val f = fs(spark, dir)
